@@ -2415,7 +2415,7 @@ object Multimodal {
     * or lightly-edited images land within a few bits; unrelated images
     * scatter to ~32. None for undecodable payloads. */
   /** EXIF orientation (1-8) of a JPEG payload, 0 when absent or not a
-    * JPEG: walks the marker stream to the APP1 "Exif  "
+    * JPEG: walks the marker stream to the APP1 "Exif\u0000\u0000"
     * segment, then the embedded TIFF IFD0 for tag 0x0112. Handles both
     * byte orders ("II"/"MM"); any malformed structure returns 0 (the
     * sniff is bytes, not trust). Stops at SOS — EXIF precedes entropy
@@ -8186,7 +8186,7 @@ object Multimodal {
     val strf = riffChunk("strf", leBytes(Seq(
       40, w, h, 1 | (24 << 16), compression, rowBytes * h, 0, 0, 0, 0)))
     val strh = riffChunk("strh",
-      fourcc("vids") ++ fourcc(if (mjpeg) "MJPG" else "    ") ++
+      fourcc("vids") ++ fourcc(if (mjpeg) "MJPG" else "\u0000\u0000\u0000\u0000") ++
         leBytes(Seq(0, 0, 0, 1, 25, 0, nFrames, 0, 0, 0)) ++
         leBytes(Seq(0, w | (h << 16))))
     val strl = riffChunk("LIST", fourcc("strl") ++ strh ++ strf)

@@ -1,10 +1,9 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import scala.jdk.CollectionConverters._
 
 /** Execution metrics — the Spark analog of the reference's per-query
   * QueryMetadata {Rows, Bytes, Elapsed} accumulated from progress
@@ -13,18 +12,20 @@ import scala.jdk.CollectionConverters._
   * items/sec log (internal/pipeline/finalizer.go:53-61).
   *
   * A QueryExecutionListener sees every completed action; output rows and
-  * scan bytes come from the physical plan's SQL metrics.
+  * scan bytes come from the physical plan's SQL metrics. It keeps only
+  * running totals, so a `--follow` daemon's metrics memory and scrape
+  * cost stay constant however many actions it runs.
   */
 object Metrics {
 
-  final case class QueryMetadata(
-      action: String,
-      outputRows: Long,
-      scanBytes: Long,
-      elapsedMs: Long)
-
   final class Listener extends QueryExecutionListener {
-    val completed = new ConcurrentLinkedQueue[QueryMetadata]()
+    /** Completed actions, failed ones included. */
+    val queries = new LongAdder
+    val failed = new LongAdder
+    /** Rows, scan bytes and wall millis summed over successful actions. */
+    val outputRows = new LongAdder
+    val scanBytes = new LongAdder
+    val elapsedMs = new LongAdder
 
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = {
@@ -46,15 +47,19 @@ object Metrics {
         if (u.children.isEmpty) Seq(u) else u.children.flatMap(leaves)
       }
       val plan = unwrap(qe.executedPlan)
-      val scanBytes = leaves(plan)
-        .flatMap(_.metrics.get("filesSize").map(_.value)).sum
-      completed.add(QueryMetadata(funcName, firstRows(plan), scanBytes,
-        durationNs / 1000000))
+      outputRows.add(math.max(0L, firstRows(plan)))
+      scanBytes.add(math.max(0L,
+        leaves(plan).flatMap(_.metrics.get("filesSize").map(_.value)).sum))
+      elapsedMs.add(durationNs / 1000000)
+      // last, so a reader that sees the count also sees its totals
+      queries.increment()
     }
 
     override def onFailure(funcName: String, qe: QueryExecution,
-        exception: Exception): Unit =
-      completed.add(QueryMetadata(s"$funcName[failed]", -1, -1, -1))
+        exception: Exception): Unit = {
+      failed.increment()
+      queries.increment()
+    }
   }
 
   private val listeners =
@@ -68,8 +73,9 @@ object Metrics {
       l
     })
 
-  def snapshot(spark: SparkSession): Seq[QueryMetadata] =
-    Option(listeners.get(spark)).map(_.completed.asScala.toSeq).getOrElse(Nil)
+  /** The session's listener, if one is installed. */
+  def listener(spark: SparkSession): Option[Listener] =
+    Option(listeners.get(spark))
 
   /** Finalizer-style throughput summary. */
   def throughput(result: PipelineRunner.Result): String =

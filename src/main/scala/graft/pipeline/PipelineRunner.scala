@@ -180,23 +180,26 @@ object PipelineRunner {
                 s"batch ${batch.number} [${batch.start}, ${batch.end}]")
               val df = defn.transform(spark, batch)
                 .persist(StorageLevel.MEMORY_AND_DISK)
-              df.count() // materialize the buffer before taking the commit lock
-              if (seq.awaitTurn(batch.number)) {
-                // Record a commit failure BEFORE releasing the gate and
-                // re-check under it: otherwise a later batch could commit
-                // after an earlier one failed, and the next resume
-                // (max(key)+1) would silently skip the failed range — a
-                // gap. awaitTurn/release synchronize, so the failure
-                // write is visible to the next waiter.
-                try {
-                  if (failure.get() == null) defn.commit(spark, batch, df)
-                } catch {
-                  case NonFatal(e) =>
-                    failure.compareAndSet(null, e)
-                    throw e
-                } finally seq.release(batch.number)
-              }
-              df.unpersist(blocking = false)
+              // free the buffer on every path: a failed count or commit
+              // would otherwise leak it once per runWithRetry attempt
+              try {
+                df.count() // materialize the buffer before taking the commit lock
+                if (seq.awaitTurn(batch.number)) {
+                  // Record a commit failure BEFORE releasing the gate and
+                  // re-check under it: otherwise a later batch could commit
+                  // after an earlier one failed, and the next resume
+                  // (max(key)+1) would silently skip the failed range — a
+                  // gap. awaitTurn/release synchronize, so the failure
+                  // write is visible to the next waiter.
+                  try {
+                    if (failure.get() == null) defn.commit(spark, batch, df)
+                  } catch {
+                    case NonFatal(e) =>
+                      failure.compareAndSet(null, e)
+                      throw e
+                  } finally seq.release(batch.number)
+                }
+              } finally df.unpersist(blocking = false)
             } else if (batch != null) {
               // a peer failed already: just pass the gate along
               if (seq.awaitTurn(batch.number)) seq.release(batch.number)

@@ -20,26 +20,26 @@ final class PrometheusEndpoint private (
 
 object PrometheusEndpoint {
 
-  /** Render the current metrics snapshot in Prometheus exposition
-    * format (text/plain; version 0.0.4). */
+  /** Render the current metric totals in Prometheus exposition format
+    * (text/plain; version 0.0.4). O(1): the listener keeps running
+    * totals, not a per-action log. */
   def render(spark: SparkSession): String = {
-    val snap = Metrics.snapshot(spark)
-    val ok = snap.filterNot(_.action.endsWith("[failed]"))
-    val failed = snap.size - ok.size
+    val l = Metrics.listener(spark)
     val sb = new StringBuilder
-    def counter(name: String, help: String, value: Long): Unit = {
+    def counter(name: String, help: String,
+        value: Metrics.Listener => java.util.concurrent.atomic.LongAdder): Unit = {
       sb.append(s"# HELP $name $help\n")
       sb.append(s"# TYPE $name counter\n")
-      sb.append(s"$name $value\n")
+      sb.append(s"$name ${l.map(value(_).sum).getOrElse(0L)}\n")
     }
-    counter("graft_queries_total", "Completed Spark actions", snap.size.toLong)
-    counter("graft_queries_failed_total", "Failed Spark actions", failed.toLong)
+    counter("graft_queries_total", "Completed Spark actions", _.queries)
+    counter("graft_queries_failed_total", "Failed Spark actions", _.failed)
     counter("graft_output_rows_total", "Rows produced by completed actions",
-      ok.map(m => math.max(0L, m.outputRows)).sum)
+      _.outputRows)
     counter("graft_scan_bytes_total", "Bytes scanned by completed actions",
-      ok.map(m => math.max(0L, m.scanBytes)).sum)
+      _.scanBytes)
     counter("graft_query_millis_total", "Wall millis of completed actions",
-      ok.map(m => math.max(0L, m.elapsedMs)).sum)
+      _.elapsedMs)
     sb.toString
   }
 

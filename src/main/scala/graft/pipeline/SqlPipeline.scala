@@ -243,7 +243,8 @@ object SqlPipeline {
         * `spark.read.parquet` re-lists the source directory and re-reads
         * footers on every call, and this ran on every tip probe, resume,
         * AND per-batch transform — 30-80 ms each, a listing per batch at
-        * scale (DiagPipeline measured it dominating e-lane machinery).
+        * scale (a per-definition timing split measured it dominating the
+        * config pipelines' per-batch machinery).
         * The raw resolution is pinned here and refreshed only by `tip()`
         * — the freshness boundary: a follow-mode poll must see newly
         * landed source files, while transforms within a pass process the

@@ -50,17 +50,16 @@ object StreamingOps extends QueryPack {
     * per operator per batch, so at the bench session's 32 partitions
     * a 5-batch fixture drain pays 160 state commits for rows that fit
     * in one; measured on the st88 shape at local[32]: 6.8-11.4 s at
-    * 32 partitions vs 2.4-2.7 s at 4. Results are partition-count
-    * invariant (every gate is a deterministic aggregation over the
-    * drained table — the CORRECTNESS runner already executes at 4),
-    * so only wall clock changes. Memory-sink tables register in the
-    * clone's catalog; each gate does ALL its work through the clone,
-    * which also isolates concurrently-running lanes' catalogs.
-    * GRAFT_STREAM_SHUFFLE overrides the partition count. */
+    * 32 partitions vs 2.4-2.7 s at 4 (and 1 partition read slightly
+    * worse than 4). Results are partition-count invariant (every gate
+    * is a deterministic aggregation over the drained table — the
+    * CORRECTNESS runner already executes at 4), so only wall clock
+    * changes. Memory-sink tables register in the clone's catalog; each
+    * gate does ALL its work through the clone, which also isolates
+    * concurrently-running lanes' catalogs. */
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
   }
 
@@ -79,29 +78,107 @@ object StreamingOps extends QueryPack {
     dst.toFile.deleteOnExit()
   }
 
-  /** Stage the events table SPLIT by event_id parity into two parquet
-    * files (a older than b by mtime, so maxFilesPerTrigger=1 delivers
-    * them as separate micro-batches in that order) — the shared
-    * delivery shape for the stateful-across-batches queries (st70,
-    * st71): no single batch sees a key's whole history. */
-  private def stageSplitByParity(s: SparkSession, dir: String,
-      prefix: String): java.nio.file.Path = {
+  /** Stage each batch as ONE parquet file — a.parquet, b.parquet, …
+    * in delivery order — in a fresh staging dir. mtimes step 120 s
+    * apart, the last file newest: the file source lists oldest-first,
+    * so maxFilesPerTrigger=1 delivers each batch as its own
+    * micro-batch, in order. */
+  private def stageBatches(prefix: String, batches: DataFrame*): java.nio.file.Path = {
     val staged = stagingDir(prefix)
-    Seq(("a.parquet", 0), ("b.parquet", 1)).foreach { case (fname, par) =>
-      val tmp = staged.resolve(s"tmp$par")
-      t(s, dir, "events").filter(col("event_id") % 2 === par)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-      staged.resolve(fname).toFile.deleteOnExit()
+    batches.zipWithIndex.foreach { case (df, i) =>
+      val dst = staged.resolve(s"${('a' + i).toChar}.parquet")
+      val tmp = staged.resolve(s"${dst.getFileName}.tmp")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.deleteOnExit()
       org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - 120000L * (batches.size - 1 - i)))
     }
-    java.nio.file.Files.setLastModifiedTime(staged.resolve("a.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 120000))
     staged
+  }
+
+  /** `(doc_id, payload)` rows: each id of `ids` with its synthetic
+    * media blob. */
+  private def payloads(ids: org.apache.spark.sql.Dataset[_],
+      media: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
+    ids.toDF("doc_id").select(col("doc_id"), media(col("doc_id")).as("payload"))
+
+  private val mediaSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("payload", BinaryType)))
+
+  /** The staged `(doc_id, payload)` files as a stream, one file per
+    * micro-batch, repartitioned BEFORE the decode kernels: the
+    * per-trigger file scan is one partition, and decoding is the CPU
+    * cost. A fresh source instance per call. */
+  private def mediaStream(s: SparkSession, staged: java.nio.file.Path): DataFrame =
+    s.readStream.schema(mediaSchema)
+      .option("maxFilesPerTrigger", "1").parquet(staged.toString)
+      .repartition(col("doc_id"))
+
+  /** Start every named query into a memory sink of that name, then
+    * drain them in order and stop them all, whatever fails. All start
+    * before the first drain, so independent queries run concurrently
+    * and cost the slowest one's trigger latency, not the sum. Returns
+    * the first query's sink table. */
+  private def drain(s: SparkSession, mode: String)(
+      named: (String, DataFrame)*): DataFrame = {
+    val started = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.sql.streaming.StreamingQuery]
+    try {
+      named.foreach { case (name, df) =>
+        started += df.writeStream.outputMode(mode).format("memory")
+          .queryName(name).start()
+      }
+      started.foreach(_.processAllAvailable())
+    } finally started.foreach(_.stop())
+    s.table(named.head._1)
+  }
+
+  /** Vote gate of the near-dup scorer, on a (doc, src) pair's vote
+    * count `c`: at least `k` votes, or at least a share `f` of the
+    * smaller doc's probe-row count (`nl`, `nl_src`). */
+  private sealed trait Votes
+  private final case class AtLeast(k: Int) extends Votes
+  private final case class Share(f: Double) extends Votes
+
+  /** The near-dup gates' post-drain vote count over a verdict sink —
+    * one row per probe unit of `doc_id`, `hits` = the earlier docs
+    * that unit matched: each (doc, src) pair's votes pass `gate` or
+    * not, and a doc is a dup of the lowest-id src that passes. Every
+    * branch re-aliases its key before any join: the memory sink's view
+    * resolves to the SAME attribute ids on every read, and a raw
+    * self-join fails analysis. Returns (every doc_id, the `(d,
+    * dup_src)` dups). */
+  private def voteDups(out: DataFrame, gate: Votes): (DataFrame, DataFrame) = {
+    val pairs = out
+      .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
+      .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
+    val (docs, passing) = gate match {
+      case AtLeast(k) =>
+        (out.select(col("doc_id")).distinct(), pairs.filter(col("c") >= k))
+      case Share(f) =>
+        val nl = out.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
+        val nlSrc = out.select(col("doc_id").as("src_id"))
+          .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
+        (nl, pairs.join(nl, col("d") === nl("doc_id")).drop("doc_id")
+          .join(nlSrc, col("src") === col("src_id"))
+          .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
+            >= f))
+    }
+    (docs, passing.groupBy(col("d")).agg(min(col("src")).as("dup_src")))
+  }
+
+  /** [[voteDups]] as the gates' verdict table: `(doc_id, kept,
+    * dup_src)` ordered by doc_id. */
+  private def voteDedup(out: DataFrame, gate: Votes): DataFrame = {
+    val (docs, dup) = voteDups(out, gate)
+    docs.join(dup, col("doc_id") === col("d"), "left")
+      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
+        col("dup_src"))
+      .orderBy(col("doc_id"))
   }
 
   private val evHalfSchema = StructType(Seq(
@@ -110,7 +187,6 @@ object StreamingOps extends QueryPack {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st61_stream_window" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st61_out"
       // the file source requires a directory — stage the table into one
       val staged = stagingDir("graft-stream-events")
       stageCopy(s"$dir/events.parquet", staged, "events.parquet")
@@ -118,10 +194,7 @@ object StreamingOps extends QueryPack {
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "complete")("st61_out" -> stream)
         .select(col("w.start").as("day_start"), col("event_type"), col("n"),
           col("total_value"))
         .orderBy(col("day_start"), col("event_type"))
@@ -140,16 +213,12 @@ object StreamingOps extends QueryPack {
     // gap >= 30min (window overlap), the stateful walk at gap > 30min —
     // the oracle encodes the >= form.
     "st64_stream_session_window" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st64_out"
       val staged = stagingDir("graft-stream-sess")
       stageCopy(s"$dir/events.parquet", staged, "events.parquet")
       val stream = eventsStream(s, staged)
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("total_value"))
-      val q = stream.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "complete")("st64_out" -> stream)
         .select(col("user_id"),
           expr("unix_micros(w.start) div 1000000").as("start_s"),
           expr("unix_micros(w.end - INTERVAL 30 MINUTES) div 1000000").as("end_s"),
@@ -168,16 +237,12 @@ object StreamingOps extends QueryPack {
     // state is evicted past the re-delivery horizon; the unbounded
     // form here keeps the oracle exact.
     "st65_stream_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st65_out"
       val staged = stagingDir("graft-stream-dedup")
       stageCopy(s"$dir/events.parquet", staged, "a.parquet")
       stageCopy(s"$dir/events.parquet", staged, "b.parquet")
       val stream = eventsStream(s, staged, Map("maxFilesPerTrigger" -> "1"))
         .dropDuplicates("event_id")
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st65_out" -> stream)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
         .orderBy(col("event_type"))
@@ -193,31 +258,18 @@ object StreamingOps extends QueryPack {
     // and the oracle derives them from the corpus alone.
     "st86_stream_confusable_dedup" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st86_out"
-      val staged = stagingDir("graft-stream-confus")
       val docs = t(s, dir, "documents")
-      def stage(fname: String, df: DataFrame, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage("a.parquet", docs.filter($"doc_id" < 20)
-        .select($"doc_id", $"text"), 120000L)
-      stage("b.parquet", docs.filter($"doc_id" < 10)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          regexp_replace(
-            translate($"text", "aeocpxy",
-              "\u0430\u0435\u043e\u0441\u0440\u0445\u0443"),
-            " ", "\u200b ").as("text"))
-        .unionByName(docs.filter($"doc_id" >= 20 && $"doc_id" < 30)
-          .select($"doc_id", $"text")), 0L)
+      val staged = stageBatches("graft-stream-confus",
+        docs.filter($"doc_id" < 20)
+          .select($"doc_id", $"text"),
+        docs.filter($"doc_id" < 10)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            regexp_replace(
+              translate($"text", "aeocpxy",
+                "\u0430\u0435\u043e\u0441\u0440\u0445\u0443"),
+              " ", "\u200b ").as("text"))
+          .unionByName(docs.filter($"doc_id" >= 20 && $"doc_id" < 30)
+            .select($"doc_id", $"text")))
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
       val stream = s.readStream.schema(schema)
@@ -225,10 +277,7 @@ object StreamingOps extends QueryPack {
         .withColumn("nkey",
           md5(graft.operators.TextAnalysis.normalizeConfusables(col("text"))))
         .dropDuplicates("nkey")
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name).agg(
+      drain(s, "append")("st86_out" -> stream).agg(
           count(lit(1)).as("total_kept"),
           sum(when(col("doc_id") >= 1000000L, 1L).otherwise(0L))
             .as("spoofed_kept"))
@@ -241,16 +290,12 @@ object StreamingOps extends QueryPack {
     // oracle. Demonstrates the text operators compose with readStream
     // unchanged — same Column expressions, same results.
     "st66_stream_quality_gate" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st66_out"
       val staged = stagingDir("graft-stream-gate")
       stageCopy(s"$dir/documents.parquet", staged, "documents.parquet")
       val stream = graft.operators.TextAnalysis.gopherQualityFlags(
         s.readStream.schema(docsSchema).parquet(staged.toString),
         "doc_id", "text", minTokens = 10, maxMeanLen = 6.0)
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st66_out" -> stream)
         .groupBy(col("keep"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("ok_stopwords"), 1L).otherwise(0L)).as("n_ok_stopwords"))
@@ -265,7 +310,6 @@ object StreamingOps extends QueryPack {
     // all). The memory sink's hit rows aggregate to exactly the batch
     // oracle's per-doc contaminated-instance counts.
     "st67_stream_decontaminate" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st67_out"
       val staged = stagingDir("graft-stream-decon")
       stageCopy(s"$dir/documents.parquet", staged, "documents.parquet")
       val probe = t(s, dir, "documents").filter(col("doc_id") < 5)
@@ -276,10 +320,7 @@ object StreamingOps extends QueryPack {
         .select(col("doc_id"),
           explode(graft.operators.TextDedup.wordShingles(col("text"), 3)).as("g"))
         .join(broadcast(probe), Seq("g"))
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st67_out" -> stream)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_hits"))
         .orderBy(col("doc_id"))
@@ -297,30 +338,17 @@ object StreamingOps extends QueryPack {
     "st87_stream_winnow_decontam" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st87_out"
-      val staged = stagingDir("graft-stream-winnow")
       val docs = t(s, dir, "documents")
       val probe = graft.operators.TextDedup.winnowFingerprints(
           docs.filter($"doc_id" < 5), "doc_id", "text").toDF()
         .select($"fp").distinct()
-      def stage(fname: String, df: DataFrame, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage("a.parquet", docs.filter($"doc_id" < 5)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("junk prefix tokens before the borrowed span "),
-            $"text", lit(" junk suffix after")).as("text")), 120000L)
-      stage("b.parquet", docs.filter($"doc_id" >= 100 && $"doc_id" < 110)
-        .select($"doc_id", $"text"), 0L)
+      val staged = stageBatches("graft-stream-winnow",
+        docs.filter($"doc_id" < 5)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("junk prefix tokens before the borrowed span "),
+              $"text", lit(" junk suffix after")).as("text")),
+        docs.filter($"doc_id" >= 100 && $"doc_id" < 110)
+          .select($"doc_id", $"text"))
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
       val stream = s.readStream.schema(schema)
@@ -328,10 +356,7 @@ object StreamingOps extends QueryPack {
       val fps = graft.operators.TextDedup.winnowFingerprints(
         stream, "doc_id", "text").toDF()
       val joined = fps.join(broadcast(probe), Seq("fp"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st87_out" -> joined)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_hits"))
         .orderBy(col("doc_id"))
@@ -347,25 +372,12 @@ object StreamingOps extends QueryPack {
     // against any lower-id document sharing a band.
     "st68_stream_neardup" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st68_out"
-      val staged = stagingDir("graft-stream-neardup")
-      stageCopy(s"$dir/documents.parquet", staged, "a.parquet")
-      // near-dup second delivery: batch-write the mutated copy, move its
-      // single part file in as b.parquet
-      val mutTmp = staged.resolve("mut")
-      t(s, dir, "documents")
-        .select(($"doc_id" + 1000000L).as("doc_id"),
+      val docs = t(s, dir, "documents")
+      // near-dup second delivery: the mutated copy
+      val staged = stageBatches("graft-stream-neardup", docs,
+        docs.select(($"doc_id" + 1000000L).as("doc_id"),
           concat($"text", lit(" streamdup tail")).as("text"),
-          $"lang", $"source", $"n_chars")
-        .coalesce(1).write.mode("overwrite").parquet(mutTmp.toString)
-      val part = new java.io.File(mutTmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, staged.resolve("b.parquet"))
-      staged.resolve("b.parquet").toFile.deleteOnExit()
-      org.apache.commons.io.FileUtils.deleteDirectory(mutTmp.toFile)
-      java.nio.file.Files.setLastModifiedTime(staged.resolve("a.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 120000))
+          $"lang", $"source", $"n_chars"))
       // repartition BEFORE the minhash kernel: the per-trigger file scan
       // is one partition, and the kernel is the CPU cost
       val stream = s.readStream.schema(docsSchema)
@@ -376,10 +388,7 @@ object StreamingOps extends QueryPack {
       // total), so decisions are provably unchanged — see BENCH_NOTES.
       val verdicts = graft.operators.StreamingNearDup.bandVerdicts(
         stream, "doc_id", "text", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st68_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
         .agg(max(when(col("dup_src").isNotNull, 1).otherwise(0)).as("_dropped"))
         .select(col("doc_id"), (col("_dropped") === 0).as("kept"))
@@ -398,8 +407,10 @@ object StreamingOps extends QueryPack {
     "st70_stream_retention" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-      val name = "st70_out"
-      val staged = stageSplitByParity(s, dir, "graft-stream-retention")
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("event_type"))
+      val staged = stageBatches("graft-stream-retention",
+        ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1))
       val stream = s.readStream.schema(evHalfSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .select(col("user_id"), col("event_type")).as[(Long, String)]
@@ -418,10 +429,7 @@ object StreamingOps extends QueryPack {
             st.update(bits)
             (uid, bits)
         }
-      val q = stream.toDF("user_id", "bits").writeStream
-        .outputMode("update").format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "update")("st70_out" -> stream.toDF("user_id", "bits"))
         .groupBy(col("user_id")).agg(max(col("bits")).as("_b")) // monotone: max = final
         .select(col("user_id"),
           (col("_b").bitwiseAND(1) === 1).as("r1"),
@@ -443,17 +451,17 @@ object StreamingOps extends QueryPack {
     // billion-key distinct counts (bounded state per key where exact
     // countDistinct state is unbounded).
     "st71_stream_hll" -> ((s0, dir) => { val s = streamSession(s0)
-      val name = "st71_out"
-      val staged = stageSplitByParity(s, dir, "graft-stream-hll")
+      // split by event_id parity: no single batch sees a key's whole history
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("event_type"))
+      val staged = stageBatches("graft-stream-hll",
+        ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1))
       val regs = graft.functions.HllSketch.hllRegisters
       val stream = s.readStream.schema(evHalfSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .groupBy(col("event_type"))
         .agg(regs(col("user_id").cast("string")).as("regs"))
-      val q = stream.writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "update")("st71_out" -> stream)
         .groupBy(col("event_type"))
         // update mode emits one REGISTER BLOB per changed key per
         // trigger; hllMerge over all emissions equals the final state
@@ -487,13 +495,8 @@ object StreamingOps extends QueryPack {
       val quantized = graft.operators.Similarity.quantizeInt8(stream)
         .select(col("vec_id"), col("scale"),
           array_join(transform(col("qvec"), x => x.cast("string")), ",").as("q_str"))
-      val q1 = assigned.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(s"${name}_a").start()
-      val q2 = quantized.writeStream.outputMode("append")
-        .format("memory").queryName(s"${name}_q").start()
-      try { q1.processAllAvailable(); q2.processAllAvailable() }
-      finally { q1.stop(); q2.stop() }
-      s.table(s"${name}_a")
+      drain(s, "append")(s"${name}_a" -> assigned.toDF(),
+          s"${name}_q" -> quantized)
         .join(s.table(s"${name}_q"), Seq("vec_id"))
         .select(col("vec_id"), col("centroid_id"), col("dist_sq"),
           col("scale"), col("q_str"))
@@ -912,43 +915,21 @@ object StreamingOps extends QueryPack {
     // shared frames >= 0.8 over the smaller sequence (the st73
     // metric). Pinned golden.
     "st84_stream_spectral_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st84_out"
-      val staged = stagingDir("graft-stream-spec")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTones(id, 8000)
         else Multimodal.syntheticWavTones(id - 1000000L, 44100))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-spec",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioSpectralVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nf = s.table(name).groupBy(col("doc_id"))
+      val out = drain(s, "append")("st84_out" -> hits.toDF())
+      val nf = out.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("nf"))
-      val nfSrc = s.table(name).select(col("doc_id").as("src_id"))
+      val nfSrc = out.select(col("doc_id").as("src_id"))
         .groupBy(col("src_id")).agg(count(lit(1)).as("nf_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
         .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
         .join(nf, col("d") === nf("doc_id")).drop("doc_id")
@@ -992,10 +973,7 @@ object StreamingOps extends QueryPack {
     // unrelated tones — every re-upload lands, decoys are kept.
     // Pinned golden.
     "st85_stream_spectral_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st85_out"
-      val staged = stagingDir("graft-stream-specidx")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTones(id, 8000)
         else if (id < 2000000L)
@@ -1006,43 +984,22 @@ object StreamingOps extends QueryPack {
       val index = Multimodal.audioSpectralCodeIndex(corpus)
         .select(col("frame_idx"), col("code"), col("doc_id").as("src"),
           col("nf").as("nf_src"))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(1000000L, 1000005L).as[java.lang.Long],
-        "a.parquet", 120000L)
-      stageBatch(s.range(1000005L, 1000008L).as[java.lang.Long]
-        .union(s.range(2000000L, 2000002L).as[java.lang.Long]),
-        "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-specidx",
+        payloads(s.range(1000000L, 1000005L), wav),
+        payloads(s.range(1000005L, 1000008L)
+          .union(s.range(2000000L, 2000002L)), wav))
+      val stream = mediaStream(s, staged)
       val codes = Multimodal.audioSpectralCodes(stream).toDF()
       val joined = codes.join(broadcast(index), Seq("frame_idx", "code"),
         "left")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
+      val out = drain(s, "append")("st85_out" -> joined)
       // a probe frame row appears once per matching corpus doc (or
       // once with null src): nf counts distinct frames, c counts
       // (frame, src) matches — one per frame since the index holds
       // one code per (src, frame)
-      val nf = s.table(name).groupBy(col("doc_id"))
+      val nf = out.groupBy(col("doc_id"))
         .agg(countDistinct(col("frame_idx")).as("nf"))
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("src"), col("nf_src"))
         .groupBy(col("d"), col("src"), col("nf_src"))
         .agg(count(lit(1)).as("c"))
@@ -1084,55 +1041,17 @@ object StreamingOps extends QueryPack {
     // sink scores shared distinct landmarks >= 0.6 over the smaller
     // set (the m110 metric). Pinned golden.
     "st82_stream_spectral_landmark_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st82_out"
-      val staged = stagingDir("graft-stream-slm")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTones(id, 8000, ms = 640)
         else Multimodal.syntheticWavTones(id - 1000000L, 44100, ms = 512,
           offsetMs = 128))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-slm",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioSpectralLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st82_out" -> hits.toDF()), Share(0.6))
     }),
 
     // ARBITRARY-OFFSET trim + fractional resample — ONSET-ANCHORED
@@ -1224,56 +1143,18 @@ object StreamingOps extends QueryPack {
     // query over the sink scores shared distinct landmarks >= 0.6 over
     // the smaller set (the m115 metric). Pinned golden.
     "st89_stream_onset_landmark_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st89_out"
-      val staged = stagingDir("graft-stream-onset")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTones(id, 8000,
           ms = 1248, gateMs = 32, segMs = 96, permMs = 32)
         else Multimodal.syntheticWavTones(id - 1000000L, 44100, ms = 1120,
           offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-onset",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioOnsetLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st89_out" -> hits.toDF()), Share(0.6))
     }),
 
     // Streaming WINNOWING ingest dedup — the guaranteed-recall
@@ -1290,46 +1171,22 @@ object StreamingOps extends QueryPack {
     // gate pins the cap's semantics, not just its presence.
     "st90_stream_winnow_dedup" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st90_out"
-      val staged = stagingDir("graft-stream-winnow")
-      stageCopy(s"$dir/documents.parquet", staged, "a.parquet")
       val docs = t(s, dir, "documents")
-      val b2 = docs.filter($"doc_id" < 5)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("junk prefix tokens before the borrowed span "),
-            $"text", lit(" junk suffix after")).as("text"),
-          $"lang", $"source", $"n_chars")
-        .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            reverse($"text").as("text"), $"lang", $"source", $"n_chars"))
-      val tmp = staged.resolve("mut")
-      b2.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, staged.resolve("b.parquet"))
-      staged.resolve("b.parquet").toFile.deleteOnExit()
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      java.nio.file.Files.setLastModifiedTime(staged.resolve("a.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 120000))
+      val staged = stageBatches("graft-stream-winnow", docs,
+        docs.filter($"doc_id" < 5)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("junk prefix tokens before the borrowed span "),
+              $"text", lit(" junk suffix after")).as("text"),
+            $"lang", $"source", $"n_chars")
+          .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
+            .select(($"doc_id" + 2000000L).as("doc_id"),
+              reverse($"text").as("text"), $"lang", $"source", $"n_chars")))
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
       val hits = graft.operators.StreamingNearDup.winnowVerdicts(
         stream, "doc_id", "text", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 3)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      s.table(name).select(col("doc_id")).distinct()
-        .join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st90_out" -> hits.toDF()), AtLeast(3))
     }),
 
     // Streaming CDC ingest dedup — st90's byte-exact shift-tolerant
@@ -1340,46 +1197,22 @@ object StreamingOps extends QueryPack {
     // as t78/t81 document). Same exact cap replay in the oracle.
     "st91_stream_cdc_dedup" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st91_out"
-      val staged = stagingDir("graft-stream-cdc")
-      stageCopy(s"$dir/documents.parquet", staged, "a.parquet")
       val docs = t(s, dir, "documents")
-      val b2 = docs.filter($"doc_id" < 5)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("junk prefix tokens before the borrowed span "),
-            $"text", lit(" junk suffix after")).as("text"),
-          $"lang", $"source", $"n_chars")
-        .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            reverse($"text").as("text"), $"lang", $"source", $"n_chars"))
-      val tmp = staged.resolve("mut")
-      b2.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, staged.resolve("b.parquet"))
-      staged.resolve("b.parquet").toFile.deleteOnExit()
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      java.nio.file.Files.setLastModifiedTime(staged.resolve("a.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 120000))
+      val staged = stageBatches("graft-stream-cdc", docs,
+        docs.filter($"doc_id" < 5)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("junk prefix tokens before the borrowed span "),
+              $"text", lit(" junk suffix after")).as("text"),
+            $"lang", $"source", $"n_chars")
+          .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
+            .select(($"doc_id" + 2000000L).as("doc_id"),
+              reverse($"text").as("text"), $"lang", $"source", $"n_chars")))
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
       val hits = graft.operators.StreamingNearDup.cdcChunkVerdicts(
         stream, "doc_id", "text", nibbles = 2, maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      s.table(name).select(col("doc_id")).distinct()
-        .join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st91_out" -> hits.toDF()), AtLeast(2))
     }),
 
     // Incremental ONSET-LANDMARK screen against a persisted index —
@@ -1599,56 +1432,18 @@ object StreamingOps extends QueryPack {
     // landmarks >= 0.6 over the smaller set (the m120 metric).
     // Pinned golden.
     "st92_stream_speed_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st92_out"
-      val staged = stagingDir("graft-stream-speed")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavBeats(id, 8000,
           ms = 1248)
         else Multimodal.syntheticWavBeats(id - 1000000L, 44100,
           ms = 1000, offsetMs = 50, speedNum = 21, speedDen = 20))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-speed",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioIntervalLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st92_out" -> hits.toDF()), Share(0.6))
     }),
 
     // STREAMING noisy-floor audio dedup (the m119 tier in the
@@ -1662,9 +1457,6 @@ object StreamingOps extends QueryPack {
     // waveform property); the batch query over the sink scores shared
     // distinct landmarks >= 0.6 over the smaller set. Pinned golden.
     "st93_stream_noisy_onset_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st93_out"
-      val staged = stagingDir("graft-stream-noisy")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTones(id, 8000,
           ms = 1248, gateMs = 32, segMs = 96, permMs = 32,
@@ -1672,49 +1464,14 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticWavTones(id - 1000000L, 44100,
           ms = 1120, offsetMs = 50, gateMs = 32, segMs = 96,
           permMs = 32, floorNum = 1, floorDen = 16))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-noisy",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup
         .audioOnsetLandmarkVerdictsRolling(
           stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st93_out" -> hits.toDF()), Share(0.6))
     }),
 
     // FRAME-RATE-CONVERTED video dedup — SKIP-TOLERANT run-collapsed
@@ -1930,8 +1687,6 @@ object StreamingOps extends QueryPack {
     // shared-frame interior peaks land bit-exactly. Pinned golden.
     "st102_stream_video_peak_dedup" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st102_out"
-      val staged = stagingDir("graft-stream-vpeak")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, 24, w = 48, h = 48)
         else {
@@ -1947,49 +1702,13 @@ object StreamingOps extends QueryPack {
               frameOffset = 2, srcX0 = 17, srcY0 = 9)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(Seq(0L, 1L, 10L, 11L).map(java.lang.Long.valueOf).toDS(),
-        "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000004L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vpeak",
+        payloads(Seq(0L, 1L, 10L, 11L).toDS(), avi),
+        payloads(s.range(1000000L, 1000004L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoPeakVerdicts(
         stream, "doc_id", "payload", every = 1, maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st102_out" -> hits.toDF()), Share(0.6))
     }),
 
     // ROTATED/MIRRORED + ARBITRARY-CROP compound image dedup — the
@@ -2088,9 +1807,6 @@ object StreamingOps extends QueryPack {
     // counts distinct matched peaks over the probe's peak count
     // >= 0.75. Pinned golden.
     "st105_stream_peak_lossy_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st105_out"
-      val staged = stagingDir("graft-stream-peaklossy")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 64, 64)
         else {
@@ -2106,35 +1822,16 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngCrop(m, 13, 17, 45, 49), 0.92f)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-peaklossy",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imagePeakLossyVerdicts(
         stream, "doc_id", "payload", maxDist = 1, maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
+      val out = drain(s, "append")("st105_out" -> hits.toDF())
+      val nl = out.groupBy(col("doc_id"))
         .agg(countDistinct(col("pk")).as("nl"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), col("pk"),
           explode(col("hits")).as("src"))
         .groupBy(col("d"), col("src"))
@@ -2218,9 +1915,6 @@ object StreamingOps extends QueryPack {
     // 0.6-1.0 over the probe's set. Consumer scores shared distinct
     // landmarks over the smaller set >= 0.4. Pinned golden.
     "st106_stream_scale_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st106_out"
-      val staged = stagingDir("graft-stream-scale")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -2236,48 +1930,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngBlobs(m), 24, 8, 120, 104, 144, 144)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-scale",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageScaleVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.4)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st106_out" -> hits.toDF()), Share(0.4))
     }),
 
     // FULL similarity-compound image dedup — the dihedral ANGLE fan
@@ -2345,9 +2004,6 @@ object StreamingOps extends QueryPack {
     // orientation's distinct-landmark hits over the smaller orient-0
     // count at the scale tier's 0.4 gate. Pinned golden.
     "st107_stream_scale_dihedral_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st107_out"
-      val staged = stagingDir("graft-stream-scaledih")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -2363,38 +2019,19 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngBlobs(m), 24, 8, 120, 104, 144, 144), 4)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-scaledih",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageScaleVerdictsDihedral(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st107_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
-      val nlSrc = s.table(name).filter(col("orient") === 0)
+      val nlSrc = out.filter(col("orient") === 0)
         .select(col("doc_id").as("src_id"), col("lm"))
         .groupBy(col("src_id")).agg(countDistinct(col("lm")).as("nl_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), col("orient"),
           explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src"))
@@ -2527,9 +2164,6 @@ object StreamingOps extends QueryPack {
     // shared distinct landmarks over the smaller set >= 0.3. Pinned
     // golden.
     "st110_stream_rot_scale_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st110_out"
-      val staged = stagingDir("graft-stream-rotscale")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -2545,48 +2179,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngBlobs(m), 3.0)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-rotscale",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageRotScaleVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.2)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st110_out" -> hits.toDF()), Share(0.2))
     }),
 
     // ANISOTROPIC resize (aspect-squeeze) dedup (m152): 4:3 <-> 16:9
@@ -2678,9 +2277,6 @@ object StreamingOps extends QueryPack {
     // best hypothesis' distinct-landmark hits over the smaller
     // identity count at the 0.3 gate. Pinned golden.
     "st111_stream_aspect_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st111_out"
-      val staged = stagingDir("graft-stream-aspect")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -2690,38 +2286,19 @@ object StreamingOps extends QueryPack {
           else Multimodal.pngCropResize(
             Multimodal.syntheticPngBlobs(m), 0, 0, 128, 128, 171, 128)
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-aspect",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageScaleVerdictsAspect(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st111_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
-      val nlSrc = s.table(name).filter(col("orient") === 0)
+      val nlSrc = out.filter(col("orient") === 0)
         .select(col("doc_id").as("src_id"), col("lm"))
         .groupBy(col("src_id")).agg(countDistinct(col("lm")).as("nl_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), col("orient"),
           explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src"))
@@ -2794,9 +2371,6 @@ object StreamingOps extends QueryPack {
     // Consumer scores shared distinct landmarks over the smaller
     // pooled set >= 0.2. Pinned golden.
     "st112_stream_video_rot_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st112_out"
-      val staged = stagingDir("graft-stream-vidrot")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAviBlobs(id, 6)
         else {
@@ -2812,48 +2386,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticAviBlobs(m, 6), 33.0, 1.0, 2)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vidrot",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoRotScaleVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.2)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st112_out" -> hits.toDF()), Share(0.2))
     }),
 
     // UNKNOWN STRONG (>= ~1.5:1) squeezes — the class the default
@@ -3046,9 +2585,6 @@ object StreamingOps extends QueryPack {
     // rotated+squeezed re-deliveries. Consumer scores at the 0.25
     // gate. Pinned golden.
     "st120_stream_affine_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st120_out"
-      val staged = stagingDir("graft-stream-affine")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -3063,48 +2599,13 @@ object StreamingOps extends QueryPack {
             Multimodal.syntheticPngBlobs(m), deg), 0, 0, 128, 128,
             outW, 128)
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-affine",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageAffineVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.25)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st120_out" -> hits.toDF()), Share(0.25))
     }),
 
     // FULL-AFFINE video dedup (m171 — the m169 whitening pooled per
@@ -3823,9 +3324,6 @@ object StreamingOps extends QueryPack {
     // factors outside any default fan. Consumer scores at the
     // canonical 0.3 gate. Pinned golden.
     "st118_stream_video_canonical_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st118_out"
-      val staged = stagingDir("graft-stream-vcanon")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAviBlobs(id, 6)
         else {
@@ -3839,48 +3337,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticAviBlobs(m, 6), 0, 0, 96, 96, 56, 90, 2)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vcanon",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoCanonicalVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.3)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st118_out" -> hits.toDF()), Share(0.3))
     }),
 
     // ANAMORPHIC video dedup (m156): the aspect-hypothesis fan pooled
@@ -3937,9 +3400,6 @@ object StreamingOps extends QueryPack {
     // factor. Consumer scores the best hypothesis over the smaller
     // identity count at the 0.3 gate. Pinned golden.
     "st113_stream_video_aspect_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st113_out"
-      val staged = stagingDir("graft-stream-vidaspect")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAviBlobs(id, 6)
         else {
@@ -3949,38 +3409,19 @@ object StreamingOps extends QueryPack {
           else Multimodal.aviAspectDib(
             Multimodal.syntheticAviBlobs(m, 6), 4.0 / 3.0)
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vidaspect",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoScaleVerdictsAspect(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st113_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
-      val nlSrc = s.table(name).filter(col("orient") === 0)
+      val nlSrc = out.filter(col("orient") === 0)
         .select(col("doc_id").as("src_id"), col("lm"))
         .groupBy(col("src_id")).agg(countDistinct(col("lm")).as("nl_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), col("orient"),
           explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src"))
@@ -4059,9 +3500,6 @@ object StreamingOps extends QueryPack {
     // structurally blind to. Consumer scores shared distinct
     // landmarks over the smaller pooled set >= 0.4. Pinned golden.
     "st108_stream_video_scale_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st108_out"
-      val staged = stagingDir("graft-stream-vidscale")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAviBlobs(id, 6)
         else {
@@ -4077,48 +3515,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticAviBlobs(m, 6), 12, 8, 92, 88, 96, 96, 2)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vidscale",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoScaleVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.4)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st108_out" -> hits.toDF()), Share(0.4))
     }),
 
     // STREAMING rotated + arbitrary-crop compound image dedup (the
@@ -4130,9 +3533,6 @@ object StreamingOps extends QueryPack {
     // orientation's hit count over the probe's orient-0 landmark
     // count. Pinned golden.
     "st104_stream_peak_dihedral_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st104_out"
-      val staged = stagingDir("graft-stream-peakdih")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 64, 64)
         else {
@@ -4148,38 +3548,19 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngCrop(m, 13, 17, 45, 49), 7)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-peakdih",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imagePeakVerdictsDihedral(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st104_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
-      val nlSrc = s.table(name).filter(col("orient") === 0)
+      val nlSrc = out.filter(col("orient") === 0)
         .select(col("doc_id").as("src_id"), col("lm"))
         .groupBy(col("src_id")).agg(countDistinct(col("lm")).as("nl_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), col("orient"),
           explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src"))
@@ -4203,10 +3584,7 @@ object StreamingOps extends QueryPack {
     // re-decode and O(index) executor memory instead of O(stream)
     // state. Pinned golden.
     "st103_stream_peak_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st103_out"
-      val staged = stagingDir("graft-stream-peakidx")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 64, 64)
         else {
@@ -4222,37 +3600,17 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val index = Multimodal.imagePeakIndex(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(1000000L, 1000004L).as[java.lang.Long],
-        "a.parquet", 120000L)
-      stageBatch(s.range(1000004L, 1000006L).as[java.lang.Long]
-        .union(s.range(140L, 142L).as[java.lang.Long]), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-peakidx",
+        payloads(s.range(1000000L, 1000004L), img),
+        payloads(s.range(1000004L, 1000006L)
+          .union(s.range(140L, 142L)), img))
+      val stream = mediaStream(s, staged)
       val lms = Multimodal.imagePeakLandmarks(stream)
       val joined = lms.join(broadcast(index), Seq("lm"), "left")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
+      val out = drain(s, "append")("st103_out" -> joined)
+      val nl = out.groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("src"), col("nl_src"))
         .groupBy(col("d"), col("src"), col("nl_src"))
         .agg(count(lit(1)).as("c"))
@@ -4274,10 +3632,7 @@ object StreamingOps extends QueryPack {
     // corpus re-decode and O(index) executor memory instead of
     // O(stream) state. Pinned golden.
     "st109_stream_scale_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st109_out"
-      val staged = stagingDir("graft-stream-scaleidx")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -4297,37 +3652,17 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val index = Multimodal.imageScaleLandmarkIndex(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(1000000L, 1000004L).as[java.lang.Long],
-        "a.parquet", 120000L)
-      stageBatch(s.range(1000004L, 1000006L).as[java.lang.Long]
-        .union(s.range(140L, 142L).as[java.lang.Long]), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-scaleidx",
+        payloads(s.range(1000000L, 1000004L), img),
+        payloads(s.range(1000004L, 1000006L)
+          .union(s.range(140L, 142L)), img))
+      val stream = mediaStream(s, staged)
       val lms = Multimodal.imageScaleLandmarks(stream).toDF()
       val joined = lms.join(broadcast(index), Seq("lm"), "left")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
+      val out = drain(s, "append")("st109_out" -> joined)
+      val nl = out.groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("src"), col("nl_src"))
         .groupBy(col("d"), col("src"), col("nl_src"))
         .agg(count(lit(1)).as("c"))
@@ -4393,40 +3728,26 @@ object StreamingOps extends QueryPack {
     "st114_stream_winnow_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st114_out"
-      val staged = stagingDir("graft-stream-winnowidx")
       val docs = t(s, dir, "documents")
       val corpus = docs.filter($"doc_id" < 40)
         .select($"doc_id", $"text")
       val index = graft.operators.TextDedup.winnowIndex(
         corpus, "doc_id", "text")
         .select(col("fp"), col("doc_id").as("src"))
-      def stage(df: org.apache.spark.sql.DataFrame, fname: String,
-          ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage(docs.filter($"doc_id" < 5)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("junk prefix tokens before the borrowed span "),
-            $"text", lit(" junk suffix after")).as("text"),
-          $"lang", $"source", $"n_chars"), "a.parquet", 120000L)
-      stage(docs.filter($"doc_id" >= 20 && $"doc_id" < 23)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("another junk lead "), $"text").as("text"),
-          $"lang", $"source", $"n_chars")
-        .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            reverse($"text").as("text"), $"lang", $"source",
-            $"n_chars")), "b.parquet", 0L)
+      val staged = stageBatches("graft-stream-winnowidx",
+        docs.filter($"doc_id" < 5)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("junk prefix tokens before the borrowed span "),
+              $"text", lit(" junk suffix after")).as("text"),
+            $"lang", $"source", $"n_chars"),
+        docs.filter($"doc_id" >= 20 && $"doc_id" < 23)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("another junk lead "), $"text").as("text"),
+            $"lang", $"source", $"n_chars")
+          .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
+            .select(($"doc_id" + 2000000L).as("doc_id"),
+              reverse($"text").as("text"), $"lang", $"source",
+              $"n_chars")))
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
@@ -4434,16 +3755,14 @@ object StreamingOps extends QueryPack {
         stream, "doc_id", "text").toDF()
       val joined = fps.select(col("doc_id"), col("fp"))
         .join(broadcast(index), Seq("fp"), "left")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val out = drain(s, "append")("st114_out" -> joined)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("src"), col("fp"))
         .groupBy(col("d"), col("src"))
         .agg(countDistinct(col("fp")).as("c"))
         .filter(col("c") >= 3)
         .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      s.table(name).select(col("doc_id")).distinct()
+      out.select(col("doc_id")).distinct()
         .join(dup, col("doc_id") === col("d"), "left")
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
           col("dup_src"))
@@ -4460,40 +3779,26 @@ object StreamingOps extends QueryPack {
     "st115_stream_cdc_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st115_out"
-      val staged = stagingDir("graft-stream-cdcidx")
       val docs = t(s, dir, "documents")
       val corpus = docs.filter($"doc_id" < 40)
         .select($"doc_id", $"text")
       val index = graft.operators.TextDedup.cdcChunkIndex(
         corpus, "doc_id", "text", nibbles = 2)
         .select(col("ch"), col("doc_id").as("src"))
-      def stage(df: org.apache.spark.sql.DataFrame, fname: String,
-          ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage(docs.filter($"doc_id" < 5)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("junk prefix tokens before the borrowed span "),
-            $"text", lit(" junk suffix after")).as("text"),
-          $"lang", $"source", $"n_chars"), "a.parquet", 120000L)
-      stage(docs.filter($"doc_id" >= 20 && $"doc_id" < 23)
-        .select(($"doc_id" + 1000000L).as("doc_id"),
-          concat(lit("another junk lead "), $"text").as("text"),
-          $"lang", $"source", $"n_chars")
-        .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
-          .select(($"doc_id" + 2000000L).as("doc_id"),
-            reverse($"text").as("text"), $"lang", $"source",
-            $"n_chars")), "b.parquet", 0L)
+      val staged = stageBatches("graft-stream-cdcidx",
+        docs.filter($"doc_id" < 5)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("junk prefix tokens before the borrowed span "),
+              $"text", lit(" junk suffix after")).as("text"),
+            $"lang", $"source", $"n_chars"),
+        docs.filter($"doc_id" >= 20 && $"doc_id" < 23)
+          .select(($"doc_id" + 1000000L).as("doc_id"),
+            concat(lit("another junk lead "), $"text").as("text"),
+            $"lang", $"source", $"n_chars")
+          .unionAll(docs.filter($"doc_id" >= 40 && $"doc_id" < 45)
+            .select(($"doc_id" + 2000000L).as("doc_id"),
+              reverse($"text").as("text"), $"lang", $"source",
+              $"n_chars")))
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
@@ -4501,16 +3806,14 @@ object StreamingOps extends QueryPack {
         stream, "doc_id", "text", nibbles = 2).toDF()
       val joined = chunks.select(col("doc_id"), col("ch"))
         .join(broadcast(index), Seq("ch"), "left")
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val out = drain(s, "append")("st115_out" -> joined)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("src"), col("ch"))
         .groupBy(col("d"), col("src"))
         .agg(countDistinct(col("ch")).as("c"))
         .filter(col("c") >= 2)
         .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      s.table(name).select(col("doc_id")).distinct()
+      out.select(col("doc_id")).distinct()
         .join(dup, col("doc_id") === col("d"), "left")
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
           col("dup_src"))
@@ -4582,9 +3885,6 @@ object StreamingOps extends QueryPack {
     // its master's buckets at ~1.0 over the crop's set. Pinned
     // golden.
     "st101_stream_peak_crop_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st101_out"
-      val staged = stagingDir("graft-stream-peak")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 64, 64)
         else {
@@ -4596,48 +3896,13 @@ object StreamingOps extends QueryPack {
             case _ => Multimodal.syntheticPngCrop(m, 13, 17, 45, 49)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-peak",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imagePeakVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st101_out" -> hits.toDF()), Share(0.6))
     }),
 
     // The thirds ladder as an INDEX member (extended=true on the m129
@@ -4748,9 +4013,6 @@ object StreamingOps extends QueryPack {
     // shared distinct landmarks over the probe's full-frame channel
     // count >= 0.6. Pinned golden.
     "st97_stream_video_crop_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st97_out"
-      val staged = stagingDir("graft-stream-vcrop")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, 24, w = 32, h = 32)
         else {
@@ -4766,33 +4028,14 @@ object StreamingOps extends QueryPack {
               frameOffset = 2, srcX0 = 16, srcY0 = 16)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000004L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vcrop",
+        payloads(s.range(0, 6), avi),
+        payloads(s.range(1000000L, 1000004L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoCropLandmarkVerdicts(
         stream, "doc_id", "payload", every = 1, maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val win0 = s.table(name).filter(col("win") === 0)
+      val out = drain(s, "append")("st97_out" -> hits.toDF())
+      val win0 = out.filter(col("win") === 0)
       val nl = win0.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val dup = win0
         .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
@@ -4856,9 +4099,6 @@ object StreamingOps extends QueryPack {
     // master's thirds-window buckets. Consumer scores win=0 rows over
     // the probe's full-frame channel count >= 0.6. Pinned golden.
     "st99_stream_video_thirds_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st99_out"
-      val staged = stagingDir("graft-stream-vthirds")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, 24, w = 48, h = 48)
         else {
@@ -4874,34 +4114,15 @@ object StreamingOps extends QueryPack {
               frameOffset = 2, srcX0 = 8, srcY0 = 8)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000004L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vthirds",
+        payloads(s.range(0, 6), avi),
+        payloads(s.range(1000000L, 1000004L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoCropLandmarkVerdicts(
         stream, "doc_id", "payload", every = 1, maxBucket = 64,
         extended = true)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val win0 = s.table(name).filter(col("win") === 0)
+      val out = drain(s, "append")("st99_out" -> hits.toDF())
+      val win0 = out.filter(col("win") === 0)
       val nl = win0.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val dup = win0
         .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
@@ -4954,9 +4175,6 @@ object StreamingOps extends QueryPack {
     // aligns with no master hash). win = 0 rows carry the verdicts.
     // Pinned golden.
     "st96_stream_crop_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st96_out"
-      val staged = stagingDir("graft-stream-crop")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 64, 64)
         else {
@@ -4968,33 +4186,13 @@ object StreamingOps extends QueryPack {
             case _ => Multimodal.syntheticPngCrop(m, 32, 32, 64, 64)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 8).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000008L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-crop",
+        payloads(s.range(0, 8), img),
+        payloads(s.range(1000000L, 1000008L), img))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashCropVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st96_out" -> verdicts.toDF())
         .filter(col("win") === 0)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
@@ -5012,9 +4210,6 @@ object StreamingOps extends QueryPack {
     // thirds-window bucket. win = 0 rows carry the verdicts. Pinned
     // golden.
     "st98_stream_thirds_crop_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st98_out"
-      val staged = stagingDir("graft-stream-thirds-crop")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id, 48, 48)
         else {
@@ -5026,33 +4221,13 @@ object StreamingOps extends QueryPack {
             case _ => Multimodal.syntheticPngCrop(m, 8, 8, 40, 40, 48, 48)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-thirds-crop",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashCropVerdicts(
         stream, "doc_id", "payload", maxBucket = 64, extended = true)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st98_out" -> verdicts.toDF())
         .filter(col("win") === 0)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
@@ -5165,57 +4340,19 @@ object StreamingOps extends QueryPack {
     // codes >= 0.6 over the smaller set (below the 0.727273 floor).
     // Pinned golden.
     "st95_stream_pitch_chroma_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st95_out"
-      val staged = stagingDir("graft-stream-chroma")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavBeats(id, 8000,
           ms = 1248, uniformSegMs = 96)
         else Multimodal.syntheticWavBeats(id - 1000000L, 44100,
           ms = 1000, offsetMs = 50, speedNum = 196, speedDen = 185,
           uniformSegMs = 96))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-chroma",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioChromaLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st95_out" -> hits.toDF()), Share(0.6))
     }),
 
     // STREAMING quarter-tone metronomic audio dedup (div=24 on the
@@ -5226,57 +4363,19 @@ object StreamingOps extends QueryPack {
     // this class via m126's fixture), exactly one step at div=24.
     // Same chroma-bucket state and scoring as st95. Pinned golden.
     "st100_stream_quarter_tone_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st100_out"
-      val staged = stagingDir("graft-stream-qtone")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavBeats(id, 8000,
           ms = 1248, uniformSegMs = 96)
         else Multimodal.syntheticWavBeats(id - 1000000L, 44100,
           ms = 1000, offsetMs = 50, speedNum = 176, speedDen = 171,
           uniformSegMs = 96))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-qtone",
+        payloads(s.range(0, 10), wav),
+        payloads(s.range(1000000L, 1000010L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioChromaLandmarkVerdicts(
         stream, "doc_id", "payload", div = 24, maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st100_out" -> hits.toDF()), Share(0.6))
     }),
 
     // Incremental screen vs the persisted SKIP-LANDMARK video index —
@@ -5317,57 +4416,19 @@ object StreamingOps extends QueryPack {
     // over the smaller set (below the 0.773585 down-conversion
     // floor). Pinned golden.
     "st94_stream_video_rate_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st94_out"
-      val staged = stagingDir("graft-stream-vrate")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, 40)
         else if ((id - 1000000L) % 10 < 5) Multimodal.syntheticAvi(
           id - 1000000L, 28, frameOffset = 4, rateNum = 5, rateDen = 4)
         else Multimodal.syntheticAvi(id - 1000000L, 40,
           frameOffset = 4, rateNum = 4, rateDen = 5))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vrate",
+        payloads(s.range(0, 10), avi),
+        payloads(s.range(1000000L, 1000010L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoSkipLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st94_out" -> hits.toDF()), Share(0.6))
     }),
 
     // WATERMARKED streaming exact dedup (the bounded-state form of
@@ -5391,42 +4452,26 @@ object StreamingOps extends QueryPack {
     // either way no duplicate inside the horizon survives.
     "st88_stream_dedup_watermark" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
-      val name = "st88_out"
-      val staged = stagingDir("graft-stream-wmdedup")
       val base = t(s, dir, "events").select($"event_id", $"user_id",
         $"event_type")
       def at(lo: Long, hi: Long, ts: String): DataFrame =
         base.filter($"event_id" >= lo && $"event_id" < hi)
           .withColumn("ts", lit(ts).cast("timestamp"))
-      def stage(fname: String, df: DataFrame, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage("a.parquet",
+      val staged = stageBatches("graft-stream-wmdedup",
         at(0, 20, "2024-01-01 00:00:00")
-          .unionByName(at(40, 60, "2024-01-01 00:00:00")), 480000L)
-      stage("b.parquet", at(40, 60, "2024-01-01 00:05:00"), 360000L)
-      stage("c.parquet", at(20, 40, "2024-01-01 01:00:00"), 240000L)
-      stage("d.parquet", at(0, 20, "2024-01-01 01:00:00"), 120000L)
-      stage("e.parquet", at(0, 20, "2024-01-01 01:05:00"), 0L)
+            .unionByName(at(40, 60, "2024-01-01 00:00:00")),
+        at(40, 60, "2024-01-01 00:05:00"),
+        at(20, 40, "2024-01-01 01:00:00"),
+        at(0, 20, "2024-01-01 01:00:00"),
+        at(0, 20, "2024-01-01 01:05:00"))
       val schema = s.read.parquet(staged.toString).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("event_id")
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name).groupBy($"event_id").agg(count(lit(1)).as("n"))
+      drain(s, "append")("st88_out" -> stream)
+        .groupBy($"event_id").agg(count(lit(1)).as("n"))
         .orderBy($"event_id")
     }),
 
@@ -5562,9 +4607,7 @@ object StreamingOps extends QueryPack {
     // reaction-video shapes, batch 2 the re-dub and an unrelated
     // video. Pinned golden.
     "st121_stream_joint_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-jointidx")
       val mk = udf((id: Long) => id match {
         case 20L => Multimodal.aviRotateResizeDib(
           Multimodal.syntheticAviBlobs(0, 6), 17.0,
@@ -5587,42 +4630,19 @@ object StreamingOps extends QueryPack {
           Multimodal.videoAudioTracks(corpus))
         .select(col("frame_idx"), col("code"),
           col("doc_id").as("src"), col("nf").as("nf_src"))
-      def stageBatch(ids: DataFrame, fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.select(col("doc_id"), mk(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(20, 22).select(col("id").as("doc_id")),
-        "a.parquet", 120000L)
-      stageBatch(s.range(22, 24).select(col("id").as("doc_id")),
-        "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      def freshStream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val qv = Multimodal.videoRotScaleLandmarks(freshStream)
-        .join(broadcast(vIndex), Seq("lm"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st121_v").start()
-      val qa = Multimodal.audioFingerprint(
-          Multimodal.videoAudioTracks(freshStream)).toDF()
-        .join(broadcast(aIndex), Seq("frame_idx", "code"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st121_a").start()
-      try { qv.processAllAvailable(); qa.processAllAvailable() }
-      finally { qv.stop(); qa.stop() }
-      val vnl = s.table("st121_v").groupBy(col("doc_id"))
+      val staged = stageBatches("graft-stream-jointidx",
+        payloads(s.range(20, 22), mk),
+        payloads(s.range(22, 24), mk))
+      def freshStream = mediaStream(s, staged)
+      val video = drain(s, "append")(
+        "st121_v" -> Multimodal.videoRotScaleLandmarks(freshStream)
+          .join(broadcast(vIndex), Seq("lm"), "left"),
+        "st121_a" -> Multimodal.audioFingerprint(
+            Multimodal.videoAudioTracks(freshStream)).toDF()
+          .join(broadcast(aIndex), Seq("frame_idx", "code"), "left"))
+      val vnl = video.groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val vdup = s.table("st121_v").filter(col("src").isNotNull)
+      val vdup = video.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("lm"), col("src"), col("nl_src"))
         .groupBy(col("d"), col("src"), col("nl_src"))
         .agg(countDistinct(col("lm")).as("c"))
@@ -5686,44 +4706,22 @@ object StreamingOps extends QueryPack {
     // orientation's hit count over the orient-0 landmark denominator.
     // Pinned golden.
     "st79_stream_video_flip_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st79_out"
-      val staged = stagingDir("graft-stream-vflip")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, (6 + id % 3).toInt)
         else Multimodal.syntheticAvi(id - 1000000L,
           (6 + (id - 1000000L) % 3).toInt - 2, frameOffset = 2,
           mirrorX = true))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vflip",
+        payloads(s.range(0, 10), avi),
+        payloads(s.range(1000000L, 1000010L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoLandmarkVerdictsFlipTolerant(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st79_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val nlSrc = nl.select(col("doc_id").as("src_id"), col("nl").as("nl_src"))
-      val best = s.table(name)
+      val best = out
         .select(col("doc_id").as("d"), col("orient"), explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src")).agg(count(lit(1)).as("c"))
         .groupBy(col("d"), col("src")).agg(max(col("c")).as("c"))
@@ -5749,9 +4747,6 @@ object StreamingOps extends QueryPack {
     // probes land every re-delivery on its source. Only orient-0
     // landmarks enter state. Pinned golden.
     "st83_stream_video_dihedral_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st83_out"
-      val staged = stagingDir("graft-stream-vdih")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, (6 + id % 3).toInt)
         else if (id < 1000005L) Multimodal.syntheticAvi(id - 1000000L,
@@ -5760,36 +4755,17 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAvi(id - 1000000L,
           (6 + (id - 1000000L) % 3).toInt - 2, frameOffset = 2,
           rotQ = (id % 3 + 1).toInt, mirrorX = true))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vdih",
+        payloads(s.range(0, 10), avi),
+        payloads(s.range(1000000L, 1000010L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoLandmarkVerdictsDihedral(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).filter(col("orient") === 0)
+      val out = drain(s, "append")("st83_out" -> hits.toDF())
+      val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val nlSrc = nl.select(col("doc_id").as("src_id"), col("nl").as("nl_src"))
-      val best = s.table(name)
+      val best = out
         .select(col("doc_id").as("d"), col("orient"), explode(col("hits")).as("src"))
         .groupBy(col("d"), col("orient"), col("src")).agg(count(lit(1)).as("c"))
         .groupBy(col("d"), col("src")).agg(max(col("c")).as("c"))
@@ -5814,41 +4790,18 @@ object StreamingOps extends QueryPack {
     // as-is hashes enter state; rotated probes land in their source's
     // buckets by construction. Pinned golden.
     "st80_stream_phash_rot_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st80_out"
-      val staged = stagingDir("graft-stream-phrot")
       val png = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id)
         else if (id < 1000010L)
           Multimodal.syntheticPngRot(id - 1000000L, (id % 3 + 1).toInt)
         else Multimodal.syntheticPngVariant(id - 1000000L))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), png(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 20).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000020L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-phrot",
+        payloads(s.range(0, 20), png),
+        payloads(s.range(1000000L, 1000020L), png))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashVerdictsRotTolerant(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st80_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -5866,41 +4819,18 @@ object StreamingOps extends QueryPack {
     // is kept — the m85 precedent). Only as-is hashes enter state
     // (4 x 16 B per doc, unchanged). Pinned golden.
     "st81_stream_phash_dihedral_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st81_out"
-      val staged = stagingDir("graft-stream-phdih")
       val png = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id)
         else if (id < 1000010L)
           Multimodal.syntheticPngRotFlip(id - 1000000L, (id % 3 + 1).toInt)
         else Multimodal.syntheticPngVariant(id - 1000000L))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), png(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 20).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000020L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-phdih",
+        payloads(s.range(0, 20), png),
+        payloads(s.range(1000000L, 1000020L), png))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashVerdictsDihedral(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st81_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -5918,40 +4848,17 @@ object StreamingOps extends QueryPack {
     // probes land in their source's buckets by construction. Pinned
     // golden.
     "st78_stream_phash_flip_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st78_out"
-      val staged = stagingDir("graft-stream-phflip")
       val png = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id)
         else if (id < 1000010L) Multimodal.syntheticPngFlip(id - 1000000L)
         else Multimodal.syntheticPngVariant(id - 1000000L))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), png(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 20).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000020L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-phflip",
+        payloads(s.range(0, 20), png),
+        payloads(s.range(1000000L, 1000020L), png))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashVerdictsFlipTolerant(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st78_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -6155,7 +5062,6 @@ object StreamingOps extends QueryPack {
     // in the frame tier).
     "st77_stream_video_joint" -> ((s0, dir) => { val s = streamSession(s0)
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-joint")
       val mk = udf((id: Long) => id match {
         case 20L => Multimodal.syntheticMkv(0L, 6, audioId = 0L,
           audioSamples = 320)
@@ -6169,62 +5075,25 @@ object StreamingOps extends QueryPack {
           mjpeg = true, audioId = i,
           audioSamples = (320 + (i % 4) * 64).toInt)
       })
-      def stageBatch(ids: DataFrame, fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.select(col("doc_id"), mk(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 4).select(col("id").as("doc_id")),
-        "a.parquet", 120000L)
-      stageBatch(s.range(20, 24).select(col("id").as("doc_id")),
-        "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      def freshStream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-joint",
+        payloads(s.range(0, 4), mk),
+        payloads(s.range(20, 24), mk))
+      def freshStream = mediaStream(s, staged)
       // both tiers run CONCURRENTLY over their own source instances —
       // they share no state, so the drains overlap and the wall cost
       // is one tier's trigger latency, not the sum
-      val qv = graft.operators.StreamingNearDup.videoLandmarkVerdicts(
-          freshStream, "doc_id", "payload", maxBucket = 64)
-        .toDF().writeStream.outputMode("append")
-        .format("memory").queryName("st77_v").start()
-      val qa = graft.operators.StreamingNearDup.audioLandmarkVerdicts(
+      val video = drain(s, "append")(
+        "st77_v" -> graft.operators.StreamingNearDup.videoLandmarkVerdicts(
+          freshStream, "doc_id", "payload", maxBucket = 64).toDF(),
+        "st77_a" -> graft.operators.StreamingNearDup.audioLandmarkVerdicts(
           Multimodal.videoAudioTracks(freshStream), "doc_id", "payload",
-          maxBucket = 64)
-        .toDF().writeStream.outputMode("append")
-        .format("memory").queryName("st77_a").start()
-      try { qv.processAllAvailable(); qa.processAllAvailable() }
-      finally { qv.stop(); qa.stop() }
+          maxBucket = 64).toDF())
       // per-tier scoring over its sink (the st74/st75 form), then fuse
-      def dupOf(name: String): DataFrame = {
-        val nl = s.table(name).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("nl"))
-        val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-          .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-        s.table(name)
-          .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-          .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-          .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-          .join(nlSrc, col("src") === col("src_id"))
-          .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-            >= 0.6)
-          .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      }
       val ids = s.range(0, 4).union(s.range(20, 24))
         .select(col("id").as("doc_id"))
-      val v = dupOf("st77_v")
+      val v = voteDups(video, Share(0.6))._2
         .select(col("d").as("doc_id"), col("dup_src").as("video_src"))
-      val a = dupOf("st77_a")
+      val a = voteDups(s.table("st77_a"), Share(0.6))._2
         .select(col("d").as("doc_id"), col("dup_src").as("audio_src"))
       ids.join(v, Seq("doc_id"), "left").join(a, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -6246,9 +5115,6 @@ object StreamingOps extends QueryPack {
     // any default set. Consumer scores shared distinct landmarks over
     // the smaller set at the tier's 0.3 gate. Pinned golden.
     "st117_stream_canonical_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st117_out"
-      val staged = stagingDir("graft-stream-canon")
       val img = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPngBlobs(id)
         else {
@@ -6265,48 +5131,13 @@ object StreamingOps extends QueryPack {
               Multimodal.syntheticPngBlobs(m), 0, 0, 128, 128, 128, 80)
           }
         })
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 6).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000006L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-canon",
+        payloads(s.range(0, 6), img),
+        payloads(s.range(1000000L, 1000006L), img))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.imageCanonicalVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.3)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st117_out" -> hits.toDF()), Share(0.3))
     }),
 
     // STREAMING joint fusion at the ROT-constellation seam (st116 —
@@ -6320,7 +5151,6 @@ object StreamingOps extends QueryPack {
     // gate, then the same verdict fusion. Pinned golden.
     "st116_stream_video_joint_rot" -> ((s0, dir) => { val s = streamSession(s0)
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-jointrot")
       val mk = udf((id: Long) => id match {
         case 20L => Multimodal.aviRotateResizeDib(
           Multimodal.syntheticAviBlobs(0, 6), 17.0,
@@ -6335,58 +5165,21 @@ object StreamingOps extends QueryPack {
         case i => Multimodal.syntheticAviBlobs(i, 6,
           audioId = i, audioSamples = (320 + (i % 4) * 64).toInt)
       })
-      def stageBatch(ids: DataFrame, fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.select(col("doc_id"), mk(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 4).select(col("id").as("doc_id")),
-        "a.parquet", 120000L)
-      stageBatch(s.range(20, 24).select(col("id").as("doc_id")),
-        "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      def freshStream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val qv = graft.operators.StreamingNearDup.videoRotScaleVerdicts(
-          freshStream, "doc_id", "payload", maxBucket = 64)
-        .toDF().writeStream.outputMode("append")
-        .format("memory").queryName("st116_v").start()
-      val qa = graft.operators.StreamingNearDup.audioLandmarkVerdicts(
+      val staged = stageBatches("graft-stream-jointrot",
+        payloads(s.range(0, 4), mk),
+        payloads(s.range(20, 24), mk))
+      def freshStream = mediaStream(s, staged)
+      val video = drain(s, "append")(
+        "st116_v" -> graft.operators.StreamingNearDup.videoRotScaleVerdicts(
+          freshStream, "doc_id", "payload", maxBucket = 64).toDF(),
+        "st116_a" -> graft.operators.StreamingNearDup.audioLandmarkVerdicts(
           Multimodal.videoAudioTracks(freshStream), "doc_id", "payload",
-          maxBucket = 64)
-        .toDF().writeStream.outputMode("append")
-        .format("memory").queryName("st116_a").start()
-      try { qv.processAllAvailable(); qa.processAllAvailable() }
-      finally { qv.stop(); qa.stop() }
-      def dupOf(name: String, gate: Double): DataFrame = {
-        val nl = s.table(name).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("nl"))
-        val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-          .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-        s.table(name)
-          .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-          .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-          .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-          .join(nlSrc, col("src") === col("src_id"))
-          .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-            >= gate)
-          .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      }
+          maxBucket = 64).toDF())
       val ids = s.range(0, 4).union(s.range(20, 24))
         .select(col("id").as("doc_id"))
-      val v = dupOf("st116_v", 0.2)
+      val v = voteDups(video, Share(0.2))._2
         .select(col("d").as("doc_id"), col("dup_src").as("video_src"))
-      val a = dupOf("st116_a", 0.6)
+      val a = voteDups(s.table("st116_a"), Share(0.6))._2
         .select(col("d").as("doc_id"), col("dup_src").as("audio_src"))
       ids.join(v, Seq("doc_id"), "left").join(a, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -6410,9 +5203,6 @@ object StreamingOps extends QueryPack {
     // 20. Delivery is id-ordered, so kept = min doc_id per canonical
     // key — full SQL replay.
     "st119_stream_url_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st119_out"
-      val staged = stagingDir("graft-stream-url")
       def srcLbl(page: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         concat(lit("src"), (page % 20).cast("string"))
       def urlA(page: org.apache.spark.sql.Column): org.apache.spark.sql.Column = concat(
@@ -6423,27 +5213,14 @@ object StreamingOps extends QueryPack {
         lit("https://docs."), srcLbl(page),
         lit(".com/Wiki/Page-"), page.cast("string"),
         lit("?b=2&a=1&utm_campaign=z"))
-      def stageBatch(df: DataFrame, fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 50).select(col("id").as("doc_id"),
-        urlA(col("id")).as("url")), "a.parquet", 120000L)
-      stageBatch(
+      val staged = stageBatches("graft-stream-url",
+        s.range(0, 50).select(col("id").as("doc_id"),
+          urlA(col("id")).as("url")),
         s.range(1000000L, 1000050L).select(col("id").as("doc_id"),
-            urlB(col("id") - 1000000L).as("url"))
-          .unionByName(s.range(2000000L, 2000020L)
-            .select(col("id").as("doc_id"),
-              urlB(col("id") - 2000000L + 50L).as("url"))),
-        "b.parquet", 0L)
+              urlB(col("id") - 1000000L).as("url"))
+            .unionByName(s.range(2000000L, 2000020L)
+              .select(col("id").as("doc_id"),
+                urlB(col("id") - 2000000L + 50L).as("url"))))
       val urlSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("url", StringType)))
       val stream = s.readStream.schema(urlSchema)
@@ -6452,12 +5229,10 @@ object StreamingOps extends QueryPack {
           graft.operators.TextAnalysis.canonicalizeUrl(col("url"))
             .as("url_canon"))
         .dropDuplicates("url_canon")
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
+      val out = drain(s, "append")("st119_out" -> stream)
       val ids = s.range(0, 50).union(s.range(1000000L, 1000050L))
         .union(s.range(2000000L, 2000020L)).select(col("id").as("doc_id"))
-      ids.join(s.table(name).select(col("doc_id"), lit(true).as("hit")),
+      ids.join(out.select(col("doc_id"), lit(true).as("hit")),
           Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("kept"))
         .orderBy(col("doc_id"))
@@ -6478,7 +5253,6 @@ object StreamingOps extends QueryPack {
     "st124_stream_affine_verified_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-afvidx")
       val img = udf((id: Long) => {
         def blobs(seed: Long): Array[Byte] =
           Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
@@ -6496,36 +5270,16 @@ object StreamingOps extends QueryPack {
       val index = Multimodal.imageAffineFrameAnchorIndex(corpus)
         .select(col("lm"), col("ax").as("axb"), col("ay").as("ayb"),
           col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: Seq[Long], fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        s.createDataset(ids).toDF("doc_id")
-          .select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(Seq(20L, 130L), "a.parquet", 120000L)
-      stageBatch(Seq(22L, 131L), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val q = Multimodal.imageAffineFrameLandmarksAnchored(stream)
-        .join(broadcast(index), Seq("lm"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st124_lm").start()
-      try q.processAllAvailable() finally q.stop()
+      val staged = stageBatches("graft-stream-afvidx",
+        payloads(s.createDataset(Seq(20L, 130L)), img),
+        payloads(s.createDataset(Seq(22L, 131L)), img))
+      val stream = mediaStream(s, staged)
       // the memory sink view self-joins three ways (counts, clouds,
       // candidates) — rename the key per derivative, the st121 idiom,
       // or Catalyst fails resolving the conflicting view references
-      val sunk = s.table("st124_lm")
+      val sunk = drain(s, "append")(
+        "st124_lm" -> Multimodal.imageAffineFrameLandmarksAnchored(stream)
+          .join(broadcast(index), Seq("lm"), "left"))
       // nl = DISTINCT landmarks: the sink rows are post-join, so a
       // probe landmark matching several index masters is duplicated —
       // count(1) would inflate nl and deflate c/least(nl, nl_src),
@@ -6580,7 +5334,6 @@ object StreamingOps extends QueryPack {
     "st123_stream_affine_frame_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-afridx")
       val img = udf((id: Long) => {
         def blobs(seed: Long): Array[Byte] =
           Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
@@ -6596,35 +5349,16 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val index = Multimodal.imageAffineFrameIndex(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: Seq[Long], fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        s.createDataset(ids).toDF("doc_id")
-          .select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(Seq(20L, 130L), "a.parquet", 120000L)
-      stageBatch(Seq(22L, 131L), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val q = Multimodal.imageAffineFrameLandmarks(stream).toDF()
-        .join(broadcast(index), Seq("lm"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st123_lm").start()
-      try q.processAllAvailable() finally q.stop()
-      val nl = s.table("st123_lm").groupBy(col("doc_id"))
+      val staged = stageBatches("graft-stream-afridx",
+        payloads(s.createDataset(Seq(20L, 130L)), img),
+        payloads(s.createDataset(Seq(22L, 131L)), img))
+      val stream = mediaStream(s, staged)
+      val sunk = drain(s, "append")(
+        "st123_lm" -> Multimodal.imageAffineFrameLandmarks(stream).toDF()
+          .join(broadcast(index), Seq("lm"), "left"))
+      val nl = sunk.groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val dup = s.table("st123_lm").filter(col("src").isNotNull)
+      val dup = sunk.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("lm"), col("src"), col("nl_src"))
         .groupBy(col("d"), col("src"), col("nl_src"))
         .agg(countDistinct(col("lm")).as("c"))
@@ -6653,7 +5387,6 @@ object StreamingOps extends QueryPack {
     "st125_stream_affine_chiral_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-chiridx")
       val img = udf((id: Long) => {
         def blobs(seed: Long): Array[Byte] =
           Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
@@ -6670,36 +5403,17 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val index = Multimodal.imageAffineFrameIndex(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: Seq[Long], fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        s.createDataset(ids).toDF("doc_id")
-          .select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(Seq(20L, 130L), "a.parquet", 120000L)
-      stageBatch(Seq(22L, 131L), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val q = Multimodal.imageAffineFrameLandmarksChiral(stream)
-        .join(broadcast(index), Seq("lm"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st125_lm").start()
-      try q.processAllAvailable() finally q.stop()
-      val nl = s.table("st125_lm").filter(col("orient") === 0)
+      val staged = stageBatches("graft-stream-chiridx",
+        payloads(s.createDataset(Seq(20L, 130L)), img),
+        payloads(s.createDataset(Seq(22L, 131L)), img))
+      val stream = mediaStream(s, staged)
+      val sunk = drain(s, "append")(
+        "st125_lm" -> Multimodal.imageAffineFrameLandmarksChiral(stream)
+          .join(broadcast(index), Seq("lm"), "left"))
+      val nl = sunk.filter(col("orient") === 0)
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val dup = s.table("st125_lm").filter(col("src").isNotNull)
+      val dup = sunk.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("orient"), col("lm"),
           col("src"), col("nl_src"))
         .groupBy(col("d"), col("orient"), col("src"), col("nl_src"))
@@ -6734,7 +5448,6 @@ object StreamingOps extends QueryPack {
     "st126_stream_affine_squeeze_fan_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val staged = stagingDir("graft-stream-sqfanidx")
       val img = udf((id: Long) => {
         def blobs(seed: Long): Array[Byte] =
           Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
@@ -6757,36 +5470,17 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val index = Multimodal.imageAffineFrameIndex(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      def stageBatch(ids: Seq[Long], fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        s.createDataset(ids).toDF("doc_id")
-          .select(col("doc_id"), img(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(Seq(20L, 130L), "a.parquet", 120000L)
-      stageBatch(Seq(22L, 131L), "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
-      val q = Multimodal.imageAffineFrameLandmarksSqueezeFan(stream)
-        .join(broadcast(index), Seq("lm"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName("st126_lm").start()
-      try q.processAllAvailable() finally q.stop()
-      val nl = s.table("st126_lm").filter(col("orient") === 0)
+      val staged = stageBatches("graft-stream-sqfanidx",
+        payloads(s.createDataset(Seq(20L, 130L)), img),
+        payloads(s.createDataset(Seq(22L, 131L)), img))
+      val stream = mediaStream(s, staged)
+      val sunk = drain(s, "append")(
+        "st126_lm" -> Multimodal.imageAffineFrameLandmarksSqueezeFan(stream)
+          .join(broadcast(index), Seq("lm"), "left"))
+      val nl = sunk.filter(col("orient") === 0)
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
-      val dup = s.table("st126_lm").filter(col("src").isNotNull)
+      val dup = sunk.filter(col("src").isNotNull)
         .select(col("doc_id").as("d"), col("orient"), col("lm"),
           col("src"), col("nl_src"))
         .groupBy(col("d"), col("orient"), col("src"), col("nl_src"))
@@ -6819,8 +5513,6 @@ object StreamingOps extends QueryPack {
     "st122_stream_embed_index_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
-      val name = "st122_out"
-      val staged = stagingDir("graft-stream-embidx")
       val emb = t(s, dir, "embeddings")
       val bits = graft.operators.Similarity.deriveSrpBits(emb.count())
       val index = graft.operators.Similarity.srpBucketIndex(emb, 64, bits)
@@ -6834,25 +5526,11 @@ object StreamingOps extends QueryPack {
         df.select(($"vec_id" + off).as("vec_id"),
           transform($"embedding",
             x => (-x.cast("double")).cast("float")).as("embedding"))
-      def stageBatch(df: DataFrame, fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(scaled(emb.filter($"vec_id" < 20), 1000000L),
-        "a.parquet", 120000L)
-      stageBatch(
+      val staged = stageBatches("graft-stream-embidx",
+        scaled(emb.filter($"vec_id" < 20), 1000000L),
         scaled(emb.filter($"vec_id" >= 20 && $"vec_id" < 30), 1000000L)
-          .unionByName(negated(
-            emb.filter($"vec_id" >= 100 && $"vec_id" < 110), 2000000L)),
-        "b.parquet", 0L)
+            .unionByName(negated(
+              emb.filter($"vec_id" >= 100 && $"vec_id" < 110), 2000000L)))
       val embSchema = StructType(Seq(
         StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType))))
@@ -6860,22 +5538,20 @@ object StreamingOps extends QueryPack {
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("vec_id"))
       val keyed = graft.operators.Similarity.srpBucketIndex(stream, 64, bits)
-      val q = keyed.join(broadcast(index), Seq("tbl", "bucket"), "left")
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
+      val out = drain(s, "append")(
+        "st122_out" -> keyed.join(broadcast(index), Seq("tbl", "bucket"), "left"))
       val dot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
         aggregate(zip_with(a, b,
           (x, y) => x.cast("double") * y.cast("double")),
           lit(0.0), (acc, x) => acc + x)
-      val dup = s.table(name).filter(col("src").isNotNull)
+      val dup = out.filter(col("src").isNotNull)
         .select(col("vec_id").as("pid"), col("src"), col("v"),
           col("cv"), col("nrm"), col("cn"))
         .dropDuplicates("pid", "src")
         .filter(round(dot(col("v"), col("cv")) / (col("nrm") * col("cn")), 6)
           >= 0.4)
         .groupBy(col("pid")).agg(min(col("src")).as("dup_src"))
-      s.table(name).select(col("vec_id")).distinct()
+      out.select(col("vec_id")).distinct()
         .join(dup, col("vec_id") === col("pid"), "left")
         .select(col("vec_id"), col("dup_src").isNull.as("kept"),
           col("dup_src"))
@@ -6893,37 +5569,21 @@ object StreamingOps extends QueryPack {
     // self-join replay over the 10 planted ids.
     "st76_stream_subtitle_decontam" -> ((s0, dir) => { val s = streamSession(s0)
       implicit val sp: SparkSession = s
-      val name = "st76_out"
-      val staged = stagingDir("graft-stream-subs")
       val docs = t(s, dir, "documents")
       val mkDoc = udf((id: Long, text: String) =>
         Multimodal.syntheticMkv(1000000L + id, 3,
           cueLines = text.grouped(40).toSeq))
       val mkDecoy = udf((id: Long) =>
         Multimodal.syntheticMkv(id, 3, subsId = id, subsCues = 8))
-      def stage(fname: String, df: DataFrame, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stage("a.parquet", docs.filter(col("doc_id") < 5)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          mkDoc(col("doc_id"), col("text")).as("payload")), 120000L)
-      stage("b.parquet", docs.filter(col("doc_id") >= 5 && col("doc_id") < 10)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          mkDoc(col("doc_id"), col("text")).as("payload"))
-        .unionByName(s.range(2000000L, 2000005L)
-          .select(col("id").as("doc_id"), mkDecoy(col("id")).as("payload"))),
-        0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
+      val staged = stageBatches("graft-stream-subs",
+        docs.filter(col("doc_id") < 5)
+          .select((col("doc_id") + 1000000L).as("doc_id"),
+            mkDoc(col("doc_id"), col("text")).as("payload")),
+        docs.filter(col("doc_id") >= 5 && col("doc_id") < 10)
+          .select((col("doc_id") + 1000000L).as("doc_id"),
+            mkDoc(col("doc_id"), col("text")).as("payload"))
+          .unionByName(s.range(2000000L, 2000005L)
+            .select(col("id").as("doc_id"), mkDecoy(col("id")).as("payload"))))
       val stream = s.readStream.schema(mediaSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
       val subs = Multimodal.videoSubtitleTexts(stream)
@@ -6932,10 +5592,7 @@ object StreamingOps extends QueryPack {
       val hits = subs.join(docs.select(col("doc_id"), col("text")),
           col("probe") === col("text"))
         .select(col("video_id"), col("doc_id"))
-      val q = hits.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name).orderBy(col("video_id"), col("doc_id"))
+      drain(s, "append")("st76_out" -> hits).orderBy(col("video_id"), col("doc_id"))
     }),
 
     // SUBTITLE DECONTAMINATION against the REAL documents table — the
@@ -7083,58 +5740,18 @@ object StreamingOps extends QueryPack {
     // sees nothing, landmark-bucket state catches every one. Oracle =
     // the m80 landmark replay + the dedup decision.
     "st74_stream_audio_landmark_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st74_out"
-      val staged = stagingDir("graft-stream-lm")
       val wav = udf((id: Long) =>
         if (id < 1000000L)
           Multimodal.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
         else Multimodal.syntheticWavTexTrim(id - 1000000L,
           (320 + ((id - 1000000L) % 8) * 64 - 128).toInt, skip = 128))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 14).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000014L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-lm",
+        payloads(s.range(0, 14), wav),
+        payloads(s.range(1000000L, 1000014L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      // all branches re-alias before joining: the memory sink view
-      // resolves to identical attribute ids per s.table() call
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st74_out" -> hits.toDF()), Share(0.6))
     }),
 
     // Streaming VIDEO dedup under TIME SHIFT: batch 1 delivers 10 base
@@ -7142,55 +5759,17 @@ object StreamingOps extends QueryPack {
     // — landmark-bucket state catches what aligned matching can't see
     // in any tier. Pinned golden (pHash path).
     "st75_stream_video_landmark_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st75_out"
-      val staged = stagingDir("graft-stream-vlm")
       val avi = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticAvi(id, (6 + id % 3).toInt)
         else Multimodal.syntheticAvi(id - 1000000L,
           (6 + (id - 1000000L) % 3).toInt - 2, frameOffset = 2))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), avi(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 10).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000010L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-vlm",
+        payloads(s.range(0, 10), avi),
+        payloads(s.range(1000000L, 1000010L), avi))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.videoLandmarkVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      val nl = s.table(name).groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nl"))
-      val nlSrc = s.table(name).select(col("doc_id").as("src_id"))
-        .groupBy(col("src_id")).agg(count(lit(1)).as("nl_src"))
-      val dup = s.table(name)
-        .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
-        .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .join(nlSrc, col("src") === col("src_id"))
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.6)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-      nl.join(dup, col("doc_id") === col("d"), "left")
-        .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-          col("dup_src"))
-        .orderBy(col("doc_id"))
+      voteDedup(drain(s, "append")("st75_out" -> hits.toDF()), Share(0.6))
     }),
 
     // VIDEO MJPEG path: same frame pixels as m81 but each frame goes
@@ -7232,39 +5811,16 @@ object StreamingOps extends QueryPack {
     // catch them, pHash chunk-bucket state does. Codec + StrictMath
     // DCT path — pinned golden gate.
     "st72_stream_phash_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st72_out"
-      val staged = stagingDir("graft-stream-phash")
       val png = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticPng(id)
         else Multimodal.syntheticPngVariant(id - 1000000L))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), png(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 20).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000020L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-phash",
+        payloads(s.range(0, 20), png),
+        payloads(s.range(1000000L, 1000020L), png))
+      val stream = mediaStream(s, staged)
       val verdicts = graft.operators.StreamingNearDup.pHashVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = verdicts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
-      s.table(name)
+      drain(s, "append")("st72_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -7281,47 +5837,25 @@ object StreamingOps extends QueryPack {
     // over the smaller fingerprint — the m79 metric, so the oracle is
     // the same integer SQL replay with a dedup decision on top.
     "st73_stream_audio_dedup" -> ((s0, dir) => { val s = streamSession(s0)
-      import s.implicits._
-      val name = "st73_out"
-      val staged = stagingDir("graft-stream-audio")
       val wav = udf((id: Long) =>
         if (id < 1000000L) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
         else Multimodal.syntheticWavTex(id - 1000000L,
           (160 + ((id - 1000000L) % 13) * 16).toInt, num = 9, den = 10))
-      def stageBatch(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          fname: String, ageMs: Long): Unit = {
-        val tmp = staged.resolve(fname + ".tmp")
-        ids.toDF("doc_id").select(col("doc_id"), wav(col("doc_id")).as("payload"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = new java.io.File(tmp.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        java.nio.file.Files.move(part.toPath, staged.resolve(fname))
-        staged.resolve(fname).toFile.deleteOnExit()
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        java.nio.file.Files.setLastModifiedTime(staged.resolve(fname),
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs))
-      }
-      stageBatch(s.range(0, 20).as[java.lang.Long], "a.parquet", 120000L)
-      stageBatch(s.range(1000000L, 1000020L).as[java.lang.Long], "b.parquet", 0L)
-      val mediaSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("payload", BinaryType)))
-      val stream = s.readStream.schema(mediaSchema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        .repartition(col("doc_id"))
+      val staged = stageBatches("graft-stream-audio",
+        payloads(s.range(0, 20), wav),
+        payloads(s.range(1000000L, 1000020L), wav))
+      val stream = mediaStream(s, staged)
       val hits = graft.operators.StreamingNearDup.audioVerdicts(
         stream, "doc_id", "payload", maxBucket = 64)
-      val q = hits.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try { q.processAllAvailable() } finally q.stop()
+      val out = drain(s, "append")("st73_out" -> hits.toDF())
       // all branches re-alias their key before any join: the memory
       // sink's view resolves to the SAME attribute ids on every
       // s.table() call, and a raw self-join fails analysis
-      val nf = s.table(name).groupBy(col("doc_id"))
+      val nf = out.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("nf"))
-      val nfSrc = s.table(name).select(col("doc_id").as("src_id"))
+      val nfSrc = out.select(col("doc_id").as("src_id"))
         .groupBy(col("src_id")).agg(count(lit(1)).as("nf_src"))
-      val dup = s.table(name)
+      val dup = out
         .select(col("doc_id").as("d"), explode(col("hits")).as("src"))
         .groupBy(col("d"), col("src")).agg(count(lit(1)).as("c"))
         .join(nf, col("d") === nf("doc_id")).drop("doc_id")

@@ -503,7 +503,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val patched = mkv.clone()
     val at = patched.indexOfSlice("V_MJPEG".getBytes("US-ASCII"))
     assert(at > 0)
-    "V_VP9  ".getBytes("US-ASCII").copyToArray(patched, at)
+    "V_VP9\u0000\u0000".getBytes("US-ASCII").copyToArray(patched, at)
     assert(Multimodal.mkvFrames(patched).exists(_.isEmpty))
     // VfW mux whose BITMAPINFOHEADER is NOT MJPEG: undecodable too
     val vfw = Multimodal.syntheticMkv(2L, 3, vfw = true)

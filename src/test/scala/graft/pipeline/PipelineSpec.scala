@@ -240,6 +240,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(attempts.get() == 1) // surfaced on attempt 1, no 3x re-run
   }
 
+  test("a failed commit frees every persisted batch buffer") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val defn = new PipelineRunner.Definition {
+      def resume(s: SparkSession): Option[Long] = None
+      def tip(s: SparkSession): Long = 29
+      def transform(s: SparkSession, b: Batch) = s.range(b.start, b.end + 1).toDF("n")
+      def commit(s: SparkSession, b: Batch, df: org.apache.spark.sql.DataFrame): Unit =
+        throw new IllegalStateException("simulated sink failure")
+    }
+    val e = intercept[IllegalStateException] {
+      PipelineRunner.run(spark, defn, Config(maxBatchSize = 10))
+    }
+    assert(e.getMessage.contains("simulated sink failure"))
+    // a daemon retrying this batch would otherwise leak one buffer per attempt
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("sink compact drops superseded versions but keeps dedup semantics") {
     val path = tmp("compact")
     val sink = SinkTable(path, Seq("k"), Some("ts"))
