@@ -133,18 +133,14 @@ object DerivedPipelines {
   }
 
   def decodedLogs(sourcePath: String, sinkPath: String, dict: AbiDictionary): Definition =
-    new Definition {
+    new StagedDefinition.IntoSink(SinkTable(sinkPath,
+        Seq("address", "signature", "block_number", "log_index"), Some("timestamp")),
+        "block_number") {
       val source: SinkTable = SinkTable(sourcePath, Seq("block_number", "log_index"))
-      val sink: SinkTable = SinkTable(sinkPath,
-        Seq("address", "signature", "block_number", "log_index"), Some("timestamp"))
-      def resume(spark: SparkSession): Option[Long] =
-        sink.maxKey(spark, "block_number").map(_ + 1)
       def tip(spark: SparkSession): Long =
         source.maxKey(spark, "block_number").getOrElse(-1L)
-      def transform(spark: SparkSession, batch: Batch): DataFrame =
+      protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
         decodedLogsTransform(spark, batch, source, dict)
-      def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-        sink.append(df, batch.number)
     }
 
   // -------------------------------------------------------- decoded traces
@@ -166,20 +162,15 @@ object DerivedPipelines {
   }
 
   def decodedTraces(sourcePath: String, sinkPath: String, dict: AbiDictionary): Definition =
-    new Definition {
+    new StagedDefinition.IntoSink(SinkTable(sinkPath,
+        Seq("to", "signature", "block_number", "transaction_index", "trace_address"),
+        Some("timestamp")), "block_number") {
       val source: SinkTable = SinkTable(sourcePath,
         Seq("block_number", "transaction_index", "trace_address"))
-      val sink: SinkTable = SinkTable(sinkPath,
-        Seq("to", "signature", "block_number", "transaction_index", "trace_address"),
-        Some("timestamp"))
-      def resume(spark: SparkSession): Option[Long] =
-        sink.maxKey(spark, "block_number").map(_ + 1)
       def tip(spark: SparkSession): Long =
         source.maxKey(spark, "block_number").getOrElse(-1L)
-      def transform(spark: SparkSession, batch: Batch): DataFrame =
+      protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
         decodedTracesTransform(spark, batch, source, dict)
-      def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-        sink.append(df, batch.number)
     }
 
   // -------------------------------------------------------- erc20 balances
@@ -241,31 +232,37 @@ object DerivedPipelines {
   }
 
   def erc20Balances(sourcePath: String, sinkPath: String, endpoint: String): Definition =
-    new Definition {
+    new StagedDefinition.IntoSink(SinkTable(sinkPath,
+        Seq("wallet_address", "token_address", "block_number"), Some("timestamp")),
+        "block_number") {
       val source: SinkTable = SinkTable(sourcePath, Seq("block_number", "log_index"))
-      val sink: SinkTable = SinkTable(sinkPath,
-        Seq("wallet_address", "token_address", "block_number"), Some("timestamp"))
-      def resume(spark: SparkSession): Option[Long] =
-        sink.maxKey(spark, "block_number").map(_ + 1)
       def tip(spark: SparkSession): Long =
         source.maxKey(spark, "block_number").getOrElse(-1L)
-      def transform(spark: SparkSession, batch: Batch): DataFrame =
+      protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
         erc20BalancesTransform(spark, batch, source, endpoint)
-      def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-        sink.append(df, batch.number)
     }
 
   // ------------------------------------------------- daily parquet export
+
+  /** One export batch: the source rows of its epoch-day range, with
+    * their `date`. */
+  def dailyExportTransform(spark: SparkSession, batch: Batch, source: SinkTable): DataFrame =
+    // batch offsets are epoch days → prune the source scan to the
+    // yyyyMM `_part` partitions covering them; without this every
+    // 1-day batch re-lists and row-group-scans the ENTIRE table
+    source.readPruned(spark, Some(source.monthsOfDayRange(batch.start, batch.end)))
+      .withColumn("date", to_date(col("timestamp")))
+      .filter(datediff(col("date"), lit("1970-01-01")).between(batch.start, batch.end))
 
   /** examples/decoded_logs_to_daily_parquet_file/transform.sql:1-9 +
     * examples/table_to_daily_parquet_file: partitioned export, one
     * directory per day; offsets are day ordinals (epoch days), tip is
     * yesterday relative to the newest source row (tip.sql:1-3). */
   def dailyExport(sourcePath: String, sourceKeys: Seq[String], targetPath: String):
-      Definition = new Definition {
+      Definition = new StagedDefinition(targetPath) {
     val source: SinkTable = SinkTable(sourcePath, sourceKeys)
 
-    def resume(spark: SparkSession): Option[Long] = {
+    protected def next(spark: SparkSession): Option[Long] = {
       // start.sql:2-12: probe already-exported partitions; empty target →
       // start from the source's first day (NOT day ordinal 0/1970, which
       // would plan ~20k empty one-day batches)
@@ -292,22 +289,10 @@ object DerivedPipelines {
       if (row.isNullAt(0)) -1L else row.getInt(0).toLong - 1 // yesterday
     }
 
-    def transform(spark: SparkSession, batch: Batch): DataFrame =
-      // batch offsets are epoch days → prune the source scan to the
-      // yyyyMM `_part` partitions covering them; without this every
-      // 1-day batch re-lists and row-group-scans the ENTIRE table
-      source.readPruned(spark,
-          Some(source.monthsOfDayRange(batch.start, batch.end)))
-        .withColumn("date", to_date(col("timestamp")))
-        .filter(datediff(col("date"), lit("1970-01-01")).between(batch.start, batch.end))
+    protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
+      dailyExportTransform(spark, batch, source)
 
-    def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-      // dynamic partition overwrite, not append: a crashed-then-retried
-      // day batch REPLACES exactly the day partitions it writes, so
-      // re-running a committed day leaves one copy (the export analog
-      // of the replacing sink's _ingest_seq dedup)
-      df.repartition(col("date")).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date").parquet(targetPath)
+    protected def stage(spark: SparkSession, batch: Batch, df: DataFrame): Seq[Staging.Staged] =
+      Seq(Staging.stagePartitions(df, targetPath, "date", batch.number))
   }
 }

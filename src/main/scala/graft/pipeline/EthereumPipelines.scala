@@ -113,14 +113,11 @@ object EthereumPipelines {
       decodeHex(b("withdrawalsRoot")).as("withdrawals_root"))
   }
 
-  def blocks(endpoint: String, sinkPath: String): Definition = new Definition {
-    val sink: SinkTable = SinkTable(sinkPath, Seq("number"), Some("timestamp"))
-    def resume(spark: SparkSession): Option[Long] = sink.maxKey(spark, "number").map(_ + 1)
+  def blocks(endpoint: String, sinkPath: String): Definition = new StagedDefinition.IntoSink(
+      SinkTable(sinkPath, Seq("number"), Some("timestamp")), "number") {
     def tip(spark: SparkSession): Long = rpcTip(endpoint)
-    def transform(spark: SparkSession, batch: Batch): DataFrame =
+    protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
       blocksTransform(spark, batch, endpoint)
-    def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-      sink.append(df, batch.number)
   }
 
   // ------------------------------------------------------------------ logs
@@ -183,14 +180,11 @@ object EthereumPipelines {
         "removed", "log_index", "address", "data", "topics")
   }
 
-  def logs(endpoint: String, sinkPath: String): Definition = new Definition {
-    val sink: SinkTable = SinkTable(sinkPath, Seq("block_number", "log_index"), Some("timestamp"))
-    def resume(spark: SparkSession): Option[Long] = sink.maxKey(spark, "block_number").map(_ + 1)
+  def logs(endpoint: String, sinkPath: String): Definition = new StagedDefinition.IntoSink(
+      SinkTable(sinkPath, Seq("block_number", "log_index"), Some("timestamp")), "block_number") {
     def tip(spark: SparkSession): Long = rpcTip(endpoint)
-    def transform(spark: SparkSession, batch: Batch): DataFrame =
+    protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
       logsTransform(spark, batch, endpoint)
-    def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-      sink.append(df, batch.number)
   }
 
   // ---------------------------------------------------------- transactions
@@ -332,15 +326,11 @@ object EthereumPipelines {
 
   def transactions(endpoint: String, sinkPath: String,
       enableDencun: Boolean = true, enableOpStack: Boolean = false): Definition =
-    new Definition {
-      val sink: SinkTable =
-        SinkTable(sinkPath, Seq("block_number", "transaction_index"), Some("timestamp"))
-      def resume(spark: SparkSession): Option[Long] = sink.maxKey(spark, "block_number").map(_ + 1)
+    new StagedDefinition.IntoSink(SinkTable(sinkPath,
+        Seq("block_number", "transaction_index"), Some("timestamp")), "block_number") {
       def tip(spark: SparkSession): Long = rpcTip(endpoint)
-      def transform(spark: SparkSession, batch: Batch): DataFrame =
+      protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
         transactionsTransform(spark, batch, endpoint, enableDencun, enableOpStack)
-      def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-        sink.append(df, batch.number)
     }
 
   // ---------------------------------------------------------------- traces
@@ -435,14 +425,11 @@ object EthereumPipelines {
         "result_address", "result_code", "gas_used", "output")
   }
 
-  def traces(endpoint: String, sinkPath: String): Definition = new Definition {
-    val sink: SinkTable = SinkTable(sinkPath,
-      Seq("block_number", "transaction_index", "trace_address"), Some("timestamp"))
-    def resume(spark: SparkSession): Option[Long] = sink.maxKey(spark, "block_number").map(_ + 1)
+  def traces(endpoint: String, sinkPath: String): Definition = new StagedDefinition.IntoSink(
+      SinkTable(sinkPath, Seq("block_number", "transaction_index", "trace_address"),
+        Some("timestamp")), "block_number") {
     def tip(spark: SparkSession): Long = rpcTip(endpoint)
-    def transform(spark: SparkSession, batch: Batch): DataFrame =
+    protected def buffer(spark: SparkSession, batch: Batch): DataFrame =
       tracesTransform(spark, batch, endpoint)
-    def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-      sink.append(df, batch.number)
   }
 }

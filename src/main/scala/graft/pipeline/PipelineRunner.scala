@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** Micro-batch pipeline runtime — the Spark-first re-expression of the
@@ -16,14 +16,17 @@ import scala.util.control.NonFatal
   *    threads submitting concurrent Spark jobs (intra-batch parallelism
   *    is Spark's own task scheduler; `workers` only overlaps batches)
   *  - Sequencer   (internal/pipeline/sequencer.go:24-84)→ ordered-commit
-  *    gate: batch k's sink append waits for k-1's commit
+  *    gate: batch k's sink publish waits for k-1's commit
   *  - Finalizer   (internal/pipeline/finalizer.go:28-70)→ items/sec metric
   *
-  * Each batch: transform → persist (the reference's buffer table,
-  * examples/ethereum_blocks/create_buffer.sql:1) → ordered append →
-  * unpersist (delete_buffer.sql). Re-runs are safe because the sink
-  * dedups on read and `resume` re-reads max(key)+1 — the
-  * ReplacingMergeTree contract.
+  * Each batch: transform, which also writes the batch once into a
+  * private staging directory (the reference's buffer table,
+  * examples/ethereum_blocks/create_buffer.sql:1), unordered and in
+  * parallel with its peers → ordered publish of the staged files into
+  * the sink by rename (write_to_sink.sql). Nothing is persisted, so
+  * nothing is left to free (delete_buffer.sql). Re-runs are safe
+  * because the sink dedups on read and `resume` re-reads max(key)+1 —
+  * the ReplacingMergeTree contract.
   */
 object PipelineRunner {
 
@@ -51,17 +54,22 @@ object PipelineRunner {
 
   trait Definition {
     /** Resume probe (start.sql): next offset to process, if the sink has
-      * any data. */
+      * any data. Called at the start of every pass, a forced one too, so
+      * a staging definition drops a crashed run's leftovers here. */
     def resume(spark: SparkSession): Option[Long]
     /** Tip probe (tip.sql): highest processable offset right now. */
     def tip(spark: SparkSession): Long
-    /** The batch transform (create_buffer.sql): offset range → rows. */
+    /** The batch transform (create_buffer.sql): offset range → rows.
+      * Runs unordered, concurrently with its peers, so a sink-writing
+      * definition stages its write here ([[SinkTable.stage]]). */
     def transform(spark: SparkSession, batch: Batch): DataFrame
-    /** Ordered commit (write_to_sink.sql). */
+    /** Ordered commit (write_to_sink.sql): publishes what `transform`
+      * staged for `df` ([[SinkTable.publish]]). */
     def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit
-    /** Session conf scoped around the fetch stage's transform AND its
-      * materialization — the reference's per-stage ClickhouseSettings
-      * (internal/pipeline/stage.go:66,88-90). Restored after the batch. */
+    /** Session conf scoped around the whole pass, every batch's
+      * transform and commit — the reference's per-stage
+      * ClickhouseSettings (internal/pipeline/stage.go:66,88-90).
+      * Restored after the pass. */
     def transformConf: Map[String, String] = Map.empty
   }
 
@@ -115,9 +123,10 @@ object PipelineRunner {
     * Sequencer serializes only the commit step. */
   def run(spark: SparkSession, defn: Definition, conf: Config): Result = {
     val t0 = System.nanoTime()
-    val start = conf.forceStart
-      .orElse(defn.resume(spark))
-      .getOrElse(conf.defaultStart)
+    // resume runs on a forced start too: it also drops what a crashed
+    // run staged and never published
+    val resumed = defn.resume(spark)
+    val start = conf.forceStart.orElse(resumed).getOrElse(conf.defaultStart)
     var totalItems = 0L
     var totalBatches = 0L
     var from = start
@@ -164,45 +173,34 @@ object PipelineRunner {
 
   private def runBatches(spark: SparkSession, defn: Definition, conf: Config,
       batches: Seq[Batch]): Unit = {
-    val queue = new ConcurrentLinkedQueue[Batch]()
-    batches.foreach(queue.add)
     val seq = new Sequencer(batches.head.number)
     val failure = new AtomicReference[Throwable]()
     val pool = Executors.newFixedThreadPool(math.max(1, conf.workers))
     val done = new CountDownLatch(batches.length)
-    batches.indices.foreach { _ =>
+    batches.foreach { batch =>
       pool.submit(new Runnable {
         def run(): Unit = {
-          val batch = queue.poll()
           try {
-            if (batch != null && failure.get() == null) {
-              spark.sparkContext.setJobGroup(s"batch-${batch.number}",
-                s"batch ${batch.number} [${batch.start}, ${batch.end}]")
-              val df = defn.transform(spark, batch)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              // free the buffer on every path: a failed count or commit
-              // would otherwise leak it once per runWithRetry attempt
+            spark.sparkContext.setJobGroup(s"batch-${batch.number}",
+              s"batch ${batch.number} [${batch.start}, ${batch.end}]")
+            // the transform (and its staged write) runs unordered; it is
+            // skipped once a peer has failed, and its own failure waits
+            // for the batch's turn, so every earlier batch still commits
+            val df = Try(if (failure.get() == null) Some(defn.transform(spark, batch)) else None)
+            if (seq.awaitTurn(batch.number)) {
+              // Record a failure BEFORE releasing the gate and re-check
+              // under it: otherwise a later batch could commit after an
+              // earlier one failed, and the next resume (max(key)+1)
+              // would silently skip the failed range — a gap.
+              // awaitTurn/release synchronize, so the failure write is
+              // visible to the next waiter.
               try {
-                df.count() // materialize the buffer before taking the commit lock
-                if (seq.awaitTurn(batch.number)) {
-                  // Record a commit failure BEFORE releasing the gate and
-                  // re-check under it: otherwise a later batch could commit
-                  // after an earlier one failed, and the next resume
-                  // (max(key)+1) would silently skip the failed range — a
-                  // gap. awaitTurn/release synchronize, so the failure
-                  // write is visible to the next waiter.
-                  try {
-                    if (failure.get() == null) defn.commit(spark, batch, df)
-                  } catch {
-                    case NonFatal(e) =>
-                      failure.compareAndSet(null, e)
-                      throw e
-                  } finally seq.release(batch.number)
-                }
-              } finally df.unpersist(blocking = false)
-            } else if (batch != null) {
-              // a peer failed already: just pass the gate along
-              if (seq.awaitTurn(batch.number)) seq.release(batch.number)
+                if (failure.get() == null) df.get.foreach(defn.commit(spark, batch, _))
+              } catch {
+                case NonFatal(e) =>
+                  failure.compareAndSet(null, e)
+                  throw e
+              } finally seq.release(batch.number)
             }
           } catch {
             case NonFatal(e) =>

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Writes are append-only and carry a monotonic `_ingest_seq` (run base
   * + batch number, where the base is max existing seq + 1 at the run's
-  * first append); duplicate keys from re-runs are resolved on read by
+  * first write); duplicate keys from re-runs are resolved on read by
   * last-write-wins over the order keys — exactly the
   * at-least-once-write / effectively-once-read contract of the reference.
+  * A batch is staged, then published by rename ([[Staging]]).
   * At scale: monthly partition pruning via the derived `_part` column,
   * row-group stats give key-range skipping, and `compact()` rewrites a
   * partition to physically drop superseded versions.
@@ -27,10 +29,11 @@ final case class SinkTable(
     partitionColumn.filter(df.columns.contains).map(c =>
       date_format(col(c), "yyyyMM").as("_part"))
 
-  /** First-append-of-this-run base for `_ingest_seq`: max existing
-    * seq + 1. Batch numbers restart at 0 every run, so without the base a
-    * re-ingest of an old key range (e.g. forceStart after a transform
-    * fix) would LOSE last-write-wins to the prior run's higher seqs. */
+  /** Base for `_ingest_seq`: max published seq + 1, read once at the
+    * first [[stage]], so before this run's first publish. Batch numbers
+    * restart at 0 every run, so without the base a re-ingest of an old
+    * key range (e.g. forceStart after a transform fix) would LOSE
+    * last-write-wins to the prior run's higher seqs. */
   @volatile private var seqBase: Long = -1L
   private def sequenceBase(spark: SparkSession): Long = {
     if (seqBase < 0L) synchronized {
@@ -45,55 +48,34 @@ final case class SinkTable(
     seqBase
   }
 
-  /** Rows per output file target: small batches coalesce to one file
-    * (a 6-row micro-batch from 32 shuffle partitions would otherwise
-    * write 32 near-empty parquet files, fragmenting every later sink
-    * read); large batches keep their write parallelism. */
-  private val rowsPerFile = 500000L
-
-  /** Append one batch (idempotent under re-runs thanks to read-side dedup). */
-  def append(df: DataFrame, ingestSeq: Long): Unit = {
-    // The sizing count must not recompute the transform: persist unless
-    // the input already reads materialized data — either the caller
-    // persisted this very frame (PipelineRunner's buffer), or the plan
-    // reads an InMemoryRelation (the commit stage's insert-select over
-    // the persisted buffer view). Round 18 (guide §5): the old
-    // storage-level-only check re-persisted every insert-select — a
-    // redundant second in-memory materialization of each batch, since
-    // the count and the write both just re-project the cached buffer.
-    val readsCache = df.queryExecution.optimizedPlan.exists {
-      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
-      case _ => false
+  /** Write one batch, with its `_ingest_seq` and `_part`, into a private
+    * staging directory; readers see none of it until [[publish]]. One
+    * write job and no count: the REBALANCE hint lets AQE size the files —
+    * one per `_part` for a small batch (a 6-row micro-batch from 32
+    * shuffle partitions would otherwise write 32 near-empty parquet
+    * files, fragmenting every later sink read), split for a large one. */
+  def stage(df: DataFrame, ingestSeq: Long): Staging.Staged = {
+    val withSeq = df.withColumn("_ingest_seq",
+      lit(sequenceBase(df.sparkSession) + ingestSeq))
+    val out = partCol(df).fold(withSeq)(p => withSeq.withColumn("_part", p))
+    val parts = if (out.columns.contains("_part")) Seq("_part") else Nil
+    // point-lookup columns get parquet bloom filters — the skipping-index
+    // analog (examples/ethereum_logs/create_table.sql:15-20)
+    val writer = bloomFilterCols.foldLeft(out.hint("rebalance", parts.map(col): _*).write) {
+      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
-    val needPersist =
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE && !readsCache
-    val base = if (needPersist)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
-    try {
-      val withSeq = base.withColumn("_ingest_seq",
-        lit(sequenceBase(base.sparkSession) + ingestSeq))
-      val rows = base.count()
-      val parts = math.max(1L, math.min(withSeq.rdd.getNumPartitions.toLong,
-        (rows + rowsPerFile - 1) / rowsPerFile)).toInt
-      val sized = if (parts < withSeq.rdd.getNumPartitions) withSeq.coalesce(parts) else withSeq
-      val out = partCol(base) match {
-        case Some(p) => sized.withColumn("_part", p)
-        case None => sized
-      }
-      // point-lookup columns get parquet bloom filters — the skipping-index
-      // analog (examples/ethereum_logs/create_table.sql:15-20)
-      val writer = bloomFilterCols.foldLeft(out.write.mode("append")) { (w, c) =>
-        w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-      (if (out.columns.contains("_part")) writer.partitionBy("_part") else writer)
-        .parquet(path)
-    } finally if (needPersist) base.unpersist(blocking = false)
+    Staging.stage(df.sparkSession, path, ingestSeq, writer.partitionBy(parts: _*))
   }
 
-  def exists(spark: SparkSession): Boolean =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path))
+  def publish(staged: Staging.Staged): Unit = Staging.publish(staged)
+
+  /** Append one batch (idempotent under re-runs thanks to read-side dedup). */
+  def append(df: DataFrame, ingestSeq: Long): Unit = publish(stage(df, ingestSeq))
+
+  private def fs(spark: SparkSession): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  def exists(spark: SparkSession): Boolean = fs(spark).exists(new Path(path))
 
   /** Raw append-only contents (may contain superseded versions). */
   def readRaw(spark: SparkSession): DataFrame = spark.read.parquet(path)
@@ -191,9 +173,7 @@ final case class SinkTable(
     val writer = kept.write.mode("overwrite")
     (if (kept.columns.contains("_part")) writer.partitionBy("_part") else writer)
       .parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
+    fs(spark).delete(new Path(path), true)
+    fs(spark).rename(new Path(tmp), new Path(path))
   }
 }

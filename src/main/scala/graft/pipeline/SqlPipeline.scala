@@ -16,11 +16,16 @@ import scala.jdk.CollectionConverters._
   *  - first Stage's files (e.g. `create_buffer.sql`) — each file is
   *    either `create temporary table/view NAME as (SELECT …)` (the
   *    reference's buffer idiom; NAME is registered as a temp view over
-  *    the persisted batch) or a bare SELECT; the last SELECT becomes the
-  *    batch buffer
-  *  - post-Sequencer files — `insert into sink SELECT …` appends to the
-  *    sink (ordered commit), `drop temporary table/view NAME` drops the
-  *    buffer view, anything else runs via spark.sql
+  *    the batch) or a bare SELECT; the last SELECT becomes the batch
+  *    buffer
+  *  - post-Sequencer files — `insert into sink SELECT …` is planned over
+  *    the buffer views and staged as part of the batch's unordered
+  *    transform, then published into the sink by rename in batch order
+  *    (ordered commit); `drop temporary table/view NAME` drops the
+  *    buffer view at commit, anything else runs via spark.sql at commit.
+  *    The inserts are thus planned before the stage's other statements
+  *    run, so only inserts and drops may come before an insert (checked
+  *    when the definition is built)
   *
   * Sink identity comes from the yaml `Sink:` section
   * ({Path, Keys, VersionColumn}, values templated with vars) — the Spark
@@ -33,8 +38,9 @@ object SqlPipeline {
   /** mode "replacing" (default): ReplacingMergeTree-style SinkTable.
     * mode "daily_parquet": partitioned parquet export (the reference's
     * *_to_daily_parquet_file family — `insert into s3(… date={_partition_id}
-    * …) partition by toDate(timestamp)`); batch offsets are epoch days and
-    * commit writes the buffer partitioned by `partitionCol`. */
+    * …) partition by toDate(timestamp)`); batch offsets are epoch days,
+    * the buffer is staged partitioned by `partitionCol`, and commit
+    * replaces each exported partition the batch holds. */
   final case class SinkSpec(path: String, keys: Seq[String], version: Option[String],
       mode: String = "replacing", partitionCol: String = "date") {
     def table: SinkTable = SinkTable(path, keys, version)
@@ -196,17 +202,6 @@ object SqlPipeline {
     }
   }
 
-  /** Per-stage settings scope — the reference's ClickhouseSettings
-    * (stage.go:88-90). The runner ALSO wraps transform+materialization
-    * via Definition.transformConf, so lazily-planned batch execution
-    * binds the stage conf; this wrapper covers direct statement
-    * execution (commit stage inserts, ad-hoc transform calls). Spark
-    * session conf is global, so stages running CONCURRENTLY with
-    * conflicting settings are a caller error, same as two ClickHouse
-    * contexts fighting over one session would be. */
-  private def withConf[T](spark: SparkSession, conf: Map[String, String])(body: => T): T =
-    PipelineRunner.withSessionConf(spark, conf)(body)
-
   /** Build a PipelineRunner.Definition from a pipeline directory (or
     * direct yaml path — see loadPipeline). */
   def definition(dir: String, vars: Map[String, String],
@@ -233,11 +228,35 @@ object SqlPipeline {
       "END" -> b.end.toString,
       "NUMBER" -> b.number.toString)
 
-    new PipelineRunner.Definition {
+    def commitStatements(b: PipelineRunner.Batch): Seq[String] =
+      commitStages.flatMap(_.files).map(f => stripLeading(rendered(f, batchVars(b))))
+
+    // Stage settings — the reference's ClickhouseSettings (stage.go:88-90)
+    // — in ONE scope that the runner holds over the whole pass
+    // (transformConf): the batch's sink write is staged inside the
+    // transform, so the commit stage's settings must apply there too, and
+    // a per-batch set/restore would strip them from a concurrent peer.
+    // A key two stages set takes the later stage's value. A direct
+    // transform or commit call outside the runner runs without them.
+    val stageConf = stages.map(_.sparkConf).foldLeft(Map.empty[String, String])(_ ++ _)
+
+    // Every commit-stage `insert into sink` is planned and staged in the
+    // transform, before the stage's other statements run at publish; one
+    // that an insert could rely on (a view, a `set`) must not precede it.
+    if (!spec.isExport) {
+      val commit = commitStatements(PipelineRunner.Batch(0, 0, 0))
+      commit.take(commit.lastIndexWhere(insertSinkRe.matches)).find(sql =>
+          !insertSinkRe.matches(sql) && !dropRe.matches(sql)).foreach { sql =>
+        throw new IllegalArgumentException(
+          s"pipeline $dir: commit-stage inserts are staged with the transform, before " +
+          s"the stage's other statements run; move this after the last insert: $sql")
+      }
+    }
+
+    new StagedDefinition(spec.path) {
       val sink: SinkTable = sinkTab
 
-      override def transformConf: Map[String, String] =
-        transformStage.map(_.sparkConf).getOrElse(Map.empty)
+      override def transformConf: Map[String, String] = stageConf
 
       /** ONE resolved file index per tip-probe (round 18, guide §6):
         * `spark.read.parquet` re-lists the source directory and re-reads
@@ -283,7 +302,7 @@ object SqlPipeline {
         df.createOrReplaceTempView("target")
       }
 
-      def resume(spark: SparkSession): Option[Long] = {
+      protected def next(spark: SparkSession): Option[Long] = {
         if (spec.isExport) {
           registerSource(spark)
           registerTarget(spark)
@@ -300,8 +319,21 @@ object SqlPipeline {
           .getOrElse(throw new IllegalStateException("tip.sql returned null"))
       }
 
-      def transform(spark: SparkSession, batch: PipelineRunner.Batch): DataFrame =
-        withConf(spark, transformStage.map(_.sparkConf).getOrElse(Map.empty)) {
+      /** Held while a batch registers the session-wide `source` and
+        * buffer views and analyses the SQL that reads them. Analysis
+        * inlines a view, so once `spark.sql` returns, the frame no longer
+        * depends on it. Without the lock a concurrent peer could swap in
+        * its own export-mode `source`, pruned to ITS months, in between:
+        * a batch on the other side of a month boundary then reads an
+        * empty buffer and its day silently goes missing. The staged
+        * writes run outside the lock. */
+      private val analysis = new Object
+
+      /** Renders the transform stage; its last SELECT is the buffer. No
+        * physical plan is pinned: the runner never executes the buffer
+        * itself, only the staged write planned over it. */
+      protected def buffer(spark: SparkSession, batch: PipelineRunner.Batch): DataFrame =
+        analysis.synchronized {
           registerSource(spark, Some(batch))
           var buffer: Option[DataFrame] = None
           transformFiles.foreach { f =>
@@ -314,54 +346,43 @@ object SqlPipeline {
                 buffer = Some(spark.sql(sql))
             }
           }
-          val out = buffer.getOrElse(throw new IllegalArgumentException(
+          buffer.getOrElse(throw new IllegalArgumentException(
             s"stage files $transformFiles produced no buffer SELECT"))
-          // pin the physical plan while the stage settings are in force —
-          // lazily planning it later would read the restored conf
-          out.queryExecution.executedPlan
-          out
         }
 
-      def commit(spark: SparkSession, batch: PipelineRunner.Batch, df: DataFrame): Unit = {
-        if (spec.isExport) {
-          // one directory per partition value, committed in batch order —
-          // the `partition by toDate(timestamp)` s3 insert of the
-          // reference's daily-export transform.sql. DYNAMIC partition
-          // overwrite (not append): a crashed-then-retried day batch
-          // REPLACES exactly the partitions it writes, so re-running a
-          // committed day leaves one copy — the export-mode analog of
-          // the replacing sink's _ingest_seq dedup; resume at
-          // max(date)+1 after a partial day no longer strands
-          // double-written rows
-          df.repartition(org.apache.spark.sql.functions.col(spec.partitionCol))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(spec.partitionCol).parquet(spec.path)
-          return
-        }
-        // re-register over the PERSISTED buffer so commit SQL reads the
-        // materialized batch, not a recomputation
-        transformFiles.foreach { f =>
-          stripLeading(rendered(f, batchVars(batch))) match {
-            case createBufferRe(name, _) => df.createOrReplaceTempView(name)
-            case _ => ()
-          }
-        }
-        commitStages.foreach { stage =>
-          withConf(spark, stage.sparkConf) {
-            stage.files.foreach { f =>
-              stripLeading(rendered(f, batchVars(batch))) match {
-                case insertSinkRe(select) =>
-                  sink.append(spark.sql(unwrap(select)), batch.number)
-                case dropRe(name) =>
-                  spark.catalog.dropTempView(name); ()
-                case sql =>
-                  spark.sql(sql); ()
-              }
+      /** The batch's sink writes, staged: export mode's `partitionCol`
+        * partitions (the `partition by toDate(timestamp)` s3 insert of the
+        * reference's daily-export transform.sql), or each commit-stage
+        * `insert into sink SELECT …`, planned over the buffer views, which
+        * are (re-)registered over `df` first. */
+      protected def stage(spark: SparkSession, batch: PipelineRunner.Batch,
+          df: DataFrame): Seq[Staging.Staged] =
+        if (spec.isExport)
+          Seq(Staging.stagePartitions(df, spec.path, spec.partitionCol, batch.number))
+        else analysis.synchronized {
+          transformFiles.foreach { f =>
+            stripLeading(rendered(f, batchVars(batch))) match {
+              case createBufferRe(name, _) => df.createOrReplaceTempView(name)
+              case _ => ()
             }
           }
+          commitStatements(batch).collect { case insertSinkRe(select) => spark.sql(unwrap(select)) }
+        }.map(sink.stage(_, batch.number))
+
+      /** In batch order: each `insert into sink` publishes its staged
+        * write, `drop temporary …` drops the buffer view, anything else
+        * runs via spark.sql. */
+      override protected def publish(spark: SparkSession, batch: PipelineRunner.Batch,
+          staged: Seq[Staging.Staged]): Unit =
+        if (spec.isExport) staged.foreach(Staging.publish)
+        else {
+          val writes = staged.iterator
+          commitStatements(batch).foreach {
+            case insertSinkRe(_) => sink.publish(writes.next())
+            case dropRe(name) => spark.catalog.dropTempView(name); ()
+            case sql => spark.sql(sql); ()
+          }
         }
-      }
     }
   }
 

@@ -108,8 +108,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // range — a real PartitionFilters entry on the parquet scan, not a
     // post-scan filter (the whole point of deriving _part from the batch)
     val day0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    val plan = defn.transform(spark,
-      PipelineRunner.Batch(0, day0, day0)).queryExecution.executedPlan.toString
+    val plan = DerivedPipelines.dailyExportTransform(spark, PipelineRunner.Batch(0, day0, day0),
+      SinkTable(src, Seq("block_number"))).queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("_part"), plan)
     // tip = yesterday of max(ts) → exports days 1 and 2, withholds day 3
     val r1 = PipelineRunner.run(spark, defn, PipelineRunner.Config(maxBatchSize = 1))

@@ -258,6 +258,57 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sc.getPersistentRDDs.keySet == before)
   }
 
+  test("a failed transform publishes every earlier batch and nothing after it") {
+    val path = tmp("staged-fail")
+    val staging = java.nio.file.Paths.get(path + "_staging")
+    val sink = SinkTable(path, Seq("number"), Some("timestamp"))
+    val blocks = EthereumPipelines.blocks("fake://chain?tip=24", path)
+    val failAt = new java.util.concurrent.atomic.AtomicLong(2) // -1: no batch fails
+    val defn = new PipelineRunner.Definition {
+      def resume(s: SparkSession): Option[Long] = blocks.resume(s)
+      def tip(s: SparkSession): Long = blocks.tip(s)
+      def transform(s: SparkSession, b: Batch) =
+        if (b.number == failAt.get()) throw new IllegalStateException(s"batch ${b.number} broke")
+        else blocks.transform(s, b)
+      def commit(s: SparkSession, b: Batch, df: org.apache.spark.sql.DataFrame): Unit =
+        blocks.commit(s, b, df)
+    }
+    val e = intercept[IllegalStateException] {
+      PipelineRunner.run(spark, defn, Config(maxBatchSize = 5, workers = 4))
+    }
+    assert(e.getMessage.contains("batch 2 broke"))
+    def numbers = sink.read(spark).select("number").collect().map(_.getLong(0)).sorted.toSeq
+    // batches 0-1 published; batch 3 staged concurrently but never published
+    assert(numbers == (0L until 10L) && sink.readRaw(spark).count() == 10)
+    assert(java.nio.file.Files.isDirectory(staging))
+    assert(defn.resume(spark) == Some(10L))
+    assert(!java.nio.file.Files.exists(staging)) // resume dropped the orphaned staging
+
+    failAt.set(-1)
+    val r = PipelineRunner.run(spark, defn, Config(maxBatchSize = 5, workers = 4))
+    assert(r.batches == 3 && r.items == 15) // resumed at block 10
+    assert(numbers == (0L until 25L)) // gap-free
+    assert(sink.readRaw(spark).count() == 25) // nothing from the failed run leaked in
+    assert(!java.nio.file.Files.exists(staging)) // a clean run leaves no staging behind
+
+    // a forced start skips the resume offset, not the staging cleanup:
+    // batches 2-3 of this crashed re-run stage and are never published
+    failAt.set(1)
+    intercept[IllegalStateException] {
+      PipelineRunner.run(spark, defn, Config(maxBatchSize = 5, workers = 4, forceStart = Some(0)))
+    }
+    assert(java.nio.file.Files.isDirectory(staging))
+    failAt.set(-1)
+    val forced = PipelineRunner.run(spark, defn,
+      Config(maxBatchSize = 5, workers = 4, forceStart = Some(5)))
+    assert(forced.batches == 4 && forced.items == 20)
+    assert(!java.nio.file.Files.exists(staging))
+    assert(numbers == (0L until 25L))
+    // 25 rows, then the crashed re-run's batch 0 (5), then the forced pass
+    // (20): nothing the crashed re-run staged was published
+    assert(sink.readRaw(spark).count() == 50)
+  }
+
   test("sink compact drops superseded versions but keeps dedup semantics") {
     val path = tmp("compact")
     val sink = SinkTable(path, Seq("k"), Some("ts"))

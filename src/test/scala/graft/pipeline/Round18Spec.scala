@@ -7,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-18 pipeline optimizations, pinned:
   *
-  *  - SinkTable.append is cache-aware: an insert-select whose plan
-  *    already reads an InMemoryRelation (the commit stage's view over
-  *    the persisted buffer) is NOT persisted a second time, and an
-  *    uncached input still takes the defensive persist path — both
-  *    must append correctly and leave nothing persisted behind.
+  *  - SinkTable.append persists nothing: it stages the batch in one
+  *    write job and publishes it by rename. An insert-select over a
+  *    cached view must not gain a second persisted copy, and an
+  *    uncached input must not be persisted either — both must append
+  *    correctly and leave nothing persisted behind.
   *  - SqlPipeline pins one resolved source file-index per tip probe:
   *    transforms between probes reuse the resolution, while a follow
   *    poll's tip() refresh MUST see source files that landed after the
@@ -46,13 +46,13 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     buffer.createOrReplaceTempView("r18_buffer")
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     sink.append(spark.sql("select * from r18_buffer"), 0L)
-    // cache-aware: the append added no persisted RDD of its own
+    // the append added no persisted RDD of its own
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
       "append persisted a second copy above the cached buffer")
     buffer.unpersist(blocking = true)
     spark.catalog.dropTempView("r18_buffer")
 
-    // uncached input: defensive persist path still appends and cleans up
+    // uncached input: appends too, and leaves nothing persisted
     val extra = (10L until 15L).map(k => (k, s"v$k")).toDF("k", "v")
     sink.append(extra, 1L)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** Config-driven pipeline: yaml + Spark-SQL templates run end-to-end
   * with no compiled pipeline code — the reference's `pipeline <url>` UX
@@ -133,9 +134,11 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       PipelineRunner.Batch(0, 0, 20), endpoint,
       enableDencun = true, enableOpStack = true))
     // template conditionals gate the column families off too
-    val bare = SqlPipeline.definition(dirOf("ethereum_transactions_spark"),
-        Map("RPC_ENDPOINT" -> endpoint, "SINK_PATH" -> tmp("cfg-txs-bare")))
-      .transform(spark, PipelineRunner.Batch(0, 0, 2))
+    val barePath = tmp("cfg-txs-bare")
+    SqlPipeline.run(spark, dirOf("ethereum_transactions_spark"),
+      Map("RPC_ENDPOINT" -> endpoint, "SINK_PATH" -> barePath),
+      c => c.copy(maxBatchSize = 3, stopAfterBatches = Some(1)))
+    val bare = spark.read.parquet(barePath)
     assert(!bare.columns.contains("max_fee_per_blob_gas"))
     assert(!bare.columns.contains("l1_fee"))
   }
@@ -221,6 +224,59 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SqlPipeline.run(spark, dirOf("table_to_daily_parquet_file_spark"), vars).items == 0)
   }
 
+  test("table_to_daily_parquet_file re-run from an exported day keeps one copy per day") {
+    register()
+    val multi = "fake://chain?tip=20&blocktime=14400"
+    val blocksPath = tmp("cfg-rerun-src")
+    PipelineRunner.run(spark, EthereumPipelines.blocks(multi, blocksPath),
+      PipelineRunner.Config(maxBatchSize = 21))
+    val targetPath = tmp("cfg-rerun-out")
+    val vars = Map("SOURCE_PATH" -> blocksPath, "SOURCE_KEYS" -> "number",
+      "TARGET_PATH" -> targetPath)
+    val dir = dirOf("table_to_daily_parquet_file_spark")
+    SqlPipeline.run(spark, dir, vars)
+    def perDay(df: org.apache.spark.sql.DataFrame) = df.groupBy(col("date"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("number")).as("k"))
+      .collect().map(r => r.getDate(0).toString -> ((r.getLong(1), r.getLong(2)))).toMap
+    val exported = perDay(spark.read.parquet(targetPath))
+    val days = exported.keys.toSeq.sorted
+    assert(days.size >= 3)
+    // force the pass back to the first exported day: every day re-exports
+    val firstDay = java.time.LocalDate.parse(days.head).toEpochDay
+    val res = SqlPipeline.run(spark, dir, vars, c => c.copy(forceStart = Some(firstDay)))
+    assert(res.batches == days.size)
+    // each day's partition holds exactly one copy of that day's source rows
+    val source = SinkTable(blocksPath, Seq("number")).read(spark)
+      .withColumn("date", to_date(col("timestamp")))
+    val expected = perDay(source).filter { case (d, _) => days.contains(d) }
+    assert(expected.values.forall { case (n, k) => n == k && n > 0 })
+    assert(perDay(spark.read.parquet(targetPath)) == expected)
+    assert(exported == expected)
+  }
+
+  test("daily export keeps every day when concurrent batches straddle a month boundary") {
+    register()
+    // one block a day at 22:13 UTC from 2023-11-14: blocks 16-20 are
+    // Nov 30 - Dec 4, so the export's first day batch is the only one in
+    // November, and all four start together
+    val chain = "fake://chain?tip=20&blocktime=86400"
+    val blocksPath = tmp("cfg-month-src")
+    PipelineRunner.run(spark, EthereumPipelines.blocks(chain, blocksPath),
+      PipelineRunner.Config(maxBatchSize = 5, defaultStart = 16))
+    val expected = (16L to 19L).map(n => java.time.Instant.ofEpochSecond(
+      1700000000L + 86400L * n).toString.take(10) -> 1L).toMap
+    (1 to 3).foreach { round =>
+      val targetPath = tmp(s"cfg-month-out$round")
+      val r = SqlPipeline.run(spark, dirOf("table_to_daily_parquet_file_spark"),
+        Map("SOURCE_PATH" -> blocksPath, "SOURCE_KEYS" -> "number", "TARGET_PATH" -> targetPath),
+        c => c.copy(workers = 4))
+      assert(r.batches == 4)
+      val got = spark.read.parquet(targetPath).groupBy(col("date")).count()
+        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      assert(got == expected, s"round $round")
+    }
+  }
+
   test("decoded_logs_to_daily_parquet_file example exports the decoded sink") {
     register()
     val multi = "fake://chain?tip=20&blocktime=14400"
@@ -291,6 +347,8 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  - Stage:
         |      Files:
         |        - write_to_sink.sql
+        |      Settings:
+        |        output_format_parquet_compression_method: gzip
         |""".stripMargin)
     write("create_buffer.sql",
       """create temporary table buffer_{{.START}}_{{.END}} as (
@@ -308,6 +366,46 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.count() == 5)
     assert(got.filter(col("tz") === "UTC+05:00").count() == 5)
     assert(spark.conf.get("spark.sql.session.timeZone") == before)
+    // the commit stage's setting applied to the batch's staged write
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(sinkPath))
+    try assert(files.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet"))
+      .forall(_.endsWith(".gz.parquet")))
+    finally files.close()
+  }
+
+  test("a commit stage may not run other SQL before an insert into sink") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-commitorder")
+    def write(name: String, text: String): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name), text)
+    write("pipeline.yaml",
+      """Sink:
+        |  Path: "{{.SINK_PATH}}"
+        |  Keys: n
+        |Steps:
+        |  - Stage:
+        |      Files:
+        |        - create_buffer.sql
+        |  - Sequencer: {}
+        |  - Stage:
+        |      Files:
+        |        - make_view.sql
+        |        - write_to_sink.sql
+        |""".stripMargin)
+    write("create_buffer.sql",
+      "create temporary view buffer_{{.START}} as (select id as n from range({{.START}}, {{.END}} + 1))")
+    write("make_view.sql", "create or replace temporary view doubled as select n * 2 as n from buffer_{{.START}}")
+    write("write_to_sink.sql", "insert into sink select * from doubled")
+    write("start.sql", "select max(n) + 1 as start from sink")
+    write("tip.sql", "select 4 as tip")
+    val vars = Map("SINK_PATH" -> tmp("commitorder"))
+    // the insert is staged with the transform, before make_view.sql runs
+    val e = intercept[IllegalArgumentException](SqlPipeline.definition(dir.toString, vars))
+    assert(e.getMessage.contains("doubled"), e.getMessage)
+    // the same statement after the insert is fine
+    write("pipeline.yaml", java.nio.file.Files.readString(dir.resolve("pipeline.yaml"))
+      .replace("- make_view.sql\n        - write_to_sink.sql",
+        "- write_to_sink.sql\n        - make_view.sql"))
+    SqlPipeline.definition(dir.toString, vars)
   }
 
   test("pipeline config loads from a Hadoop-FS URL (object-store deploy shape)") {
