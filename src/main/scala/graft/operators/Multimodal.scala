@@ -989,7 +989,7 @@ object Multimodal {
     * reach `minMatch`. The (frame_idx, code) bucket IS the inverted
     * index (13-bit codes per frame position), so candidate generation
     * is posting-list pair expansion exactly like the shingle path
-    * ([[graft.operators.TextDedup]] pairCounts) — no all-pairs scan
+    * ([[Postings.pairCounts]]) — no all-pairs scan
     * and no self-join that hashes the full index twice.
     *
     * `codes` is materialized ONCE via [[Materialize.eager]]: the WAV
@@ -1012,44 +1012,8 @@ object Multimodal {
     * see [[audioLandmarkPairs]]. */
   def audioFingerprintPairs(media: DataFrame, minMatch: Double = 0.8,
       maxDf: Int = 0)(implicit s: SparkSession): DataFrame =
-    alignedCodePairs(Materialize.eager(audioFingerprint(media).toDF()),
-      minMatch, maxDf)
-
-  /** Aligned (frame_idx, code) agreement scorer shared by the
-    * autocorrelation ([[audioFingerprintPairs]]) and spectral
-    * ([[audioSpectralPairs]]) fingerprint tiers: bucket posting lists
-    * → ordered pairs → shared-frame count over the smaller
-    * fingerprint. `codes` must be materialized by the caller (it is
-    * consumed three times). */
-  private def alignedCodePairs(codes: DataFrame, minMatch: Double,
-      maxDf: Int): DataFrame = {
-    val sizes = codes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val bucketed =
-      if (maxDf <= 0) codes
-      else codes.join(
-        codes.groupBy(col("frame_idx"), col("code"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("code")),
-        Seq("frame_idx", "code"), "left_semi")
-    // posting lists per bucket → ordered pairs → per-pair counts (one
-    // doc appears at most once per bucket, so lists are duplicate-free)
-    val kept = bucketed.groupBy(col("frame_idx"), col("code"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
-  }
+    landmarkPairScores(Materialize.eager(audioFingerprint(media).toDF()),
+      minMatch, maxDf, Seq("frame_idx", "code"))
 
   /** Per-document spectral frame codes ([[spectralFrameCodes]]) as a
     * table — the rate-free sibling of [[audioFingerprint]]. One decode
@@ -1079,8 +1043,8 @@ object Multimodal {
     * the spectral seam. */
   def audioSpectralPairs(media: DataFrame, minMatch: Double = 0.8,
       maxDf: Int = 0)(implicit s: SparkSession): DataFrame =
-    alignedCodePairs(Materialize.eager(audioSpectralCodes(media).toDF()),
-      minMatch, maxDf)
+    landmarkPairScores(Materialize.eager(audioSpectralCodes(media).toDF()),
+      minMatch, maxDf, Seq("frame_idx", "code"))
 
   /** Distinct positionless (code, code `gap` frames later) landmarks
     * over the SPECTRAL codes — the m80 trick at the spectral seam:
@@ -1418,11 +1382,7 @@ object Multimodal {
          ratio, rmsMs, minGapMs, minAbs)
        else spectralOnsetLandmarks(media, codesPerOnset, threshold,
          minSilenceMs, thresholdFrac)).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(if (rolling) OnsetRollingFpVersion else OnsetFpVersion)
-          .as("fp_ver"))
+    landmarkIndex(lms, if (rolling) OnsetRollingFpVersion else OnsetFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -1446,37 +1406,13 @@ object Multimodal {
     // with — a threshold screen against a rolling-built index (or vice
     // versa) is a cross-detector mismatch and must fail fast
     val ver = if (rolling) OnsetRollingFpVersion else OnsetFpVersion
-    require(index.columns.contains("fp_ver"),
-      s"onset index has no fp_ver column: it predates fingerprint " +
-        s"version $ver — rebuild it with " +
-        "audioOnsetLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"onset index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver (detector-encoded: 4001 threshold / 4002 " +
-        "rolling) — rebuild it with audioOnsetLandmarkIndex before " +
-        "screening (cross-version landmarks never match)")
-    val lms = Materialize.eager(
-      (if (rolling) spectralOnsetLandmarksRolling(media, codesPerOnset,
-         ratio, rmsMs, minGapMs, minAbs)
-       else spectralOnsetLandmarks(media, codesPerOnset, threshold,
-         minSilenceMs, thresholdFrac)).toDF())
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    screenLandmarkIndex(
+      Materialize.eager(
+        (if (rolling) spectralOnsetLandmarksRolling(media, codesPerOnset,
+           ratio, rmsMs, minGapMs, minAbs)
+         else spectralOnsetLandmarks(media, codesPerOnset, threshold,
+           minSilenceMs, thresholdFrac)).toDF()),
+      index, minMatch, 0, Postings.Stamp(ver, "onset", "audioOnsetLandmarkIndex"))
   }
 
   /** ONSET-INTERVAL-RATIO codes — the SPEED-CHANGE / TIME-STRETCH
@@ -1593,10 +1529,7 @@ object Multimodal {
     val lms = Materialize.eager(
       onsetIntervalLandmarks(media, nRatios, qStep, threshold,
         minSilenceMs).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(IntervalFpVersion).as("fp_ver"))
+    landmarkIndex(lms, IntervalFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -1611,37 +1544,13 @@ object Multimodal {
   def dedupAgainstAudioIntervalIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, nRatios: Int = 5, qStep: Double = 0.2,
       threshold: Int = 1024, minSilenceMs: Int = 8)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"interval index has no fp_ver column: it predates fingerprint " +
-        s"version $IntervalFpVersion — rebuild it with " +
-        "audioIntervalLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(IntervalFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"interval index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $IntervalFpVersion — rebuild it with " +
-        "audioIntervalLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      onsetIntervalLandmarks(media, nRatios, qStep, threshold,
-        minSilenceMs).toDF())
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        onsetIntervalLandmarks(media, nRatios, qStep, threshold,
+          minSilenceMs).toDF()),
+      index, minMatch, 0,
+      Postings.Stamp(IntervalFpVersion, "interval", "audioIntervalLandmarkIndex"))
 
   /** Semitone-spaced constant-Q analysis bank for the PITCH-SHIFT
     * tier: 52 centers at 200 * 2^(k/12) Hz (k = 0..51, topping out at
@@ -1880,10 +1789,7 @@ object Multimodal {
     val lms = Materialize.eager(
       chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
         folds).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(ChromaFpVersion).as("fp_ver"))
+    landmarkIndex(lms, ChromaFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -1902,37 +1808,13 @@ object Multimodal {
   def dedupAgainstAudioChromaIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, cyc: Int = 12, threshold: Int = 1024,
       minSilenceMs: Int = 8, div: Int = 12, folds: Int = 1)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"chroma index has no fp_ver column: it predates fingerprint " +
-        s"version $ChromaFpVersion — rebuild it with " +
-        "audioChromaLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ChromaFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"chroma index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ChromaFpVersion — rebuild it with " +
-        "audioChromaLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
-        folds).toDF())
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
+          folds).toDF()),
+      index, minMatch, 0,
+      Postings.Stamp(ChromaFpVersion, "chroma", "audioChromaLandmarkIndex"))
 
   /** PHASE-INSENSITIVE folded constant-Q profile at one onset — the
     * m159 kernel. Per band: mean POWER over `folds` consecutive
@@ -2184,12 +2066,9 @@ object Multimodal {
     val expd = fps.select(col("doc_id"),
       explode(col("expanded")).as("code"))
     // hot-code guard on the EXPANDED posting side, by DISTINCT docs
-    val cold = expd.groupBy(col("code"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .filter(col("df") <= maxDf || lit(maxDf) <= 0)
-      .select(col("code"))
-    val cands = prim.join(expd.join(cold, Seq("code"), "left_semi")
-        .select(col("code"), col("doc_id").as("other")),
+    val cands = prim.join(
+        Postings.capDf(expd, Seq("code"), maxDf, distinctDocs = true)
+          .select(col("code"), col("doc_id").as("other")),
         Seq("code"))
       .filter(col("doc_id") =!= col("other"))
       .select(least(col("doc_id"), col("other")).as("doc_a"),
@@ -2230,8 +2109,8 @@ object Multimodal {
     * fingerprint-function change can never silently split index and
     * probes into disjoint code spaces. */
   def audioCodeIndex(media: DataFrame)(implicit s: SparkSession): DataFrame =
-    codeIndexOf(Materialize.eager(audioFingerprint(media).toDF()),
-      AudioFpVersion)
+    landmarkIndex(Materialize.eager(audioFingerprint(media).toDF()),
+      AudioFpVersion, Seq("frame_idx", "code"), "nf")
 
   /** Version stamp for the SPECTRAL code family ([[spectralFrameCodes]]
     * — its own lineage, independent of [[AudioFpVersion]]): bump when
@@ -2257,15 +2136,18 @@ object Multimodal {
     * [[SpectralFpVersion]]. */
   def audioSpectralCodeIndex(media: DataFrame)(
       implicit s: SparkSession): DataFrame =
-    codeIndexOf(Materialize.eager(audioSpectralCodes(media).toDF()),
-      SpectralFpVersion)
+    landmarkIndex(Materialize.eager(audioSpectralCodes(media).toDF()),
+      SpectralFpVersion, Seq("frame_idx", "code"), "nf")
 
-  private def codeIndexOf(codes: DataFrame, ver: Int): DataFrame =
-    codes.join(
-        codes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf")),
+  /** Persisted landmark index rows: one per distinct (keys, doc) row
+    * of `lms` with the doc's row count `n` riding along, stamped
+    * `ver` — the layout every [[screenLandmarkIndex]] screen reads and
+    * [[IncrementalIndex.append]] extends. */
+  private def landmarkIndex(lms: DataFrame, ver: Int,
+      keys: Seq[String] = Seq("lm"), n: String = "nl"): DataFrame =
+    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as(n)),
         Seq("doc_id"))
-      .select(col("frame_idx"), col("code"), col("doc_id"), col("nf"),
-        lit(ver).as("fp_ver"))
+      .select((keys ++ Seq("doc_id", n)).map(col) :+ lit(ver).as("fp_ver"): _*)
 
   /** Screen an ingest batch of audio against a pre-built
     * [[audioCodeIndex]]: the batch fingerprints once, equi-joins the
@@ -2289,9 +2171,11 @@ object Multimodal {
     * min/max stats prune it to a metadata read on a real deployment. */
   def dedupAgainstAudioIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.8)(implicit s: SparkSession): DataFrame =
-    screenAgainstCodeIndex(
+    screenLandmarkIndex(
       Materialize.eager(audioFingerprint(media).toDF()),
-      index, minMatch, AudioFpVersion, "audioCodeIndex")
+      index, minMatch, 0,
+      Postings.Stamp(AudioFpVersion, "audio", "audioCodeIndex"),
+      Seq("frame_idx", "code"))
 
   /** Screen an ingest batch against a pre-built
     * [[audioSpectralCodeIndex]] — the rate-free incremental screen: a
@@ -2301,37 +2185,11 @@ object Multimodal {
     * [[dedupAgainstAudioIndex]]; enforces [[SpectralFpVersion]]. */
   def dedupAgainstAudioSpectralIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.8)(implicit s: SparkSession): DataFrame =
-    screenAgainstCodeIndex(
+    screenLandmarkIndex(
       Materialize.eager(audioSpectralCodes(media).toDF()),
-      index, minMatch, SpectralFpVersion, "audioSpectralCodeIndex")
-
-  private def screenAgainstCodeIndex(codes: DataFrame, index: DataFrame,
-      minMatch: Double, ver: Int, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"audio index has no fp_ver column: it predates fingerprint " +
-        s"version $ver — rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"audio index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver — rebuild it with $builder before " +
-        "screening (cross-version codes never match)")
-    val nf = codes.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val dup = codes.join(
-        index.select(col("frame_idx"), col("code"),
-          col("doc_id").as("src"), col("nf").as("nf_src")),
-        Seq("frame_idx", "code"))
-      .groupBy(col("doc_id"), col("src"), col("nf_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nf"), col("nf_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nf.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      index, minMatch, 0,
+      Postings.Stamp(SpectralFpVersion, "audio", "audioSpectralCodeIndex"),
+      Seq("frame_idx", "code"))
 
   /** Audio near-duplicate pairs, TIME-SHIFT tolerant — the landmark
     * variant [[audioFingerprintPairs]]'s positional alignment cannot
@@ -2373,36 +2231,17 @@ object Multimodal {
     landmarkPairScores(Materialize.eager(audioLandmarks(media, gap).toDF()),
       minMatch, maxDf)
 
-  /** Positionless-landmark agreement scorer shared by the
-    * autocorrelation ([[audioLandmarkPairs]]) and spectral
-    * ([[audioSpectralLandmarkPairs]]) tiers: per-`lm` posting lists →
-    * ordered pairs → shared distinct landmarks over the smaller set.
-    * `lms` must be materialized by the caller. */
+  /** Shared-key agreement scorer of the audio tiers: per-key posting
+    * lists ([[Postings.pairCounts]]) → shared keys over the smaller
+    * doc's key count. Keyed by the positionless landmark `lm`
+    * ([[audioLandmarkPairs]] and the onset/interval/chroma tiers) or
+    * by the aligned (frame_idx, code) bucket ([[audioFingerprintPairs]],
+    * [[audioSpectralPairs]]). Rows must be distinct per (doc, key) and
+    * materialized by the caller. */
   private def landmarkPairScores(lms: DataFrame, minMatch: Double,
-      maxDf: Int): DataFrame = {
-    val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm")),
-        Seq("lm"), "left_semi")
-    val kept = bucketed.groupBy(col("lm"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nl").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nl").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
-  }
+      maxDf: Int, keys: Seq[String] = Seq("lm")): DataFrame =
+    Postings.overSmaller(Postings.pairCounts(lms, keys, maxDf),
+      lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")), minMatch)
 
   /** 64-bit perceptual hash (pHash) of an image payload — the IMAGE
     * near-duplicate signature completing the dedup ladder (exact bytes
@@ -2763,32 +2602,7 @@ object Multimodal {
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
       .filter(col("ph").isNotNull)
-    val chunks = hashed.select(col("doc_id"), col("ph"), posexplode(
-      array((0 until 4).map(c =>
-        shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("ph"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    // cap BEFORE the posting-list aggregation (left_semi on per-key df
-    // counts): one row per (doc, chunk), so df == bucket size and the
-    // hot bucket never materializes inside one collect_list task
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("ph"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        bit_count(col("p.a.ph").bitwiseXOR(col("p.b.ph"))).as("dist"))
-      .filter(col("dist") <= maxDist)
-      .distinct() // a pair can share several intact chunks
+    chunkPairScores(hashed, maxDist, maxDf, oriented = false)
   }
 
   /** [[pHashPairs]] tolerant to HORIZONTAL MIRRORING — the
@@ -2816,36 +2630,9 @@ object Multimodal {
       media.select(col("doc_id"), pHashBothUdf(col("payload")).as("hs")))
       .filter(col("hs").isNotNull)
       .select(col("doc_id"), col("hs._1").as("ph"), col("hs._2").as("phf"))
-    val rows = hashed.select(col("doc_id"), col("ph").as("h"))
-      .unionByName(hashed.select(col("doc_id"), col("phf").as("h")))
-    val chunks = rows.select(col("doc_id"), col("h"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("h"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    // df counts DISTINCT docs, not orientation rows — maxDf keeps its
-    // per-doc meaning from pHashPairs even though each doc contributes
-    // multiple orientation rows per bucket here
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
-      .filter(col("dist") <= maxDist)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("dist")).as("dist"))
+    chunkPairScores(hashed.select(col("doc_id"), col("ph").as("h"))
+      .unionByName(hashed.select(col("doc_id"), col("phf").as("h"))),
+      maxDist, maxDf, oriented = true)
   }
 
   /** [[pHashPairsFlipTolerant]]'s ROTATION sibling — the phone-
@@ -2866,35 +2653,8 @@ object Multimodal {
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashRotsUdf(col("payload")).as("hs")))
       .filter(col("hs").isNotNull)
-    val rows = hashed.select(col("doc_id"), explode(col("hs")).as("h"))
-    val chunks = rows.select(col("doc_id"), col("h"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("h"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    // df counts DISTINCT docs, not orientation rows — maxDf keeps its
-    // per-doc meaning from pHashPairs even though each doc contributes
-    // multiple orientation rows per bucket here
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
-      .filter(col("dist") <= maxDist)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("dist")).as("dist"))
+    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("h")),
+      maxDist, maxDf, oriented = true)
   }
 
   /** The full DIHEDRAL-8 image near-dup pass — one operator for every
@@ -2915,32 +2675,8 @@ object Multimodal {
     val hashed = Materialize.eager(
       media.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs")))
       .filter(col("hs").isNotNull)
-    val rows = hashed.select(col("doc_id"), explode(col("hs")).as("h"))
-    val chunks = rows.select(col("doc_id"), col("h"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("h"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
-      .filter(col("dist") <= maxDist)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("dist")).as("dist"))
+    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("h")),
+      maxDist, maxDf, oriented = true)
   }
 
   /** Image near-dup pairs tolerant of STRUCTURED CROPS — the m128
@@ -2962,42 +2698,58 @@ object Multimodal {
     * the gate pins one as a non-match. */
   def pHashPairsCropTolerant(media: DataFrame, maxDist: Int = 3,
       maxDf: Int = 0, extended: Boolean = false): DataFrame = {
+    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     // extended = true adds the 3x3 thirds ladder ([[CropWindowsThirds]]
     // — rule-of-thirds recomposition crops) at 16 hashes per decode
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val wUdf = if (extended) pHashCropWindowsExtUdf else pHashCropWindowsUdf
     val hashed = Materialize.eager(
       media.select(col("doc_id"), wUdf(col("payload")).as("hs")))
       .filter(col("hs").isNotNull)
-    val rows = hashed.select(col("doc_id"), explode(col("hs")).as("wh"))
-      .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h"))
-    val chunks = rows.select(col("doc_id"), col("win"), col("h"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("win"), col("h"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val capped = if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val kept = capped.groupBy(col("chunk"), col("ckey"))
-      .agg(collect_list(struct(col("doc_id"), col("win"), col("h"))).as("ds"))
+    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("wh"))
+      .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h")),
+      maxDist, maxDf, oriented = true)
+  }
+
+  /** Shared chunk-pair scorer of the pHash tiers over (doc_id[, win], h)
+    * rows, h a 64-bit hash (the last column): 4 x 16-bit chunk buckets
+    * ([[Postings.chunks16]] — pigeonhole-complete for hamming <= 3),
+    * the `maxDf` cap BEFORE the posting-list aggregation, bucket posting
+    * lists of whole rows expanded by [[Postings.pairs]], and one exact
+    * `bit_count` verify per candidate. One row per doc (`oriented =
+    * false`): the cap counts rows (== docs), output distinct
+    * (doc_a, doc_b, dist) — a pair can share several intact chunks.
+    * Several rows per doc (orientations or crop windows, `oriented =
+    * true`): the cap counts DISTINCT docs, so a [[pHashPairs]]-tuned
+    * maxDf carries over despite the row inflation; same-doc pairs drop,
+    * a `win` column keeps only pairs with window 0 (the full image) on
+    * one side, and each pair (per window combo) keeps its minimum
+    * distance. */
+  private def chunkPairScores(rows: DataFrame, maxDist: Int, maxDf: Int,
+      oriented: Boolean): DataFrame = {
+    val h = rows.columns.last
+    val win = if (rows.columns.contains("win")) Seq("win_a", "win_b") else Nil
+    val pairs = Postings.capDf(Postings.chunks16(rows, h), Seq("chunk", "ckey"),
+        maxDf, oriented)
+      .groupBy(col("chunk"), col("ckey"))
+      .agg(collect_list(struct(rows.columns.map(col): _*)).as("ds"))
       .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
-      .filter(col("p.a.win") === 0 || col("p.b.win") === 0)
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("p.a.win").as("win_a"), col("p.b.win").as("win_b"),
-        bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))).as("dist"))
-      .filter(col("dist") <= maxDist)
-      .groupBy(col("doc_a"), col("doc_b"), col("win_a"), col("win_b"))
-      .agg(min(col("dist")).as("dist"))
+      .select(explode(Postings.pairs(col("ds"))).as("p"))
+    val dist = bit_count(col(s"p.a.$h").bitwiseXOR(col(s"p.b.$h"))).as("dist")
+    if (!oriented)
+      pairs.select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
+          dist)
+        .filter(col("dist") <= maxDist)
+        .distinct()
+    else {
+      val other = pairs.filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
+      (if (win.isEmpty) other
+       else other.filter(col("p.a.win") === 0 || col("p.b.win") === 0))
+        .select(Seq(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b")) ++
+          win.map(w => col(s"p.${w.last}.win").as(w)) :+ dist: _*)
+        .filter(col("dist") <= maxDist)
+        .groupBy((Seq("doc_a", "doc_b") ++ win).map(col): _*)
+        .agg(min(col("dist")).as("dist"))
+    }
   }
 
   /** A CROP of [[syntheticPng]]'s pixel field — the m128 fixture:
@@ -3205,14 +2957,11 @@ object Multimodal {
     * One row per (chunk, image): `(chunk, ckey, doc_id, ph)`; the full
     * hash rides along so candidate verification is one `bit_count`. */
   def pHashChunkIndex(media: DataFrame): DataFrame =
-    Materialize.eager(
-      media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
-      .filter(col("ph").isNotNull)
-      .select(col("doc_id"), col("ph"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("pos").as("chunk"), col("col").as("ckey"),
-        col("doc_id"), col("ph"), lit(PHashFpVersion).as("fp_ver"))
+    Postings.chunks16(Materialize.eager(
+        media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
+        .filter(col("ph").isNotNull), "ph")
+      .select(col("chunk"), col("ckey"), col("doc_id"), col("ph"),
+        lit(PHashFpVersion).as("fp_ver"))
 
   /** Version stamp for the pHash INDEX family ([[pHashChunkIndex]],
     * [[pHashCropWindowIndex]] — everything [[pHash64]]'s value depends
@@ -3229,26 +2978,6 @@ object Multimodal {
     * stamp: on a pHash-affecting bump, restart those streams from a
     * fresh checkpoint (CHANGELOG state-schema note). */
   val PHashFpVersion: Int = 13002
-
-  /** Fail-fast stamp gate shared by the pHash index screens — the
-    * [[screenAgainstCodeIndex]] pattern: an unstamped (pre-13002)
-    * or cross-version index throws with a rebuild instruction instead
-    * of compiling, running, and matching nothing. The probe is a
-    * `limit(1)` over a constant column — parquet min/max stats prune
-    * it to a metadata read on a real deployment. */
-  private def requirePHashStamp(index: DataFrame, builder: String): Unit = {
-    require(index.columns.contains("fp_ver"),
-      s"pHash index has no fp_ver column: it predates fingerprint " +
-        s"version $PHashFpVersion (EXIF orientation normalization) — " +
-        s"rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PHashFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"pHash index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PHashFpVersion — rebuild it with $builder " +
-        "before screening (cross-version hashes match only by luck)")
-  }
 
   /** Screen an ingest batch of images against a pre-built
     * [[pHashChunkIndex]]: the batch decodes + hashes once, equi-joins
@@ -3269,35 +2998,9 @@ object Multimodal {
     * verdicts toward kept, and only for probes whose every shared
     * chunk is that frequent. */
   def dedupAgainstPHashIndex(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashChunkIndex")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
-      .filter(col("ph").isNotNull)
-    val chunks = hashed.select(col("doc_id"), col("ph"), posexplode(
-      array((0 until 4).map(c =>
-        shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("ph"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val dup = chunks.join(
-        probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
-          col("ph").as("cph")),
-        Seq("chunk", "ckey"))
-      .dropDuplicates("doc_id", "src")
-      .filter(bit_count(col("ph").bitwiseXOR(col("cph"))) <= maxDist)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    hashed.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
+    screenPHashIndex(media, index, maxDist, maxDf, dihedral = false,
+      crop = false)
 
   /** [[dedupAgainstPHashIndex]] with DIHEDRAL-8 probes — incremental
     * image dedup that still catches a rotated / mirrored / compound
@@ -3311,36 +3014,9 @@ object Multimodal {
     * composes with the persisted-index contract without reindexing
     * anything. */
   def dedupAgainstPHashIndexDihedral(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashChunkIndex")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs")))
-      .filter(col("hs").isNotNull)
-    val rows = hashed.select(col("doc_id"), explode(col("hs")).as("h"))
-    val chunks = rows.select(col("doc_id"), col("h"), posexplode(
-      array((0 until 4).map(c =>
-        shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("h"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val dup = chunks.join(
-        probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
-          col("ph").as("cph")),
-        Seq("chunk", "ckey"))
-      .dropDuplicates("doc_id", "src", "h")
-      .filter(bit_count(col("h").bitwiseXOR(col("cph"))) <= maxDist)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    hashed.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
+    screenPHashIndex(media, index, maxDist, maxDf, dihedral = true,
+      crop = false)
 
   /** Persisted CROP-WINDOW pHash index — the incremental member of
     * the m128 tier: the corpus decodes ONCE into all seven
@@ -3368,11 +3044,8 @@ object Multimodal {
       .filter(col("hs").isNotNull)
       .select(col("doc_id"), explode(col("hs")).as("wh"))
       .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("ph"))
-      .select(col("doc_id"), col("win"), col("ph"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("pos").as("chunk"), col("col").as("ckey"),
-        col("doc_id"), col("win"), col("ph"),
+      .transform(Postings.chunks16(_, "ph"))
+      .select(col("chunk"), col("ckey"), col("doc_id"), col("win"), col("ph"),
         lit(PHashFpVersion).as("fp_ver"))
 
   /** Screen an ingest batch against a pre-built
@@ -3387,34 +3060,43 @@ object Multimodal {
     * bucket (window rows never inflate the count — the
     * orientation-tier lesson). */
   def dedupAgainstPHashCropIndex(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
+      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
+    screenPHashIndex(media, index, maxDist, maxDf, dihedral = false,
+      crop = true)
+
+  /** Shared screen of the pHash indexes: fail-fast
+    * [[PHashFpVersion]] gate, then the batch decodes + hashes once
+    * (all eight [[pHash64Dihedral]] orientations when `dihedral`),
+    * chunks ([[Postings.chunks16]]) and equi-joins the `maxDf`-capped
+    * index on (chunk, ckey), verifies each candidate with one
+    * `bit_count` against the hash carried in the index row, and a
+    * probe is a duplicate of the lowest matching corpus image. The
+    * crop-window index (`crop`) caps by DISTINCT corpus docs (window
+    * rows never inflate the count). Hashless payloads are absent from
+    * the output. */
+  private def screenPHashIndex(media: DataFrame, index: DataFrame,
+      maxDist: Int, maxDf: Int, dihedral: Boolean,
+      crop: Boolean): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    requirePHashStamp(index, "pHashCropWindowIndex")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
+    Postings.requireStamp(index, Postings.Stamp(PHashFpVersion, "pHash",
+      if (crop) "pHashCropWindowIndex" else "pHashChunkIndex"))
+    val hashed = Materialize.eager(media.select(col("doc_id"),
+        (if (dihedral) pHashDihedralUdf else pHashUdf)(col("payload"))
+          .as("ph")))
       .filter(col("ph").isNotNull)
-    val chunks = hashed.select(col("doc_id"), col("ph"), posexplode(
-      array((0 until 4).map(c =>
-        shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("ph"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
-    val dup = chunks.join(
-        probed.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
-          col("ph").as("cph")),
+    val rows = if (dihedral) hashed.select(col("doc_id"), explode(col("ph")).as("h"))
+      else hashed
+    val h = rows.columns.last
+    val dup = Postings.chunks16(rows, h).join(
+        Postings.capDf(index, Seq("chunk", "ckey"), maxDf, crop)
+          .select(col("chunk"), col("ckey"), col("doc_id").as("src"),
+            col("ph").as("cph")),
         Seq("chunk", "ckey"))
-      .dropDuplicates("doc_id", "src", "cph")
-      .filter(bit_count(col("ph").bitwiseXOR(col("cph"))) <= maxDist)
+      .dropDuplicates(Seq("doc_id", "src") ++
+        (if (dihedral) Seq("h") else if (crop) Seq("cph") else Nil))
+      .filter(bit_count(col(h).bitwiseXOR(col("cph"))) <= maxDist)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    hashed.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(hashed.select(col("doc_id")), dup)
   }
 
   /** Content-anchored PEAK-PATCH hashes — the ARBITRARY-OFFSET crop
@@ -3611,25 +3293,22 @@ object Multimodal {
     // readout generally lands on a DIFFERENT code value than its
     // identity source, so an identity-only histogram would undercount
     // the enforced df and the solved cap could overrun the budget)
-    val (cap, solvedCap) = resolveDfCap(
+    val (cap, solvedCap) = Postings.resolveDfCap(
       lms.select(col("doc_id"), col("lm")).distinct(), maxDf, 16)
     val n0 = lms.filter(col("orient") === 0)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     // the df cap applies to the posting row itself (rows are distinct
     // per (doc, orient, lm), so the distinct-DOC df needs the in-row
-    // dedup) — one groupBy(lm) instead of applyDfCap's count
+    // dedup) — one groupBy(lm) instead of Postings.capDf's count
     // aggregation + semi-join back + re-group (two extra full-table
     // shuffles on the same key)
-    val kept = lms.groupBy(col("lm"))
+    val counts = lms.groupBy(col("lm"))
       .agg(collect_list(struct(col("doc_id"), col("orient"))).as("ds"))
       .filter(size(col("ds")) >= 2 &&
-        dfCapKeep(lms.sparkSession, col("lm"),
+        Postings.dfCapKeep(lms.sparkSession, col("lm"),
           size(array_distinct(transform(col("ds"),
             x => x.getField("doc_id")))), cap, solvedCap))
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+      .select(explode(Postings.pairs(col("ds"))).as("p"))
       .filter(col("p.a.doc_id") < col("p.b.doc_id"))
       .filter(col("p.a.orient") === 0)
       .groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
@@ -3637,14 +3316,7 @@ object Multimodal {
       .agg(count(lit(1)).as("c"))
       // the same ABSOLUTE evidence floor as peakLandmarkPairScores
       .filter(col("c") >= math.max(1, minShared))
-      .join(n0.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(n0.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("orient"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    Postings.overSmaller(counts, n0, minMatch, "orient")
   }
 
   /** Image near-dup pairs tolerant of ARBITRARY-OFFSET crops — the
@@ -3671,7 +3343,7 @@ object Multimodal {
     * corpora fine (avg df stays low even at 32k docs), but ONE
     * degenerate code shared by k docs inflates a single aggregation
     * row to k entries and the pair explode to k^2 with no cap and no
-    * trace. [[dfCapKeep]] therefore always bounds the posting list:
+    * trace. [[Postings.dfCapKeep]] therefore always bounds the posting list:
     * the caller's maxDf when given, else this auto-cap. 4096 is far
     * above any identifying code's df (the families' measured 32k-doc
     * sweeps stay in the tens even for their hottest codes) yet bounds
@@ -3717,23 +3389,19 @@ object Multimodal {
       maxDf: Int, minShared: Int = 0): DataFrame = {
     // AutoDf: one extra pass over the (already materialized) landmark
     // table solves the cap from the measured df distribution
-    val (cap, solvedCap) = resolveDfCap(lms, maxDf, 16)
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
+    val (cap, solvedCap) = Postings.resolveDfCap(lms, maxDf, 16)
     // rows are distinct (doc_id, lm), so the posting size IS the
     // code's distinct-doc df and the cap filters in-row — one
-    // groupBy(lm) instead of applyDfCap's count aggregation +
+    // groupBy(lm) instead of Postings.capDf's count aggregation +
     // semi-join back + re-group (two extra full-table shuffles)
-    val kept = lms.groupBy(col("lm"))
+    val counts = lms.groupBy(col("lm"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .filter(size(col("ds")) >= 2 &&
-        dfCapKeep(lms.sparkSession, col("lm"), size(col("ds")), cap,
+        Postings.dfCapKeep(lms.sparkSession, col("lm"), size(col("ds")), cap,
           solvedCap))
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .filter(col("p.doc_a") =!= col("p.doc_b"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .select(explode(Postings.pairs(col("ds"))).as("p"))
+      .filter(col("p.a") =!= col("p.b"))
+      .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .agg(count(lit(1)).as("c"))
       // minShared: an ABSOLUTE evidence floor under the relative
       // metric — a doc whose payload yields only a handful of
@@ -3743,14 +3411,8 @@ object Multimodal {
       // audio-fingerprint systems require a minimum absolute hit
       // count. 0 (default) preserves the pure relative metric.
       .filter(col("c") >= math.max(1, minShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    Postings.overSmaller(counts,
+      lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")), minMatch)
   }
 
   /** PEAK-PATCH landmarks for VIDEO — the m136 tier lifted to the
@@ -3892,18 +3554,8 @@ object Multimodal {
       minMatch: Double, maxDist: Int, maxDf: Int): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val nl = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val chunks = rows.select(col("doc_id"), col("pk"), col("d"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("d"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("pk"), col("d"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val capped =
-      if (maxDf <= 0) chunks
-      else chunks.join(
-        chunks.groupBy(col("chunk"), col("ckey"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("chunk"), col("ckey")),
-        Seq("chunk", "ckey"), "left_semi")
+    val capped = Postings.capDf(Postings.chunks16(rows, "d"),
+      Seq("chunk", "ckey"), maxDf, distinctDocs = true)
     val cand = capped.select(col("doc_id").as("doc_a"), col("pk").as("pk_a"),
         col("d").as("da"), col("chunk"), col("ckey"))
       .join(capped.select(col("doc_id").as("doc_b"), col("pk").as("pk_b"),
@@ -3952,14 +3604,12 @@ object Multimodal {
       .filter(col("ds").isNotNull)
       .select(col("doc_id"), explode(col("ds")).as("pd"))
       .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
-    rows.join(rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("pk"), col("d"), col("nl"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("d"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("pos").as("chunk"), col("col").as("ckey"),
-        col("doc_id"), col("pk"), col("d"), col("nl"),
-        lit(PeakDescFpVersion).as("fp_ver"))
+    Postings.chunks16(
+        rows.join(rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
+          Seq("doc_id")).select(col("doc_id"), col("pk"), col("d"), col("nl")),
+        "d")
+      .select(col("chunk"), col("ckey"), col("doc_id"), col("pk"), col("d"),
+        col("nl"), lit(PeakDescFpVersion).as("fp_ver"))
   }
 
   /** Screen an ingest batch against a pre-built
@@ -3974,18 +3624,8 @@ object Multimodal {
       minMatch: Double = 0.75, maxDist: Int = 1, radius: Int = 2,
       patchDesc: Int = 8)(implicit s: SparkSession): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    require(index.columns.contains("fp_ver"),
-      s"peak-desc index has no fp_ver column: it predates fingerprint " +
-        s"version $PeakDescFpVersion — rebuild it with " +
-        "imagePeakLossyIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PeakDescFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"peak-desc index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PeakDescFpVersion — rebuild it with " +
-        "imagePeakLossyIndex before screening (cross-version " +
-        "descriptors never match)")
+    Postings.requireStamp(index,
+      Postings.Stamp(PeakDescFpVersion, "peak-desc", "imagePeakLossyIndex"))
     val u = udf((p: Array[Byte]) => peakBlockDescriptors(p, radius, patchDesc))
     val rows = Materialize.eager(
       media.select(col("doc_id"), u(col("payload")).as("ds")))
@@ -3993,12 +3633,7 @@ object Multimodal {
       .select(col("doc_id"), explode(col("ds")).as("pd"))
       .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
     val nl = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val chunks = rows.select(col("doc_id"), col("pk"), col("d"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("d"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("pk"), col("d"), col("pos").as("chunk"),
-        col("col").as("ckey"))
-    val cand = chunks.join(
+    val cand = Postings.chunks16(rows, "d").join(
         index.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
           col("pk").as("pk_src"), col("d").as("d_src"),
           col("nl").as("nl_src")),
@@ -4013,9 +3648,7 @@ object Multimodal {
           col("cp").cast("double") / col("nl"))
         .otherwise(col("cs").cast("double") / col("nl_src")) >= minMatch)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(nl.select(col("doc_id")), dup)
   }
 
   /** Lossy JPEG re-encode of any image payload at the given quality —
@@ -4062,7 +3695,8 @@ object Multimodal {
     * [[PeakFpVersion]]. */
   def imagePeakIndex(media: DataFrame, radius: Int = 2, patch: Int = 4,
       k: Int = 0)(implicit s: SparkSession): DataFrame =
-    peakIndexOf(Materialize.eager(imagePeakLandmarks(media, radius, patch, k)))
+    landmarkIndex(Materialize.eager(imagePeakLandmarks(media, radius, patch, k)),
+      PeakFpVersion)
 
   /** Persisted PEAK-PATCH index for VIDEO — the m138 tier's
     * incremental member: one row per distinct (pooled peak hash, doc)
@@ -4073,8 +3707,9 @@ object Multimodal {
     * are build parameters, screen with what you built with. */
   def videoPeakIndex(media: DataFrame, every: Int = 2, radius: Int = 2,
       patch: Int = 4, k: Int = 0)(implicit s: SparkSession): DataFrame =
-    peakIndexOf(
-      Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)))
+    landmarkIndex(
+      Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)),
+      PeakFpVersion)
 
   /** Screen an ingest batch of VIDEOS against a pre-built
     * [[videoPeakIndex]]: same metric and contract as
@@ -4083,15 +3718,10 @@ object Multimodal {
   def dedupAgainstVideoPeakIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, every: Int = 2, radius: Int = 2,
       patch: Int = 4, k: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenPeakIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)),
-      index, minMatch, "videoPeakIndex")
-
-  private def peakIndexOf(lms: DataFrame): DataFrame =
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(PeakFpVersion).as("fp_ver"))
+      index, minMatch, 0,
+      Postings.Stamp(PeakFpVersion, "peak", "videoPeakIndex"))
 
   /** Screen an ingest batch against a pre-built [[imagePeakIndex]]:
     * the batch decodes once, equi-joins the index on the peak-patch
@@ -4104,41 +3734,10 @@ object Multimodal {
   def dedupAgainstImagePeakIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, radius: Int = 2, patch: Int = 4,
       k: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenPeakIndex(
+    screenLandmarkIndex(
       Materialize.eager(imagePeakLandmarks(media, radius, patch, k)),
-      index, minMatch, "imagePeakIndex")
-
-  /** Shared screen kernel for the peak-landmark indexes (image m137 /
-    * video m139): fail-fast version check, landmark equi-join,
-    * shared-distinct over the smaller set >= minMatch. */
-  private def screenPeakIndex(lms: DataFrame, index: DataFrame,
-      minMatch: Double, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"peak index has no fp_ver column: it predates fingerprint " +
-        s"version $PeakFpVersion — rebuild it with $builder " +
-        "before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(PeakFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"peak index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $PeakFpVersion — rebuild it with $builder " +
-        "before screening (cross-version landmarks never match)")
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      index, minMatch, 0,
+      Postings.Stamp(PeakFpVersion, "peak", "imagePeakIndex"))
 
   // ---- IMAGE: similarity-invariant peak constellations (crop+RESIZE) --
 
@@ -4421,10 +4020,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
         radius, minAvg).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(ScaleFpVersion).as("fp_ver"))
+    landmarkIndex(lms, ScaleFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -4440,45 +4036,58 @@ object Multimodal {
       qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
       radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(
         imageScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
           radius, minAvg).toDF()),
-      index, minMatch, "imageScaleLandmarkIndex", minShared)
+      index, minMatch, minShared,
+      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
 
-  /** Shared screen kernel for the constellation indexes (image m144 /
-    * video m148): fail-fast [[ScaleFpVersion]] check, landmark
-    * equi-join, shared-distinct over the smaller set >= minMatch. */
-  private def screenScaleIndex(lms: DataFrame, index: DataFrame,
-      minMatch: Double, builder: String, minShared: Int = 0,
-      fpVer: Int = ScaleFpVersion): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $fpVer — rebuild it with " +
-        s"$builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(fpVer))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $fpVer — rebuild it with $builder " +
-        "before screening (cross-version landmarks never match)")
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
+  /** Shared landmark index screen of every `lm`-keyed (and the audio
+    * (frame_idx, code)-keyed) index family: fail-fast
+    * [[Postings.requireStamp]] (before `lms` is evaluated, so a stale
+    * index never pays for the probe decode), probe rows equi-join the
+    * index on `keys`, a (probe, src) candidate's shared count `c` must
+    * reach the absolute floor `minShared` (the [[peakLandmarkPairScores]]
+    * floor; 0 and 1 mean any) and `c` over the smaller of the two docs'
+    * counts must reach `minMatch`; dup_src = the lowest matching corpus
+    * doc. The index's per-doc count column is `nl` (`nf` on the audio
+    * code indexes). `per` lists index columns that split a corpus doc
+    * into channels counted separately (the video crop index's `win`).
+    *
+    * Probe rows with an `orient` column are a readout FAN (dihedral,
+    * aspect, squeeze, mirror): every readout scores separately, over
+    * the probe's IDENTITY (orient 0) count — the convention
+    * [[orientedLandmarkPairScores]] uses and the fan gates were
+    * calibrated on: a readout's own code count can differ from
+    * identity (quantizer-range dropouts), and a small per-orient count
+    * inflates c / least(nl, nl_src) into false flags near the gate.
+    * Payloads yielding NO landmarks are absent from the output, not
+    * judged kept (the family contract). */
+  private def screenLandmarkIndex(lms: => DataFrame, index: DataFrame,
+      minMatch: Double, minShared: Int, stamp: Postings.Stamp,
+      keys: Seq[String] = Seq("lm"), per: Seq[String] = Nil): DataFrame = {
+    Postings.requireStamp(index, stamp)
+    val probes = lms
+    val n = if (index.columns.contains("nf")) "nf" else "nl"
+    val fan = probes.columns.contains("orient")
+    val sizes = (if (fan) probes.filter(col("orient") === 0) else probes)
+      .groupBy(col("doc_id")).agg(count(lit(1)).as(n))
+    val nSrc = s"${n}_src"
+    val dup = probes.join(
+        index.select(keys.map(col) ++ per.map(c => col(c).as("src_" + c)) ++
+          Seq(col("doc_id").as("src"), col(n).as(nSrc)): _*),
+        keys)
+      .groupBy((Seq("doc_id") ++ Seq("orient").filter(_ => fan) ++
+        Seq("src") ++ per.map("src_" + _) :+ nSrc).map(col): _*)
       .agg(count(lit(1)).as("c"))
-      // the same ABSOLUTE evidence floor as peakLandmarkPairScores
       .filter(col("c") >= math.max(1, minShared))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
+      .join(sizes, Seq("doc_id"))
+      .filter(col("c").cast("double") / least(col(n), col(nSrc)) >= minMatch)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(
+      if (fan) probes.select(col("doc_id")).distinct()
+      else sizes.select(col("doc_id")), dup)
   }
 
   /** One (doc_id, orient, lm) row per dihedral readout of each
@@ -4546,46 +4155,13 @@ object Multimodal {
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      imageScaleLandmarksOriented(media, kTop, nNear, qStepR, nAng,
-        smoothR, radius, minAvg))
-    // every readout scores over the IDENTITY (orient 0) code count —
-    // the convention the family's pair scorer
-    // (orientedLandmarkPairScores) uses and its gates were calibrated
-    // on: a readout's own code count can differ from identity
-    // (quantizer-range dropouts), and a small per-orient nl inflates
-    // c/least(nl, nl_src) into false flags near the gate
-    val nl0 = lms.filter(col("orient") === 0)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("orient"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      // the same ABSOLUTE evidence floor as peakLandmarkPairScores
-      .filter(col("c") >= math.max(1, minShared))
-      .join(nl0, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    lms.select(col("doc_id")).distinct().join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        imageScaleLandmarksOriented(media, kTop, nNear, qStepR, nAng,
+          smoothR, radius, minAvg)),
+      index, minMatch, minShared,
+      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
 
   // ---- IMAGE: aspect-squeeze hypothesis fan (anisotropic resize) ---
 
@@ -5146,10 +4722,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageScaleLandmarksAffine(media, kTop, nNear, qStepR, nAng,
         smoothR, radius, minAvg).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(AffineFpVersion).as("fp_ver"))
+    landmarkIndex(lms, AffineFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -5160,12 +4733,12 @@ object Multimodal {
       qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
       radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(
         imageScaleLandmarksAffine(media, kTop, nNear, qStepR, nAng,
           smoothR, radius, minAvg).toDF()),
-      index, minMatch, "imageAffineLandmarkIndex", minShared,
-      AffineFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFpVersion, "constellation", "imageAffineLandmarkIndex"))
 
   /** Quantized AFFINE-INVARIANT local-frame codes — geometric
     * hashing with an affine basis (the classic model-based-vision
@@ -5403,10 +4976,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
         smoothR, radius, minAvg).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(AffineFrameFpVersion).as("fp_ver"))
+    landmarkIndex(lms, AffineFrameFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -5417,12 +4987,12 @@ object Multimodal {
       nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(
         imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
           smoothR, radius, minAvg).toDF()),
-      index, minMatch, "imageAffineFrameIndex", minShared,
-      AffineFrameFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFrameFpVersion, "constellation", "imageAffineFrameIndex"))
 
   /** AFFINE-FRAME codes pooled per VIDEO document — the m174 tier
     * lifted to the frame sequence (m177): every sampled frame's exact
@@ -5483,10 +5053,7 @@ object Multimodal {
       minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(videoAffineFrameLandmarks(media, every,
       kTop, nNear, nBasis, qStep, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(AffineFrameFpVersion).as("fp_ver"))
+    landmarkIndex(lms, AffineFrameFpVersion)
   }
 
   /** Screen an ingest batch of videos against a pre-built
@@ -5497,11 +5064,11 @@ object Multimodal {
       qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
       minAvg: Int = 24, minShared: Int = 16)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoAffineFrameLandmarks(media, every, kTop,
         nNear, nBasis, qStep, smoothR, radius, minAvg)),
-      index, minMatch, "videoAffineFrameIndex", minShared,
-      AffineFrameFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFrameFpVersion, "constellation", "videoAffineFrameIndex"))
 
   /** ANCHORED affine-frame codes pooled per VIDEO document — the
     * verified tier's raw table for the frame sequence (m182): every
@@ -5862,7 +5429,7 @@ object Multimodal {
 
   /** Solve the largest df cap whose pair explode fits `budgetBytes`
     * (<= 0: read [[PairBudgetConf]]): codes over the cap are DROPPED
-    * by [[dfCapKeep]], so cost(c) = Sum over codes with 2 <= df <= c
+    * by [[Postings.dfCapKeep]], so cost(c) = Sum over codes with 2 <= df <= c
     * of df^2/2 * pairRowBytes — monotone in c, solved exactly from a
     * ONE-PASS bounded histogram (exact counts for df <= 4096, one
     * geometric bin per octave above — driver rows <= 4096 + ~20, at
@@ -5919,46 +5486,85 @@ object Multimodal {
     out
   }
 
-  /** Resolve a caller's maxDf: [[AutoDf]] solves from the data (and
-    * the solved cap self-reports drops via [[hotCodesDropped]], like
-    * the backstop auto-cap); anything else passes through. */
-  private def resolveDfCap(lms: DataFrame, maxDf: Int,
-      pairRowBytes: Int): (Int, Boolean) =
-    if (maxDf == AutoDf) (solveDfCap(lms, pairRowBytes), true)
-    else (maxDf, false)
-
-  /** The distinct-doc posting cap as a keep-PREDICATE over a
-    * per-code posting row whose distinct-doc count is already in
-    * hand (`dfCol`) — explicit maxDf when > 0, [[hotCodeAutoCap]]
-    * (with the accumulator + warn per dropped code) otherwise;
-    * `report` forces the accumulator path for a cap the operator
-    * SOLVED itself ([[AutoDf]]), which must self-report like the
-    * backstop. The cap applies where the posting list is built (the
-    * scorers all group by code anyway), instead of the former
-    * standalone count-aggregation + semi-join-back stage, which
-    * re-shuffled the full landmark table twice per scorer on the
-    * same key. */
-  private def dfCapKeep(s: SparkSession, lmCol: Column, dfCol: Column,
-      maxDf: Int, report: Boolean = false): Column = {
-    val auto = maxDf <= 0 || report
-    val cap = if (maxDf <= 0) hotCodeAutoCap else maxDf
-    if (cap <= 0) lit(true)
-    else if (!auto) dfCol <= cap
-    else {
-      val acc = hotCodesDropped(s)
-      val keepUdf = udf((lm: String, df: Int) => {
-        val ok = df <= cap
-        if (!ok) {
-          acc.add(1L)
-          hotLog.warn(
-            s"auto posting cap: dropping hot code $lm (df=$df > " +
-              s"$cap distinct docs) — carries no identification " +
-              "signal; raise maxDf explicitly to keep it")
-        }
-        ok
-      })
-      keepUdf(lmCol.cast("string"), dfCol.cast("int"))
-    }
+  /** Count-first, survivor-gather candidate stage shared by the
+    * identity ([[affineFramePairsVerifiedFrom]]) and chiral
+    * ([[affineFramePairsChiralVerifiedFrom]]) verified tiers, over an
+    * anchored table (doc_id[, orient], lm, ax, ay) distinct per
+    * (doc[, orient], lm). With an `orient` column (the identity +
+    * mirror fan) the lower doc's identity codes pair against the
+    * higher doc's every readout and the pair key carries the b-side
+    * orientation. Returns one row per surviving candidate pair:
+    * (doc_a, doc_b[, orient], c, na, nb, corr), `corr` the matched
+    * codes' anchor correspondences.
+    *
+    * The maxDf cap ([[AutoDf]] solved at pass 1's 16-byte pair width
+    * over distinct (doc, lm) of the whole fan — the basis the cap
+    * predicate enforces) filters the per-code posting row in place
+    * ([[Postings.dfCapKeep]]); the posting table is persisted, since
+    * both passes explode from it and it is posting-sized, never
+    * pair-sized. Pass 1 counts shared codes only (fixed-width
+    * aggregation state; one posting row per (doc, code), so count(1)
+    * == countDistinct(lm)) and its survivors of the shared / minMatch
+    * gates are materialized — near-dup mass, read three times. Pass 2
+    * gathers correspondences for survivors only (a left-semi join keeps
+    * the collect_list state at near-dup mass). SURVIVOR-AWARE GATHER:
+    * when pass 1 leaves at most [[survivorGatherMaxPairs]] pairs, pass
+    * 2's explode is pre-filtered to the survivor DOCS' posting entries
+    * by a literal sorted id array (cost bounded by entries x
+    * 2*threshold compares), instead of re-exploding the whole posting
+    * table and semi-joining ~all of it away; above the threshold the
+    * full re-explode runs. Row-identical either way: the semi-join
+    * still gates exact survivor pairs, and dropping non-survivor docs'
+    * entries can drop no surviving pair's correspondence. */
+  private def verifiedCandidates(fan: DataFrame, nl: DataFrame, maxDf: Int,
+      candMinShared: Int, candMinMatch: Double): DataFrame = {
+    val o = Seq("orient").filter(fan.columns.contains)
+    val docLms = fan.select(col("doc_id"), col("lm"))
+    val (cap, solvedCap) = Postings.resolveDfCap(
+      if (o.isEmpty) docLms else docLms.distinct(), maxDf, 16)
+    val posted = Materialize.eager(fan.groupBy(col("lm"))
+      .agg(collect_list(struct((Seq("doc_id") ++ o ++ Seq("ax", "ay"))
+        .map(col): _*)).as("ps"))
+      .filter(size(col("ps")) >= 2 &&
+        Postings.dfCapKeep(fan.sparkSession, col("lm"),
+          if (o.isEmpty) size(col("ps"))
+          else size(array_distinct(transform(col("ps"),
+            x => x.getField("doc_id")))), cap, solvedCap)))
+    // a = the LOWER doc's entry (lists sort by doc_id first); on a fan
+    // only its identity codes pair
+    def pairRows(list: Column): DataFrame =
+      posted.select(explode(Postings.pairs(list)).as("p"))
+        .filter(if (o.isEmpty) col("p.a.doc_id") < col("p.b.doc_id")
+          else col("p.a.doc_id") < col("p.b.doc_id") && col("p.a.orient") === 0)
+    val keys = Seq("doc_a", "doc_b") ++ o
+    val keyCols = Seq(col("p.a.doc_id").as("doc_a"),
+      col("p.b.doc_id").as("doc_b")) ++ o.map(_ => col("p.b.orient").as("orient"))
+    val allPairs = pairRows(col("ps"))
+    val surv = Materialize.eager(allPairs.select(keyCols: _*)
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("c"))
+      .filter(col("c") >= math.max(1, candMinShared))
+      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
+        Seq("doc_a"))
+      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
+        Seq("doc_b"))
+      .filter(col("c").cast("double") / least(col("na"), col("nb"))
+        >= candMinMatch))
+    val gatherRows =
+      if (surv.count() <= survivorGatherMaxPairs) {
+        val ids = surv.select(col("doc_a"))
+          .unionAll(surv.select(col("doc_b")))
+          .distinct().collect().map(_.getLong(0)).sorted.toSeq
+        pairRows(filter(col("ps"), x =>
+          array_contains(typedlit(ids), x.getField("doc_id"))))
+      } else allPairs
+    gatherRows
+      .select(keyCols :+ struct(col("p.a.ax").as("axa"), col("p.a.ay").as("aya"),
+        col("p.b.ax").as("axb"), col("p.b.ay").as("ayb")).as("co"): _*)
+      .join(surv.select(keys.map(col): _*), keys, "left_semi")
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(col("co")).as("corr"))
+      .join(surv, keys)
   }
 
   /** Candidate + RANSAC-verify stage of the verified affine-frame
@@ -5973,9 +5579,9 @@ object Multimodal {
     * Candidate shape (round 15): ONE groupBy(lm) builds per-code
     * posting lists — rows are distinct (doc, lm), so the list size
     * IS the code's distinct-doc df and the cap filters the posting
-    * row directly ([[dfCapKeep]]) — and the pair fan-out happens
-    * in-row (the [[peakLandmarkPairScores]] explode idiom). The
-    * former shape (applyDfCap's count-agg + semi-join back, then a
+    * row directly ([[Postings.dfCapKeep]]) — and the pair fan-out
+    * happens in-row ([[Postings.pairs]]). The former shape
+    * ([[Postings.capDf]]'s count-agg + semi-join back, then a
     * two-sided self-join on lm) re-shuffled the full anchored table
     * ~5x and was the round-14 growth artifact's one super-linear
     * entry (m186: per-doc wall x1.6 per corpus decade).
@@ -6003,10 +5609,6 @@ object Multimodal {
     require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
       "verifyMinFrac must be in [0, 1]")
     require(tolPx > 0.0, "tolPx must be > 0")
-    // AutoDf: pass 1's pair rows are two longs — solve at width 16
-    // (the corr payload only ever materializes for survivors)
-    val (cap, solvedCap) = resolveDfCap(
-      lms.select(col("doc_id"), col("lm")), maxDf, 16)
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     // anchor cloud per doc = its DISTINCT landmark anchors (a subset
     // of the detected peaks — every peak with a conditioned basis)
@@ -6014,78 +5616,8 @@ object Multimodal {
       .distinct()
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
-    // persisted: both passes explode from it, and it is posting-sized
-    // (one row per code), never pair-sized
-    val posted = Materialize.eager(lms.groupBy(col("lm"))
-      .agg(collect_list(struct(col("doc_id"), col("ax"), col("ay")))
-        .as("ps"))
-      .filter(size(col("ps")) >= 2 &&
-        dfCapKeep(lms.sparkSession, col("lm"), size(col("ps")), cap,
-          solvedCap)))
-    val ds = array_sort(col("ps"))
-    val pairRows = posted.select(
-        explode(flatten(transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") < col("p.b.doc_id"))
-    // pass 1: count-only — one posting row per (doc, code) ⇒ each
-    // shared code yields this pair exactly once: count(1) == the
-    // former countDistinct(lm). Fixed-width hash aggregation.
-    // Materialized (round 18): survivors are near-dup mass — small by
-    // construction — and the set is read three times below (threshold
-    // count, pass-2 semi-join, final stats join); the r17 shape
-    // recomputed the whole pass-1 aggregation for two of those.
-    val surv = Materialize.eager(pairRows
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, candMinShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .filter(col("c").cast("double") / least(col("na"), col("nb"))
-        >= candMinMatch))
-    // SURVIVOR-AWARE GATHER (round 18, guide §2.4 remove work
-    // outright): when pass 1 leaves only a handful of survivor PAIRS
-    // (the fixture/growth gates: m186 read 1.34x of r16 at n=500 from
-    // the unconditional re-explode), pass 2's explode is pre-filtered
-    // to the survivor DOCS' posting entries — the pair fan-out then
-    // covers only docs that can appear in a surviving pair, instead of
-    // re-exploding the whole posting table and semi-joining ~all of it
-    // away. The filter is a literal sorted id array probed per posting
-    // entry, so its cost is bounded by entries x 2*threshold
-    // comparisons; above the threshold the r17 full re-explode runs
-    // unchanged (the 50k-decade behavior the growth artifact prices).
-    // Row-identical either way: the per-pair semi-join below still
-    // gates exact survivor pairs, and dropping non-survivor docs'
-    // entries can drop no surviving pair's correspondence.
-    val gatherRows =
-      if (surv.count() <= survivorGatherMaxPairs) {
-        val ids = surv.select(col("doc_a"))
-          .unionAll(surv.select(col("doc_b")))
-          .distinct().collect().map(_.getLong(0)).sorted.toSeq
-        val kds = filter(ds, x =>
-          array_contains(typedlit(ids), x.getField("doc_id")))
-        posted.select(
-            explode(flatten(transform(kds, (x, i) =>
-              transform(slice(kds, i + lit(2),
-                  greatest(size(kds) - i - 1, lit(0))),
-                y => struct(x.as("a"), y.as("b")))))).as("p"))
-          .filter(col("p.a.doc_id") < col("p.b.doc_id"))
-      } else pairRows
-    // pass 2: correspondences for SURVIVORS only (semi-join keeps the
-    // collect_list state at near-dup mass; AQE broadcasts the small
-    // survivor side)
-    val cand = gatherRows
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        struct(col("p.a.ax").as("axa"), col("p.a.ay").as("aya"),
-          col("p.b.ax").as("axb"), col("p.b.ay").as("ayb")).as("co"))
-      .join(surv.select(col("doc_a"), col("doc_b")),
-        Seq("doc_a", "doc_b"), "left_semi")
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(collect_list(col("co")).as("corr"))
-      .join(surv, Seq("doc_a", "doc_b"))
+    val cand = verifiedCandidates(lms, nl, maxDf, candMinShared,
+      candMinMatch)
     val verify = affineCloudVerifyUdf(tolPx, verifyMinAligned)
     cand
       .join(clouds.select(col("doc_id").as("doc_a"),
@@ -6264,11 +5796,12 @@ object Multimodal {
       nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenAffineFrameOriented(
+    screenLandmarkIndex(
       Materialize.eager(
         imageAffineFrameLandmarksSqueezeFan(media, hyps, kTop, nNear,
           nBasis, qStep, smoothR, radius, minAvg)),
-      index, minMatch, minShared)
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex"))
 
   /** Screen an ingest batch against a pre-built (IDENTITY)
     * [[imageAffineFrameIndex]] with the m181 MIRROR readout on the
@@ -6283,55 +5816,12 @@ object Multimodal {
       nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenAffineFrameOriented(
+    screenLandmarkIndex(
       Materialize.eager(
         imageAffineFrameLandmarksChiral(media, kTop, nNear, nBasis,
           qStep, smoothR, radius, minAvg)),
-      index, minMatch, minShared)
-
-  /** Shared oriented-fan screen of the affine-frame family (squeeze
-    * fan m189 / chiral m190): per-(probe, orient) readout counts
-    * score against the identity index, any readout clearing the gate
-    * flags the probe. The fp_ver guard is the same contract as
-    * [[screenScaleIndex]]. */
-  private def screenAffineFrameOriented(lms: DataFrame,
-      index: DataFrame, minMatch: Double, minShared: Int): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"affine-frame index has no fp_ver column: it predates " +
-        s"fingerprint version $AffineFrameFpVersion — rebuild it " +
-        "with imageAffineFrameIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(AffineFrameFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"affine-frame index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $AffineFrameFpVersion — rebuild it with " +
-        "imageAffineFrameIndex before screening (cross-version " +
-        "landmarks never match)")
-    // every readout scores over the IDENTITY (orient 0) code count —
-    // the convention the m174 minMatch gate was calibrated on and the
-    // one orientedLandmarkPairScores and st125/st126 use: a
-    // hypothesis readout's own code count can differ from identity
-    // (quantizer-range dropouts), and a small per-orient nl inflates
-    // c/least(nl, nl_src) into false flags near the gate that the
-    // identity-count convention avoids
-    val nl0 = lms.filter(col("orient") === 0)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("orient"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, minShared))
-      .join(nl0, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    lms.select(col("doc_id")).distinct().join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex"))
 
   /** [[imageAffineFrameLandmarksSqueezeFan]] pooled per VIDEO
     * document (m191 — the de-squeeze fan at the frame sequence):
@@ -6489,70 +5979,8 @@ object Multimodal {
     val clouds = id0.select(col("doc_id"), col("ax"), col("ay"))
       .distinct().groupBy(col("doc_id"))
       .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
-    // the posting-list candidate shape of
-    // [[affineFramePairsVerifiedFrom]], asymmetric (the a-side is
-    // identity-only): fan rows are distinct per (doc, orient, lm),
-    // so the code's distinct-DOC df needs the in-row dedup before
-    // the cap predicate. Persisted (it replaced the former fan
-    // eager): both count and gather passes explode from it.
-    val posted = Materialize.eager(fan.groupBy(col("lm"))
-      .agg(collect_list(struct(col("doc_id"), col("orient"),
-        col("ax"), col("ay"))).as("ps"))
-      .filter(size(col("ps")) >= 2 &&
-        dfCapKeep(s, col("lm"),
-          size(array_distinct(transform(col("ps"),
-            x => x.getField("doc_id")))), maxDf)))
-    val ds = array_sort(col("ps"))
-    // a = the LOWER doc's identity codes (ds sorts by doc_id first,
-    // so the lower doc is always the x element)
-    val pairRows = posted.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") < col("p.b.doc_id") &&
-        col("p.a.orient") === 0)
-    // count-first, gather-later (round 17) — see
-    // [[affineFramePairsVerifiedFrom]] for the mechanism; the pair
-    // key here additionally carries the b-side orientation.
-    // Materialized + survivor-aware gather (round 18): same as the
-    // identity tier — survivors are near-dup mass, the set is read
-    // three times, and a small survivor set pre-filters the gather
-    // explode to survivor docs' entries.
-    val surv = Materialize.eager(pairRows
-      .select(col("p.a.doc_id").as("doc_a"),
-        col("p.b.doc_id").as("doc_b"), col("p.b.orient").as("orient"))
-      .groupBy(col("doc_a"), col("doc_b"), col("orient"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, candMinShared))
-      .join(nl.select(col("doc_id").as("doc_a"), col("nl").as("na")),
-        Seq("doc_a"))
-      .join(nl.select(col("doc_id").as("doc_b"), col("nl").as("nb")),
-        Seq("doc_b"))
-      .filter(col("c").cast("double") / least(col("na"), col("nb"))
-        >= candMinMatch))
-    val gatherRows =
-      if (surv.count() <= survivorGatherMaxPairs) {
-        val ids = surv.select(col("doc_a"))
-          .unionAll(surv.select(col("doc_b")))
-          .distinct().collect().map(_.getLong(0)).sorted.toSeq
-        val kds = filter(ds, x =>
-          array_contains(typedlit(ids), x.getField("doc_id")))
-        posted.select(explode(flatten(transform(kds, (x, i) =>
-            transform(slice(kds, i + lit(2),
-                greatest(size(kds) - i - 1, lit(0))),
-              y => struct(x.as("a"), y.as("b")))))).as("p"))
-          .filter(col("p.a.doc_id") < col("p.b.doc_id") &&
-            col("p.a.orient") === 0)
-      } else pairRows
-    val cand = gatherRows
-      .select(col("p.a.doc_id").as("doc_a"),
-        col("p.b.doc_id").as("doc_b"), col("p.b.orient").as("orient"),
-        struct(col("p.a.ax").as("axa"), col("p.a.ay").as("aya"),
-          col("p.b.ax").as("axb"), col("p.b.ay").as("ayb")).as("co"))
-      .join(surv.select(col("doc_a"), col("doc_b"), col("orient")),
-        Seq("doc_a", "doc_b", "orient"), "left_semi")
-      .groupBy(col("doc_a"), col("doc_b"), col("orient"))
-      .agg(collect_list(col("co")).as("corr"))
-      .join(surv, Seq("doc_a", "doc_b", "orient"))
+    val cand = verifiedCandidates(fan, nl, maxDf, candMinShared,
+      candMinMatch)
     val verId = affineCloudVerifyUdf(tolPx, verifyMinAligned, 1)
     val verMir = affineCloudVerifyUdf(tolPx, verifyMinAligned, -1)
     cand
@@ -6618,10 +6046,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
         qStep, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("ax"), col("ay"), col("doc_id"), col("nl"),
-        lit(AffineFrameFpVersion).as("fp_ver"))
+    landmarkIndex(lms, AffineFrameFpVersion, Seq("lm", "ax", "ay"))
   }
 
   /** Screen an ingest batch against a pre-built
@@ -6643,18 +6068,9 @@ object Multimodal {
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
       implicit s: SparkSession): DataFrame = {
     import s.implicits._
-    require(index.columns.contains("fp_ver") &&
-      index.columns.contains("ax") && index.columns.contains("ay"),
-      "verified screening needs an ANCHORED index (fp_ver + ax/ay " +
-        "columns) — build it with imageAffineFrameAnchorIndex")
-    val stale = index.filter(col("fp_ver") =!= lit(AffineFrameFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"affine-frame index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $AffineFrameFpVersion — rebuild it with " +
-        "imageAffineFrameAnchorIndex before screening (cross-version " +
-        "landmarks never match)")
+    Postings.requireStamp(index, Postings.Stamp(AffineFrameFpVersion,
+      "anchored affine-frame", "imageAffineFrameAnchorIndex"),
+      Seq("fp_ver", "ax", "ay"))
     val lms = Materialize.eager(
       imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
         qStep, smoothR, radius, minAvg))
@@ -6700,9 +6116,7 @@ object Multimodal {
       .filter(verify(col("corr"), col("cloud_a"), col("cloud_b"))
         >= verifyMinFrac)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(nl.select(col("doc_id")), dup)
   }
 
   /** AFFINE-whitened rot codes pooled per VIDEO document — the m169
@@ -6750,10 +6164,7 @@ object Multimodal {
       minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(videoScaleLandmarksCanonical(media,
       every, kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(CanonFpVersion).as("fp_ver"))
+    landmarkIndex(lms, CanonFpVersion)
   }
 
   /** Screen an ingest batch of videos against a pre-built
@@ -6764,11 +6175,11 @@ object Multimodal {
       nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
       minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoScaleLandmarksCanonical(media, every,
         kTop, nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, "videoCanonicalLandmarkIndex", minShared,
-      CanonFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(CanonFpVersion, "constellation", "videoCanonicalLandmarkIndex"))
 
   /** Persisted AFFINE video index — the m171 tier's incremental
     * member ([[AffineFpVersion]] via the shared whitened rot-code
@@ -6781,10 +6192,7 @@ object Multimodal {
       minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(videoAffineLandmarks(media, every,
       kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(AffineFpVersion).as("fp_ver"))
+    landmarkIndex(lms, AffineFpVersion)
   }
 
   /** Screen an ingest batch of videos against a pre-built
@@ -6794,11 +6202,11 @@ object Multimodal {
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoAffineLandmarks(media, every, kTop,
         nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, "videoAffineLandmarkIndex", minShared,
-      AffineFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(AffineFpVersion, "constellation", "videoAffineLandmarkIndex"))
 
   /** Video near-dup pairs under the FULL-AFFINE compound (m171) via
     * [[videoAffineLandmarks]]. */
@@ -6850,10 +6258,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageScaleLandmarksCanonical(media, kTop, nNear, qStepR, nAng,
         smoothR, radius, minAvg).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(CanonFpVersion).as("fp_ver"))
+    landmarkIndex(lms, CanonFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -6865,12 +6270,12 @@ object Multimodal {
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(
         imageScaleLandmarksCanonical(media, kTop, nNear, qStepR, nAng,
           smoothR, radius, minAvg).toDF()),
-      index, minMatch, "imageCanonicalLandmarkIndex", minShared,
-      CanonFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(CanonFpVersion, "constellation", "imageCanonicalLandmarkIndex"))
 
   /** [[imageScalePairs]] extended to ANISOTROPIC resize — the
     * aspect-squeeze class (m152): candidates bucket by quad code with
@@ -6905,45 +6310,13 @@ object Multimodal {
       hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0), kTop: Int = 16,
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "imageScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      imageScaleLandmarksAspect(media, hyps, kTop, nNear, qStepR,
-        nAng, smoothR, radius, minAvg))
-    // every readout scores over the IDENTITY (orient 0) code count —
-    // the convention the family's pair scorer
-    // (orientedLandmarkPairScores) uses and its gates were calibrated
-    // on: a readout's own code count can differ from identity
-    // (quantizer-range dropouts), and a small per-orient nl inflates
-    // c/least(nl, nl_src) into false flags near the gate
-    val nl0 = lms.filter(col("orient") === 0)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("orient"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, minShared))
-      .join(nl0, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    lms.select(col("doc_id")).distinct().join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      minShared: Int = 0)(implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        imageScaleLandmarksAspect(media, hyps, kTop, nNear, qStepR,
+          nAng, smoothR, radius, minAvg)),
+      index, minMatch, minShared,
+      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
 
   // ---- IMAGE: rotation-invariant constellations (ANY angle) --------
 
@@ -7105,10 +6478,7 @@ object Multimodal {
     val lms = Materialize.eager(
       imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
         radius, minAvg).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(RotScaleFpVersion).as("fp_ver"))
+    landmarkIndex(lms, RotScaleFpVersion)
   }
 
   /** Screen an ingest batch against a pre-built
@@ -7119,38 +6489,13 @@ object Multimodal {
       minMatch: Double = 0.2, kTop: Int = 16, nNear: Int = 8,
       qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
       radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"rot-constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $RotScaleFpVersion — rebuild it with " +
-        "imageRotScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(RotScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"rot-constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $RotScaleFpVersion — rebuild it with " +
-        "imageRotScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-        radius, minAvg).toDF())
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, minShared))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
+          radius, minAvg).toDF()),
+      index, minMatch, minShared,
+      Postings.Stamp(RotScaleFpVersion, "rot-constellation", "imageRotScaleLandmarkIndex"))
 
   /** Rotate-about-center (+ uniform scale) re-encode of any PNG
     * payload — the rotation tier's fixture transform: every output
@@ -7281,26 +6626,24 @@ object Multimodal {
       minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(videoScaleLandmarks(media, every, kTop,
       nNear, qStepR, nAng, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(ScaleFpVersion).as("fp_ver"))
+    landmarkIndex(lms, ScaleFpVersion)
   }
 
   /** Screen an ingest batch of videos against a pre-built
     * [[videoScaleLandmarkIndex]] — a cropped+rescaled re-upload of a
     * corpus master is caught with no corpus re-decode. Same contract
-    * as the image screen ([[screenScaleIndex]]). */
+    * as the image screen ([[screenLandmarkIndex]]). */
   def dedupAgainstVideoScaleIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.3, every: Int = 2, kTop: Int = 16,
       nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
       smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
       minShared: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoScaleLandmarks(media, every, kTop, nNear,
         qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, "videoScaleLandmarkIndex", minShared)
+      index, minMatch, minShared,
+      Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex"))
 
   /** ROTATION-invariant constellation landmarks pooled per VIDEO
     * document — the m147 pooling shape at the [[constellationCodesRot]]
@@ -7420,45 +6763,13 @@ object Multimodal {
       kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
       nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
       minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"constellation index has no fp_ver column: it predates " +
-        s"fingerprint version $ScaleFpVersion — rebuild it with " +
-        "videoScaleLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ScaleFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"constellation index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ScaleFpVersion — rebuild it with " +
-        "videoScaleLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      videoScaleLandmarksAspect(media, hyps, every, kTop, nNear,
-        qStepR, nAng, smoothR, radius, minAvg))
-    // every readout scores over the IDENTITY (orient 0) code count —
-    // the convention the family's pair scorer
-    // (orientedLandmarkPairScores) uses and its gates were calibrated
-    // on: a readout's own code count can differ from identity
-    // (quantizer-range dropouts), and a small per-orient nl inflates
-    // c/least(nl, nl_src) into false flags near the gate
-    val nl0 = lms.filter(col("orient") === 0)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm"))
-      .groupBy(col("doc_id"), col("orient"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= math.max(1, minShared))
-      .join(nl0, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    lms.select(col("doc_id")).distinct().join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        videoScaleLandmarksAspect(media, hyps, every, kTop, nNear,
+          qStepR, nAng, smoothR, radius, minAvg)),
+      index, minMatch, minShared,
+      Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex"))
 
   /** Anamorphic re-mux of any decodable video payload — x scaled by
     * `fx` per frame through the bilinear kernel ([[cropResizeRgb]]
@@ -7487,10 +6798,7 @@ object Multimodal {
       minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(videoRotScaleLandmarks(media, every,
       kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm"), col("doc_id"), col("nl"),
-        lit(RotScaleFpVersion).as("fp_ver"))
+    landmarkIndex(lms, RotScaleFpVersion)
   }
 
   /** Screen an ingest batch of videos against a pre-built
@@ -7503,11 +6811,11 @@ object Multimodal {
       nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
       minAvg: Int = 24, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    screenScaleIndex(
+    screenLandmarkIndex(
       Materialize.eager(videoRotScaleLandmarks(media, every, kTop,
         nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, "videoRotScaleLandmarkIndex", minShared,
-      RotScaleFpVersion)
+      index, minMatch, minShared,
+      Postings.Stamp(RotScaleFpVersion, "constellation", "videoRotScaleLandmarkIndex"))
 
   /** Rotate-about-center (+ uniform scale) re-mux of any decodable
     * video payload — the video rotation tier's fixture transform:
@@ -9380,44 +8688,9 @@ object Multimodal {
       implicit s: SparkSession): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
-    val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val chunked = hashed.select(col("doc_id"), col("frame_idx"), col("ph"),
-      posexplode(array((0 until 4).map(c =>
-        shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("doc_id", "frame_idx", "ph", "chunk", "ck")
-    // the cap filters BEFORE the posting-list aggregation (a left_semi
-    // against per-key df counts, the audioFingerprintPairs shape): a
-    // doc contributes exactly one row per (frame_idx, chunk), so df ==
-    // bucket size and the pair set is unchanged — but the hot
-    // black/intro-frame bucket is never materialized inside one
-    // collect_list task, which is the whole point of the cap at scale
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("ph"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(bit_count(col("p.a.ph").bitwiseXOR(col("p.b.ph"))) <= maxDist)
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("frame_idx"))
-      .distinct() // a pair can share several intact chunks of one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    videoChunkPairScores(
+      hashed.select(col("doc_id"), col("frame_idx"), col("ph")),
+      hashed, maxDist, minMatch, maxDf, multi = false, distinctDocs = false)
   }
 
   case class VideoFrameHash2(doc_id: Long, frame_idx: Int, ph: Long, phf: Long)
@@ -9482,41 +8755,9 @@ object Multimodal {
       implicit s: SparkSession): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val hashed = Materialize.eager(videoFramePHashDihedral(media, every).toDF())
-    val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val rows = hashed.select(col("doc_id"), col("frame_idx"),
-      explode(col("hs")).as("h"))
-    val chunked = rows.select(col("doc_id"), col("frame_idx"), col("h"),
-      posexplode(array((0 until 4).map(c =>
-        shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("doc_id", "frame_idx", "h", "chunk", "ck")
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id")) // orientation self-rows
-      .filter(bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))) <= maxDist)
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("frame_idx"))
-      .distinct() // several chunks/orientations can match one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    videoChunkPairScores(hashed.select(col("doc_id"), col("frame_idx"),
+        explode(col("hs")).as("h")),
+      hashed, maxDist, minMatch, maxDf, multi = true, distinctDocs = true)
   }
 
   /** [[videoNearDupPairs]] tolerant to HORIZONTAL MIRRORING — the
@@ -9536,45 +8777,47 @@ object Multimodal {
       implicit s: SparkSession): DataFrame = {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val hashed = Materialize.eager(videoFramePHashBoth(media, every).toDF())
-    val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val rows = hashed.select(col("doc_id"), col("frame_idx"), col("ph").as("h"))
-      .unionByName(hashed.select(col("doc_id"), col("frame_idx"),
-        col("phf").as("h")))
-    val chunked = rows.select(col("doc_id"), col("frame_idx"), col("h"),
-      posexplode(array((0 until 4).map(c =>
-        shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("doc_id", "frame_idx", "h", "chunk", "ck")
-    // pre-aggregation cap (the videoNearDupPairs shape); a doc now
-    // contributes up to TWO rows per (frame_idx, chunk) — halve the
-    // intended doc cap accordingly when tuning maxDf
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ck")),
-        Seq("frame_idx", "chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("frame_idx"), col("chunk"), col("ck"))
-      .agg(collect_list(struct(col("doc_id"), col("h"))).as("ds"))
+    // the cap counts ROWS: a doc contributes up to TWO rows per
+    // (frame_idx, chunk) — halve the intended doc cap when tuning maxDf
+    videoChunkPairScores(
+      hashed.select(col("doc_id"), col("frame_idx"), col("ph").as("h"))
+        .unionByName(hashed.select(col("doc_id"), col("frame_idx"),
+          col("phf").as("h"))),
+      hashed, maxDist, minMatch, maxDf, multi = true, distinctDocs = false)
+  }
+
+  /** Shared aligned-frame scorer of the video pHash tiers over
+    * (doc_id, frame_idx, h) rows: (frame_idx, 16-bit chunk) posting
+    * lists ([[Postings.chunks16]], pigeonhole-complete for <= 3 bits
+    * per frame) with the `maxDf` cap BEFORE the aggregation (the hot
+    * black/intro-frame bucket never materializes inside one
+    * collect_list task; `distinctDocs` counts docs rather than rows),
+    * one exact `bit_count` verify per candidate, frames counted once
+    * per pair, and matching frames over the smaller sampled-frame
+    * count of `hashed` (one row per sampled frame) >= `minMatch`.
+    * `multi` (several rows per doc and frame: orientations) drops
+    * same-doc pairs. */
+  private def videoChunkPairScores(rows: DataFrame, hashed: DataFrame,
+      maxDist: Int, minMatch: Double, maxDf: Int, multi: Boolean,
+      distinctDocs: Boolean): DataFrame = {
+    val h = rows.columns.last
+    val keys = Seq("frame_idx", "chunk", "ckey")
+    val pairs = Postings.capDf(Postings.chunks16(rows, h), keys, maxDf,
+        distinctDocs)
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("doc_id"), col(h))).as("ds"))
       .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = buckets.select(col("frame_idx"), explode(flatten(
-        transform(ds, (x, i) =>
-          transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-            y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .filter(col("p.a.doc_id") =!= col("p.b.doc_id")) // orientation self-rows
-      .filter(bit_count(col("p.a.h").bitwiseXOR(col("p.b.h"))) <= maxDist)
+      .select(col("frame_idx"), explode(Postings.pairs(col("ds"))).as("p"))
+    val counts = (if (multi) pairs.filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
+        else pairs)
+      .filter(bit_count(col(s"p.a.$h").bitwiseXOR(col(s"p.b.$h"))) <= maxDist)
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         col("frame_idx"))
       .distinct() // several chunks/orientations can match one frame
-    pairs.groupBy(col("doc_a"), col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("c"))
-      .join(nf.select(col("doc_id").as("doc_a"), col("nf").as("na")), Seq("doc_a"))
-      .join(nf.select(col("doc_id").as("doc_b"), col("nf").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
+    Postings.overSmaller(counts,
+      hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf")), minMatch)
   }
 
   case class VideoLandmark(doc_id: Long, lm_a: Long, lm_b: Long)
@@ -9719,28 +8962,16 @@ object Multimodal {
     require(maxDist < 8, "8 x 16-bit chunks guarantee recall only for maxDist <= 7")
     val lms = Materialize.eager(videoLandmarks(media, every).toDF())
     val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val chunked = lms.select(col("doc_id"), col("lm_a"), col("lm_b"),
-      posexplode(array(
-        (0 until 4).map(c =>
-          shiftright(col("lm_a"), c * 16).bitwiseAND(lit(0xffffL))) ++
-        (0 until 4).map(c =>
-          shiftright(col("lm_b"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("doc_id", "lm_a", "lm_b", "chunk", "ck")
-    val capped = if (maxDf <= 0) chunked
-      else chunked.join(
-        chunked.groupBy(col("chunk"), col("ck")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("chunk"), col("ck")),
-        Seq("chunk", "ck"), "left_semi")
-    val buckets = capped.groupBy(col("chunk"), col("ck"))
+    val chunked = Postings.chunks16(
+      lms.select(col("doc_id"), col("lm_a"), col("lm_b")), "lm_a", "lm_b")
+    val buckets = Postings.capDf(chunked, Seq("chunk", "ckey"), maxDf)
+      .groupBy(col("chunk"), col("ckey"))
       .agg(collect_list(struct(col("doc_id"), col("lm_a"), col("lm_b"))).as("ds"))
       .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
     // a doc can hold several landmarks in one bucket (unlike the
     // one-entry-per-doc siblings), so expansion filters same-doc pairs;
     // sorting by (doc_id, ...) still guarantees doc_a < doc_b
-    val pairs = buckets.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+    val pairs = buckets.select(explode(Postings.pairs(col("ds"))).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .filter(bit_count(col("p.a.lm_a").bitwiseXOR(col("p.b.lm_a"))) +
         bit_count(col("p.a.lm_b").bitwiseXOR(col("p.b.lm_b"))) <= maxDist)
@@ -9762,39 +8993,9 @@ object Multimodal {
   def videoLandmarkPairs(media: DataFrame, every: Int = 2,
       minMatch: Double = 0.6, maxDf: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    videoLandmarkPairScoresExact(
+    landmarkPairScores(
       Materialize.eager(videoLandmarks(media, every).toDF()),
-      minMatch, maxDf)
-
-  /** Shared exact-landmark posting-list scorer for the video landmark
-    * family ((lm_a, lm_b) equality buckets, distinct-pair count over
-    * the smaller doc's landmark set, `maxDf` hot-bucket cap before
-    * pair expansion — the scale guard). */
-  private def videoLandmarkPairScoresExact(lms: DataFrame,
-      minMatch: Double, maxDf: Int): DataFrame = {
-    val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm_a"), col("lm_b")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm_a"), col("lm_b")),
-        Seq("lm_a", "lm_b"), "left_semi")
-    val kept = bucketed.groupBy(col("lm_a"), col("lm_b"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("nl").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("nl").as("nb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(col("c").cast("double") / least(col("na"), col("nb")), 6)
-          .as("match_frac"))
-      .filter(col("match_frac") >= minMatch)
-  }
+      minMatch, maxDf, Seq("lm_a", "lm_b"))
 
   /** SKIP-TOLERANT video landmarks — the FRAME-RATE-CONVERSION tier's
     * kernel: a naive fps converter remaps base frame indexes as
@@ -9858,9 +9059,9 @@ object Multimodal {
   def videoLandmarkPairsSkip(media: DataFrame, minMatch: Double = 0.6,
       gap: Int = 2, every: Int = 1, maxDf: Int = 0)(
       implicit s: SparkSession): DataFrame =
-    videoLandmarkPairScoresExact(
+    landmarkPairScores(
       Materialize.eager(videoLandmarksSkip(media, gap, every).toDF()),
-      minMatch, maxDf)
+      minMatch, maxDf, Seq("lm_a", "lm_b"))
 
   case class VideoLandmarkW(doc_id: Long, win: Int, lm_a: Long, lm_b: Long)
 
@@ -9934,20 +9135,12 @@ object Multimodal {
       videoLandmarksCrop(media, every, extended).toDF())
     val sizes = lms.groupBy(col("doc_id"), col("win"))
       .agg(count(lit(1)).as("nl"))
-    val bucketed =
-      if (maxDf <= 0) lms
-      else lms.join(
-        lms.groupBy(col("lm_a"), col("lm_b"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("lm_a"), col("lm_b")),
-        Seq("lm_a", "lm_b"), "left_semi")
-    val kept = bucketed.groupBy(col("lm_a"), col("lm_b"))
+    val pairs = Postings.capDf(lms, Seq("lm_a", "lm_b"), maxDf,
+        distinctDocs = true)
+      .groupBy(col("lm_a"), col("lm_b"))
       .agg(collect_list(struct(col("doc_id"), col("win"))).as("ds"))
       .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
+      .select(explode(Postings.pairs(col("ds"))).as("p"))
       .filter(col("p.a.doc_id") =!= col("p.b.doc_id"))
       .filter(col("p.a.win") === 0 || col("p.b.win") === 0)
     pairs.groupBy(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
@@ -10008,36 +9201,13 @@ object Multimodal {
     * the parameters the index was built with. */
   def dedupAgainstVideoCropIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, every: Int = 2)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"video crop index has no fp_ver column: it predates fingerprint " +
-        s"version $VideoCropFpVersion — rebuild it with " +
-        "videoCropLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(VideoCropFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"video crop index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $VideoCropFpVersion — rebuild it with " +
-        "videoCropLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(videoLandmarksCrop(media, every).toDF())
-      .filter(col("win") === 0)
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm_a"), col("lm_b"), col("win").as("src_win"),
-          col("doc_id").as("src"), col("nl").as("nl_src")),
-        Seq("lm_a", "lm_b"))
-      .groupBy(col("doc_id"), col("src"), col("src_win"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(videoLandmarksCrop(media, every).toDF())
+        .filter(col("win") === 0),
+      index, minMatch, 0,
+      Postings.Stamp(VideoCropFpVersion, "video crop", "videoCropLandmarkIndex"),
+      Seq("lm_a", "lm_b"), per = Seq("win"))
 
   /** Version stamp for the SKIP-LANDMARK video family
     * ([[videoLandmarksSkip]] — run collapse, gap-pair layout):
@@ -10061,10 +9231,7 @@ object Multimodal {
       every: Int = 1)(implicit s: SparkSession): DataFrame = {
     val lms = Materialize.eager(
       videoLandmarksSkip(media, gap, every).toDF())
-    lms.join(lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
-        Seq("doc_id"))
-      .select(col("lm_a"), col("lm_b"), col("doc_id"), col("nl"),
-        lit(VideoSkipFpVersion).as("fp_ver"))
+    landmarkIndex(lms, VideoSkipFpVersion, Seq("lm_a", "lm_b"))
   }
 
   /** Screen an ingest batch against a pre-built
@@ -10079,36 +9246,13 @@ object Multimodal {
     * built with. */
   def dedupAgainstVideoSkipIndex(media: DataFrame, index: DataFrame,
       minMatch: Double = 0.6, gap: Int = 2, every: Int = 1)(
-      implicit s: SparkSession): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"video skip index has no fp_ver column: it predates fingerprint " +
-        s"version $VideoSkipFpVersion — rebuild it with " +
-        "videoSkipLandmarkIndex before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(VideoSkipFpVersion))
-      .limit(1).collect()
-    require(stale.isEmpty,
-      s"video skip index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $VideoSkipFpVersion — rebuild it with " +
-        "videoSkipLandmarkIndex before screening (cross-version " +
-        "landmarks never match)")
-    val lms = Materialize.eager(
-      videoLandmarksSkip(media, gap, every).toDF())
-    val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val dup = lms.join(
-        index.select(col("lm_a"), col("lm_b"), col("doc_id").as("src"),
-          col("nl").as("nl_src")),
-        Seq("lm_a", "lm_b"))
-      .groupBy(col("doc_id"), col("src"), col("nl_src"))
-      .agg(count(lit(1)).as("c"))
-      .join(nl, Seq("doc_id"))
-      .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= minMatch)
-      .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nl.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
-  }
+      implicit s: SparkSession): DataFrame =
+    screenLandmarkIndex(
+      Materialize.eager(
+        videoLandmarksSkip(media, gap, every).toDF()),
+      index, minMatch, 0,
+      Postings.Stamp(VideoSkipFpVersion, "video skip", "videoSkipLandmarkIndex"),
+      Seq("lm_a", "lm_b"))
 
   /** Persisted video index for incremental dedup — the t69/s56/m85/m86
     * contract at the VIDEO tier, completing the incremental-index
@@ -10123,12 +9267,10 @@ object Multimodal {
       implicit s: SparkSession): DataFrame = {
     val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
     val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    hashed.join(nf, Seq("doc_id"))
-      .select(col("doc_id"), col("frame_idx"), col("ph"), col("nf"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("frame_idx"), col("pos").as("chunk"),
-        col("col").as("ckey"), col("doc_id"), col("ph"), col("nf"))
+    Postings.chunks16(hashed.join(nf, Seq("doc_id"))
+        .select(col("doc_id"), col("frame_idx"), col("ph"), col("nf")), "ph")
+      .select(col("frame_idx"), col("chunk"), col("ckey"), col("doc_id"),
+        col("ph"), col("nf"))
   }
 
   /** Screen an ingest batch of videos against a pre-built
@@ -10153,23 +9295,13 @@ object Multimodal {
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
     val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-    val chunks = hashed.select(col("doc_id"), col("frame_idx"), col("ph"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .select(col("doc_id"), col("frame_idx"), col("ph"),
-        col("pos").as("chunk"), col("col").as("ckey"))
-    val probed = if (maxDf <= 0) index
-      else index.join(
-        index.groupBy(col("frame_idx"), col("chunk"), col("ckey"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf)
-          .select(col("frame_idx"), col("chunk"), col("ckey")),
-        Seq("frame_idx", "chunk", "ckey"), "left_semi")
-    val dup = chunks.join(
-        probed.select(col("frame_idx"), col("chunk"), col("ckey"),
+    val keys = Seq("frame_idx", "chunk", "ckey")
+    val dup = Postings.chunks16(
+        hashed.select(col("doc_id"), col("frame_idx"), col("ph")), "ph").join(
+        Postings.capDf(index, keys, maxDf).select(col("frame_idx"), col("chunk"), col("ckey"),
           col("doc_id").as("src"), col("ph").as("cph"),
           col("nf").as("nf_src")),
-        Seq("frame_idx", "chunk", "ckey"))
+        keys)
       .dropDuplicates("doc_id", "frame_idx", "src")
       .filter(bit_count(col("ph").bitwiseXOR(col("cph"))) <= maxDist)
       .groupBy(col("doc_id"), col("src"), col("nf_src"))
@@ -10178,9 +9310,7 @@ object Multimodal {
       .filter(col("c").cast("double") / least(col("nf"), col("nf_src"))
         >= minMatch)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    nf.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(nf.select(col("doc_id")), dup)
   }
 
   /** JOINT audio+video near-dup verdict over a video corpus — the

@@ -406,7 +406,7 @@ object Similarity {
     * tables, generated from posting lists: ONE pass keys every vector
     * with its `tables` bucket ids (posexplode), one groupBy builds the
     * (table, bucket) member lists, and each sorted list expands to its
-    * ordered pairs — the `TextDedup.pairCounts` shape. Two shuffles
+    * ordered pairs ([[Postings.pairs]]). Two shuffles
     * total for all tables, versus `tables` hash joins that each
     * re-hash the corpus; per-bucket work is |bucket|², which the
     * caller bounds by deriving nBits from the corpus size. */
@@ -418,16 +418,8 @@ object Similarity {
     val kept = keyed.groupBy(col("tbl"), col("bucket"))
       .agg(collect_list(col("vec_id")).as("ds"))
       .filter(size(col("ds")) >= 2)
-    // bind the SORTED list once as a lambda variable (the wordShingles
-    // trick): HOF bodies are interpreted, so a bare array_sort subtree
-    // inside the pair lambda would re-sort the posting list per element
-    val pairs = element_at(transform(array(array_sort(col("ds"))), { sds =>
-      flatten(transform(sds, (x, i) =>
-        transform(slice(sds, i + lit(2), greatest(size(sds) - i - 1, lit(0))),
-          y => struct(x.as("id_a"), y.as("id_b")))))
-    }), 1)
-    kept.select(explode(pairs).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+    kept.select(explode(Postings.pairs(col("ds"))).as("p"))
+      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
       // a duplicated vec_id puts equal ids adjacent in the sorted list;
       // the old strict `x.vec_id < y.vec_id` join never emitted (a,a)
       // self-pairs, so neither do we
@@ -526,9 +518,7 @@ object Similarity {
       .filter(round(dotProduct(col("v"), col("cv")) / (col("nrm") * col("cn")), 6)
         >= threshold)
       .groupBy(col("vec_id")).agg(min(col("src")).as("dup_src"))
-    probes.select(col("vec_id")).join(dup, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(probes.select(col("vec_id")), dup)
   }
 
   /** SemDeDup-style semantic dedup: coarse-cluster the corpus with the

@@ -1000,9 +1000,7 @@ object StreamingNearDup {
       .filter(col("ds").isNotNull)
       .select(col("doc_id"), explode(col("ds")).as("pd"))
       .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
-    val chunked = rows.select(col("doc_id"), col("pk"), col("d"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("d"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(rows, "d")
       .as[(Long, Int, Long, Int, Long)]
     chunked.groupByKey { case (_, _, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], PeakDescHits](
@@ -1363,9 +1361,7 @@ object StreamingNearDup {
     val rows = hashed.select(col("doc_id"),
         posexplode(col("hs")))
       .select(col("doc_id"), col("pos").as("orient"), col("col").as("h"))
-    val chunked = rows.select(col("doc_id"), col("orient"), col("h"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(rows, "h")
       .as[(Long, Int, Long, Int, Long)]
     chunked.groupByKey { case (_, _, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], ChunkVerdictO](
@@ -1397,9 +1393,7 @@ object StreamingNearDup {
     val rows = hashed.select(col("doc_id"),
         posexplode(col("hs")))
       .select(col("doc_id"), col("pos").as("orient"), col("col").as("h"))
-    val chunked = rows.select(col("doc_id"), col("orient"), col("h"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(rows, "h")
       .as[(Long, Int, Long, Int, Long)]
     chunked.groupByKey { case (_, _, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], ChunkVerdictO](
@@ -1445,9 +1439,7 @@ object StreamingNearDup {
     val hashed = media.select(col(idCol).cast("long").as("doc_id"),
         Multimodal.pHashUdf(col(payloadCol)).as("ph"))
       .filter(col("ph").isNotNull)
-    val chunked = hashed.select(col("doc_id"), col("ph"), posexplode(
-        array((0 until 4).map(c =>
-          shiftright(col("ph"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(hashed, "ph")
       .as[(Long, Long, Int, Long)]
     chunked.groupByKey { case (_, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], ChunkVerdict](
@@ -1494,9 +1486,7 @@ object StreamingNearDup {
       .filter(col("hs").isNotNull)
     val rows = hashed.select(col("doc_id"), explode(col("hs")).as("wh"))
       .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h"))
-    val chunked = rows.select(col("doc_id"), col("win"), col("h"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(rows, "h")
       .as[(Long, Int, Long, Int, Long)]
     chunked.groupByKey { case (_, _, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], CropChunkVerdict](
@@ -1543,9 +1533,7 @@ object StreamingNearDup {
         col("ph").as("h"))
       .unionByName(hashed.select(col("doc_id"), lit(1).as("orient"),
         col("phf").as("h")))
-    val chunked = rows.select(col("doc_id"), col("orient"), col("h"),
-        posexplode(array((0 until 4).map(c =>
-          shiftright(col("h"), c * 16).bitwiseAND(lit(0xffffL))): _*)))
+    val chunked = Postings.chunks16(rows, "h")
       .as[(Long, Int, Long, Int, Long)]
     chunked.groupByKey { case (_, _, _, chunk, key) => (chunk, key) }
       .flatMapGroupsWithState[List[(Long, Long)], ChunkVerdictO](

@@ -62,53 +62,24 @@ object TextDedup {
         explode(array_distinct(transform(wordShingles(col(textCol), k),
           s => xxhash64(s)))).as("shingle"))
 
-  /** Shared-shingle pair counts from posting lists: group the inverted
-    * index by shingle, expand each sorted posting list into its ordered
-    * pairs, count per pair. One shuffle to build postings + one to count
-    * pairs — no join build over every posting (the self-join alternative
-    * hashes the full index and squares hot shingles inside the probe).
-    *
-    * `maxDf` (0 = uncapped) drops shingles appearing in more than that
-    * many documents BEFORE pair expansion — the document-frequency cap
-    * that bounds worst-case pair blowup at 100 TB (a shingle shared by
-    * m docs emits m(m-1)/2 pairs; df-capping makes that m ≤ maxDf while
-    * barely moving Jaccard for genuinely-near-dup pairs, which share
-    * plenty of rare shingles too). */
-  private def pairCounts(sh: DataFrame, maxDf: Int): DataFrame = {
-    // df-cap BEFORE collect_list: count document frequency (map-side
-    // combinable), drop hot shingles, THEN build posting lists — a
-    // stop-word-grade shingle never materializes its giant array in a
-    // single aggregation row.
-    val indexed =
-      if (maxDf <= 0) sh
-      else sh.join(
-        sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select(col("shingle")),
-        Seq("shingle"), "left_semi")
-    val kept = indexed.groupBy(col("shingle"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    val pairs = kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-    pairs.groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("c"))
-  }
-
   /** Exact n-gram Jaccard near-dup pairs via inverted-index posting
     * lists (shuffle on shingle, never an all-pairs cross product).
     * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b and
-    * jaccard >= threshold.
+    * jaccard >= threshold. Pair counts come from the shingle posting
+    * lists ([[Postings.pairCounts]]): one shuffle to build postings and
+    * one to count pairs, no join build over every posting.
     *
-    * Scale note: at 100 TB, pass `maxDf` to cap hot-shingle pair blowup,
-    * or use `minHashLshPairs` (banded, constant work per doc) as the
-    * scale path. */
+    * Scale note: `maxDf` (0 = uncapped) drops shingles held by more
+    * than that many docs BEFORE pair expansion — a shingle shared by m
+    * docs emits m(m-1)/2 pairs, while genuinely-near-dup pairs share
+    * plenty of rare shingles too. At 100 TB pass it, or use
+    * `minHashLshPairs` (banded, constant work per doc) as the scale
+    * path. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, k: Int = 3, maxDf: Int = 0): DataFrame = {
     val sh = shingleHashIndex(docs, idCol, textCol, k)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    pairCounts(sh, maxDf)
+    Postings.pairCounts(sh, Seq("shingle"), maxDf)
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
@@ -301,9 +272,7 @@ object TextDedup {
       .dropDuplicates("doc_id", "src")
       .filter(agree >= math.ceil(estThreshold * numHashes).toInt)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    sigs.select(col("doc_id")).join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(sigs.select(col("doc_id")), dup)
   }
 
   /** Exact Jaccard restricted to a candidate pair set: shingle postings
@@ -322,7 +291,7 @@ object TextDedup {
       col(idCol) === col("_cand_id"), "left_semi")
     val sh = shingleHashIndex(docsSub, idCol, textCol, k)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    pairCounts(sh, maxDf = 0)
+    Postings.pairCounts(sh, Seq("shingle"), maxDf = 0)
       .join(cand, Seq("doc_a", "doc_b"), "left_semi")
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
@@ -934,9 +903,9 @@ object TextDedup {
       window: Int = 4, minTokens: Int = 4, minShared: Int = 2,
       maxDf: Int = 0, nibbles: Int = 1)(
       implicit s: SparkSession): DataFrame =
-    chunkOverlapPairs(
+    overlapPairs(
       cdcChunks(docs, idCol, textCol, window, minTokens, nibbles).toDF(),
-      minShared, maxDf)
+      "ch", minShared, maxDf)
 
   /** [[cdcOverlapPairs]] over BOUNDED chunks ([[cdcChunksBounded]]) —
     * the production pairing: same posting-list kernel, chunk
@@ -947,37 +916,24 @@ object TextDedup {
       minShared: Int = 2, maxDf: Int = 0, nibbles: Int = 1,
       minChunk: Int = 8, maxChunk: Int = 64)(
       implicit s: SparkSession): DataFrame =
-    chunkOverlapPairs(
+    overlapPairs(
       cdcChunksBounded(docs, idCol, textCol, window, minTokens, nibbles,
         minChunk, maxChunk).toDF(),
-      minShared, maxDf)
+      "ch", minShared, maxDf)
 
-  /** Shared pairing kernel for the CDC chunk families: distinct
-    * (doc, chunk-hash) sets → per-hash posting lists (distinct-doc
-    * `maxDf` cap BEFORE aggregation, the family's skew guard) →
-    * ordered pair expansion → shared DISTINCT chunk count >=
-    * `minShared`. */
-  private def chunkOverlapPairs(chunks: DataFrame, minShared: Int,
-      maxDf: Int): DataFrame = {
-    val cs = Materialize.eager(
-      chunks.select(col("doc_id"), col("ch")).distinct())
-    val capped = if (maxDf <= 0) cs
-      else cs.join(
-        cs.groupBy(col("ch"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("ch")),
-        Seq("ch"), "left_semi")
-    val kept = capped.groupBy(col("ch"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
+  /** Shared pairing kernel of the CDC chunk and winnowing families:
+    * distinct (doc, `key`) sets (materialized once) → per-key posting
+    * lists with the distinct-doc `maxDf` cap BEFORE aggregation (the
+    * families' skew guard against corpus boilerplate) → ordered pair
+    * expansion → shared DISTINCT key count `n_shared` >= `minShared`
+    * ([[Postings.pairCounts]]). */
+  private def overlapPairs(rows: DataFrame, key: String, minShared: Int,
+      maxDf: Int): DataFrame =
+    Postings.pairCounts(
+        Materialize.eager(rows.select(col("doc_id"), col(key)).distinct()),
+        Seq(key), maxDf, distinctDocs = true, as = "n_shared")
       .filter(col("n_shared") >= minShared)
-  }
+
 
   /** Version stamp for the winnowing fingerprint function
     * ([[winnowFingerprints]] — gram hash, window-min selection, tie
@@ -1023,7 +979,8 @@ object TextDedup {
       Materialize.eager(
         winnowFingerprints(probes, idCol, textCol, k, w).toDF()
           .select(col("doc_id"), col("fp")).distinct()),
-      index, "fp", minShared, WinnowFpVersion, "winnowIndex")
+      index, "fp", minShared,
+      Postings.Stamp(WinnowFpVersion, "winnow", "winnowIndex"))
 
   /** Version stamp for the CDC chunk function ([[cdcChunks]] /
     * [[cdcChunksBounded]] — window hash, boundary predicate, chunk
@@ -1089,7 +1046,8 @@ object TextDedup {
             if (maxChunk > 0) maxChunk else Int.MaxValue)
         else cdcChunks(probes, idCol, textCol, window, minTokens, nibbles))
           .toDF().select(col("doc_id"), col("ch")).distinct()),
-      index, "ch", minShared, CdcFpVersion, "cdcChunkIndex")
+      index, "ch", minShared,
+      Postings.Stamp(CdcFpVersion, "CDC", "cdcChunkIndex"))
   }
 
   /** Shared screen kernel for the fingerprint-set indexes
@@ -1098,26 +1056,16 @@ object TextDedup {
     * runs but matches NOTHING, the silent-miss failure mode), then
     * probe-fps x index equi-join on `keyCol`, shared-distinct count
     * >= minShared, dup_src = lowest matching corpus doc. */
-  private def screenAgainstFpIndex(probeFps: DataFrame, index: DataFrame,
-      keyCol: String, minShared: Int, ver: Int, builder: String): DataFrame = {
-    require(index.columns.contains("fp_ver"),
-      s"index has no fp_ver column: it predates fingerprint version " +
-        s"$ver — rebuild it with $builder before screening")
-    val stale = index.filter(col("fp_ver") =!= lit(ver)).limit(1).collect()
-    require(stale.isEmpty,
-      s"index built by fingerprint version " +
-        s"${stale.headOption.map(_.getAs[Any]("fp_ver")).orNull}, " +
-        s"current is $ver — rebuild it with $builder before screening " +
-        "(cross-version fingerprints never match)")
+  private def screenAgainstFpIndex(fps: => DataFrame, index: DataFrame,
+      keyCol: String, minShared: Int, stamp: Postings.Stamp): DataFrame = {
+    Postings.requireStamp(index, stamp)
+    val probeFps = fps
     val dup = probeFps.join(
         index.select(col(keyCol), col("doc_id").as("src")), Seq(keyCol))
       .groupBy(col("doc_id"), col("src")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= minShared)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
-    probeFps.select(col("doc_id")).distinct()
-      .join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_src").isNull.as("kept"),
-        col("dup_src"))
+    Postings.verdicts(probeFps.select(col("doc_id")).distinct(), dup)
   }
 
   /** Document overlap pairs from winnowing fingerprints: posting
@@ -1129,25 +1077,7 @@ object TextDedup {
     * suppresses single common-phrase hits. */
   def winnowOverlapPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5, minShared: Int = 3, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    val fps = Materialize.eager(
-      winnowFingerprints(docs, idCol, textCol, k, w).toDF()
-        .select(col("doc_id"), col("fp")).distinct())
-    val capped = if (maxDf <= 0) fps
-      else fps.join(
-        fps.groupBy(col("fp"))
-          .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") <= maxDf).select(col("fp")),
-        Seq("fp"), "left_semi")
-    val kept = capped.groupBy(col("fp"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) >= 2)
-    val ds = array_sort(col("ds"))
-    kept.select(explode(flatten(transform(ds, (x, i) =>
-        transform(slice(ds, i + lit(2), greatest(size(ds) - i - 1, lit(0))),
-          y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
+      implicit s: SparkSession): DataFrame =
+    overlapPairs(winnowFingerprints(docs, idCol, textCol, k, w).toDF(),
+      "fp", minShared, maxDf)
 }

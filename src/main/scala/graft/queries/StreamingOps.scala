@@ -2917,7 +2917,7 @@ object StreamingOps extends QueryPack {
     }),
 
     // TEXTURED auto-cap gate (m194 — round-17: the 50k textured
-    // acceptance, which lived only in DiagM186 logs, scaled into a
+    // acceptance, which lived only in one-off tool logs, scaled into a
     // standing suite pin on the photo-world fixture class). Same
     // composition as m193 but over the lossy-JPEG textured corpus,
     // solved at width 16 — the verified tier's count-first candidate

@@ -1,37 +1,72 @@
 package graft.tools
 import java.util.regex.Matcher
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 
-/** Executed plans of named `SparkEntry` queries at sf0.01, for diffing a
+/** Executed plans of `SparkEntry` queries at sf0.01, for diffing a
   * refactor's plans against its parent's. Tokens that change from one
   * run of the same commit to the next are masked, so two runs print
-  * byte-identical text: expression ids, plan ids, lambda class names,
-  * object hashes and temp-dir names.
+  * byte-identical text: expression ids, plan ids, lambda class and
+  * variable names, object hashes, temp-dir names and adaptive stage and
+  * codegen ids. One variation is left: Spark numbers the groups of a
+  * multi-`countDistinct` aggregate (`Expand ... gid`) in an order that
+  * can change from run to run.
   *
-  * Usage: `sbt "runMain graft.tools.PlanDump st62_… st63_…"`. */
-object PlanDump {
+  * Each query prints a `===== name =====` header, an `exchanges=N` line
+  * (shuffle and broadcast exchanges of the final plan, subqueries
+  * included) and the plan. A query that throws prints `FAILED: <message>`
+  * under its header and the dump goes on.
+  *
+  * Usage: `sbt "runMain graft.tools.PlanDump"` dumps every query in name
+  * order; `sbt "runMain graft.tools.PlanDump st6,m18"` dumps the queries
+  * whose names contain one of the comma-separated substrings, like
+  * `graft.Verify`'s filter. */
+object PlanDump extends AdaptiveSparkPlanHelper {
   private val runSpecific = Seq(
     """#\d+""" -> "#",
     """plan_id=\d+""" -> "plan_id=",
     """\$\$Lambda(\$\d+)?/0x[0-9a-f]+""" -> Matcher.quoteReplacement("$$Lambda"),
     """@[0-9a-f]+\b""" -> "@",
-    """(graft-q-[A-Za-z-]*[A-Za-z])\d+""" -> "$1")
+    """(graft-[A-Za-z0-9-]*[A-Za-z])\d+""" -> "$1",
+    // lambda variables are numbered from a JVM-wide counter, so every
+    // lambda an earlier query built shifts the names in later plans
+    """(lambda \w+?)_\d+""" -> "$1_",
+    // query-stage and whole-stage-codegen ids follow stage completion
+    // order when a plan was already executed adaptively
+    """(QueryStage) \d+""" -> "$1",
+    """\*\(\d+\)""" -> "*")
 
   def normalize(plan: String): String =
     runSpecific.foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
 
+  private def exchanges(plan: SparkPlan): Int =
+    collectWithSubqueries(plan) { case e: Exchange => e }.size
+
   def main(args: Array[String]): Unit = {
     val sf = "/root/testdata/sf0.01"
+    val keep: String => Boolean = args.headOption match {
+      case Some(f) => val pats = f.split(","); name => pats.exists(name.contains)
+      case None => _ => true
+    }
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    for (n <- args) {
+    graft.LogNoise.muteUnpersistWarning()
+    for ((n, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1) if keep(n)) {
       println(s"===== $n =====")
-      val df = graft.SparkEntry.queries(n)(spark, sf)
-      df.write.format("noop").mode("overwrite").save()
-      println(normalize(df.queryExecution.executedPlan.toString))
+      try graft.operators.Materialize.scoped {
+        val df = fn(spark, sf)
+        df.write.format("noop").mode("overwrite").save()
+        val plan = df.queryExecution.executedPlan
+        println(s"exchanges=${exchanges(plan)}")
+        println(normalize(plan.toString))
+      } catch { case e: Throwable =>
+        println(s"FAILED: ${normalize(String.valueOf(e.getMessage))}")
+      }
     }
     spark.stop()
   }

@@ -219,6 +219,90 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.dedupAgainstAudioIndex(media,
         index.withColumn("fp_ver", lit(1)))
     }
+
+    // every stamped screen, table-driven: an unstamped index and a
+    // wrong-version one both throw before any probe decode, naming the
+    // builder in a rebuild instruction. The probe batches are empty —
+    // the gate must fire on the index alone.
+    import sp.implicits._
+    val noMedia = Seq.empty[(Long, Array[Byte])].toDF("doc_id", "payload")
+    val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val M = Multimodal
+    val screens: Seq[(String, String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("dedupAgainstAudioIndex", "audioCodeIndex",
+        M.dedupAgainstAudioIndex(noMedia, _)),
+      ("dedupAgainstAudioSpectralIndex", "audioSpectralCodeIndex",
+        M.dedupAgainstAudioSpectralIndex(noMedia, _)),
+      ("dedupAgainstAudioOnsetIndex", "audioOnsetLandmarkIndex",
+        M.dedupAgainstAudioOnsetIndex(noMedia, _)),
+      ("dedupAgainstAudioIntervalIndex", "audioIntervalLandmarkIndex",
+        M.dedupAgainstAudioIntervalIndex(noMedia, _)),
+      ("dedupAgainstAudioChromaIndex", "audioChromaLandmarkIndex",
+        M.dedupAgainstAudioChromaIndex(noMedia, _)),
+      ("dedupAgainstPHashIndex", "pHashChunkIndex",
+        M.dedupAgainstPHashIndex(noMedia, _)),
+      ("dedupAgainstPHashIndexDihedral", "pHashChunkIndex",
+        M.dedupAgainstPHashIndexDihedral(noMedia, _)),
+      ("dedupAgainstPHashCropIndex", "pHashCropWindowIndex",
+        M.dedupAgainstPHashCropIndex(noMedia, _)),
+      ("dedupAgainstImagePeakLossyIndex", "imagePeakLossyIndex",
+        M.dedupAgainstImagePeakLossyIndex(noMedia, _)),
+      ("dedupAgainstImagePeakIndex", "imagePeakIndex",
+        M.dedupAgainstImagePeakIndex(noMedia, _)),
+      ("dedupAgainstVideoPeakIndex", "videoPeakIndex",
+        M.dedupAgainstVideoPeakIndex(noMedia, _)),
+      ("dedupAgainstImageScaleIndex", "imageScaleLandmarkIndex",
+        M.dedupAgainstImageScaleIndex(noMedia, _)),
+      ("dedupAgainstImageScaleIndexDihedral", "imageScaleLandmarkIndex",
+        M.dedupAgainstImageScaleIndexDihedral(noMedia, _)),
+      ("dedupAgainstImageScaleIndexAspect", "imageScaleLandmarkIndex",
+        M.dedupAgainstImageScaleIndexAspect(noMedia, _)),
+      ("dedupAgainstImageCanonicalIndex", "imageCanonicalLandmarkIndex",
+        M.dedupAgainstImageCanonicalIndex(noMedia, _)),
+      ("dedupAgainstImageAffineIndex", "imageAffineLandmarkIndex",
+        M.dedupAgainstImageAffineIndex(noMedia, _)),
+      ("dedupAgainstImageRotScaleIndex", "imageRotScaleLandmarkIndex",
+        M.dedupAgainstImageRotScaleIndex(noMedia, _)),
+      ("dedupAgainstImageAffineFrameIndex", "imageAffineFrameIndex",
+        M.dedupAgainstImageAffineFrameIndex(noMedia, _)),
+      ("dedupAgainstImageAffineFrameIndexSqueezeFan", "imageAffineFrameIndex",
+        M.dedupAgainstImageAffineFrameIndexSqueezeFan(noMedia, _)),
+      ("dedupAgainstImageAffineFrameIndexChiral", "imageAffineFrameIndex",
+        M.dedupAgainstImageAffineFrameIndexChiral(noMedia, _)),
+      ("dedupAgainstImageAffineFrameIndexVerified",
+        "imageAffineFrameAnchorIndex",
+        M.dedupAgainstImageAffineFrameIndexVerified(noMedia, _)),
+      ("dedupAgainstVideoAffineFrameIndex", "videoAffineFrameIndex",
+        M.dedupAgainstVideoAffineFrameIndex(noMedia, _)),
+      ("dedupAgainstVideoScaleIndex", "videoScaleLandmarkIndex",
+        M.dedupAgainstVideoScaleIndex(noMedia, _)),
+      ("dedupAgainstVideoScaleIndexAspect", "videoScaleLandmarkIndex",
+        M.dedupAgainstVideoScaleIndexAspect(noMedia, _)),
+      ("dedupAgainstVideoCanonicalIndex", "videoCanonicalLandmarkIndex",
+        M.dedupAgainstVideoCanonicalIndex(noMedia, _)),
+      ("dedupAgainstVideoAffineIndex", "videoAffineLandmarkIndex",
+        M.dedupAgainstVideoAffineIndex(noMedia, _)),
+      ("dedupAgainstVideoRotScaleIndex", "videoRotScaleLandmarkIndex",
+        M.dedupAgainstVideoRotScaleIndex(noMedia, _)),
+      ("dedupAgainstVideoCropIndex", "videoCropLandmarkIndex",
+        M.dedupAgainstVideoCropIndex(noMedia, _)),
+      ("dedupAgainstVideoSkipIndex", "videoSkipLandmarkIndex",
+        M.dedupAgainstVideoSkipIndex(noMedia, _)),
+      ("dedupAgainstWinnowIndex", "winnowIndex",
+        TextDedup.dedupAgainstWinnowIndex(noDocs, _, "doc_id", "text")),
+      ("dedupAgainstCdcIndex", "cdcChunkIndex",
+        TextDedup.dedupAgainstCdcIndex(noDocs, _, "doc_id", "text")))
+    // the wrong-version index carries every column any screen reads
+    // (the anchored screen also needs ax/ay), so only fp_ver is wrong
+    val stale = Seq((0L, 99, 0, 0)).toDF("doc_id", "fp_ver", "ax", "ay")
+    val unstamped = stale.drop("fp_ver")
+    for ((name, builder, screen) <- screens;
+         (kind, idx) <- Seq("unstamped" -> unstamped, "stale" -> stale)) {
+      val e = intercept[IllegalArgumentException](screen(idx))
+      assert(e.getMessage.contains("rebuild") &&
+        e.getMessage.contains(builder), s"$name, $kind index: ${e.getMessage}")
+    }
   }
 
   // ---- m106 spectral fingerprint: fractional-resample invariance ----

@@ -81,6 +81,50 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("chiral verified tier: AutoDf solves its cap instead of the backstop") {
+    val s = spark
+    implicit val sp: SparkSession = s
+    val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
+    val anchored = Materialize.eager(
+      Multimodal.imageAffineFrameLandmarksAnchored(media))
+    // the chiral tier caps over distinct (doc, lm) of its identity +
+    // mirror fan, so the explicit cap is solved on that basis
+    val mir = udf((lm: Long) => Multimodal.mirrorAffineFrameCode(lm))
+    val fan = anchored.select(col("doc_id"), col("lm"))
+      .unionByName(anchored.select(col("doc_id"), mir(col("lm")).as("lm")))
+      .distinct()
+    val dfs = fan.groupBy(col("lm")).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2)
+    val maxObserved = dfs.agg(max(col("df"))).collect()(0).getLong(0)
+    val uncappedBytes = dfs.agg(sum(col("df") * col("df")) / 2 * 16)
+      .collect()(0).getDouble(0).toLong
+    val budget = uncappedBytes * 3 / 4
+    val capW16 = Multimodal.solveDfCap(fan, 16, budget)
+    assert(capW16 >= 2 && capW16 < maxObserved,
+      s"the solved cap $capW16 must drop codes (max df $maxObserved)")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_a", "doc_b", "orient").collect().toSeq
+    val explicit = sorted(Multimodal.imageAffineFramePairsChiralVerified(
+      media, maxDf = capW16))
+    val wasBudget = s.conf.getOption(Multimodal.PairBudgetConf)
+    try {
+      s.conf.set(Multimodal.PairBudgetConf, budget.toString)
+      val dropped = Multimodal.hotCodesDropped(s)
+      val before = dropped.value
+      val auto = sorted(Multimodal.imageAffineFramePairsChiralVerified(
+        media, maxDf = Multimodal.AutoDf))
+      assert(auto == explicit,
+        "AutoDf must reproduce the explicit fan-solved cap's result")
+      assert(dropped.value > before,
+        "a solved cap reports the codes it drops")
+    } finally {
+      wasBudget match {
+        case Some(v) => s.conf.set(Multimodal.PairBudgetConf, v)
+        case None => s.conf.unset(Multimodal.PairBudgetConf)
+      }
+    }
+  }
+
   test("nPts=4 experimental codes: default-invariant, 48-bit, fewer per doc") {
     // the round-17 selectivity experiment's plumbing: nPts=3 must be
     // byte-identical to the pre-parameter extractor (same call, same
