@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Maintenance for the persisted-index incremental-dedup family
   * (text [[TextDedup.minHashBandIndex]], embeddings
   * `Similarity.srpBucketIndex`, images [[Multimodal.pHashChunkIndex]],
-  * audio [[Multimodal.audioCodeIndex]]) — closing the steady-state
+  * audio [[Multimodal.AudioCode]] index) — closing the steady-state
   * loop the screen-only contract leaves open: without an append, the
   * index's staleness window grows with every ingest batch, and a
   * near-dup of an ACCEPTED probe sails through the next screen.

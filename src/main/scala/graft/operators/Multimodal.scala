@@ -25,18 +25,30 @@ object Multimodal {
       (b.length >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8') ||
       (b.length >= 2 && b(0) == 'B' && b(1) == 'M')
 
-  /** Test-only decode counter: when set, every payload entering the
-    * real image/WAV decode path adds 1. Backs the decode-count specs
-    * that pin the "decode exactly once per payload" materialization
-    * contract of pHashPairs / audioFingerprintPairs. The var is read
-    * executor-side, so arming it is a same-JVM (local[n] test)
-    * affordance — production leaves it None and pays nothing. An
-    * AtomicLong, NOT a Spark accumulator: executor threads here add
-    * to the driver's instance directly (no per-task copy/merge), and
-    * LongAccumulator.add is unsynchronized — concurrent decodes lost
-    * ticks under local[4]. */
-  @volatile private[graft] var decodeProbe: Option[java.util.concurrent.atomic.AtomicLong] = None
-  @inline private def probeTick(): Unit = decodeProbe.foreach(_.incrementAndGet())
+  private val decodeAccs =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      org.apache.spark.util.LongAccumulator]
+
+  /** Decode counter of this Spark application: once a spec has asked
+    * for it, every payload entering the real image/WAV decode path
+    * adds 1. Backs the decode-count specs that pin the "decode exactly
+    * once per payload" materialization contract. The decode paths run
+    * inside UDFs and mapPartitions with no session in hand, so the tick
+    * finds the accumulator by application id and adds to the registered
+    * instance directly — a same-JVM (local[n]) affordance, under a lock
+    * because LongAccumulator.add is unsynchronized (concurrent decodes
+    * lost ticks under local[4]). Until a spec registers it, the tick
+    * costs one empty-map check. */
+  private[graft] def decodesProbed(s: SparkSession)
+      : org.apache.spark.util.LongAccumulator =
+    decodeAccs.computeIfAbsent(s.sparkContext.applicationId,
+      _ => s.sparkContext.longAccumulator("graft.decodes"))
+
+  private def probeTick(): Unit = if (!decodeAccs.isEmpty) {
+    val env = org.apache.spark.SparkEnv.get
+    val acc = if (env == null) null else decodeAccs.get(env.conf.getAppId)
+    if (acc != null) acc.synchronized(acc.add(1L))
+  }
 
   private def decodeImage(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
     if (!sniffImage(payload)) None
@@ -535,7 +547,7 @@ object Multimodal {
     * the trim is bit-identical to a frame of the base shifted by
     * skip/hop positions — the planted "same recording, leading audio
     * cut" re-upload that positional alignment misses and
-    * [[audioLandmarkPairs]] catches. */
+    * [[AudioLandmark]] catches. */
   def syntheticWavTexTrim(id: Long, nSamples: Int, skip: Int): Array[Byte] =
     wavPcm16(Array.tabulate(nSamples) { n =>
       (((id * 40503L + 12289L) * (n + skip + 7L) * (n + skip + 13L)) % 65536L
@@ -984,37 +996,6 @@ object Multimodal {
       })
   }
 
-  /** Audio near-duplicate pairs: aligned frame-code agreement — the
-    * shared (frame_idx, code) count over the smaller fingerprint must
-    * reach `minMatch`. The (frame_idx, code) bucket IS the inverted
-    * index (13-bit codes per frame position), so candidate generation
-    * is posting-list pair expansion exactly like the shingle path
-    * ([[Postings.pairCounts]]) — no all-pairs scan
-    * and no self-join that hashes the full index twice.
-    *
-    * `codes` is materialized ONCE via [[Materialize.eager]]: the WAV
-    * decode + autocorrelation kernel is the dominant cost and feeds
-    * three consumers (buckets, and the two `sizes` joins) — without
-    * eager materialization each would re-decode every payload.
-    *
-    * `maxDf` (0 = uncapped) drops (frame_idx, code) buckets shared by
-    * more than that many documents BEFORE pair expansion — the
-    * frequent-code cap that bounds worst-case blowup on real audio,
-    * where silent/constant frames share one code at the same index
-    * across unrelated tracks (a bucket of m docs emits m(m-1)/2 pairs;
-    * capping makes m ≤ maxDf while true re-uploads still match on
-    * plenty of textured frames). Capped buckets lower `c` but never
-    * the `nf` denominators, so the cap only ever removes pairs — it
-    * cannot promote a non-dup over `minMatch`.
-    *
-    * Alignment is positional (same frame index): this matches the
-    * re-encoded / re-leveled re-upload case; for time-shift tolerance
-    * see [[audioLandmarkPairs]]. */
-  def audioFingerprintPairs(media: DataFrame, minMatch: Double = 0.8,
-      maxDf: Int = 0)(implicit s: SparkSession): DataFrame =
-    landmarkPairScores(Materialize.eager(audioFingerprint(media).toDF()),
-      minMatch, maxDf, Seq("frame_idx", "code"))
-
   /** Per-document spectral frame codes ([[spectralFrameCodes]]) as a
     * table — the rate-free sibling of [[audioFingerprint]]. One decode
     * pass, no shuffle; undecodable payloads emit nothing. */
@@ -1032,27 +1013,13 @@ object Multimodal {
       })
   }
 
-  /** Audio near-dup pairs on the SPECTRAL fingerprint — the
-    * fractional-resample tier (closes round-9 gap #1): a 44.1 kHz →
-    * 8 kHz interpolated re-upload shares no sample values with its
-    * master, so the integer tier ([[audioFingerprintPairs]], m79/m99)
-    * sees nothing — but its 64 ms spectral codes are identical, since
-    * the analysis grid is anchored in absolute time and frequency
-    * ([[spectralFrameCodes]]). Same aligned scoring and `maxDf` skew
-    * cap as the integer tier, so the m106 gate is the m79 contract at
-    * the spectral seam. */
-  def audioSpectralPairs(media: DataFrame, minMatch: Double = 0.8,
-      maxDf: Int = 0)(implicit s: SparkSession): DataFrame =
-    landmarkPairScores(Materialize.eager(audioSpectralCodes(media).toDF()),
-      minMatch, maxDf, Seq("frame_idx", "code"))
-
   /** Distinct positionless (code, code `gap` frames later) landmarks
     * over the SPECTRAL codes — the m80 trick at the spectral seam:
     * a frame-aligned trim shifts every frame index but leaves interior
     * code successions intact, and the spectral codes are already
     * rate-free, so this tier catches the TRIM + FRACTIONAL-RESAMPLE
-    * compound that evades both [[audioLandmarkPairs]] (no common
-    * samples) and [[audioSpectralPairs]] (shifted alignment). 16-bit
+    * compound that evades both [[AudioLandmark]] (no common
+    * samples) and [[AudioSpectralCode]] (shifted alignment). 16-bit
     * codes pack as code*65536 + next. */
   def audioSpectralLandmarks(media: DataFrame, gap: Int = 1,
       hopMs: Int = 64)(
@@ -1074,17 +1041,6 @@ object Multimodal {
         }
       })
   }
-
-  /** Audio near-dup pairs on spectral LANDMARKS — time-shift AND
-    * rate-free: the tier for the trimmed fractionally-resampled
-    * re-upload (m110). Same posting-list scoring and `maxDf` cap as
-    * [[audioLandmarkPairs]]. */
-  def audioSpectralLandmarkPairs(media: DataFrame, minMatch: Double = 0.6,
-      gap: Int = 1, maxDf: Int = 0, hopMs: Int = 64)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(audioSpectralLandmarks(media, gap, hopMs).toDF()),
-      minMatch, maxDf)
 
   /** Sample indices of energy ONSETS: the first sample at or above
     * `threshold` (absolute 16-bit amplitude) after at least
@@ -1163,7 +1119,7 @@ object Multimodal {
     * tier (closes round-10 gap #1): the grid tiers anchor frames at
     * fixed multiples of the hop from SIGNAL START, so a trim at a
     * non-hop-multiple offset (50 ms, say) shifts every analysis frame
-    * off the master's grid and [[audioSpectralLandmarkPairs]] — even
+    * off the master's grid and [[AudioSpectralLandmark]] — even
     * at the m114 hop=32 setting — provably misses the re-upload. Here
     * frames are anchored at energy ONSETS instead ([[energyOnsets]]):
     * an onset travels with the content through any trim AND any
@@ -1272,8 +1228,8 @@ object Multimodal {
     * kernel), same family shape: distinct per doc, one mapPartitions
     * pass, no shuffle. */
   def spectralOnsetLandmarksRolling(media: DataFrame,
-      codesPerOnset: Int = 2, ratio: Double = 3.0, rmsMs: Int = 24,
-      minGapMs: Int = 48, minAbs: Int = 64)(
+      codesPerOnset: Int, ratio: Double, rmsMs: Int,
+      minGapMs: Int, minAbs: Int)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(codesPerOnset >= 1 && codesPerOnset <= 4,
@@ -1297,40 +1253,6 @@ object Multimodal {
       })
   }
 
-  /** Audio near-dup pairs on ROLLING-RMS onset landmarks — the m119
-    * tier: a NOISY-FLOOR corpus (continuous hum under the beat
-    * structure) re-uploaded with an arbitrary-offset trim and a
-    * fractional resample. The absolute (m115) and peak-relative
-    * (m117) onset tiers find zero onsets on such audio — no
-    * sub-threshold span exists — and every grid tier misses the
-    * non-hop-multiple trim by construction; the rolling-RMS detector
-    * anchors at the bursts regardless. Same posting-list scoring and
-    * `maxDf` cap as the landmark family. */
-  def audioOnsetLandmarkPairsRolling(media: DataFrame,
-      minMatch: Double = 0.6, codesPerOnset: Int = 2, maxDf: Int = 0,
-      ratio: Double = 3.0, rmsMs: Int = 24, minGapMs: Int = 48,
-      minAbs: Int = 64)(implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(
-        spectralOnsetLandmarksRolling(media, codesPerOnset, ratio, rmsMs,
-          minGapMs, minAbs).toDF()),
-      minMatch, maxDf)
-
-  /** Audio near-dup pairs on ONSET-ANCHORED spectral landmarks — trim
-    * tolerance at ARBITRARY offsets plus rate freedom: the tier for a
-    * 50 ms-trimmed (non-hop-multiple) fractionally-resampled re-upload
-    * (m115), which every grid tier misses by construction. Same
-    * posting-list scoring and `maxDf` cap as the landmark family. */
-  def audioOnsetLandmarkPairs(media: DataFrame, minMatch: Double = 0.6,
-      codesPerOnset: Int = 2, maxDf: Int = 0, threshold: Int = 1024,
-      minSilenceMs: Int = 8, thresholdFrac: Double = 0.0)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(
-        spectralOnsetLandmarks(media, codesPerOnset, threshold,
-          minSilenceMs, thresholdFrac).toDF()),
-      minMatch, maxDf)
-
   /** Version stamp for the ONSET landmark family
     * ([[spectralOnsetLandmarks]] — onset detection, frame layout,
     * joint-code packing): namespaced (onset = 4000 + v; the family
@@ -1351,69 +1273,6 @@ object Multimodal {
     * rolling-built index (or vice versa) fails fast with a rebuild
     * instruction instead of silently matching nothing. */
   val OnsetRollingFpVersion: Int = 4002
-
-  /** Persisted ONSET-LANDMARK index — the incremental member of the
-    * m115 tier, and the first LANDMARK-keyed index in the audio family
-    * (the m86/m113 indexes key on aligned (frame_idx, code), which an
-    * arbitrary-offset trim shifts wholesale): the corpus is
-    * onset-fingerprinted ONCE into one row per distinct (lm, doc) with
-    * the doc's landmark count riding along, and
-    * [[dedupAgainstAudioOnsetIndex]] screens every ingest batch — a
-    * trimmed, fractionally-resampled, even re-leveled (with
-    * `thresholdFrac`) re-upload of a corpus master is caught with no
-    * corpus re-decode. [[IncrementalIndex.append]]-compatible; stamped
-    * with [[OnsetFpVersion]]. */
-  def audioOnsetLandmarkIndex(media: DataFrame, codesPerOnset: Int = 2,
-      threshold: Int = 1024, minSilenceMs: Int = 8,
-      thresholdFrac: Double = 0.0, rolling: Boolean = false,
-      ratio: Double = 3.0, rmsMs: Int = 24, minGapMs: Int = 48,
-      minAbs: Int = 64)(
-      implicit s: SparkSession): DataFrame = {
-    // rolling = true builds the index with the ROLLING-RMS detector
-    // (the m119 tier; ratio/rmsMs/minGapMs/minAbs are its knobs) — the
-    // standing-corpus form for NOISY floors, where the threshold
-    // detectors find no onsets at all. Landmark VALUES are comparable
-    // across detectors (shared packing kernel), but detector choice
-    // changes the landmark SET, so it is encoded in the stamp
-    // (4001 threshold / 4002 rolling) — a cross-detector screen fails
-    // fast instead of matching nothing.
-    val lms = Materialize.eager(
-      (if (rolling) spectralOnsetLandmarksRolling(media, codesPerOnset,
-         ratio, rmsMs, minGapMs, minAbs)
-       else spectralOnsetLandmarks(media, codesPerOnset, threshold,
-         minSilenceMs, thresholdFrac)).toDF())
-    landmarkIndex(lms, if (rolling) OnsetRollingFpVersion else OnsetFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[audioOnsetLandmarkIndex]]: the batch onset-fingerprints once,
-    * equi-joins the index on the joint-code landmark, and a probe is a
-    * duplicate of the lowest corpus doc whose shared distinct
-    * landmarks over the smaller set reach `minMatch` (the m115
-    * metric). Payloads yielding NO landmarks — undecodable bytes, but
-    * equally onset-free audio — are absent from the output, not judged
-    * kept (the family contract; the GRID-index screens cover
-    * onset-free corpora). Enforces [[OnsetFpVersion]]; screen with the
-    * parameters the index was built with. */
-  def dedupAgainstAudioOnsetIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, codesPerOnset: Int = 2,
-      threshold: Int = 1024, minSilenceMs: Int = 8,
-      thresholdFrac: Double = 0.0, rolling: Boolean = false,
-      ratio: Double = 3.0, rmsMs: Int = 24, minGapMs: Int = 48,
-      minAbs: Int = 64)(
-      implicit s: SparkSession): DataFrame = {
-    // the expected stamp follows the DETECTOR this screen will probe
-    // with — a threshold screen against a rolling-built index (or vice
-    // versa) is a cross-detector mismatch and must fail fast
-    val ver = if (rolling) OnsetRollingFpVersion else OnsetFpVersion
-    screenLandmarkIndex(
-      Materialize.eager(
-        (if (rolling) spectralOnsetLandmarksRolling(media, codesPerOnset,
-           ratio, rmsMs, minGapMs, minAbs)
-         else spectralOnsetLandmarks(media, codesPerOnset, threshold,
-           minSilenceMs, thresholdFrac)).toDF()),
-      index, minMatch, 0, Postings.Stamp(ver, "onset", "audioOnsetLandmarkIndex"))
-  }
 
   /** ONSET-INTERVAL-RATIO codes — the SPEED-CHANGE / TIME-STRETCH
     * invariant kernel (closes the last audio scope line): a playback
@@ -1488,24 +1347,6 @@ object Multimodal {
       })
   }
 
-  /** Audio near-dup pairs on ONSET-INTERVAL-RATIO landmarks — the
-    * m120 tier: a re-upload SPED UP (or slowed down) by a uniform
-    * factor shifts both the onset grid and every tone's pitch, so all
-    * spectral tiers (grid AND onset-anchored — their codes are
-    * band-energy orderings at fixed Hz) structurally miss it, while
-    * interval ratios ride through speed, stretch, trim, mux rate, and
-    * level together. Same posting-list scoring and `maxDf` cap as the
-    * landmark family. */
-  def audioIntervalLandmarkPairs(media: DataFrame, minMatch: Double = 0.6,
-      nRatios: Int = 5, qStep: Double = 0.2, maxDf: Int = 0,
-      threshold: Int = 1024, minSilenceMs: Int = 8)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(
-        onsetIntervalLandmarks(media, nRatios, qStep, threshold,
-          minSilenceMs).toDF()),
-      minMatch, maxDf)
-
   /** Version stamp for the INTERVAL-RATIO landmark family
     * ([[onsetIntervalLandmarks]] — onset detection, ratio
     * quantization, window packing): namespaced (interval = 5000 + v;
@@ -1514,43 +1355,6 @@ object Multimodal {
     * qStep, thresholds) are NOT covered — screen with the parameters
     * the index was built with. */
   val IntervalFpVersion: Int = 5001
-
-  /** Persisted INTERVAL-RATIO landmark index — the incremental member
-    * of the m120 tier: the corpus is interval-fingerprinted ONCE into
-    * one row per distinct (lm, doc) with the doc's landmark count
-    * riding along, and [[dedupAgainstAudioIntervalIndex]] screens
-    * every ingest batch — a sped-up/stretched (plus trimmed,
-    * re-muxed) re-upload of a corpus master is caught with no corpus
-    * re-decode. [[IncrementalIndex.append]]-compatible; stamped with
-    * [[IntervalFpVersion]]. */
-  def audioIntervalLandmarkIndex(media: DataFrame, nRatios: Int = 5,
-      qStep: Double = 0.2, threshold: Int = 1024,
-      minSilenceMs: Int = 8)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      onsetIntervalLandmarks(media, nRatios, qStep, threshold,
-        minSilenceMs).toDF())
-    landmarkIndex(lms, IntervalFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[audioIntervalLandmarkIndex]]: the batch fingerprints once,
-    * equi-joins the index on the packed ratio-window landmark, and a
-    * probe is a duplicate of the lowest corpus doc whose shared
-    * distinct landmarks over the smaller set reach `minMatch`.
-    * Payloads yielding NO landmarks are absent from the output, not
-    * judged kept (the family contract). Enforces
-    * [[IntervalFpVersion]]; screen with the parameters the index was
-    * built with. */
-  def dedupAgainstAudioIntervalIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, nRatios: Int = 5, qStep: Double = 0.2,
-      threshold: Int = 1024, minSilenceMs: Int = 8)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        onsetIntervalLandmarks(media, nRatios, qStep, threshold,
-          minSilenceMs).toDF()),
-      index, minMatch, 0,
-      Postings.Stamp(IntervalFpVersion, "interval", "audioIntervalLandmarkIndex"))
 
   /** Semitone-spaced constant-Q analysis bank for the PITCH-SHIFT
     * tier: 52 centers at 200 * 2^(k/12) Hz (k = 0..51, topping out at
@@ -1747,24 +1551,6 @@ object Multimodal {
       })
   }
 
-  /** Audio near-dup pairs on PITCH-CLASS landmarks — the m124 tier: a
-    * metronomic corpus re-uploaded with an integer-semitone pitch
-    * shift (or speed change), trimmed, and re-muxed. The interval
-    * tier is degenerate here (one shared landmark — all-pairs false
-    * positives behind any cap) and the fixed-Hz spectral tiers break
-    * under the scaling; argmax-anchored constant-Q orderings ride
-    * through. Same posting-list scoring and `maxDf` cap as the
-    * landmark family. */
-  def audioChromaLandmarkPairs(media: DataFrame, minMatch: Double = 0.6,
-      cyc: Int = 12, maxDf: Int = 0, threshold: Int = 1024,
-      minSilenceMs: Int = 8, div: Int = 12, folds: Int = 1)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(
-        chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
-          folds).toDF()),
-      minMatch, maxDf)
-
   /** Version stamp for the PITCH-CLASS landmark family
     * ([[chromaOnsetLandmarks]] — bank layout, constant-Q window,
     * smoothing, anchor rule, code layout): namespaced (chroma =
@@ -1773,48 +1559,6 @@ object Multimodal {
     * div, thresholds) are NOT covered — screen with the parameters the
     * index was built with. */
   val ChromaFpVersion: Int = 7001
-
-  /** Persisted PITCH-CLASS landmark index — the incremental member of
-    * the m124 tier: the corpus is chroma-fingerprinted ONCE into one
-    * row per distinct (code, doc) with the doc's landmark count
-    * riding along, and [[dedupAgainstAudioChromaIndex]] screens every
-    * ingest batch — a semitone-shifted (plus trimmed, re-muxed,
-    * re-leveled) re-upload of a metronomic corpus master is caught
-    * with no corpus re-decode. [[IncrementalIndex.append]]-compatible;
-    * stamped with [[ChromaFpVersion]]. */
-  def audioChromaLandmarkIndex(media: DataFrame, cyc: Int = 12,
-      threshold: Int = 1024, minSilenceMs: Int = 8, div: Int = 12,
-      folds: Int = 1)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
-        folds).toDF())
-    landmarkIndex(lms, ChromaFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[audioChromaLandmarkIndex]]: the batch fingerprints once,
-    * equi-joins the index on the 13-bit chroma code, and a probe is a
-    * duplicate of the lowest corpus doc whose shared distinct codes
-    * over the smaller set reach `minMatch` (the m124 metric — keep it
-    * at or below the 0.727273 fixture floor). 13-bit codes are
-    * coarser keys than the other landmark indexes', so at corpus
-    * scale hot codes make wide join buckets — the index side is
-    * pre-aggregated per (code, doc), bounding each bucket at the
-    * corpus' doc count per code, and `minMatch` does the rest.
-    * Payloads yielding NO landmarks are absent from the output, not
-    * judged kept (the family contract). Enforces [[ChromaFpVersion]];
-    * screen with the parameters the index was built with. */
-  def dedupAgainstAudioChromaIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, cyc: Int = 12, threshold: Int = 1024,
-      minSilenceMs: Int = 8, div: Int = 12, folds: Int = 1)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        chromaOnsetLandmarks(media, cyc, threshold, minSilenceMs, div,
-          folds).toDF()),
-      index, minMatch, 0,
-      Postings.Stamp(ChromaFpVersion, "chroma", "audioChromaLandmarkIndex"))
 
   /** PHASE-INSENSITIVE folded constant-Q profile at one onset — the
     * m159 kernel. Per band: mean POWER over `folds` consecutive
@@ -2029,7 +1773,7 @@ object Multimodal {
     * nothing (family contract). Catches pure pitch shifts AND the
     * time-stretch + pitch compound (both measured 10/10 at the 0.85
     * default, false ceiling 0.75); the single-window tier
-    * ([[audioChromaLandmarkPairs]]) remains the integer-semitone
+    * ([[AudioChroma]]) remains the integer-semitone
     * SPEED-rendition member whose exact codes need no verify pass.
     * 100 TB shape: profiles are ~5 KB/doc computed once; candidate
     * volume is bounded by maxDf x postings; verification is per
@@ -2088,9 +1832,9 @@ object Multimodal {
   }
 
   /** Version of the audio fingerprint FUNCTION (canonicalization +
-    * code derivation), stamped into every [[audioCodeIndex]] row: a
+    * code derivation), stamped into every [[AudioCode]] index row: a
     * persisted index only matches probes fingerprinted by the SAME
-    * function, so [[dedupAgainstAudioIndex]] fails fast on a version
+    * function, so [[AudioCode]] screen fails fast on a version
     * it didn't build against instead of silently missing every
     * duplicate. v2 = round-9 canonicalization (unconditional channel
     * downmix + integer decimation to canonRate=8000); v1 (unstamped —
@@ -2098,19 +1842,6 @@ object Multimodal {
     * Bump this whenever [[canonPcm]] / [[wavFrameCodes]] semantics
     * change; existing indexes must then be rebuilt. */
   val AudioFpVersion: Int = 2
-
-  /** Persisted audio fingerprint INDEX — the audio member of the
-    * incremental-index family (text t69 / embeddings s56 / images
-    * m85): fingerprint the corpus ONCE into one row per
-    * (frame_idx, code, doc) with the doc's total frame count riding
-    * along, write it bucketed by (frame_idx, code), and screen every
-    * ingest batch with [[dedupAgainstAudioIndex]] — no corpus
-    * re-decode per increment. Rows carry [[AudioFpVersion]] so a
-    * fingerprint-function change can never silently split index and
-    * probes into disjoint code spaces. */
-  def audioCodeIndex(media: DataFrame)(implicit s: SparkSession): DataFrame =
-    landmarkIndex(Materialize.eager(audioFingerprint(media).toDF()),
-      AudioFpVersion, Seq("frame_idx", "code"), "nf")
 
   /** Version stamp for the SPECTRAL code family ([[spectralFrameCodes]]
     * — its own lineage, independent of [[AudioFpVersion]]): bump when
@@ -2127,18 +1858,6 @@ object Multimodal {
     * 44.1 kHz); v1 accumulated a truncated integer hop. */
   val SpectralFpVersion: Int = 1002
 
-  /** Persisted SPECTRAL code index — the incremental-dedup artifact of
-    * the m106 tier: a corpus of masters is spectral-coded ONCE, and
-    * every ingest batch screens against it rate-free, so a 44.1 kHz
-    * re-upload of an 8 kHz corpus master is caught without any corpus
-    * re-decode. Same layout and [[IncrementalIndex.append]]
-    * compatibility as [[audioCodeIndex]]; stamped with
-    * [[SpectralFpVersion]]. */
-  def audioSpectralCodeIndex(media: DataFrame)(
-      implicit s: SparkSession): DataFrame =
-    landmarkIndex(Materialize.eager(audioSpectralCodes(media).toDF()),
-      SpectralFpVersion, Seq("frame_idx", "code"), "nf")
-
   /** Persisted landmark index rows: one per distinct (keys, doc) row
     * of `lms` with the doc's row count `n` riding along, stamped
     * `ver` — the layout every [[screenLandmarkIndex]] screen reads and
@@ -2149,94 +1868,12 @@ object Multimodal {
         Seq("doc_id"))
       .select((keys ++ Seq("doc_id", n)).map(col) :+ lit(ver).as("fp_ver"): _*)
 
-  /** Screen an ingest batch of audio against a pre-built
-    * [[audioCodeIndex]]: the batch fingerprints once, equi-joins the
-    * index on (frame_idx, code) — the aligned m79 metric — and a
-    * probe is a duplicate of the lowest corpus doc whose shared-frame
-    * fraction over the smaller fingerprint reaches `minMatch`. The
-    * index carries per-doc frame counts, so scoring needs no second
-    * corpus pass. Payloads that yield NO fingerprint frames — an
-    * undecodable byte string, but equally a WAV shorter than one
-    * frame — are absent from the output, not judged kept; a caller
-    * needing a verdict per raw input left-joins from the raw batch
-    * ids.
-    *
-    * The index must have been built by THIS fingerprint version
-    * ([[AudioFpVersion]]): an unstamped index (no `fp_ver` column —
-    * built before the round-9 canonicalization change) or a
-    * mismatched stamp throws immediately with a rebuild instruction,
-    * because a cross-version screen compiles and runs but matches
-    * nothing — the silent-miss failure mode this check exists for.
-    * The stamp probe is a `limit(1)` over a constant column: parquet
-    * min/max stats prune it to a metadata read on a real deployment. */
-  def dedupAgainstAudioIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.8)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(audioFingerprint(media).toDF()),
-      index, minMatch, 0,
-      Postings.Stamp(AudioFpVersion, "audio", "audioCodeIndex"),
-      Seq("frame_idx", "code"))
-
-  /** Screen an ingest batch against a pre-built
-    * [[audioSpectralCodeIndex]] — the rate-free incremental screen: a
-    * fractionally-resampled re-upload of a corpus master is a
-    * duplicate even though it shares no sample values with anything
-    * in the corpus. Same scoring contract as
-    * [[dedupAgainstAudioIndex]]; enforces [[SpectralFpVersion]]. */
-  def dedupAgainstAudioSpectralIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.8)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(audioSpectralCodes(media).toDF()),
-      index, minMatch, 0,
-      Postings.Stamp(SpectralFpVersion, "audio", "audioSpectralCodeIndex"),
-      Seq("frame_idx", "code"))
-
-  /** Audio near-duplicate pairs, TIME-SHIFT tolerant — the landmark
-    * variant [[audioFingerprintPairs]]'s positional alignment cannot
-    * express: a trimmed or padded re-upload (leading silence cut, ad
-    * spliced off) shifts every frame index, so aligned
-    * (frame_idx, code) agreement sees nothing, but the SEQUENCE of
-    * codes is intact. A landmark is the pair of codes `gap` frames
-    * apart — (code, next) ≡ the (code, Δcode) form, Δ = code XOR next
-    * being a bijection given code — packed into one integer key with
-    * NO frame index, so a hop-aligned shift leaves every interior
-    * landmark identical. Match metric: shared DISTINCT landmarks over
-    * the smaller landmark set (distinct, because a repeated landmark
-    * within one doc would break the one-entry-per-doc posting-list
-    * invariant the pair expansion relies on).
-    *
-    * Same scale shape as the aligned variant: codes materialized ONCE
-    * ([[Materialize.eager]] — decode is the dominant cost, three
-    * consumers), landmark buckets ARE the inverted index, candidates
-    * via posting-list pair expansion, and `maxDf` drops landmarks
-    * shared by more than that many documents BEFORE expansion — on
-    * real audio, silence yields code 0 and the (0,0) landmark is the
-    * universal hot key, exactly the skew the cap exists for. Landmarks
-    * come distinct-per-doc straight out of the decode pass
-    * ([[audioLandmarks]] — a doc's codes are a local array there, no
-    * shuffle before the posting-list groupBy).
-    *
-    * The trade vs aligned matching: landmarks drop position, so two
-    * docs sharing brief textured motifs score on them; `minMatch`
-    * (default 0.6) is lower than the aligned 0.8 because boundary
-    * frames of a trimmed copy straddle the cut and lose their
-    * landmarks. */
-  def audioLandmarkPairs(media: DataFrame, minMatch: Double = 0.6,
-      gap: Int = 1, maxDf: Int = 0)(implicit s: SparkSession): DataFrame =
-    // landmarks come distinct-per-doc straight out of the decode pass
-    // ([[audioLandmarks]] — a doc's codes are a local array there), so
-    // the only shuffles left are the posting-list groupBy and the pair
-    // aggregation; the earlier window formulation paid an extra
-    // shuffle-by-doc_id just to see neighboring codes
-    landmarkPairScores(Materialize.eager(audioLandmarks(media, gap).toDF()),
-      minMatch, maxDf)
-
   /** Shared-key agreement scorer of the audio tiers: per-key posting
     * lists ([[Postings.pairCounts]]) → shared keys over the smaller
     * doc's key count. Keyed by the positionless landmark `lm`
-    * ([[audioLandmarkPairs]] and the onset/interval/chroma tiers) or
-    * by the aligned (frame_idx, code) bucket ([[audioFingerprintPairs]],
-    * [[audioSpectralPairs]]). Rows must be distinct per (doc, key) and
+    * ([[AudioLandmark]] and the onset/interval/chroma tiers) or
+    * by the aligned (frame_idx, code) bucket ([[AudioCode]],
+    * [[AudioSpectralCode]]). Rows must be distinct per (doc, key) and
     * materialized by the caller. */
   private def landmarkPairScores(lms: DataFrame, minMatch: Double,
       maxDf: Int, keys: Seq[String] = Seq("lm")): DataFrame =
@@ -2574,142 +2211,6 @@ object Multimodal {
   private[operators] val pHashDihedralUdf =
     udf((payload: Array[Byte]) => pHash64Dihedral(payload))
 
-  /** Image near-duplicate pairs by pHash hamming distance: 4 chunk
-    * buckets of 16 bits per hash — by pigeonhole, any pair within
-    * hamming distance <= 3 shares at least one intact chunk, so the
-    * bucket posting lists (the simHash precedent) find every such pair
-    * with constant per-image work; `bit_count(a ^ b)` verifies exactly,
-    * so no false positives. Undecodable payloads drop out (no hash).
-    *
-    * Candidates come from posting-list pair expansion per (chunk, ckey)
-    * bucket — the audio/video-tier shape — so the hash table is built
-    * once per bucket key, not twice as a self-join would. `maxDf`
-    * (0 = uncapped) drops buckets shared by more than that many images
-    * BEFORE the aggregation: one hot pHash (blank thumbnails, tracking
-    * pixels, default avatars — byte-distinct after re-encode, so exact
-    * dedup never removes them) otherwise makes the candidate set
-    * quadratic in the hot bucket. The cap only ever removes pairs whose
-    * every shared chunk is that frequent; pairs also sharing any
-    * rarer chunk still surface there. */
-  def pHashPairs(media: DataFrame, maxDist: Int = 3, maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    // eager: the decode+DCT hash is the dominant cost and the chunk
-    // explode reads `ph` four times — materialize the narrow
-    // (doc_id, ph) frame once, never re-decode. The not-null filter
-    // goes AFTER the eager barrier: pushed before it, Catalyst
-    // rewrites `ph IS NOT NULL` to a second UDF invocation and every
-    // payload decodes twice (the decode-count spec pins this)
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
-      .filter(col("ph").isNotNull)
-    chunkPairScores(hashed, maxDist, maxDf, oriented = false)
-  }
-
-  /** [[pHashPairs]] tolerant to HORIZONTAL MIRRORING — the
-    * flipped-repost vector exact and plain-pHash dedup both miss
-    * (mirroring permutes pixels, so bytes AND hash change): every
-    * image contributes TWO orientation rows (as-is hash, mirrored-grid
-    * hash — both from ONE decode via [[pHash64Both]]), all rows bucket
-    * by 16-bit chunk, and a mirrored repost's as-is row collides with
-    * its source's mirrored row. Pairs verify with `bit_count` per
-    * orientation combo and keep the minimum distance. Emission is
-    * (doc_a, doc_b, dist) with doc_a < doc_b — same-doc
-    * orientation self-pairs are excluded, and an unflipped near-dup
-    * still surfaces through the (as-is, as-is) combo, so this is a
-    * strict superset of [[pHashPairs]] at the same threshold.
-    *
-    * Scale shape identical to [[pHashPairs]]: 2x the posting-list rows
-    * (the price of orientation invariance), same pigeonhole-complete
-    * recall per combo. The maxDf pre-aggregation cap counts DISTINCT
-    * docs per bucket, so a value tuned for [[pHashPairs]] carries over
-    * unchanged despite the 2x row inflation. */
-  def pHashPairsFlipTolerant(media: DataFrame, maxDist: Int = 3,
-      maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashBothUdf(col("payload")).as("hs")))
-      .filter(col("hs").isNotNull)
-      .select(col("doc_id"), col("hs._1").as("ph"), col("hs._2").as("phf"))
-    chunkPairScores(hashed.select(col("doc_id"), col("ph").as("h"))
-      .unionByName(hashed.select(col("doc_id"), col("phf").as("h"))),
-      maxDist, maxDf, oriented = true)
-  }
-
-  /** [[pHashPairsFlipTolerant]]'s ROTATION sibling — the phone-
-    * orientation repost (a quarter- or half-turned re-upload changes
-    * bytes AND hash): every image contributes FOUR quarter-turn
-    * orientation rows from one decode ([[pHash64Rots]]); a rotated
-    * repost's as-is row collides with its source's correspondingly-
-    * rotated row. Pairs verify per orientation combo and keep the
-    * minimum distance; strict superset of [[pHashPairs]] (orientation
-    * 0 x 0 is the plain comparison). 4x posting rows — the price of
-    * four-fold invariance. The maxDf pre-aggregation cap counts
-    * DISTINCT docs per bucket, so a value tuned for [[pHashPairs]]
-    * carries over unchanged despite the 4x row inflation. For the
-    * full dihedral-8 set in ONE pass see [[pHashPairsDihedral]]. */
-  def pHashPairsRotTolerant(media: DataFrame, maxDist: Int = 3,
-      maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashRotsUdf(col("payload")).as("hs")))
-      .filter(col("hs").isNotNull)
-    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("h")),
-      maxDist, maxDf, oriented = true)
-  }
-
-  /** The full DIHEDRAL-8 image near-dup pass — one operator for every
-    * flip x rotation compound, closing the gap where a rot90+mirror
-    * (or rot180+mirror = vertical flip) repost needed the right
-    * two-operator composition of [[pHashPairsRotTolerant]] and
-    * [[pHashPairsFlipTolerant]] and was missed by each alone: every
-    * image contributes all EIGHT orientation hashes from one decode
-    * ([[pHash64Dihedral]]); a repost under ANY dihedral transform has
-    * an orientation row colliding with its source's as-is row.
-    * Strict superset of both single-trick variants at the same
-    * threshold. 8x posting rows — the full price of dihedral
-    * invariance; the maxDf cap counts DISTINCT docs per bucket, so a
-    * [[pHashPairs]]-tuned value carries over unchanged. */
-  def pHashPairsDihedral(media: DataFrame, maxDist: Int = 3,
-      maxDf: Int = 0): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs")))
-      .filter(col("hs").isNotNull)
-    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("h")),
-      maxDist, maxDf, oriented = true)
-  }
-
-  /** Image near-dup pairs tolerant of STRUCTURED CROPS — the m128
-    * tier: a re-upload cropped to one of the [[CropWindows]] (center
-    * 75%/50%, any 50% quadrant — the thumbnail / letterbox-removal /
-    * crop-to-subject classes) hashes, as a whole image, EXACTLY to
-    * its master's corresponding window hash, which the plain pHash
-    * tier misses wholesale (the crop resamples a sub-rect over the
-    * full 32x32 grid — nothing aligns). Every doc contributes its 7
-    * window hashes to the chunk posting lists (the dihedral tier's
-    * 8-orientation shape); candidate pairs require window 0 (the
-    * full-image hash) on at least one side — a crop is a FULL image
-    * matching a WINDOW of its master, and window-vs-window pairs
-    * (sub-crops of different docs) carry no crop-dedup semantics.
-    * Distinct-doc `maxDf` cap before expansion (window rows never
-    * inflate the count). Output carries which window matched:
-    * (doc_a, doc_b, win_a, win_b, dist), min dist per window combo.
-    * Arbitrary-offset crops are out of scope (see [[CropWindows]]) —
-    * the gate pins one as a non-match. */
-  def pHashPairsCropTolerant(media: DataFrame, maxDist: Int = 3,
-      maxDf: Int = 0, extended: Boolean = false): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    // extended = true adds the 3x3 thirds ladder ([[CropWindowsThirds]]
-    // — rule-of-thirds recomposition crops) at 16 hashes per decode
-    val wUdf = if (extended) pHashCropWindowsExtUdf else pHashCropWindowsUdf
-    val hashed = Materialize.eager(
-      media.select(col("doc_id"), wUdf(col("payload")).as("hs")))
-      .filter(col("hs").isNotNull)
-    chunkPairScores(hashed.select(col("doc_id"), explode(col("hs")).as("wh"))
-      .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h")),
-      maxDist, maxDf, oriented = true)
-  }
-
   /** Shared chunk-pair scorer of the pHash tiers over (doc_id[, win], h)
     * rows, h a 64-bit hash (the last column): 4 x 16-bit chunk buckets
     * ([[Postings.chunks16]] — pigeonhole-complete for hamming <= 3),
@@ -2719,7 +2220,7 @@ object Multimodal {
     * false`): the cap counts rows (== docs), output distinct
     * (doc_a, doc_b, dist) — a pair can share several intact chunks.
     * Several rows per doc (orientations or crop windows, `oriented =
-    * true`): the cap counts DISTINCT docs, so a [[pHashPairs]]-tuned
+    * true`): the cap counts DISTINCT docs, so a [[PHash]]-tuned
     * maxDf carries over despite the row inflation; same-doc pairs drop,
     * a `win` column keeps only pairs with window 0 (the full image) on
     * one side, and each pair (per window combo) keeps its minimum
@@ -2949,16 +2450,15 @@ object Multimodal {
   }
 
   /** Persisted pHash chunk INDEX of an image corpus — the incremental
-    * complement of [[pHashPairs]] and the image-side sibling of
+    * complement of [[PHash]] and the image-side sibling of
     * `TextDedup.minHashBandIndex` / `Similarity.srpBucketIndex`: hash
     * the corpus ONCE, write this table (bucketed by (chunk, ckey) in
     * production), and screen every ingest batch with
-    * [[dedupAgainstPHashIndex]] — no corpus re-decode per increment.
+    * [[PHash]] screen — no corpus re-decode per increment.
     * One row per (chunk, image): `(chunk, ckey, doc_id, ph)`; the full
     * hash rides along so candidate verification is one `bit_count`. */
   def pHashChunkIndex(media: DataFrame): DataFrame =
-    Postings.chunks16(Materialize.eager(
-        media.select(col("doc_id"), pHashUdf(col("payload")).as("ph")))
+    Postings.chunks16(Materialize.eager(PHash.landmarks(media))
         .filter(col("ph").isNotNull), "ph")
       .select(col("chunk"), col("ckey"), col("doc_id"), col("ph"),
         lit(PHashFpVersion).as("fp_ver"))
@@ -2979,52 +2479,13 @@ object Multimodal {
     * fresh checkpoint (CHANGELOG state-schema note). */
   val PHashFpVersion: Int = 13002
 
-  /** Screen an ingest batch of images against a pre-built
-    * [[pHashChunkIndex]]: the batch decodes + hashes once, equi-joins
-    * the index on (chunk, ckey) — pigeonhole-complete for hamming
-    * <= 3 — and verifies candidates with one `bit_count` against the
-    * hash carried in the index row. Returns one verdict row per batch
-    * image that produced a hash: (doc_id, kept, dup_src = lowest
-    * matching corpus image). Payloads that yield NO hash — undecodable
-    * bytes, but equally anything [[pHash64]] returns None for — are
-    * absent from the output, not judged kept (the [[pHashPairs]]
-    * contract); a caller needing a row per raw input left-joins from
-    * the raw batch ids.
-    *
-    * `maxDf` (0 = uncapped) drops index buckets held by more than that
-    * many corpus images before the probe join — the hot-pHash guard
-    * ([[pHashPairs]]): a blank-thumbnail bucket otherwise multiplies
-    * every probe row by its full membership. Capping can only flip
-    * verdicts toward kept, and only for probes whose every shared
-    * chunk is that frequent. */
-  def dedupAgainstPHashIndex(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
-    screenPHashIndex(media, index, maxDist, maxDf, dihedral = false,
-      crop = false)
-
-  /** [[dedupAgainstPHashIndex]] with DIHEDRAL-8 probes — incremental
-    * image dedup that still catches a rotated / mirrored / compound
-    * repost against an AS-IS corpus index: the index layout is
-    * unchanged (4 chunk rows per corpus image), each probe
-    * contributes all eight orientation hashes from one decode
-    * ([[pHash64Dihedral]]), and any orientation within `maxDist` of a
-    * corpus hash is a duplicate. 8x probe-side rows — and the probe
-    * side is batch-sized by definition — while the index-side cost,
-    * bucketing and files are untouched: orientation tolerance
-    * composes with the persisted-index contract without reindexing
-    * anything. */
-  def dedupAgainstPHashIndexDihedral(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
-    screenPHashIndex(media, index, maxDist, maxDf, dihedral = true,
-      crop = false)
-
   /** Persisted CROP-WINDOW pHash index — the incremental member of
     * the m128 tier: the corpus decodes ONCE into all seven
     * [[CropWindows]] hashes per image (28 chunk rows — the dihedral
     * screen's 8x probe-side factor moved to the INDEX side, because
     * crop asymmetry runs the other way: the CORPUS holds the masters
     * whose windows a future crop will equal, while the probe is a
-    * whole image with one hash). [[dedupAgainstPHashCropIndex]]
+    * whole image with one hash). [[PHashCrop]] screen
     * screens every ingest batch at 4 probe rows per image — a
     * structured-crop re-upload of a corpus master is caught with no
     * corpus re-decode. Same stamped layout family as
@@ -3036,11 +2497,8 @@ object Multimodal {
     * crop arrives as a whole image with one hash), so base and
     * extended indexes differ only in which crops they can catch. */
   def pHashCropWindowIndex(media: DataFrame,
-      extended: Boolean = false): DataFrame =
-    Materialize.eager(
-      media.select(col("doc_id"),
-        (if (extended) pHashCropWindowsExtUdf else pHashCropWindowsUdf)(
-          col("payload")).as("hs")))
+      f: PHashCrop = PHashCrop()): DataFrame =
+    Materialize.eager(f.landmarks(media))
       .filter(col("hs").isNotNull)
       .select(col("doc_id"), explode(col("hs")).as("wh"))
       .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("ph"))
@@ -3048,42 +2506,21 @@ object Multimodal {
       .select(col("chunk"), col("ckey"), col("doc_id"), col("win"), col("ph"),
         lit(PHashFpVersion).as("fp_ver"))
 
-  /** Screen an ingest batch against a pre-built
-    * [[pHashCropWindowIndex]]: the batch decodes + hashes once (FULL
-    * hash only — a crop arrives as a whole image), equi-joins the
-    * index on (chunk, ckey), and verifies candidates with one
-    * `bit_count` against the window hash carried in the index row —
-    * so a batch image that is a structured crop (or a plain near-dup:
-    * window 0 is in the index too) of any corpus master is caught.
-    * Verdict rows (doc_id, kept, dup_src); hashless payloads absent
-    * (the family contract). `maxDf` counts DISTINCT corpus docs per
-    * bucket (window rows never inflate the count — the
-    * orientation-tier lesson). */
-  def dedupAgainstPHashCropIndex(media: DataFrame, index: DataFrame,
-      maxDist: Int = 3, maxDf: Int = 0): DataFrame =
-    screenPHashIndex(media, index, maxDist, maxDf, dihedral = false,
-      crop = true)
-
-  /** Shared screen of the pHash indexes: fail-fast
-    * [[PHashFpVersion]] gate, then the batch decodes + hashes once
-    * (all eight [[pHash64Dihedral]] orientations when `dihedral`),
-    * chunks ([[Postings.chunks16]]) and equi-joins the `maxDf`-capped
-    * index on (chunk, ckey), verifies each candidate with one
-    * `bit_count` against the hash carried in the index row, and a
-    * probe is a duplicate of the lowest matching corpus image. The
-    * crop-window index (`crop`) caps by DISTINCT corpus docs (window
-    * rows never inflate the count). Hashless payloads are absent from
-    * the output. */
-  private def screenPHashIndex(media: DataFrame, index: DataFrame,
-      maxDist: Int, maxDf: Int, dihedral: Boolean,
+  /** Shared screen of the pHash indexes: fail-fast `stamp` gate, then
+    * the batch's materialized (doc_id, ph) hashes (all eight
+    * [[pHash64Dihedral]] orientations in `ph` when `dihedral`) chunk
+    * ([[Postings.chunks16]]) and equi-join the `maxDf`-capped index on
+    * (chunk, ckey), each candidate verifies with one `bit_count`
+    * against the hash carried in the index row, and a probe is a
+    * duplicate of the lowest matching corpus image. The crop-window
+    * index (`crop`) caps by DISTINCT corpus docs (window rows never
+    * inflate the count). Hashless payloads are absent from the output. */
+  private def screenPHashIndex(probes: => DataFrame, index: DataFrame,
+      maxDist: Int, maxDf: Int, stamp: Postings.Stamp, dihedral: Boolean,
       crop: Boolean): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    Postings.requireStamp(index, Postings.Stamp(PHashFpVersion, "pHash",
-      if (crop) "pHashCropWindowIndex" else "pHashChunkIndex"))
-    val hashed = Materialize.eager(media.select(col("doc_id"),
-        (if (dihedral) pHashDihedralUdf else pHashUdf)(col("payload"))
-          .as("ph")))
-      .filter(col("ph").isNotNull)
+    requireChunkRecall(maxDist)
+    Postings.requireStamp(index, stamp)
+    val hashed = probes.filter(col("ph").isNotNull)
     val rows = if (dihedral) hashed.select(col("doc_id"), explode(col("ph")).as("h"))
       else hashed
     val h = rows.columns.last
@@ -3244,8 +2681,8 @@ object Multimodal {
   /** One (doc_id, lm) posting row per distinct peak-patch hash — the
     * [[peakPatchHashes]] tier's landmark table, one decode per image,
     * no shuffle. */
-  def imagePeakLandmarks(media: DataFrame, radius: Int = 2,
-      patch: Int = 4, k: Int = 0)(implicit s: SparkSession): DataFrame = {
+  def imagePeakLandmarks(media: DataFrame, radius: Int,
+      patch: Int, k: Int)(implicit s: SparkSession): DataFrame = {
     val u = udf((p: Array[Byte]) => peakPatchHashes(p, radius, patch, k))
     media.select(col("doc_id"), u(col("payload")).as("hs"))
       .filter(col("hs").isNotNull)
@@ -3254,31 +2691,14 @@ object Multimodal {
 
   /** One (doc_id, orient, lm) row per dihedral readout of each peak —
     * the compound tier's probe table ([[peakPatchHashesDihedral]]). */
-  def imagePeakLandmarksOriented(media: DataFrame, radius: Int = 2,
-      patch: Int = 4)(implicit s: SparkSession): DataFrame = {
+  def imagePeakLandmarksOriented(media: DataFrame, radius: Int,
+      patch: Int)(implicit s: SparkSession): DataFrame = {
     val u = udf((p: Array[Byte]) => peakPatchHashesDihedral(p, radius, patch))
     media.select(col("doc_id"), u(col("payload")).as("hs"))
       .filter(col("hs").isNotNull)
       .select(col("doc_id"), explode(col("hs")).as("oh"))
       .select(col("doc_id"), col("oh._1").as("orient"), col("oh._2").as("lm"))
   }
-
-  /** [[imagePeakPairs]] extended to the ROTATED/MIRRORED + arbitrary-
-    * crop COMPOUND (the m140 leg): candidates bucket by landmark with
-    * the lower doc's ORIENT-0 hashes on one side and any of the
-    * higher doc's 8 readouts on the other (the dihedral pHash tiers'
-    * asymmetric probe shape — state/index stay as-is-sized), scored
-    * per orientation over the smaller orient-0 peak count. A repost
-    * that is cropped at ANY offset AND rotated/mirrored lands at the
-    * orientation undoing the transform; the plain peak tier (exact
-    * readout) and every window tier miss it. Output (doc_a, doc_b,
-    * orient, match_frac). */
-  def imagePeakPairsDihedral(media: DataFrame, minMatch: Double = 0.6,
-      maxDf: Int = 0, radius: Int = 2, patch: Int = 4)(
-      implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(imagePeakLandmarksOriented(media, radius, patch)),
-      minMatch, maxDf)
 
   /** Shared pair scorer for the ORIENTED landmark frames (peak-patch
     * m140 / constellation m145): lower doc's orient-0 landmarks on
@@ -3319,24 +2739,6 @@ object Multimodal {
     Postings.overSmaller(counts, n0, minMatch, "orient")
   }
 
-  /** Image near-dup pairs tolerant of ARBITRARY-OFFSET crops — the
-    * scope edge every canonical-window gate (m128/m129/st96) pins as
-    * a NON-match, closed content-side: candidates bucket by shared
-    * peak-patch landmark (distinct-doc `maxDf` cap BEFORE pair
-    * expansion, the family shape), and a pair scores shared distinct
-    * landmarks over the SMALLER landmark set — a crop keeps a subset
-    * of its master's peaks bit-exactly, so crop-vs-master sits near
-    * 1.0 while unrelated noise images share nothing. Output (doc_a,
-    * doc_b, match_frac). What stays out: LOSSY re-encodes (JPEG
-    * quantization perturbs patch bytes — the pHash tiers own that
-    * class) and crops so tight no interior peak survives. */
-  def imagePeakPairs(media: DataFrame, minMatch: Double = 0.6,
-      maxDf: Int = 0, radius: Int = 2, patch: Int = 4, k: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(imagePeakLandmarks(media, radius, patch, k)),
-      minMatch, maxDf)
-
   /** Hot-code backstop for the landmark pair scorers: when a caller
     * passes maxDf <= 0 ("uncapped"), the scorers historically built
     * `collect_list(doc_id)` per code with NO bound — on measured
@@ -3351,9 +2753,10 @@ object Multimodal {
     * unbounded. Codes dropped by the AUTO cap are counted in the
     * [[hotCodesDropped]] accumulator and logged per code, so an
     * adversarial corpus self-reports instead of silently losing
-    * recall. Test hook: private[graft] so a spec can lower it; 0
-    * disables the auto-cap entirely (never the explicit maxDf). */
-  @volatile private[graft] var hotCodeAutoCap: Int = 4096
+    * recall. A spec lowers it through the scorers' private[graft]
+    * `autoCap` parameter; 0 disables the auto-cap entirely (never the
+    * explicit maxDf). */
+  private[graft] val HotCodeAutoCap: Int = 4096
 
   /** Survivor-pair bound under which the verified tier's gather pass
     * pre-filters its re-explode to survivor docs (round 18 — see
@@ -3361,9 +2764,10 @@ object Multimodal {
     * sorted id array per posting entry, so its worst-case extra cost
     * is entries x 2*threshold long-compares — bounded small by this
     * constant; corpora whose survivor mass exceeds it take the
-    * unconditional re-explode exactly as round 17 shipped it.
-    * Test hook: private[graft] so a spec can force either path. */
-  @volatile private[graft] var survivorGatherMaxPairs: Long = 256L
+    * unconditional re-explode exactly as round 17 shipped it. A spec
+    * forces either path through [[verifiedPairsFrom]] /
+    * [[affineFramePairsChiralVerifiedFrom]]. */
+  private[graft] val SurvivorGatherMaxPairs: Long = 256L
 
   @transient private lazy val hotLog =
     org.slf4j.LoggerFactory.getLogger("graft.operators.Multimodal")
@@ -3382,11 +2786,12 @@ object Multimodal {
   /** Shared pair scorer for the peak-landmark frames (image m136 /
     * video m138): posting-list join on the landmark with a
     * distinct-doc `maxDf` cap BEFORE pair expansion (auto-capped at
-    * [[hotCodeAutoCap]] when maxDf <= 0), shared distinct
+    * `autoCap` when maxDf <= 0), shared distinct
     * landmarks over the SMALLER set >= minMatch. Input: distinct
     * (doc_id, lm) rows. */
-  private def peakLandmarkPairScores(lms: DataFrame, minMatch: Double,
-      maxDf: Int, minShared: Int = 0): DataFrame = {
+  private[graft] def peakLandmarkPairScores(lms: DataFrame, minMatch: Double,
+      maxDf: Int, minShared: Int = 0,
+      autoCap: Int = HotCodeAutoCap): DataFrame = {
     // AutoDf: one extra pass over the (already materialized) landmark
     // table solves the cap from the measured df distribution
     val (cap, solvedCap) = Postings.resolveDfCap(lms, maxDf, 16)
@@ -3398,7 +2803,7 @@ object Multimodal {
       .agg(collect_list(col("doc_id")).as("ds"))
       .filter(size(col("ds")) >= 2 &&
         Postings.dfCapKeep(lms.sparkSession, col("lm"), size(col("ds")), cap,
-          solvedCap))
+          solvedCap, autoCap))
       .select(explode(Postings.pairs(col("ds"))).as("p"))
       .filter(col("p.a") =!= col("p.b"))
       .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
@@ -3415,17 +2820,12 @@ object Multimodal {
       lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")), minMatch)
   }
 
-  /** PEAK-PATCH landmarks for VIDEO — the m136 tier lifted to the
-    * frame sequence (the m138 leg): every sampled frame decodes once
-    * into its content-anchored peak hashes, pooled DISTINCT per doc.
-    * A re-upload cropped at ANY offset (and leading-trimmed —
-    * pooling is order-free) keeps each shared frame's interior peaks
-    * bit-exactly, while every whole-frame and canonical-window video
-    * tier misses: a non-window crop changes every frame hash AND
-    * aligns with no window channel. One mapPartitions pass, no
-    * shuffle. */
-  def videoPeakLandmarks(media: DataFrame, every: Int = 2,
-      radius: Int = 2, patch: Int = 4, k: Int = 0)(
+  /** Distinct codes pooled per VIDEO document over every `every`-th
+    * container frame (`codes` maps one frame's bytes to its codes), as
+    * (doc_id, lm) rows in first-emission order: the one container walk
+    * of the pooled video landmark tiers. */
+  private def pooledFrameCodes(media: DataFrame, every: Int)(
+      codes: Array[Byte] => IterableOnce[Long])(
       implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -3435,27 +2835,28 @@ object Multimodal {
           case Some(fs) =>
             val set = scala.collection.mutable.LinkedHashSet.empty[Long]
             fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .flatMap(f =>
-                peakPatchHashes(f._1, radius, patch, k).getOrElse(Nil))
-              .foreach(set += _)
+              .foreach(f => set ++= codes(f._1))
             set.iterator.map(lm => (r.doc_id, lm))
           case None => Iterator.empty
         }
       }).toDF("doc_id", "lm")
   }
 
-  /** Video near-dup pairs tolerant of ARBITRARY-OFFSET crops — the
-    * m138 tier: [[videoPeakLandmarks]] posting rows through the
-    * shared peak scorer; a cropped (+trimmed) re-upload sits near
-    * 1.0 over its pooled peak set. Same lossy scope line as the
-    * image tier (DIB frames are lossless; compressed codecs are the
-    * declared container scope line). */
-  def videoPeakPairs(media: DataFrame, minMatch: Double = 0.6,
-      every: Int = 2, maxDf: Int = 0, radius: Int = 2, patch: Int = 4,
-      k: Int = 0)(implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)),
-      minMatch, maxDf)
+  /** PEAK-PATCH landmarks for VIDEO — the m136 tier lifted to the
+    * frame sequence (the m138 leg): every sampled frame decodes once
+    * into its content-anchored peak hashes, pooled DISTINCT per doc.
+    * A re-upload cropped at ANY offset (and leading-trimmed —
+    * pooling is order-free) keeps each shared frame's interior peaks
+    * bit-exactly, while every whole-frame and canonical-window video
+    * tier misses: a non-window crop changes every frame hash AND
+    * aligns with no window channel. One mapPartitions pass, no
+    * shuffle. */
+  def videoPeakLandmarks(media: DataFrame, every: Int,
+      radius: Int, patch: Int, k: Int)(
+      implicit s: SparkSession): DataFrame = {
+    pooledFrameCodes(media, every)(b =>
+      peakPatchHashes(b, radius, patch, k).getOrElse(Nil))
+  }
 
   /** Gray-coded 4-bit quantization table: adjacent luma levels differ
     * by ONE bit, so a quantization-boundary crossing under JPEG noise
@@ -3514,37 +2915,6 @@ object Multimodal {
       }.toSeq
     }
 
-  /** Image near-dup pairs tolerant of LOSSY (JPEG re-encoded)
-    * arbitrary-offset crops — the class the exact-hash peak tier
-    * (m136) declares out: peaks anchor as before (positions hold
-    * under quantization at quality >= ~0.9), descriptors match within
-    * hamming `maxDist` via the pHash 4x16-bit chunk recall guarantee,
-    * and a pair scores DISTINCT matched peaks over the SMALLER side's
-    * peak count. Pick `maxDist` by corpus self-similarity: 1 suffices
-    * for quality >= ~0.92 (the m141 gate; the synthetic family's
-    * near-aliased patches start colliding at 2-3), 2-3 buys margin at
-    * lower qualities on corpora with genuinely independent content.
-    * Qualities low enough to move the fine peaks themselves (~< 0.85)
-    * stay out of THIS tier — but are covered, measured in round 12,
-    * by the coarse-anchored constellation tier at a class-specific
-    * gate ([[imageScalePairs]] at minMatch 0.2 lands q 0.3-0.7 crops
-    * and crop+resizes, the m163 gate): coarse box-sum blob centers
-    * hold position under quantization that scrambles the 3x3 field. */
-  def imagePeakPairsLossy(media: DataFrame, minMatch: Double = 0.5,
-      maxDist: Int = 3, maxDf: Int = 0, radius: Int = 2,
-      patchDesc: Int = 8)(implicit s: SparkSession): DataFrame = {
-    // fail fast BEFORE the eager decode+descriptor pass — the shared
-    // scorer re-checks, but only after the expensive materialization
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val u = udf((p: Array[Byte]) => peakBlockDescriptors(p, radius, patchDesc))
-    val rows = Materialize.eager(
-      media.select(col("doc_id"), u(col("payload")).as("ds")))
-      .filter(col("ds").isNotNull)
-      .select(col("doc_id"), explode(col("ds")).as("pd"))
-      .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
-    descriptorChunkPairScores(rows, minMatch, maxDist, maxDf)
-  }
-
   /** Shared pair scorer of the gray-mean descriptor tiers: `rows` is
     * (doc_id, pk, d) with d a 64-bit descriptor; candidates via the
     * pHash 4x16-bit chunk equi-join (complete for hamming <= 3),
@@ -3552,7 +2922,6 @@ object Multimodal {
     * over the SMALLER side's peak count. */
   private def descriptorChunkPairScores(rows: DataFrame,
       minMatch: Double, maxDist: Int, maxDf: Int): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
     val nl = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val capped = Postings.capDf(Postings.chunks16(rows, "d"),
       Seq("chunk", "ckey"), maxDf, distinctDocs = true)
@@ -3596,14 +2965,9 @@ object Multimodal {
     * [[dedupAgainstImagePeakLossyIndex]] screens an ingest batch: a
     * JPEG-saved crop of a corpus master is caught with no corpus
     * re-decode. [[IncrementalIndex.append]]-compatible. */
-  def imagePeakLossyIndex(media: DataFrame, radius: Int = 2,
-      patchDesc: Int = 8)(implicit s: SparkSession): DataFrame = {
-    val u = udf((p: Array[Byte]) => peakBlockDescriptors(p, radius, patchDesc))
-    val rows = Materialize.eager(
-      media.select(col("doc_id"), u(col("payload")).as("ds")))
-      .filter(col("ds").isNotNull)
-      .select(col("doc_id"), explode(col("ds")).as("pd"))
-      .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
+  def imagePeakLossyIndex(media: DataFrame,
+      f: PeakLossy = PeakLossy()): DataFrame = {
+    val rows = f.descriptors(Materialize.eager(f.landmarks(media)))
     Postings.chunks16(
         rows.join(rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl")),
           Seq("doc_id")).select(col("doc_id"), col("pk"), col("d"), col("nl")),
@@ -3621,17 +2985,12 @@ object Multimodal {
     * with the maxDist you validated for your quality floor).
     * Enforces [[PeakDescFpVersion]]. */
   def dedupAgainstImagePeakLossyIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.75, maxDist: Int = 1, radius: Int = 2,
-      patchDesc: Int = 8)(implicit s: SparkSession): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
+      minMatch: Double = 0.75, maxDist: Int = 1,
+      f: PeakLossy = PeakLossy()): DataFrame = {
+    requireChunkRecall(maxDist)
     Postings.requireStamp(index,
       Postings.Stamp(PeakDescFpVersion, "peak-desc", "imagePeakLossyIndex"))
-    val u = udf((p: Array[Byte]) => peakBlockDescriptors(p, radius, patchDesc))
-    val rows = Materialize.eager(
-      media.select(col("doc_id"), u(col("payload")).as("ds")))
-      .filter(col("ds").isNotNull)
-      .select(col("doc_id"), explode(col("ds")).as("pd"))
-      .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
+    val rows = f.descriptors(Materialize.eager(f.landmarks(media)))
     val nl = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val cand = Postings.chunks16(rows, "d").join(
         index.select(col("chunk"), col("ckey"), col("doc_id").as("src"),
@@ -3683,61 +3042,6 @@ object Multimodal {
     * Parameter choices (radius, patch, k) are NOT covered — screen
     * with the parameters the index was built with. */
   val PeakFpVersion: Int = 9001
-
-  /** Persisted PEAK-PATCH landmark index — the incremental member of
-    * the m136 tier: the corpus decodes ONCE into one row per distinct
-    * (peak-patch hash, doc) with the doc's landmark count riding
-    * along, and [[dedupAgainstImagePeakIndex]] screens every ingest
-    * batch — an arbitrary-offset lossless crop of a corpus master is
-    * caught with no corpus re-decode, the class the canonical-window
-    * index (m129) is structurally blind to.
-    * [[IncrementalIndex.append]]-compatible; stamped with
-    * [[PeakFpVersion]]. */
-  def imagePeakIndex(media: DataFrame, radius: Int = 2, patch: Int = 4,
-      k: Int = 0)(implicit s: SparkSession): DataFrame =
-    landmarkIndex(Materialize.eager(imagePeakLandmarks(media, radius, patch, k)),
-      PeakFpVersion)
-
-  /** Persisted PEAK-PATCH index for VIDEO — the m138 tier's
-    * incremental member: one row per distinct (pooled peak hash, doc)
-    * with the doc's pooled landmark count riding along. SAME
-    * [[PeakFpVersion]] as the image index — the hashes come from the
-    * one shared kernel, so values are comparable across media kinds
-    * (the m127 shared-kernel precedent); `every`/`radius`/`patch`/`k`
-    * are build parameters, screen with what you built with. */
-  def videoPeakIndex(media: DataFrame, every: Int = 2, radius: Int = 2,
-      patch: Int = 4, k: Int = 0)(implicit s: SparkSession): DataFrame =
-    landmarkIndex(
-      Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)),
-      PeakFpVersion)
-
-  /** Screen an ingest batch of VIDEOS against a pre-built
-    * [[videoPeakIndex]]: same metric and contract as
-    * [[dedupAgainstImagePeakIndex]], probe landmarks pooled per doc
-    * from the sampled frames. */
-  def dedupAgainstVideoPeakIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, every: Int = 2, radius: Int = 2,
-      patch: Int = 4, k: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoPeakLandmarks(media, every, radius, patch, k)),
-      index, minMatch, 0,
-      Postings.Stamp(PeakFpVersion, "peak", "videoPeakIndex"))
-
-  /** Screen an ingest batch against a pre-built [[imagePeakIndex]]:
-    * the batch decodes once, equi-joins the index on the peak-patch
-    * hash, and a probe is a duplicate of the lowest corpus doc whose
-    * shared distinct landmarks over the smaller set reach `minMatch`
-    * (the m136 metric). Payloads yielding NO landmarks are absent
-    * from the output, not judged kept (the family contract). Enforces
-    * [[PeakFpVersion]]; screen with the parameters the index was
-    * built with. */
-  def dedupAgainstImagePeakIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, radius: Int = 2, patch: Int = 4,
-      k: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(imagePeakLandmarks(media, radius, patch, k)),
-      index, minMatch, 0,
-      Postings.Stamp(PeakFpVersion, "peak", "imagePeakIndex"))
 
   // ---- IMAGE: similarity-invariant peak constellations (crop+RESIZE) --
 
@@ -3949,10 +3253,9 @@ object Multimodal {
     * than 4 coarse peaks emit nothing (the family contract — the
     * exact peak tier covers unresized content, pHash covers
     * structureless content). */
-  def imageScaleLandmarks(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageScaleLandmarks(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(kTop >= 4, "kTop must be >= 4 (a constellation is a quad)")
     require(nNear >= 3 && nNear <= 16, "nNear must be in 3..16 (a quad needs three co-peaks)")
@@ -3971,30 +3274,6 @@ object Multimodal {
       })
   }
 
-  /** Image near-dup pairs on similarity-invariant peak
-    * CONSTELLATIONS — the crop+RESIZE compound (the most common image
-    * re-upload shape: crop to subject, then scale to a standard
-    * width), which every prior image tier misses STRUCTURALLY: the
-    * canonical-window hashes (m128) assume anchor-aligned rects, the
-    * exact peak-patch tier (m136) hashes raw pixel bytes that
-    * interpolation rewrites wholesale, and the lossy descriptor tier
-    * (m141) quantizes blocks at FIXED pixel scale. Direction angles
-    * and log distance ratios of coarse-peak triples ride through
-    * translation AND uniform scale together. Same posting-list
-    * scoring and `maxDf` cap as the landmark family; score over the
-    * SMALLER landmark set (a crop's constellations are a subset of
-    * its master's, up to quantization jitter). */
-  def imageScalePairs(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-          radius, minAvg).toDF()),
-      minMatch, maxDf, minShared)
-
   /** Version stamp for the CONSTELLATION landmark family
     * ([[imageScaleLandmarks]] — coarse peak detection, triple
     * selection, invariant quantization, packing): namespaced
@@ -4005,43 +3284,6 @@ object Multimodal {
     * (kTop, nNear, qStepR, nAng, smoothR, radius) are NOT covered —
     * screen with the parameters the index was built with. */
   val ScaleFpVersion: Int = 11002
-
-  /** Persisted CONSTELLATION landmark index — the incremental member
-    * of the scale tier: the corpus fingerprints ONCE into one row per
-    * distinct (lm, doc) with the doc's landmark count riding along,
-    * and [[dedupAgainstImageScaleIndex]] screens every ingest batch —
-    * a cropped-and-RESIZED re-upload of a corpus master is caught
-    * with no corpus re-decode. [[IncrementalIndex.append]]-compatible;
-    * stamped with [[ScaleFpVersion]]. */
-  def imageScaleLandmarkIndex(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      imageScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-        radius, minAvg).toDF())
-    landmarkIndex(lms, ScaleFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageScaleLandmarkIndex]]: the batch fingerprints once,
-    * equi-joins the index on the constellation code, and a probe is a
-    * duplicate of the lowest corpus doc whose shared distinct
-    * landmarks over the smaller set reach `minMatch`. Payloads
-    * yielding NO landmarks are absent from the output, not judged
-    * kept (the family contract). Enforces [[ScaleFpVersion]]; screen
-    * with the parameters the index was built with. */
-  def dedupAgainstImageScaleIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.3, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-          radius, minAvg).toDF()),
-      index, minMatch, minShared,
-      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
 
   /** Shared landmark index screen of every `lm`-keyed (and the audio
     * (frame_idx, code)-keyed) index family: fail-fast
@@ -4095,10 +3337,9 @@ object Multimodal {
     * compound's probe table ([[constellationCodesOriented]], one
     * decode and one peak-detection pass for all 8 readouts: only the
     * angle/chirality components transform). */
-  def imageScaleLandmarksOriented(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
+  def imageScaleLandmarksOriented(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(kTop >= 4, "kTop must be >= 4 (a constellation is a quad)")
     require(nNear >= 3 && nNear <= 16, "nNear must be in 3..16 (a quad needs three co-peaks)")
@@ -4117,52 +3358,6 @@ object Multimodal {
       }).toDF("doc_id", "orient", "lm")
   }
 
-  /** [[imageScalePairs]] extended to the FULL similarity compound —
-    * rotated/mirrored AND cropped at any offset AND uniformly
-    * RESIZED (m145): the one image re-upload shape no prior tier
-    * covers end-to-end — the dihedral peak tier (m140) needs exact
-    * pixel bytes (interpolation kills it), the plain constellation
-    * tier (m143) is deliberately not rotation-normalized. Candidates
-    * bucket by constellation code with the lower doc's ORIENT-0 codes
-    * on one side and any of the higher doc's 8 angle-readouts on the
-    * other (the m140 asymmetric probe shape — state/index stay
-    * as-is-sized), scored per orientation over the smaller orient-0
-    * landmark count at the scale tier's jitter-absorbing threshold.
-    * Output (doc_a, doc_b, orient, match_frac). */
-  def imageScalePairsDihedral(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarksOriented(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageScaleLandmarkIndex]] with the full DIHEDRAL probe fan —
-    * the m146 member: the index stays orient-0-sized (built once by
-    * the plain builder, unchanged), the BATCH fingerprints all 8
-    * angle-readouts from its one decode, and a probe is a duplicate
-    * of the lowest corpus doc reached by ANY orientation at
-    * `minMatch` over the smaller of (probe's per-orientation landmark
-    * count, master's count). Payloads yielding NO landmarks are
-    * absent from the output (the family contract). Enforces
-    * [[ScaleFpVersion]]. */
-  def dedupAgainstImageScaleIndexDihedral(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.3, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageScaleLandmarksOriented(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
-
   // ---- IMAGE: aspect-squeeze hypothesis fan (anisotropic resize) ---
 
   /** One (doc_id, hyp, lm) row per ASPECT-HYPOTHESIS readout of each
@@ -4179,11 +3374,9 @@ object Multimodal {
     * what registers in state/indexes — the m140/m145 asymmetric fan
     * shape). Peak detection happens ONCE; hypotheses only transform
     * coordinates. */
-  def imageScaleLandmarksAspect(media: DataFrame,
-      hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0), kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
+  def imageScaleLandmarksAspect(media: DataFrame, hyps: Seq[Double], kTop: Int,
+      nNear: Int, qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(hyps.nonEmpty && hyps.head == 1.0,
       "hyps(0) must be the identity 1.0 (the registering readout)")
@@ -4255,10 +3448,9 @@ object Multimodal {
     * on both sides. A distinct landmark family from
     * [[imageScaleLandmarks]] (normalized masters code differently
     * than natural ones — never mix the two in one index). */
-  def imageScaleLandmarksNormalized(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageScaleLandmarksNormalized(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(kTop >= 4, "kTop must be >= 4 (a constellation is a quad)")
     require(nNear >= 3 && nNear <= 16, "nNear must be in 3..16 (a quad needs three co-peaks)")
@@ -4321,32 +3513,6 @@ object Multimodal {
     if (vx <= 0 || vy <= 0) 1.0 else math.sqrt(vy / vx)
   }
 
-  /** Image near-dup pairs under UNKNOWN anisotropic resize — the m160
-    * tier: both docs' peak clouds are moment-normalized to isotropic
-    * before quad coding, so an off-fan squeeze (e.g. 1.37:1, outside
-    * every display-conversion hypothesis and outside the fan's ~±7%
-    * absorption) lands without enumerating factors. Same posting-list
-    * scoring, `maxDf` hot-code cap, and smaller-set match_frac as the
-    * scale family. Compared to [[imageScalePairsAspect]]: the fan
-    * stays the exact-hypothesis VERIFY tier for known display
-    * conversions (its identity readout doubles as the index shape);
-    * this tier trades a few percent of estimator noise for factor
-    * freedom. STRONG squeezes (~>= 1.5:1) stay out of THIS tier:
-    * neighboring blobs merge under the squeeze, the detected peak SET
-    * itself is damaged, and no post-detection geometry fix can
-    * resurrect it — [[imageScalePairsCanonical]] covers that class by
-    * resampling the IMAGE to moment-isotropic BEFORE detection. */
-  def imageScalePairsNormalized(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarksNormalized(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      minMatch, maxDf, minShared)
-
   /** Constellation landmarks over the CANONICAL (moment-isotropic)
     * rendering — the STRONG-squeeze tier: [[lumaMomentScale]]
     * estimates the x-rescale that equalizes the luma spreads, the
@@ -4387,10 +3553,9 @@ object Multimodal {
       kTop, nNear, qStepR, nAng)
   }
 
-  def imageScaleLandmarksCanonical(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageScaleLandmarksCanonical(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(kTop >= 4, "kTop must be >= 4 (a constellation is a quad)")
     require(nNear >= 3 && nNear <= 16, "nNear must be in 3..16 (a quad needs three co-peaks)")
@@ -4414,44 +3579,15 @@ object Multimodal {
     * constellation tiers miss. One container walk, codes pooled
     * DISTINCT; per-frame estimates are independent, which a constant
     * anamorphic squeeze leaves aligned across frames. */
-  def videoScaleLandmarksCanonical(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    require(every >= 1, "every must be >= 1")
+  def videoScaleLandmarksCanonical(media: DataFrame, every: Int, kTop: Int,
+      nNear: Int, qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     require(kTop >= 4, "kTop must be >= 4 (a constellation is a quad)")
     require(nNear >= 3 && nNear <= 16, "nNear must be in 3..16 (a quad needs three co-peaks)")
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(rows => rows.flatMap { r =>
-        containerFrames(r.payload) match {
-          case Some(fs) =>
-            val set = scala.collection.mutable.LinkedHashSet.empty[Long]
-            fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .foreach { f =>
-                decodeImage(f._1).foreach { img =>
-                  canonicalCodes(img, kTop, nNear, qStepR, nAng,
-                    smoothR, radius, minAvg).foreach(set += _)
-                }
-              }
-            set.iterator.map(lm => (r.doc_id, lm))
-          case None => Iterator.empty
-        }
-      }).toDF("doc_id", "lm")
+    pooledFrameCodes(media, every)(b =>
+      decodeImage(b).iterator.flatMap(canonicalCodes(_, kTop, nNear, qStepR,
+        nAng, smoothR, radius, minAvg)))
   }
-
-  /** Video near-dup pairs under UNKNOWN anamorphic re-encodes (m167)
-    * via [[videoScaleLandmarksCanonical]] — the shared peak scorer at
-    * the canonical tier's 0.3 gate. */
-  def videoScalePairsCanonical(media: DataFrame, minMatch: Double = 0.3,
-      every: Int = 2, maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoScaleLandmarksCanonical(media, every,
-        kTop, nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
 
   /** Luma-weighted PRINCIPAL-AXIS angle (radians, the major
     * covariance eigenvector's angle to the x axis) — the rotation
@@ -4513,10 +3649,9 @@ object Multimodal {
     * which also absorbs the residual uniform scale. Rotation clipping
     * costs corner peaks only (same-canvas inverse-map kernel); the
     * relative metric rides on the surviving interior set. */
-  def imageScaleLandmarksAffine(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageScaleLandmarksAffine(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(kTop >= 5, "kTop must be >= 5 (a rot constellation is a 5-point code)")
     require(nNear >= 4 && nNear <= 16, "nNear must be in 4..16 (a rot code needs four co-peaks)")
@@ -4687,58 +3822,12 @@ object Multimodal {
         smoothR, radius, minAvg), kTop, nNear, qStepR, nAng)
   }
 
-  /** Image near-dup pairs under the FULL-AFFINE compound (m169) via
-    * [[imageScaleLandmarksAffine]] — the shared peak scorer at the
-    * rot tier's lower operating gate. */
-  def imageScalePairsAffine(media: DataFrame, minMatch: Double = 0.2,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarksAffine(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      minMatch, maxDf, minShared)
-
   /** Version stamp for the AFFINE-whitened rot-code family
     * ([[imageScaleLandmarksAffine]] — whitener, resample kernel,
     * detection, 5-point rot packing): namespaced (affine = 11200 + v);
     * 11201 = v1. Distinct from the plain rot family — whitened codes
     * of anisotropic content never match unwhitened ones. */
   val AffineFpVersion: Int = 11201
-
-  /** Persisted AFFINE landmark index — the incremental member of the
-    * m169 tier: corpus masters fingerprint once on their whitened
-    * renderings, and [[dedupAgainstImageAffineIndex]] screens every
-    * ingest batch — a re-upload rotated AND squeezed by unknown
-    * factors is caught with no corpus re-decode.
-    * [[IncrementalIndex.append]]-compatible; stamped
-    * [[AffineFpVersion]]. */
-  def imageAffineLandmarkIndex(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      imageScaleLandmarksAffine(media, kTop, nNear, qStepR, nAng,
-        smoothR, radius, minAvg).toDF())
-    landmarkIndex(lms, AffineFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageAffineLandmarkIndex]] — same contract as the scale
-    * screens, both sides whitened. Enforces [[AffineFpVersion]]. */
-  def dedupAgainstImageAffineIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.25, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageScaleLandmarksAffine(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFpVersion, "constellation", "imageAffineLandmarkIndex"))
 
   /** Quantized AFFINE-INVARIANT local-frame codes — geometric
     * hashing with an affine basis (the classic model-based-vision
@@ -4918,11 +4007,9 @@ object Multimodal {
     * the pixels themselves would need the global estimate a crop
     * denies. A distinct landmark family from every constellation tier
     * (different code space); never mix families in one index. */
-  def imageAffineFrameLandmarks(media: DataFrame, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      nPts: Int = 3)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageAffineFrameLandmarks(media: DataFrame, kTop: Int, nNear: Int,
+      nBasis: Int, qStep: Double, smoothR: Int, radius: Int, minAvg: Int,
+      nPts: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(nNear >= 4 && nNear <= 16,
       "nNear must be in 4..16 (a frame code needs 2 basis + 2 coded co-peaks)")
@@ -4941,58 +4028,11 @@ object Multimodal {
       })
   }
 
-  /** Image near-dup pairs under the CROP x FULL-AFFINE compound
-    * (m174) via [[imageAffineFrameLandmarks]] — the shared
-    * posting-list scorer (distinct shared codes over the smaller
-    * side's code count). Default gate (minMatch 0.02 AND minShared
-    * 16) from the measured operating point at qStep 0.3: worst
-    * planted 75%-crop x 17 deg x 1.4:1 compound scored 0.0398 with
-    * 53 shared codes; the worst fresh decoy 4 shared (~0.003) —
-    * a ~10x margin on both axes. */
-  def imageAffineFramePairs(media: DataFrame, minMatch: Double = 0.02,
-      maxDf: Int = 0, kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 16, nPts: Int = 3)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-          smoothR, radius, minAvg, nPts).toDF()),
-      minMatch, maxDf, minShared)
-
   /** Version stamp for the affine-frame family ([[affineFrameCodes]]
     * — basis selection, conditioning floor, coordinate quantizer,
     * pair packing): namespaced (affine-frame = 11400 + v);
     * 11401 = v1. */
   val AffineFrameFpVersion: Int = 11401
-
-  /** Persisted AFFINE-FRAME landmark index — the m174 tier's
-    * incremental member, [[IncrementalIndex.append]]-compatible,
-    * stamped [[AffineFrameFpVersion]]. */
-  def imageAffineFrameIndex(media: DataFrame, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-        smoothR, radius, minAvg).toDF())
-    landmarkIndex(lms, AffineFrameFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageAffineFrameIndex]] — same contract as the constellation
-    * screens. Enforces [[AffineFrameFpVersion]]. */
-  def dedupAgainstImageAffineFrameIndex(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.02, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-          smoothR, radius, minAvg).toDF()),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFrameFpVersion, "constellation", "imageAffineFrameIndex"))
 
   /** AFFINE-FRAME codes pooled per VIDEO document — the m174 tier
     * lifted to the frame sequence (m177): every sampled frame's exact
@@ -5001,74 +4041,17 @@ object Multimodal {
     * unknown) lands where the whitened video tiers (m171) are
     * structurally out (the crop changes their covariance estimate).
     * One container walk. */
-  def videoAffineFrameLandmarks(media: DataFrame, every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    require(every >= 1, "every must be >= 1")
+  def videoAffineFrameLandmarks(media: DataFrame, every: Int, kTop: Int,
+      nNear: Int, nBasis: Int, qStep: Double, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     require(nNear >= 4 && nNear <= 16,
       "nNear must be in 4..16 (a frame code needs 2 basis + 2 coded co-peaks)")
     require(nBasis >= 2 && nBasis <= nNear, "nBasis must be in 2..nNear")
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(rows => rows.flatMap { r =>
-        containerFrames(r.payload) match {
-          case Some(fs) =>
-            val set = scala.collection.mutable.LinkedHashSet.empty[Long]
-            fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .foreach { f =>
-                decodeImage(f._1).foreach { img =>
-                  affineFrameCodes(
-                    coarsePeakCells(lumaPlane(img), img.getWidth,
-                      img.getHeight, smoothR, radius, minAvg),
-                    kTop, nNear, nBasis, qStep).foreach(set += _)
-                }
-              }
-            set.iterator.map(lm => (r.doc_id, lm))
-          case None => Iterator.empty
-        }
-      }).toDF("doc_id", "lm")
+    pooledFrameCodes(media, every)(b =>
+      decodeImage(b).iterator.flatMap(img => affineFrameCodes(
+        coarsePeakCells(lumaPlane(img), img.getWidth, img.getHeight,
+          smoothR, radius, minAvg), kTop, nNear, nBasis, qStep)))
   }
-
-  /** Video near-dup pairs under the CROP x FULL-AFFINE compound
-    * (m177) via [[videoAffineFrameLandmarks]] — the m174 gate over
-    * pooled per-video code sets. */
-  def videoAffineFramePairs(media: DataFrame, minMatch: Double = 0.02,
-      every: Int = 2, maxDf: Int = 0, kTop: Int = 48, nNear: Int = 8,
-      nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 16)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoAffineFrameLandmarks(media, every, kTop,
-        nNear, nBasis, qStep, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Persisted AFFINE-FRAME video index — the m177 tier's
-    * incremental member ([[AffineFrameFpVersion]] via the shared
-    * code kernel). [[dedupAgainstVideoAffineFrameIndex]] screens an
-    * ingest batch with no corpus re-decode. */
-  def videoAffineFrameIndex(media: DataFrame, every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(videoAffineFrameLandmarks(media, every,
-      kTop, nNear, nBasis, qStep, smoothR, radius, minAvg))
-    landmarkIndex(lms, AffineFrameFpVersion)
-  }
-
-  /** Screen an ingest batch of videos against a pre-built
-    * [[videoAffineFrameIndex]]. Enforces [[AffineFrameFpVersion]]. */
-  def dedupAgainstVideoAffineFrameIndex(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.02, every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 16)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoAffineFrameLandmarks(media, every, kTop,
-        nNear, nBasis, qStep, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFrameFpVersion, "constellation", "videoAffineFrameIndex"))
 
   /** ANCHORED affine-frame codes pooled per VIDEO document — the
     * verified tier's raw table for the frame sequence (m182): every
@@ -5081,10 +4064,9 @@ object Multimodal {
     * renditions (trim, near-duplicate frames) yields an OUTLIER
     * correspondence, which is exactly what the RANSAC verify absorbs.
     * One container walk. */
-  def videoAffineFrameLandmarksAnchored(media: DataFrame,
-      every: Int = 2, kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
+  def videoAffineFrameLandmarksAnchored(media: DataFrame, every: Int, kTop: Int,
+      nNear: Int, nBasis: Int, qStep: Double, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
     media.select(col("doc_id"), col("payload")).as[MediaRow]
@@ -5125,14 +4107,9 @@ object Multimodal {
   def videoAffineFramePairsVerified(media: DataFrame,
       candMinMatch: Double = 0.004, candMinShared: Int = 4,
       verifyMinFrac: Double = 0.4, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0, every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame =
-    affineFramePairsVerifiedFrom(
-      Materialize.eager(
-        videoAffineFrameLandmarksAnchored(media, every, kTop, nNear,
-          nBasis, qStep, smoothR, radius, minAvg)),
+      tolPx: Double = 3.0, maxDf: Int = 0,
+      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored()): DataFrame =
+    affineFramePairsVerifiedFrom(Materialize.eager(f.landmarks(media)),
       candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
       tolPx, maxDf)
 
@@ -5147,15 +4124,10 @@ object Multimodal {
     * asymmetric fan shape keeps indexes and state identity-sized;
     * orient 1 = landed via the mirror readout. */
   def videoAffineFramePairsChiral(media: DataFrame,
-      minMatch: Double = 0.02, every: Int = 2, maxDf: Int = 0,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 16)(
-      implicit s: SparkSession): DataFrame = {
+      minMatch: Double = 0.02, maxDf: Int = 0, minShared: Int = 16,
+      f: VideoAffineFrame = VideoAffineFrame()): DataFrame = {
     val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    val id0 = Materialize.eager(
-      videoAffineFrameLandmarks(media, every, kTop, nNear, nBasis,
-        qStep, smoothR, radius, minAvg))
+    val id0 = Materialize.eager(f.landmarks(media))
     val lms = id0.select(col("doc_id"), lit(0).as("orient"), col("lm"))
       .unionByName(id0.select(col("doc_id"), lit(1).as("orient"),
         mir(col("lm")).as("lm")))
@@ -5348,20 +4320,14 @@ object Multimodal {
       candMinMatch: Double = 0.004, candMinShared: Int = 4,
       verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
       tolPx: Double = 3.0, maxDf: Int = 0,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, nPts: Int = 3)(
-      implicit s: SparkSession): DataFrame =
-    affineFramePairsVerifiedFrom(
-      Materialize.eager(
-        imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
-          qStep, smoothR, radius, minAvg, nPts)),
+      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame =
+    affineFramePairsVerifiedFrom(Materialize.eager(f.landmarks(media)),
       candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
       tolPx, maxDf)
 
   /** BOTH affine-frame tiers — the m174 code gate and the m179 RANSAC
     * verify — off ONE decode and ONE landmark pass (round 16; the
-    * m192 gate previously ran [[imageAffineFramePairs]] AND
+    * m192 gate previously ran [[ImageAffineFrame]] AND
     * [[imageAffineFramePairsVerified]] over the same corpus, paying
     * the dominant linear cost — decode + detection + coding — twice).
     * [[affineFrameCodes]] is by construction the anchored extractor's
@@ -5376,13 +4342,9 @@ object Multimodal {
       minShared: Int = 16, candMinMatch: Double = 0.004,
       candMinShared: Int = 4, verifyMinFrac: Double = 0.5,
       verifyMinAligned: Int = 9, tolPx: Double = 3.0, maxDf: Int = 0,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession)
+      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored())
       : (DataFrame, DataFrame) = {
-    val anchored = Materialize.eager(
-      imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
-        qStep, smoothR, radius, minAvg))
+    val anchored = Materialize.eager(f.landmarks(media))
     (peakLandmarkPairScores(anchored.select(col("doc_id"), col("lm")),
         minMatch, maxDf, minShared),
       affineFramePairsVerifiedFrom(anchored, candMinMatch,
@@ -5398,13 +4360,9 @@ object Multimodal {
       minShared: Int = 16, candMinMatch: Double = 0.004,
       candMinShared: Int = 4, verifyMinFrac: Double = 0.4,
       verifyMinAligned: Int = 9, tolPx: Double = 3.0, maxDf: Int = 0,
-      every: Int = 2, kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession)
+      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored())
       : (DataFrame, DataFrame) = {
-    val anchored = Materialize.eager(
-      videoAffineFrameLandmarksAnchored(media, every, kTop, nNear,
-        nBasis, qStep, smoothR, radius, minAvg))
+    val anchored = Materialize.eager(f.landmarks(media))
     (peakLandmarkPairScores(anchored.select(col("doc_id"), col("lm")),
         minMatch, maxDf, minShared),
       affineFramePairsVerifiedFrom(anchored, candMinMatch,
@@ -5508,7 +4466,7 @@ object Multimodal {
     * gates are materialized — near-dup mass, read three times. Pass 2
     * gathers correspondences for survivors only (a left-semi join keeps
     * the collect_list state at near-dup mass). SURVIVOR-AWARE GATHER:
-    * when pass 1 leaves at most [[survivorGatherMaxPairs]] pairs, pass
+    * when pass 1 leaves at most `gatherMaxPairs` pairs, pass
     * 2's explode is pre-filtered to the survivor DOCS' posting entries
     * by a literal sorted id array (cost bounded by entries x
     * 2*threshold compares), instead of re-exploding the whole posting
@@ -5517,7 +4475,8 @@ object Multimodal {
     * still gates exact survivor pairs, and dropping non-survivor docs'
     * entries can drop no surviving pair's correspondence. */
   private def verifiedCandidates(fan: DataFrame, nl: DataFrame, maxDf: Int,
-      candMinShared: Int, candMinMatch: Double): DataFrame = {
+      candMinShared: Int, candMinMatch: Double,
+      gatherMaxPairs: Long): DataFrame = {
     val o = Seq("orient").filter(fan.columns.contains)
     val docLms = fan.select(col("doc_id"), col("lm"))
     val (cap, solvedCap) = Postings.resolveDfCap(
@@ -5551,7 +4510,7 @@ object Multimodal {
       .filter(col("c").cast("double") / least(col("na"), col("nb"))
         >= candMinMatch))
     val gatherRows =
-      if (surv.count() <= survivorGatherMaxPairs) {
+      if (surv.count() <= gatherMaxPairs) {
         val ids = surv.select(col("doc_a"))
           .unionAll(surv.select(col("doc_b")))
           .distinct().collect().map(_.getLong(0)).sorted.toSeq
@@ -5605,7 +4564,17 @@ object Multimodal {
   def affineFramePairsVerifiedFrom(lms: DataFrame,
       candMinMatch: Double = 0.004, candMinShared: Int = 4,
       verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0): DataFrame = {
+      tolPx: Double = 3.0, maxDf: Int = 0): DataFrame =
+    verifiedPairsFrom(lms, candMinMatch, candMinShared, verifyMinFrac,
+      verifyMinAligned, tolPx, maxDf, SurvivorGatherMaxPairs)
+
+  /** [[affineFramePairsVerifiedFrom]] at an explicit survivor-gather
+    * bound ([[SurvivorGatherMaxPairs]]), so a spec can force either
+    * gather path. */
+  private[graft] def verifiedPairsFrom(lms: DataFrame,
+      candMinMatch: Double, candMinShared: Int, verifyMinFrac: Double,
+      verifyMinAligned: Int, tolPx: Double, maxDf: Int,
+      gatherMaxPairs: Long): DataFrame = {
     require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
       "verifyMinFrac must be in [0, 1]")
     require(tolPx > 0.0, "tolPx must be > 0")
@@ -5617,7 +4586,7 @@ object Multimodal {
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
     val cand = verifiedCandidates(lms, nl, maxDf, candMinShared,
-      candMinMatch)
+      candMinMatch, gatherMaxPairs)
     val verify = affineCloudVerifyUdf(tolPx, verifyMinAligned)
     cand
       .join(clouds.select(col("doc_id").as("doc_a"),
@@ -5658,14 +4627,10 @@ object Multimodal {
     * scored per readout over the smaller identity code count. orient
     * 1 = mirrored. */
   def imageAffineFramePairsChiral(media: DataFrame,
-      minMatch: Double = 0.02, maxDf: Int = 0, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 16)(implicit s: SparkSession): DataFrame = {
+      minMatch: Double = 0.02, maxDf: Int = 0, minShared: Int = 16,
+      f: ImageAffineFrame = ImageAffineFrame()): DataFrame = {
     val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    val id0 = Materialize.eager(
-      imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-        smoothR, radius, minAvg).toDF())
+    val id0 = Materialize.eager(f.landmarks(media))
     val lms = id0.select(col("doc_id"), lit(0).as("orient"), col("lm"))
       .unionByName(id0.select(col("doc_id"), lit(1).as("orient"),
         mir(col("lm")).as("lm")))
@@ -5678,13 +4643,12 @@ object Multimodal {
     * ([[mirrorAffineFrameCode]], pure Long arithmetic). One decode
     * pass, then a pure per-row explode — STREAMING-SAFE (st125 runs
     * it on a file stream against a broadcast identity index). */
-  def imageAffineFrameLandmarksChiral(media: DataFrame, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
+  def imageAffineFrameLandmarksChiral(media: DataFrame, kTop: Int, nNear: Int,
+      nBasis: Int, qStep: Double, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
     imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-        smoothR, radius, minAvg).toDF()
+        smoothR, radius, minAvg, 3).toDF()
       .select(col("doc_id"), explode(array(
         struct(lit(0).as("orient"), col("lm").as("lm")),
         struct(lit(1).as("orient"), mir(col("lm")).as("lm")))).as("r"))
@@ -5720,11 +4684,9 @@ object Multimodal {
     * the blobs MERGE at detection (nothing to re-render — the
     * remaining 3/12), and factors off the fan by more than the
     * quantizer's absorption. */
-  def imageAffineFrameLandmarksSqueezeFan(media: DataFrame,
-      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
+  def imageAffineFrameLandmarksSqueezeFan(media: DataFrame, hyps: Seq[Double],
+      kTop: Int, nNear: Int, nBasis: Int, qStep: Double, smoothR: Int,
+      radius: Int, minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(hyps.nonEmpty && hyps.head == 1.0,
       "hyps(0) must be the identity 1.0 (the registering readout)")
@@ -5759,70 +4721,6 @@ object Multimodal {
       }).toDF("doc_id", "orient", "lm")
   }
 
-  /** Image near-dup pairs under the CROP x ROTATION x EXTREME-SQUEEZE
-    * compound (m184) via [[imageAffineFrameLandmarksSqueezeFan]] —
-    * the m181 asymmetric scorer shape: the lower doc's IDENTITY codes
-    * bucket against the higher doc's identity and de-squeeze
-    * readouts, scored per readout over the smaller identity code
-    * count. The base tier (m174) holds through ~2.5:1 on the gate
-    * class and drops to 4/12 over 3.0-4.0:1 (measured — see the
-    * landmark scaladoc); the fan lands 9/12 there at the same gate
-    * with zero spurious. */
-  def imageAffineFramePairsSqueezeFan(media: DataFrame,
-      minMatch: Double = 0.02, maxDf: Int = 0,
-      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(
-        imageAffineFrameLandmarksSqueezeFan(media, hyps, kTop, nNear,
-          nBasis, qStep, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Screen an ingest batch against a pre-built (IDENTITY)
-    * [[imageAffineFrameIndex]] with the m184 DE-SQUEEZE hypothesis
-    * fan on the PROBE side (m189 — the fan's incremental member): the
-    * index stays identity-sized (the asymmetric fan shape — masters
-    * register once, per [[imageAffineFrameIndex]]), while each probe
-    * emits its identity codes plus each hypothesis factor's
-    * re-rendered readouts and ANY readout clearing the m174 gate
-    * flags the probe. An extreme-squeeze re-upload arriving at ingest
-    * time is caught with no corpus re-decode and no index rebuild.
-    * Enforces [[AffineFrameFpVersion]]. */
-  def dedupAgainstImageAffineFrameIndexSqueezeFan(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.02,
-      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageAffineFrameLandmarksSqueezeFan(media, hyps, kTop, nNear,
-          nBasis, qStep, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex"))
-
-  /** Screen an ingest batch against a pre-built (IDENTITY)
-    * [[imageAffineFrameIndex]] with the m181 MIRROR readout on the
-    * PROBE side (m190 — the chiral tier's incremental member): the
-    * index stays identity-sized (masters never mirror), each probe
-    * emits its identity codes plus their mirror repacks (pure Long
-    * arithmetic), and ANY readout clearing the m174 gate flags the
-    * probe — a mirrored crop x affine re-upload is caught at ingest
-    * with no index rebuild. Enforces [[AffineFrameFpVersion]]. */
-  def dedupAgainstImageAffineFrameIndexChiral(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.02, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 16)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageAffineFrameLandmarksChiral(media, kTop, nNear, nBasis,
-          qStep, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex"))
-
   /** [[imageAffineFrameLandmarksSqueezeFan]] pooled per VIDEO
     * document (m191 — the de-squeeze fan at the frame sequence):
     * every sampled frame's peaks detect ONCE, each hypothesis factor
@@ -5832,11 +4730,10 @@ object Multimodal {
     * uniform across frames, so the matched hypothesis reproduces
     * every frame's natural codes and the pooled readout scores like
     * the image member's. One container walk. */
-  def videoAffineFrameLandmarksSqueezeFan(media: DataFrame,
-      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
+  def videoAffineFrameLandmarksSqueezeFan(media: DataFrame, hyps: Seq[Double],
+      every: Int, kTop: Int, nNear: Int, nBasis: Int, qStep: Double,
+      smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
     require(hyps.nonEmpty && hyps.head == 1.0,
@@ -5882,24 +4779,6 @@ object Multimodal {
       }).toDF("doc_id", "orient", "lm")
   }
 
-  /** Video near-dup pairs under the CROP x ROTATION x EXTREME-SQUEEZE
-    * compound (m191 — m184's fan at the frame sequence), the m181
-    * asymmetric scorer shape: the lower doc's pooled IDENTITY codes
-    * bucket against the higher doc's identity and de-squeeze
-    * readouts. */
-  def videoAffineFramePairsSqueezeFan(media: DataFrame,
-      minMatch: Double = 0.02, maxDf: Int = 0,
-      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 16)(
-      implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(
-        videoAffineFrameLandmarksSqueezeFan(media, hyps, every, kTop,
-          nNear, nBasis, qStep, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
   /** VERIFIED chiral affine-frame pairs (m183 — the m179 verdict on
     * the MIRROR compound): m181's chiral code gate inherits exactly
     * the identity gate's gray-zone fragility (the mirror readout is
@@ -5919,14 +4798,9 @@ object Multimodal {
   def imageAffineFramePairsChiralVerified(media: DataFrame,
       candMinMatch: Double = 0.004, candMinShared: Int = 4,
       verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame =
-    affineFramePairsChiralVerifiedFrom(
-      Materialize.eager(
-        imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
-          qStep, smoothR, radius, minAvg)),
+      tolPx: Double = 3.0, maxDf: Int = 0,
+      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame =
+    affineFramePairsChiralVerifiedFrom(Materialize.eager(f.landmarks(media)),
       candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
       tolPx, maxDf)
 
@@ -5945,14 +4819,9 @@ object Multimodal {
   def videoAffineFramePairsChiralVerified(media: DataFrame,
       candMinMatch: Double = 0.004, candMinShared: Int = 4,
       verifyMinFrac: Double = 0.4, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0, every: Int = 2,
-      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4,
-      qStep: Double = 0.3, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame =
-    affineFramePairsChiralVerifiedFrom(
-      Materialize.eager(
-        videoAffineFrameLandmarksAnchored(media, every, kTop, nNear,
-          nBasis, qStep, smoothR, radius, minAvg)),
+      tolPx: Double = 3.0, maxDf: Int = 0,
+      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored()): DataFrame =
+    affineFramePairsChiralVerifiedFrom(Materialize.eager(f.landmarks(media)),
       candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
       tolPx, maxDf)
 
@@ -5963,10 +4832,10 @@ object Multimodal {
     * gate, and each verifies under [[affineCloudVerifyUdf]] with the
     * admitted chirality matched to its readout (orient 0: det > 0,
     * orient 1: det < 0). */
-  private def affineFramePairsChiralVerifiedFrom(id0: DataFrame,
+  private[graft] def affineFramePairsChiralVerifiedFrom(id0: DataFrame,
       candMinMatch: Double, candMinShared: Int, verifyMinFrac: Double,
-      verifyMinAligned: Int, tolPx: Double, maxDf: Int)(
-      implicit s: SparkSession): DataFrame = {
+      verifyMinAligned: Int, tolPx: Double, maxDf: Int,
+      gatherMaxPairs: Long = SurvivorGatherMaxPairs): DataFrame = {
     require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
       "verifyMinFrac must be in [0, 1]")
     require(tolPx > 0.0, "tolPx must be > 0")
@@ -5980,7 +4849,7 @@ object Multimodal {
       .distinct().groupBy(col("doc_id"))
       .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
     val cand = verifiedCandidates(fan, nl, maxDf, candMinShared,
-      candMinMatch)
+      candMinMatch, gatherMaxPairs)
     val verId = affineCloudVerifyUdf(tolPx, verifyMinAligned, 1)
     val verMir = affineCloudVerifyUdf(tolPx, verifyMinAligned, -1)
     cand
@@ -6003,11 +4872,9 @@ object Multimodal {
     * the raw table behind the verified tier (m179/m180/st124). A pure
     * mapPartitions projection — streaming-safe (st124 runs it on a
     * file stream). */
-  def imageAffineFrameLandmarksAnchored(media: DataFrame, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      nPts: Int = 3)(
-      implicit s: SparkSession): DataFrame = {
+  def imageAffineFrameLandmarksAnchored(media: DataFrame, kTop: Int, nNear: Int,
+      nBasis: Int, qStep: Double, smoothR: Int, radius: Int, minAvg: Int,
+      nPts: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     media.select(col("doc_id"), col("payload")).as[MediaRow]
       .mapPartitions(rows => rows.flatMap { r =>
@@ -6031,49 +4898,24 @@ object Multimodal {
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     affineCloudVerifyUdf(tolPx, verifyMinAligned, detSign)
 
-  /** Persisted ANCHORED affine-frame index — the verified screen's
-    * standing-corpus artifact: the plain [[imageAffineFrameIndex]]
-    * rows PLUS each code's anchor (ax, ay), so a screen can both
-    * equi-join candidates AND reconstruct per-master anchor clouds
-    * without touching the corpus media. Same [[AffineFrameFpVersion]]
-    * stamp (the code space is identical);
-    * [[IncrementalIndex.append]]-compatible. */
-  def imageAffineFrameAnchorIndex(media: DataFrame, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    val lms = Materialize.eager(
-      imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
-        qStep, smoothR, radius, minAvg))
-    landmarkIndex(lms, AffineFrameFpVersion, Seq("lm", "ax", "ay"))
-  }
-
   /** Screen an ingest batch against a pre-built
-    * [[imageAffineFrameAnchorIndex]] with GEOMETRIC VERIFICATION
+    * [[ImageAffineFrameAnchored]] index with GEOMETRIC VERIFICATION
     * (m180 — the m179 verdict at the incremental seam): candidates
     * nominate at the LOW code gate, each (probe, master) candidate is
     * RANSAC-verified from the matched codes' anchor correspondences
     * against the clouds both sides' tables already carry, and a probe
     * is a duplicate of the lowest verified master. Catches the
-    * gray-zone compounds the plain [[dedupAgainstImageAffineFrameIndex]]
+    * gray-zone compounds the plain [[ImageAffineFrame]] screen
     * screen drops, at the same <= 1-in-32k spurious level the m179
     * sweep measured. Enforces [[AffineFrameFpVersion]] and the anchor
     * columns. */
   def dedupAgainstImageAffineFrameIndexVerified(media: DataFrame,
       index: DataFrame, candMinMatch: Double = 0.004,
       candMinShared: Int = 4, verifyMinFrac: Double = 0.5,
-      verifyMinAligned: Int = 9, tolPx: Double = 3.0, kTop: Int = 48,
-      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    Postings.requireStamp(index, Postings.Stamp(AffineFrameFpVersion,
-      "anchored affine-frame", "imageAffineFrameAnchorIndex"),
-      Seq("fp_ver", "ax", "ay"))
-    val lms = Materialize.eager(
-      imageAffineFrameLandmarksAnchored(media, kTop, nNear, nBasis,
-        qStep, smoothR, radius, minAvg))
+      verifyMinAligned: Int = 9, tolPx: Double = 3.0,
+      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame = {
+    Postings.requireStamp(index, f.stamp, Seq("fp_ver", "ax", "ay"))
+    val lms = Materialize.eager(f.landmarks(media))
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val cloudsProbe = lms.select(col("doc_id"), col("ax"), col("ay"))
       .distinct().groupBy(col("doc_id"))
@@ -6126,114 +4968,15 @@ object Multimodal {
     * unknown) lands where the rot-invariant and canonical video tiers
     * are structurally blind. One container walk, codes pooled
     * DISTINCT. */
-  def videoAffineLandmarks(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    require(every >= 1, "every must be >= 1")
+  def videoAffineLandmarks(media: DataFrame, every: Int, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     require(kTop >= 5, "kTop must be >= 5 (a rot constellation is a 5-point code)")
     require(nNear >= 4 && nNear <= 16, "nNear must be in 4..16 (a rot code needs four co-peaks)")
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(rows => rows.flatMap { r =>
-        containerFrames(r.payload) match {
-          case Some(fs) =>
-            val set = scala.collection.mutable.LinkedHashSet.empty[Long]
-            fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .foreach { f =>
-                decodeImage(f._1).foreach { img =>
-                  affineCanonicalCodesRot(img, kTop, nNear, qStepR,
-                    nAng, smoothR, radius, minAvg).foreach(set += _)
-                }
-              }
-            set.iterator.map(lm => (r.doc_id, lm))
-          case None => Iterator.empty
-        }
-      }).toDF("doc_id", "lm")
+    pooledFrameCodes(media, every)(b =>
+      decodeImage(b).iterator.flatMap(affineCanonicalCodesRot(_, kTop, nNear,
+        qStepR, nAng, smoothR, radius, minAvg)))
   }
-
-  /** Persisted CANONICAL video index — the m167 tier's incremental
-    * member: same [[CanonFpVersion]] stamp as the image index via the
-    * shared whitened-code kernel (the m148 shared-kernel precedent).
-    * [[dedupAgainstVideoCanonicalIndex]] screens an ingest batch —
-    * an anamorphic rip at an unknown factor is caught with no corpus
-    * re-decode. */
-  def videoCanonicalLandmarkIndex(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(videoScaleLandmarksCanonical(media,
-      every, kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    landmarkIndex(lms, CanonFpVersion)
-  }
-
-  /** Screen an ingest batch of videos against a pre-built
-    * [[videoCanonicalLandmarkIndex]]. Enforces [[CanonFpVersion]]. */
-  def dedupAgainstVideoCanonicalIndex(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.3, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoScaleLandmarksCanonical(media, every,
-        kTop, nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(CanonFpVersion, "constellation", "videoCanonicalLandmarkIndex"))
-
-  /** Persisted AFFINE video index — the m171 tier's incremental
-    * member ([[AffineFpVersion]] via the shared whitened rot-code
-    * kernel). [[dedupAgainstVideoAffineIndex]] screens an ingest
-    * batch — a tilted anamorphic rip at unknown factors is caught
-    * with no corpus re-decode. */
-  def videoAffineLandmarkIndex(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(videoAffineLandmarks(media, every,
-      kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    landmarkIndex(lms, AffineFpVersion)
-  }
-
-  /** Screen an ingest batch of videos against a pre-built
-    * [[videoAffineLandmarkIndex]]. Enforces [[AffineFpVersion]]. */
-  def dedupAgainstVideoAffineIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.25, every: Int = 2, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoAffineLandmarks(media, every, kTop,
-        nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(AffineFpVersion, "constellation", "videoAffineLandmarkIndex"))
-
-  /** Video near-dup pairs under the FULL-AFFINE compound (m171) via
-    * [[videoAffineLandmarks]]. */
-  def videoAffinePairs(media: DataFrame, minMatch: Double = 0.25,
-      every: Int = 2, maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoAffineLandmarks(media, every, kTop, nNear,
-        qStepR, nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Image near-dup pairs under STRONG unknown anisotropic resize
-    * (the >= ~1.5:1 class) via [[imageScaleLandmarksCanonical]] —
-    * same posting-list scoring, hot-code cap, and smaller-set
-    * match_frac as the scale family. */
-  def imageScalePairsCanonical(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarksCanonical(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      minMatch, maxDf, minShared)
 
   /** Version stamp for the CANONICAL (moment-isotropic) constellation
     * family ([[imageScaleLandmarksCanonical]] — squeeze estimator,
@@ -6243,80 +4986,6 @@ object Multimodal {
     * content never match plain codes, so cross-family screens must
     * fail fast. Parameters are build choices, not covered. */
   val CanonFpVersion: Int = 11101
-
-  /** Persisted CANONICAL constellation index — the incremental member
-    * of the m165 tier: corpus masters fingerprint once on their
-    * moment-isotropic renderings, and
-    * [[dedupAgainstImageCanonicalIndex]] screens every ingest batch —
-    * a re-upload squeezed by an UNKNOWN strong factor is caught with
-    * no corpus re-decode. [[IncrementalIndex.append]]-compatible;
-    * stamped [[CanonFpVersion]]. */
-  def imageCanonicalLandmarkIndex(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      imageScaleLandmarksCanonical(media, kTop, nNear, qStepR, nAng,
-        smoothR, radius, minAvg).toDF())
-    landmarkIndex(lms, CanonFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageCanonicalLandmarkIndex]] — same contract as the plain
-    * scale screen ([[dedupAgainstImageScaleIndex]]), both sides on
-    * their canonical renderings. Enforces [[CanonFpVersion]]. */
-  def dedupAgainstImageCanonicalIndex(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.3, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageScaleLandmarksCanonical(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      index, minMatch, minShared,
-      Postings.Stamp(CanonFpVersion, "constellation", "imageCanonicalLandmarkIndex"))
-
-  /** [[imageScalePairs]] extended to ANISOTROPIC resize — the
-    * aspect-squeeze class (m152): candidates bucket by quad code with
-    * the lower doc's IDENTITY codes on one side and any of the higher
-    * doc's aspect-hypothesis readouts on the other (the m140/m145
-    * asymmetric shape — state/index stay as-is-sized), scored per
-    * hypothesis over the smaller identity code count. Output (doc_a,
-    * doc_b, orient, match_frac) where orient is the hypothesis INDEX
-    * into `hyps`. The default hypothesis set covers the two dominant
-    * display conversions (4:3 <-> 16:9 in both directions); add
-    * factors for corpus-specific squeezes — cost is one extra
-    * geometry pass per hypothesis, not an extra decode. */
-  def imageScalePairsAspect(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0),
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(
-        imageScaleLandmarksAspect(media, hyps, kTop, nNear, qStepR,
-          nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Screen an ingest batch against the PLAIN [[imageScaleLandmarkIndex]]
-    * with the aspect-hypothesis fan — the index is the m144 artifact
-    * unchanged; only the batch fans its readouts. A probe is a
-    * duplicate of the lowest corpus doc reached by ANY hypothesis at
-    * `minMatch`. Enforces [[ScaleFpVersion]]. */
-  def dedupAgainstImageScaleIndexAspect(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.3,
-      hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0), kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageScaleLandmarksAspect(media, hyps, kTop, nNear, qStepR,
-          nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex"))
 
   // ---- IMAGE: rotation-invariant constellations (ANY angle) --------
 
@@ -6422,10 +5091,9 @@ object Multimodal {
   /** Rotation-invariant constellation landmarks per document — the
     * [[imageScaleLandmarks]] contract at the [[constellationCodesRot]]
     * seam. */
-  def imageRotScaleLandmarks(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): Dataset[DocLandmark] = {
+  def imageRotScaleLandmarks(media: DataFrame, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(kTop >= 5, "kTop must be >= 5 (a rot constellation is a 5-point code)")
     require(nNear >= 4 && nNear <= 16, "nNear must be in 4..16 (a rot code needs four co-peaks)")
@@ -6444,58 +5112,10 @@ object Multimodal {
       })
   }
 
-  /** Image near-dup pairs invariant under the FULL similarity group —
-    * translation + uniform scale + rotation at ANY angle (m150): the
-    * skewed-scan / tilted-phone-photo re-upload class, where the
-    * dihedral fan (90-degree grid) is structurally blind and every
-    * exact-pixel tier died already at the resample. Same posting-list
-    * scoring, `maxDf` cap, and `minShared` evidence floor as the
-    * scale family. Mirrored re-uploads stay with the dihedral fan
-    * (reflection flips the chirality bits here by design — folding
-    * them out would halve the code entropy). */
-  def imageRotScalePairs(media: DataFrame, minMatch: Double = 0.2,
-      maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(
-        imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng,
-          smoothR, radius, minAvg).toDF()),
-      minMatch, maxDf, minShared)
-
   /** Version stamp for the ROTATION-invariant constellation family —
     * namespaced (12000 + v) so cross-family screens fail fast;
     * 12001 = v1. */
   val RotScaleFpVersion: Int = 12001
-
-  /** Persisted rotation-invariant constellation index — the
-    * [[imageScaleLandmarkIndex]] contract with [[RotScaleFpVersion]]. */
-  def imageRotScaleLandmarkIndex(media: DataFrame, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-        radius, minAvg).toDF())
-    landmarkIndex(lms, RotScaleFpVersion)
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[imageRotScaleLandmarkIndex]] — a re-upload rotated at ANY
-    * angle (and rescaled, and cropped) is caught with no corpus
-    * re-decode. Enforces [[RotScaleFpVersion]]. */
-  def dedupAgainstImageRotScaleIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.2, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        imageRotScaleLandmarks(media, kTop, nNear, qStepR, nAng, smoothR,
-          radius, minAvg).toDF()),
-      index, minMatch, minShared,
-      Postings.Stamp(RotScaleFpVersion, "rot-constellation", "imageRotScaleLandmarkIndex"))
 
   /** Rotate-about-center (+ uniform scale) re-encode of any PNG
     * payload — the rotation tier's fixture transform: every output
@@ -6574,76 +5194,14 @@ object Multimodal {
     * shape) that the exact-pixel video peak tier (m138) and every
     * whole-frame/window tier miss structurally — interpolation
     * rewrites every frame byte. */
-  def videoScaleLandmarks(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    require(every >= 1, "every must be >= 1")
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(rows => rows.flatMap { r =>
-        containerFrames(r.payload) match {
-          case Some(fs) =>
-            val set = scala.collection.mutable.LinkedHashSet.empty[Long]
-            fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .foreach { f =>
-                decodeImage(f._1).foreach { img =>
-                  constellationCodes(
-                    coarsePeakCells(lumaPlane(img), img.getWidth,
-                      img.getHeight, smoothR, radius, minAvg), kTop,
-                    nNear, qStepR, nAng).foreach(set += _)
-                }
-              }
-            set.iterator.map(lm => (r.doc_id, lm))
-          case None => Iterator.empty
-        }
-      }).toDF("doc_id", "lm")
+  def videoScaleLandmarks(media: DataFrame, every: Int, kTop: Int, nNear: Int,
+      qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
+    pooledFrameCodes(media, every)(b =>
+      decodeImage(b).iterator.flatMap(img => constellationCodes(
+        coarsePeakCells(lumaPlane(img), img.getWidth, img.getHeight,
+          smoothR, radius, minAvg), kTop, nNear, qStepR, nAng)))
   }
-
-  /** Video near-dup pairs on pooled constellation codes — the m147
-    * tier: [[videoScaleLandmarks]] posting rows through the shared
-    * peak scorer at the scale tier's jitter-absorbing threshold; a
-    * cropped+rescaled (+trimmed) re-upload scores over the smaller
-    * pooled set. */
-  def videoScalePairs(media: DataFrame, minMatch: Double = 0.3,
-      every: Int = 2, maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoScaleLandmarks(media, every, kTop, nNear,
-        qStepR, nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Persisted VIDEO constellation index — the m148 member: same
-    * [[ScaleFpVersion]] stamp as the image index via the shared code
-    * kernel (the m139 shared-kernel precedent); `every` and the
-    * detection/quantization knobs are build parameters — screen with
-    * the parameters the index was built with. */
-  def videoScaleLandmarkIndex(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(videoScaleLandmarks(media, every, kTop,
-      nNear, qStepR, nAng, smoothR, radius, minAvg))
-    landmarkIndex(lms, ScaleFpVersion)
-  }
-
-  /** Screen an ingest batch of videos against a pre-built
-    * [[videoScaleLandmarkIndex]] — a cropped+rescaled re-upload of a
-    * corpus master is caught with no corpus re-decode. Same contract
-    * as the image screen ([[screenLandmarkIndex]]). */
-  def dedupAgainstVideoScaleIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.3, every: Int = 2, kTop: Int = 16,
-      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
-      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24,
-      minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoScaleLandmarks(media, every, kTop, nNear,
-        qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex"))
 
   /** ROTATION-invariant constellation landmarks pooled per VIDEO
     * document — the m147 pooling shape at the [[constellationCodesRot]]
@@ -6651,47 +5209,16 @@ object Multimodal {
     * class), rescaled, and/or trimmed lands where the plain video
     * constellation tier (rotation-variant) and every exact-pixel
     * video tier miss. One container walk, codes pooled DISTINCT. */
-  def videoRotScaleLandmarks(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    import s.implicits._
-    require(every >= 1, "every must be >= 1")
+  def videoRotScaleLandmarks(media: DataFrame, every: Int, kTop: Int,
+      nNear: Int, qStepR: Double, nAng: Int, smoothR: Int, radius: Int,
+      minAvg: Int)(implicit s: SparkSession): DataFrame = {
     require(kTop >= 5, "kTop must be >= 5 (a rot constellation is a 5-point code)")
     require(nNear >= 4 && nNear <= 16, "nNear must be in 4..16 (a rot code needs four co-peaks)")
-    media.select(col("doc_id"), col("payload")).as[MediaRow]
-      .mapPartitions(rows => rows.flatMap { r =>
-        containerFrames(r.payload) match {
-          case Some(fs) =>
-            val set = scala.collection.mutable.LinkedHashSet.empty[Long]
-            fs.iterator.zipWithIndex.filter(_._2 % every == 0)
-              .foreach { f =>
-                decodeImage(f._1).foreach { img =>
-                  constellationCodesRot(
-                    coarsePeakCells(lumaPlane(img), img.getWidth,
-                      img.getHeight, smoothR, radius, minAvg), kTop,
-                    nNear, qStepR, nAng).foreach(set += _)
-                }
-              }
-            set.iterator.map(lm => (r.doc_id, lm))
-          case None => Iterator.empty
-        }
-      }).toDF("doc_id", "lm")
+    pooledFrameCodes(media, every)(b =>
+      decodeImage(b).iterator.flatMap(img => constellationCodesRot(
+        coarsePeakCells(lumaPlane(img), img.getWidth, img.getHeight,
+          smoothR, radius, minAvg), kTop, nNear, qStepR, nAng)))
   }
-
-  /** Video near-dup pairs invariant under rotation at ANY angle +
-    * uniform scale + trim (m154): [[videoRotScaleLandmarks]] posting
-    * rows through the shared peak scorer at the rot tier's 0.2
-    * operating gate. */
-  def videoRotScalePairs(media: DataFrame, minMatch: Double = 0.2,
-      every: Int = 2, maxDf: Int = 0, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    peakLandmarkPairScores(
-      Materialize.eager(videoRotScaleLandmarks(media, every, kTop,
-        nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
 
   /** Aspect-HYPOTHESIS constellation landmarks pooled per VIDEO
     * document — the anamorphic-rip class (a 4:3 master re-encoded at
@@ -6700,11 +5227,9 @@ object Multimodal {
     * (detection once per frame), distinct (hypothesis, code) rows
     * pooled per doc. hyps(0) MUST be 1.0 (the identity rows are what
     * register in state/indexes). */
-  def videoScaleLandmarksAspect(media: DataFrame,
-      hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0), every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
+  def videoScaleLandmarksAspect(media: DataFrame, hyps: Seq[Double], every: Int,
+      kTop: Int, nNear: Int, qStepR: Double, nAng: Int, smoothR: Int,
+      radius: Int, minAvg: Int)(implicit s: SparkSession): DataFrame = {
     import s.implicits._
     require(hyps.nonEmpty && hyps.head == 1.0,
       "hyps(0) must be the identity 1.0 (the registering readout)")
@@ -6736,41 +5261,6 @@ object Multimodal {
       }).toDF("doc_id", "orient", "lm")
   }
 
-  /** Video near-dup pairs tolerant of ANAMORPHIC re-encodes (m156):
-    * the m152 aspect fan pooled per sampled frame, through the shared
-    * oriented scorer — lower doc's identity codes vs any of the
-    * higher doc's hypothesis readouts, orient = hypothesis index. */
-  def videoScalePairsAspect(media: DataFrame, minMatch: Double = 0.3,
-      maxDf: Int = 0, hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0),
-      every: Int = 2, kTop: Int = 16, nNear: Int = 8,
-      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    orientedLandmarkPairScores(
-      Materialize.eager(
-        videoScaleLandmarksAspect(media, hyps, every, kTop, nNear,
-          qStepR, nAng, smoothR, radius, minAvg)),
-      minMatch, maxDf, minShared)
-
-  /** Screen an ingest batch of videos against the PLAIN
-    * [[videoScaleLandmarkIndex]] with the aspect-hypothesis fan —
-    * anamorphic re-rips of corpus masters are caught with no corpus
-    * re-decode; the index is the m148 artifact unchanged. Enforces
-    * [[ScaleFpVersion]]. */
-  def dedupAgainstVideoScaleIndexAspect(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.3,
-      hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0), every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        videoScaleLandmarksAspect(media, hyps, every, kTop, nNear,
-          qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex"))
-
   /** Anamorphic re-mux of any decodable video payload — x scaled by
     * `fx` per frame through the bilinear kernel ([[cropResizeRgb]]
     * full-rect form), re-muxed as uncompressed DIB AVI. */
@@ -6788,34 +5278,6 @@ object Multimodal {
         math.max(1, math.round(img.getWidth * fx).toInt), img.getHeight)
     })
   }
-
-  /** Persisted any-angle VIDEO rotation index — the m154 tier's
-    * incremental member: same [[RotScaleFpVersion]] stamp as the image
-    * rot index via the shared code kernel (the m139/m148 precedent). */
-  def videoRotScaleLandmarkIndex(media: DataFrame, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(videoRotScaleLandmarks(media, every,
-      kTop, nNear, qStepR, nAng, smoothR, radius, minAvg))
-    landmarkIndex(lms, RotScaleFpVersion)
-  }
-
-  /** Screen an ingest batch of videos against a pre-built
-    * [[videoRotScaleLandmarkIndex]] — a re-upload rotated at ANY
-    * angle, rescaled, and/or trimmed is caught with no corpus
-    * re-decode. Enforces [[RotScaleFpVersion]]. */
-  def dedupAgainstVideoRotScaleIndex(media: DataFrame,
-      index: DataFrame, minMatch: Double = 0.2, every: Int = 2,
-      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
-      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6,
-      minAvg: Int = 24, minShared: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoRotScaleLandmarks(media, every, kTop,
-        nNear, qStepR, nAng, smoothR, radius, minAvg)),
-      index, minMatch, minShared,
-      Postings.Stamp(RotScaleFpVersion, "constellation", "videoRotScaleLandmarkIndex"))
 
   /** Rotate-about-center (+ uniform scale) re-mux of any decodable
     * video payload — the video rotation tier's fixture transform:
@@ -7356,8 +5818,8 @@ object Multimodal {
 
   /** One (doc_id, payload) row per AVI or MP4 payload whose audio track
     * extracts to PCM16 WAV ([[containerAudioWav]]) — the adapter that feeds
-    * video files into the audio near-dup tier ([[audioLandmarkPairs]],
-    * [[audioFingerprintPairs]], the st73/st74 streaming forms). One
+    * video files into the audio near-dup tier ([[AudioLandmark]],
+    * [[AudioCode]], the st73/st74 streaming forms). One
     * mapPartitions pass, no shuffle; payloads without an extractable
     * audio track emit no row. */
   def videoAudioTracks(media: DataFrame)(implicit s: SparkSession): DataFrame = {
@@ -8653,7 +7115,7 @@ object Multimodal {
     * (cheap pointer arithmetic over the chunk table) but never decoded,
     * which is what makes `every` the knob that holds decode cost flat
     * as frame rates grow. */
-  def videoFramePHash(media: DataFrame, every: Int = 2)(
+  def videoFramePHash(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoFrameHash] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -8669,36 +7131,12 @@ object Multimodal {
       })
   }
 
-  /** Video near-duplicate pairs: two videos match when >= `minMatch`
-    * of their sampled frames (over the smaller sample count) agree at
-    * the same frame index within pHash hamming `maxDist` — re-encoded
-    * or lightly-edited re-uploads keep per-frame perceptual hashes
-    * close, exactly the m78 single-image property applied per frame.
-    *
-    * Scale shape mirrors [[audioFingerprintPairs]]: hashes materialize
-    * ONCE ([[Materialize.eager]] — the decode+DCT is the dominant
-    * cost), candidates come from (frame_idx, 16-bit pHash chunk)
-    * posting-list buckets (pigeonhole-complete for <= 3 bits per
-    * frame), each candidate verifies exactly with `bit_count`, and
-    * `maxDf` drops buckets shared by more than that many videos before
-    * pair expansion — black/intro frames are the hot keys, the same
-    * skew class as silence in the audio tier. */
-  def videoNearDupPairs(media: DataFrame, every: Int = 2, maxDist: Int = 3,
-      minMatch: Double = 0.8, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
-    videoChunkPairScores(
-      hashed.select(col("doc_id"), col("frame_idx"), col("ph")),
-      hashed, maxDist, minMatch, maxDf, multi = false, distinctDocs = false)
-  }
-
   case class VideoFrameHash2(doc_id: Long, frame_idx: Int, ph: Long, phf: Long)
 
   /** [[videoFramePHash]] emitting BOTH orientations per sampled frame
     * (as-is + mirrored-grid hash, one decode via [[pHash64Both]]) —
     * the flip-tolerant video tier's probe table. */
-  def videoFramePHashBoth(media: DataFrame, every: Int = 2)(
+  def videoFramePHashBoth(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoFrameHash2] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -8721,7 +7159,7 @@ object Multimodal {
     * hashes per sampled frame (one decode via [[pHash64Dihedral]]:
     * 0-3 quarter turns, 4-7 mirrored quarter turns) — the
     * orientation-complete video tier's probe table. */
-  def videoFramePHashDihedral(media: DataFrame, every: Int = 2)(
+  def videoFramePHashDihedral(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoFrameHashN] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -8736,54 +7174,6 @@ object Multimodal {
           case None => Iterator.empty
         }
       })
-  }
-
-  /** [[videoNearDupPairsFlipTolerant]] extended to the FULL dihedral-8
-    * orientation set — the phone-ROTATED video re-upload (and the
-    * rotate+mirror compound) that the mirror-only video tier and the
-    * plain aligned tier each miss on every frame: all eight
-    * orientation hashes of each sampled frame enter the
-    * (frame_idx, chunk) posting lists, so a rotated copy's as-is
-    * frames collide with the source's correspondingly-rotated rows at
-    * the same frame index. Frames count once per pair (distinct
-    * frame_idx); strict superset of both narrower video tiers at the
-    * same threshold. 8x posting rows; the maxDf cap counts DISTINCT
-    * docs per bucket, so a [[videoNearDupPairs]]-tuned value carries
-    * over unchanged. */
-  def videoNearDupPairsDihedral(media: DataFrame, every: Int = 2,
-      maxDist: Int = 3, minMatch: Double = 0.8, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(videoFramePHashDihedral(media, every).toDF())
-    videoChunkPairScores(hashed.select(col("doc_id"), col("frame_idx"),
-        explode(col("hs")).as("h")),
-      hashed, maxDist, minMatch, maxDf, multi = true, distinctDocs = true)
-  }
-
-  /** [[videoNearDupPairs]] tolerant to HORIZONTAL MIRRORING — the
-    * mirrored re-upload (every pirate mirror-flip defeats exact,
-    * plain-pHash AND landmark dedup at once, since every frame's hash
-    * changes): each sampled frame contributes its as-is and
-    * mirrored-grid hashes to the (frame_idx, chunk) posting lists, so
-    * a mirrored copy's as-is frames collide with the source's mirrored
-    * rows at the same frame index. A frame pair matches when ANY
-    * orientation combo is within `maxDist`; frames count once
-    * (distinct frame_idx per pair). Strict superset of
-    * [[videoNearDupPairs]] at the same threshold; scale shape
-    * identical with 2x posting-list rows, same pre-aggregation maxDf
-    * cap. */
-  def videoNearDupPairsFlipTolerant(media: DataFrame, every: Int = 2,
-      maxDist: Int = 3, minMatch: Double = 0.8, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(videoFramePHashBoth(media, every).toDF())
-    // the cap counts ROWS: a doc contributes up to TWO rows per
-    // (frame_idx, chunk) — halve the intended doc cap when tuning maxDf
-    videoChunkPairScores(
-      hashed.select(col("doc_id"), col("frame_idx"), col("ph").as("h"))
-        .unionByName(hashed.select(col("doc_id"), col("frame_idx"),
-          col("phf").as("h"))),
-      hashed, maxDist, minMatch, maxDf, multi = true, distinctDocs = false)
   }
 
   /** Shared aligned-frame scorer of the video pHash tiers over
@@ -8828,7 +7218,7 @@ object Multimodal {
     * are a local array — no shuffle, the [[audioLandmarks]] shape).
     * A leading trim of a multiple of `every` frames shifts every
     * sample position but leaves interior landmarks identical. */
-  def videoLandmarks(media: DataFrame, every: Int = 2)(
+  def videoLandmarks(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoLandmark] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -8914,27 +7304,11 @@ object Multimodal {
       })
   }
 
-  /** Video near-duplicate pairs, TIME-SHIFT tolerant — the landmark
-    * tier [[videoNearDupPairs]]'s aligned frame_idx matching cannot
-    * express: a re-upload with the first k·`every` frames CUT keeps
-    * every interior landmark bit-identical, scored as shared distinct
-    * landmarks over the smaller set. Landmarks compare EXACTLY (two
-    * 64-bit hashes), so the contract is lossless edits — cut / splice
-    * of identical frames; a re-ENCODE shifts pHash bits and belongs to
-    * the aligned hamming-tolerant variant instead. The two operators
-    * cover complementary real-world edits, exactly like the audio
-    * pair ([[audioFingerprintPairs]] / [[audioLandmarkPairs]]).
-    *
-    * Scale shape: landmarks materialize ONCE out of the decode pass
-    * (no shuffle before the posting-list groupBy), candidates via
-    * (lm_a, lm_b) posting-list expansion, `maxDf` dropping landmarks
-    * shared by more than that many videos — repeated black/title
-    * frame pairs are the hot key. */
   /** Video near-dup pairs under TIME SHIFT **and** RE-ENCODE — the
     * combined edit neither sibling catches alone (the most common real
-    * pirate copy: trim the intro AND transcode): [[videoNearDupPairs]]
+    * pirate copy: trim the intro AND transcode): [[VideoFrames]]
     * is hamming-tolerant but frame-ALIGNED, so the trim blinds it;
-    * [[videoLandmarkPairs]] is shift-tolerant but compares landmarks
+    * [[VideoShift]] is shift-tolerant but compares landmarks
     * EXACTLY, so the transcode's pHash drift blinds it. Here the
     * 128-bit landmark (lm_a, lm_b) is cut into 8 chunks of 16 bits —
     * the m78 pigeonhole applied to the PAIR: any two landmarks within
@@ -8956,11 +7330,11 @@ object Multimodal {
     * before aggregation (black/title sequences put the same chunk
     * value in thousands of docs AND many landmarks per doc, so the cap
     * counts rows, not docs). */
-  def videoLandmarkPairsTolerant(media: DataFrame, every: Int = 2,
-      maxDist: Int = 6, minMatch: Double = 0.6, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame = {
+  def videoLandmarkPairsTolerant(media: DataFrame, maxDist: Int = 6,
+      minMatch: Double = 0.6, maxDf: Int = 0,
+      f: VideoShift = VideoShift()): DataFrame = {
     require(maxDist < 8, "8 x 16-bit chunks guarantee recall only for maxDist <= 7")
-    val lms = Materialize.eager(videoLandmarks(media, every).toDF())
+    val lms = Materialize.eager(f.landmarks(media))
     val sizes = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
     val chunked = Postings.chunks16(
       lms.select(col("doc_id"), col("lm_a"), col("lm_b")), "lm_a", "lm_b")
@@ -8990,13 +7364,6 @@ object Multimodal {
       .filter(col("match_frac") >= minMatch)
   }
 
-  def videoLandmarkPairs(media: DataFrame, every: Int = 2,
-      minMatch: Double = 0.6, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(videoLandmarks(media, every).toDF()),
-      minMatch, maxDf, Seq("lm_a", "lm_b"))
-
   /** SKIP-TOLERANT video landmarks — the FRAME-RATE-CONVERSION tier's
     * kernel: a naive fps converter remaps base frame indexes as
     * floor(f * num/den), DROPPING frames on a down-conversion and
@@ -9014,7 +7381,7 @@ object Multimodal {
     * badly (the parity flip above), so the rate tier hashes every
     * frame and bounds cost by `gap` instead. Distinct per doc, one
     * mapPartitions pass, no shuffle. */
-  def videoLandmarksSkip(media: DataFrame, gap: Int = 2, every: Int = 1)(
+  def videoLandmarksSkip(media: DataFrame, gap: Int, every: Int)(
       implicit s: SparkSession): Dataset[VideoLandmark] = {
     import s.implicits._
     require(gap >= 1, "gap must be >= 1")
@@ -9043,26 +7410,6 @@ object Multimodal {
       })
   }
 
-  /** Video near-dup pairs tolerant of FRAME-RATE CONVERSION — the
-    * m122 tier: a 30->24 fps re-upload (every 5th frame dropped) or a
-    * 24->30 one (every 4th duplicated), possibly also leading-trimmed,
-    * scores against its master on [[videoLandmarksSkip]]'s
-    * run-collapsed gap-pairs, where the consecutive-pair tier at its
-    * default stride provably collapses below threshold (parity flip —
-    * Round11dSpec pins the miss). Down-conversion floor: a probe
-    * gap-2 pair bridging a drop spans base gap 3, outside the
-    * master's gap-2 set, so ~1/4 of probe landmarks miss per dropped-
-    * frame period (measured floor 0.773585 at 5/4 — don't tune
-    * minMatch above it); up-conversion collapses exactly (1.0,
-    * Round11dSpec asserts it). Same exact-landmark
-    * posting-list scorer and `maxDf` cap as the family. */
-  def videoLandmarkPairsSkip(media: DataFrame, minMatch: Double = 0.6,
-      gap: Int = 2, every: Int = 1, maxDf: Int = 0)(
-      implicit s: SparkSession): DataFrame =
-    landmarkPairScores(
-      Materialize.eager(videoLandmarksSkip(media, gap, every).toDF()),
-      minMatch, maxDf, Seq("lm_a", "lm_b"))
-
   case class VideoLandmarkW(doc_id: Long, win: Int, lm_a: Long, lm_b: Long)
 
   /** CROP-WINDOW video landmarks — the m130 tier's kernel: every
@@ -9082,8 +7429,8 @@ object Multimodal {
     * the image tier (m132/m133): 16 channels per decode instead of
     * 7. Like `every`, a build parameter under [[VideoCropFpVersion]]
     * — screen/score with what you built with. */
-  def videoLandmarksCrop(media: DataFrame, every: Int = 2,
-      extended: Boolean = false)(
+  def videoLandmarksCrop(media: DataFrame, every: Int,
+      extended: Boolean)(
       implicit s: SparkSession): Dataset[VideoLandmarkW] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -9129,10 +7476,8 @@ object Multimodal {
     * `extended = true` scores the thirds channels too (the m134 leg).
     * Arbitrary-offset crops out of scope (see [[CropWindows]]). */
   def videoLandmarkPairsCrop(media: DataFrame, minMatch: Double = 0.6,
-      every: Int = 2, maxDf: Int = 0, extended: Boolean = false)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      videoLandmarksCrop(media, every, extended).toDF())
+      maxDf: Int = 0, f: VideoCrop = VideoCrop()): DataFrame = {
+    val lms = Materialize.eager(f.landmarks(media))
     val sizes = lms.groupBy(col("doc_id"), col("win"))
       .agg(count(lit(1)).as("nl"))
     val pairs = Postings.capDf(lms, Seq("lm_a", "lm_b"), maxDf,
@@ -9169,7 +7514,7 @@ object Multimodal {
     * per-frame window channels, one row per distinct
     * ((win, lm_a, lm_b), doc) with that CHANNEL's landmark count
     * riding along (per-channel counts, the m130 scoring), and
-    * [[dedupAgainstVideoCropIndex]] screens every ingest batch using
+    * [[VideoCrop]] screen screens every ingest batch using
     * its full-frame channel only — a center/quadrant-cropped (and
     * trimmed) re-upload of a corpus master is caught with no corpus
     * re-decode, where every whole-frame video index misses.
@@ -9177,37 +7522,15 @@ object Multimodal {
     * [[VideoCropFpVersion]]. `extended = true` registers the thirds
     * channels (windows 7-15) too; the SCREEN side needs no knob — a
     * probe uses only its full-frame channel either way. */
-  def videoCropLandmarkIndex(media: DataFrame, every: Int = 2,
-      extended: Boolean = false)(
-      implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      videoLandmarksCrop(media, every, extended).toDF())
+  def videoCropLandmarkIndex(media: DataFrame,
+      f: VideoCrop = VideoCrop()): DataFrame = {
+    val lms = Materialize.eager(f.landmarks(media))
     lms.join(lms.groupBy(col("doc_id"), col("win"))
         .agg(count(lit(1)).as("nl")),
         Seq("doc_id", "win"))
       .select(col("win"), col("lm_a"), col("lm_b"), col("doc_id"),
         col("nl"), lit(VideoCropFpVersion).as("fp_ver"))
   }
-
-  /** Screen an ingest batch against a pre-built
-    * [[videoCropLandmarkIndex]]: the batch fingerprints once, keeps
-    * its FULL-FRAME channel (win 0 — a cropped re-upload arrives as a
-    * whole video), equi-joins the index on the landmark pair across
-    * ALL index windows, and a probe is a duplicate of the lowest
-    * corpus doc for which some window channel shares >= `minMatch` of
-    * the smaller channel's distinct landmarks (the m130 metric).
-    * Payloads yielding NO landmarks are absent from the output (the
-    * family contract). Enforces [[VideoCropFpVersion]]; screen with
-    * the parameters the index was built with. */
-  def dedupAgainstVideoCropIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, every: Int = 2)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(videoLandmarksCrop(media, every).toDF())
-        .filter(col("win") === 0),
-      index, minMatch, 0,
-      Postings.Stamp(VideoCropFpVersion, "video crop", "videoCropLandmarkIndex"),
-      Seq("lm_a", "lm_b"), per = Seq("win"))
 
   /** Version stamp for the SKIP-LANDMARK video family
     * ([[videoLandmarksSkip]] — run collapse, gap-pair layout):
@@ -9216,43 +7539,6 @@ object Multimodal {
     * Parameter choices (gap, every) are NOT covered — screen with the
     * parameters the index was built with. */
   val VideoSkipFpVersion: Int = 6001
-
-  /** Persisted SKIP-LANDMARK video index — the incremental member of
-    * the m122 tier: the corpus is fingerprinted ONCE into one row per
-    * distinct ((lm_a, lm_b), doc) with the doc's landmark count
-    * riding along, and [[dedupAgainstVideoSkipIndex]] screens every
-    * ingest batch — a frame-rate-converted (and leading-trimmed)
-    * re-upload of a corpus master is caught with no corpus re-decode,
-    * where the aligned [[videoChunkIndex]] (frame_idx keys) and the
-    * consecutive-pair landmarks both break.
-    * [[IncrementalIndex.append]]-compatible; stamped with
-    * [[VideoSkipFpVersion]]. */
-  def videoSkipLandmarkIndex(media: DataFrame, gap: Int = 2,
-      every: Int = 1)(implicit s: SparkSession): DataFrame = {
-    val lms = Materialize.eager(
-      videoLandmarksSkip(media, gap, every).toDF())
-    landmarkIndex(lms, VideoSkipFpVersion, Seq("lm_a", "lm_b"))
-  }
-
-  /** Screen an ingest batch against a pre-built
-    * [[videoSkipLandmarkIndex]]: the batch fingerprints once,
-    * equi-joins the index on the (lm_a, lm_b) landmark, and a probe
-    * is a duplicate of the lowest corpus doc whose shared distinct
-    * landmarks over the smaller set reach `minMatch` (the m122
-    * metric — keep it at or below the 0.773585 down-conversion
-    * floor). Payloads yielding NO landmarks are absent from the
-    * output, not judged kept (the family contract). Enforces
-    * [[VideoSkipFpVersion]]; screen with the parameters the index was
-    * built with. */
-  def dedupAgainstVideoSkipIndex(media: DataFrame, index: DataFrame,
-      minMatch: Double = 0.6, gap: Int = 2, every: Int = 1)(
-      implicit s: SparkSession): DataFrame =
-    screenLandmarkIndex(
-      Materialize.eager(
-        videoLandmarksSkip(media, gap, every).toDF()),
-      index, minMatch, 0,
-      Postings.Stamp(VideoSkipFpVersion, "video skip", "videoSkipLandmarkIndex"),
-      Seq("lm_a", "lm_b"))
 
   /** Persisted video index for incremental dedup — the t69/s56/m85/m86
     * contract at the VIDEO tier, completing the incremental-index
@@ -9263,9 +7549,9 @@ object Multimodal {
     * batch needs no corpus pass at all. Build once over the corpus;
     * in production bucket by (chunk, ckey) so probe joins are
     * shuffle-free bucket lookups. */
-  def videoChunkIndex(media: DataFrame, every: Int = 2)(
-      implicit s: SparkSession): DataFrame = {
-    val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
+  def videoChunkIndex(media: DataFrame,
+      f: VideoFrames = VideoFrames()): DataFrame = {
+    val hashed = Materialize.eager(f.landmarks(media))
     val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     Postings.chunks16(hashed.join(nf, Seq("doc_id"))
         .select(col("doc_id"), col("frame_idx"), col("ph"), col("nf")), "ph")
@@ -9280,20 +7566,20 @@ object Multimodal {
     * (frame, candidate) with one `bit_count` against the hash carried
     * in the index row, and a probe is a duplicate of the lowest corpus
     * doc whose matching-frame fraction over the smaller sampled-frame
-    * count reaches `minMatch` (the [[videoNearDupPairs]] metric).
+    * count reaches `minMatch` (the [[VideoFrames]] metric).
     * Returns one verdict row per batch video that produced frames;
     * payloads yielding none are absent, not judged kept (the container
     * contract); left-join from the raw batch ids for a row per input.
     *
     * `maxDf` drops index buckets held by more than that many corpus
     * frames BEFORE the probe join — the shared-intro guard
-    * ([[videoNearDupPairs]]): a title-card bucket otherwise multiplies
+    * ([[VideoFrames]]): a title-card bucket otherwise multiplies
     * every probe frame by its membership. */
   def dedupAgainstVideoIndex(media: DataFrame, index: DataFrame,
-      every: Int = 2, maxDist: Int = 3, minMatch: Double = 0.8,
-      maxDf: Int = 0)(implicit s: SparkSession): DataFrame = {
-    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
-    val hashed = Materialize.eager(videoFramePHash(media, every).toDF())
+      maxDist: Int = 3, minMatch: Double = 0.8, maxDf: Int = 0,
+      f: VideoFrames = VideoFrames()): DataFrame = {
+    requireChunkRecall(maxDist)
+    val hashed = Materialize.eager(f.landmarks(media))
     val nf = hashed.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     val keys = Seq("frame_idx", "chunk", "ckey")
     val dup = Postings.chunks16(
@@ -9315,8 +7601,8 @@ object Multimodal {
 
   /** JOINT audio+video near-dup verdict over a video corpus — the
     * fusion tier above the single-modality ladders: pair evidence from
-    * the FRAME tier ([[videoNearDupPairs]] — aligned pHash agreement)
-    * and the AUDIO-TRACK tier ([[audioLandmarkPairs]] over
+    * the FRAME tier ([[VideoFrames]] — aligned pHash agreement)
+    * and the AUDIO-TRACK tier ([[AudioLandmark]] over
     * [[videoAudioTracks]] — positionless landmark agreement on the
     * extracted PCM) full-outer-joins into one row per candidate pair:
     * (doc_a, doc_b, frame_frac, audio_frac, verdict) with verdict
@@ -9338,10 +7624,10 @@ object Multimodal {
   def videoJointNearDup(media: DataFrame, every: Int = 2,
       minFrame: Double = 0.8, minAudio: Double = 0.6,
       maxDf: Int = 0)(implicit s: SparkSession): DataFrame = {
-    val frames = videoNearDupPairs(media, every = every,
-        minMatch = minFrame, maxDf = maxDf)
+    val frames = pairs(VideoFrames(every))(media, minMatch = minFrame,
+        maxDf = maxDf)
       .withColumnRenamed("match_frac", "frame_frac")
-    val audio = audioLandmarkPairs(videoAudioTracks(media),
+    val audio = pairs(AudioLandmark())(videoAudioTracks(media),
         minMatch = minAudio, maxDf = maxDf)
       .withColumnRenamed("match_frac", "audio_frac")
     frames.join(audio, Seq("doc_a", "doc_b"), "full_outer")
@@ -9359,8 +7645,8 @@ object Multimodal {
     * against two PERSISTED indexes (the m155 rot-constellation frame
     * index and the m85-layout audio code index over the corpus's
     * extracted tracks). Each leg is its family's screen
-    * ([[dedupAgainstVideoRotScaleIndex]] /
-    * [[dedupAgainstAudioIndex]] — both fail fast on stamps), and the
+    * ([[VideoRotScale]] screen /
+    * [[AudioCode]] screen — both fail fast on stamps), and the
     * verdicts fuse per probe:
     *  - "reupload"   — rotated/rescaled frames AND the track both
     *                   match a corpus master
@@ -9374,10 +7660,10 @@ object Multimodal {
       audioIndex: DataFrame, minFrame: Double = 0.2,
       minAudio: Double = 0.8, every: Int = 2, minShared: Int = 0)(
       implicit s: SparkSession): DataFrame = {
-    val v = dedupAgainstVideoRotScaleIndex(media, videoIndex,
-        minMatch = minFrame, every = every, minShared = minShared)
+    val v = screen(VideoRotScale(every))(media, videoIndex,
+        minMatch = minFrame, minShared = minShared)
       .select(col("doc_id"), col("dup_src").as("video_src"))
-    val a = dedupAgainstAudioIndex(videoAudioTracks(media), audioIndex,
+    val a = screen(AudioCode)(videoAudioTracks(media), audioIndex,
         minMatch = minAudio)
       .select(col("doc_id"), col("dup_src").as("audio_src"))
     media.select(col("doc_id"))
@@ -9398,8 +7684,8 @@ object Multimodal {
     * and/or trimmed — where the aligned pHash frame tier of
     * [[videoJointNearDup]] provably misses every pair — with the audio
     * track kept or replaced. Frame evidence comes from
-    * [[videoRotScalePairs]] (pooled rotation-invariant constellation
-    * codes), audio evidence from [[audioLandmarkPairs]] over
+    * [[VideoRotScale]] (pooled rotation-invariant constellation
+    * codes), audio evidence from [[AudioLandmark]] over
     * [[videoAudioTracks]]; the same full-outer fusion yields
     *  - "reupload"   — rotated/rescaled frames AND the same track
     *  - "same_video" — frames match, audio replaced (re-dub of a
@@ -9415,10 +7701,10 @@ object Multimodal {
   def videoJointRotNearDup(media: DataFrame, minFrame: Double = 0.2,
       minAudio: Double = 0.6, every: Int = 2, maxDf: Int = 0,
       minShared: Int = 0)(implicit s: SparkSession): DataFrame = {
-    val frames = videoRotScalePairs(media, minMatch = minFrame,
-        every = every, maxDf = maxDf, minShared = minShared)
+    val frames = pairs(VideoRotScale(every))(media, minMatch = minFrame,
+        maxDf = maxDf, minShared = minShared)
       .withColumnRenamed("match_frac", "frame_frac")
-    val audio = audioLandmarkPairs(videoAudioTracks(media),
+    val audio = pairs(AudioLandmark())(videoAudioTracks(media),
         minMatch = minAudio, maxDf = maxDf)
       .withColumnRenamed("match_frac", "audio_frac")
     frames.join(audio, Seq("doc_a", "doc_b"), "full_outer")
@@ -9430,4 +7716,832 @@ object Multimodal {
           .when(col("frame_frac").isNotNull, lit("same_video"))
           .otherwise(lit("same_audio")).as("verdict"))
   }
+
+  // ---- Landmark and hash families, and the three operations over them --
+
+  /** "4 x 16-bit chunks" pigeonhole: the chunk posting lists of the
+    * pHash-style tiers find every pair within hamming 3, no further. */
+  private def requireChunkRecall(maxDist: Int): Unit =
+    require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
+
+  /** A landmark or hash FAMILY: one extractor parameter set, as a value.
+    * [[pairs]], [[index]] and [[screen]] run the family's extractor
+    * ONCE ([[Materialize.eager]] — the decode is the dominant cost and
+    * every consumer reads the materialized rows) and hand the rows to
+    * the family's shared scorer, index layout or index screen. An index
+    * and its screens take the same value, so "screen with the
+    * parameters the index was built with" is one value passed twice
+    * (the fingerprint stamps cover the extractor FUNCTION, never its
+    * parameters); a new tier is a new case class. A family mixes in
+    * what it supports: [[Paired]], [[Indexed]], [[Screened]]. */
+  sealed trait Family extends Product with Serializable {
+    /** The extractor: `media`'s (doc_id, payload) rows decoded into the
+      * family's key rows (distinct per doc and key unless the family
+      * says otherwise). */
+    final def landmarks(media: DataFrame): DataFrame =
+      extract(media)(media.sparkSession)
+    protected def extract(media: DataFrame)(implicit s: SparkSession): DataFrame
+    /** Default gates of [[pairs]] and [[screen]]: the shared-key
+      * fraction over the smaller side, the absolute shared-key floor
+      * (0 and 1 mean any) and the hamming bound of the hash tiers. */
+    def minMatch: Double = 0.6
+    def minShared: Int = 0
+    def maxDist: Int = 3
+    /** Posting key columns of the extractor's rows. */
+    def keys: Seq[String] = Seq("lm")
+  }
+
+  /** A family with a pair scorer: [[pairs]]. */
+  sealed trait Paired extends Family {
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame
+  }
+
+  /** A family whose persisted index rows carry a fingerprint stamp. */
+  sealed trait Stamped extends Family {
+    def stamp: Postings.Stamp
+  }
+
+  /** A family with a persisted index: [[index]] writes one row per
+    * distinct (keys, doc) with the doc's row count `count` riding
+    * along, stamped — the layout [[screenLandmarkIndex]] reads and
+    * [[IncrementalIndex.append]] extends. */
+  sealed trait Indexed extends Stamped {
+    def count: String = "nl"
+    private[operators] def indexRows(lms: DataFrame): DataFrame =
+      landmarkIndex(lms, stamp.ver, keys, count)
+  }
+
+  /** A family that screens ingest batches against a persisted index:
+    * [[screen]]. The probe extractor defaults to [[Family.landmarks]];
+    * `per` lists index columns that split a corpus doc into separately
+    * counted channels. */
+  sealed trait Screened extends Stamped {
+    def screenMinMatch: Double = minMatch
+    def per: Seq[String] = Nil
+    private[operators] def probes(media: DataFrame): DataFrame = landmarks(media)
+    private[operators] def screenRows(rows: => DataFrame, index: DataFrame,
+        minMatch: Double, minShared: Int, maxDist: Int, maxDf: Int): DataFrame =
+      screenLandmarkIndex(rows, index, minMatch, minShared, stamp, keys, per)
+  }
+
+  /** Shared-key families scored by [[landmarkPairScores]]. */
+  sealed abstract class Coded(override val minMatch: Double = 0.6)
+      extends Paired {
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
+      landmarkPairScores(lms, minMatch, maxDf, keys)
+  }
+
+  /** Distinct (doc_id, lm) families scored by [[peakLandmarkPairScores]]. */
+  sealed abstract class Peaked(override val minMatch: Double,
+      override val minShared: Int = 0) extends Paired {
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
+      peakLandmarkPairScores(lms, minMatch, maxDf, minShared)
+  }
+
+  /** Readout-fan families — distinct (doc_id, orient, lm) rows, orient 0
+    * the identity readout — scored by [[orientedLandmarkPairScores]];
+    * output (doc_a, doc_b, orient, match_frac). */
+  sealed abstract class Fanned(override val minMatch: Double,
+      override val minShared: Int = 0) extends Paired {
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
+      orientedLandmarkPairScores(lms, minMatch, maxDf, minShared)
+  }
+
+  /** pHash families scored by [[chunkPairScores]]: `hashes` shapes the
+    * materialized extractor output into (doc_id[, win], h) rows;
+    * output (doc_a, doc_b[, win_a, win_b], dist). Undecodable payloads
+    * drop out (no hash). */
+  sealed abstract class Hashed(oriented: Boolean = true) extends Paired {
+    protected def hashes(hashed: DataFrame): DataFrame
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
+      requireChunkRecall(maxDist) // before the eager decode pass
+      chunkPairScores(hashes(lms), maxDist, maxDf, oriented)
+    }
+  }
+
+  /** Aligned audio frame codes — the m79 tier: two recordings match
+    * when the shared (frame_idx, code) count over the smaller
+    * fingerprint reaches `minMatch`; the (frame_idx, code) bucket IS
+    * the inverted index (13-bit codes per frame position). `maxDf`
+    * drops buckets shared by more than that many documents: on real
+    * audio silent/constant frames share one code at the same index
+    * across unrelated tracks (a bucket of m docs emits m(m-1)/2
+    * pairs), and capped buckets lower `c` but never the `nf`
+    * denominators, so the cap only removes pairs. Alignment is
+    * positional: the re-encoded / re-leveled re-upload; time shifts
+    * are [[AudioLandmark]]'s. The index (m86) rows carry the doc's
+    * frame count `nf` and [[AudioFpVersion]]: a fingerprint-function
+    * change can never silently split index and probes into disjoint
+    * code spaces. Payloads with no frames (undecodable, or shorter
+    * than one frame) are absent from a screen's output. */
+  case object AudioCode extends Coded(0.8) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      audioFingerprint(m).toDF()
+    override def keys = Seq("frame_idx", "code")
+    override def count = "nf"
+    def stamp = Postings.Stamp(AudioFpVersion, "audio", "audioCodeIndex")
+  }
+
+  /** Aligned SPECTRAL frame codes — the fractional-resample tier
+    * (m106): a 44.1 kHz -> 8 kHz interpolated re-upload shares no
+    * sample values with its master, so [[AudioCode]] sees nothing, but
+    * its 64 ms spectral codes are identical (the analysis grid is
+    * anchored in absolute time and frequency). Same aligned scoring,
+    * cap and index layout as [[AudioCode]]; stamped
+    * [[SpectralFpVersion]], so a 44.1 kHz re-upload of an 8 kHz corpus
+    * master is caught against a standing index. */
+  case object AudioSpectralCode extends Coded(0.8) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      audioSpectralCodes(m).toDF()
+    override def keys = Seq("frame_idx", "code")
+    override def count = "nf"
+    def stamp = Postings.Stamp(SpectralFpVersion, "audio", "audioSpectralCodeIndex")
+  }
+
+  /** Positionless code-succession landmarks ([[audioLandmarks]]) — the
+    * TIME-SHIFT tier (m80): a trimmed or padded re-upload shifts every
+    * frame index, so aligned agreement sees nothing, but the sequence
+    * of codes is intact. Match metric: shared DISTINCT landmarks over
+    * the smaller landmark set. On real audio silence yields code 0 and
+    * the (0,0) landmark is the universal hot key the `maxDf` cap
+    * exists for. Landmarks drop position, so two docs sharing brief
+    * textured motifs score on them; the gate (0.6) is lower than the
+    * aligned 0.8 because boundary frames of a trimmed copy straddle
+    * the cut and lose their landmarks. */
+  case class AudioLandmark(gap: Int = 1) extends Coded {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      audioLandmarks(m, gap).toDF()
+  }
+
+  /** Spectral landmarks ([[audioSpectralLandmarks]]) — time-shift AND
+    * rate-free: the tier for the trimmed fractionally-resampled
+    * re-upload (m110), which evades both [[AudioLandmark]] (no common
+    * samples) and [[AudioSpectralCode]] (shifted alignment). */
+  case class AudioSpectralLandmark(gap: Int = 1, hopMs: Int = 64)
+      extends Coded {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      audioSpectralLandmarks(m, gap, hopMs).toDF()
+  }
+
+  /** ONSET-ANCHORED spectral landmarks ([[spectralOnsetLandmarks]]) —
+    * trim tolerance at ARBITRARY offsets plus rate freedom: the tier
+    * for a 50 ms-trimmed (non-hop-multiple) fractionally-resampled
+    * re-upload (m115), which every grid tier misses by construction;
+    * `thresholdFrac` > 0 adds level tolerance (m117). Payloads with NO
+    * landmarks — undecodable bytes, but equally onset-free audio — are
+    * absent from a screen's output (the grid indexes cover onset-free
+    * corpora). Index stamped [[OnsetFpVersion]]. */
+  case class AudioOnset(codesPerOnset: Int = 2, threshold: Int = 1024,
+      minSilenceMs: Int = 8, thresholdFrac: Double = 0.0)
+      extends Coded with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      spectralOnsetLandmarks(m, codesPerOnset, threshold, minSilenceMs,
+        thresholdFrac).toDF()
+    def stamp = Postings.Stamp(OnsetFpVersion, "onset", "audioOnsetLandmarkIndex")
+  }
+
+  /** [[AudioOnset]] with the ROLLING-RMS onset detector
+    * ([[spectralOnsetLandmarksRolling]]) — the m119 tier: a NOISY-FLOOR
+    * corpus (continuous hum under the beat structure) has no
+    * sub-threshold span, so the threshold detectors find zero onsets;
+    * the rolling detector anchors at the bursts regardless. Landmark
+    * VALUES are comparable across detectors (shared packing kernel),
+    * but the detector changes the landmark SET, so its index carries
+    * its own stamp ([[OnsetRollingFpVersion]]): a cross-detector screen
+    * fails fast instead of matching nothing. */
+  case class AudioOnsetRolling(codesPerOnset: Int = 2, ratio: Double = 3.0,
+      rmsMs: Int = 24, minGapMs: Int = 48, minAbs: Int = 64)
+      extends Coded with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      spectralOnsetLandmarksRolling(m, codesPerOnset, ratio, rmsMs,
+        minGapMs, minAbs).toDF()
+    def stamp = Postings.Stamp(OnsetRollingFpVersion, "onset", "audioOnsetLandmarkIndex")
+  }
+
+  /** ONSET-INTERVAL-RATIO landmarks ([[onsetIntervalLandmarks]]) — the
+    * m120 tier: a re-upload SPED UP (or slowed down) by a uniform
+    * factor shifts both the onset grid and every tone's pitch, so all
+    * spectral tiers structurally miss it, while interval ratios ride
+    * through speed, stretch, trim, mux rate and level together.
+    * Index stamped [[IntervalFpVersion]]. */
+  case class AudioInterval(nRatios: Int = 5, qStep: Double = 0.2,
+      threshold: Int = 1024, minSilenceMs: Int = 8)
+      extends Coded with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      onsetIntervalLandmarks(m, nRatios, qStep, threshold, minSilenceMs).toDF()
+    def stamp = Postings.Stamp(IntervalFpVersion, "interval", "audioIntervalLandmarkIndex")
+  }
+
+  /** PITCH-CLASS landmarks ([[chromaOnsetLandmarks]]) — the m124 tier:
+    * a metronomic corpus re-uploaded with an integer-semitone pitch
+    * shift (or speed change), trimmed and re-muxed. The interval tier
+    * is degenerate there (one shared landmark) and the fixed-Hz
+    * spectral tiers break under the scaling; argmax-anchored
+    * constant-Q orderings ride through. 13-bit codes are coarser keys
+    * than the other indexes', so at corpus scale hot codes make wide
+    * screen join buckets — keep a screen's `minMatch` at or below the
+    * 0.727273 fixture floor. Index stamped [[ChromaFpVersion]]. */
+  case class AudioChroma(cyc: Int = 12, threshold: Int = 1024,
+      minSilenceMs: Int = 8, div: Int = 12, folds: Int = 1)
+      extends Coded with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      chromaOnsetLandmarks(m, cyc, threshold, minSilenceMs, div, folds).toDF()
+    def stamp = Postings.Stamp(ChromaFpVersion, "chroma", "audioChromaLandmarkIndex")
+  }
+
+  /** Image pHash hamming distance (m78): 4 chunk buckets of 16 bits
+    * per hash, so any pair within hamming 3 shares an intact chunk and
+    * `bit_count(a ^ b)` verifies exactly — no false positives. The not-
+    * null filter goes AFTER the eager barrier: pushed before it,
+    * Catalyst rewrites `ph IS NOT NULL` to a second UDF invocation and
+    * every payload decodes twice. `maxDf` drops buckets shared by more
+    * than that many images: one hot pHash (blank thumbnails, default
+    * avatars — byte-distinct after re-encode, so exact dedup never
+    * removes them) otherwise makes the candidate set quadratic; pairs
+    * also sharing any rarer chunk still surface. The screen verifies
+    * against the hash carried in the [[pHashChunkIndex]] row; payloads
+    * with NO hash are absent from its output. */
+  case object PHash extends Hashed(oriented = false) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      m.select(col("doc_id"), pHashUdf(col("payload")).as("ph"))
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.filter(col("ph").isNotNull)
+    def stamp = Postings.Stamp(PHashFpVersion, "pHash", "pHashChunkIndex")
+    override private[operators] def screenRows(rows: => DataFrame,
+        index: DataFrame, minMatch: Double, minShared: Int, maxDist: Int,
+        maxDf: Int): DataFrame =
+      screenPHashIndex(rows, index, maxDist, maxDf, stamp, dihedral = false,
+        crop = false)
+  }
+
+  /** [[PHash]] tolerant to HORIZONTAL MIRRORING — the flipped repost:
+    * every image contributes its as-is and mirrored-grid hashes (one
+    * decode, [[pHash64Both]]); pairs verify per orientation combo and
+    * keep the minimum distance, a strict superset of [[PHash]] at the
+    * same threshold. The `maxDf` cap counts DISTINCT docs per bucket,
+    * so a [[PHash]]-tuned value carries over despite the 2x rows. */
+  case object PHashFlip extends Hashed {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      m.select(col("doc_id"), pHashBothUdf(col("payload")).as("hs"))
+    protected def hashes(hashed: DataFrame): DataFrame = {
+      val both = hashed.filter(col("hs").isNotNull)
+        .select(col("doc_id"), col("hs._1").as("ph"), col("hs._2").as("phf"))
+      both.select(col("doc_id"), col("ph").as("h"))
+        .unionByName(both.select(col("doc_id"), col("phf").as("h")))
+    }
+  }
+
+  /** [[PHashFlip]]'s ROTATION sibling — the phone-orientation repost:
+    * four quarter-turn orientation rows per image from one decode
+    * ([[pHash64Rots]]), distinct-doc `maxDf` cap. */
+  case object PHashRot extends Hashed {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      m.select(col("doc_id"), pHashRotsUdf(col("payload")).as("hs"))
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.filter(col("hs").isNotNull)
+        .select(col("doc_id"), explode(col("hs")).as("h"))
+  }
+
+  /** The full DIHEDRAL-8 pass — every flip x rotation compound in one
+    * operator (a rot90+mirror repost needed the right composition of
+    * the two single-trick tiers): all eight orientation hashes from one
+    * decode ([[pHash64Dihedral]]). Its screen probes with all eight
+    * orientations against an AS-IS [[pHashChunkIndex]]: 8x probe-side
+    * rows, the index untouched — orientation tolerance composes with
+    * the persisted index without reindexing. */
+  case object PHashDihedral extends Hashed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      m.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs"))
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.filter(col("hs").isNotNull)
+        .select(col("doc_id"), explode(col("hs")).as("h"))
+    def stamp = Postings.Stamp(PHashFpVersion, "pHash", "pHashChunkIndex")
+    override private[operators] def probes(m: DataFrame): DataFrame =
+      m.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("ph"))
+    override private[operators] def screenRows(rows: => DataFrame,
+        index: DataFrame, minMatch: Double, minShared: Int, maxDist: Int,
+        maxDf: Int): DataFrame =
+      screenPHashIndex(rows, index, maxDist, maxDf, stamp, dihedral = true,
+        crop = false)
+  }
+
+  /** STRUCTURED CROPS (m128): a re-upload cropped to one of the
+    * [[CropWindows]] hashes, as a whole image, exactly to its master's
+    * window hash, which [[PHash]] misses wholesale. Pairs need window
+    * 0 (the full image) on one side — window-vs-window pairs carry no
+    * crop semantics; output (doc_a, doc_b, win_a, win_b, dist).
+    * `extended` adds the 3x3 thirds ladder ([[CropWindowsThirds]]).
+    * The screen probes with the FULL hash only (a crop arrives as a
+    * whole image) against [[pHashCropWindowIndex]], where the corpus
+    * holds every window; its `maxDf` counts DISTINCT corpus docs.
+    * Arbitrary-offset crops are out of scope (the peak tiers). */
+  case class PHashCrop(extended: Boolean = false) extends Hashed
+      with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      m.select(col("doc_id"), (if (extended) pHashCropWindowsExtUdf
+        else pHashCropWindowsUdf)(col("payload")).as("hs"))
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.filter(col("hs").isNotNull)
+        .select(col("doc_id"), explode(col("hs")).as("wh"))
+        .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h"))
+    def stamp = Postings.Stamp(PHashFpVersion, "pHash", "pHashCropWindowIndex")
+    override private[operators] def probes(m: DataFrame): DataFrame =
+      m.select(col("doc_id"), pHashUdf(col("payload")).as("ph"))
+    override private[operators] def screenRows(rows: => DataFrame,
+        index: DataFrame, minMatch: Double, minShared: Int, maxDist: Int,
+        maxDf: Int): DataFrame =
+      screenPHashIndex(rows, index, maxDist, maxDf, stamp, dihedral = false,
+        crop = true)
+  }
+
+  /** Peak-patch landmarks ([[imagePeakLandmarks]]) — ARBITRARY-OFFSET
+    * crops (m136), the scope edge every canonical-window gate pins as a
+    * non-match: a crop keeps a subset of its master's peaks bit-
+    * exactly, so crop-vs-master sits near 1.0 while unrelated images
+    * share nothing. Out: LOSSY re-encodes (JPEG quantization perturbs
+    * patch bytes — [[PeakLossy]] and the pHash tiers) and crops so
+    * tight no interior peak survives. Index stamped [[PeakFpVersion]]. */
+  case class ImagePeak(radius: Int = 2, patch: Int = 4, k: Int = 0)
+      extends Peaked(0.6) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imagePeakLandmarks(m, radius, patch, k)
+    def stamp = Postings.Stamp(PeakFpVersion, "peak", "imagePeakIndex")
+  }
+
+  /** [[ImagePeak]] over sampled video frames, pooled per doc (m138).
+    * SAME [[PeakFpVersion]] as the image index — the hashes come from
+    * one shared kernel, so values are comparable across media kinds. */
+  case class VideoPeak(every: Int = 2, radius: Int = 2, patch: Int = 4,
+      k: Int = 0) extends Peaked(0.6) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoPeakLandmarks(m, every, radius, patch, k)
+    def stamp = Postings.Stamp(PeakFpVersion, "peak", "videoPeakIndex")
+  }
+
+  /** [[ImagePeak]] for the ROTATED/MIRRORED + arbitrary-crop compound
+    * (m140): the lower doc's orient-0 hashes against any of the higher
+    * doc's 8 readouts ([[imagePeakLandmarksOriented]]); a repost
+    * cropped at ANY offset AND rotated/mirrored lands at the
+    * orientation undoing the transform. */
+  case class ImagePeakDihedral(radius: Int = 2, patch: Int = 4)
+      extends Fanned(0.6) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imagePeakLandmarksOriented(m, radius, patch)
+  }
+
+  /** Gray-mean peak descriptors ([[peakBlockDescriptors]]) — LOSSY
+    * (JPEG re-encoded) arbitrary-offset crops, the class [[ImagePeak]]
+    * declares out: peaks anchor as before (positions hold under
+    * quantization at quality >= ~0.9), descriptors match within hamming
+    * `maxDist` via the 4x16-bit chunk pigeonhole, and a pair scores
+    * DISTINCT matched peaks over the smaller side's peak count. Pick
+    * `maxDist` by corpus self-similarity: 1 suffices for quality >=
+    * ~0.92 (the m141 gate; the synthetic family's near-aliased patches
+    * collide at 2-3), 2-3 buys margin at lower qualities on genuinely
+    * independent content. Qualities low enough to move the fine peaks
+    * (~< 0.85) are [[ImageScale]]'s at minMatch 0.2 (m163). Indexed by
+    * [[imagePeakLossyIndex]], screened by
+    * [[dedupAgainstImagePeakLossyIndex]]. */
+  case class PeakLossy(radius: Int = 2, patchDesc: Int = 8) extends Paired {
+    override def minMatch: Double = 0.5
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame = {
+      val (r, p) = (radius, patchDesc)
+      val u = udf((b: Array[Byte]) => peakBlockDescriptors(b, r, p))
+      m.select(col("doc_id"), u(col("payload")).as("ds"))
+    }
+    /** (doc_id, pk, d) rows of the materialized extractor output. */
+    private[operators] def descriptors(lms: DataFrame): DataFrame =
+      lms.filter(col("ds").isNotNull)
+        .select(col("doc_id"), explode(col("ds")).as("pd"))
+        .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
+      requireChunkRecall(maxDist) // before the eager decode pass
+      descriptorChunkPairScores(descriptors(lms), minMatch, maxDist, maxDf)
+    }
+  }
+
+  /** Similarity-invariant peak CONSTELLATIONS ([[imageScaleLandmarks]])
+    * — the crop+RESIZE compound (m143, the most common image re-upload
+    * shape), which every earlier image tier misses structurally: the
+    * window hashes assume anchor-aligned rects, the peak-patch tier
+    * hashes raw pixel bytes that interpolation rewrites, and the
+    * descriptor tier quantizes at FIXED pixel scale. Direction angles
+    * and log distance ratios of coarse-peak triples ride through
+    * translation AND uniform scale. Index (m144) stamped
+    * [[ScaleFpVersion]]. */
+  case class ImageScale(kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
+      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.3) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarks(m, kTop, nNear, qStepR, nAng, smoothR, radius,
+        minAvg).toDF()
+    def stamp = Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex")
+  }
+
+  /** [[ImageScale]] for the FULL similarity compound — rotated/mirrored
+    * AND cropped AND resized (m145): the lower doc's orient-0 codes
+    * against any of the higher doc's 8 angle-readouts
+    * ([[imageScaleLandmarksOriented]]). Its screen (m146) probes the
+    * whole fan against the plain [[ImageScale]] index, unchanged. */
+  case class ImageScaleDihedral(kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24) extends Fanned(0.3) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarksOriented(m, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg)
+    def stamp = Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex")
+  }
+
+  /** UNKNOWN anisotropic resize (m160): both docs' peak clouds are
+    * moment-normalized to isotropic before quad coding
+    * ([[imageScaleLandmarksNormalized]]), so an off-fan squeeze lands
+    * without enumerating factors. [[ImageScaleAspect]] stays the
+    * exact-hypothesis tier for known display conversions; STRONG
+    * squeezes (~>= 1.5:1) damage the detected peak set itself and are
+    * [[ImageScaleCanonical]]'s. */
+  case class ImageScaleNormalized(kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24) extends Peaked(0.3) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarksNormalized(m, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg).toDF()
+  }
+
+  /** STRONG unknown anisotropic resize (the >= ~1.5:1 class, m165):
+    * the IMAGE is resampled to moment-isotropic before detection
+    * ([[imageScaleLandmarksCanonical]]). Index stamped
+    * [[CanonFpVersion]]. */
+  case class ImageScaleCanonical(kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.3) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarksCanonical(m, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg).toDF()
+    def stamp =
+      Postings.Stamp(CanonFpVersion, "constellation", "imageCanonicalLandmarkIndex")
+  }
+
+  /** The FULL-AFFINE compound (m169, [[imageScaleLandmarksAffine]]):
+    * both sides whitened, pairs at the rot tier's lower operating gate
+    * (0.2), screens at 0.25. Index stamped [[AffineFpVersion]]. */
+  case class ImageAffine(kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.2) with Indexed with Screened {
+    override def screenMinMatch: Double = 0.25
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarksAffine(m, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg).toDF()
+    def stamp = Postings.Stamp(AffineFpVersion, "constellation", "imageAffineLandmarkIndex")
+  }
+
+  /** ANISOTROPIC resize by known factors (m152): the lower doc's
+    * IDENTITY codes against any of the higher doc's aspect-hypothesis
+    * readouts ([[imageScaleLandmarksAspect]]); orient is the hypothesis
+    * INDEX into `hyps`. The default set covers the two dominant display
+    * conversions (4:3 <-> 16:9 both ways); an extra factor costs one
+    * geometry pass, not a decode. Screens against the plain
+    * [[ImageScale]] index. */
+  case class ImageScaleAspect(hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0),
+      kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
+      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)
+      extends Fanned(0.3) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageScaleLandmarksAspect(m, hyps, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg)
+    def stamp = Postings.Stamp(ScaleFpVersion, "constellation", "imageScaleLandmarkIndex")
+  }
+
+  /** The FULL similarity group — rotation at ANY angle (m150,
+    * [[imageRotScaleLandmarks]]): the skewed-scan / tilted-photo class
+    * the 90-degree dihedral fan is blind to. Mirrored re-uploads stay
+    * with the fan (reflection flips the chirality bits by design —
+    * folding them out would halve the code entropy). Index stamped
+    * [[RotScaleFpVersion]]. */
+  case class ImageRotScale(kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.2) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageRotScaleLandmarks(m, kTop, nNear, qStepR, nAng, smoothR, radius,
+        minAvg).toDF()
+    def stamp =
+      Postings.Stamp(RotScaleFpVersion, "rot-constellation", "imageRotScaleLandmarkIndex")
+  }
+
+  /** [[ImageScale]] pooled over sampled video frames (m147): a
+    * cropped+rescaled (+trimmed) re-upload scores over the smaller
+    * pooled set. Same [[ScaleFpVersion]] as the image index via the
+    * shared code kernel. */
+  case class VideoScale(every: Int = 2, kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.3) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoScaleLandmarks(m, every, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg)
+    def stamp = Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex")
+  }
+
+  /** UNKNOWN anamorphic video re-encodes (m167,
+    * [[videoScaleLandmarksCanonical]]); same [[CanonFpVersion]] as the
+    * image index via the shared whitened-code kernel. */
+  case class VideoScaleCanonical(every: Int = 2, kTop: Int = 16,
+      nNear: Int = 8, qStepR: Double = 0.15, nAng: Int = 24,
+      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.3) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoScaleLandmarksCanonical(m, every, kTop, nNear, qStepR, nAng,
+        smoothR, radius, minAvg)
+    def stamp =
+      Postings.Stamp(CanonFpVersion, "constellation", "videoCanonicalLandmarkIndex")
+  }
+
+  /** The FULL-AFFINE compound on video (m171, [[videoAffineLandmarks]]):
+    * a tilted anamorphic rip at unknown factors. [[AffineFpVersion]]
+    * via the shared whitened rot-code kernel. */
+  case class VideoAffine(every: Int = 2, kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.25) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoAffineLandmarks(m, every, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg)
+    def stamp = Postings.Stamp(AffineFpVersion, "constellation", "videoAffineLandmarkIndex")
+  }
+
+  /** ANAMORPHIC video re-encodes by known factors (m156): the
+    * [[ImageScaleAspect]] fan pooled per sampled frame
+    * ([[videoScaleLandmarksAspect]]); screens against the plain
+    * [[VideoScale]] index. */
+  case class VideoScaleAspect(hyps: Seq[Double] = Seq(1.0, 0.75, 4.0 / 3.0),
+      every: Int = 2, kTop: Int = 16, nNear: Int = 8, qStepR: Double = 0.15,
+      nAng: Int = 24, smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)
+      extends Fanned(0.3) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoScaleLandmarksAspect(m, hyps, every, kTop, nNear, qStepR, nAng,
+        smoothR, radius, minAvg)
+    def stamp = Postings.Stamp(ScaleFpVersion, "constellation", "videoScaleLandmarkIndex")
+  }
+
+  /** Rotation at ANY angle + uniform scale + trim on video (m154,
+    * [[videoRotScaleLandmarks]]); same [[RotScaleFpVersion]] as the
+    * image rot index via the shared code kernel. */
+  case class VideoRotScale(every: Int = 2, kTop: Int = 16, nNear: Int = 8,
+      qStepR: Double = 0.15, nAng: Int = 24, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.2) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoRotScaleLandmarks(m, every, kTop, nNear, qStepR, nAng, smoothR,
+        radius, minAvg)
+    def stamp =
+      Postings.Stamp(RotScaleFpVersion, "constellation", "videoRotScaleLandmarkIndex")
+  }
+
+  /** The CROP x FULL-AFFINE compound (m174,
+    * [[imageAffineFrameLandmarks]]). Default gate (minMatch 0.02 AND
+    * minShared 16) from the measured operating point at qStep 0.3: the
+    * worst planted 75%-crop x 17 deg x 1.4:1 compound scored 0.0398
+    * with 53 shared codes, the worst fresh decoy 4 shared (~0.003) — a
+    * ~10x margin on both axes. Index stamped [[AffineFrameFpVersion]]. */
+  case class ImageAffineFrame(kTop: Int = 48, nNear: Int = 8,
+      nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24, nPts: Int = 3)
+      extends Peaked(0.02, 16) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageAffineFrameLandmarks(m, kTop, nNear, nBasis, qStep, smoothR,
+        radius, minAvg, nPts).toDF()
+    def stamp =
+      Postings.Stamp(AffineFrameFpVersion, "constellation", "imageAffineFrameIndex")
+  }
+
+  /** The CROP x ROTATION x EXTREME-SQUEEZE compound (m184,
+    * [[imageAffineFrameLandmarksSqueezeFan]]): the lower doc's identity
+    * codes against the higher doc's identity and de-squeeze readouts.
+    * [[ImageAffineFrame]] holds through ~2.5:1 and drops to 4/12 over
+    * 3.0-4.0:1; the fan lands 9/12 there at the same gate with zero
+    * spurious. Its screen (m189) fans the PROBE against the identity
+    * [[ImageAffineFrame]] index — no index rebuild. */
+  case class ImageAffineFrameSqueezeFan(
+      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), kTop: Int = 48,
+      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Fanned(0.02, 16) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageAffineFrameLandmarksSqueezeFan(m, hyps, kTop, nNear, nBasis,
+        qStep, smoothR, radius, minAvg)
+    def stamp =
+      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex")
+  }
+
+  /** [[ImageAffineFrame]]'s identity codes plus their MIRROR repacks
+    * ([[imageAffineFrameLandmarksChiral]], pure Long arithmetic): its
+    * screen (m190) flags a mirrored crop x affine re-upload against the
+    * identity [[ImageAffineFrame]] index — masters never mirror. */
+  case class ImageAffineFrameChiral(kTop: Int = 48, nNear: Int = 8,
+      nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Fanned(0.02, 16) with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageAffineFrameLandmarksChiral(m, kTop, nNear, nBasis, qStep, smoothR,
+        radius, minAvg)
+    def stamp =
+      Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex")
+  }
+
+  /** [[ImageAffineFrame]] with each code's anchor (ax, ay) — the verified
+    * tiers' landmark table ([[imageAffineFrameLandmarksAnchored]]). Its
+    * index rows are the plain index rows PLUS the anchors, so
+    * [[dedupAgainstImageAffineFrameIndexVerified]] can both equi-join
+    * candidates AND rebuild per-master anchor clouds without the
+    * corpus media; same [[AffineFrameFpVersion]] (the code space is
+    * identical). */
+  case class ImageAffineFrameAnchored(kTop: Int = 48, nNear: Int = 8,
+      nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24, nPts: Int = 3) extends Indexed {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      imageAffineFrameLandmarksAnchored(m, kTop, nNear, nBasis, qStep,
+        smoothR, radius, minAvg, nPts)
+    override def keys = Seq("lm", "ax", "ay")
+    def stamp =
+      Postings.Stamp(AffineFrameFpVersion, "anchored affine-frame", "imageAffineFrameAnchorIndex")
+  }
+
+  /** [[ImageAffineFrame]] pooled over sampled video frames (m177,
+    * [[videoAffineFrameLandmarks]]) — the m174 gate over per-video code
+    * sets; [[AffineFrameFpVersion]] via the shared code kernel. */
+  case class VideoAffineFrame(every: Int = 2, kTop: Int = 48,
+      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24)
+      extends Peaked(0.02, 16) with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoAffineFrameLandmarks(m, every, kTop, nNear, nBasis, qStep,
+        smoothR, radius, minAvg)
+    def stamp =
+      Postings.Stamp(AffineFrameFpVersion, "constellation", "videoAffineFrameIndex")
+  }
+
+  /** [[ImageAffineFrameSqueezeFan]] at the frame sequence (m191,
+    * [[videoAffineFrameLandmarksSqueezeFan]]). */
+  case class VideoAffineFrameSqueezeFan(
+      hyps: Seq[Double] = Seq(1.0, 3.0, 3.5, 4.0), every: Int = 2,
+      kTop: Int = 48, nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3,
+      smoothR: Int = 4, radius: Int = 6, minAvg: Int = 24)
+      extends Fanned(0.02, 16) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoAffineFrameLandmarksSqueezeFan(m, hyps, every, kTop, nNear,
+        nBasis, qStep, smoothR, radius, minAvg)
+  }
+
+  /** [[VideoAffineFrame]] with each code's anchor — the video verified
+    * tiers' landmark table ([[videoAffineFrameLandmarksAnchored]]). */
+  case class VideoAffineFrameAnchored(every: Int = 2, kTop: Int = 48,
+      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24) extends Family {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoAffineFrameLandmarksAnchored(m, every, kTop, nNear, nBasis, qStep,
+        smoothR, radius, minAvg)
+  }
+
+  /** Frame-aligned video pHash families scored by
+    * [[videoChunkPairScores]]: `hashes` shapes the materialized
+    * per-frame hashes into (doc_id, frame_idx, h) rows; `multi`
+    * (several rows per doc and frame) drops same-doc pairs. */
+  sealed abstract class Framed(multi: Boolean, distinctDocs: Boolean)
+      extends Paired {
+    override def minMatch: Double = 0.8
+    protected def hashes(hashed: DataFrame): DataFrame
+    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+        maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
+      requireChunkRecall(maxDist)
+      val hashed = lms
+      videoChunkPairScores(hashes(hashed), hashed, maxDist, minMatch, maxDf,
+        multi, distinctDocs)
+    }
+  }
+
+  /** Frame-ALIGNED video pHash (m78 per frame): two videos match when
+    * >= `minMatch` of their sampled frames (over the smaller sample
+    * count) agree at the same frame index within hamming `maxDist`.
+    * Candidates come from (frame_idx, 16-bit chunk) buckets; `maxDf`
+    * drops buckets shared by more than that many videos — black/intro
+    * frames are the hot keys, the same skew class as silence in the
+    * audio tier. Indexed by [[videoChunkIndex]], screened by
+    * [[dedupAgainstVideoIndex]]. */
+  case class VideoFrames(every: Int = 2) extends Framed(false, false) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoFramePHash(m, every).toDF()
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.select(col("doc_id"), col("frame_idx"), col("ph"))
+  }
+
+  /** [[VideoFrames]] tolerant to HORIZONTAL MIRRORING — every pirate
+    * mirror-flip defeats exact, plain-pHash AND landmark dedup at once:
+    * each sampled frame contributes its as-is and mirrored-grid hashes,
+    * a frame pair matches when ANY orientation combo is within
+    * `maxDist`, frames count once. The cap counts ROWS: a doc
+    * contributes up to TWO rows per (frame_idx, chunk) — halve the
+    * intended doc cap when tuning maxDf. */
+  case class VideoFramesFlip(every: Int = 2) extends Framed(true, false) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoFramePHashBoth(m, every).toDF()
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.select(col("doc_id"), col("frame_idx"), col("ph").as("h"))
+        .unionByName(hashed.select(col("doc_id"), col("frame_idx"),
+          col("phf").as("h")))
+  }
+
+  /** [[VideoFramesFlip]] extended to the FULL dihedral-8 set — the
+    * phone-ROTATED video re-upload (and rotate+mirror): all eight
+    * orientation hashes of each sampled frame enter the posting lists.
+    * The cap counts DISTINCT docs per bucket, so a [[VideoFrames]]-tuned
+    * value carries over despite the 8x rows. */
+  case class VideoFramesDihedral(every: Int = 2) extends Framed(true, true) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoFramePHashDihedral(m, every).toDF()
+    protected def hashes(hashed: DataFrame): DataFrame =
+      hashed.select(col("doc_id"), col("frame_idx"), explode(col("hs")).as("h"))
+  }
+
+  /** Consecutive sampled-frame hash pairs ([[videoLandmarks]]) — the
+    * TIME-SHIFT video tier, the [[AudioLandmark]] shape: a trimmed
+    * copy keeps every interior landmark. `maxDf` drops landmarks shared
+    * by more than that many videos — repeated black/title frame pairs
+    * are the hot key. Re-encode drift is [[videoLandmarkPairsTolerant]]'s. */
+  case class VideoShift(every: Int = 2) extends Coded {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoLandmarks(m, every).toDF()
+    override def keys = Seq("lm_a", "lm_b")
+  }
+
+  /** Run-collapsed gap-pair landmarks ([[videoLandmarksSkip]]) — the
+    * FRAME-RATE CONVERSION tier (m122): a 30->24 fps re-upload (every
+    * 5th frame dropped) or a 24->30 one (every 4th duplicated), where
+    * [[VideoShift]] at its default stride provably collapses below
+    * threshold (parity flip). Down-conversion floor: ~1/4 of probe
+    * landmarks miss per dropped-frame period (measured 0.773585 at 5/4
+    * — don't tune minMatch above it); up-conversion collapses exactly.
+    * Index stamped [[VideoSkipFpVersion]]. */
+  case class VideoSkip(gap: Int = 2, every: Int = 1)
+      extends Coded with Indexed with Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoLandmarksSkip(m, gap, every).toDF()
+    override def keys = Seq("lm_a", "lm_b")
+    def stamp = Postings.Stamp(VideoSkipFpVersion, "video skip", "videoSkipLandmarkIndex")
+  }
+
+  /** Per-window video landmarks ([[videoLandmarksCrop]]) — the m130
+    * crop tier. Pairs: [[videoLandmarkPairsCrop]]; index:
+    * [[videoCropLandmarkIndex]]. The screen keeps the probe's FULL-FRAME
+    * channel only (win 0 — a cropped re-upload arrives as a whole
+    * video; `extended` is an index-side knob) and scores each corpus
+    * window channel separately. */
+  case class VideoCrop(every: Int = 2, extended: Boolean = false)
+      extends Screened {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoLandmarksCrop(m, every, extended).toDF()
+    override def keys = Seq("lm_a", "lm_b")
+    override def per = Seq("win")
+    def stamp = Postings.Stamp(VideoCropFpVersion, "video crop", "videoCropLandmarkIndex")
+    override private[operators] def probes(m: DataFrame): DataFrame =
+      videoLandmarksCrop(m, every, extended = false)(m.sparkSession).toDF()
+    override private[operators] def screenRows(rows: => DataFrame,
+        index: DataFrame, minMatch: Double, minShared: Int, maxDist: Int,
+        maxDf: Int): DataFrame =
+      screenLandmarkIndex(rows.filter(col("win") === 0), index, minMatch,
+        minShared, stamp, keys, per)
+  }
+
+  /** Near-duplicate pairs of `media` under family `f`, scored over its
+    * landmarks. Gates default to the family's; `maxDf` (0 = uncapped,
+    * [[AutoDf]] = solved where the scorer can) drops posting keys held
+    * by more than that many documents before pair expansion. */
+  def pairs(f: Paired)(media: DataFrame, minMatch: Double = f.minMatch,
+      maxDf: Int = 0, minShared: Int = f.minShared,
+      maxDist: Int = f.maxDist): DataFrame =
+    f.scores(Materialize.eager(f.landmarks(media)), minMatch, maxDf,
+      minShared, maxDist)
+
+  /** Persisted index of `media` under family `f` — build once, then
+    * [[screen]] every ingest batch with the same family value. */
+  def index(f: Indexed)(media: DataFrame): DataFrame =
+    f.indexRows(Materialize.eager(f.landmarks(media)))
+
+  /** Screen an ingest batch against a persisted index of family `f`:
+    * fail-fast stamp gate (before any probe decode), then one verdict
+    * row (doc_id, kept, dup_src = lowest matching corpus doc) per probe
+    * that yields landmarks — a caller needing a verdict per raw input
+    * left-joins from the raw batch ids. */
+  def screen(f: Screened)(media: DataFrame, index: DataFrame,
+      minMatch: Double = f.screenMinMatch, minShared: Int = f.minShared,
+      maxDist: Int = f.maxDist, maxDf: Int = 0): DataFrame =
+    f.screenRows(Materialize.eager(f.probes(media)), index, minMatch,
+      minShared, maxDist, maxDf)
 }

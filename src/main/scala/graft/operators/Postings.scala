@@ -36,11 +36,17 @@ private[operators] object Postings {
     * by at most `maxDf` rows (`distinctDocs = false`) or distinct
     * `doc_id`s (`distinctDocs = true`, for tables with several rows
     * per doc and key, e.g. orientations or windows), via a left-semi
-    * join against the per-key df. `maxDf <= 0` returns `rows` as is.
-    * Capping before `collect_list` keeps a hot key's giant posting
-    * list from ever materializing in one aggregation row. */
+    * join against the per-key df. `maxDf <= 0` returns `rows` as is,
+    * except [[Multimodal.AutoDf]], which throws: a cap is solved only
+    * by the scorers that call [[resolveDfCap]] first, and every other
+    * scorer passes through here, so `AutoDf` fails fast instead of
+    * silently running uncapped. Capping before `collect_list` keeps a
+    * hot key's giant posting list from ever materializing in one
+    * aggregation row. */
   def capDf(rows: DataFrame, keys: Seq[String], maxDf: Int,
-      distinctDocs: Boolean = false): DataFrame =
+      distinctDocs: Boolean = false): DataFrame = {
+    require(maxDf != Multimodal.AutoDf, "maxDf = AutoDf: this scorer " +
+      "cannot solve a df cap; pass an explicit maxDf (0 = uncapped)")
     if (maxDf <= 0) rows
     else rows.join(
       rows.groupBy(keys.map(col): _*)
@@ -48,6 +54,7 @@ private[operators] object Postings {
           else count(lit(1))).as("df"))
         .filter(col("df") <= maxDf).select(keys.map(col): _*),
       keys, "left_semi")
+  }
 
   /** `rows` with each row repeated per 16-bit chunk of its 64-bit
     * `hashCols`: added columns `chunk` (0..3 over the first hash, low
@@ -139,16 +146,17 @@ private[operators] object Postings {
 
   /** The distinct-doc posting cap as a keep-PREDICATE over a per-code
     * posting row whose distinct-doc count is already in hand (`dfCol`):
-    * explicit maxDf when > 0, [[Multimodal.hotCodeAutoCap]] (with the
+    * explicit maxDf when > 0, `autoCap` (with the
     * [[Multimodal.hotCodesDropped]] accumulator and a warn per dropped
     * code) otherwise; `report` forces the accumulator path for a cap
     * the operator SOLVED itself. Filtering where the posting list is
     * built saves [[capDf]]'s count aggregation and semi-join back, two
     * extra shuffles of the full table on the same key. */
   def dfCapKeep(s: SparkSession, lmCol: Column, dfCol: Column,
-      maxDf: Int, report: Boolean = false): Column = {
+      maxDf: Int, report: Boolean = false,
+      autoCap: Int = Multimodal.HotCodeAutoCap): Column = {
     val auto = maxDf <= 0 || report
-    val cap = if (maxDf <= 0) Multimodal.hotCodeAutoCap else maxDf
+    val cap = if (maxDf <= 0) autoCap else maxDf
     if (cap <= 0) lit(true)
     else if (!auto) dfCol <= cap
     else {

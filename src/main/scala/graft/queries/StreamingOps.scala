@@ -5,6 +5,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Multimodal, Sessionize}
 import Util._
+import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
+  AudioLandmark, AudioOnset, AudioOnsetRolling, AudioSpectralCode,
+  AudioSpectralLandmark, ImageAffine, ImageAffineFrame,
+  ImageAffineFrameAnchored, ImageAffineFrameChiral, ImageAffineFrameSqueezeFan,
+  ImagePeak, ImagePeakDihedral, ImageRotScale, ImageScale, ImageScaleAspect,
+  ImageScaleCanonical, ImageScaleDihedral, ImageScaleNormalized, PHash,
+  PHashCrop, PHashDihedral, PHashFlip, PHashRot, PeakLossy, VideoAffine,
+  VideoAffineFrame, VideoAffineFrameSqueezeFan, VideoCrop, VideoFrames,
+  VideoFramesDihedral, VideoFramesFlip, VideoPeak, VideoRotScale, VideoScale,
+  VideoScaleAspect, VideoScaleCanonical, VideoShift, VideoSkip}
 
 /** Structured Streaming + stateful + multimodal surface.
   *
@@ -621,7 +631,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngVariant(id - 20))
       val media = s.range(0, 40)
         .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-      Multimodal.pHashPairs(media, maxDist = 3, maxDf = 64)
+      Multimodal.pairs(PHash)(media, maxDist = 3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -639,7 +649,7 @@ object StreamingOps extends QueryPack {
           (160 + ((id - 20) % 13) * 16).toInt, num = 9, den = 10))
       val media = s.range(0, 40)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioFingerprintPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioCode)(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -657,7 +667,7 @@ object StreamingOps extends QueryPack {
           (320 + ((id - 20) % 8) * 64 - 128).toInt, skip = 128))
       val media = s.range(0, 14).union(s.range(20, 34))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioLandmark())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -687,7 +697,7 @@ object StreamingOps extends QueryPack {
           frameOffset = 2))
       val media = s.range(0, 8).union(s.range(20, 28))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(VideoShift())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -725,7 +735,7 @@ object StreamingOps extends QueryPack {
           audioId = id % 4, audioSamples = (320 + (id % 4) * 64).toInt))
       val media = s.range(0, 8)
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(Multimodal.videoAudioTracks(media),
+      Multimodal.pairs(AudioLandmark())(Multimodal.videoAudioTracks(media),
         maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -758,7 +768,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticMp4(id - 20, (6 + (id - 20) % 3).toInt))
       val media = s.range(0, 8).union(s.range(20, 28))
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-      Multimodal.videoNearDupPairs(media, maxDf = 64)
+      Multimodal.pairs(VideoFrames())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -775,7 +785,7 @@ object StreamingOps extends QueryPack {
           perFrag = 2 + (id % 2).toInt))
       val media = s.range(0, 8).union(s.range(20, 28))
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-      Multimodal.videoNearDupPairs(media, maxDf = 64)
+      Multimodal.pairs(VideoFrames())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -792,7 +802,7 @@ object StreamingOps extends QueryPack {
           audioId = id % 5, audioSamples = (320 + (id % 5) * 64).toInt))
       val media = s.range(0, 10)
         .select(col("id").as("doc_id"), mp4(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(Multimodal.videoAudioTracks(media),
+      Multimodal.pairs(AudioLandmark())(Multimodal.videoAudioTracks(media),
         maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -815,7 +825,7 @@ object StreamingOps extends QueryPack {
           unknownSize = id % 2 == 1))
       val media = s.range(0, 8).union(s.range(20, 28))
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-      Multimodal.videoNearDupPairs(media, maxDf = 64)
+      Multimodal.pairs(VideoFrames())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -833,7 +843,7 @@ object StreamingOps extends QueryPack {
           blockGroup = id % 4 == 3))
       val media = s.range(0, 10)
         .select(col("id").as("doc_id"), mkv(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(Multimodal.videoAudioTracks(media),
+      Multimodal.pairs(AudioLandmark())(Multimodal.videoAudioTracks(media),
         maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -854,7 +864,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticWavTones(id - 20, 44100))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioSpectralPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioSpectralCode)(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -879,7 +889,7 @@ object StreamingOps extends QueryPack {
       val index = Multimodal.pHashChunkIndex(corpus)
       val probes = s.range(20, 24).union(s.range(30, 32)).union(s.range(140, 142))
         .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-      Multimodal.dedupAgainstPHashIndexDihedral(probes, index, maxDf = 64)
+      Multimodal.screen(PHashDihedral)(probes, index, maxDf = 64)
         .orderBy(col("doc_id"))
     }),
 
@@ -899,10 +909,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticWavTones(id, 44100))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioSpectralCodeIndex(corpus)
+      val index = Multimodal.index(AudioSpectralCode)(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioSpectralIndex(probes, index)
+      Multimodal.screen(AudioSpectralCode)(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -959,7 +969,7 @@ object StreamingOps extends QueryPack {
           offsetMs = 96))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioSpectralLandmarkPairs(media, maxDf = 64, hopMs = 32)
+      Multimodal.pairs(AudioSpectralLandmark(hopMs = 32))(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -981,7 +991,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticWavTones(id, 44100))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioSpectralCodeIndex(corpus)
+      val index = Multimodal.index(AudioSpectralCode)(corpus)
         .select(col("frame_idx"), col("code"), col("doc_id").as("src"),
           col("nf").as("nf_src"))
       val staged = stageBatches("graft-stream-specidx",
@@ -1029,7 +1039,7 @@ object StreamingOps extends QueryPack {
           offsetMs = 128))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioSpectralLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioSpectralLandmark())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1075,7 +1085,7 @@ object StreamingOps extends QueryPack {
           offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioOnsetLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioOnset())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1097,11 +1107,11 @@ object StreamingOps extends QueryPack {
           offsetMs = 128))
       val media = s.range(0, 8).union(s.range(20, 26))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val onset = Multimodal.audioOnsetLandmarkPairs(media, maxDf = 64)
+      val onset = Multimodal.pairs(AudioOnset())(media, maxDf = 64)
         .select(lit("onset").as("tier"), col("doc_a"), col("doc_b"),
           col("match_frac"))
-      val spectral = Multimodal.audioSpectralLandmarkPairs(media,
-          maxDf = 64)
+      val spectral = Multimodal.pairs(AudioSpectralLandmark())(media,
+        maxDf = 64)
         .select(lit("spectral").as("tier"), col("doc_a"), col("doc_b"),
           col("match_frac"))
       onset.unionByName(spectral)
@@ -1129,7 +1139,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24)).union(s.range(26, 28))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.pHashPairs(media, maxDist = 3, maxDf = 64)
+      Multimodal.pairs(PHash)(media, maxDist = 3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1236,10 +1246,10 @@ object StreamingOps extends QueryPack {
           gateMs = 32, segMs = 96, permMs = 32))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioOnsetLandmarkIndex(corpus)
+      val index = Multimodal.index(AudioOnset())(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioOnsetIndex(probes, index)
+      Multimodal.screen(AudioOnset())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -1264,8 +1274,7 @@ object StreamingOps extends QueryPack {
           gainNum = 1, gainDen = 16))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioOnsetLandmarkPairs(media, maxDf = 64,
-          thresholdFrac = 0.125)
+      Multimodal.pairs(AudioOnset(thresholdFrac = 0.125))(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1292,7 +1301,7 @@ object StreamingOps extends QueryPack {
           floorNum = 1, floorDen = 16))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioOnsetLandmarkPairsRolling(media, maxDf = 64)
+      Multimodal.pairs(AudioOnsetRolling())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1318,7 +1327,7 @@ object StreamingOps extends QueryPack {
           offsetMs = 50, speedNum = 21, speedDen = 20))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioIntervalLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioInterval())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1340,7 +1349,7 @@ object StreamingOps extends QueryPack {
           pitchNum = 196, pitchDen = 185))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioIntervalLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioInterval())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1415,10 +1424,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticWavBeats(id, 44100, ms = 1000))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioIntervalLandmarkIndex(corpus)
+      val index = Multimodal.index(AudioInterval())(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioIntervalIndex(probes, index)
+      Multimodal.screen(AudioInterval())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -1498,7 +1507,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 28))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoLandmarkPairsSkip(media, maxDf = 64)
+      Multimodal.pairs(VideoSkip())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1527,7 +1536,7 @@ object StreamingOps extends QueryPack {
           uniformSegMs = 96))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioChromaLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioChroma())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1551,7 +1560,7 @@ object StreamingOps extends QueryPack {
           uniformSegMs = 96))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioChromaLandmarkPairs(media, maxDf = 64, div = 24)
+      Multimodal.pairs(AudioChroma(div = 24))(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1585,7 +1594,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 28))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.pHashPairsCropTolerant(media, maxDist = 3, maxDf = 64)
+      Multimodal.pairs(PHashCrop())(media, maxDist = 3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("win_a"), col("win_b"))
     }),
 
@@ -1609,8 +1618,8 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.pHashPairsCropTolerant(media, maxDist = 3, maxDf = 64,
-          extended = true)
+      Multimodal.pairs(PHashCrop(extended = true))(media, maxDist = 3,
+        maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("win_a"), col("win_b"))
     }),
 
@@ -1637,7 +1646,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imagePeakPairs(media, minMatch = 0.6, maxDf = 64)
+      Multimodal.pairs(ImagePeak())(media, minMatch = 0.6, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1675,7 +1684,7 @@ object StreamingOps extends QueryPack {
         .union(s.range(20, 24).toDF("id"))
         .union(Seq(200L, 201L).toDF("id"))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoPeakPairs(media, every = 1, maxDf = 64)
+      Multimodal.pairs(VideoPeak(every = 1))(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1736,7 +1745,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imagePeakPairsDihedral(media, minMatch = 0.6, maxDf = 64)
+      Multimodal.pairs(ImagePeakDihedral())(media, minMatch = 0.6, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -1765,7 +1774,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imagePeakPairsLossy(media, minMatch = 0.75, maxDist = 1,
+      Multimodal.pairs(PeakLossy())(media, minMatch = 0.75, maxDist = 1,
         maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -1873,7 +1882,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairs(media, minMatch = 0.4, maxDf = 64)
+      Multimodal.pairs(ImageScale())(media, minMatch = 0.4, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1898,11 +1907,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngBlobs(id))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageScale())(corpus)
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageScaleIndex(probes, index,
-          minMatch = 0.4)
+      Multimodal.screen(ImageScale())(probes, index, minMatch = 0.4)
         .orderBy(col("doc_id"))
     }),
 
@@ -1964,8 +1972,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairsDihedral(media, minMatch = 0.4,
-          maxDf = 64)
+      Multimodal.pairs(ImageScaleDihedral())(media, minMatch = 0.4, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1987,11 +1994,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngBlobs(id))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageScale())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageScaleIndexDihedral(probes, index,
-          minMatch = 0.4)
+      Multimodal.screen(ImageScaleDihedral())(probes, index, minMatch = 0.4)
         .orderBy(col("doc_id"))
     }),
 
@@ -2070,7 +2076,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairs(media, minMatch = 0.4, maxDf = 64)
+      Multimodal.pairs(ImageScale())(media, minMatch = 0.4, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2098,7 +2104,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairs(media, minMatch = 0.2, maxDf = 64)
+      Multimodal.pairs(ImageScale())(media, minMatch = 0.2, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2126,7 +2132,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageRotScalePairs(media, minMatch = 0.2, maxDf = 64)
+      Multimodal.pairs(ImageRotScale())(media, minMatch = 0.2, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2148,11 +2154,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngBlobs(id))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageRotScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageRotScale())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageRotScaleIndex(probes, index,
-          minMatch = 0.2)
+      Multimodal.screen(ImageRotScale())(probes, index, minMatch = 0.2)
         .orderBy(col("doc_id"))
     }),
 
@@ -2212,8 +2217,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairsAspect(media, minMatch = 0.3,
-          maxDf = 64)
+      Multimodal.pairs(ImageScaleAspect())(media, minMatch = 0.3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2246,8 +2250,8 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairsNormalized(media, minMatch = 0.3,
-          maxDf = 64)
+      Multimodal.pairs(ImageScaleNormalized())(media, minMatch = 0.3,
+        maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2261,11 +2265,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngBlobs(id))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageScale())(corpus)
       val probes = s.range(20, 22).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageScaleIndexAspect(probes, index,
-          minMatch = 0.3)
+      Multimodal.screen(ImageScaleAspect())(probes, index, minMatch = 0.3)
         .orderBy(col("doc_id"))
     }),
 
@@ -2335,7 +2338,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoRotScalePairs(media, minMatch = 0.2, maxDf = 64)
+      Multimodal.pairs(VideoRotScale())(media, minMatch = 0.2, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2356,11 +2359,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAviBlobs(id, 6))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoRotScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoRotScale())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoRotScaleIndex(probes, index,
-          minMatch = 0.2)
+      Multimodal.screen(VideoRotScale())(probes, index, minMatch = 0.2)
         .orderBy(col("doc_id"))
     }),
 
@@ -2423,7 +2425,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairsCanonical(media, minMatch = 0.3, maxDf = 64)
+      Multimodal.pairs(ImageScaleCanonical())(media, minMatch = 0.3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2447,11 +2449,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngBlobs(id))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageCanonicalLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageScaleCanonical())(corpus)
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageCanonicalIndex(probes, index,
-          minMatch = 0.3)
+      Multimodal.screen(ImageScaleCanonical())(probes, index, minMatch = 0.3)
         .orderBy(col("doc_id"))
     }),
 
@@ -2482,7 +2483,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageScalePairsAffine(media, minMatch = 0.25, maxDf = 64)
+      Multimodal.pairs(ImageAffine())(media, minMatch = 0.25, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2506,11 +2507,10 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageAffine())(corpus)
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageAffineIndex(probes, index,
-          minMatch = 0.25)
+      Multimodal.screen(ImageAffine())(probes, index, minMatch = 0.25)
         .orderBy(col("doc_id"))
     }),
 
@@ -2547,7 +2547,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageAffineFramePairs(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrame())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2572,10 +2572,10 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImageAffineFrameIndex(probes, index)
+      Multimodal.screen(ImageAffineFrame())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -2630,7 +2630,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 23))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoAffinePairs(media, minMatch = 0.25, maxDf = 64)
+      Multimodal.pairs(VideoAffine())(media, minMatch = 0.25, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2662,7 +2662,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 23))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoAffineFramePairs(media, maxDf = 64)
+      Multimodal.pairs(VideoAffineFrame())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -2809,7 +2809,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.imageAffineFramePairsSqueezeFan(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrameSqueezeFan())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -2832,7 +2832,7 @@ object StreamingOps extends QueryPack {
       val media = graft.tools.ScaleCheck.cropAffinePngs(s, n)
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
-      Multimodal.imageAffineFramePairs(media, maxDf = 500)
+      Multimodal.pairs(ImageAffineFrame())(media, maxDf = 500)
         .agg(lit(n).as("corpus_n"),
           sum(when(planted, 1).otherwise(0)).as("planted_found"),
           sum(when(!planted, 1).otherwise(0)).as("spurious"))
@@ -2907,7 +2907,7 @@ object StreamingOps extends QueryPack {
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
       val anchored = graft.operators.Materialize.eager(
-        Multimodal.imageAffineFrameLandmarksAnchored(media))
+        Multimodal.ImageAffineFrameAnchored().landmarks(media))
       val cap = Multimodal.solveDfCap(
         anchored.select(col("doc_id"), col("lm")), 32, 14L << 20)
       Multimodal.affineFramePairsVerifiedFrom(anchored, maxDf = cap)
@@ -2935,7 +2935,7 @@ object StreamingOps extends QueryPack {
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
       val anchored = graft.operators.Materialize.eager(
-        Multimodal.imageAffineFrameLandmarksAnchored(media))
+        Multimodal.ImageAffineFrameAnchored().landmarks(media))
       val cap = Multimodal.solveDfCap(
         anchored.select(col("doc_id"), col("lm")), 16, 8L << 20)
       Multimodal.affineFramePairsVerifiedFrom(anchored, maxDf = cap)
@@ -2970,12 +2970,12 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val plain = Multimodal.dedupAgainstImageAffineFrameIndex(probes,
-          Multimodal.imageAffineFrameIndex(corpus))
+      val plain = Multimodal.screen(ImageAffineFrame())(probes,
+        Multimodal.index(ImageAffineFrame())(corpus))
         .select(lit("code").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
-      val verified = Multimodal.dedupAgainstImageAffineFrameIndexVerified(
-          probes, Multimodal.imageAffineFrameAnchorIndex(corpus))
+      val verified = Multimodal.dedupAgainstImageAffineFrameIndexVerified(probes,
+        Multimodal.index(ImageAffineFrameAnchored())(corpus))
         .select(lit("verified").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
       plain.unionByName(verified).orderBy(col("tier"), col("doc_id"))
@@ -3002,10 +3002,10 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoAffineFrameIndex(corpus)
+      val index = Multimodal.index(VideoAffineFrame())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoAffineFrameIndex(probes, index)
+      Multimodal.screen(VideoAffineFrame())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -3144,15 +3144,13 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
       val probes = s.range(20, 24).union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val plain = Multimodal.dedupAgainstImageAffineFrameIndex(probes,
-          index)
+      val plain = Multimodal.screen(ImageAffineFrame())(probes, index)
         .select(lit("code").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
-      val fan = Multimodal.dedupAgainstImageAffineFrameIndexSqueezeFan(
-          probes, index)
+      val fan = Multimodal.screen(ImageAffineFrameSqueezeFan())(probes, index)
         .select(lit("fan").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
       plain.unionByName(fan).orderBy(col("tier"), col("doc_id"))
@@ -3184,15 +3182,13 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
       val probes = s.range(20, 24).union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val plain = Multimodal.dedupAgainstImageAffineFrameIndex(probes,
-          index)
+      val plain = Multimodal.screen(ImageAffineFrame())(probes, index)
         .select(lit("code").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
-      val chiral = Multimodal.dedupAgainstImageAffineFrameIndexChiral(
-          probes, index)
+      val chiral = Multimodal.screen(ImageAffineFrameChiral())(probes, index)
         .select(lit("chiral").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
       plain.unionByName(chiral).orderBy(col("tier"), col("doc_id"))
@@ -3236,7 +3232,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 26))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoAffineFramePairsSqueezeFan(media, maxDf = 64)
+      Multimodal.pairs(VideoAffineFrameSqueezeFan())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -3257,11 +3253,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAviBlobs(id, 6))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoCanonicalLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoScaleCanonical())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoCanonicalIndex(probes, index,
-          minMatch = 0.3)
+      Multimodal.screen(VideoScaleCanonical())(probes, index, minMatch = 0.3)
         .orderBy(col("doc_id"))
     }),
 
@@ -3285,11 +3280,10 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoAffineLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoAffine())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoAffineIndex(probes, index,
-          minMatch = 0.25)
+      Multimodal.screen(VideoAffine())(probes, index, minMatch = 0.25)
         .orderBy(col("doc_id"))
     }),
 
@@ -3313,8 +3307,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 23))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoScalePairsCanonical(media, minMatch = 0.3,
-          maxDf = 64)
+      Multimodal.pairs(VideoScaleCanonical())(media, minMatch = 0.3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -3367,8 +3360,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoScalePairsAspect(media, minMatch = 0.3,
-          maxDf = 64)
+      Multimodal.pairs(VideoScaleAspect())(media, minMatch = 0.3, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -3386,11 +3378,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAviBlobs(id, 6))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoScale())(corpus)
       val probes = s.range(20, 22).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoScaleIndexAspect(probes, index,
-          minMatch = 0.3)
+      Multimodal.screen(VideoScaleAspect())(probes, index, minMatch = 0.3)
         .orderBy(col("doc_id"))
     }),
 
@@ -3462,7 +3453,7 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.videoScalePairs(media, minMatch = 0.4, maxDf = 64)
+      Multimodal.pairs(VideoScale())(media, minMatch = 0.4, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -3484,11 +3475,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAviBlobs(id, 6))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.videoScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoScale())(corpus)
       val probes = s.range(20, 23).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoScaleIndex(probes, index,
-          minMatch = 0.4)
+      Multimodal.screen(VideoScale())(probes, index, minMatch = 0.4)
         .orderBy(col("doc_id"))
     }),
 
@@ -3598,14 +3588,14 @@ object StreamingOps extends QueryPack {
         })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imagePeakIndex(corpus)
+      val index = Multimodal.index(ImagePeak())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-peakidx",
         payloads(s.range(1000000L, 1000004L), img),
         payloads(s.range(1000004L, 1000006L)
           .union(s.range(140L, 142L)), img))
       val stream = mediaStream(s, staged)
-      val lms = Multimodal.imagePeakLandmarks(stream)
+      val lms = Multimodal.ImagePeak().landmarks(stream)
       val joined = lms.join(broadcast(index), Seq("lm"), "left")
       val out = drain(s, "append")("st103_out" -> joined)
       val nl = out.groupBy(col("doc_id"))
@@ -3650,14 +3640,14 @@ object StreamingOps extends QueryPack {
         })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageScaleLandmarkIndex(corpus)
+      val index = Multimodal.index(ImageScale())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-scaleidx",
         payloads(s.range(1000000L, 1000004L), img),
         payloads(s.range(1000004L, 1000006L)
           .union(s.range(140L, 142L)), img))
       val stream = mediaStream(s, staged)
-      val lms = Multimodal.imageScaleLandmarks(stream).toDF()
+      val lms = Multimodal.ImageScale().landmarks(stream)
       val joined = lms.join(broadcast(index), Seq("lm"), "left")
       val out = drain(s, "append")("st109_out" -> joined)
       val nl = out.groupBy(col("doc_id"))
@@ -3702,13 +3692,13 @@ object StreamingOps extends QueryPack {
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val probes = s.range(20, 24).union(s.range(40, 44))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val phash = Multimodal.dedupAgainstPHashIndex(probes,
-          Multimodal.pHashChunkIndex(masters))
+      val phash = Multimodal.screen(PHash)(probes,
+        Multimodal.pHashChunkIndex(masters))
         .select(lit("phash").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
       val all = masters.unionByName(probes.filter(col("doc_id") >= 40))
-      val scale = Multimodal.imageScalePairs(all, minMatch = 0.3,
-          maxDf = 64)
+      val scale = Multimodal.pairs(ImageScale())(all, minMatch = 0.3,
+        maxDf = 64)
         .select(lit("scale").as("tier"), col("doc_a").as("doc_id"),
           lit(false).as("kept"), col("doc_b").as("dup_src"))
       phash.unionByName(scale).orderBy(col("tier"), col("doc_id"))
@@ -3843,11 +3833,11 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAvi(id, 24, w = 48, h = 48))
       val corpus = Seq(0L, 1L, 10L, 11L).toDF("id")
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      val index = Multimodal.videoPeakIndex(corpus, every = 1)
+      val index = Multimodal.index(VideoPeak(every = 1))(corpus)
       val probes = s.range(20, 24).toDF("id")
         .union(Seq(200L, 201L).toDF("id"))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoPeakIndex(probes, index, every = 1)
+      Multimodal.screen(VideoPeak(every = 1))(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -3869,10 +3859,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPng(id, 64, 64))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imagePeakIndex(corpus)
+      val index = Multimodal.index(ImagePeak())(corpus)
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstImagePeakIndex(probes, index)
+      Multimodal.screen(ImagePeak())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -3927,13 +3917,12 @@ object StreamingOps extends QueryPack {
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
       val base = Multimodal.pHashCropWindowIndex(corpus)
-      val ext = Multimodal.pHashCropWindowIndex(corpus, extended = true)
+      val ext = Multimodal.pHashCropWindowIndex(corpus,
+        f = PHashCrop(extended = true))
       val probes = s.range(20, 24).union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val v1 = Multimodal.dedupAgainstPHashCropIndex(probes, base,
-        maxDf = 64)
-      val v2 = Multimodal.dedupAgainstPHashCropIndex(probes, ext,
-        maxDf = 64)
+      val v1 = Multimodal.screen(PHashCrop())(probes, base, maxDf = 64)
+      val v2 = Multimodal.screen(PHashCrop())(probes, ext, maxDf = 64)
       v1.select(lit(1L).as("phase"), col("doc_id"), col("kept"),
           col("dup_src"))
         .unionAll(v2.select(lit(2L).as("phase"), col("doc_id"),
@@ -3970,7 +3959,8 @@ object StreamingOps extends QueryPack {
       val media = s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoLandmarkPairsCrop(media, every = 1, maxDf = 64)
+      Multimodal.videoLandmarkPairsCrop(media, maxDf = 64,
+        f = VideoCrop(every = 1))
         .orderBy(col("doc_a"), col("doc_b"), col("win_a"), col("win_b"))
     }),
 
@@ -3996,10 +3986,11 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAvi(id, 24, w = 32, h = 32))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      val index = Multimodal.videoCropLandmarkIndex(corpus, every = 1)
+      val index = Multimodal.videoCropLandmarkIndex(corpus,
+        f = VideoCrop(every = 1))
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoCropIndex(probes, index, every = 1)
+      Multimodal.screen(VideoCrop(every = 1))(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -4074,15 +4065,14 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAvi(id, 24, w = 48, h = 48))
       val corpus = s.range(0, 6)
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      val base = Multimodal.videoCropLandmarkIndex(corpus, every = 1)
-      val ext = Multimodal.videoCropLandmarkIndex(corpus, every = 1,
-        extended = true)
+      val base = Multimodal.videoCropLandmarkIndex(corpus,
+        f = VideoCrop(every = 1))
+      val ext = Multimodal.videoCropLandmarkIndex(corpus,
+        f = VideoCrop(every = 1, extended = true))
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      val v1 = Multimodal.dedupAgainstVideoCropIndex(probes, base,
-        every = 1)
-      val v2 = Multimodal.dedupAgainstVideoCropIndex(probes, ext,
-        every = 1)
+      val v1 = Multimodal.screen(VideoCrop(every = 1))(probes, base)
+      val v2 = Multimodal.screen(VideoCrop(every = 1))(probes, ext)
       v1.select(lit(1L).as("phase"), col("doc_id"), col("kept"),
           col("dup_src"))
         .unionAll(v2.select(lit(2L).as("phase"), col("doc_id"),
@@ -4161,7 +4151,7 @@ object StreamingOps extends QueryPack {
       val index = Multimodal.pHashCropWindowIndex(corpus)
       val probes = s.range(20, 27).union(s.range(140, 142))
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      Multimodal.dedupAgainstPHashCropIndex(probes, index, maxDf = 64)
+      Multimodal.screen(PHashCrop())(probes, index, maxDf = 64)
         .orderBy(col("doc_id"))
     }),
 
@@ -4260,12 +4250,10 @@ object StreamingOps extends QueryPack {
           floorDen = 16))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioOnsetLandmarkIndex(corpus,
-        rolling = true)
+      val index = Multimodal.index(AudioOnsetRolling())(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioOnsetIndex(probes, index,
-          rolling = true)
+      Multimodal.screen(AudioOnsetRolling())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -4287,10 +4275,10 @@ object StreamingOps extends QueryPack {
           uniformSegMs = 96))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val index = Multimodal.audioChromaLandmarkIndex(corpus)
+      val index = Multimodal.index(AudioChroma())(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioChromaIndex(probes, index)
+      Multimodal.screen(AudioChroma())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -4316,13 +4304,12 @@ object StreamingOps extends QueryPack {
           uniformSegMs = 96))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val base = Multimodal.audioChromaLandmarkIndex(corpus)
-      val fine = Multimodal.audioChromaLandmarkIndex(corpus, div = 24)
+      val base = Multimodal.index(AudioChroma())(corpus)
+      val fine = Multimodal.index(AudioChroma(div = 24))(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      val v1 = Multimodal.dedupAgainstAudioChromaIndex(probes, base)
-      val v2 = Multimodal.dedupAgainstAudioChromaIndex(probes, fine,
-        div = 24)
+      val v1 = Multimodal.screen(AudioChroma())(probes, base)
+      val v2 = Multimodal.screen(AudioChroma(div = 24))(probes, fine)
       v1.select(lit(1L).as("phase"), col("doc_id"), col("kept"),
           col("dup_src"))
         .unionAll(v2.select(lit(2L).as("phase"), col("doc_id"),
@@ -4397,10 +4384,10 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticAvi(id, 40))
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      val index = Multimodal.videoSkipLandmarkIndex(corpus)
+      val index = Multimodal.index(VideoSkip())(corpus)
       val probes = s.range(20, 26).union(s.range(130, 132))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.dedupAgainstVideoSkipIndex(probes, index)
+      Multimodal.screen(VideoSkip())(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -4587,9 +4574,8 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 4)
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-      val videoIndex = Multimodal.videoRotScaleLandmarkIndex(corpus)
-      val audioIndex = Multimodal.audioCodeIndex(
-        Multimodal.videoAudioTracks(corpus))
+      val videoIndex = Multimodal.index(VideoRotScale())(corpus)
+      val audioIndex = Multimodal.index(AudioCode)(Multimodal.videoAudioTracks(corpus))
       val probes = s.range(20, 24).union(s.range(130, 132))
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
       Multimodal.videoJointRotIndexScreen(probes, videoIndex,
@@ -4624,10 +4610,9 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 4)
         .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-      val vIndex = Multimodal.videoRotScaleLandmarkIndex(corpus)
+      val vIndex = Multimodal.index(VideoRotScale())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
-      val aIndex = Multimodal.audioCodeIndex(
-          Multimodal.videoAudioTracks(corpus))
+      val aIndex = Multimodal.index(AudioCode)(Multimodal.videoAudioTracks(corpus))
         .select(col("frame_idx"), col("code"),
           col("doc_id").as("src"), col("nf").as("nf_src"))
       val staged = stageBatches("graft-stream-jointidx",
@@ -4635,7 +4620,7 @@ object StreamingOps extends QueryPack {
         payloads(s.range(22, 24), mk))
       def freshStream = mediaStream(s, staged)
       val video = drain(s, "append")(
-        "st121_v" -> Multimodal.videoRotScaleLandmarks(freshStream)
+        "st121_v" -> Multimodal.VideoRotScale().landmarks(freshStream)
           .join(broadcast(vIndex), Seq("lm"), "left"),
         "st121_a" -> Multimodal.audioFingerprint(
             Multimodal.videoAudioTracks(freshStream)).toDF()
@@ -4881,7 +4866,7 @@ object StreamingOps extends QueryPack {
           audioId = id % 5, audioSamples = (320 + (id % 5) * 64).toInt))
       val media = s.range(0, 10)
         .select(col("id").as("doc_id"), mp4(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(Multimodal.videoAudioTracks(media),
+      Multimodal.pairs(AudioLandmark())(Multimodal.videoAudioTracks(media),
         maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
@@ -4901,7 +4886,7 @@ object StreamingOps extends QueryPack {
           delta = 12, global0 = true, mirrorX = true))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoNearDupPairsFlipTolerant(media, maxDf = 64)
+      Multimodal.pairs(VideoFramesFlip())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -4924,7 +4909,7 @@ object StreamingOps extends QueryPack {
           mirrorX = true))
       val media = s.range(0, 8).union(s.range(20, 24)).union(s.range(30, 32))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoNearDupPairsDihedral(media, maxDf = 64)
+      Multimodal.pairs(VideoFramesDihedral())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -4942,7 +4927,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngRot(id - 20, (id % 3 + 1).toInt))
       val media = s.range(0, 8).union(s.range(20, 26))
         .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-      Multimodal.pHashPairsRotTolerant(media, maxDf = 64)
+      Multimodal.pairs(PHashRot)(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -4961,7 +4946,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPngRotFlip(id - 20, (id % 3 + 1).toInt))
       val media = s.range(0, 8).union(s.range(20, 26))
         .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-      Multimodal.pHashPairsDihedral(media, maxDf = 64)
+      Multimodal.pairs(PHashDihedral)(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -4981,7 +4966,7 @@ object StreamingOps extends QueryPack {
         else Multimodal.syntheticPng(id))
       val media = s.range(0, 8).union(s.range(20, 28))
         .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-      Multimodal.pHashPairsFlipTolerant(media, maxDf = 64)
+      Multimodal.pairs(PHashFlip)(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -5002,7 +4987,7 @@ object StreamingOps extends QueryPack {
           (320 + ((id - 1000000L) % 5) * 64).toInt))
       val media = s.range(0, 10).union(s.range(1000000L, 1000010L))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioLandmark())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -5020,9 +5005,7 @@ object StreamingOps extends QueryPack {
         else if (id < 2000000L) Multimodal.syntheticAvi(id - 1000000L,
           (4 + (id - 1000000L) % 3).toInt, delta = 12, global0 = true)
         else Multimodal.syntheticAvi(id, (5 + id % 2).toInt))
-      val index = Multimodal.videoChunkIndex(
-        s.range(0, 10).select(col("id").as("doc_id"),
-          avi(col("id")).as("payload")))
+      val index = Multimodal.videoChunkIndex(s.range(0, 10).select(col("id").as("doc_id"), avi(col("id")).as("payload")))
       val probes = s.range(1000000L, 1000010L).union(s.range(2000000L, 2000002L))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
       Multimodal.dedupAgainstVideoIndex(probes, index, maxDf = 64)
@@ -5047,7 +5030,7 @@ object StreamingOps extends QueryPack {
           (320 + ((id - 1000000L) % 5) * 64).toInt, factor = 2))
       val media = s.range(0, 10).union(s.range(1000000L, 1000010L))
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.audioLandmarkPairs(media, maxDf = 64)
+      Multimodal.pairs(AudioLandmark())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -5267,7 +5250,7 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 8)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameAnchorIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrameAnchored())(corpus)
         .select(col("lm"), col("ax").as("axb"), col("ay").as("ayb"),
           col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-afvidx",
@@ -5278,7 +5261,7 @@ object StreamingOps extends QueryPack {
       // candidates) — rename the key per derivative, the st121 idiom,
       // or Catalyst fails resolving the conflicting view references
       val sunk = drain(s, "append")(
-        "st124_lm" -> Multimodal.imageAffineFrameLandmarksAnchored(stream)
+        "st124_lm" -> Multimodal.ImageAffineFrameAnchored().landmarks(stream)
           .join(broadcast(index), Seq("lm"), "left"))
       // nl = DISTINCT landmarks: the sink rows are post-join, so a
       // probe landmark matching several index masters is duplicated —
@@ -5347,14 +5330,14 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 4)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-afridx",
         payloads(s.createDataset(Seq(20L, 130L)), img),
         payloads(s.createDataset(Seq(22L, 131L)), img))
       val stream = mediaStream(s, staged)
       val sunk = drain(s, "append")(
-        "st123_lm" -> Multimodal.imageAffineFrameLandmarks(stream).toDF()
+        "st123_lm" -> Multimodal.ImageAffineFrame().landmarks(stream)
           .join(broadcast(index), Seq("lm"), "left"))
       val nl = sunk.groupBy(col("doc_id"))
         .agg(countDistinct(col("lm")).as("nl"))
@@ -5401,14 +5384,14 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 4)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-chiridx",
         payloads(s.createDataset(Seq(20L, 130L)), img),
         payloads(s.createDataset(Seq(22L, 131L)), img))
       val stream = mediaStream(s, staged)
       val sunk = drain(s, "append")(
-        "st125_lm" -> Multimodal.imageAffineFrameLandmarksChiral(stream)
+        "st125_lm" -> Multimodal.ImageAffineFrameChiral().landmarks(stream)
           .join(broadcast(index), Seq("lm"), "left"))
       val nl = sunk.filter(col("orient") === 0)
         .groupBy(col("doc_id"))
@@ -5468,14 +5451,14 @@ object StreamingOps extends QueryPack {
       })
       val corpus = s.range(0, 4)
         .select(col("id").as("doc_id"), img(col("id")).as("payload"))
-      val index = Multimodal.imageAffineFrameIndex(corpus)
+      val index = Multimodal.index(ImageAffineFrame())(corpus)
         .select(col("lm"), col("doc_id").as("src"), col("nl").as("nl_src"))
       val staged = stageBatches("graft-stream-sqfanidx",
         payloads(s.createDataset(Seq(20L, 130L)), img),
         payloads(s.createDataset(Seq(22L, 131L)), img))
       val stream = mediaStream(s, staged)
       val sunk = drain(s, "append")(
-        "st126_lm" -> Multimodal.imageAffineFrameLandmarksSqueezeFan(stream)
+        "st126_lm" -> Multimodal.ImageAffineFrameSqueezeFan().landmarks(stream)
           .join(broadcast(index), Seq("lm"), "left"))
       val nl = sunk.filter(col("orient") === 0)
         .groupBy(col("doc_id"))
@@ -5707,11 +5690,11 @@ object StreamingOps extends QueryPack {
         if (id < 1000000L) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
         else Multimodal.syntheticWavTex(id - 1000000L,
           (160 + ((id - 1000000L) % 13) * 16).toInt, num = 9, den = 10))
-      val index = Multimodal.audioCodeIndex(
-        s.range(0, 20).select(col("id").as("doc_id"), wav(col("id")).as("payload")))
+      val index = Multimodal.index(AudioCode)(s.range(0, 20)
+        .select(col("id").as("doc_id"), wav(col("id")).as("payload")))
       val probes = s.range(1000000L, 1000020L)
         .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-      Multimodal.dedupAgainstAudioIndex(probes, index)
+      Multimodal.screen(AudioCode)(probes, index)
         .orderBy(col("doc_id"))
     }),
 
@@ -5730,7 +5713,7 @@ object StreamingOps extends QueryPack {
           corpusPng(col("id")).as("payload")))
       val probes = s.range(1000000L, 1000020L)
         .select(col("id").as("doc_id"), probePng(col("id")).as("payload"))
-      Multimodal.dedupAgainstPHashIndex(probes, index, maxDf = 64)
+      Multimodal.screen(PHash)(probes, index, maxDf = 64)
         .orderBy(col("doc_id"))
     }),
 
@@ -5801,7 +5784,7 @@ object StreamingOps extends QueryPack {
           delta = 12, global0 = true))
       val media = s.range(0, 10).union(s.range(20, 30))
         .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-      Multimodal.videoNearDupPairs(media, maxDf = 64)
+      Multimodal.pairs(VideoFrames())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 

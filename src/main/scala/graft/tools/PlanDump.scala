@@ -1,18 +1,24 @@
 package graft.tools
 import java.util.regex.Matcher
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Executed plans of `SparkEntry` queries at sf0.01, for diffing a
-  * refactor's plans against its parent's. Tokens that change from one
-  * run of the same commit to the next are masked, so two runs print
-  * byte-identical text: expression ids, plan ids, lambda class and
-  * variable names, object hashes, temp-dir names and adaptive stage and
-  * codegen ids. One variation is left: Spark numbers the groups of a
-  * multi-`countDistinct` aggregate (`Expand ... gid`) in an order that
-  * can change from run to run.
+  * refactor's plans against its parent's. Each query runs through its
+  * own `QueryExecution`, and the dump prints that execution's plan
+  * after the run: the final adaptive plan (`isFinalPlan=true`), with
+  * the stages and exchanges that ran. Tokens that change from one
+  * run of the same commit to the next are masked: expression ids, plan
+  * ids, lambda class and variable names, object hashes, temp-dir names
+  * and adaptive stage and codegen ids. Variations that are left: Spark
+  * numbers the groups of a multi-`countDistinct` aggregate (`Expand ...
+  * gid`) in an order that can change from run to run, and a final plan
+  * keeps the run-time adaptive choices (a join over a drained stream
+  * sink may be broadcast in one run and sort-merge in the next, and of
+  * two equal broadcast stages either may be the one reused); the
+  * initial plan printed under it does not vary that way.
   *
   * Each query prints a `===== name =====` header, an `exchanges=N` line
   * (shuffle and broadcast exchanges of the final plan, subqueries
@@ -59,9 +65,9 @@ object PlanDump extends AdaptiveSparkPlanHelper {
     for ((n, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1) if keep(n)) {
       println(s"===== $n =====")
       try graft.operators.Materialize.scoped {
-        val df = fn(spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-        val plan = df.queryExecution.executedPlan
+        val qe = fn(spark, sf).queryExecution
+        SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+        val plan = qe.executedPlan
         println(s"exchanges=${exchanges(plan)}")
         println(normalize(plan.toString))
       } catch { case e: Throwable =>

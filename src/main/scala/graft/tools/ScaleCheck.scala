@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.operators.Multimodal.{AudioOnset, AudioSpectralCode,
+  AudioSpectralLandmark, ImageAffine, ImageAffineFrame, ImagePeak,
+  ImageRotScale, ImageScale}
 
 /** Empirical scaling sweep for the LLM-pipeline operators: run each op
   * at N, 4N, 16N rows of synthetic data and report wall time + output
@@ -363,10 +366,10 @@ object ScaleCheck {
         val a = tones(spark, n / 8).persist()
         a.count()
         run("audioSpectralPairs", n / 8)(
-          Multimodal.audioSpectralPairs(a, maxDf = 500)
+          Multimodal.pairs(AudioSpectralCode)(a, maxDf = 500)
             .filter(col("match_frac") >= 0))
         run("audioSpectralLandmarkPairs", n / 8)(
-          Multimodal.audioSpectralLandmarkPairs(a, maxDf = 500)
+          Multimodal.pairs(AudioSpectralLandmark())(a, maxDf = 500)
             .filter(col("match_frac") >= 0))
         a.unpersist()
       }
@@ -378,7 +381,7 @@ object ScaleCheck {
         val a = gatedTones(spark, n / 8).persist()
         a.count()
         run("audioOnsetLandmarkPairs", n / 8)(
-          Multimodal.audioOnsetLandmarkPairs(a, maxDf = 500)
+          Multimodal.pairs(AudioOnset())(a, maxDf = 500)
             .filter(col("match_frac") >= 0))
         a.unpersist()
       }
@@ -390,7 +393,7 @@ object ScaleCheck {
         val a = pngs(spark, n / 8).persist()
         a.count()
         run("imagePeakPairs(planted)", n / 8)(
-          Multimodal.imagePeakPairs(a, minMatch = 0.6, maxDf = 500)
+          Multimodal.pairs(ImagePeak())(a, minMatch = 0.6, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         a.unpersist()
@@ -403,7 +406,7 @@ object ScaleCheck {
         val a = blobPngs(spark, n / 8).persist()
         a.count()
         run("imageScalePairs(planted)", n / 8)(
-          Multimodal.imageScalePairs(a, minMatch = 0.4, maxDf = 500)
+          Multimodal.pairs(ImageScale())(a, minMatch = 0.4, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         // the minShared=24 evidence floor prunes the code-starved
@@ -411,7 +414,7 @@ object ScaleCheck {
         // spurious 0.65-0.75 against generic layouts); the recall
         // delta vs the plain line is exactly those probes
         run("imageScalePairs(minShared)", n / 8)(
-          Multimodal.imageScalePairs(a, minMatch = 0.4, maxDf = 500,
+          Multimodal.pairs(ImageScale())(a, minMatch = 0.4, maxDf = 500,
             minShared = 24)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
@@ -425,11 +428,11 @@ object ScaleCheck {
         val a = rotPngs(spark, n / 8).persist()
         a.count()
         run("imageRotScalePairs(planted)", n / 8)(
-          Multimodal.imageRotScalePairs(a, minMatch = 0.2, maxDf = 500)
+          Multimodal.pairs(ImageRotScale())(a, minMatch = 0.2, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageRotScalePairs(minShared)", n / 8)(
-          Multimodal.imageRotScalePairs(a, minMatch = 0.2, maxDf = 500,
+          Multimodal.pairs(ImageRotScale())(a, minMatch = 0.2, maxDf = 500,
             minShared = 8)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
@@ -444,11 +447,11 @@ object ScaleCheck {
         val a = affinePngs(spark, n / 8).persist()
         a.count()
         run("imageAffinePairs(planted)", n / 8)(
-          Multimodal.imageScalePairsAffine(a, minMatch = 0.25, maxDf = 500)
+          Multimodal.pairs(ImageAffine())(a, minMatch = 0.25, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffinePairs(minShared)", n / 8)(
-          Multimodal.imageScalePairsAffine(a, minMatch = 0.25, maxDf = 500,
+          Multimodal.pairs(ImageAffine())(a, minMatch = 0.25, maxDf = 500,
             minShared = 8)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
@@ -466,20 +469,20 @@ object ScaleCheck {
         val a = affinePngs256(spark, n / 8).persist()
         a.count()
         run("imageAffineFramePairs(planted)", n / 8)(
-          Multimodal.imageAffineFramePairs(a, maxDf = 500)
+          Multimodal.pairs(ImageAffineFrame())(a, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffineFramePairs(all)", n / 8)(
-          Multimodal.imageAffineFramePairs(a, maxDf = 500))
+          Multimodal.pairs(ImageAffineFrame())(a, maxDf = 500))
         a.unpersist()
         val c = cropAffinePngs(spark, n / 8).persist()
         c.count()
         run("imageAffineFramePairs(cropPlanted)", n / 8)(
-          Multimodal.imageAffineFramePairs(c, maxDf = 500)
+          Multimodal.pairs(ImageAffineFrame())(c, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffineFramePairs(cropAll)", n / 8)(
-          Multimodal.imageAffineFramePairs(c, maxDf = 500))
+          Multimodal.pairs(ImageAffineFrame())(c, maxDf = 500))
         // the VERIFIED tier (m179): candidate gate low, RANSAC
         // geometric verification — recall and precision both above
         // the code-gate tier by construction; the sweep pins both
@@ -499,11 +502,11 @@ object ScaleCheck {
         val j = cropAffineJpegTextured(spark, n / 8).persist()
         j.count()
         run("imageAffineFramePairs(texPlanted)", n / 8)(
-          Multimodal.imageAffineFramePairs(j, maxDf = 500)
+          Multimodal.pairs(ImageAffineFrame())(j, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffineFramePairs(texAll)", n / 8)(
-          Multimodal.imageAffineFramePairs(j, maxDf = 500))
+          Multimodal.pairs(ImageAffineFrame())(j, maxDf = 500))
         run("imageAffineFrameVerified(texPlanted)", n / 8)(
           Multimodal.imageAffineFramePairsVerified(j, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&

@@ -84,7 +84,29 @@ class PostingsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // kept keys keep every row, orientations included
     assert(Postings.capDf(rows, Seq("lm"), 3, distinctDocs = true).count() == 6)
     assert(Postings.capDf(rows, Seq("lm"), 0) eq rows)
-    assert(Postings.capDf(rows, Seq("lm"), -1, distinctDocs = true) eq rows)
+    assert(Postings.capDf(rows, Seq("lm"), -2, distinctDocs = true) eq rows)
+    // AutoDf is not "uncapped": capDf cannot solve a cap, so it throws
+    val e = intercept[IllegalArgumentException](
+      Postings.capDf(rows, Seq("lm"), Multimodal.AutoDf))
+    assert(e.getMessage.contains("AutoDf"))
+  }
+
+  test("maxDf = AutoDf fails fast on every family scored through capDf") {
+    val s = spark
+    import s.implicits._
+    import Multimodal.{AudioCode, AudioLandmark, AutoDf, PHash, Paired,
+      PeakLossy, VideoFrames}
+    val noMedia = Seq.empty[(Long, Array[Byte])].toDF("doc_id", "payload")
+    // aligned audio code, audio landmark, pHash chunk, peak descriptor
+    // and video chunk scorers: none calls resolveDfCap, so before the
+    // capDf guard each ran silently uncapped on AutoDf
+    val families: Seq[Paired] =
+      Seq(AudioCode, AudioLandmark(), PHash, PeakLossy(), VideoFrames())
+    for (f <- families) {
+      val e = intercept[IllegalArgumentException](
+        Multimodal.pairs(f)(noMedia, maxDf = AutoDf))
+      assert(e.getMessage.contains("AutoDf"), s"$f: ${e.getMessage}")
+    }
   }
 
   test("verdicts: one row per probe; a probe with no match is kept") {

@@ -4,6 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
+  AudioLandmark, AudioOnset, AudioSpectralCode, AudioSpectralLandmark,
+  ImageAffine, ImageAffineFrame, ImageAffineFrameChiral,
+  ImageAffineFrameSqueezeFan, ImagePeak, ImageRotScale, ImageScale,
+  ImageScaleAspect, ImageScaleCanonical, ImageScaleDihedral, PHash, PHashCrop,
+  PHashDihedral, PHashFlip, PHashRot, VideoAffine, VideoAffineFrame, VideoCrop,
+  VideoFrames, VideoFramesDihedral, VideoFramesFlip, VideoPeak, VideoRotScale,
+  VideoScale, VideoScaleAspect, VideoScaleCanonical, VideoSkip}
 
 /** Round-10 additions: the hot-bucket state caps the round-9 verdict
   * named for the VERDICT-emitting streaming family (st68/st72/st78/
@@ -204,20 +212,19 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     val wav = udf((id: Long) => Multimodal.syntheticWavTex(id, 256))
     val media = spark.range(0, 3)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val index = Multimodal.audioCodeIndex(media)
+    val index = Multimodal.index(AudioCode)(media)
     // a same-version index screens normally (every probe self-matches
     // its own index row, so all come back dup)
-    assert(Multimodal.dedupAgainstAudioIndex(media, index).count() == 3)
+    assert(Multimodal.screen(AudioCode)(media, index).count() == 3)
     // an index from before versioning (no fp_ver column) fails fast —
     // cross-version codes silently match nothing, the failure mode
     // this guard exists for
     intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioIndex(media, index.drop("fp_ver"))
+      Multimodal.screen(AudioCode)(media, index.drop("fp_ver"))
     }
     // a stamped-but-stale index fails fast too
     intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioIndex(media,
-        index.withColumn("fp_ver", lit(1)))
+      Multimodal.screen(AudioCode)(media, index.withColumn("fp_ver", lit(1)))
     }
 
     // every stamped screen, table-driven: an unstamped index and a
@@ -231,64 +238,64 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     val screens: Seq[(String, String, org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame)] = Seq(
       ("dedupAgainstAudioIndex", "audioCodeIndex",
-        M.dedupAgainstAudioIndex(noMedia, _)),
+        M.screen(AudioCode)(noMedia, _)),
       ("dedupAgainstAudioSpectralIndex", "audioSpectralCodeIndex",
-        M.dedupAgainstAudioSpectralIndex(noMedia, _)),
+        M.screen(AudioSpectralCode)(noMedia, _)),
       ("dedupAgainstAudioOnsetIndex", "audioOnsetLandmarkIndex",
-        M.dedupAgainstAudioOnsetIndex(noMedia, _)),
+        M.screen(AudioOnset())(noMedia, _)),
       ("dedupAgainstAudioIntervalIndex", "audioIntervalLandmarkIndex",
-        M.dedupAgainstAudioIntervalIndex(noMedia, _)),
+        M.screen(AudioInterval())(noMedia, _)),
       ("dedupAgainstAudioChromaIndex", "audioChromaLandmarkIndex",
-        M.dedupAgainstAudioChromaIndex(noMedia, _)),
+        M.screen(AudioChroma())(noMedia, _)),
       ("dedupAgainstPHashIndex", "pHashChunkIndex",
-        M.dedupAgainstPHashIndex(noMedia, _)),
+        M.screen(PHash)(noMedia, _)),
       ("dedupAgainstPHashIndexDihedral", "pHashChunkIndex",
-        M.dedupAgainstPHashIndexDihedral(noMedia, _)),
+        M.screen(PHashDihedral)(noMedia, _)),
       ("dedupAgainstPHashCropIndex", "pHashCropWindowIndex",
-        M.dedupAgainstPHashCropIndex(noMedia, _)),
+        M.screen(PHashCrop())(noMedia, _)),
       ("dedupAgainstImagePeakLossyIndex", "imagePeakLossyIndex",
         M.dedupAgainstImagePeakLossyIndex(noMedia, _)),
       ("dedupAgainstImagePeakIndex", "imagePeakIndex",
-        M.dedupAgainstImagePeakIndex(noMedia, _)),
+        M.screen(ImagePeak())(noMedia, _)),
       ("dedupAgainstVideoPeakIndex", "videoPeakIndex",
-        M.dedupAgainstVideoPeakIndex(noMedia, _)),
+        M.screen(VideoPeak())(noMedia, _)),
       ("dedupAgainstImageScaleIndex", "imageScaleLandmarkIndex",
-        M.dedupAgainstImageScaleIndex(noMedia, _)),
+        M.screen(ImageScale())(noMedia, _)),
       ("dedupAgainstImageScaleIndexDihedral", "imageScaleLandmarkIndex",
-        M.dedupAgainstImageScaleIndexDihedral(noMedia, _)),
+        M.screen(ImageScaleDihedral())(noMedia, _)),
       ("dedupAgainstImageScaleIndexAspect", "imageScaleLandmarkIndex",
-        M.dedupAgainstImageScaleIndexAspect(noMedia, _)),
+        M.screen(ImageScaleAspect())(noMedia, _)),
       ("dedupAgainstImageCanonicalIndex", "imageCanonicalLandmarkIndex",
-        M.dedupAgainstImageCanonicalIndex(noMedia, _)),
+        M.screen(ImageScaleCanonical())(noMedia, _)),
       ("dedupAgainstImageAffineIndex", "imageAffineLandmarkIndex",
-        M.dedupAgainstImageAffineIndex(noMedia, _)),
+        M.screen(ImageAffine())(noMedia, _)),
       ("dedupAgainstImageRotScaleIndex", "imageRotScaleLandmarkIndex",
-        M.dedupAgainstImageRotScaleIndex(noMedia, _)),
+        M.screen(ImageRotScale())(noMedia, _)),
       ("dedupAgainstImageAffineFrameIndex", "imageAffineFrameIndex",
-        M.dedupAgainstImageAffineFrameIndex(noMedia, _)),
+        M.screen(ImageAffineFrame())(noMedia, _)),
       ("dedupAgainstImageAffineFrameIndexSqueezeFan", "imageAffineFrameIndex",
-        M.dedupAgainstImageAffineFrameIndexSqueezeFan(noMedia, _)),
+        M.screen(ImageAffineFrameSqueezeFan())(noMedia, _)),
       ("dedupAgainstImageAffineFrameIndexChiral", "imageAffineFrameIndex",
-        M.dedupAgainstImageAffineFrameIndexChiral(noMedia, _)),
+        M.screen(ImageAffineFrameChiral())(noMedia, _)),
       ("dedupAgainstImageAffineFrameIndexVerified",
         "imageAffineFrameAnchorIndex",
         M.dedupAgainstImageAffineFrameIndexVerified(noMedia, _)),
       ("dedupAgainstVideoAffineFrameIndex", "videoAffineFrameIndex",
-        M.dedupAgainstVideoAffineFrameIndex(noMedia, _)),
+        M.screen(VideoAffineFrame())(noMedia, _)),
       ("dedupAgainstVideoScaleIndex", "videoScaleLandmarkIndex",
-        M.dedupAgainstVideoScaleIndex(noMedia, _)),
+        M.screen(VideoScale())(noMedia, _)),
       ("dedupAgainstVideoScaleIndexAspect", "videoScaleLandmarkIndex",
-        M.dedupAgainstVideoScaleIndexAspect(noMedia, _)),
+        M.screen(VideoScaleAspect())(noMedia, _)),
       ("dedupAgainstVideoCanonicalIndex", "videoCanonicalLandmarkIndex",
-        M.dedupAgainstVideoCanonicalIndex(noMedia, _)),
+        M.screen(VideoScaleCanonical())(noMedia, _)),
       ("dedupAgainstVideoAffineIndex", "videoAffineLandmarkIndex",
-        M.dedupAgainstVideoAffineIndex(noMedia, _)),
+        M.screen(VideoAffine())(noMedia, _)),
       ("dedupAgainstVideoRotScaleIndex", "videoRotScaleLandmarkIndex",
-        M.dedupAgainstVideoRotScaleIndex(noMedia, _)),
+        M.screen(VideoRotScale())(noMedia, _)),
       ("dedupAgainstVideoCropIndex", "videoCropLandmarkIndex",
-        M.dedupAgainstVideoCropIndex(noMedia, _)),
+        M.screen(VideoCrop())(noMedia, _)),
       ("dedupAgainstVideoSkipIndex", "videoSkipLandmarkIndex",
-        M.dedupAgainstVideoSkipIndex(noMedia, _)),
+        M.screen(VideoSkip())(noMedia, _)),
       ("dedupAgainstWinnowIndex", "winnowIndex",
         TextDedup.dedupAgainstWinnowIndex(noDocs, _, "doc_id", "text")),
       ("dedupAgainstCdcIndex", "cdcChunkIndex",
@@ -331,11 +338,11 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       else Multimodal.syntheticWavTones(id - 20, 44100))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val integerPairs = Multimodal.audioFingerprintPairs(media)
+    val integerPairs = Multimodal.pairs(AudioCode)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(integerPairs.isEmpty,
       s"integer tier should miss interpolated re-uploads: $integerPairs")
-    val spectralPairs = Multimodal.audioSpectralPairs(media)
+    val spectralPairs = Multimodal.pairs(AudioSpectralCode)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(spectralPairs == (0L until 6L).map(i => (i, i + 20)).toSet,
       s"spectral tier: $spectralPairs")
@@ -358,11 +365,11 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.collect().map(r => (r.getLong(0),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     // the plain as-is probe is blind to every oriented repost
-    val plain = verdicts(Multimodal.dedupAgainstPHashIndex(probes, index))
+    val plain = verdicts(Multimodal.screen(PHash)(probes, index))
     assert(plain.values.forall(_.isEmpty), s"plain probe matched: $plain")
     // dihedral probes land each on its source, index untouched
     val dih = verdicts(
-      Multimodal.dedupAgainstPHashIndexDihedral(probes, index))
+      Multimodal.screen(PHashDihedral)(probes, index))
     assert(dih == Map(20L -> Some(0L), 21L -> Some(1L), 22L -> Some(2L),
       23L -> Some(3L), 30L -> Some(0L), 31L -> Some(1L)), s"$dih")
   }
@@ -377,14 +384,14 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     val probes = spark.range(20, 26)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     // the integer index shares no codes with interpolated probes
-    val intIdx = Multimodal.audioCodeIndex(corpus)
-    val intScreen = Multimodal.dedupAgainstAudioIndex(probes, intIdx)
+    val intIdx = Multimodal.index(AudioCode)(corpus)
+    val intScreen = Multimodal.screen(AudioCode)(probes, intIdx)
       .collect().map(r => (r.getLong(0), r.isNullAt(2))).toMap
     assert(intScreen.values.forall(identity),
       s"integer index must miss 44.1 kHz probes: $intScreen")
     // the spectral index lands every probe on its master
-    val spIdx = Multimodal.audioSpectralCodeIndex(corpus)
-    val spScreen = Multimodal.dedupAgainstAudioSpectralIndex(probes, spIdx)
+    val spIdx = Multimodal.index(AudioSpectralCode)(corpus)
+    val spScreen = Multimodal.screen(AudioSpectralCode)(probes, spIdx)
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     assert(spScreen == (20L until 26L).map(i => (i, Some(i - 20L))).toMap,
@@ -392,10 +399,10 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // version lineages are independent: an integer index can never be
     // screened by the spectral path or vice versa
     intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioSpectralIndex(probes, intIdx)
+      Multimodal.screen(AudioSpectralCode)(probes, intIdx)
     }
     intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioIndex(probes, spIdx)
+      Multimodal.screen(AudioCode)(probes, spIdx)
     }
   }
 
@@ -586,10 +593,10 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     def audio(ids: Seq[Long]) = spark.createDataset(ids)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("id")
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val sIdx0 = Multimodal.audioSpectralCodeIndex(audio(Seq(0L, 1L, 2L)))
+    val sIdx0 = Multimodal.index(AudioSpectralCode)(audio(Seq(0L, 1L, 2L)))
     val sIdx1 = IncrementalIndex.append(sIdx0,
-      Multimodal.audioSpectralCodeIndex(audio(Seq(3L, 4L))))
-    val sFull = Multimodal.audioSpectralCodeIndex(audio(Seq(0L, 1L, 2L, 3L, 4L)))
+      Multimodal.index(AudioSpectralCode)(audio(Seq(3L, 4L))))
+    val sFull = Multimodal.index(AudioSpectralCode)(audio(Seq(0L, 1L, 2L, 3L, 4L)))
     // the anti-join inside append moves doc_id first; compare by name
     def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
       df.select(cols.map(col): _*).collect().toSet
@@ -627,12 +634,12 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     val planted = (0L until 6L).map(i => (i, i + 20)).toSet
     // the compound evades the integer landmark tier (no shared
     // samples) AND the aligned spectral tier (every frame shifted)...
-    assert(pairs(Multimodal.audioLandmarkPairs(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(AudioLandmark())(media)).isEmpty,
       "integer landmarks must miss the fractional resample")
-    assert(pairs(Multimodal.audioSpectralPairs(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(AudioSpectralCode)(media)).isEmpty,
       "aligned spectral codes must miss the trim")
     // ...but not the rate-free positionless landmarks
-    assert(pairs(Multimodal.audioSpectralLandmarkPairs(media)) == planted)
+    assert(pairs(Multimodal.pairs(AudioSpectralLandmark())(media)) == planted)
     // streaming form with the shipped cap: every re-delivery lands
     val hits = StreamingNearDup.audioSpectralLandmarkVerdicts(
       media, "doc_id", "payload", maxBucket = 64).toDF().cache()
@@ -664,10 +671,10 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     // 96 ms is not a 64 ms multiple: the default grid misaligns every
     // frame, so the m110 machinery sees nothing
-    assert(pairs(Multimodal.audioSpectralLandmarkPairs(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(AudioSpectralLandmark())(media)).isEmpty,
       "64 ms hop must miss a 96 ms trim")
     // overlapped frames (32 ms hop) re-align at 96 = 3 x 32
-    assert(pairs(Multimodal.audioSpectralLandmarkPairs(media, hopMs = 32))
+    assert(pairs(Multimodal.pairs(AudioSpectralLandmark(hopMs = 32))(media))
       == (0L until 6L).map(i => (i, i + 20)).toSet)
     // and the default-hop code path is unchanged by the new parameter:
     // hop=64 explicitly equals the default
@@ -768,15 +775,15 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 3L).map(i => (i + 20, i + 30)).toSet
     val sourcePairs = (0L until 6L).map(i => (i, i + 20)).toSet ++
       (0L until 3L).map(i => (i, i + 30)).toSet
-    assert(pairs(Multimodal.videoNearDupPairs(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(VideoFrames())(media)).isEmpty,
       "plain aligned tier must miss every rotated re-upload")
     // the mirror-only tier must miss every (source, re-upload) pair;
     // it MAY relate two re-uploads to each other when they happen to
     // be a pure mirror apart (rot_a(s) vs rot_{-a}(mirror(s)))
-    assert((pairs(Multimodal.videoNearDupPairsFlipTolerant(media))
+    assert((pairs(Multimodal.pairs(VideoFramesFlip())(media))
         & sourcePairs).isEmpty,
       "mirror-only tier must miss rotations and rotate-mirror compounds")
-    assert(pairs(Multimodal.videoNearDupPairsDihedral(media)) == planted)
+    assert(pairs(Multimodal.pairs(VideoFramesDihedral())(media)) == planted)
   }
 
   // ---- m109/st81: dihedral-8 closes the rot x flip composition gap --
@@ -794,11 +801,11 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     val planted = (0L until 6L).map(i => (i, i + 20)).toSet
-    assert(pairs(Multimodal.pHashPairsDihedral(media)) == planted)
+    assert(pairs(Multimodal.pairs(PHashDihedral)(media)) == planted)
     // the single-trick variants provably miss every compound repost
-    assert(pairs(Multimodal.pHashPairsRotTolerant(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(PHashRot)(media)).isEmpty,
       "rotation-only probes must miss mirror+rotate compounds")
-    assert(pairs(Multimodal.pHashPairsFlipTolerant(media)).isEmpty,
+    assert(pairs(Multimodal.pairs(PHashFlip)(media)).isEmpty,
       "mirror-only probes must miss mirror+rotate compounds")
     // streaming form: compound reposts dedup onto their sources with
     // the shipped cap on

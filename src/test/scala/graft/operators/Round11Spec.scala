@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioOnset, AudioSpectralCode,
+  AudioSpectralLandmark}
 
 /** Round-11 additions: the drift-free spectral frame grid (round-10
   * ADVICE #1), onset-anchored spectral landmarks (arbitrary-offset
@@ -56,15 +58,15 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     val planted = (0L until 4L).map(i => (i, i + 20)).toSet
-    assert(pairs(Multimodal.audioOnsetLandmarkPairs(media)) == planted)
+    assert(pairs(Multimodal.pairs(AudioOnset())(media)) == planted)
     // 50 ms is a multiple of neither hop: every grid-anchored tier is
     // blind to the compound, at its shipped threshold AND with margin
     // (top planted grid score measured < 0.25 on the full fixture)
-    assert((pairs(Multimodal.audioSpectralLandmarkPairs(media))
+    assert((pairs(Multimodal.pairs(AudioSpectralLandmark())(media))
       & planted).isEmpty, "default-hop grid landmarks must miss")
-    assert((pairs(Multimodal.audioSpectralLandmarkPairs(media, hopMs = 32))
+    assert((pairs(Multimodal.pairs(AudioSpectralLandmark(hopMs = 32))(media))
       & planted).isEmpty, "hop=32 grid landmarks must miss")
-    assert((pairs(Multimodal.audioSpectralPairs(media)) & planted).isEmpty,
+    assert((pairs(Multimodal.pairs(AudioSpectralCode)(media)) & planted).isEmpty,
       "aligned spectral codes must miss")
     // streaming form: the trimmed re-deliveries land on their masters
     // with the shipped cap on (the st89 verdict family)
@@ -109,8 +111,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
     val planted = (0L until 4L).map(i => (i, i + 20)).toSet
-    assert(pairs(Multimodal.audioOnsetLandmarkPairs(media, maxDf = 64,
-      thresholdFrac = 0.125)) == planted)
+    assert(pairs(Multimodal.pairs(AudioOnset(thresholdFrac = 0.125))(media,
+      maxDf = 64)) == planted)
   }
 
   // ---- m116: EXIF orientation normalization at decode ---------------
@@ -161,30 +163,29 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.select(cs.head, cs.tail: _*).collect().map(_.toSeq).toSet
     }
     val app = IncrementalIndex.append(
-      Multimodal.audioOnsetLandmarkIndex(audio(Seq(0L, 1L, 2L))),
-      Multimodal.audioOnsetLandmarkIndex(audio(Seq(3L, 4L))))
+      Multimodal.index(AudioOnset())(audio(Seq(0L, 1L, 2L))),
+      Multimodal.index(AudioOnset())(audio(Seq(3L, 4L))))
     assert(rows(app) == rows(
-      Multimodal.audioOnsetLandmarkIndex(audio(Seq(0L, 1L, 2L, 3L, 4L)))))
+      Multimodal.index(AudioOnset())(audio(Seq(0L, 1L, 2L, 3L, 4L)))))
     // cross-family fail-fast: a SPECTRAL grid index (stamp 1002) can
     // never be screened by the onset path (4001), and vice versa
     val corpus = audio(Seq(0L, 1L, 2L))
     val probes = audio(Seq(20L, 21L))
-    val onsetIdx = Multimodal.audioOnsetLandmarkIndex(corpus)
-    val gridIdx = Multimodal.audioSpectralCodeIndex(corpus)
+    val onsetIdx = Multimodal.index(AudioOnset())(corpus)
+    val gridIdx = Multimodal.index(AudioSpectralCode)(corpus)
     assertThrows[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioOnsetIndex(probes, gridIdx)
+      Multimodal.screen(AudioOnset())(probes, gridIdx)
     }
     assertThrows[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioSpectralIndex(probes, onsetIdx)
+      Multimodal.screen(AudioSpectralCode)(probes, onsetIdx)
     }
     // the grid index structurally misses the 50 ms trim the onset
     // index catches
-    val gridScreen = Multimodal.dedupAgainstAudioSpectralIndex(
-      probes, gridIdx).collect().map(r => (r.getLong(0), r.getBoolean(1)))
+    val gridScreen = Multimodal.screen(AudioSpectralCode)(probes, gridIdx)
+      .collect().map(r => (r.getLong(0), r.getBoolean(1)))
     assert(gridScreen.forall(_._2),
       s"grid index must keep the trimmed probes: ${gridScreen.toSeq}")
-    val onsetScreen = Multimodal.dedupAgainstAudioOnsetIndex(
-      probes, onsetIdx).collect()
+    val onsetScreen = Multimodal.screen(AudioOnset())(probes, onsetIdx).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(2)) -1L else r.getLong(2)))
       .toMap
     assert(onsetScreen == Map(20L -> 0L, 21L -> 1L), s"$onsetScreen")

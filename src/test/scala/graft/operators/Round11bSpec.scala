@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioOnset, AudioOnsetRolling}
 
 /** Round-11 continuation: the ROLLING-RMS onset tier (noisy-floor
   * audio — the last onset-family scope line) and its fixtures. */
@@ -54,12 +55,11 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "payload")
     // the threshold detector finds no onsets on this corpus at all —
     // a threshold-built index is EMPTY, the structural miss in index form
-    assert(Multimodal.audioOnsetLandmarkIndex(masters).count() == 0L,
+    assert(Multimodal.index(AudioOnset())(masters).count() == 0L,
       "threshold-built index of a noisy corpus should be empty")
-    val idx = Multimodal.audioOnsetLandmarkIndex(masters, rolling = true)
+    val idx = Multimodal.index(AudioOnsetRolling())(masters)
     assert(idx.count() > 0L)
-    val verdicts = Multimodal.dedupAgainstAudioOnsetIndex(probes, idx,
-        rolling = true)
+    val verdicts = Multimodal.screen(AudioOnsetRolling())(probes, idx)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert((20L until 26L).forall(id => verdicts(id) == false),
       s"noisy re-uploads not all caught: $verdicts")
@@ -68,8 +68,7 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rolling-RMS onset tier lands all 10 noisy trimmed+resampled re-uploads") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.audioOnsetLandmarkPairsRolling(noisyCorpus,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(AudioOnsetRolling())(noisyCorpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(p => (p._1, p._2))
     info(pairs.mkString("\n"))
@@ -93,7 +92,7 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
             offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32)))
       rows.toDF("doc_id", "payload")
     }
-    val pairs = Multimodal.audioOnsetLandmarkPairsRolling(sDocs, maxDf = 64)
+    val pairs = Multimodal.pairs(AudioOnsetRolling())(sDocs, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     info(pairs.mkString(", "))
     (0L until 4L).foreach { i =>

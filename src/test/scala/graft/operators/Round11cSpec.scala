@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioInterval, AudioOnset,
+  AudioSpectralLandmark}
 
 /** Round-11 continuation: the ONSET-INTERVAL-RATIO tier — speed-change
   * / time-stretch tolerant audio dedup (the last audio scope line) —
@@ -41,9 +43,9 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("spectral tiers structurally miss a 5% speed-changed re-upload") {
     implicit val s: SparkSession = spark
     val onset = crossPairs(
-      Multimodal.audioOnsetLandmarkPairs(corpus, maxDf = 64))
+      Multimodal.pairs(AudioOnset())(corpus, maxDf = 64))
     val grid = crossPairs(
-      Multimodal.audioSpectralLandmarkPairs(corpus, maxDf = 64))
+      Multimodal.pairs(AudioSpectralLandmark())(corpus, maxDf = 64))
     info(s"onset-spectral cross pairs: ${onset.length}, " +
       s"grid-spectral cross pairs: ${grid.length}")
     assert(onset.isEmpty,
@@ -54,7 +56,7 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("interval-ratio tier lands all 10 speed-changed re-uploads") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.audioIntervalLandmarkPairs(corpus, maxDf = 64)
+    val pairs = Multimodal.pairs(AudioInterval())(corpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val cross = pairs.filter { case (a, b, _) => a < 10 && b >= 20 }
     info(cross.sortBy(_._1).map { case (a, b, f) => s"($a,$b,$f)" }
@@ -80,8 +82,8 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
         (id, Multimodal.syntheticWavBeats(id, 44100, ms = 1000))))
       .toDF("doc_id", "payload")
 
-    val idx = Multimodal.audioIntervalLandmarkIndex(masters)
-    val verdicts = Multimodal.dedupAgainstAudioIntervalIndex(probes, idx)
+    val idx = Multimodal.index(AudioInterval())(masters)
+    val verdicts = Multimodal.screen(AudioInterval())(probes, idx)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert((20L until 26L).forall(id => verdicts(id) == false),
       s"speed-changed probes not all caught: $verdicts")
@@ -90,9 +92,8 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // append == rebuild (the IncrementalIndex contract)
     val appended = idx.unionByName(
-      Multimodal.audioIntervalLandmarkIndex(late))
-    val rebuilt = Multimodal.audioIntervalLandmarkIndex(
-      masters.unionByName(late))
+      Multimodal.index(AudioInterval())(late))
+    val rebuilt = Multimodal.index(AudioInterval())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the interval index")
@@ -100,11 +101,11 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cross-version stamps rejected both directions
     val foreign = idx.withColumn("fp_ver", lit(Multimodal.OnsetFpVersion))
     val e1 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioIntervalIndex(probes, foreign).collect()
+      Multimodal.screen(AudioInterval())(probes, foreign).collect()
     }
     assert(e1.getMessage.contains("rebuild"))
     val e2 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioOnsetIndex(probes,
+      Multimodal.screen(AudioOnset())(probes,
         idx.withColumnRenamed("lm", "lm")).collect()
     }
     assert(e2.getMessage.contains("rebuild"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{VideoShift, VideoSkip}
 
 /** Round-11 continuation: the FRAME-RATE-CONVERSION video tier —
   * skip-tolerant run-collapsed landmark pairs. */
@@ -38,7 +39,7 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("consecutive-pair tier at its default stride misses both rate conversions") {
     implicit val s: SparkSession = spark
-    val cross = Multimodal.videoLandmarkPairs(corpus, maxDf = 64)
+    val cross = Multimodal.pairs(VideoShift())(corpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 8 && b >= 20 }
     info(s"cross pairs at every=2: ${cross.toSeq}")
@@ -48,7 +49,7 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("skip tier lands all 8 rate-converted re-uploads, decoys unmatched") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.videoLandmarkPairsSkip(corpus, maxDf = 64)
+    val pairs = Multimodal.pairs(VideoSkip())(corpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val cross = pairs.filter { case (a, b, _) => a < 8 && b >= 20 }
     info(cross.sortBy(_._2).map { case (a, b, f) => s"($a,$b,$f)" }
@@ -80,16 +81,15 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(128L, 129L).map(id => (id, Multimodal.syntheticAvi(id, 40))))
       .toDF("doc_id", "payload")
 
-    val idx = Multimodal.videoSkipLandmarkIndex(masters)
-    val verdicts = Multimodal.dedupAgainstVideoSkipIndex(probes, idx)
+    val idx = Multimodal.index(VideoSkip())(masters)
+    val verdicts = Multimodal.screen(VideoSkip())(probes, idx)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert((20L until 26L).forall(id => verdicts(id) == false),
       s"rate-converted probes not all caught: $verdicts")
     assert(verdicts(128L) && verdicts(129L), s"decoys not kept: $verdicts")
 
-    val appended = idx.unionByName(Multimodal.videoSkipLandmarkIndex(late))
-    val rebuilt = Multimodal.videoSkipLandmarkIndex(
-      masters.unionByName(late))
+    val appended = idx.unionByName(Multimodal.index(VideoSkip())(late))
+    val rebuilt = Multimodal.index(VideoSkip())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the video skip index")
@@ -97,7 +97,7 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
     val foreign = idx.withColumn("fp_ver",
       lit(Multimodal.IntervalFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstVideoSkipIndex(probes, foreign).collect()
+      Multimodal.screen(VideoSkip())(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }

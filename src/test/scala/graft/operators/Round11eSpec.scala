@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioChroma, AudioInterval, AudioOnset}
 
 /** Round-11 continuation: the PITCH-CLASS (constant-Q chroma) tier —
   * integer-semitone pitch/speed-shifted re-uploads of METRONOMIC
@@ -43,7 +44,7 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(values.size == 1,
       s"metronomic corpus should collapse to the all-ratios-1 landmark, got $values")
     // every doc pairs with every other — all-pairs false positives
-    val pairs = Multimodal.audioIntervalLandmarkPairs(corpus, maxDf = 64)
+    val pairs = Multimodal.pairs(AudioInterval())(corpus, maxDf = 64)
       .count()
     assert(pairs == 190L,
       s"expected the degenerate all-pairs result (190), got $pairs")
@@ -51,7 +52,7 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fixed-Hz spectral onset tier misses the semitone-shifted copies") {
     implicit val s: SparkSession = spark
-    val cross = Multimodal.audioOnsetLandmarkPairs(corpus, maxDf = 64)
+    val cross = Multimodal.pairs(AudioOnset())(corpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 10 && b >= 20 }
     info(s"onset-spectral cross pairs: ${cross.toSeq}")
@@ -61,7 +62,7 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("chroma tier lands all 10 semitone-shifted re-uploads, nothing else") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.audioChromaLandmarkPairs(corpus, maxDf = 64)
+    val pairs = Multimodal.pairs(AudioChroma())(corpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     info(pairs.sortBy(_._1).map { case (a, b, f) => s"($a,$b,$f)" }
       .mkString(", "))
@@ -87,12 +88,11 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("24-division bank lands the quarter-tone shift the semitone bank degrades on") {
     implicit val s: SparkSession = spark
-    val semitone = Multimodal.audioChromaLandmarkPairs(quarterCorpus,
-        maxDf = 64)
+    val semitone = Multimodal.pairs(AudioChroma())(quarterCorpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 10 && b >= 20 }
-    val quarter = Multimodal.audioChromaLandmarkPairs(quarterCorpus,
-        maxDf = 64, div = 24)
+    val quarter = Multimodal.pairs(AudioChroma(div = 24))(quarterCorpus,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter { case (a, b, _) => a < 10 && b >= 20 }
     info(s"semitone-bank cross pairs: ${semitone.length}; " +
@@ -124,23 +124,22 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
           uniformSegMs = 96))))
       .toDF("doc_id", "payload")
 
-    val idx = Multimodal.audioChromaLandmarkIndex(masters)
-    val verdicts = Multimodal.dedupAgainstAudioChromaIndex(probes, idx)
+    val idx = Multimodal.index(AudioChroma())(masters)
+    val verdicts = Multimodal.screen(AudioChroma())(probes, idx)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
     assert((20L until 26L).forall(id => verdicts(id) == false),
       s"semitone-shifted probes not all caught: $verdicts")
     assert(verdicts(128L) && verdicts(129L), s"decoys not kept: $verdicts")
 
-    val appended = idx.unionByName(Multimodal.audioChromaLandmarkIndex(late))
-    val rebuilt = Multimodal.audioChromaLandmarkIndex(
-      masters.unionByName(late))
+    val appended = idx.unionByName(Multimodal.index(AudioChroma())(late))
+    val rebuilt = Multimodal.index(AudioChroma())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the chroma index")
 
     val foreign = idx.withColumn("fp_ver", lit(Multimodal.OnsetFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstAudioChromaIndex(probes, foreign).collect()
+      Multimodal.screen(AudioChroma())(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{PHash, PHashCrop, VideoCrop, VideoShift}
 
 /** Round-11 continuation: the CROP-TOLERANT image tier — structured
   * crops (center / quadrant, the thumbnail and crop-to-subject
@@ -50,7 +51,7 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("plain pHash tier misses every crop") {
-    val cross = Multimodal.pHashPairs(corpus, maxDist = 3, maxDf = 64)
+    val cross = Multimodal.pairs(PHash)(corpus, maxDist = 3, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 8 && b >= 20 }
     info(s"plain-tier cross pairs: ${cross.toSeq}")
@@ -58,8 +59,7 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("crop tier lands every canonical-window crop at dist 0; arbitrary offset misses") {
-    val rows = Multimodal.pHashPairsCropTolerant(corpus, maxDist = 3,
-        maxDf = 64)
+    val rows = Multimodal.pairs(PHashCrop())(corpus, maxDist = 3, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getInt(3), r.getInt(4)))
     info(rows.sortBy(_._1).map { case (a, b, wa, wb, d) =>
@@ -93,15 +93,15 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("thirds ladder lands off-center 2/3 crops the base window set misses") {
-    val base = Multimodal.pHashPairsCropTolerant(thirdsCorpus,
-        maxDist = 3, maxDf = 64)
+    val base = Multimodal.pairs(PHashCrop())(thirdsCorpus, maxDist = 3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 6 && b >= 20 }
     info(s"base-set cross pairs: ${base.toSeq}")
     assert(base.isEmpty,
       s"base window set matched thirds crops: ${base.toSeq}")
-    val ext = Multimodal.pHashPairsCropTolerant(thirdsCorpus,
-        maxDist = 3, maxDf = 64, extended = true)
+    val ext = Multimodal.pairs(PHashCrop(extended = true))(thirdsCorpus,
+      maxDist = 3, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getInt(3), r.getInt(4)))
     info(ext.sortBy(_._1).map { case (a, b, wa, wb, d) =>
@@ -137,15 +137,14 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("whole-frame video tiers miss a cropped re-upload; crop channels land it") {
     implicit val s: SparkSession = spark
-    val plain = Multimodal.videoLandmarkPairs(videoCorpus, every = 1,
-        maxDf = 64)
+    val plain = Multimodal.pairs(VideoShift(every = 1))(videoCorpus, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 6 && b >= 20 }
     info(s"whole-frame tier cross pairs: ${plain.toSeq}")
     assert(plain.isEmpty,
       s"whole-frame landmarks matched crops: ${plain.toSeq}")
-    val rows = Multimodal.videoLandmarkPairsCrop(videoCorpus, every = 1,
-        maxDf = 64)
+    val rows = Multimodal.videoLandmarkPairsCrop(videoCorpus, maxDf = 64,
+      f = VideoCrop(every = 1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getInt(3), r.getDouble(4)))
     info(rows.sortBy(_._1).map { case (a, b, wa, wb, f) =>
@@ -167,11 +166,12 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     val late = (4L until 6L).map(id =>
       (id, Multimodal.syntheticAvi(id, 24, w = 32, h = 32)))
       .toDF("doc_id", "payload")
-    val idx = Multimodal.videoCropLandmarkIndex(masters, every = 1)
+    val idx = Multimodal.videoCropLandmarkIndex(masters,
+      f = VideoCrop(every = 1))
     val appended = idx.unionByName(
-      Multimodal.videoCropLandmarkIndex(late, every = 1))
-    val rebuilt = Multimodal.videoCropLandmarkIndex(
-      masters.unionByName(late), every = 1)
+      Multimodal.videoCropLandmarkIndex(late, f = VideoCrop(every = 1)))
+    val rebuilt = Multimodal.videoCropLandmarkIndex(masters.unionByName(late),
+      f = VideoCrop(every = 1))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the video crop index")
@@ -181,8 +181,7 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     val foreign = idx.withColumn("fp_ver",
       lit(Multimodal.VideoSkipFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstVideoCropIndex(probes, foreign,
-        every = 1).collect()
+      Multimodal.screen(VideoCrop(every = 1))(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioChroma, PHashCrop, VideoCrop}
 
 /** Round-11 continuation: the hash-keyed-index UPDATE leg —
   * `SinkTable.compactByDoc` applies the `IncrementalIndex.append`
@@ -69,7 +70,8 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     val media = (0L until 4L).map(id =>
       (id, Multimodal.syntheticPng(id, 48, 48))).toDF("doc_id", "payload")
     val base = Multimodal.pHashCropWindowIndex(media).collect().toSet
-    val ext = Multimodal.pHashCropWindowIndex(media, extended = true)
+    val ext = Multimodal.pHashCropWindowIndex(media,
+      f = PHashCrop(extended = true))
       .collect().toSet
     assert(ext.filter(_.getAs[Int]("win") < 7) == base,
       "extended index must carry the base windows bit-identically")
@@ -77,10 +79,12 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
       "extended index must add thirds-window rows")
     val late = Seq((4L, Multimodal.syntheticPng(4L, 48, 48)))
       .toDF("doc_id", "payload")
-    val appended = Multimodal.pHashCropWindowIndex(media, extended = true)
-      .unionByName(Multimodal.pHashCropWindowIndex(late, extended = true))
-    val rebuilt = Multimodal.pHashCropWindowIndex(
-      media.unionByName(late), extended = true)
+    val appended = Multimodal.pHashCropWindowIndex(media,
+      f = PHashCrop(extended = true))
+      .unionByName(Multimodal.pHashCropWindowIndex(late,
+        f = PHashCrop(extended = true)))
+    val rebuilt = Multimodal.pHashCropWindowIndex(media.unionByName(late),
+      f = PHashCrop(extended = true))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the extended crop index")
@@ -92,7 +96,8 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     val media = (0L until 3L).map(id =>
         (id, Multimodal.syntheticAvi(id, 24, w = 48, h = 48)))
       .toDF("doc_id", "payload")
-    val base = Multimodal.videoLandmarksCrop(media, every = 1)
+    val base = Multimodal.videoLandmarksCrop(media, every = 1,
+      extended = false)
       .collect().toSet
     val ext = Multimodal.videoLandmarksCrop(media, every = 1,
       extended = true).collect().toSet
@@ -104,12 +109,12 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((20L, Multimodal.syntheticAvi(0, 20, w = 32, h = 32,
         frameOffset = 2, srcX0 = 8, srcY0 = 0)))
         .toDF("doc_id", "payload"))
-    val basePairs = Multimodal.videoLandmarkPairsCrop(corpus, every = 1,
-      maxDf = 64).collect()
+    val basePairs = Multimodal.videoLandmarkPairsCrop(corpus, maxDf = 64,
+      f = VideoCrop(every = 1)).collect()
     assert(basePairs.isEmpty,
       s"base window set must be blind to a thirds crop: ${basePairs.toSeq}")
-    val extPairs = Multimodal.videoLandmarkPairsCrop(corpus, every = 1,
-      maxDf = 64, extended = true)
+    val extPairs = Multimodal.videoLandmarkPairsCrop(corpus, maxDf = 64,
+      f = VideoCrop(every = 1, extended = true))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getInt(2), r.getInt(3)))
     assert(extPairs.exists { case (a, b, wa, wb) =>
@@ -127,14 +132,13 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     val late = Seq((4L, Multimodal.syntheticWavBeats(4L, 8000, ms = 1248,
         uniformSegMs = 96)))
       .toDF("doc_id", "payload")
-    val dflt = Multimodal.audioChromaLandmarkIndex(masters).collect().toSet
-    val d12 = Multimodal.audioChromaLandmarkIndex(masters, div = 12)
+    val dflt = Multimodal.index(AudioChroma())(masters).collect().toSet
+    val d12 = Multimodal.index(AudioChroma(div = 12))(masters)
       .collect().toSet
     assert(d12 == dflt, "div=12 must be bit-identical to the default bank")
-    val appended = Multimodal.audioChromaLandmarkIndex(masters, div = 24)
-      .unionByName(Multimodal.audioChromaLandmarkIndex(late, div = 24))
-    val rebuilt = Multimodal.audioChromaLandmarkIndex(
-      masters.unionByName(late), div = 24)
+    val appended = Multimodal.index(AudioChroma(div = 24))(masters)
+      .unionByName(Multimodal.index(AudioChroma(div = 24))(late))
+    val rebuilt = Multimodal.index(AudioChroma(div = 24))(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the div=24 chroma index")

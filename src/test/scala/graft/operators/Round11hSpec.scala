@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImagePeak, PHashCrop, VideoCrop}
 
 /** Round-11 continuation: the ARBITRARY-OFFSET crop tier —
   * content-anchored peak-patch landmarks (m136/m137/st101), the
@@ -40,8 +41,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("canonical-window tier (even extended) is blind to arbitrary-offset crops") {
     implicit val s: SparkSession = spark
-    val cross = Multimodal.pHashPairsCropTolerant(corpus, maxDist = 3,
-        maxDf = 64, extended = true)
+    val cross = Multimodal.pairs(PHashCrop(extended = true))(corpus,
+      maxDist = 3, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => a < 8 && b >= 20 && b < 24 }
     assert(cross.isEmpty,
@@ -61,8 +62,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("peak tier lands every arbitrary-offset crop at 1.0; decoys share nothing") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.imagePeakPairs(corpus, minMatch = 0.6,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImagePeak())(corpus, minMatch = 0.6,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.toSet == Set((6L, 20L, 1.0), (0L, 21L, 1.0),
       (1L, 22L, 1.0), (2L, 23L, 1.0)),
@@ -77,8 +78,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(20L -> Multimodal.syntheticAvi(0, 20, w = 28, h = 24,
         frameOffset = 2, srcX0 = 7, srcY0 = 11)))
       .toDF("doc_id", "payload")
-    val cross = Multimodal.videoLandmarkPairsCrop(corpus, every = 1,
-        maxDf = 64, extended = true)
+    val cross = Multimodal.videoLandmarkPairsCrop(corpus, maxDf = 64,
+      f = VideoCrop(every = 1, extended = true))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => b == 20L || a == 20L }
     assert(cross.isEmpty,
@@ -93,7 +94,7 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
       (20L, Multimodal.syntheticAvi(0, 20, w = 28, h = 24,
         frameOffset = 2, srcX0 = 7, srcY0 = 11)))
       .toDF("doc_id", "payload")
-    val lms = Multimodal.videoPeakLandmarks(media, every = 1)
+    val lms = Multimodal.VideoPeak(every = 1).landmarks(media)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val master = lms.filter(_._1 == 0L).map(_._2).toSet
     val crop = lms.filter(_._1 == 20L).map(_._2).toSet
@@ -110,7 +111,7 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     val media = Seq(
       (6L, Multimodal.syntheticPng(6, 64, 64)), (20L, rotCrop))
       .toDF("doc_id", "payload")
-    val plain = Multimodal.imagePeakPairs(media, minMatch = 0.05,
+    val plain = Multimodal.pairs(ImagePeak())(media, minMatch = 0.05,
       maxDf = 64).collect()
     assert(plain.isEmpty,
       s"plain peak tier must miss the rotated crop: ${plain.toSeq}")
@@ -130,7 +131,7 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     val media = Seq(
       (6L, Multimodal.syntheticPng(6, 64, 64)), (20L, lossy))
       .toDF("doc_id", "payload")
-    val exact = Multimodal.imagePeakPairs(media, minMatch = 0.05,
+    val exact = Multimodal.pairs(ImagePeak())(media, minMatch = 0.05,
       maxDf = 64).collect()
     assert(exact.isEmpty,
       s"exact-hash peak tier must die under JPEG: ${exact.toSeq}")
@@ -175,18 +176,18 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, Multimodal.syntheticPng(id, 64, 64))).toDF("doc_id", "payload")
     val late = Seq((4L, Multimodal.syntheticPng(4L, 64, 64)))
       .toDF("doc_id", "payload")
-    val appended = Multimodal.imagePeakIndex(masters)
-      .unionByName(Multimodal.imagePeakIndex(late))
-    val rebuilt = Multimodal.imagePeakIndex(masters.unionByName(late))
+    val appended = Multimodal.index(ImagePeak())(masters)
+      .unionByName(Multimodal.index(ImagePeak())(late))
+    val rebuilt = Multimodal.index(ImagePeak())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the peak index")
     val probes = Seq((20L, Multimodal.syntheticPngCrop(0, 11, 7, 43, 39)))
       .toDF("doc_id", "payload")
-    val foreign = Multimodal.imagePeakIndex(masters)
+    val foreign = Multimodal.index(ImagePeak())(masters)
       .withColumn("fp_ver", lit(Multimodal.ChromaFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImagePeakIndex(probes, foreign).collect()
+      Multimodal.screen(ImagePeak())(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImagePeak, ImageScale, PeakLossy}
 
 /** Round-11 continuation: the crop+RESIZE compound — similarity-
   * invariant peak CONSTELLATIONS (m143/m144/st106). Direction angles
@@ -45,8 +46,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("exact-pixel peak tier is blind to crop+resize") {
     implicit val s: SparkSession = spark
-    val exact = Multimodal.imagePeakPairs(corpus, minMatch = 0.05,
-        maxDf = 64)
+    val exact = Multimodal.pairs(ImagePeak())(corpus, minMatch = 0.05,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(exact.isEmpty,
       s"exact peak tier must miss resampled crops: ${exact.toSeq}")
@@ -80,8 +81,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("constellation tier lands every crop+resize probe; decoys stay below threshold") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.imageScalePairs(corpus, minMatch = 0.4,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImageScale())(corpus, minMatch = 0.4,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
       Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L)),
@@ -92,8 +93,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"so per-code survival sits lower than triples): ${pairs.toSeq}")
     // sub-threshold structure exists (shared shape statistics), but
     // stays well under the gate — the operating envelope
-    val loose = Multimodal.imageScalePairs(corpus, minMatch = 0.1,
-        maxDf = 64)
+    val loose = Multimodal.pairs(ImageScale())(corpus, minMatch = 0.1,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
         .contains((p._1, p._2)))
@@ -108,10 +109,9 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
     val late = Seq((8L, Multimodal.syntheticPngBlobs(8L)))
       .toDF("doc_id", "payload")
-    val appended = Multimodal.imageScaleLandmarkIndex(masters)
-      .unionByName(Multimodal.imageScaleLandmarkIndex(late))
-    val rebuilt = Multimodal.imageScaleLandmarkIndex(
-      masters.unionByName(late))
+    val appended = Multimodal.index(ImageScale())(masters)
+      .unionByName(Multimodal.index(ImageScale())(late))
+    val rebuilt = Multimodal.index(ImageScale())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the constellation index")
@@ -122,15 +122,15 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
         Multimodal.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112),
       130L -> Multimodal.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
-    val out = Multimodal.dedupAgainstImageScaleIndex(probes,
-        Multimodal.imageScaleLandmarkIndex(masters), minMatch = 0.4)
+    val out = Multimodal.screen(ImageScale())(probes,
+      Multimodal.index(ImageScale())(masters), minMatch = 0.4)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(out == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected screen verdicts: $out")
-    val foreign = Multimodal.imageScaleLandmarkIndex(masters)
+    val foreign = Multimodal.index(ImageScale())(masters)
       .withColumn("fp_ver", lit(Multimodal.PeakFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageScaleIndex(probes, foreign).collect()
+      Multimodal.screen(ImageScale())(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }
@@ -157,8 +157,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
     // descriptors collide broadly across unrelated docs, and no true
     // pair scores above that noise floor — this tier owns the class
     val trueSet = Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
-    val desc = Multimodal.imagePeakPairsLossy(media, minMatch = 0.3,
-        maxDist = 3, maxDf = 64)
+    val desc = Multimodal.pairs(PeakLossy())(media, minMatch = 0.3, maxDist = 3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val (descTrue, descNoise) =
       desc.partition(p => trueSet.contains((p._1, p._2)))
@@ -169,8 +169,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"descriptor tier must not SEPARATE resized true pairs from " +
         s"its blob-corpus noise floor: true=${descTrue.toSeq} " +
         s"noise=${descNoise.toSeq}")
-    val pairs = Multimodal.imageScalePairs(media, minMatch = 0.4,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImageScale())(media, minMatch = 0.4,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
       Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L)),
@@ -189,8 +189,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       (20L, Multimodal.pngCropResize(
         Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 96, 96)))
       .toDF("doc_id", "payload")
-    val pairs = Multimodal.imageScalePairs(media, minMatch = 0.4,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImageScale())(media, minMatch = 0.4,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSet == Set((0L, 20L)),
       s"identity-scale crop must land: ${pairs.toSeq}")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImagePeakDihedral, ImageScale,
+  ImageScaleDihedral}
 
 /** Round-11 continuation: the FULL image similarity compound —
   * rotated/mirrored AND cropped at any offset AND uniformly rescaled
@@ -65,14 +67,14 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plain constellation tier and exact dihedral peak tier are both blind to the full compound") {
     implicit val s: SparkSession = spark
-    val plain = Multimodal.imageScalePairs(corpus, minMatch = 0.4,
-        maxDf = 64)
+    val plain = Multimodal.pairs(ImageScale())(corpus, minMatch = 0.4,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(plain.isEmpty,
       s"plain (rotation-variant) scale tier must miss dihedral " +
         s"compounds: ${plain.toSeq}")
-    val exact = Multimodal.imagePeakPairsDihedral(corpus,
-        minMatch = 0.05, maxDf = 64)
+    val exact = Multimodal.pairs(ImagePeakDihedral())(corpus, minMatch = 0.05,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(exact.isEmpty,
       s"exact-pixel dihedral peak tier must miss resampled " +
@@ -81,8 +83,8 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dihedral constellation tier lands every compound probe; decoys stay below threshold") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.imageScalePairsDihedral(corpus,
-        minMatch = 0.4, maxDf = 64)
+    val pairs = Multimodal.pairs(ImageScaleDihedral())(corpus, minMatch = 0.4,
+      maxDf = 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
@@ -93,8 +95,8 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.forall(_._3 != 0),
       s"a dihedral-transformed probe must land at a NON-identity " +
         s"readout: ${pairs.toSeq}")
-    val loose = Multimodal.imageScalePairsDihedral(corpus,
-        minMatch = 0.1, maxDf = 64)
+    val loose = Multimodal.pairs(ImageScaleDihedral())(corpus, minMatch = 0.1,
+      maxDf = 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
@@ -108,28 +110,27 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val masters = (0L until 8L).map(id =>
       (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
-    val index = Multimodal.imageScaleLandmarkIndex(masters)
+    val index = Multimodal.index(ImageScale())(masters)
     val probes = Seq(
       20L -> compound(0, 20, 12, 116, 108, 128, 128, 1),
       21L -> compound(1, 8, 16, 104, 112, 112, 112, 5),
       130L -> Multimodal.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
     // the plain screen (orient-0 probes only) keeps the rotated ones
-    val plain = Multimodal.dedupAgainstImageScaleIndex(probes, index,
-        minMatch = 0.4)
+    val plain = Multimodal.screen(ImageScale())(probes, index, minMatch = 0.4)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(plain == Set((20L, true), (21L, true), (130L, true)),
       s"plain screen must be blind to dihedral compounds: $plain")
     // the dihedral fan catches them against the SAME index
-    val fan = Multimodal.dedupAgainstImageScaleIndexDihedral(probes,
-        index, minMatch = 0.4)
+    val fan = Multimodal.screen(ImageScaleDihedral())(probes, index,
+      minMatch = 0.4)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(fan == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected dihedral screen verdicts: $fan")
     val foreign = index.withColumn("fp_ver",
       lit(Multimodal.PeakFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageScaleIndexDihedral(probes, foreign)
+      Multimodal.screen(ImageScaleDihedral())(probes, foreign)
         .collect()
     }
     assert(e.getMessage.contains("rebuild"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{VideoPeak, VideoScale}
 
 /** Round-11 continuation: the crop+RESIZE compound for VIDEO
   * (m147/m148/st108) — pooled per-frame constellation codes. A video
@@ -59,8 +60,8 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("exact-pixel video peak tier is blind to crop+resize") {
     implicit val s: SparkSession = spark
-    val exact = Multimodal.videoPeakPairs(corpus, minMatch = 0.05,
-        maxDf = 64)
+    val exact = Multimodal.pairs(VideoPeak())(corpus, minMatch = 0.05,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(exact.isEmpty,
       s"exact video peak tier must miss resampled crops: ${exact.toSeq}")
@@ -68,16 +69,16 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("video constellation tier lands every crop+resize probe incl. the trim compound") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.videoScalePairs(corpus, minMatch = 0.4,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(VideoScale())(corpus, minMatch = 0.4,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
       Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L)),
       s"unexpected video scale pairs: ${pairs.toSeq}")
     assert(pairs.forall(_._3 >= 0.49),
       s"true pairs must score >= 0.49: ${pairs.toSeq}")
-    val loose = Multimodal.videoScalePairs(corpus, minMatch = 0.1,
-        maxDf = 64)
+    val loose = Multimodal.pairs(VideoScale())(corpus, minMatch = 0.1,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
         .contains((p._1, p._2)))
@@ -92,10 +93,9 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, Multimodal.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
     val late = Seq((6L, Multimodal.syntheticAviBlobs(6L, 6)))
       .toDF("doc_id", "payload")
-    val appended = Multimodal.videoScaleLandmarkIndex(masters)
-      .unionByName(Multimodal.videoScaleLandmarkIndex(late))
-    val rebuilt = Multimodal.videoScaleLandmarkIndex(
-      masters.unionByName(late))
+    val appended = Multimodal.index(VideoScale())(masters)
+      .unionByName(Multimodal.index(VideoScale())(late))
+    val rebuilt = Multimodal.index(VideoScale())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the video constellation index")
@@ -106,15 +106,15 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
         Multimodal.syntheticAviBlobs(1, 6), 8, 8, 88, 88, 112, 112),
       130L -> Multimodal.syntheticAviBlobs(130L, 6))
       .toDF("doc_id", "payload")
-    val out = Multimodal.dedupAgainstVideoScaleIndex(probes,
-        Multimodal.videoScaleLandmarkIndex(masters), minMatch = 0.4)
+    val out = Multimodal.screen(VideoScale())(probes,
+      Multimodal.index(VideoScale())(masters), minMatch = 0.4)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(out == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected video screen verdicts: $out")
-    val foreign = Multimodal.videoScaleLandmarkIndex(masters)
+    val foreign = Multimodal.index(VideoScale())(masters)
       .withColumn("fp_ver", lit(Multimodal.PeakFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstVideoScaleIndex(probes, foreign).collect()
+      Multimodal.screen(VideoScale())(probes, foreign).collect()
     }
     assert(e.getMessage.contains("rebuild"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImageRotScale, ImageScaleDihedral}
 
 /** Round-11 continuation: ARBITRARY-ANGLE rotation dedup
   * (m150/m151/st110) — rotation-invariant constellation codes (angle
@@ -43,8 +44,8 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the dihedral scale fan is blind to non-90-degree rotations") {
     implicit val s: SparkSession = spark
-    val fan = Multimodal.imageScalePairsDihedral(corpus, minMatch = 0.3,
-        maxDf = 64)
+    val fan = Multimodal.pairs(ImageScaleDihedral())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(fan.isEmpty,
       s"90-degree-grid fan must miss arbitrary-angle rotations: " +
@@ -53,14 +54,14 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rotation-invariant tier lands every rotation incl. the 3-degree scan skew") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.imageRotScalePairs(corpus, minMatch = 0.2,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImageRotScale())(corpus, minMatch = 0.2,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
       Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L)),
       s"unexpected rotation pairs: ${pairs.toSeq}")
-    val loose = Multimodal.imageRotScalePairs(corpus, minMatch = 0.05,
-        maxDf = 64)
+    val loose = Multimodal.pairs(ImageRotScale())(corpus, minMatch = 0.05,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
         .contains((p._1, p._2)))
@@ -78,14 +79,14 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
       (20L, Multimodal.pngDihedral(Multimodal.pngCropResize(
         Multimodal.syntheticPngBlobs(0), 8, 8, 120, 120, 112, 112), 4)))
       .toDF("doc_id", "payload")
-    val rot = Multimodal.imageRotScalePairs(media, minMatch = 0.2,
-        maxDf = 64)
+    val rot = Multimodal.pairs(ImageRotScale())(media, minMatch = 0.2,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rot.isEmpty,
       s"mirror flips both chirality bits — the rot tier must not " +
         s"claim it: ${rot.toSeq}")
-    val fan = Multimodal.imageScalePairsDihedral(media, minMatch = 0.3,
-        maxDf = 64)
+    val fan = Multimodal.pairs(ImageScaleDihedral())(media, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(fan.toSet == Set((0L, 20L)),
       s"the dihedral fan owns mirrored re-uploads: ${fan.toSeq}")
@@ -98,10 +99,9 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
     val late = Seq((8L, Multimodal.syntheticPngBlobs(8L)))
       .toDF("doc_id", "payload")
-    val appended = Multimodal.imageRotScaleLandmarkIndex(masters)
-      .unionByName(Multimodal.imageRotScaleLandmarkIndex(late))
-    val rebuilt = Multimodal.imageRotScaleLandmarkIndex(
-      masters.unionByName(late))
+    val appended = Multimodal.index(ImageRotScale())(masters)
+      .unionByName(Multimodal.index(ImageRotScale())(late))
+    val rebuilt = Multimodal.index(ImageRotScale())(masters.unionByName(late))
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the rot-constellation index")
@@ -112,17 +112,17 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
         Multimodal.syntheticPngBlobs(1), -8.0, 1.2),
       130L -> Multimodal.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
-    val out = Multimodal.dedupAgainstImageRotScaleIndex(probes,
-        Multimodal.imageRotScaleLandmarkIndex(masters), minMatch = 0.2)
+    val out = Multimodal.screen(ImageRotScale())(probes,
+      Multimodal.index(ImageRotScale())(masters), minMatch = 0.2)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(out == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected rot screen verdicts: $out")
     // the plain-scale family's stamp (11002) must be rejected here:
     // incomparable code families never match silently
-    val foreign = Multimodal.imageRotScaleLandmarkIndex(masters)
+    val foreign = Multimodal.index(ImageRotScale())(masters)
       .withColumn("fp_ver", lit(Multimodal.ScaleFpVersion))
     val e = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageRotScaleIndex(probes, foreign)
+      Multimodal.screen(ImageRotScale())(probes, foreign)
         .collect()
     }
     assert(e.getMessage.contains("rebuild"))

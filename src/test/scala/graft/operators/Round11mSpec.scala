@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImageRotScale, ImageScale, ImageScaleAspect}
 
 /** Round-11 continuation: ANISOTROPIC resize (aspect-squeeze) dedup
   * (m152/m153/st111) — the 4:3 <-> 16:9 display-conversion class. A
@@ -44,14 +45,14 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plain scale tier and rot tier are both blind to aspect squeezes") {
     implicit val s: SparkSession = spark
-    val plain = Multimodal.imageScalePairs(corpus, minMatch = 0.3,
-        maxDf = 64)
+    val plain = Multimodal.pairs(ImageScale())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(plain.isEmpty,
       s"similarity-invariant tier must miss anisotropic squeezes: " +
         s"${plain.toSeq}")
-    val rot = Multimodal.imageRotScalePairs(corpus, minMatch = 0.2,
-        maxDf = 64)
+    val rot = Multimodal.pairs(ImageRotScale())(corpus, minMatch = 0.2,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rot.isEmpty,
       s"rotation-invariant tier must miss anisotropic squeezes: " +
@@ -60,8 +61,8 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("aspect fan lands both squeeze directions at the undoing hypothesis") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.imageScalePairsAspect(corpus, minMatch = 0.3,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(ImageScaleAspect())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
@@ -72,8 +73,8 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.forall(p =>
       if (p._1 == 0L || p._1 == 2L) p._3 == 2 else p._3 == 1),
       s"wrong undoing hypothesis: ${pairs.toSeq}")
-    val loose = Multimodal.imageScalePairsAspect(corpus, minMatch = 0.1,
-        maxDf = 64)
+    val loose = Multimodal.pairs(ImageScaleAspect())(corpus, minMatch = 0.1,
+      maxDf = 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
@@ -89,25 +90,23 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val masters = (0L until 8L).map(id =>
       (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
-    val index = Multimodal.imageScaleLandmarkIndex(masters)
+    val index = Multimodal.index(ImageScale())(masters)
     val probes = Seq(
       20L -> squeeze(0, 0.75),
       21L -> squeeze(1, 4.0 / 3.0),
       130L -> Multimodal.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
-    val plain = Multimodal.dedupAgainstImageScaleIndex(probes, index,
-        minMatch = 0.3)
+    val plain = Multimodal.screen(ImageScale())(probes, index, minMatch = 0.3)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(plain == Set((20L, true), (21L, true), (130L, true)),
       s"plain screen must be blind to squeezes: $plain")
-    val fan = Multimodal.dedupAgainstImageScaleIndexAspect(probes,
-        index, minMatch = 0.3)
+    val fan = Multimodal.screen(ImageScaleAspect())(probes, index,
+      minMatch = 0.3)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(fan == Set((20L, false), (21L, false), (130L, true)),
       s"unexpected aspect screen verdicts: $fan")
     val e = intercept[IllegalArgumentException] {
-      Multimodal.imageScaleLandmarksAspect(probes,
-        hyps = Seq(0.75, 1.0)).collect()
+      ImageScaleAspect(hyps = Seq(0.75, 1.0)).landmarks(probes).collect()
     }
     assert(e.getMessage.contains("identity"))
   }

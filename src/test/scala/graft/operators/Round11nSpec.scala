@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{VideoRotScale, VideoScale}
 
 /** Round-11 continuation: any-angle-rotated VIDEO dedup (m154/st112) —
   * pooled per-frame rotation-invariant constellation codes. The
@@ -43,8 +44,8 @@ class Round11nSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the plain video constellation tier is blind to rotated re-renders") {
     implicit val s: SparkSession = spark
-    val plain = Multimodal.videoScalePairs(corpus, minMatch = 0.3,
-        maxDf = 64)
+    val plain = Multimodal.pairs(VideoScale())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(plain.isEmpty,
       s"rotation-variant video tier must miss rotated re-renders: " +
@@ -53,14 +54,14 @@ class Round11nSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("video rot tier lands every rotation incl. 90 degrees and the trim compound") {
     implicit val s: SparkSession = spark
-    val pairs = Multimodal.videoRotScalePairs(corpus, minMatch = 0.2,
-        maxDf = 64)
+    val pairs = Multimodal.pairs(VideoRotScale())(corpus, minMatch = 0.2,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
       Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L)),
       s"unexpected video rotation pairs: ${pairs.toSeq}")
-    val loose = Multimodal.videoRotScalePairs(corpus, minMatch = 0.05,
-        maxDf = 64)
+    val loose = Multimodal.pairs(VideoRotScale())(corpus, minMatch = 0.05,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filterNot(p => Set((0L, 20L), (1L, 21L), (2L, 22L), (3L, 23L))
         .contains((p._1, p._2)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{VideoRotScale, VideoScale, VideoScaleAspect}
 
 /** Round-11 continuation: ANAMORPHIC video dedup (m156/m157/st113) —
   * the aspect-hypothesis fan pooled per sampled frame. A 4:3 master
@@ -41,14 +42,14 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plain and rot video constellation tiers are both blind to anamorphic re-rips") {
     implicit val s: SparkSession = spark
-    val plain = Multimodal.videoScalePairs(corpus, minMatch = 0.3,
-        maxDf = 64)
+    val plain = Multimodal.pairs(VideoScale())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(plain.isEmpty,
       s"similarity-invariant video tier must miss squeezes: " +
         s"${plain.toSeq}")
-    val rot = Multimodal.videoRotScalePairs(corpus, minMatch = 0.2,
-        maxDf = 64)
+    val rot = Multimodal.pairs(VideoRotScale())(corpus, minMatch = 0.2,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rot.isEmpty,
       s"rotation-invariant video tier must miss squeezes: " +
@@ -58,8 +59,8 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("video aspect fan lands both directions incl. the trim compound; screen works on the plain index") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val pairs = Multimodal.videoScalePairsAspect(corpus,
-        minMatch = 0.3, maxDf = 64)
+    val pairs = Multimodal.pairs(VideoScaleAspect())(corpus, minMatch = 0.3,
+      maxDf = 64)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     assert(pairs.map(p => (p._1, p._2)).toSet ==
@@ -70,19 +71,19 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"wrong undoing hypothesis: ${pairs.toSeq}")
     val masters = (0L until 6L).map(id =>
       (id, Multimodal.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
-    val index = Multimodal.videoScaleLandmarkIndex(masters)
+    val index = Multimodal.index(VideoScale())(masters)
     val probes = Seq(
       20L -> Multimodal.aviAspectDib(
         Multimodal.syntheticAviBlobs(0, 6), 0.75),
       130L -> Multimodal.syntheticAviBlobs(130L, 6))
       .toDF("doc_id", "payload")
-    val plainScreen = Multimodal.dedupAgainstVideoScaleIndex(probes,
-        index, minMatch = 0.3)
+    val plainScreen = Multimodal.screen(VideoScale())(probes, index,
+      minMatch = 0.3)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(plainScreen == Set((20L, true), (130L, true)),
       s"plain video screen must be blind to squeezes: $plainScreen")
-    val fan = Multimodal.dedupAgainstVideoScaleIndexAspect(probes,
-        index, minMatch = 0.3)
+    val fan = Multimodal.screen(VideoScaleAspect())(probes, index,
+      minMatch = 0.3)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet
     assert(fan == Set((20L, false), (130L, true)),
       s"unexpected video aspect screen verdicts: $fan")

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioChroma, ImageAffine, ImageRotScale,
+  ImageScale, ImageScaleAspect, ImageScaleCanonical, ImageScaleNormalized,
+  PeakLossy, VideoAffine, VideoRotScale, VideoScaleAspect, VideoScaleCanonical}
 
 /** Round-12: the PHASE-INSENSITIVE chroma tier (candidate+verify) —
   * TRUE (envelope-preserving) pitch shifts on METRONOMIC audio, the
@@ -48,7 +51,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("single-window chroma tier MISSES most true-pitch metronomic re-uploads (the m158 gap, pinned as contrast)") {
     implicit val s: SparkSession = spark
     val m = media(0L until 10L, 20L until 30L, Nil, Nil)
-    val pairs = Multimodal.audioChromaLandmarkPairs(m, maxDf = 64)
+    val pairs = Multimodal.pairs(AudioChroma())(m, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val caught = (0L until 10L).count(id => pairs((id, id + 20)))
     info(s"single-window tier catches $caught/10 true-pitch pairs")
@@ -107,15 +110,16 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       } ++
       (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
-    val fan = Multimodal.imageScalePairsAspect(m, minMatch = 0.3, maxDf = 64)
+    val fan = Multimodal.pairs(ImageScaleAspect())(m, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fanCaught = (0L until 4L).count(id => fan((id, id + 20)))
     info(s"default fan catches $fanCaught/4 off-fan squeezes (the contrast gate)")
     assert(fanCaught == 0,
       s"default fan should miss off-fan factors; if it now catches, " +
         s"the m160 contrast factors need re-picking: $fan")
-    val norm = Multimodal.imageScalePairsNormalized(m, minMatch = 0.3,
-        maxDf = 64)
+    val norm = Multimodal.pairs(ImageScaleNormalized())(m, minMatch = 0.3,
+      maxDf = 64)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
       .toMap
     val caught = (0L until 4L).count(id => norm.contains((id, id + 20)))
@@ -234,8 +238,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("constellation tier at the 0.2 class gate lands DEEP-lossy crops the 0.4 gate drops (m163)") {
     implicit val s: SparkSession = spark
-    val at02 = Multimodal.imageScalePairs(deepLossyMedia, minMatch = 0.2,
-        maxDf = 64).collect()
+    val at02 = Multimodal.pairs(ImageScale())(deepLossyMedia, minMatch = 0.2,
+      maxDf = 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val caught = (0L until 4L).count(id => at02.contains((id, id + 20)))
     info(s"0.2 gate: $caught/4, pairs ${at02.toSeq.sortBy(_._1)}")
@@ -245,8 +249,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // the m149 operating gate (0.4, tuned for q >= 0.85) drops part
     // of the class (probe 22's 80x80 downscale at q0.7 scores 0.308)
     // — the reason the class gets its own measured gate
-    val at04 = Multimodal.imageScalePairs(deepLossyMedia, minMatch = 0.4,
-        maxDf = 64).collect()
+    val at04 = Multimodal.pairs(ImageScale())(deepLossyMedia, minMatch = 0.4,
+      maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val caught04 = (0L until 4L).count(id => at04((id, id + 20)))
     info(s"0.4 gate: $caught04/4")
@@ -257,8 +261,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // RESIZED legs structurally (patch pixels resample) and holds only
     // sporadically on deep-lossy same-size crops (probe 20's q0.6
     // survives; the q0.5/0.7 legs do not)
-    val fine = Multimodal.imagePeakPairsLossy(deepLossyMedia,
-        minMatch = 0.5, maxDist = 1, maxDf = 64).collect()
+    val fine = Multimodal.pairs(PeakLossy())(deepLossyMedia, minMatch = 0.5,
+      maxDist = 1, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fineCaught = (0L until 4L).count(id => fine((id, id + 20)))
     info(s"fine tier at m141 point: $fineCaught/4")
@@ -292,7 +296,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // the single-window chroma CODE tier splits energy between bands
     // on a fractional shift — its survival stays partial (the m158
     // contrast shape), which is why the verify tier owns this class
-    val codes = Multimodal.audioChromaLandmarkPairs(m, maxDf = 64)
+    val codes = Multimodal.pairs(AudioChroma())(m, maxDf = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val codeCaught = (0L until 8L).count(id => codes((id, id + 20)))
     info(s"single-window code tier: $codeCaught/8")
@@ -318,8 +322,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
           Multimodal.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
       (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
-    val canon = Multimodal.imageScalePairsCanonical(m, minMatch = 0.3,
-        maxDf = 64).collect()
+    val canon = Multimodal.pairs(ImageScaleCanonical())(m, minMatch = 0.3,
+      maxDf = 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val caught = (0L until 4L).count(id => canon.contains((id, id + 20)))
     info(s"canonical: $caught/4, pairs ${canon.toSeq.sortBy(_._1)}")
@@ -329,8 +333,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // contrast: the peak-cloud normalization (m160) loses the peak set
     // under the merge for PART of the class (doc-dependent — which
     // blobs sit close enough to fuse): at least one probe drops
-    val norm = Multimodal.imageScalePairsNormalized(m, minMatch = 0.3,
-        maxDf = 64).collect()
+    val norm = Multimodal.pairs(ImageScaleNormalized())(m, minMatch = 0.3,
+      maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val normCaught = (0L until 4L).count(id => norm((id, id + 20)))
     info(s"m160 normalized tier: $normCaught/4")
@@ -340,8 +344,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // contrast: the fan at its DEFAULT display-conversion hypotheses
     // (an UNKNOWN factor means nobody added 1.6 to the set) misses the
     // whole class — 1.6:1 sits > 7% from every default readout
-    val fanDefault = Multimodal.imageScalePairsAspect(m, minMatch = 0.3,
-        maxDf = 64).collect()
+    val fanDefault = Multimodal.pairs(ImageScaleAspect())(m, minMatch = 0.3,
+      maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fanDefCaught = (0L until 4L).count(id => fanDefault((id, id + 20)))
     info(s"m152 fan at default hyps: $fanDefCaught/4")
@@ -351,8 +355,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // and WITH the true factor enumerated the fan still covers — the
     // PLANS verify-tier claim holds; the canonical tier's new ground
     // is strictly the UNKNOWN-factor strong class
-    val fanTrue = Multimodal.imageScalePairsAspect(m, minMatch = 0.3,
-        maxDf = 64, hyps = Seq(1.0, 1.6, 1.0 / 1.6)).collect()
+    val fanTrue = Multimodal.pairs(ImageScaleAspect(hyps = Seq(1.0, 1.6, 1.0 / 1.6)))(m,
+      minMatch = 0.3, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fanTrueCaught = (0L until 4L).count(id => fanTrue((id, id + 20)))
     info(s"m152 fan at true factors: $fanTrueCaught/4")
@@ -368,8 +372,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
           Multimodal.syntheticPngBlobs(id - 20), 0, 0, 128, 128, w, 128))
       } ++
       (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
-    val c2 = Multimodal.imageScalePairsCanonical(rows2.toDF("doc_id", "payload"),
-        minMatch = 0.3, maxDf = 64).collect()
+    val c2 = Multimodal.pairs(ImageScaleCanonical())(rows2.toDF("doc_id", "payload"),
+      minMatch = 0.3, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert((0L until 4L).forall(id => c2((id, id + 20))),
       s"canonical tier lost the m160 moderate class: $c2")
@@ -382,20 +386,20 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = (0L until 4L)
       .map(id => (id, Multimodal.syntheticPngBlobs(id)))
       .toDF("doc_id", "payload")
-    val canonIdx = Multimodal.imageCanonicalLandmarkIndex(corpus)
+    val canonIdx = Multimodal.index(ImageScaleCanonical())(corpus)
     assert(canonIdx.select("fp_ver").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(Multimodal.CanonFpVersion))
-    val plainIdx = Multimodal.imageScaleLandmarkIndex(corpus)
+    val plainIdx = Multimodal.index(ImageScale())(corpus)
     val probe = Seq((20L, Multimodal.syntheticPngBlobs(0L)))
       .toDF("doc_id", "payload")
     // canonical screen vs plain index: reject
     val e1 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageCanonicalIndex(probe, plainIdx).collect()
+      Multimodal.screen(ImageScaleCanonical())(probe, plainIdx).collect()
     }
     assert(e1.getMessage.contains("imageCanonicalLandmarkIndex"))
     // plain screen vs canonical index: reject
     val e2 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageScaleIndex(probe, canonIdx).collect()
+      Multimodal.screen(ImageScale())(probe, canonIdx).collect()
     }
     assert(e2.getMessage.contains("imageScaleLandmarkIndex"))
     // append == rebuild on the canonical index
@@ -403,9 +407,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       .map(id => (id, Multimodal.syntheticPngBlobs(id)))
       .toDF("doc_id", "payload")
     val appended = canonIdx.unionByName(
-      Multimodal.imageCanonicalLandmarkIndex(more))
-    val rebuilt = Multimodal.imageCanonicalLandmarkIndex(
-      corpus.unionByName(more))
+      Multimodal.index(ImageScaleCanonical())(more))
+    val rebuilt = Multimodal.index(ImageScaleCanonical())(corpus.unionByName(more))
     assert(appended.select("lm", "doc_id", "nl", "fp_ver").collect().toSet ==
       rebuilt.select("lm", "doc_id", "nl", "fp_ver").collect().toSet)
   }
@@ -425,8 +428,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
           Multimodal.syntheticAviBlobs(2, 6), 0, 0, 96, 96, 56, 90, 2)) ++
       (140L until 142L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6)))
     val m = rows.toDF("doc_id", "payload")
-    val canon = Multimodal.videoScalePairsCanonical(m, minMatch = 0.3,
-        maxDf = 64).collect()
+    val canon = Multimodal.pairs(VideoScaleCanonical())(m, minMatch = 0.3,
+      maxDf = 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val caught = (0L until 3L).count(id => canon.contains((id, id + 20)))
     info(s"video canonical: $caught/3, ${canon.toSeq.sortBy(_._1)}")
@@ -435,8 +438,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(falsePairs.isEmpty, s"false pairs: $falsePairs")
     // the m156 fan at its default display-conversion set is blind to
     // these factors (1.6:1 / 1.7:1 are > 7% off 4:3<->16:9)
-    val fan = Multimodal.videoScalePairsAspect(m, minMatch = 0.3,
-        maxDf = 64).collect()
+    val fan = Multimodal.pairs(VideoScaleAspect())(m, minMatch = 0.3,
+      maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val fanCaught = (0L until 3L).count(id => fan((id, id + 20)))
     info(s"m156 default fan: $fanCaught/3")
@@ -458,8 +461,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         22L -> probe(2, 20.0, 85), 23L -> probe(3, 33.0, 80)) ++
       (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
-    val affine = Multimodal.imageScalePairsAffine(m, minMatch = 0.25,
-        maxDf = 64).collect()
+    val affine = Multimodal.pairs(ImageAffine())(m, minMatch = 0.25, maxDf = 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val caught = (0L until 4L).count(id => affine.contains((id, id + 20)))
     info(s"affine tier: $caught/4, ${affine.toSeq.sortBy(_._1)}")
@@ -471,9 +473,12 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (0L until 4L).count(id => got((id, id + 20)))
     }
-    val rot = caughtBy(Multimodal.imageRotScalePairs(m, minMatch = 0.15, maxDf = 64))
-    val canon = caughtBy(Multimodal.imageScalePairsCanonical(m, minMatch = 0.2, maxDf = 64))
-    val norm = caughtBy(Multimodal.imageScalePairsNormalized(m, minMatch = 0.2, maxDf = 64))
+    val rot = caughtBy(Multimodal.pairs(ImageRotScale())(m, minMatch = 0.15,
+      maxDf = 64))
+    val canon = caughtBy(Multimodal.pairs(ImageScaleCanonical())(m,
+      minMatch = 0.2, maxDf = 64))
+    val norm = caughtBy(Multimodal.pairs(ImageScaleNormalized())(m,
+      minMatch = 0.2, maxDf = 64))
     info(s"contrast: rotInv=$rot/4 canonical=$canon/4 cloudNorm=$norm/4")
     assert(rot == 0 && canon == 0 && norm == 0,
       s"a prior tier unexpectedly covers the affine compound " +
@@ -488,8 +493,8 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         22L -> Multimodal.pngRotateResize(Multimodal.syntheticPngBlobs(2), -8.0, 1.2),
         23L -> Multimodal.pngCropResize(Multimodal.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
       (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
-    val simple = Multimodal.imageScalePairsAffine(rows2.toDF("doc_id", "payload"),
-        minMatch = 0.25, maxDf = 64).collect()
+    val simple = Multimodal.pairs(ImageAffine())(rows2.toDF("doc_id", "payload"),
+      minMatch = 0.25, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert((0L until 4L).forall(id => simple((id, id + 20))),
       s"affine tier lost a simpler class: $simple")
@@ -508,7 +513,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         22L -> probe(2, 20.0, 64, 96, 2)) ++
       (140L until 142L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6)))
     val m = rows.toDF("doc_id", "payload")
-    val affine = Multimodal.videoAffinePairs(m, minMatch = 0.25, maxDf = 64)
+    val affine = Multimodal.pairs(VideoAffine())(m, minMatch = 0.25, maxDf = 64)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val caught = (0L until 3L).count(id => affine.contains((id, id + 20)))
     info(s"video affine: $caught/3, ${affine.toSeq.sortBy(_._1)}")
@@ -519,8 +524,10 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
       val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (0L until 3L).count(id => got((id, id + 20)))
     }
-    val rot = caughtBy(Multimodal.videoRotScalePairs(m, minMatch = 0.15, maxDf = 64))
-    val canon = caughtBy(Multimodal.videoScalePairsCanonical(m, minMatch = 0.2, maxDf = 64))
+    val rot = caughtBy(Multimodal.pairs(VideoRotScale())(m, minMatch = 0.15,
+      maxDf = 64))
+    val canon = caughtBy(Multimodal.pairs(VideoScaleCanonical())(m,
+      minMatch = 0.2, maxDf = 64))
     info(s"contrast: videoRot=$rot/3 videoCanonical=$canon/3")
     assert(rot == 0 && canon == 0,
       s"a prior video tier unexpectedly covers the affine compound " +
@@ -528,18 +535,18 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // affine index: stamps its family, rejects cross-family screens
     val corpus = (0L until 4L)
       .map(id => (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
-    val affIdx = Multimodal.imageAffineLandmarkIndex(corpus)
+    val affIdx = Multimodal.index(ImageAffine())(corpus)
     assert(affIdx.select("fp_ver").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(Multimodal.AffineFpVersion))
     val probeDf = Seq((20L, Multimodal.syntheticPngBlobs(0L)))
       .toDF("doc_id", "payload")
     val e1 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageAffineIndex(probeDf,
-        Multimodal.imageScaleLandmarkIndex(corpus)).collect()
+      Multimodal.screen(ImageAffine())(probeDf,
+        Multimodal.index(ImageScale())(corpus)).collect()
     }
     assert(e1.getMessage.contains("imageAffineLandmarkIndex"))
     val e2 = intercept[IllegalArgumentException] {
-      Multimodal.dedupAgainstImageScaleIndex(probeDf, affIdx).collect()
+      Multimodal.screen(ImageScale())(probeDf, affIdx).collect()
     }
     assert(e2.getMessage.contains("imageScaleLandmarkIndex"))
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImageAffine, ImageAffineFrame, ImageScale}
 
 /** Round-13: public-suffix-table registered domains (the data-driven
   * form the round-12 verdict asked for) and friends. */
@@ -92,17 +93,17 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.filter($"doc_b" - $"doc_a" === 100 && $"doc_b" < 200)
         .select($"doc_a", $"doc_b").distinct().count()
     val frames = planted(
-      Multimodal.imageAffineFramePairs(media))
+      Multimodal.pairs(ImageAffineFrame())(media))
     val global = planted(
-      Multimodal.imageScalePairsAffine(media, minMatch = 0.2))
+      Multimodal.pairs(ImageAffine())(media, minMatch = 0.2))
     val crop = planted(
-      Multimodal.imageScalePairs(media, minMatch = 0.2))
+      Multimodal.pairs(ImageScale())(media, minMatch = 0.2))
     info(s"frames=$frames global=$global cropLadder=$crop of 10")
     assert(frames >= 8, s"affine-frame recall too low: $frames/10")
     assert(global <= 2, s"m169 should be (mostly) blind here, got $global")
     assert(crop <= 2, s"crop ladder should be (mostly) blind here, got $crop")
     // no spurious pairs against the 10 fresh decoys
-    val spurious = Multimodal.imageAffineFramePairs(media)
+    val spurious = Multimodal.pairs(ImageAffineFrame())(media)
       .filter($"doc_b" >= 200 || ($"doc_b" - $"doc_a" =!= 100))
       .select($"doc_a", $"doc_b").distinct().count()
     assert(spurious == 0, s"spurious pairs: $spurious")
@@ -183,7 +184,7 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.filter($"doc_b" >= 120 && $"doc_b" < 130 &&
         $"doc_b" - $"doc_a" === 120).select($"doc_a", $"doc_b")
         .distinct().count()
-    val code = planted(Multimodal.imageAffineFramePairs(media, maxDf = 64))
+    val code = planted(Multimodal.pairs(ImageAffineFrame())(media, maxDf = 64))
     val verified = planted(
       Multimodal.imageAffineFramePairsVerified(media, maxDf = 64))
     val spurious = Multimodal.imageAffineFramePairsVerified(media, maxDf = 64)
@@ -233,7 +234,7 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     def planted(df: org.apache.spark.sql.DataFrame): Long =
       df.filter($"doc_b" - $"doc_a" === 100 && $"doc_b" < 200)
         .select($"doc_a", $"doc_b").distinct().count()
-    val base = planted(Multimodal.imageAffineFramePairs(media))
+    val base = planted(Multimodal.pairs(ImageAffineFrame())(media))
     val chiral = planted(Multimodal.imageAffineFramePairsChiral(media))
     val out = Multimodal.imageAffineFramePairsChiral(media)
     val spurious = out

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImageAffineFrame, ImageAffineFrameSqueezeFan,
+  ImagePeak, VideoAffineFrame, VideoAffineFrameSqueezeFan}
 
 /** Round-14: the hot-code posting backstop, the verified affine-frame
   * tier's video/chiral members, the de-squeeze hypothesis fan, and
@@ -35,23 +37,21 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("doc_id", "payload")
     val acc = Multimodal.hotCodesDropped(s)
     val before = acc.value
-    val saved = Multimodal.hotCodeAutoCap
-    Multimodal.hotCodeAutoCap = 8
-    try {
-      // maxDf = 0 -> the AUTO cap path (the previously unguarded seam)
-      val pairs = Multimodal.imagePeakPairs(media, minMatch = 0.6)
-        .orderBy("doc_a", "doc_b").collect()
-      assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-        Seq((10L, 11L)),
-        s"expected only the benign pair, got ${pairs.mkString(", ")}")
-      assert(acc.value > before, "dropped hot codes must be counted")
-      // an EXPLICIT maxDf above the plant keeps the hot code: the
-      // auto cap must never override a caller's deliberate choice
-      val uncapped = Multimodal.imagePeakPairs(media, minMatch = 0.6,
-        maxDf = 64).count()
-      assert(uncapped == 45 + 1, s"explicit maxDf=64 must keep all " +
-        s"pairs (45 hot + 1 benign), got $uncapped")
-    } finally Multimodal.hotCodeAutoCap = saved
+    // maxDf = 0 -> the AUTO cap path (the previously unguarded seam),
+    // lowered to 8 through the scorer's private[graft] autoCap
+    val lms = Materialize.eager(ImagePeak().landmarks(media))
+    val pairs = Multimodal.peakLandmarkPairScores(lms, 0.6, 0, autoCap = 8)
+      .orderBy("doc_a", "doc_b").collect()
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((10L, 11L)),
+      s"expected only the benign pair, got ${pairs.mkString(", ")}")
+    assert(acc.value > before, "dropped hot codes must be counted")
+    // an EXPLICIT maxDf above the plant keeps the hot code: the
+    // auto cap must never override a caller's deliberate choice
+    val uncapped = Multimodal.pairs(ImagePeak())(media, minMatch = 0.6,
+      maxDf = 64).count()
+    assert(uncapped == 45 + 1, s"explicit maxDf=64 must keep all " +
+      s"pairs (45 hot + 1 benign), got $uncapped")
   }
 
   /** m182 media: 6 video masters, two MEASURED gray-zone crop x
@@ -83,7 +83,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // the scope contrast: the code gate (m177 defaults) misses both
       // gray-zone compounds but lands the m177-class ones
-      val code = Multimodal.videoAffineFramePairs(media, maxDf = 64)
+      val code = Multimodal.pairs(VideoAffineFrame())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(!code((0L, 20L)) && !code((2L, 21L)),
         s"gray-zone compounds must be UNDER the code gate, got $code")
@@ -133,8 +133,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // contrast 1: the identity verified tier (m179) is chirality-
       // fixed BY DESIGN — zero pairs against mirrored probes
-      val m179 = Multimodal.imageAffineFramePairsVerified(media,
-        maxDf = 64).collect()
+      val m179 = Multimodal.imageAffineFramePairsVerified(media, maxDf = 64).collect()
       assert(m179.isEmpty,
         s"m179 must be blind to mirrored renderings, got ${m179.mkString(", ")}")
       // contrast 2: the chiral CODE gate (m181) drops the gray-zone
@@ -148,7 +147,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"m174-class mirrored compounds must land the m181 gate, got $code")
       // m183: all four verify at orient 1 with det < 0 maps
       val ver = Multimodal.imageAffineFramePairsChiralVerified(media,
-          maxDf = 64)
+        maxDf = 64)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getDouble(3))
         .toMap
@@ -196,15 +195,15 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
       // the measured scope contrast: the base tier drops all four
       // extreme compounds but HOLDS at 2:1 (the revised boundary —
       // the old ~1.5:1 declared limit does not bind on this class)
-      val base = Multimodal.imageAffineFramePairs(media, maxDf = 64)
+      val base = Multimodal.pairs(ImageAffineFrame())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       planted.foreach(k => assert(!base(k),
         s"$k must be UNDER the base m174 gate, got $base"))
       assert(base((4L, 24L)),
         s"the 2:1 compound must LAND the base gate (revised boundary), got $base")
       // the fan lands all four extreme compounds; no cross-source pair
-      val fan = Multimodal.imageAffineFramePairsSqueezeFan(media,
-          maxDf = 64)
+      val fan = Multimodal.pairs(ImageAffineFrameSqueezeFan())(media,
+        maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       planted.foreach(k => assert(fan(k),
         s"$k must land the de-squeeze fan, got $fan"))
@@ -243,7 +242,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // the identity tiers are chirality-FIXED by design: zero rows
       // on an all-mirrored probe batch (code gate AND verified)
-      val idPairs = Multimodal.videoAffineFramePairs(media, maxDf = 64)
+      val idPairs = Multimodal.pairs(VideoAffineFrame())(media, maxDf = 64)
         .collect().toSeq
       assert(idPairs.isEmpty,
         s"m177 must be blind to mirrored re-rips, got $idPairs")
@@ -260,7 +259,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"gray-zone compounds must stay UNDER the chiral code gate, got $code")
       // the chirality-matched verify lands all four, nothing else
       val ver = Multimodal.videoAffineFramePairsChiralVerified(media,
-          maxDf = 64)
+        maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .toSet
       val want = Set((0L, 20L, 1), (2L, 21L, 1), (3L, 22L, 1),
@@ -297,13 +296,13 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
       .cache()
     try {
       // the base tier drops all three extreme compounds
-      val base = Multimodal.videoAffineFramePairs(media, maxDf = 64)
+      val base = Multimodal.pairs(VideoAffineFrame())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       for (k <- Seq((0L, 20L), (1L, 21L), (3L, 23L)))
         assert(!base(k), s"$k must be UNDER the base m177 gate, got $base")
       // the fan lands them; no cross-source pair
-      val fan = Multimodal.videoAffineFramePairsSqueezeFan(media,
-          maxDf = 64)
+      val fan = Multimodal.pairs(VideoAffineFrameSqueezeFan())(media,
+        maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       for (k <- Seq((0L, 20L), (1L, 21L), (3L, 23L)))
         assert(fan(k), s"$k must land the video de-squeeze fan, got $fan")

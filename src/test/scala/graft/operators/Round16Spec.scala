@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{ImageAffineFrame, ImagePeak,
+  VideoAffineFrame}
 
 /** Round-16: scoped release for Materialize.eager checkpoints (the
   * mechanism behind two rounds of bench drift), and the one-decode
@@ -135,8 +137,8 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
         else Multimodal.syntheticPng(999L)
       (id, payload)
     }.toDF("doc_id", "payload")
-    val generous = Multimodal.imagePeakPairs(media, minMatch = 0.6,
-        maxDf = Multimodal.AutoDf)
+    val generous = Multimodal.pairs(ImagePeak())(media, minMatch = 0.6,
+      maxDf = Multimodal.AutoDf)
     val wasBudget = s.conf.getOption(Multimodal.PairBudgetConf)
     try {
       assert(generous.count() == 46)
@@ -146,7 +148,7 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
       // 512 B budget can't hold even ONE X code's cohort, so the
       // solver lands at (or floors to) cap 2: X dropped, Y kept
       s.conf.set(Multimodal.PairBudgetConf, "512")
-      val tight = Multimodal.imagePeakPairs(media, minMatch = 0.6,
+      val tight = Multimodal.pairs(ImagePeak())(media, minMatch = 0.6,
         maxDf = Multimodal.AutoDf).orderBy("doc_a", "doc_b").collect()
       assert(tight.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
         Seq((10L, 11L)))
@@ -169,7 +171,7 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.orderBy("doc_a", "doc_b").collect().toSeq
     val (code, verified) = Multimodal.imageAffineFrameTiers(media, maxDf = 500)
     assert(sorted(code) ==
-      sorted(Multimodal.imageAffineFramePairs(media, maxDf = 500)))
+      sorted(Multimodal.pairs(ImageAffineFrame())(media, maxDf = 500)))
     assert(sorted(verified) ==
       sorted(Multimodal.imageAffineFramePairsVerified(media, maxDf = 500)))
     // and the tier pair actually found the planted dups (non-vacuous)
@@ -190,7 +192,7 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_a", "doc_b").collect().toSeq
     val (code, verified) = Multimodal.videoAffineFrameTiers(media)
-    assert(sorted(code) == sorted(Multimodal.videoAffineFramePairs(media)))
+    assert(sorted(code) == sorted(Multimodal.pairs(VideoAffineFrame())(media)))
     assert(sorted(verified) ==
       sorted(Multimodal.videoAffineFramePairsVerified(media)))
   }

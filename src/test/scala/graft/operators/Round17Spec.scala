@@ -49,7 +49,7 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
     // planted crop x rotation x squeeze re-upload of doc_id-9
     val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
     val anchored = Materialize.eager(
-      Multimodal.imageAffineFrameLandmarksAnchored(media))
+      Multimodal.ImageAffineFrameAnchored().landmarks(media))
     val lms = anchored.select(col("doc_id"), col("lm"))
     // 3/4 of the uncapped explode binds (this toy class's df mass sits
     // almost entirely at df 2, so the solved cap may be the floor —
@@ -86,7 +86,7 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
     val anchored = Materialize.eager(
-      Multimodal.imageAffineFrameLandmarksAnchored(media))
+      Multimodal.ImageAffineFrameAnchored().landmarks(media))
     // the chiral tier caps over distinct (doc, lm) of its identity +
     // mirror fan, so the explicit cap is solved on that basis
     val mir = udf((lm: Long) => Multimodal.mirrorAffineFrameCode(lm))
@@ -104,15 +104,15 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
       s"the solved cap $capW16 must drop codes (max df $maxObserved)")
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_a", "doc_b", "orient").collect().toSeq
-    val explicit = sorted(Multimodal.imageAffineFramePairsChiralVerified(
-      media, maxDf = capW16))
+    val explicit = sorted(Multimodal.imageAffineFramePairsChiralVerified(media,
+      maxDf = capW16))
     val wasBudget = s.conf.getOption(Multimodal.PairBudgetConf)
     try {
       s.conf.set(Multimodal.PairBudgetConf, budget.toString)
       val dropped = Multimodal.hotCodesDropped(s)
       val before = dropped.value
-      val auto = sorted(Multimodal.imageAffineFramePairsChiralVerified(
-        media, maxDf = Multimodal.AutoDf))
+      val auto = sorted(Multimodal.imageAffineFramePairsChiralVerified(media,
+        maxDf = Multimodal.AutoDf))
       assert(auto == explicit,
         "AutoDf must reproduce the explicit fan-solved cap's result")
       assert(dropped.value > before,

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-18: the verified affine tiers' survivor-aware gather must be
   * row-identical to the unconditional re-explode it replaces — the
   * threshold only picks the plan, never the rows. Both paths are
-  * forced via the private[graft] `survivorGatherMaxPairs` hook
+  * forced through the private[graft] gather bound of
+  * `verifiedPairsFrom` / `affineFramePairsChiralVerifiedFrom`
   * (MaxValue = always pre-filter to survivor docs; 0 = always the
   * round-17 full re-explode). */
 class Round18MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -28,18 +29,17 @@ class Round18MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("verified tier: survivor-filtered gather == unconditional re-explode") {
     implicit val s: SparkSession = spark
     val media = graft.tools.ScaleCheck.cropAffinePngs(spark, 60)
-    def run(): Seq[Seq[Any]] = Materialize.scoped {
-      rows(Multimodal.imageAffineFramePairsVerified(media, maxDf = 500))
+    // imageAffineFramePairsVerified(media, maxDf = 500) at a forced
+    // gather bound
+    def run(gather: Long): Seq[Seq[Any]] = Materialize.scoped {
+      rows(Multimodal.verifiedPairsFrom(Materialize.eager(
+        Multimodal.ImageAffineFrameAnchored().landmarks(media)),
+        0.004, 4, 0.5, 9, 3.0, 500, gather))
     }
-    val prev = Multimodal.survivorGatherMaxPairs
-    try {
-      Multimodal.survivorGatherMaxPairs = Long.MaxValue
-      val filtered = run()
-      Multimodal.survivorGatherMaxPairs = 0L
-      val full = run()
-      assert(filtered.nonEmpty, "fixture produced no verified pairs")
-      assert(filtered == full)
-    } finally Multimodal.survivorGatherMaxPairs = prev
+    val filtered = run(Long.MaxValue)
+    val full = run(0L)
+    assert(filtered.nonEmpty, "fixture produced no verified pairs")
+    assert(filtered == full)
   }
 
   test("chiral verified tier: survivor-filtered gather == unconditional re-explode") {
@@ -57,16 +57,15 @@ class Round18MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     val media = spark.range(0, 8).union(spark.range(20, 22))
       .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-    def run(): Seq[Seq[Any]] = Materialize.scoped {
-      rows(Multimodal.imageAffineFramePairsChiralVerified(media, maxDf = 64))
+    // imageAffineFramePairsChiralVerified(media, maxDf = 64) at a
+    // forced gather bound
+    def run(gather: Long): Seq[Seq[Any]] = Materialize.scoped {
+      rows(Multimodal.affineFramePairsChiralVerifiedFrom(Materialize.eager(
+        Multimodal.ImageAffineFrameAnchored().landmarks(media)),
+        0.004, 4, 0.5, 9, 3.0, 64, gather))
     }
-    val prev = Multimodal.survivorGatherMaxPairs
-    try {
-      Multimodal.survivorGatherMaxPairs = Long.MaxValue
-      val filtered = run()
-      Multimodal.survivorGatherMaxPairs = 0L
-      val full = run()
-      assert(filtered == full)
-    } finally Multimodal.survivorGatherMaxPairs = prev
+    val filtered = run(Long.MaxValue)
+    val full = run(0L)
+    assert(filtered == full)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioCode, PHash}
 
 /** Round-7 additions: cluster-safe materialization, BPE encode,
   * tokenization contract. */
@@ -196,7 +197,7 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
       else Multimodal.syntheticPngVariant(id - 20))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    val pairs = Multimodal.pHashPairs(media, maxDist = 3)
+    val pairs = Multimodal.pairs(PHash)(media, maxDist = 3)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val planted = (0L until 20L).map(i => (i, i + 20)).toSet
     assert(pairs.subsetOf(planted), s"false positives: ${pairs -- planted}")
@@ -214,7 +215,7 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
         (160 + ((id - 20) % 13) * 16).toInt, num = 9, den = 10))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val pairs = Multimodal.audioFingerprintPairs(media)
+    val pairs = Multimodal.pairs(AudioCode)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val planted = (0L until 20L).map(i => (i, i + 20)).toSet
     assert(pairs.intersect(planted).size >= 15,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioCode, AudioLandmark, PHash, VideoFrames,
+  VideoShift}
 
 /** Round-8 additions: decode-once materialization contract for the
   * image/audio near-dup operators, the m79 frequent-code skew cap. */
@@ -18,12 +20,13 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  /** Run `body` with the Multimodal decode probe armed; returns the
-    * number of payloads that entered a real decode path. */
+  /** Run `body` and return the number of payloads that entered a real
+    * decode path meanwhile (this application's decode counter). */
   private def countingDecodes(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong()
-    Multimodal.decodeProbe = Some(acc)
-    try { body; acc.get() } finally { Multimodal.decodeProbe = None }
+    val acc = Multimodal.decodesProbed(spark)
+    val before = acc.value
+    body
+    acc.value - before
   }
 
   // ---- decode-once contract (r7 verdict #1: the persist lifecycle
@@ -38,7 +41,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     var pairs: Set[(Long, Long)] = Set.empty
     val decodes = countingDecodes {
-      pairs = Multimodal.pHashPairs(media, maxDist = 3)
+      pairs = Multimodal.pairs(PHash)(media, maxDist = 3)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     }
     assert(decodes == 40L,
@@ -58,7 +61,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     var pairs: Set[(Long, Long)] = Set.empty
     val decodes = countingDecodes {
-      pairs = Multimodal.audioFingerprintPairs(media)
+      pairs = Multimodal.pairs(AudioCode)(media)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     }
     assert(decodes == 40L,
@@ -98,9 +101,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       s"cap should collapse the blowup: capped=$capped uncapped=$uncapped")
 
     val planted = (0L until 10L).map(i => (i, i + 10)).toSet
-    val cappedPairs = Multimodal.audioFingerprintPairs(media, maxDf = 20)
+    val cappedPairs = Multimodal.pairs(AudioCode)(media, maxDf = 20)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val uncappedPairs = Multimodal.audioFingerprintPairs(media)
+    val uncappedPairs = Multimodal.pairs(AudioCode)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     // silent-shared codes sit below minMatch either way, so the cap
     // changes candidate volume, not the reported pair set
@@ -125,11 +128,11 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 20)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val planted = (0L until 10L).map(i => (i, i + 10)).toSet
-    val aligned = Multimodal.audioFingerprintPairs(media)
+    val aligned = Multimodal.pairs(AudioCode)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(aligned.intersect(planted).isEmpty,
       s"positional alignment should NOT see the shifted copies: $aligned")
-    val landmark = Multimodal.audioLandmarkPairs(media)
+    val landmark = Multimodal.pairs(AudioLandmark())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(landmark.intersect(planted).size == 10,
       s"landmarks must find every trimmed copy: $landmark")
@@ -150,9 +153,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 70)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val planted = (0L until 10L).map(i => (i, i + 10)).toSet
-    val capped = Multimodal.audioLandmarkPairs(media, maxDf = 20)
+    val capped = Multimodal.pairs(AudioLandmark())(media, maxDf = 20)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val uncapped = Multimodal.audioLandmarkPairs(media)
+    val uncapped = Multimodal.pairs(AudioLandmark())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(capped == uncapped, s"capped=$capped uncapped=$uncapped")
     assert(capped.intersect(planted).size == 10, s"planted trims lost: $capped")
@@ -170,7 +173,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     var pairs: Set[(Long, Long)] = Set.empty
     val decodes = countingDecodes {
-      pairs = Multimodal.audioLandmarkPairs(media)
+      pairs = Multimodal.pairs(AudioLandmark())(media)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     }
     assert(decodes == 20L,
@@ -305,7 +308,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val expected = (0 until 10).map(id => (4 + id % 3 + 1) / 2).sum * 2L
     var pairs: Set[(Long, Long)] = Set.empty
     val decodes = countingDecodes {
-      pairs = Multimodal.videoNearDupPairs(media)
+      pairs = Multimodal.pairs(VideoFrames())(media)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     }
     assert(decodes == expected,
@@ -326,11 +329,11 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 20)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 10L).map(i => (i, i + 10)).toSet
-    val aligned = Multimodal.videoNearDupPairs(media)
+    val aligned = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(aligned.intersect(planted).isEmpty,
       s"aligned frame_idx matching should NOT see the shifted copies: $aligned")
-    val landmark = Multimodal.videoLandmarkPairs(media)
+    val landmark = Multimodal.pairs(VideoShift())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(landmark == planted, s"landmarks must find every trim: $landmark")
   }
@@ -349,9 +352,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 36)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 6L).map(i => (i, i + 6)).toSet
-    val capped = Multimodal.videoLandmarkPairs(media, maxDf = 8)
+    val capped = Multimodal.pairs(VideoShift())(media, maxDf = 8)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val uncapped = Multimodal.videoLandmarkPairs(media)
+    val uncapped = Multimodal.pairs(VideoShift())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(uncapped == planted, s"uncapped: $uncapped")
     assert(capped == planted, s"capped: $capped")
@@ -372,9 +375,9 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 42)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 6L).map(i => (i, i + 6)).toSet
-    val capped = Multimodal.videoNearDupPairs(media, maxDf = 8)
+    val capped = Multimodal.pairs(VideoFrames())(media, maxDf = 8)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val uncapped = Multimodal.videoNearDupPairs(media)
+    val uncapped = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(uncapped == planted, s"uncapped: $uncapped")
     assert(capped == planted, s"capped: $capped")
@@ -391,8 +394,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     val video = spark.range(0, 8)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     Seq(
-      "audioLandmarkPairs" -> Multimodal.audioLandmarkPairs(audio),
-      "videoNearDupPairs" -> Multimodal.videoNearDupPairs(video)
+      "audioLandmarkPairs" -> Multimodal.pairs(AudioLandmark())(audio),
+      "videoNearDupPairs" -> Multimodal.pairs(VideoFrames())(video)
     ).foreach { case (name, df) =>
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"),
@@ -413,13 +416,13 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), corpusPng(col("id")).as("payload"))
     val probes = spark.range(1000000L, 1000020L)
       .select(col("id").as("doc_id"), probePng(col("id")).as("payload"))
-    val viaIndex = Multimodal.dedupAgainstPHashIndex(
-        probes, Multimodal.pHashChunkIndex(corpus))
+    val viaIndex = Multimodal.screen(PHash)(probes,
+      Multimodal.pHashChunkIndex(corpus))
       .filter(!col("kept"))
       .select($"dup_src", $"doc_id").as[(Long, Long)].collect().toSet
     // the batch operator on the union, restricted to cross pairs with
     // the same keep-lowest resolution
-    val crossPairs = Multimodal.pHashPairs(corpus.unionAll(probes))
+    val crossPairs = Multimodal.pairs(PHash)(corpus.unionAll(probes))
       .filter($"doc_a" < 1000000L && $"doc_b" >= 1000000L)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
     val viaPairs = crossPairs.groupBy(_._2)
@@ -438,11 +441,11 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val probes = spark.range(1000000L, 1000020L)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val viaIndex = Multimodal.dedupAgainstAudioIndex(
-        probes, Multimodal.audioCodeIndex(corpus))
+    val viaIndex = Multimodal.screen(AudioCode)(probes,
+      Multimodal.index(AudioCode)(corpus))
       .filter(!col("kept"))
       .select($"dup_src", $"doc_id").as[(Long, Long)].collect().toSet
-    val crossPairs = Multimodal.audioFingerprintPairs(corpus.unionAll(probes))
+    val crossPairs = Multimodal.pairs(AudioCode)(corpus.unionAll(probes))
       .filter($"doc_a" < 1000000L && $"doc_b" >= 1000000L)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
     val viaPairs = crossPairs.groupBy(_._2)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Multimodal.{AudioLandmark, PHash, PHashFlip, PHashRot,
+  VideoFrames, VideoFramesFlip, VideoShift}
 
 /** Round-9 additions: the three skew/state guards named by the round-8
   * verdict — streaming bucket state truncation at maxBucket (st73-75),
@@ -146,9 +148,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       else blankPng(128))
     val media = spark.range(0, 50)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    val uncapped = Multimodal.pHashPairs(media, maxDist = 3)
+    val uncapped = Multimodal.pairs(PHash)(media, maxDist = 3)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val capped = Multimodal.pHashPairs(media, maxDist = 3, maxDf = 20)
+    val capped = Multimodal.pairs(PHash)(media, maxDist = 3, maxDf = 20)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val blankPairs = (for {
       a <- 20L until 50L; b <- (a + 1) until 50L
@@ -178,7 +180,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val probes = spark.range(1000000L, 1000015L)
       .select(col("id").as("doc_id"), probePng(col("id")).as("payload"))
     def verdicts(maxDf: Int): Map[Long, Option[Long]] =
-      Multimodal.dedupAgainstPHashIndex(probes, index, maxDist = 3, maxDf = maxDf)
+      Multimodal.screen(PHash)(probes, index, maxDist = 3, maxDf = maxDf)
         .select($"doc_id", $"dup_src").as[(Long, Option[Long])]
         .collect().toMap
     val uncapped = verdicts(0)
@@ -209,9 +211,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 8).union(spark.range(20, 28))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 8L).map(i => (i, i + 20)).toSet
-    val aligned = Multimodal.videoNearDupPairs(media)
+    val aligned = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val exact = Multimodal.videoLandmarkPairs(media)
+    val exact = Multimodal.pairs(VideoShift())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val tolerant = Multimodal.videoLandmarkPairsTolerant(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
@@ -294,13 +296,12 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         audioId = id % 4, audioSamples = (320 + (id % 4) * 64).toInt))
     val media = spark.range(0, 8)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-    val pairs = Multimodal.audioLandmarkPairs(
-        Multimodal.videoAudioTracks(media))
+    val pairs = Multimodal.pairs(AudioLandmark())(Multimodal.videoAudioTracks(media))
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val planted = (0L until 4L).map(i => (i, i + 4)).toSet
     assert(pairs == planted, s"expected $planted, got $pairs")
     // the video tier sees nothing: frame streams are unrelated
-    val videoPairs = Multimodal.videoNearDupPairs(media)
+    val videoPairs = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(videoPairs.isEmpty, s"video tier should see nothing: $videoPairs")
   }
@@ -316,7 +317,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         mjpeg = true, intro = 2))
     val vmedia = spark.range(0, 8).union(spark.range(20, 28))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-    val vplan = Multimodal.videoNearDupPairs(vmedia, maxDf = 8)
+    val vplan = Multimodal.pairs(VideoFrames())(vmedia, maxDf = 8)
       .queryExecution.optimizedPlan.toString
     assert(vplan.contains("LeftSemi"), "m82 cap must be a left_semi")
     assert(vplan.indexOf("collect_list") < vplan.indexOf("LeftSemi"),
@@ -325,7 +326,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val png = udf((id: Long) => Multimodal.syntheticPng(id))
     val imedia = spark.range(0, 10)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    val iplan = Multimodal.pHashPairs(imedia, maxDist = 3, maxDf = 8)
+    val iplan = Multimodal.pairs(PHash)(imedia, maxDist = 3, maxDf = 8)
       .queryExecution.optimizedPlan.toString
     assert(iplan.contains("LeftSemi"), "m78 cap must be a left_semi")
     assert(iplan.indexOf("collect_list") < iplan.indexOf("LeftSemi"),
@@ -446,7 +447,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       else Multimodal.syntheticMp4(id - 20, (6 + (id - 20) % 3).toInt))
     val media = spark.range(0, 4).union(spark.range(20, 24))
       .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
-    val pairs = Multimodal.videoNearDupPairs(media)
+    val pairs = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b", $"match_frac").as[(Long, Long, Double)]
       .collect().toSet
     val planted = (0L until 4L).map(i => (i, i + 20, 1.0)).toSet
@@ -629,13 +630,13 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val probes = spark.range(1000000L, 1000010L)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
-    val viaIndex = Multimodal.dedupAgainstVideoIndex(
-        probes, Multimodal.videoChunkIndex(corpus))
+    val viaIndex = Multimodal.dedupAgainstVideoIndex(probes,
+      Multimodal.videoChunkIndex(corpus))
       .filter(!col("kept"))
       .select($"dup_src", $"doc_id").as[(Long, Long)].collect().toSet
     // the batch operator on the union, restricted to cross pairs with
     // the same keep-lowest resolution
-    val crossPairs = Multimodal.videoNearDupPairs(corpus.unionAll(probes))
+    val crossPairs = Multimodal.pairs(VideoFrames())(corpus.unionAll(probes))
       .filter($"doc_a" < 1000000L && $"doc_b" >= 1000000L)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
     val viaPairs = crossPairs.groupBy(_._2)
@@ -679,13 +680,13 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       else Multimodal.syntheticPngVariant(id - 20))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    val tolerant = Multimodal.pHashPairsFlipTolerant(media)
+    val tolerant = Multimodal.pairs(PHashFlip)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     // every mirrored repost lands on its source...
     for (i <- 0L until 4L)
       assert(tolerant.contains((i, i + 20)), s"flip pair ($i, ${i + 20}) missed")
     // ...and plain near-dup pairs still surface (strict superset)
-    val plain = Multimodal.pHashPairs(media)
+    val plain = Multimodal.pairs(PHash)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(plain.subsetOf(tolerant),
       s"tolerant must superset plain: missing ${plain -- tolerant}")
@@ -703,12 +704,12 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = spark.range(0, 4).union(spark.range(20, 24))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     // the plain aligned tier is blind to the mirror...
-    val plain = Multimodal.videoNearDupPairs(media)
+    val plain = Multimodal.pairs(VideoFrames())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(!plain.exists(p => p._2 == p._1 + 20),
       s"plain tier should miss mirrored pairs, got $plain")
     // ...the flip-tolerant tier catches every planted pair
-    val tol = Multimodal.videoNearDupPairsFlipTolerant(media)
+    val tol = Multimodal.pairs(VideoFramesFlip())(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     for (i <- 0L until 4L)
       assert(tol.contains((i, i + 20)), s"mirrored pair ($i, ${i + 20}) missed: $tol")
@@ -722,9 +723,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     val copy = spark.range(1, 2).select(col("id").as("doc_id"),
       udf(() => Multimodal.syntheticAvi(5L, 6, frameOffset = 2,
         mirrorX = true)).apply().as("payload"))
-    val lmBase = Multimodal.videoLandmarks(base).collect()
+    val lmBase = Multimodal.videoLandmarks(base, every = 2).collect()
       .map(l => (l.lm_a, l.lm_b)).toSet
-    val lmCopyPlain = Multimodal.videoLandmarks(copy).collect()
+    val lmCopyPlain = Multimodal.videoLandmarks(copy, every = 2).collect()
       .map(l => (l.lm_a, l.lm_b)).toSet
     assert(lmBase.intersect(lmCopyPlain).isEmpty,
       "the plain landmark tier must be blind to the mirrored copy")
@@ -751,12 +752,12 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       else Multimodal.syntheticPngRot(id - 20, (id % 3 + 1).toInt))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    val tol = Multimodal.pHashPairsRotTolerant(media)
+    val tol = Multimodal.pairs(PHashRot)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     for (i <- 0L until 6L)
       assert(tol.contains((i, i + 20)), s"rotated pair ($i, ${i + 20}) missed")
     // superset of the plain pairs at the same threshold
-    val plain = Multimodal.pHashPairs(media)
+    val plain = Multimodal.pairs(PHash)(media)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(plain.subsetOf(tol))
   }
