@@ -275,7 +275,7 @@ object StreamingNearDup {
     * An arrival emits the earlier members as `hits`; the consumer
     * aggregates hits across frames into the aligned match fraction
     * (shared frames / smaller fingerprint), exactly the batch
-    * [[Multimodal.audioFingerprintPairs]] metric — so batch == streaming
+    * `Multimodal.pairs(AudioCode)` metric — so batch == streaming
     * is provable against one SQL replay. Same determinism contract as
     * [[bandVerdicts]]: id-ordered fold within a batch, id-monotonic
     * delivery across batches == the batch replay.
@@ -346,7 +346,7 @@ object StreamingNearDup {
     * landmarks are distinct per doc at the source), arrivals emit
     * earlier sharers, and the consumer scores shared distinct
     * landmarks over the smaller landmark set (the batch
-    * [[Multimodal.audioLandmarkPairs]] metric, minMatch 0.6 there).
+    * `Multimodal.pairs(AudioLandmark())` metric, minMatch 0.6 there).
     * `maxBucket` caps the universal-landmark hot key — silence codes
     * to 0 and the (0,0) landmark's bucket otherwise holds the whole
     * corpus. Same id-monotonic determinism contract as the rest of the

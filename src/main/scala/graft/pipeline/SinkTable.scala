@@ -81,7 +81,7 @@ final case class SinkTable(
   def readRaw(spark: SparkSession): DataFrame = spark.read.parquet(path)
 
   /** Dedup-on-read view: latest `_ingest_seq` wins per order key. */
-  def read(spark: SparkSession): DataFrame = readPruned(spark, None)
+  def read(spark: SparkSession): DataFrame = dedupOnRead(readRaw(spark), None)
 
   /** Dedup-on-read restricted to the given `_part` (yyyyMM) partitions —
     * the filter lands BEFORE the dedup window, so it is a real partition-
@@ -90,8 +90,8 @@ final case class SinkTable(
     * partition-local, which matches ReplacingMergeTree: ClickHouse merges
     * (and therefore replaces) only within a partition too. No-op when the
     * sink was written without a partition column. */
-  def readPruned(spark: SparkSession, parts: Option[Seq[String]]): DataFrame =
-    dedupOnRead(readRaw(spark), parts)
+  def read(spark: SparkSession, parts: Seq[String]): DataFrame =
+    dedupOnRead(readRaw(spark), Some(parts))
 
   /** Dedup-on-read over an ALREADY-RESOLVED raw frame. `spark.read
     * .parquet` re-lists the directory and re-reads footers on every
@@ -118,15 +118,6 @@ final case class SinkTable(
     val e = java.time.LocalDate.ofEpochDay(endDay)
     Iterator.iterate(s)(_.plusMonths(1)).takeWhile(!_.isAfter(e))
       .map(d => f"${d.getYear}%04d${d.getMonthValue}%02d").toSeq
-  }
-
-  /** Resume probe: max(keyCol) over the sink, None when absent/empty —
-    * the `start.sql` contract (examples/ethereum_blocks/start.sql:1-3). */
-  def maxKey(spark: SparkSession, keyCol: String): Option[Long] = {
-    if (!exists(spark)) return None
-    val row = readRaw(spark).agg(max(col(keyCol))).head()
-    if (row.isNullAt(0)) None
-    else Some(row.get(0).asInstanceOf[Number].longValue)
   }
 
   /** Optional compaction: physically drop superseded versions, keeping

@@ -66,17 +66,29 @@ object SqlPipeline {
       .orElse(fromVars("SINK_PATH"))
       .getOrElse(throw new IllegalArgumentException(
         "sink path missing: add a Sink.Path yaml entry or a SINK_PATH var"))
-    val keys = sink.get("Keys").map(Templates.render(_, vars))
-      .orElse(fromVars("SINK_KEYS"))
-      .map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(Seq("number"))
     val version = sink.get("VersionColumn").map(Templates.render(_, vars))
       .orElse(fromVars("SINK_VERSION"))
     val mode = sink.get("Mode").map(_.trim.toLowerCase.replace("-", "_"))
       .map { case "dailyparquet" => "daily_parquet"; case m => m }
       .getOrElse("replacing")
+    val rawKeys = sink.get("Keys").map(Templates.render(_, vars)).orElse(fromVars("SINK_KEYS"))
+    val keys =
+      if (mode == "daily_parquet" && rawKeys.isEmpty) Nil
+      else orderKeys("Sink", rawKeys)
     val partCol = sink.get("PartitionColumn").getOrElse("date")
     SinkSpec(path, keys, version, mode, partCol)
+  }
+
+  /** A replacing table's dedup keys (`Keys: a, b`), checked when the
+    * definition is built: absent, or rendered empty from a missing
+    * template var, the table's reads would dedup on a column it may not
+    * have, or collapse rows that share a value of the wrong one. */
+  private def orderKeys(section: String, raw: Option[String]): Seq[String] = {
+    val keys = raw.toSeq.flatMap(_.split(",").map(_.trim))
+    if (keys.isEmpty || keys.exists(_.isEmpty))
+      throw new IllegalArgumentException(
+        s"$section.Keys is ${raw.fold("missing")(k => s"'$k'")}: list the $section's order keys")
+    keys
   }
 
   /** Optional `Source:` yaml section — an upstream sink exposed to every
@@ -85,9 +97,7 @@ object SqlPipeline {
   def sourceSpec(yamlText: String, vars: Map[String, String]): Option[SinkSpec] = {
     val src = yamlSection(yamlText, "Source")
     src.get("Path").map(Templates.render(_, vars)).map { path =>
-      SinkSpec(path,
-        src.get("Keys").map(Templates.render(_, vars))
-          .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq("number")),
+      SinkSpec(path, orderKeys("Source", src.get("Keys").map(Templates.render(_, vars))),
         src.get("VersionColumn").map(Templates.render(_, vars)))
     }
   }
@@ -202,33 +212,64 @@ object SqlPipeline {
     }
   }
 
+  /** `examples/` of the working directory, else the nearest one above
+    * this build's classes (or jar), so the bundled configs resolve
+    * wherever the code runs from. */
+  private[pipeline] lazy val examplesRoot: java.io.File = {
+    val local = new java.io.File("examples")
+    if (local.isDirectory) local
+    else Iterator.iterate(new java.io.File(
+        getClass.getProtectionDomain.getCodeSource.getLocation.toURI))(_.getParentFile)
+      .takeWhile(_ != null).map(new java.io.File(_, "examples"))
+      .find(_.isDirectory).getOrElse(local)
+  }
+
+  /** The bundled example pipeline directory `examples/<name>`. */
+  def exampleDir(name: String): String = new java.io.File(examplesRoot, name).getPath
+
   /** Build a PipelineRunner.Definition from a pipeline directory (or
     * direct yaml path — see loadPipeline). */
   def definition(dir: String, vars: Map[String, String],
-      templatePath: Option[String] = None): PipelineRunner.Definition = {
-    val (yamlText, templates) = loadPipeline(dir, templatePath)
-    val config = PipelineConfig.parse(yamlText)
-    val spec = sinkSpec(yamlText, vars)
-    val sinkTab = spec.table
-    val sourceTab = sourceSpec(yamlText, vars).map(_.table)
+      templatePath: Option[String] = None): PipelineRunner.Definition =
+    new ConfigDefinition(dir, vars, templatePath)
 
-    def rendered(name: String, batchVars: Map[String, String] = Map.empty): String =
+  /** One batch of the pipeline's transform stage with nothing staged:
+    * the batch's buffer rows, for a caller that wants them without a
+    * sink. Registers the stage's views (`source`, the buffer's) in
+    * `spark`, which must have the graft functions registered. */
+  def buffer(spark: SparkSession, dir: String, vars: Map[String, String],
+      batch: PipelineRunner.Batch): DataFrame =
+    new ConfigDefinition(dir, vars, None).buffer(spark, batch)
+
+  /** A pipeline directory as a stage-then-publish Definition: `transform`
+    * builds the batch's buffer and stages its sink writes, the ordered
+    * `commit` only publishes what `transform` staged for that batch, and
+    * `resume` first drops whatever a crashed run staged and never
+    * published. */
+  private final class ConfigDefinition(dir: String, vars: Map[String, String],
+      templatePath: Option[String]) extends PipelineRunner.Definition {
+    private val (yamlText, templates) = loadPipeline(dir, templatePath)
+    private val spec = sinkSpec(yamlText, vars)
+    private val sink = spec.table
+    private val sourceTab = sourceSpec(yamlText, vars).map(_.table)
+
+    private def rendered(name: String, batchVars: Map[String, String] = Map.empty): String =
       Templates.render(
         templates.getOrElse(name, throw new IllegalArgumentException(
           s"pipeline dir $dir is missing $name")),
         vars ++ batchVars)
 
-    val stages = config.steps.collect { case s: PipelineConfig.Stage => s }
-    val transformStage = stages.headOption
-    val transformFiles = transformStage.map(_.files).getOrElse(Nil)
-    val commitStages = stages.drop(1)
+    private val stages = PipelineConfig.parse(yamlText).steps
+      .collect { case s: PipelineConfig.Stage => s }
+    private val transformFiles = stages.headOption.map(_.files).getOrElse(Nil)
+    private val commitStages = stages.drop(1)
 
-    def batchVars(b: PipelineRunner.Batch) = Map(
+    private def batchVars(b: PipelineRunner.Batch) = Map(
       "START" -> b.start.toString,
       "END" -> b.end.toString,
       "NUMBER" -> b.number.toString)
 
-    def commitStatements(b: PipelineRunner.Batch): Seq[String] =
+    private def commitStatements(b: PipelineRunner.Batch): Seq[String] =
       commitStages.flatMap(_.files).map(f => stripLeading(rendered(f, batchVars(b))))
 
     // Stage settings — the reference's ClickhouseSettings (stage.go:88-90)
@@ -238,7 +279,9 @@ object SqlPipeline {
     // a per-batch set/restore would strip them from a concurrent peer.
     // A key two stages set takes the later stage's value. A direct
     // transform or commit call outside the runner runs without them.
-    val stageConf = stages.map(_.sparkConf).foldLeft(Map.empty[String, String])(_ ++ _)
+    private val stageConf = stages.map(_.sparkConf).foldLeft(Map.empty[String, String])(_ ++ _)
+
+    override def transformConf: Map[String, String] = stageConf
 
     // Every commit-stage `insert into sink` is planned and staged in the
     // transform, before the stage's other statements run at publish; one
@@ -253,136 +296,143 @@ object SqlPipeline {
       }
     }
 
-    new StagedDefinition(spec.path) {
-      val sink: SinkTable = sinkTab
+    /** ONE resolved file index per tip-probe (round 18, guide §6):
+      * `spark.read.parquet` re-lists the source directory and re-reads
+      * footers on every call, and this ran on every tip probe, resume,
+      * AND per-batch transform — 30-80 ms each, a listing per batch at
+      * scale (a per-definition timing split measured it dominating the
+      * config pipelines' per-batch machinery).
+      * The raw resolution is pinned here and refreshed only by `tip()`
+      * — the freshness boundary: a follow-mode poll must see newly
+      * landed source files, while transforms within a pass process the
+      * snapshot their tip was probed against. Keyed by session: a
+      * Definition can be driven from more than one session in tests. */
+    private val pinnedRaw =
+      new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
 
-      override def transformConf: Map[String, String] = stageConf
-
-      /** ONE resolved file index per tip-probe (round 18, guide §6):
-        * `spark.read.parquet` re-lists the source directory and re-reads
-        * footers on every call, and this ran on every tip probe, resume,
-        * AND per-batch transform — 30-80 ms each, a listing per batch at
-        * scale (a per-definition timing split measured it dominating the
-        * config pipelines' per-batch machinery).
-        * The raw resolution is pinned here and refreshed only by `tip()`
-        * — the freshness boundary: a follow-mode poll must see newly
-        * landed source files, while transforms within a pass process the
-        * snapshot their tip was probed against. Keyed by session: a
-        * Definition can be driven from more than one session in tests. */
-      private val pinnedRaw =
-        new java.util.concurrent.ConcurrentHashMap[SparkSession, DataFrame]()
-
-      /** For export mode, prune the source view to the `_part` (yyyyMM)
-        * partitions covering the batch's epoch-day range — every 1-day
-        * batch would otherwise scan the ENTIRE upstream sink. Pruning
-        * derives from the pinned raw frame (`dedupOnRead`), so per-batch
-        * views cost no extra listing. */
-      private def registerSource(spark: SparkSession,
-          batch: Option[PipelineRunner.Batch] = None,
-          refresh: Boolean = false): Unit =
-        sourceTab.foreach { s =>
-          val raw =
-            if (refresh) {
-              val r = s.readRaw(spark); pinnedRaw.put(spark, r); r
-            } else pinnedRaw.computeIfAbsent(spark, sp => s.readRaw(sp))
-          val parts = batch.filter(_ => spec.isExport)
-            .map(b => s.monthsOfDayRange(b.start, b.end))
-          s.dedupOnRead(raw, parts).createOrReplaceTempView("source")
-        }
-
-      /** Export target as a probe-able `target` view (the reference's
-        * s3-listing start.sql); empty stub when nothing is exported yet. */
-      private def registerTarget(spark: SparkSession): Unit = {
-        val fs = new org.apache.hadoop.fs.Path(spec.path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val df =
-          if (fs.exists(new org.apache.hadoop.fs.Path(spec.path)))
-            spark.read.parquet(spec.path)
-          else spark.range(0).selectExpr(s"cast(null as date) as ${spec.partitionCol}")
-        df.createOrReplaceTempView("target")
+    /** For export mode, prune the source view to the `_part` (yyyyMM)
+      * partitions covering the batch's epoch-day range — every 1-day
+      * batch would otherwise scan the ENTIRE upstream sink. Pruning
+      * derives from the pinned raw frame (`dedupOnRead`), so per-batch
+      * views cost no extra listing. */
+    private def registerSource(spark: SparkSession,
+        batch: Option[PipelineRunner.Batch] = None,
+        refresh: Boolean = false): Unit =
+      sourceTab.foreach { s =>
+        val raw =
+          if (refresh) {
+            val r = s.readRaw(spark); pinnedRaw.put(spark, r); r
+          } else pinnedRaw.computeIfAbsent(spark, sp => s.readRaw(sp))
+        val parts = batch.filter(_ => spec.isExport)
+          .map(b => s.monthsOfDayRange(b.start, b.end))
+        s.dedupOnRead(raw, parts).createOrReplaceTempView("source")
       }
 
-      protected def next(spark: SparkSession): Option[Long] = {
-        if (spec.isExport) {
-          registerSource(spark)
-          registerTarget(spark)
-        } else {
-          if (!sink.exists(spark)) return None
-          sink.read(spark).createOrReplaceTempView("sink")
+    /** Export target as a probe-able `target` view (the reference's
+      * s3-listing start.sql); empty stub when nothing is exported yet. */
+    private def registerTarget(spark: SparkSession): Unit = {
+      val fs = new org.apache.hadoop.fs.Path(spec.path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val df =
+        if (fs.exists(new org.apache.hadoop.fs.Path(spec.path)))
+          spark.read.parquet(spec.path)
+        else spark.range(0).selectExpr(s"cast(null as date) as ${spec.partitionCol}")
+      df.createOrReplaceTempView("target")
+    }
+
+    /** Batches staged by `transform` and not yet published. */
+    private val pending = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Staging.Staged]]()
+
+    def resume(spark: SparkSession): Option[Long] = {
+      pending.clear()
+      Staging.clear(spark, spec.path)
+      if (spec.isExport) {
+        registerSource(spark)
+        registerTarget(spark)
+      } else {
+        if (!sink.exists(spark)) return None
+        sink.read(spark).createOrReplaceTempView("sink")
+      }
+      scalarLong(spark, stripLeading(rendered("start.sql")))
+    }
+
+    def tip(spark: SparkSession): Long = {
+      registerSource(spark, refresh = true)
+      scalarLong(spark, stripLeading(rendered("tip.sql")))
+        .getOrElse(throw new IllegalStateException("tip.sql returned null"))
+    }
+
+    /** Held while a batch registers the session-wide `source` and
+      * buffer views and analyses the SQL that reads them. Analysis
+      * inlines a view, so once `spark.sql` returns, the frame no longer
+      * depends on it. Without the lock a concurrent peer could swap in
+      * its own export-mode `source`, pruned to ITS months, in between:
+      * a batch on the other side of a month boundary then reads an
+      * empty buffer and its day silently goes missing. The staged
+      * writes run outside the lock. */
+    private val analysis = new Object
+
+    /** Renders the transform stage; its last SELECT is the buffer. No
+      * physical plan is pinned: the runner never executes the buffer
+      * itself, only the staged write planned over it. */
+    def buffer(spark: SparkSession, batch: PipelineRunner.Batch): DataFrame =
+      analysis.synchronized {
+        registerSource(spark, Some(batch))
+        var buffer: Option[DataFrame] = None
+        transformFiles.foreach { f =>
+          stripLeading(rendered(f, batchVars(batch))) match {
+            case createBufferRe(name, select) =>
+              val df = spark.sql(unwrap(select))
+              df.createOrReplaceTempView(name)
+              buffer = Some(df)
+            case sql =>
+              buffer = Some(spark.sql(sql))
+          }
         }
-        scalarLong(spark, stripLeading(rendered("start.sql")))
+        buffer.getOrElse(throw new IllegalArgumentException(
+          s"stage files $transformFiles produced no buffer SELECT"))
       }
 
-      def tip(spark: SparkSession): Long = {
-        registerSource(spark, refresh = true)
-        scalarLong(spark, stripLeading(rendered("tip.sql")))
-          .getOrElse(throw new IllegalStateException("tip.sql returned null"))
+    /** The batch's sink writes, staged: export mode's `partitionCol`
+      * partitions (the `partition by toDate(timestamp)` s3 insert of the
+      * reference's daily-export transform.sql), or each commit-stage
+      * `insert into sink SELECT …`, planned over the buffer views, which
+      * are (re-)registered over `df` first. */
+    private def stage(spark: SparkSession, batch: PipelineRunner.Batch,
+        df: DataFrame): Seq[Staging.Staged] =
+      if (spec.isExport)
+        Seq(Staging.stagePartitions(df, spec.path, spec.partitionCol, batch.number))
+      else analysis.synchronized {
+        transformFiles.foreach { f =>
+          stripLeading(rendered(f, batchVars(batch))) match {
+            case createBufferRe(name, _) => df.createOrReplaceTempView(name)
+            case _ => ()
+          }
+        }
+        commitStatements(batch).collect { case insertSinkRe(select) => spark.sql(unwrap(select)) }
+      }.map(sink.stage(_, batch.number))
+
+    def transform(spark: SparkSession, batch: PipelineRunner.Batch): DataFrame = {
+      val df = buffer(spark, batch)
+      pending.put(batch.number, stage(spark, batch, df))
+      df
+    }
+
+    /** In batch order: each `insert into sink` publishes its staged
+      * write, `drop temporary …` drops the buffer view, anything else
+      * runs via spark.sql. */
+    def commit(spark: SparkSession, batch: PipelineRunner.Batch, df: DataFrame): Unit = {
+      val staged = Option(pending.remove(batch.number)).getOrElse(
+        throw new IllegalStateException(s"batch ${batch.number} was not staged by transform"))
+      if (spec.isExport) staged.foreach(Staging.publish)
+      else {
+        val writes = staged.iterator
+        commitStatements(batch).foreach {
+          case insertSinkRe(_) => sink.publish(writes.next())
+          case dropRe(name) => spark.catalog.dropTempView(name); ()
+          case sql => spark.sql(sql); ()
+        }
       }
-
-      /** Held while a batch registers the session-wide `source` and
-        * buffer views and analyses the SQL that reads them. Analysis
-        * inlines a view, so once `spark.sql` returns, the frame no longer
-        * depends on it. Without the lock a concurrent peer could swap in
-        * its own export-mode `source`, pruned to ITS months, in between:
-        * a batch on the other side of a month boundary then reads an
-        * empty buffer and its day silently goes missing. The staged
-        * writes run outside the lock. */
-      private val analysis = new Object
-
-      /** Renders the transform stage; its last SELECT is the buffer. No
-        * physical plan is pinned: the runner never executes the buffer
-        * itself, only the staged write planned over it. */
-      protected def buffer(spark: SparkSession, batch: PipelineRunner.Batch): DataFrame =
-        analysis.synchronized {
-          registerSource(spark, Some(batch))
-          var buffer: Option[DataFrame] = None
-          transformFiles.foreach { f =>
-            stripLeading(rendered(f, batchVars(batch))) match {
-              case createBufferRe(name, select) =>
-                val df = spark.sql(unwrap(select))
-                df.createOrReplaceTempView(name)
-                buffer = Some(df)
-              case sql =>
-                buffer = Some(spark.sql(sql))
-            }
-          }
-          buffer.getOrElse(throw new IllegalArgumentException(
-            s"stage files $transformFiles produced no buffer SELECT"))
-        }
-
-      /** The batch's sink writes, staged: export mode's `partitionCol`
-        * partitions (the `partition by toDate(timestamp)` s3 insert of the
-        * reference's daily-export transform.sql), or each commit-stage
-        * `insert into sink SELECT …`, planned over the buffer views, which
-        * are (re-)registered over `df` first. */
-      protected def stage(spark: SparkSession, batch: PipelineRunner.Batch,
-          df: DataFrame): Seq[Staging.Staged] =
-        if (spec.isExport)
-          Seq(Staging.stagePartitions(df, spec.path, spec.partitionCol, batch.number))
-        else analysis.synchronized {
-          transformFiles.foreach { f =>
-            stripLeading(rendered(f, batchVars(batch))) match {
-              case createBufferRe(name, _) => df.createOrReplaceTempView(name)
-              case _ => ()
-            }
-          }
-          commitStatements(batch).collect { case insertSinkRe(select) => spark.sql(unwrap(select)) }
-        }.map(sink.stage(_, batch.number))
-
-      /** In batch order: each `insert into sink` publishes its staged
-        * write, `drop temporary …` drops the buffer view, anything else
-        * runs via spark.sql. */
-      override protected def publish(spark: SparkSession, batch: PipelineRunner.Batch,
-          staged: Seq[Staging.Staged]): Unit =
-        if (spec.isExport) staged.foreach(Staging.publish)
-        else {
-          val writes = staged.iterator
-          commitStatements(batch).foreach {
-            case insertSinkRe(_) => sink.publish(writes.next())
-            case dropRe(name) => spark.catalog.dropTempView(name); ()
-            case sql => spark.sql(sql); ()
-          }
-        }
     }
   }
 

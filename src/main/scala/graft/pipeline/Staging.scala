@@ -2,11 +2,9 @@ package graft.pipeline
 
 import java.io.IOException
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import PipelineRunner.{Batch, Definition}
 
 /** Stage-then-publish, the write path of every pipeline target: a batch
   * is written once into a private directory beside its target,
@@ -77,48 +75,5 @@ object Staging {
     val r = root(target)
     val fs = r.getFileSystem(spark.sparkContext.hadoopConfiguration)
     lock.synchronized(fs.delete(r, true))
-  }
-}
-
-/** The Definition shape of stage-then-publish. `transform` builds the
-  * batch and stages its writes into `target`; the ordered `commit` only
-  * publishes what `transform` staged for that batch; `resume` first
-  * drops whatever a crashed run staged and never published. */
-private[pipeline] abstract class StagedDefinition(target: String) extends Definition {
-  /** The batch's rows (create_buffer.sql). */
-  protected def buffer(spark: SparkSession, batch: Batch): DataFrame
-  /** Write the batch's rows into staging directories of `target`. */
-  protected def stage(spark: SparkSession, batch: Batch, df: DataFrame): Seq[Staging.Staged]
-  /** Resume probe over the published target (start.sql). */
-  protected def next(spark: SparkSession): Option[Long]
-  /** Make the staged writes visible (write_to_sink.sql). */
-  protected def publish(spark: SparkSession, batch: Batch, staged: Seq[Staging.Staged]): Unit =
-    staged.foreach(Staging.publish)
-
-  private val pending = new ConcurrentHashMap[Long, Seq[Staging.Staged]]()
-
-  def resume(spark: SparkSession): Option[Long] = {
-    pending.clear()
-    Staging.clear(spark, target)
-    next(spark)
-  }
-
-  def transform(spark: SparkSession, batch: Batch): DataFrame = {
-    val df = buffer(spark, batch)
-    pending.put(batch.number, stage(spark, batch, df))
-    df
-  }
-
-  def commit(spark: SparkSession, batch: Batch, df: DataFrame): Unit =
-    publish(spark, batch, Option(pending.remove(batch.number)).getOrElse(
-      throw new IllegalStateException(s"batch ${batch.number} was not staged by transform")))
-}
-
-private[pipeline] object StagedDefinition {
-  /** Batches into one [[SinkTable]], resuming at max(`keyCol`) + 1. */
-  abstract class IntoSink(sink: SinkTable, keyCol: String) extends StagedDefinition(sink.path) {
-    protected def stage(spark: SparkSession, batch: Batch, df: DataFrame): Seq[Staging.Staged] =
-      Seq(sink.stage(df, batch.number))
-    protected def next(spark: SparkSession): Option[Long] = sink.maxKey(spark, keyCol).map(_ + 1)
   }
 }

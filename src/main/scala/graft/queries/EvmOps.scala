@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.EvmFunctions._
-import graft.pipeline.{DerivedPipelines, EthereumPipelines, PipelineRunner, SinkTable}
-import graft.pipeline.PipelineRunner.{Batch, Config}
+import graft.pipeline.{AbiDictionary, SinkTable, SqlPipeline}
+import graft.pipeline.PipelineRunner.Batch
+import graft.pipeline.SqlPipeline.exampleDir
 import Util._
 
 /** EVM/blockchain operator surface exposed to the driver gate. RPC-fed
@@ -14,13 +15,10 @@ import Util._
   */
 object EvmOps extends QueryPack {
 
-  private val endpoint = "fake://chain?tip=20#fail-on-error=true&fail-on-null=true"
-  private def batch021 = Batch(0, 0, 20)
-
-  private def exampleDir(name: String): String = {
-    val local = new java.io.File(s"examples/$name")
-    if (local.isDirectory) local.getPath else s"/root/repo/examples/$name"
-  }
+  /** The fake chain every pipeline query reads; the example configs
+    * append their own `#fail-on-…` transport flags. */
+  private val endpoint = "fake://chain?tip=20"
+  private val transferEvent = "'event Transfer(address indexed,address indexed,uint256)'"
 
   private def registerFns(s: SparkSession): Unit = {
     graft.functions.EvmFunctions.registerAll(s)
@@ -29,6 +27,23 @@ object EvmOps extends QueryPack {
 
   private def tmpSink(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-q-$tag").resolve("sink").toString
+
+  /** Blocks 0-20 as one batch of the example config `name`'s transform
+    * stage: its buffer rows, no sink. */
+  private def buffer(s: SparkSession, name: String, vars: Map[String, String]): DataFrame = {
+    registerFns(s)
+    SqlPipeline.buffer(s, exampleDir(name), vars, Batch(0, 0, 20))
+  }
+
+  /** A fresh sink filled by the example config `name` to the chain's tip
+    * in 21-block batches; returns its path. */
+  private def sink(s: SparkSession, tag: String, name: String,
+      vars: Map[String, String]): String = {
+    val path = tmpSink(tag)
+    SqlPipeline.run(s, exampleDir(name), vars + ("SINK_PATH" -> path),
+      c => c.copy(maxBatchSize = 21))
+    path
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // hex quantity codec — oracle-able against DuckDB to_hex.
@@ -60,7 +75,7 @@ object EvmOps extends QueryPack {
     // is not canonicalized stably by the driver's hasher.
     "e53_blocks_transform" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      EthereumPipelines.blocksTransform(s, batch021, endpoint)
+      buffer(s, "ethereum_blocks_spark", Map("RPC_ENDPOINT" -> endpoint))
         .select(col("number"), col("timestamp"), evmHexEncode(col("hash")).as("hash_hex"),
           col("gas_used"), u256ToStringN(col("base_fee_per_gas")).as("base_fee_per_gas"))
         .orderBy(col("number"))
@@ -68,7 +83,7 @@ object EvmOps extends QueryPack {
 
     // logs fetch: double explode + broadcast header join.
     "e54_logs_transform" -> ((s, _) => {
-      EthereumPipelines.logsTransform(s, batch021, endpoint)
+      buffer(s, "ethereum_logs_spark", Map("RPC_ENDPOINT" -> endpoint))
         .select(col("block_number"), col("log_index"),
           evmHexEncode(col("address")).as("address_hex"),
           size(col("topics")).as("n_topics"))
@@ -79,8 +94,8 @@ object EvmOps extends QueryPack {
     // including the Dencun + OP-stack conditional column families.
     "e55_transactions_transform" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
-      EthereumPipelines.transactionsTransform(s, batch021, endpoint,
-          enableDencun = true, enableOpStack = true)
+      buffer(s, "ethereum_transactions_spark", Map("RPC_ENDPOINT" -> endpoint,
+          "ENABLE_DENCUN" -> "true", "ENABLE_OP_STACK" -> "true"))
         .select(col("block_number"), col("transaction_index"), col("gas"),
           col("cumulative_gas_used"), col("status"),
           u256ToStringN(col("value")).as("value"),
@@ -89,12 +104,13 @@ object EvmOps extends QueryPack {
         .orderBy(col("block_number"), col("transaction_index"))
     }),
 
-    // end-to-end micro-batch pipeline: fetch → ordered commit → dedup read.
+    // end-to-end micro-batch pipeline: fetch → ordered commit → dedup read
+    // (the blocks config, the same run as e61).
     "e56_blocks_pipeline" -> ((s, _) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-q-blocks")
-        .resolve("sink").toString
-      val defn = EthereumPipelines.blocks(endpoint, path)
-      PipelineRunner.run(s, defn, Config(maxBatchSize = 7, workers = 2))
+      val path = tmpSink("blocks")
+      SqlPipeline.run(s, exampleDir("ethereum_blocks_spark"),
+        Map("RPC_ENDPOINT" -> endpoint, "SINK_PATH" -> path),
+        c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("number"), Some("timestamp")).read(s)
         .select(col("number"), col("gas_used"), col("size"))
         .orderBy(col("number"))
@@ -105,14 +121,9 @@ object EvmOps extends QueryPack {
     "e61_config_pipeline" -> ((s, _) => {
       graft.functions.EvmFunctions.registerAll(s)
       graft.functions.HexExpressions.registerAll(s)
-      val dir = {
-        val local = new java.io.File("examples/ethereum_blocks_spark")
-        if (local.isDirectory) local.getPath
-        else "/root/repo/examples/ethereum_blocks_spark"
-      }
       val path = java.nio.file.Files.createTempDirectory("graft-q-sqlpipe")
         .resolve("sink").toString
-      graft.pipeline.SqlPipeline.run(s, dir,
+      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_blocks_spark"),
         Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path),
         c => c.copy(maxBatchSize = 7, workers = 2))
       SinkTable(path, Seq("number"), Some("timestamp")).read(s)
@@ -125,21 +136,13 @@ object EvmOps extends QueryPack {
     "e62_config_derived" -> ((s, _) => {
       graft.functions.EvmFunctions.registerAll(s)
       graft.functions.HexExpressions.registerAll(s)
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-dl-src")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val dir = {
-        val local = new java.io.File("examples/ethereum_decoded_logs_spark")
-        if (local.isDirectory) local.getPath
-        else "/root/repo/examples/ethereum_decoded_logs_spark"
-      }
+      val logsPath = sink(s, "dl-src", "ethereum_logs_spark", Map("RPC_ENDPOINT" -> endpoint))
       val sinkPath = java.nio.file.Files.createTempDirectory("graft-q-dl-out")
         .resolve("sink").toString
-      graft.pipeline.SqlPipeline.run(s, dir, Map(
+      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_decoded_logs_spark"), Map(
         "SOURCE_PATH" -> logsPath,
         "SINK_PATH" -> sinkPath,
-        "EVENT_SIGS" -> "'event Transfer(address indexed,address indexed,uint256)'"))
+        "EVENT_SIGS" -> transferEvent))
       SinkTable(sinkPath, Seq("address", "signature", "block_number", "log_index"))
         .read(s)
         .select(col("block_number"), col("log_index"), col("signature"),
@@ -149,9 +152,8 @@ object EvmOps extends QueryPack {
 
     // ABI event decode against the dictionary (signature + inputs JSON).
     "e57_decoded_logs" -> ((s, _) => {
-      val dict = DerivedPipelines.AbiDictionary.builtin
-      val lookup = dict.lookupUdf(s)
-      EthereumPipelines.logsTransform(s, batch021, endpoint)
+      val lookup = AbiDictionary.builtin.lookupUdf(s)
+      buffer(s, "ethereum_logs_spark", Map("RPC_ENDPOINT" -> endpoint))
         .withColumn("evt_json", evmDecodeEvent(col("topics"), col("data"),
           lookup(element_at(col("topics"), 1))))
         .filter(get_json_object(col("evt_json"), "$.error").isNull)
@@ -163,9 +165,8 @@ object EvmOps extends QueryPack {
 
     // ABI call decode (selector match on trace input/output).
     "e58_decoded_traces" -> ((s, _) => {
-      val dict = DerivedPipelines.AbiDictionary.builtin
-      val lookup = dict.lookupUdf(s)
-      EthereumPipelines.tracesTransform(s, batch021, endpoint)
+      val lookup = AbiDictionary.builtin.lookupUdf(s)
+      buffer(s, "ethereum_traces_spark", Map("RPC_ENDPOINT" -> endpoint))
         .filter(length(col("input")) >= 4)
         .withColumn("call_json", evmDecodeCall(col("input"), col("output"),
           lookup(substring(col("input"), 1, 4))))
@@ -181,13 +182,10 @@ object EvmOps extends QueryPack {
     // VariantType open-schema decode: inputs as Spark 4 variant, fields
     // extracted with variant_get (no JSON re-parse) — rows-only.
     "e60_decoded_logs_variant" -> ((s, _) => {
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-vlogs")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val source = SinkTable(logsPath, Seq("block_number", "log_index"))
-      DerivedPipelines.decodedLogsVariantTransform(s, Batch(0, 0, 20), source,
-          DerivedPipelines.AbiDictionary.builtin)
+      val logsPath = sink(s, "vlogs", "ethereum_logs_spark", Map("RPC_ENDPOINT" -> endpoint))
+      buffer(s, "ethereum_decoded_logs_spark",
+          Map("SOURCE_PATH" -> logsPath, "EVENT_SIGS" -> transferEvent))
+        .withColumn("inputs", parse_json(col("inputs")))
         .select(col("block_number"), col("log_index"), col("signature"),
           expr("variant_get(inputs, '$.arg2', 'string')").as("amount"),
           expr("variant_get(inputs, '$.arg0', 'string')").as("sender"))
@@ -196,12 +194,9 @@ object EvmOps extends QueryPack {
 
     // dedup-then-RPC: erc20 balances over a fake-chain logs sink.
     "e59_erc20_balances" -> ((s, _) => {
-      val logsPath = java.nio.file.Files.createTempDirectory("graft-q-logs")
-        .resolve("sink").toString
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
-      val source = SinkTable(logsPath, Seq("block_number", "log_index"))
-      DerivedPipelines.erc20BalancesTransform(s, Batch(0, 0, 20), source, endpoint)
+      val logsPath = sink(s, "logs", "ethereum_logs_spark", Map("RPC_ENDPOINT" -> endpoint))
+      buffer(s, "ethereum_token_erc20_balances_spark",
+          Map("SOURCE_PATH" -> logsPath, "RPC_ENDPOINT" -> endpoint))
         .select(col("block_number"), evmHexEncode(col("wallet_address")).as("wallet_hex"),
           evmHexEncode(col("token_address")).as("token_hex"),
           col("token_symbol"), col("token_decimals").cast("int").as("token_decimals"),
@@ -268,9 +263,8 @@ object EvmOps extends QueryPack {
     // derived call-decode over a traces sink, in template form.
     "e66_config_decoded_traces" -> ((s, _) => {
       registerFns(s)
-      val tracesPath = tmpSink("cfg-dtr-src")
-      PipelineRunner.run(s, EthereumPipelines.traces(endpoint, tracesPath),
-        Config(maxBatchSize = 21))
+      val tracesPath = sink(s, "cfg-dtr-src", "ethereum_traces_spark",
+        Map("RPC_ENDPOINT" -> endpoint))
       val path = tmpSink("cfg-dtr-out")
       graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_decoded_traces_spark"),
         Map("SOURCE_PATH" -> tracesPath, "SINK_PATH" -> path,
@@ -288,9 +282,8 @@ object EvmOps extends QueryPack {
     "e67_config_erc20_balances" -> ((s, _) => {
       import graft.functions.HexExpressions.u256ToStringN
       registerFns(s)
-      val logsPath = tmpSink("cfg-bal-src")
-      PipelineRunner.run(s, EthereumPipelines.logs(endpoint, logsPath),
-        Config(maxBatchSize = 21))
+      val logsPath = sink(s, "cfg-bal-src", "ethereum_logs_spark",
+        Map("RPC_ENDPOINT" -> endpoint))
       val path = tmpSink("cfg-bal-out")
       graft.pipeline.SqlPipeline.run(s,
         exampleDir("ethereum_token_erc20_balances_spark"),
@@ -332,12 +325,9 @@ object EvmOps extends QueryPack {
     "e69_config_decoded_logs_export" -> ((s, _) => {
       registerFns(s)
       val multi = "fake://chain?tip=20&blocktime=14400"
-      val logsPath = tmpSink("cfg-dexp-logs")
-      PipelineRunner.run(s, EthereumPipelines.logs(multi, logsPath),
-        Config(maxBatchSize = 21))
-      val decodedPath = tmpSink("cfg-dexp-dec")
-      PipelineRunner.run(s, DerivedPipelines.decodedLogs(logsPath, decodedPath,
-        DerivedPipelines.AbiDictionary.builtin), Config(maxBatchSize = 21))
+      val logsPath = sink(s, "cfg-dexp-logs", "ethereum_logs_spark", Map("RPC_ENDPOINT" -> multi))
+      val decodedPath = sink(s, "cfg-dexp-dec", "ethereum_decoded_logs_spark",
+        Map("SOURCE_PATH" -> logsPath, "EVENT_SIGS" -> transferEvent))
       val targetPath = tmpSink("cfg-dexp-out")
       graft.pipeline.SqlPipeline.run(s,
         exampleDir("decoded_logs_to_daily_parquet_file_spark"),

@@ -515,14 +515,14 @@ object StreamingOps extends QueryPack {
 
     // Chain pipeline catches up as the tip advances — pinned golden.
     "st63_tip_catchup" -> ((s0, _) => { val s = streamSession(s0)
-      import graft.pipeline.{EthereumPipelines, PipelineRunner, SinkTable}
+      import graft.pipeline.{SinkTable, SqlPipeline}
       val path = java.nio.file.Files.createTempDirectory("graft-q-catchup")
         .resolve("sink").toString
-      def ep(tip: Int) = s"fake://chain?tip=$tip#fail-on-error=true"
-      PipelineRunner.run(s, EthereumPipelines.blocks(ep(10), path),
-        PipelineRunner.Config(maxBatchSize = 6, workers = 2))
-      PipelineRunner.run(s, EthereumPipelines.blocks(ep(18), path),
-        PipelineRunner.Config(maxBatchSize = 6, workers = 2))
+      Seq(10, 18).foreach { tip =>
+        SqlPipeline.run(s, SqlPipeline.exampleDir("ethereum_blocks_spark"),
+          Map("RPC_ENDPOINT" -> s"fake://chain?tip=$tip", "SINK_PATH" -> path),
+          c => c.copy(maxBatchSize = 6, workers = 2))
+      }
       SinkTable(path, Seq("number"), Some("timestamp")).read(s)
         .select(col("number"), col("gas_used")).orderBy(col("number"))
     }),

@@ -26,8 +26,10 @@ import graft.evm.{Json, Rpc}
   * (latest|safe|finalized — the reference's LATEST_BLOCK_STATUS knob).
   *
   * Usage: spark.readStream.format("graft-blocks").option("endpoint", …)
-  * .load() → a stream of rows (n: long) to compose with the same
-  * projections the batch pipelines use (EthereumPipelines.blocksProject).
+  * .load() → a stream of rows (n: long). Each micro-batch holds a
+  * contiguous range of heights, so `foreachBatch` can run the batch
+  * pipelines' own transform over `[min n, max n]`
+  * (`SqlPipeline.buffer` of examples/ethereum_blocks_spark).
   */
 class BlockNumbersSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {

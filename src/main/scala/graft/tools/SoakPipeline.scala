@@ -40,11 +40,7 @@ object SoakPipeline {
     graft.functions.EvmFunctions.registerAll(spark)
     graft.functions.HexExpressions.registerAll(spark)
 
-    val dir = {
-      val local = new java.io.File("examples/ethereum_blocks_spark")
-      if (local.isDirectory) local.getPath
-      else "/root/repo/examples/ethereum_blocks_spark"
-    }
+    val dir = SqlPipeline.exampleDir("ethereum_blocks_spark")
     val sink = java.nio.file.Files.createTempDirectory("graft-soak")
       .resolve("sink").toString
     val vars = Map(

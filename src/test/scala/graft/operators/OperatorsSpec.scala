@@ -93,7 +93,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("daily export partitions by date and resumes past exported days") {
-    import graft.pipeline.{DerivedPipelines, PipelineRunner, SinkTable}
+    import graft.pipeline.{PipelineRunner, SinkTable, SqlPipeline}
     val src = java.nio.file.Files.createTempDirectory("graft-exp-src").resolve("sink").toString
     val dst = java.nio.file.Files.createTempDirectory("graft-exp-dst").resolve("out").toString
     // source sink: 3 days of rows
@@ -103,13 +103,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("timestamp", "block_number", "v")
     val sink = SinkTable(src, Seq("block_number"), Some("timestamp"))
     sink.append(rows, 0)
-    val defn = DerivedPipelines.dailyExport(src, Seq("block_number"), dst)
+    val dir = SqlPipeline.exampleDir("table_to_daily_parquet_file_spark")
+    val vars = Map("SOURCE_PATH" -> src, "SOURCE_KEYS" -> "block_number", "TARGET_PATH" -> dst)
+    val defn = SqlPipeline.definition(dir, vars)
     // the per-day batch reads ONLY the yyyyMM partitions covering its day
     // range — a real PartitionFilters entry on the parquet scan, not a
     // post-scan filter (the whole point of deriving _part from the batch)
     val day0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    val plan = DerivedPipelines.dailyExportTransform(spark, PipelineRunner.Batch(0, day0, day0),
-      SinkTable(src, Seq("block_number"))).queryExecution.executedPlan.toString
+    val plan = SqlPipeline.buffer(spark, dir, vars, PipelineRunner.Batch(0, day0, day0))
+      .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("_part"), plan)
     // tip = yesterday of max(ts) → exports days 1 and 2, withholds day 3
     val r1 = PipelineRunner.run(spark, defn, PipelineRunner.Config(maxBatchSize = 1))

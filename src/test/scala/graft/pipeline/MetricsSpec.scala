@@ -62,13 +62,13 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .coalesce(1).write.mode("overwrite").parquet(p)
     write("function one()(bool)")
     // generous TTL: the old snapshot must be served within the window
-    val pinned = DerivedPipelines.AbiDictionary.refreshing(spark, p,
+    val pinned = AbiDictionary.refreshing(spark, p,
       minTtlMs = 600000, maxTtlMs = 600000)
     assert(pinned.current().entries("0xaabbccdd") == Seq("function one()(bool)"))
     write("function two()(bool)")
     assert(pinned.current().entries("0xaabbccdd") == Seq("function one()(bool)"))
     // zero TTL: every epoch re-resolves, so the swap is visible
-    val expiring = DerivedPipelines.AbiDictionary.refreshing(spark, p,
+    val expiring = AbiDictionary.refreshing(spark, p,
       minTtlMs = 0, maxTtlMs = 0)
     assert(expiring.current().entries("0xaabbccdd") == Seq("function two()(bool)"))
   }
@@ -95,7 +95,7 @@ class MetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     server.start()
     try {
-      val d = DerivedPipelines.AbiDictionary.fromUrl(spark,
+      val d = AbiDictionary.fromUrl(spark,
         s"http://localhost:${server.getAddress.getPort}/dict.parquet")
       assert(d.entries("0x01020304") == Seq("function f()(bool)"))
     } finally server.stop(0)

@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * without the reference checkout that [[PipelineConfigSpec]] reads. */
 class PipelineExamplesSpec extends AnyFunSuite {
 
-  /** The examples directory, resolved like [[SqlPipelineSpec]]: the
-    * working directory's `examples/` first, then the project's own (the
-    * test classes directory sits three levels below the project root). */
-  private val examples: java.io.File = {
-    val local = new java.io.File("examples")
-    if (local.isDirectory) local
-    else new java.io.File(new java.io.File(getClass.getProtectionDomain
-      .getCodeSource.getLocation.toURI).getParentFile.getParentFile
-      .getParentFile, "examples")
-  }
+  private val examples: java.io.File = SqlPipeline.examplesRoot
 
   test("every examples/*_spark/pipeline.yaml parses with its files present") {
     val dirs = examples.listFiles().filter(d =>

@@ -11,19 +11,35 @@ import graft.pipeline.PipelineRunner.{Batch, Config}
   * reference ships no fixtures). */
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    graft.functions.EvmFunctions.registerAll(s)
+    graft.functions.HexExpressions.registerAll(s)
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft-$name").resolve("sink").toString
 
-  private val endpoint = "fake://chain?tip=25#fail-on-error=true&fail-on-null=true"
+  private val endpoint = "fake://chain?tip=25"
+
+  /** The example config `name` as a Definition over `endpoint`. */
+  private def config(name: String, vars: (String, String)*): PipelineRunner.Definition =
+    SqlPipeline.definition(SqlPipeline.exampleDir(name), Map("RPC_ENDPOINT" -> endpoint) ++ vars)
+
+  /** A logs sink at `path`, filled by the logs example config. */
+  private def logsSink(path: String): Unit =
+    PipelineRunner.run(spark, config("ethereum_logs_spark", "SINK_PATH" -> path),
+      Config(maxBatchSize = 26))
+
+  private val transferEvent = "'event Transfer(address indexed,address indexed,uint256)'"
 
   test("plan splits ranges like the reference Batcher") {
     val batches = PipelineRunner.plan(0, 25, 10)
@@ -46,7 +62,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("blocks pipeline: end-to-end, resume, idempotent re-run") {
     val path = tmp("blocks")
-    val defn = EthereumPipelines.blocks(endpoint, path)
+    val defn = config("ethereum_blocks_spark", "SINK_PATH" -> path)
     val sink = SinkTable(path, Seq("number"), Some("timestamp"))
 
     val r1 = PipelineRunner.run(spark, defn,
@@ -76,7 +92,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("logs pipeline produces one Transfer log per fake tx") {
     val path = tmp("logs")
-    val defn = EthereumPipelines.logs(endpoint, path)
+    val defn = config("ethereum_logs_spark", "SINK_PATH" -> path)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 10, workers = 2))
     val sink = SinkTable(path, Seq("block_number", "log_index"))
     val logs = sink.read(spark)
@@ -89,7 +105,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transactions pipeline zips txs with receipts positionally") {
     val path = tmp("tx")
-    val defn = EthereumPipelines.transactions(endpoint, path)
+    val defn = config("ethereum_transactions_spark", "SINK_PATH" -> path,
+      "ENABLE_DENCUN" -> "true")
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 13))
     val sink = SinkTable(path, Seq("block_number", "transaction_index"))
     val txs = sink.read(spark)
@@ -111,7 +128,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("traces pipeline decodes action/result sections") {
     val path = tmp("traces")
-    val defn = EthereumPipelines.traces(endpoint, path)
+    val defn = config("ethereum_traces_spark", "SINK_PATH" -> path)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 26))
     val sink = SinkTable(path,
       Seq("block_number", "transaction_index", "trace_address"))
@@ -140,8 +157,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("transactions op-stack conditional family decodes receipt fields") {
     val batch = PipelineRunner.Batch(0, 0, 12)
-    val txs = EthereumPipelines.transactionsTransform(spark, batch, endpoint,
-      enableDencun = true, enableOpStack = true)
+    val txDir = SqlPipeline.exampleDir("ethereum_transactions_spark")
+    val txs = SqlPipeline.buffer(spark, txDir, Map("RPC_ENDPOINT" -> endpoint,
+      "ENABLE_DENCUN" -> "true", "ENABLE_OP_STACK" -> "true"), batch)
     import org.apache.spark.sql.functions._
     assert(txs.columns.contains("l1_fee") && txs.columns.contains("source_hash"))
     assert(txs.filter(col("is_system_tx")).count() == 0)
@@ -155,19 +173,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(whale == graft.evm.FakeChain.valueOf(2, 1).toString)
     assert(BigInt(whale) > BigInt(10).pow(20))
     // flags off → the families are absent (template-var keyed projection)
-    val bare = EthereumPipelines.transactionsTransform(spark, batch, endpoint,
-      enableDencun = false, enableOpStack = false)
+    val bare = SqlPipeline.buffer(spark, txDir, Map("RPC_ENDPOINT" -> endpoint), batch)
     assert(!bare.columns.contains("max_fee_per_blob_gas"))
     assert(!bare.columns.contains("l1_fee"))
   }
 
   test("decoded logs pipeline: dictionary decode keeps only matches") {
     val logsPath = tmp("logs2")
-    PipelineRunner.run(spark, EthereumPipelines.logs(endpoint, logsPath),
-      Config(maxBatchSize = 26))
+    logsSink(logsPath)
     val decodedPath = tmp("decoded")
-    val defn = DerivedPipelines.decodedLogs(logsPath, decodedPath,
-      DerivedPipelines.AbiDictionary.builtin)
+    val defn = config("ethereum_decoded_logs_spark", "SOURCE_PATH" -> logsPath,
+      "SINK_PATH" -> decodedPath, "EVENT_SIGS" -> transferEvent)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 1000))
     val decoded = SinkTable(decodedPath,
       Seq("address", "signature", "block_number", "log_index")).read(spark)
@@ -183,10 +199,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("erc20 balances pipeline: dedup-then-rpc with token metadata join") {
     val logsPath = tmp("logs3")
-    PipelineRunner.run(spark, EthereumPipelines.logs(endpoint, logsPath),
-      Config(maxBatchSize = 26))
+    logsSink(logsPath)
     val balPath = tmp("balances")
-    val defn = DerivedPipelines.erc20Balances(logsPath, balPath, endpoint)
+    val defn = config("ethereum_token_erc20_balances_spark", "SOURCE_PATH" -> logsPath,
+      "SINK_PATH" -> balPath)
     PipelineRunner.run(spark, defn, Config(maxBatchSize = 1000))
     val bal = SinkTable(balPath,
       Seq("wallet_address", "token_address", "block_number")).read(spark)
@@ -262,7 +278,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = tmp("staged-fail")
     val staging = java.nio.file.Paths.get(path + "_staging")
     val sink = SinkTable(path, Seq("number"), Some("timestamp"))
-    val blocks = EthereumPipelines.blocks("fake://chain?tip=24", path)
+    val blocks = SqlPipeline.definition(SqlPipeline.exampleDir("ethereum_blocks_spark"),
+      Map("RPC_ENDPOINT" -> "fake://chain?tip=24", "SINK_PATH" -> path))
     val failAt = new java.util.concurrent.atomic.AtomicLong(2) // -1: no batch fails
     val defn = new PipelineRunner.Definition {
       def resume(s: SparkSession): Option[Long] = blocks.resume(s)

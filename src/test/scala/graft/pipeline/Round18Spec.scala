@@ -63,7 +63,7 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(_.getLong(0)).toSeq == (0L until 15L))
   }
 
-  test("dedupOnRead over a pinned raw frame equals readPruned") {
+  test("dedupOnRead over a pinned raw frame equals a pruned read") {
     import spark.implicits._
     val path = tmp("dedupraw")
     val sink = SinkTable(path, Seq("k"), Some("ts"))
@@ -74,7 +74,7 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     val raw = sink.readRaw(spark)
     val viaPinned = sink.dedupOnRead(raw, Some(Seq("202403")))
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val viaRead = sink.readPruned(spark, Some(Seq("202403")))
+    val viaRead = sink.read(spark, Seq("202403"))
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(viaPinned == viaRead)
     assert(viaPinned == Seq((1L, "new"), (2L, "old")))
@@ -84,16 +84,14 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     graft.functions.EvmFunctions.registerAll(spark)
     graft.functions.HexExpressions.registerAll(spark)
-    // upstream logs sink at tip 10
+    // upstream logs sink at tip 10, filled by the logs example config
     val logsPath = tmp("r18-logs")
-    PipelineRunner.run(spark,
-      EthereumPipelines.logs("fake://chain?tip=10", logsPath),
-      PipelineRunner.Config(maxBatchSize = 11))
-    val dir = {
-      val local = new java.io.File("examples/ethereum_decoded_logs_spark")
-      if (local.isDirectory) local.getPath
-      else "/root/repo/examples/ethereum_decoded_logs_spark"
-    }
+    def logsTo(tip: Int, batchSize: Long): Unit =
+      SqlPipeline.run(spark, SqlPipeline.exampleDir("ethereum_logs_spark"),
+        Map("RPC_ENDPOINT" -> s"fake://chain?tip=$tip", "SINK_PATH" -> logsPath),
+        c => c.copy(maxBatchSize = batchSize))
+    logsTo(10, 11)
+    val dir = SqlPipeline.exampleDir("ethereum_decoded_logs_spark")
     val vars = Map(
       "SOURCE_PATH" -> logsPath,
       "SINK_PATH" -> tmp("r18-decoded"),
@@ -104,9 +102,7 @@ class Round18Spec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.HexExpressions.registerAll(session)
     assert(defn.tip(session) == 10L)
     // source advances AFTER the probe (a follow-mode pass boundary)
-    PipelineRunner.run(spark,
-      EthereumPipelines.logs("fake://chain?tip=15", logsPath),
-      PipelineRunner.Config(maxBatchSize = 5))
+    logsTo(15, 5)
     // the next poll's refresh must see the newly landed files: the
     // probed tip equals the source sink's REAL high-water mark (not
     // the stale pre-advance 10)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -21,10 +21,7 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val exampleDir = {
-    val local = new java.io.File("examples/ethereum_blocks_spark")
-    if (local.isDirectory) local.getPath else "/root/repo/examples/ethereum_blocks_spark"
-  }
+  private val exampleDir = SqlPipeline.exampleDir("ethereum_blocks_spark")
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-sqlpipe-$name")
@@ -44,13 +41,8 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = SinkTable(sinkPath, Seq("number"), Some("timestamp")).read(spark)
     assert(got.count() == 21)
 
-    // column-level parity with the hand-built Scala pipeline: the
-    // config-driven SQL path and the DataFrame path must agree exactly
-    val expected = EthereumPipelines.blocksTransform(spark,
-      PipelineRunner.Batch(0, 0, 20), "fake://chain?tip=20")
-    val cols = expected.columns.map(col).toSeq
-    assert(got.select(cols: _*).exceptAll(expected).isEmpty)
-    assert(expected.exceptAll(got.select(cols: _*)).isEmpty)
+    assertDigest(got, 21, "34624dc3c7e20b6209121884e532d3d23e31c0f94481c4452dd0c5f747cb6b75")
+    assert(got.columns.length == 23) // the reference table's columns, no bookkeeping
 
     // resume: a second run finds max(number)+1 > tip and does nothing
     val res2 = SqlPipeline.run(spark, exampleDir, vars)
@@ -60,16 +52,8 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("derived pipeline (decoded logs) runs from config over a source sink") {
     graft.functions.EvmFunctions.registerAll(spark)
     graft.functions.HexExpressions.registerAll(spark)
-    // upstream logs sink via the compiled pipeline
-    val logsPath = tmp("dl-logs")
-    PipelineRunner.run(spark,
-      EthereumPipelines.logs("fake://chain?tip=20", logsPath),
-      PipelineRunner.Config(maxBatchSize = 21))
-    val dir = {
-      val local = new java.io.File("examples/ethereum_decoded_logs_spark")
-      if (local.isDirectory) local.getPath
-      else "/root/repo/examples/ethereum_decoded_logs_spark"
-    }
+    val logsPath = logsSink("dl-logs", "fake://chain?tip=20")
+    val dir = dirOf("ethereum_decoded_logs_spark")
     val sinkPath = tmp("dl-decoded")
     val res = SqlPipeline.run(spark, dir, Map(
       "SOURCE_PATH" -> logsPath,
@@ -87,26 +71,56 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .count() == 0)
   }
 
-  private def dirOf(name: String): String = {
-    val local = new java.io.File(s"examples/$name")
-    if (local.isDirectory) local.getPath else s"/root/repo/examples/$name"
-  }
+  private def dirOf(name: String): String = SqlPipeline.exampleDir(name)
 
   private def register(): Unit = {
     graft.functions.EvmFunctions.registerAll(spark)
     graft.functions.HexExpressions.registerAll(spark)
   }
 
-  private def assertParity(got: org.apache.spark.sql.DataFrame,
-      expected: org.apache.spark.sql.DataFrame): Unit = {
-    assert(got.columns.toSeq == expected.columns.toSeq,
-      s"columns: ${got.columns.toSeq} vs ${expected.columns.toSeq}")
-    val cols = expected.columns.map(col).toSeq
-    assert(got.select(cols: _*).exceptAll(expected).isEmpty)
-    assert(expected.exceptAll(got.select(cols: _*)).isEmpty)
+  /** sha-256 over a frame's column names, then its rows rendered one
+    * per line, sorted (binary as hex, timestamps as epoch millis). */
+  private def digest(df: DataFrame): String = {
+    def render(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+      case t: java.sql.Timestamp => t.getTime.toString
+      case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
+      case xs: scala.collection.Seq[_] => xs.map(render).mkString("[", ",", "]")
+      case o => String.valueOf(o)
+    }
+    val text = (df.columns.mkString("|") +:
+      df.collect().map(_.toSeq.map(render).mkString("|")).sorted).mkString("\n")
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** A config sink over `fake://chain?tip=20` against its pinned digest.
+    * Each digest was recorded while the hand-compiled DataFrame copy of
+    * the pipeline still existed, and both produced exactly these rows. */
+  private def assertDigest(got: DataFrame, rows: Long, expected: String): Unit = {
+    assert(got.count() == rows)
+    val d = digest(got)
+    assert(d == expected, s"${got.columns.toSeq}: digest $d")
   }
 
   private val endpoint = "fake://chain?tip=20"
+
+  /** An upstream logs sink, filled by the logs example config. */
+  private def logsSink(name: String, rpc: String = endpoint): String = {
+    val path = tmp(name)
+    SqlPipeline.run(spark, dirOf("ethereum_logs_spark"),
+      Map("RPC_ENDPOINT" -> rpc, "SINK_PATH" -> path), c => c.copy(maxBatchSize = 21))
+    path
+  }
+
+  /** An upstream blocks sink, filled by the blocks example config. */
+  private def blocksSink(name: String, rpc: String,
+      c: PipelineRunner.Config => PipelineRunner.Config): String = {
+    val path = tmp(name)
+    SqlPipeline.run(spark, exampleDir, Map("RPC_ENDPOINT" -> rpc, "SINK_PATH" -> path), c)
+    path
+  }
 
   test("ethereum_logs example matches the compiled logs transform") {
     register()
@@ -117,8 +131,7 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.batches == 3)
     val got = SinkTable(sinkPath, Seq("block_number", "log_index"),
       Some("timestamp")).read(spark)
-    assertParity(got,
-      EthereumPipelines.logsTransform(spark, PipelineRunner.Batch(0, 0, 20), endpoint))
+    assertDigest(got, 21, "63ebf90bf0759c542935c572589a952698965707bf599878dcea3f39082f63fa")
   }
 
   test("ethereum_transactions example matches the compiled transform incl. conditionals") {
@@ -130,9 +143,7 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       c => c.copy(maxBatchSize = 7, workers = 2))
     val got = SinkTable(sinkPath, Seq("block_number", "transaction_index"),
       Some("timestamp")).read(spark)
-    assertParity(got, EthereumPipelines.transactionsTransform(spark,
-      PipelineRunner.Batch(0, 0, 20), endpoint,
-      enableDencun = true, enableOpStack = true))
+    assertDigest(got, 21, "b938b3a0f4bc76e8c6a059194a3a8551fe40cd3c2d07377495f1bd147597a8dc")
     // template conditionals gate the column families off too
     val barePath = tmp("cfg-txs-bare")
     SqlPipeline.run(spark, dirOf("ethereum_transactions_spark"),
@@ -152,15 +163,15 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = SinkTable(sinkPath,
       Seq("block_number", "transaction_index", "trace_address"),
       Some("timestamp")).read(spark)
-    assertParity(got,
-      EthereumPipelines.tracesTransform(spark, PipelineRunner.Batch(0, 0, 20), endpoint))
+    assertDigest(got, 21, "d8f18394253aa9e3e3536e5bbe238f5577ee079b33517d472479942d951f92d0")
   }
 
   test("ethereum_decoded_traces example matches the compiled derived transform") {
     register()
     val tracesPath = tmp("cfg-dtr-src")
-    PipelineRunner.run(spark, EthereumPipelines.traces(endpoint, tracesPath),
-      PipelineRunner.Config(maxBatchSize = 21))
+    SqlPipeline.run(spark, dirOf("ethereum_traces_spark"),
+      Map("RPC_ENDPOINT" -> endpoint, "SINK_PATH" -> tracesPath),
+      c => c.copy(maxBatchSize = 21))
     val sinkPath = tmp("cfg-dtr-out")
     val res = SqlPipeline.run(spark, dirOf("ethereum_decoded_traces_spark"), Map(
       "SOURCE_PATH" -> tracesPath,
@@ -171,21 +182,13 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("to", "signature", "block_number", "transaction_index", "trace_address"),
       Some("timestamp")).read(spark)
     // the reference's q0 projects a SUBSET of trace columns
-    // (create_buffer.sql:5-25); the compiled transform keeps them all —
-    // compare on the config dir's (reference-faithful) column set
-    val expected = DerivedPipelines.decodedTracesTransform(spark,
-      PipelineRunner.Batch(0, 0, 20),
-      SinkTable(tracesPath, Seq("block_number", "transaction_index", "trace_address")),
-      DerivedPipelines.AbiDictionary.builtin)
-    val common = got.columns.filter(expected.columns.contains).toSeq
-    assertParity(got.select(common.map(col): _*), expected.select(common.map(col): _*))
+    // (create_buffer.sql:5-25), and so does the sink
+    assertDigest(got, 18, "f23d3e69ea689c67d81c0ede9f7c3a200ed55910818ed3c4a3eba03848305cb4")
   }
 
   test("ethereum_token_erc20_balances example matches the compiled derived transform") {
     register()
-    val logsPath = tmp("cfg-bal-src")
-    PipelineRunner.run(spark, EthereumPipelines.logs(endpoint, logsPath),
-      PipelineRunner.Config(maxBatchSize = 21))
+    val logsPath = logsSink("cfg-bal-src")
     val sinkPath = tmp("cfg-bal-out")
     val res = SqlPipeline.run(spark, dirOf("ethereum_token_erc20_balances_spark"), Map(
       "SOURCE_PATH" -> logsPath,
@@ -195,18 +198,14 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = SinkTable(sinkPath,
       Seq("wallet_address", "token_address", "block_number"),
       Some("timestamp")).read(spark)
-    assertParity(got, DerivedPipelines.erc20BalancesTransform(spark,
-      PipelineRunner.Batch(0, 0, 20),
-      SinkTable(logsPath, Seq("block_number", "log_index")), endpoint))
+    assertDigest(got, 42, "ba4dbf284601fdb25894873578deb92996d8dc7629545fe43ff854429f7eee0e")
   }
 
   test("table_to_daily_parquet_file example exports day partitions up to yesterday") {
     register()
     // blocktime=14400 → 6 blocks/day → 21 blocks span ~3.5 days
     val multi = "fake://chain?tip=20&blocktime=14400"
-    val blocksPath = tmp("cfg-exp-src")
-    PipelineRunner.run(spark, EthereumPipelines.blocks(multi, blocksPath),
-      PipelineRunner.Config(maxBatchSize = 21))
+    val blocksPath = blocksSink("cfg-exp-src", multi, _.copy(maxBatchSize = 21))
     val targetPath = tmp("cfg-exp-out")
     val vars = Map("SOURCE_PATH" -> blocksPath, "SOURCE_KEYS" -> "number",
       "TARGET_PATH" -> targetPath)
@@ -227,9 +226,7 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("table_to_daily_parquet_file re-run from an exported day keeps one copy per day") {
     register()
     val multi = "fake://chain?tip=20&blocktime=14400"
-    val blocksPath = tmp("cfg-rerun-src")
-    PipelineRunner.run(spark, EthereumPipelines.blocks(multi, blocksPath),
-      PipelineRunner.Config(maxBatchSize = 21))
+    val blocksPath = blocksSink("cfg-rerun-src", multi, _.copy(maxBatchSize = 21))
     val targetPath = tmp("cfg-rerun-out")
     val vars = Map("SOURCE_PATH" -> blocksPath, "SOURCE_KEYS" -> "number",
       "TARGET_PATH" -> targetPath)
@@ -260,9 +257,8 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Nov 30 - Dec 4, so the export's first day batch is the only one in
     // November, and all four start together
     val chain = "fake://chain?tip=20&blocktime=86400"
-    val blocksPath = tmp("cfg-month-src")
-    PipelineRunner.run(spark, EthereumPipelines.blocks(chain, blocksPath),
-      PipelineRunner.Config(maxBatchSize = 5, defaultStart = 16))
+    val blocksPath = blocksSink("cfg-month-src", chain,
+      _.copy(maxBatchSize = 5, defaultStart = 16))
     val expected = (16L to 19L).map(n => java.time.Instant.ofEpochSecond(
       1700000000L + 86400L * n).toString.take(10) -> 1L).toMap
     (1 to 3).foreach { round =>
@@ -280,12 +276,11 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("decoded_logs_to_daily_parquet_file example exports the decoded sink") {
     register()
     val multi = "fake://chain?tip=20&blocktime=14400"
-    val logsPath = tmp("cfg-dexp-logs")
-    PipelineRunner.run(spark, EthereumPipelines.logs(multi, logsPath),
-      PipelineRunner.Config(maxBatchSize = 21))
+    val logsPath = logsSink("cfg-dexp-logs", multi)
     val decodedPath = tmp("cfg-dexp-dec")
-    PipelineRunner.run(spark, DerivedPipelines.decodedLogs(logsPath, decodedPath,
-      DerivedPipelines.AbiDictionary.builtin), PipelineRunner.Config(maxBatchSize = 21))
+    SqlPipeline.run(spark, dirOf("ethereum_decoded_logs_spark"), Map(
+      "SOURCE_PATH" -> logsPath, "SINK_PATH" -> decodedPath,
+      "EVENT_SIGS" -> "'event Transfer(address indexed,address indexed,uint256)'"))
     val targetPath = tmp("cfg-dexp-out")
     val res = SqlPipeline.run(spark,
       dirOf("decoded_logs_to_daily_parquet_file_spark"),
@@ -456,6 +451,26 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         |""".stripMargin, Map("TABLE" -> "blocks"))
     assert(spec.path == "s3a://warehouse/eth/blocks")
     assert(spec.table.path == "s3a://warehouse/eth/blocks")
+  }
+
+  test("a missing or empty Keys fails when the definition is built") {
+    def rejected(section: String)(build: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(s"$section.Keys"), e.getMessage)
+    }
+    // no Keys and no SINK_KEYS var: no silent dedup on `number`
+    rejected("Sink")(SqlPipeline.sinkSpec("Sink:\n  Path: /tmp/x\n", Map.empty))
+    // Keys rendered empty from a missing template var: no key `""`
+    rejected("Sink")(SqlPipeline.sinkSpec(
+      "Sink:\n  Path: /tmp/x\n  Keys: \"{{.KEYS}}\"\n", Map.empty))
+    rejected("Source")(SqlPipeline.sourceSpec("Source:\n  Path: /tmp/s\n", Map.empty))
+    // the export example's source keys come from SOURCE_KEYS
+    val exportDir = dirOf("table_to_daily_parquet_file_spark")
+    val vars = Map("SOURCE_PATH" -> "/tmp/s", "TARGET_PATH" -> tmp("keys-export"))
+    rejected("Source")(SqlPipeline.definition(exportDir, vars))
+    // an export sink needs no keys; a replacing one may take SINK_KEYS
+    assert(SqlPipeline.definition(exportDir, vars + ("SOURCE_KEYS" -> "number")) != null)
+    assert(SqlPipeline.sinkSpec("Sink:\n  Path: /tmp/x\n", Map("SINK_KEYS" -> "n")).keys == Seq("n"))
   }
 
   test("sink spec falls back to SINK_* vars when yaml has no Sink section") {

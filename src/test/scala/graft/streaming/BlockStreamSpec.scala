@@ -55,15 +55,28 @@ class BlockStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("composes with the shared blocks projection") {
-    import graft.pipeline.EthereumPipelines
+    import graft.pipeline.{PipelineRunner, SqlPipeline}
+    graft.functions.EvmFunctions.registerAll(spark)
+    graft.functions.HexExpressions.registerAll(spark)
     val stream = spark.readStream.format("graft-blocks")
       .option("endpoint", "fake://chain?tip=12")
       .load()
-    val projected = EthereumPipelines.blocksProject(stream,
-      "fake://chain?tip=12#fail-on-error=true")
-    val q = projected.writeStream.format("memory").queryName("blkproj").start()
+    // each micro-batch is a contiguous height range: the blocks
+    // config's own transform runs over [min n, max n]
+    val dir = SqlPipeline.exampleDir("ethereum_blocks_spark")
+    val out = Files.createTempDirectory("graft-blkproj").resolve("data").toString
+    val project: (org.apache.spark.sql.DataFrame, Long) => Unit = (batch, id) => {
+      val r = batch.agg(min(col("n")), max(col("n")), count(lit(1))).head()
+      if (!r.isNullAt(0)) {
+        assert(r.getLong(2) == r.getLong(1) - r.getLong(0) + 1, s"batch $id is not contiguous")
+        SqlPipeline.buffer(spark, dir, Map("RPC_ENDPOINT" -> "fake://chain?tip=12"),
+            PipelineRunner.Batch(id, r.getLong(0), r.getLong(1)))
+          .write.mode("append").parquet(out)
+      }
+    }
+    val q = stream.writeStream.foreachBatch(project).start()
     try q.processAllAvailable() finally q.stop()
-    val rows = spark.table("blkproj")
+    val rows = spark.read.parquet(out)
     assert(rows.count() == 13)
     val b7 = rows.filter(col("number") === 7).head()
     assert(b7.getAs[Long]("gas_used") == 21000L * graft.evm.FakeChain.nTx(7))
