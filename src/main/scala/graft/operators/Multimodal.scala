@@ -975,7 +975,7 @@ object Multimodal {
     * local array here, where the window-function formulation would
     * shuffle all codes by doc_id just to see neighbors. Distinct
     * per doc (one posting-list entry per doc per landmark). */
-  def audioLandmarks(media: DataFrame, gap: Int = 1, frame: Int = 128,
+  def audioLandmarks(media: DataFrame, gap: Int, frame: Int = 128,
       hop: Int = 64, canonRate: Int = 8000)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
@@ -1021,8 +1021,7 @@ object Multimodal {
     * compound that evades both [[AudioLandmark]] (no common
     * samples) and [[AudioSpectralCode]] (shifted alignment). 16-bit
     * codes pack as code*65536 + next. */
-  def audioSpectralLandmarks(media: DataFrame, gap: Int = 1,
-      hopMs: Int = 64)(
+  def audioSpectralLandmarks(media: DataFrame, gap: Int, hopMs: Int)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     media.select(col("doc_id"), col("payload")).as[MediaRow]
@@ -1140,9 +1139,8 @@ object Multimodal {
     * doc, one mapPartitions pass, no shuffle — the family shape.
     * Silence-free audio yields no onsets and drops out of this tier
     * (the grid tiers still cover it). */
-  def spectralOnsetLandmarks(media: DataFrame, codesPerOnset: Int = 2,
-      threshold: Int = 1024, minSilenceMs: Int = 8,
-      thresholdFrac: Double = 0.0)(
+  def spectralOnsetLandmarks(media: DataFrame, codesPerOnset: Int,
+      threshold: Int, minSilenceMs: Int, thresholdFrac: Double)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(codesPerOnset >= 1 && codesPerOnset <= 4,
@@ -1327,8 +1325,8 @@ object Multimodal {
     * just short) emit nothing — the family contract (grid tiers cover
     * onset-free corpora; nothing in the TIMING of metronomic audio
     * distinguishes docs, see the kernel scaladoc). */
-  def onsetIntervalLandmarks(media: DataFrame, nRatios: Int = 5,
-      qStep: Double = 0.2, threshold: Int = 1024, minSilenceMs: Int = 8)(
+  def onsetIntervalLandmarks(media: DataFrame, nRatios: Int,
+      qStep: Double, threshold: Int, minSilenceMs: Int)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(nRatios >= 1 && nRatios <= 10,
@@ -1527,9 +1525,8 @@ object Multimodal {
     * keys than the other landmark tiers' — at corpus scale keep the
     * `maxDf` cap on (hot codes are pruned before pair expansion,
     * recall rides on the remaining set). */
-  def chromaOnsetLandmarks(media: DataFrame, cyc: Int = 12,
-      threshold: Int = 1024, minSilenceMs: Int = 8, div: Int = 12,
-      folds: Int = 1)(
+  def chromaOnsetLandmarks(media: DataFrame, cyc: Int, threshold: Int,
+      minSilenceMs: Int, div: Int, folds: Int)(
       implicit s: SparkSession): Dataset[DocLandmark] = {
     import s.implicits._
     require(cyc >= 4 && cyc <= 64,
@@ -7245,7 +7242,7 @@ object Multimodal {
     * re-upload's orient-1 landmarks equal its source's orient-0 set
     * exactly when the mirror is lossless. Feeds the streaming
     * flip-tolerant video tier. */
-  def videoLandmarksOriented(media: DataFrame, every: Int = 2)(
+  def videoLandmarksOriented(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoLandmarkO] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -7276,7 +7273,7 @@ object Multimodal {
     * rotate+mirrored) at once: its orientation-o landmark sequence
     * for the inverting o equals its source's as-is sequence, interior
     * landmarks surviving the trim exactly as in the flip tier. */
-  def videoLandmarksDihedral(media: DataFrame, every: Int = 2)(
+  def videoLandmarksDihedral(media: DataFrame, every: Int)(
       implicit s: SparkSession): Dataset[VideoLandmarkO] = {
     import s.implicits._
     require(every >= 1, "every must be >= 1")
@@ -7721,7 +7718,7 @@ object Multimodal {
 
   /** "4 x 16-bit chunks" pigeonhole: the chunk posting lists of the
     * pHash-style tiers find every pair within hamming 3, no further. */
-  private def requireChunkRecall(maxDist: Int): Unit =
+  private[operators] def requireChunkRecall(maxDist: Int): Unit =
     require(maxDist < 4, "4 x 16-bit chunks guarantee recall only for maxDist <= 3")
 
   /** A landmark or hash FAMILY: one extractor parameter set, as a value.
@@ -7812,16 +7809,26 @@ object Multimodal {
   }
 
   /** pHash families scored by [[chunkPairScores]]: `hashes` shapes the
-    * materialized extractor output into (doc_id[, win], h) rows;
-    * output (doc_a, doc_b[, win_a, win_b], dist). Undecodable payloads
-    * drop out (no hash). */
+    * extractor output into (doc_id[, orient|win], h) rows — `orient`,
+    * the orientation index of a multi-orientation family, only when
+    * asked for (the streaming verdicts register orient 0 alone; the pair
+    * scorer needs no tag); output (doc_a, doc_b[, win_a, win_b], dist).
+    * Undecodable payloads drop out (no hash). */
   sealed abstract class Hashed(oriented: Boolean = true) extends Paired {
-    protected def hashes(hashed: DataFrame): DataFrame
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame
     private[operators] def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
       requireChunkRecall(maxDist) // before the eager decode pass
-      chunkPairScores(hashes(lms), maxDist, maxDf, oriented)
+      chunkPairScores(hashes(lms, orient = false), maxDist, maxDf, oriented)
     }
+  }
+
+  /** (doc_id[, orient], h) rows of an orientation-array extractor's
+    * `hs` column, `orient` = the array index. */
+  private def orientationRows(hashed: DataFrame, orient: Boolean): DataFrame = {
+    val hs = hashed.filter(col("hs").isNotNull)
+    if (orient) hs.select(col("doc_id"), posexplode(col("hs")).as(Seq("orient", "h")))
+    else hs.select(col("doc_id"), explode(col("hs")).as("h"))
   }
 
   /** Aligned audio frame codes — the m79 tier: two recordings match
@@ -7969,7 +7976,7 @@ object Multimodal {
   case object PHash extends Hashed(oriented = false) with Screened {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       m.select(col("doc_id"), pHashUdf(col("payload")).as("ph"))
-    protected def hashes(hashed: DataFrame): DataFrame =
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame =
       hashed.filter(col("ph").isNotNull)
     def stamp = Postings.Stamp(PHashFpVersion, "pHash", "pHashChunkIndex")
     override private[operators] def screenRows(rows: => DataFrame,
@@ -7988,11 +7995,12 @@ object Multimodal {
   case object PHashFlip extends Hashed {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       m.select(col("doc_id"), pHashBothUdf(col("payload")).as("hs"))
-    protected def hashes(hashed: DataFrame): DataFrame = {
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame = {
       val both = hashed.filter(col("hs").isNotNull)
         .select(col("doc_id"), col("hs._1").as("ph"), col("hs._2").as("phf"))
-      both.select(col("doc_id"), col("ph").as("h"))
-        .unionByName(both.select(col("doc_id"), col("phf").as("h")))
+      def side(o: Int, h: String) = both.select(Seq(col("doc_id")) ++
+        (if (orient) Seq(lit(o).as("orient")) else Nil) :+ col(h).as("h"): _*)
+      side(0, "ph").unionByName(side(1, "phf"))
     }
   }
 
@@ -8002,9 +8010,8 @@ object Multimodal {
   case object PHashRot extends Hashed {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       m.select(col("doc_id"), pHashRotsUdf(col("payload")).as("hs"))
-    protected def hashes(hashed: DataFrame): DataFrame =
-      hashed.filter(col("hs").isNotNull)
-        .select(col("doc_id"), explode(col("hs")).as("h"))
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame =
+      orientationRows(hashed, orient)
   }
 
   /** The full DIHEDRAL-8 pass — every flip x rotation compound in one
@@ -8017,9 +8024,8 @@ object Multimodal {
   case object PHashDihedral extends Hashed with Screened {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       m.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("hs"))
-    protected def hashes(hashed: DataFrame): DataFrame =
-      hashed.filter(col("hs").isNotNull)
-        .select(col("doc_id"), explode(col("hs")).as("h"))
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame =
+      orientationRows(hashed, orient)
     def stamp = Postings.Stamp(PHashFpVersion, "pHash", "pHashChunkIndex")
     override private[operators] def probes(m: DataFrame): DataFrame =
       m.select(col("doc_id"), pHashDihedralUdf(col("payload")).as("ph"))
@@ -8045,7 +8051,7 @@ object Multimodal {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       m.select(col("doc_id"), (if (extended) pHashCropWindowsExtUdf
         else pHashCropWindowsUdf)(col("payload")).as("hs"))
-    protected def hashes(hashed: DataFrame): DataFrame =
+    private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame =
       hashed.filter(col("hs").isNotNull)
         .select(col("doc_id"), explode(col("hs")).as("wh"))
         .select(col("doc_id"), col("wh._1").as("win"), col("wh._2").as("h"))
@@ -8478,6 +8484,25 @@ object Multimodal {
   case class VideoShift(every: Int = 2) extends Coded {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       videoLandmarks(m, every).toDF()
+    override def keys = Seq("lm_a", "lm_b")
+  }
+
+  /** [[VideoShift]] in both orientations ([[videoLandmarksOriented]]:
+    * orient 0 as-is, 1 mirrored) — the flip-tolerant streaming video
+    * tier, a mirrored (even trimmed) re-upload's orient-1 landmarks
+    * land in its source's orient-0 buckets. */
+  case class VideoShiftFlip(every: Int = 2) extends Family {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoLandmarksOriented(m, every).toDF()
+    override def keys = Seq("lm_a", "lm_b")
+  }
+
+  /** [[VideoShiftFlip]] over the full dihedral-8 orientation set
+    * ([[videoLandmarksDihedral]]) — the trimmed AND rotated (or
+    * rotate+mirrored) re-upload, the streaming member of the m111 tier. */
+  case class VideoShiftDihedral(every: Int = 2) extends Family {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      videoLandmarksDihedral(m, every).toDF()
     override def keys = Seq("lm_a", "lm_b")
   }
 

@@ -667,7 +667,7 @@ object TextDedup {
   /** The per-document winnowing kernel — selected (1-based position,
     * fingerprint) pairs in selection order. Factored out so the batch
     * op ([[winnowFingerprints]]) and the streaming verdicts
-    * (`StreamingNearDup.winnowVerdicts`) derive fingerprints from the
+    * ([[StreamingNearDup.winnowVerdicts]]) derive fingerprints from the
     * IDENTICAL code path (pinned goldens on both sides). */
   private[operators] def winnowSelect(md: java.security.MessageDigest,
       text: String, k: Int, w: Int): Seq[(Int, String)] = {
@@ -754,7 +754,7 @@ object TextDedup {
   /** The per-document stateless-CDC kernel — (1-based start, token
     * count, chunk md5) triples. Factored out so the batch op
     * ([[cdcChunks]]) and the streaming verdicts
-    * (`StreamingNearDup.cdcChunkVerdicts`) chunk through the IDENTICAL
+    * ([[StreamingNearDup.cdcChunkVerdicts]]) chunk through the IDENTICAL
     * code path. */
   private[operators] def cdcChunksOf(md: java.security.MessageDigest,
       text: String, window: Int, minTokens: Int,

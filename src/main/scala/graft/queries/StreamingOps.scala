@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.{Multimodal, Sessionize}
+import graft.operators.{Multimodal, Sessionize, StreamingNearDup}
 import Util._
 import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
   AudioLandmark, AudioOnset, AudioOnsetRolling, AudioSpectralCode,
@@ -14,7 +14,8 @@ import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
   PHashCrop, PHashDihedral, PHashFlip, PHashRot, PeakLossy, VideoAffine,
   VideoAffineFrame, VideoAffineFrameSqueezeFan, VideoCrop, VideoFrames,
   VideoFramesDihedral, VideoFramesFlip, VideoPeak, VideoRotScale, VideoScale,
-  VideoScaleAspect, VideoScaleCanonical, VideoShift, VideoSkip}
+  VideoScaleAspect, VideoScaleCanonical, VideoShift, VideoShiftDihedral,
+  VideoShiftFlip, VideoSkip}
 
 /** Structured Streaming + stateful + multimodal surface.
   *
@@ -396,7 +397,7 @@ object StreamingOps extends QueryPack {
       // maxBucket=64: the shipped skew guard (hot boilerplate band
       // bucket stops growing). Far above any fixture bucket (42 docs
       // total), so decisions are provably unchanged — see BENCH_NOTES.
-      val verdicts = graft.operators.StreamingNearDup.bandVerdicts(
+      val verdicts = StreamingNearDup.bandVerdicts(
         stream, "doc_id", "text", maxBucket = 64)
       drain(s, "append")("st68_out" -> verdicts.toDF())
         .groupBy(col("doc_id"))
@@ -932,9 +933,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioSpectralVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st84_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(AudioSpectralCode)(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st84_out" -> hits)
       val nf = out.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("nf"))
       val nfSrc = out.select(col("doc_id").as("src_id"))
@@ -1059,9 +1060,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioSpectralLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st82_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioSpectralLandmark())(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st82_out" -> hits), Share(0.6))
     }),
 
     // ARBITRARY-OFFSET trim + fractional resample — ONSET-ANCHORED
@@ -1162,9 +1163,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioOnsetLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st89_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioOnset())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st89_out" -> hits), Share(0.6))
     }),
 
     // Streaming WINNOWING ingest dedup — the guaranteed-recall
@@ -1194,7 +1194,7 @@ object StreamingOps extends QueryPack {
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
-      val hits = graft.operators.StreamingNearDup.winnowVerdicts(
+      val hits = StreamingNearDup.winnowVerdicts(
         stream, "doc_id", "text", maxBucket = 64)
       voteDedup(drain(s, "append")("st90_out" -> hits.toDF()), AtLeast(3))
     }),
@@ -1220,7 +1220,7 @@ object StreamingOps extends QueryPack {
       val stream = s.readStream.schema(docsSchema)
         .option("maxFilesPerTrigger", "1").parquet(staged.toString)
         .repartition(col("doc_id"))
-      val hits = graft.operators.StreamingNearDup.cdcChunkVerdicts(
+      val hits = StreamingNearDup.cdcChunkVerdicts(
         stream, "doc_id", "text", nibbles = 2, maxBucket = 64)
       voteDedup(drain(s, "append")("st91_out" -> hits.toDF()), AtLeast(2))
     }),
@@ -1450,9 +1450,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioIntervalLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st92_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioInterval())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st92_out" -> hits), Share(0.6))
     }),
 
     // STREAMING noisy-floor audio dedup (the m119 tier in the
@@ -1477,10 +1476,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup
-        .audioOnsetLandmarkVerdictsRolling(
-          stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st93_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioOnsetRolling())(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st93_out" -> hits), Share(0.6))
     }),
 
     // FRAME-RATE-CONVERTED video dedup — SKIP-TOLERANT run-collapsed
@@ -1715,9 +1713,9 @@ object StreamingOps extends QueryPack {
         payloads(Seq(0L, 1L, 10L, 11L).toDS(), avi),
         payloads(s.range(1000000L, 1000004L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoPeakVerdicts(
-        stream, "doc_id", "payload", every = 1, maxBucket = 64)
-      voteDedup(drain(s, "append")("st102_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(VideoPeak(every = 1))(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st102_out" -> hits), Share(0.6))
     }),
 
     // ROTATED/MIRRORED + ARBITRARY-CROP compound image dedup — the
@@ -1835,7 +1833,7 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imagePeakLossyVerdicts(
+      val hits = StreamingNearDup.imagePeakLossyVerdicts(
         stream, "doc_id", "payload", maxDist = 1, maxBucket = 64)
       val out = drain(s, "append")("st105_out" -> hits.toDF())
       val nl = out.groupBy(col("doc_id"))
@@ -1942,9 +1940,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageScaleVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st106_out" -> hits.toDF()), Share(0.4))
+      val hits = StreamingNearDup.hits(ImageScale())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st106_out" -> hits), Share(0.4))
     }),
 
     // FULL similarity-compound image dedup — the dihedral ANGLE fan
@@ -2029,9 +2026,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageScaleVerdictsDihedral(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st107_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(ImageScaleDihedral())(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st107_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
       val nlSrc = out.filter(col("orient") === 0)
@@ -2188,9 +2185,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageRotScaleVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st110_out" -> hits.toDF()), Share(0.2))
+      val hits = StreamingNearDup.hits(ImageRotScale())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st110_out" -> hits), Share(0.2))
     }),
 
     // ANISOTROPIC resize (aspect-squeeze) dedup (m152): 4:3 <-> 16:9
@@ -2293,9 +2289,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageScaleVerdictsAspect(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st111_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(ImageScaleAspect())(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st111_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
       val nlSrc = out.filter(col("orient") === 0)
@@ -2392,9 +2388,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoRotScaleVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st112_out" -> hits.toDF()), Share(0.2))
+      val hits = StreamingNearDup.hits(VideoRotScale())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st112_out" -> hits), Share(0.2))
     }),
 
     // UNKNOWN STRONG (>= ~1.5:1) squeezes — the class the default
@@ -2603,9 +2598,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageAffineVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st120_out" -> hits.toDF()), Share(0.25))
+      val hits = StreamingNearDup.hits(ImageAffine())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st120_out" -> hits), Share(0.25))
     }),
 
     // FULL-AFFINE video dedup (m171 — the m169 whitening pooled per
@@ -3334,9 +3328,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoCanonicalVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st118_out" -> hits.toDF()), Share(0.3))
+      val hits = StreamingNearDup.hits(VideoScaleCanonical())(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st118_out" -> hits), Share(0.3))
     }),
 
     // ANAMORPHIC video dedup (m156): the aspect-hypothesis fan pooled
@@ -3404,9 +3398,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoScaleVerdictsAspect(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st113_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(VideoScaleAspect())(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st113_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
       val nlSrc = out.filter(col("orient") === 0)
@@ -3509,9 +3503,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoScaleVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st108_out" -> hits.toDF()), Share(0.4))
+      val hits = StreamingNearDup.hits(VideoScale())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st108_out" -> hits), Share(0.4))
     }),
 
     // STREAMING rotated + arbitrary-crop compound image dedup (the
@@ -3542,9 +3535,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imagePeakVerdictsDihedral(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st104_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(ImagePeakDihedral())(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st104_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(countDistinct(col("lm")).as("nl"))
       val nlSrc = out.filter(col("orient") === 0)
@@ -3890,9 +3883,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imagePeakVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st101_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(ImagePeak())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st101_out" -> hits), Share(0.6))
     }),
 
     // The thirds ladder as an INDEX member (extended=true on the m129
@@ -4023,9 +4015,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), avi),
         payloads(s.range(1000000L, 1000004L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoCropLandmarkVerdicts(
-        stream, "doc_id", "payload", every = 1, maxBucket = 64)
-      val out = drain(s, "append")("st97_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(VideoCrop(every = 1))(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st97_out" -> hits)
       val win0 = out.filter(col("win") === 0)
       val nl = win0.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val dup = win0
@@ -4108,10 +4100,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), avi),
         payloads(s.range(1000000L, 1000004L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoCropLandmarkVerdicts(
-        stream, "doc_id", "payload", every = 1, maxBucket = 64,
-        extended = true)
-      val out = drain(s, "append")("st99_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(VideoCrop(every = 1, extended = true))(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st99_out" -> hits)
       val win0 = out.filter(col("win") === 0)
       val nl = win0.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val dup = win0
@@ -4180,9 +4171,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 8), img),
         payloads(s.range(1000000L, 1000008L), img))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashCropVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      drain(s, "append")("st96_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHashCrop())(
+        stream, maxBucket = 64)
+      drain(s, "append")("st96_out" -> verdicts)
         .filter(col("win") === 0)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
@@ -4215,9 +4206,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashCropVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64, extended = true)
-      drain(s, "append")("st98_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHashCrop(extended = true))(
+        stream, maxBucket = 64)
+      drain(s, "append")("st98_out" -> verdicts)
         .filter(col("win") === 0)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
@@ -4337,9 +4328,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioChromaLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st95_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioChroma())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st95_out" -> hits), Share(0.6))
     }),
 
     // STREAMING quarter-tone metronomic audio dedup (div=24 on the
@@ -4360,9 +4350,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), wav),
         payloads(s.range(1000000L, 1000010L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioChromaLandmarkVerdicts(
-        stream, "doc_id", "payload", div = 24, maxBucket = 64)
-      voteDedup(drain(s, "append")("st100_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioChroma(div = 24))(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st100_out" -> hits), Share(0.6))
     }),
 
     // Incremental screen vs the persisted SKIP-LANDMARK video index —
@@ -4413,9 +4403,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), avi),
         payloads(s.range(1000000L, 1000010L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoSkipLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st94_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(VideoSkip())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st94_out" -> hits), Share(0.6))
     }),
 
     // WATERMARKED streaming exact dedup (the bounded-state form of
@@ -4700,9 +4689,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), avi),
         payloads(s.range(1000000L, 1000010L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoLandmarkVerdictsFlipTolerant(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st79_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(VideoShiftFlip())(stream, maxBucket = 64)
+      val out = drain(s, "append")("st79_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val nlSrc = nl.select(col("doc_id").as("src_id"), col("nl").as("nl_src"))
@@ -4744,9 +4732,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), avi),
         payloads(s.range(1000000L, 1000010L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoLandmarkVerdictsDihedral(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st83_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(VideoShiftDihedral())(
+        stream, maxBucket = 64)
+      val out = drain(s, "append")("st83_out" -> hits)
       val nl = out.filter(col("orient") === 0)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       val nlSrc = nl.select(col("doc_id").as("src_id"), col("nl").as("nl_src"))
@@ -4784,9 +4772,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 20), png),
         payloads(s.range(1000000L, 1000020L), png))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashVerdictsRotTolerant(
-        stream, "doc_id", "payload", maxBucket = 64)
-      drain(s, "append")("st80_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHashRot)(stream, maxBucket = 64)
+      drain(s, "append")("st80_out" -> verdicts)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -4813,9 +4800,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 20), png),
         payloads(s.range(1000000L, 1000020L), png))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashVerdictsDihedral(
-        stream, "doc_id", "payload", maxBucket = 64)
-      drain(s, "append")("st81_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHashDihedral)(
+        stream, maxBucket = 64)
+      drain(s, "append")("st81_out" -> verdicts)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -4841,9 +4828,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 20), png),
         payloads(s.range(1000000L, 1000020L), png))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashVerdictsFlipTolerant(
-        stream, "doc_id", "payload", maxBucket = 64)
-      drain(s, "append")("st78_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHashFlip)(
+        stream, maxBucket = 64)
+      drain(s, "append")("st78_out" -> verdicts)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -5066,11 +5053,10 @@ object StreamingOps extends QueryPack {
       // they share no state, so the drains overlap and the wall cost
       // is one tier's trigger latency, not the sum
       val video = drain(s, "append")(
-        "st77_v" -> graft.operators.StreamingNearDup.videoLandmarkVerdicts(
-          freshStream, "doc_id", "payload", maxBucket = 64).toDF(),
-        "st77_a" -> graft.operators.StreamingNearDup.audioLandmarkVerdicts(
-          Multimodal.videoAudioTracks(freshStream), "doc_id", "payload",
-          maxBucket = 64).toDF())
+        "st77_v" -> StreamingNearDup.hits(VideoShift())(freshStream,
+          maxBucket = 64),
+        "st77_a" -> StreamingNearDup.hits(AudioLandmark())(
+          Multimodal.videoAudioTracks(freshStream), maxBucket = 64))
       // per-tier scoring over its sink (the st74/st75 form), then fuse
       val ids = s.range(0, 4).union(s.range(20, 24))
         .select(col("id").as("doc_id"))
@@ -5118,9 +5104,9 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 6), img),
         payloads(s.range(1000000L, 1000006L), img))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.imageCanonicalVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st117_out" -> hits.toDF()), Share(0.3))
+      val hits = StreamingNearDup.hits(ImageScaleCanonical())(
+        stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st117_out" -> hits), Share(0.3))
     }),
 
     // STREAMING joint fusion at the ROT-constellation seam (st116 —
@@ -5153,11 +5139,10 @@ object StreamingOps extends QueryPack {
         payloads(s.range(20, 24), mk))
       def freshStream = mediaStream(s, staged)
       val video = drain(s, "append")(
-        "st116_v" -> graft.operators.StreamingNearDup.videoRotScaleVerdicts(
-          freshStream, "doc_id", "payload", maxBucket = 64).toDF(),
-        "st116_a" -> graft.operators.StreamingNearDup.audioLandmarkVerdicts(
-          Multimodal.videoAudioTracks(freshStream), "doc_id", "payload",
-          maxBucket = 64).toDF())
+        "st116_v" -> StreamingNearDup.hits(VideoRotScale())(freshStream,
+          maxBucket = 64),
+        "st116_a" -> StreamingNearDup.hits(AudioLandmark())(
+          Multimodal.videoAudioTracks(freshStream), maxBucket = 64))
       val ids = s.range(0, 4).union(s.range(20, 24))
         .select(col("id").as("doc_id"))
       val v = voteDups(video, Share(0.2))._2
@@ -5732,9 +5717,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 14), wav),
         payloads(s.range(1000000L, 1000014L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st74_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(AudioLandmark())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st74_out" -> hits), Share(0.6))
     }),
 
     // Streaming VIDEO dedup under TIME SHIFT: batch 1 delivers 10 base
@@ -5750,9 +5734,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 10), avi),
         payloads(s.range(1000000L, 1000010L), avi))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.videoLandmarkVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      voteDedup(drain(s, "append")("st75_out" -> hits.toDF()), Share(0.6))
+      val hits = StreamingNearDup.hits(VideoShift())(stream, maxBucket = 64)
+      voteDedup(drain(s, "append")("st75_out" -> hits), Share(0.6))
     }),
 
     // VIDEO MJPEG path: same frame pixels as m81 but each frame goes
@@ -5801,9 +5784,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 20), png),
         payloads(s.range(1000000L, 1000020L), png))
       val stream = mediaStream(s, staged)
-      val verdicts = graft.operators.StreamingNearDup.pHashVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      drain(s, "append")("st72_out" -> verdicts.toDF())
+      val verdicts = StreamingNearDup.verdicts(PHash)(stream, maxBucket = 64)
+      drain(s, "append")("st72_out" -> verdicts)
         .groupBy(col("doc_id"))
         .agg(min(col("dup_src")).as("dup_src"))
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
@@ -5828,9 +5810,8 @@ object StreamingOps extends QueryPack {
         payloads(s.range(0, 20), wav),
         payloads(s.range(1000000L, 1000020L), wav))
       val stream = mediaStream(s, staged)
-      val hits = graft.operators.StreamingNearDup.audioVerdicts(
-        stream, "doc_id", "payload", maxBucket = 64)
-      val out = drain(s, "append")("st73_out" -> hits.toDF())
+      val hits = StreamingNearDup.hits(AudioCode)(stream, maxBucket = 64)
+      val out = drain(s, "append")("st73_out" -> hits)
       // all branches re-alias their key before any join: the memory
       // sink's view resolves to the SAME attribute ids on every
       // s.table() call, and a raw self-join fails analysis

@@ -39,6 +39,9 @@ object PlanDump extends AdaptiveSparkPlanHelper {
     // lambda variables are numbered from a JVM-wide counter, so every
     // lambda an earlier query built shifts the names in later plans
     """(lambda \w+?)_\d+""" -> "$1_",
+    // extracted common subexpressions too: every one an earlier query
+    // extracted shifts the numbers in later plans
+    """_common_expr_\d+""" -> "_common_expr_",
     // query-stage and whole-stage-codegen ids follow stage completion
     // order when a plan was already executed adaptively
     """(QueryStage) \d+""" -> "$1",

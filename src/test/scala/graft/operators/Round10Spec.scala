@@ -13,11 +13,11 @@ import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
   VideoFrames, VideoFramesDihedral, VideoFramesFlip, VideoPeak, VideoRotScale,
   VideoScale, VideoScaleAspect, VideoScaleCanonical, VideoSkip}
 
-/** Round-10 additions: the hot-bucket state caps the round-9 verdict
-  * named for the VERDICT-emitting streaming family (st68/st72/st78/
-  * st80) — foldProbe bounds both state and per-arrival scan cost while
-  * keeping every planted decision — plus the packed band-signature
-  * state and the orientation-aware ChunkVerdictO record shape. */
+/** Round-10 additions: the hot-bucket state cap the round-9 verdict
+  * named for the VERDICT-emitting streaming operators (st68; the
+  * pHash tiers' cap tests are StreamingNearDupSpec's) — foldProbe
+  * bounds both state and per-arrival scan cost while keeping every
+  * planted decision — plus the packed band-signature state. */
 class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -134,74 +134,6 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // retains the LOWEST ids, exactly what a min-id verdict consults
     (101L until 130L).foreach { id =>
       assert(capped(id).contains(100L), s"doc $id: ${capped(id)}")
-    }
-  }
-
-  // ---- st72 pHashVerdicts: capped decisions match uncapped -----------
-
-  test("pHashVerdicts maxBucket keeps planted decisions amid a hot identical-image bucket") {
-    val png = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticPng(id)
-      else if (id < 200) Multimodal.syntheticPngVariant(id - 194) // ids 194..199 -> variants of 0..5
-      else Multimodal.syntheticPng(999)) // 30 identical copies: the hot bucket
-    val media = spark.range(0, 6).union(spark.range(194, 230))
-      .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    def decisions(maxBucket: Int): Map[Long, Option[Long]] =
-      StreamingNearDup.pHashVerdicts(media, "doc_id", "payload",
-          maxBucket = maxBucket)
-        .collect().groupBy(_.doc_id)
-        .map { case (id, vs) =>
-          (id, vs.flatMap(_.dup_src) match {
-            case Array() => None
-            case xs => Some(xs.min)
-          })
-        }
-    val capped = decisions(maxBucket = 4)
-    val uncapped = decisions(maxBucket = 0)
-    assert(capped == uncapped, s"cap changed decisions:\n$capped\nvs\n$uncapped")
-    (0L until 6L).foreach(id => assert(capped(id).isEmpty, s"base $id"))
-    // edited variants drift: most land on their source, some pass
-    // hamming 3 and are kept (the m85 drift precedent) — what the cap
-    // must preserve is the decision, landed or not (asserted above)
-    val landed = (194L until 200L).count(id => capped(id).contains(id - 194L))
-    assert(landed >= 4, s"only $landed/6 variants landed")
-    (201L until 230L).foreach { id =>
-      assert(capped(id).contains(200L), s"hot copy $id: ${capped(id)}")
-    }
-  }
-
-  // ---- st78/st80: ChunkVerdictO shape + capped decisions -------------
-
-  test("pHashVerdictsFlipTolerant: unique (doc, orient, chunk) keys, cap keeps decisions") {
-    val png = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticPng(id)
-      else if (id < 200) Multimodal.syntheticPngFlip(id - 194)
-      else Multimodal.syntheticPng(999))
-    val media = spark.range(0, 6).union(spark.range(194, 230))
-      .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    def run(maxBucket: Int): Seq[ChunkVerdictO] =
-      StreamingNearDup.pHashVerdictsFlipTolerant(media, "doc_id", "payload",
-        maxBucket = maxBucket).collect().toSeq
-    val capped = run(maxBucket = 4)
-    // the record shape the round-9 advice asked for: no two rows share
-    // a full (doc_id, orient, chunk) key
-    val keys = capped.map(v => (v.doc_id, v.orient, v.chunk))
-    assert(keys.distinct.size == keys.size, "duplicate (doc,orient,chunk) keys")
-    def decide(vs: Seq[ChunkVerdictO]): Map[Long, Option[Long]] =
-      vs.groupBy(_.doc_id).map { case (id, xs) =>
-        (id, xs.flatMap(_.dup_src) match {
-          case Seq() => None
-          case ys => Some(ys.min)
-        })
-      }
-    val cd = decide(capped)
-    val ud = decide(run(maxBucket = 0))
-    assert(cd == ud, s"cap changed decisions:\n$cd\nvs\n$ud")
-    (194L until 200L).foreach { id =>
-      assert(cd(id).contains(id - 194L), s"mirrored repost $id: ${cd(id)}")
-    }
-    (201L until 230L).foreach { id =>
-      assert(cd(id).contains(200L), s"hot copy $id: ${cd(id)}")
     }
   }
 
@@ -641,8 +573,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // ...but not the rate-free positionless landmarks
     assert(pairs(Multimodal.pairs(AudioSpectralLandmark())(media)) == planted)
     // streaming form with the shipped cap: every re-delivery lands
-    val hits = StreamingNearDup.audioSpectralLandmarkVerdicts(
-      media, "doc_id", "payload", maxBucket = 64).toDF().cache()
+    val hits = StreamingNearDup.hits(AudioSpectralLandmark())(media,
+      maxBucket = 64).cache()
     val nl = hits.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
       .as[(Long, Long)].collect().toMap
     val emitted = hits.select(explode(col("hits")).as("src"), col("doc_id"))
@@ -809,11 +741,11 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       "mirror-only probes must miss mirror+rotate compounds")
     // streaming form: compound reposts dedup onto their sources with
     // the shipped cap on
-    val v = StreamingNearDup.pHashVerdictsDihedral(
-        media, "doc_id", "payload", maxBucket = 64)
-      .collect().groupBy(_.doc_id)
+    val v = StreamingNearDup.verdicts(PHashDihedral)(media, maxBucket = 64)
+      .select(col("doc_id"), col("dup_src")).as[(Long, Option[Long])]
+      .collect().groupBy(_._1)
       .map { case (id, xs) =>
-        (id, xs.flatMap(_.dup_src) match {
+        (id, xs.flatMap(_._2) match {
           case Array() => None
           case ys => Some(ys.min)
         })
@@ -824,34 +756,4 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("pHashVerdictsRotTolerant: unique (doc, orient, chunk) keys, cap keeps decisions") {
-    val png = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticPng(id)
-      else if (id < 200) Multimodal.syntheticPngRot(id - 194, ((id % 3) + 1).toInt)
-      else Multimodal.syntheticPng(999))
-    val media = spark.range(0, 6).union(spark.range(194, 230))
-      .select(col("id").as("doc_id"), png(col("id")).as("payload"))
-    def run(maxBucket: Int): Seq[ChunkVerdictO] =
-      StreamingNearDup.pHashVerdictsRotTolerant(media, "doc_id", "payload",
-        maxBucket = maxBucket).collect().toSeq
-    val capped = run(maxBucket = 4)
-    val keys = capped.map(v => (v.doc_id, v.orient, v.chunk))
-    assert(keys.distinct.size == keys.size, "duplicate (doc,orient,chunk) keys")
-    def decide(vs: Seq[ChunkVerdictO]): Map[Long, Option[Long]] =
-      vs.groupBy(_.doc_id).map { case (id, xs) =>
-        (id, xs.flatMap(_.dup_src) match {
-          case Seq() => None
-          case ys => Some(ys.min)
-        })
-      }
-    val cd = decide(capped)
-    val ud = decide(run(maxBucket = 0))
-    assert(cd == ud, s"cap changed decisions:\n$cd\nvs\n$ud")
-    (194L until 200L).foreach { id =>
-      assert(cd(id).contains(id - 194L), s"rotated repost $id: ${cd(id)}")
-    }
-    (201L until 230L).foreach { id =>
-      assert(cd(id).contains(200L), s"hot copy $id: ${cd(id)}")
-    }
-  }
 }

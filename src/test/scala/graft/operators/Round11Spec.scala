@@ -70,10 +70,10 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
       "aligned spectral codes must miss")
     // streaming form: the trimmed re-deliveries land on their masters
     // with the shipped cap on (the st89 verdict family)
-    val hits = StreamingNearDup.audioOnsetLandmarkVerdicts(
-        media, "doc_id", "payload", maxBucket = 64)
-      .collect().groupBy(_.doc_id)
-      .map { case (id, xs) => (id, xs.flatMap(_.hits)) }
+    val hits = StreamingNearDup.hits(AudioOnset())(media, maxBucket = 64)
+      .select(col("doc_id"), col("hits")).as[(Long, Seq[Long])]
+      .collect().groupBy(_._1)
+      .map { case (id, xs) => (id, xs.flatMap(_._2)) }
     // a re-upload carries ~10 joint-code landmarks; >= 7 shared with
     // its master clears the 0.6 metric with margin
     (20L until 24L).foreach { id =>
@@ -85,7 +85,7 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     val ungated = udf((id: Long) => Multimodal.syntheticWavTones(id, 8000))
     val flat = spark.range(0, 2)
       .select(col("id").as("doc_id"), ungated(col("id")).as("payload"))
-    assert(Multimodal.spectralOnsetLandmarks(flat).count() == 0L)
+    assert(AudioOnset().landmarks(flat).count() == 0L)
   }
 
   test("adaptive onset threshold catches re-leveled re-uploads the absolute tier cannot see") {
@@ -103,7 +103,7 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     // the m115 tier emits ZERO landmarks for them — not a low score, a
     // structural miss
     val quiet = media.filter(col("doc_id") >= 20)
-    assert(Multimodal.spectralOnsetLandmarks(quiet).count() == 0L,
+    assert(AudioOnset().landmarks(quiet).count() == 0L,
       "absolute threshold must find no onsets in the quiet re-uploads")
     // peak-relative threshold restores the tier: every planted pair
     // lands (spectral code bits are amplitude-ordering, so the

@@ -36,9 +36,8 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("threshold onset tiers find ZERO onsets on noisy-floor audio (structural miss)") {
     implicit val s: SparkSession = spark
     val docs = noisyCorpus
-    val abs = Multimodal.spectralOnsetLandmarks(docs).count()
-    val frac = Multimodal.spectralOnsetLandmarks(docs,
-      thresholdFrac = 0.125).count()
+    val abs = AudioOnset().landmarks(docs).count()
+    val frac = AudioOnset(thresholdFrac = 0.125).landmarks(docs).count()
     info(s"absolute-tier landmarks: $abs, peak-frac landmarks: $frac")
     assert(abs == 0, s"absolute tier found $abs landmarks on noisy floor")
     assert(frac == 0, s"peak-frac tier found $frac landmarks on noisy floor")

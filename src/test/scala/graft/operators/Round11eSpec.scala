@@ -38,8 +38,8 @@ class Round11eSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("interval tier is DEGENERATE on a metronomic corpus (one shared landmark, zero discrimination)") {
     implicit val s: SparkSession = spark
-    val lms = Multimodal.onsetIntervalLandmarks(corpus).collect()
-    val values = lms.map(_.lm).toSet
+    val lms = AudioInterval().landmarks(corpus).collect()
+    val values = lms.map(_.getAs[Long]("lm")).toSet
     info(s"distinct interval landmarks across 20 docs: ${values.size}")
     assert(values.size == 1,
       s"metronomic corpus should collapse to the all-ratios-1 landmark, got $values")

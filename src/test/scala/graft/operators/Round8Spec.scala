@@ -181,87 +181,6 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs == (0L until 10L).map(i => (i, i + 10)).toSet)
   }
 
-  test("audioLandmarkVerdicts maxBucket keeps planted trim decisions") {
-    import Round8Fixtures.halfSilentWav
-    import spark.implicits._
-    implicit val sp: SparkSession = spark
-    // planted trims + 30 half-silent tracks whose shared (0,0) silence
-    // landmark would otherwise bucket the whole corpus together
-    val wav = udf((id: Long) =>
-      if (id < 8) Multimodal.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
-      else if (id < 16) Multimodal.syntheticWavTexTrim(id - 8,
-        (320 + ((id - 8) % 8) * 64 - 128).toInt, skip = 128)
-      else halfSilentWav(id, 1024))
-    val media = spark.range(0, 46)
-      .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val planted = (8L until 16L).map(i => (i, i - 8)).toMap
-    def decisions(maxBucket: Int): (Map[Long, Long], Long) = {
-      val hits = StreamingNearDup.audioLandmarkVerdicts(
-        media, "doc_id", "payload", maxBucket = maxBucket).toDF().cache()
-      val nl = hits.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-        .as[(Long, Long)].collect().toMap
-      val emitted = hits.select(explode(col("hits")).as("src"),
-        col("doc_id")).as[(Long, Long)].collect()
-      hits.unpersist()
-      val dups = emitted.groupBy(identity).map { case ((src, d), xs) =>
-        (d, src, xs.length) }
-        .filter { case (d, src, c) =>
-          c.toDouble / math.min(nl(d), nl(src)) >= 0.6 }
-        .groupBy(_._1).map { case (d, xs) => (d, xs.map(_._2).min) }
-      (dups, emitted.length.toLong)
-    }
-    val (capped, cappedEmits) = decisions(maxBucket = 4)
-    val (uncapped, uncappedEmits) = decisions(maxBucket = 0)
-    assert(uncapped == planted, s"uncapped: $uncapped")
-    assert(capped == planted, s"capped: $capped")
-    assert(cappedEmits < uncappedEmits,
-      s"cap must bound emission: $cappedEmits vs $uncappedEmits")
-  }
-
-  // ---- st73 streaming audio dedup: bucket-cap skew guard -------------
-
-  test("audioVerdicts maxBucket bounds hot-bucket emission, decisions unchanged") {
-    import Round8Fixtures.halfSilentWav
-    import spark.implicits._
-    // planted: 6 textured tracks + their re-leveled copies; 30 unrelated
-    // half-silent tracks whose silent frames all share (frame_idx, 0)
-    // buckets — the hot key the cap exists for. Batch mode: state folds
-    // each bucket's rows in one id-ordered pass, so decisions match the
-    // id-monotonic streaming delivery by the operator's own contract.
-    val wav = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else if (id < 12) Multimodal.syntheticWavTex(id - 6,
-        (160 + ((id - 6) % 13) * 16).toInt, num = 9, den = 10)
-      else halfSilentWav(id, 1024))
-    val media = spark.range(0, 42)
-      .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    def decisions(maxBucket: Int): (Map[Long, Long], Long) = {
-      val hits = StreamingNearDup
-        .audioVerdicts(media, "doc_id", "payload", maxBucket = maxBucket)
-        .toDF().cache()
-      val nf = hits.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
-        .as[(Long, Long)].collect().toMap
-      val emitted = hits.select(explode(col("hits")).as("src"),
-        col("doc_id")).as[(Long, Long)].collect()
-      hits.unpersist()
-      val dups = emitted.groupBy(identity).map { case ((src, d), xs) =>
-        (d, src, xs.length) }
-        .filter { case (d, src, c) =>
-          c.toDouble / math.min(nf(d), nf(src)) >= 0.8 }
-        .groupBy(_._1).map { case (d, xs) => (d, xs.map(_._2).min) }
-      (dups, emitted.length.toLong)
-    }
-    val (capped, cappedEmits) = decisions(maxBucket = 4)
-    val (uncapped, uncappedEmits) = decisions(maxBucket = 0)
-    val planted = (6L until 12L).map(i => (i, i - 6)).toMap
-    assert(uncapped == planted, s"uncapped: $uncapped")
-    assert(capped == planted, s"capped: $capped")
-    // 30 half-silent tracks share every silent-frame bucket: uncapped
-    // emission is quadratic in members, the cap holds it near-linear
-    assert(cappedEmits < uncappedEmits / 4,
-      s"cap did not bound emission: $cappedEmits vs $uncappedEmits")
-  }
-
   // ---- m81/m82 video container tier ----------------------------------
 
   test("aviFrames round-trips DIB frames and parses MJPEG within tolerance") {
