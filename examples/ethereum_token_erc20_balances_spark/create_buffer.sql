@@ -4,6 +4,12 @@
 -- token → UNION ALL + dedup per (wallet, token, block) → one
 -- balanceOf() call per group. raw_balance is canonical U256 binary
 -- (the reference's UInt256); balance is the Float64 convenience.
+--
+-- Every call carries #fail-on-retryable-error=true: a transport error
+-- (io, timeout, HTTP 5xx or 429, after the transport's own retries)
+-- fails the batch, so a rerun fetches the row instead of publishing a
+-- permanent null balance. A call the contract reverts, or a token
+-- without symbol()/decimals(), still yields null.
 create temporary table buffer_{{.START}}_{{.END}} as (
     with logs as (
         select
@@ -62,7 +68,7 @@ create temporary table buffer_{{.START}}_{{.END}} as (
                     'function symbol()(string)',
                     '',
                     -1L,
-                    '{{.RPC_ENDPOINT}}'
+                    '{{.RPC_ENDPOINT}}#fail-on-retryable-error=true'
                 ),
                 '$.value.arg0'
             ) as symbol,
@@ -72,7 +78,7 @@ create temporary table buffer_{{.START}}_{{.END}} as (
                     'function decimals()(uint8)',
                     '',
                     -1L,
-                    '{{.RPC_ENDPOINT}}'
+                    '{{.RPC_ENDPOINT}}#fail-on-retryable-error=true'
                 ),
                 '$.value.arg0'
             ) as int) as decimals
@@ -88,7 +94,7 @@ create temporary table buffer_{{.START}}_{{.END}} as (
                     'function balanceOf(address)(uint256)',
                     to_json(array(g.wallet_address)),
                     g.block_number,
-                    '{{.RPC_ENDPOINT}}'
+                    '{{.RPC_ENDPOINT}}#fail-on-retryable-error=true'
                 ),
                 '$.value.arg0'
             ) as raw_balance_str

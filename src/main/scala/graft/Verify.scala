@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. A query that throws
+  * is logged and the dump goes on; after oracle_sql.json is written,
+  * the failed names are listed and the exit status is 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -28,6 +30,7 @@ object Verify {
     // signal (see LogNoise)
     LogNoise.muteUnpersistWarning()
     new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name) && !oracleOnly) {
         // scoped release: each query's Materialize.eager checkpoints die
@@ -38,6 +41,7 @@ object Verify {
         }
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed += name
         }
       }
     }
@@ -57,5 +61,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    val names = failed.result()
+    if (names.nonEmpty) {
+      System.err.println(s"[verify] ${names.size} queries failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -123,6 +123,9 @@ object PipelineRunner {
     * Sequencer serializes only the commit step. */
   def run(spark: SparkSession, defn: Definition, conf: Config): Result = {
     val t0 = System.nanoTime()
+    // before resume: on a session made for this run, resume runs its
+    // first query, so the setting still takes effect
+    graft.Sessions.shareCode(spark)
     // resume runs on a forced start too: it also drops what a crashed
     // run staged and never published
     val resumed = defn.resume(spark)

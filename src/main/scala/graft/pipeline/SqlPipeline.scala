@@ -443,12 +443,18 @@ object SqlPipeline {
     * SparkContext + cache, isolated temp views and conf) so concurrent
     * pipelines can't collide on the `source`/`buffer_N_M` view names or
     * on scoped per-stage settings — the Spark analog of the reference
-    * giving every pipeline its own ClickHouse connection context. */
+    * giving every pipeline its own ClickHouse connection context.
+    *
+    * The child does NOT get its own class loader: it runs on the
+    * application's shared one (`Sessions.shareCode`, set before the
+    * setup files run the session's first query), so the pipeline's
+    * generated code compiles once per JVM rather than once per run, and
+    * session-scoped artifacts are not isolated between pipelines. */
   def run(spark: SparkSession, dir: String, vars: Map[String, String],
       overrides: PipelineRunner.Config => PipelineRunner.Config = identity,
       templatePath: Option[String] = None)
       : PipelineRunner.Result = {
-    val session = spark.newSession()
+    val session = graft.Sessions.shareCode(spark.newSession())
     // function registrations are session-state; re-register in the child
     graft.functions.EvmFunctions.registerAll(session)
     graft.functions.HexExpressions.registerAll(session)

@@ -67,9 +67,11 @@ object StreamingOps extends QueryPack {
     * CORRECTNESS runner already executes at 4), so only wall clock
     * changes. Memory-sink tables register in the clone's catalog; each
     * gate does ALL its work through the clone, which also isolates
-    * concurrently-running lanes' catalogs. */
+    * concurrently-running lanes' catalogs. The clone and its streams
+    * run on the shared class loader (`Sessions.shareCode`), so a
+    * gate's generated code compiles once per JVM, not once per run. */
   private def streamSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
+    val ss = graft.Sessions.shareCode(s.newSession())
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
   }

@@ -59,9 +59,13 @@ object PlanDump extends AdaptiveSparkPlanHelper {
       case Some(f) => val pats = f.split(","); name => pats.exists(name.contains)
       case None => _ => true
     }
+    // whole scan locations: Spark cuts them at 100 characters by
+    // default, and a cut that lands in a temp-dir name moves with the
+    // name's digit count, before the mask can remove them
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.maxMetadataStringLength", "100000")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.LogNoise.muteUnpersistWarning()

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import graft.evm.Rpc
 
 /** Config-driven pipeline: yaml + Spark-SQL templates run end-to-end
   * with no compiled pipeline code — the reference's `pipeline <url>` UX
@@ -199,6 +202,43 @@ class SqlPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("wallet_address", "token_address", "block_number"),
       Some("timestamp")).read(spark)
     assertDigest(got, 42, "ba4dbf284601fdb25894873578deb92996d8dc7629545fe43ff854429f7eee0e")
+  }
+
+  test("erc20 balances: a transport error fails the batch, a revert yields null") {
+    register()
+    val logsPath = logsSink("bal-err-src")
+    // the erc20 config over a transport whose every call throws `error`
+    def balances(name: String, error: Rpc.RpcException): (Try[PipelineRunner.Result], String) = {
+      val url = s"test://erc20-$name"
+      Rpc.register(url, new Rpc.Transport {
+        def call(method: String, params: List[Any]): String = throw error
+      })
+      val sinkPath = tmp(s"bal-err-$name")
+      (Try(SqlPipeline.run(spark, dirOf("ethereum_token_erc20_balances_spark"),
+        Map("SOURCE_PATH" -> logsPath, "SINK_PATH" -> sinkPath, "RPC_ENDPOINT" -> url))),
+        sinkPath)
+    }
+    // io, timeout, 5xx or 429: the batch fails and publishes nothing, so
+    // a rerun fetches the balances instead of keeping null rows
+    val (down, downPath) = balances("down",
+      new Rpc.RpcException("HTTP 503 from test", retryable = true))
+    val causes = Iterator.iterate(down.failed.get)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("HTTP 503 from test")),
+      causes)
+    val published = java.nio.file.Paths.get(downPath)
+    assert(!java.nio.file.Files.exists(published) || {
+      val files = java.nio.file.Files.walk(published)
+      try !files.iterator().asScala.exists(_.toString.endsWith(".parquet"))
+      finally files.close()
+    })
+    // a revert is an answer, not an outage: the rows land with null balances
+    val (reverted, revertPath) = balances("revert", new Rpc.RpcException("execution reverted"))
+    assert(reverted.get.items > 0)
+    val rows = SinkTable(revertPath, Seq("wallet_address", "token_address", "block_number"))
+      .read(spark)
+    assert(rows.count() == 42)
+    assert(rows.filter(col("raw_balance").isNotNull || col("token_symbol").isNotNull)
+      .count() == 0)
   }
 
   test("table_to_daily_parquet_file example exports day partitions up to yesterday") {
