@@ -15,6 +15,7 @@ object SparkEntry {
     graft.queries.TextOps,
     graft.queries.SimilarityOps,
     graft.queries.EvmOps,
+    graft.queries.MultimodalOps,
     graft.queries.StreamingOps
   )
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
@@ -188,6 +189,14 @@ object StreamingNearDup {
   def hits(f: Family)(media: DataFrame, maxBucket: Int = 0): DataFrame =
     bucketHits(f.landmarks(media), f.keys, maxBucket)
 
+  /** The [[hits]] fold's state encoder, built and resolved once per JVM:
+    * Spark names the state deserializer's `MapObjects` lambda variable
+    * from a JVM-wide counter when it resolves an encoder, so resolving
+    * per call made each start of a gate generate new state-projection
+    * source and compile it again. A resolved encoder resolves to itself. */
+  private lazy val memberState: Encoder[List[Long]] =
+    ExpressionEncoder[List[Long]]().resolveAndBind()
+
   private def bucketHits(rows: DataFrame, keys: Seq[String],
       maxBucket: Int): DataFrame = {
     import rows.sparkSession.implicits._
@@ -209,7 +218,7 @@ object StreamingNearDup {
           state.update(seen)
           sorted.iterator.zip(hs.iterator)
             .map { case (r, h) => Row.fromSeq(r.toSeq :+ h) }
-        })(implicitly[Encoder[List[Long]]], Encoders.row(out))
+        })(memberState, Encoders.row(out))
   }
 
   /** Streaming near-dup verdicts of `media` under hash family `f`: the

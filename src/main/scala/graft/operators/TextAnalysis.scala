@@ -861,12 +861,12 @@ object TextAnalysis {
     * share. Round 17 (guide §1.2 "per-task work", §4.2 batch
     * kernels): the former posexplode + hash-agg shape materialized
     * one generator row PER TOKEN before the partial aggregation and
-    * was measured at 91% of the whole batched induction (DiagBpe:
-    * count 6.9 s of 7.2 s warm at sf0.1, 5 rounds). This kernel
+    * was measured at 91% of the whole batched induction (count
+    * 6.9 s of 7.2 s warm at sf0.1, 5 rounds). This kernel
     * keeps the same partial-aggregation semantics — a per-partition
     * HashMap in a tight loop, drained at a bound, partials summed by
     * the same groupBy — and re-measures at ~6x faster per round with
-    * the head bit-identical (the diag asserts parity every round).
+    * the head bit-identical.
     * Java's `split(" ", -1)` matches Spark's `split(text, ' ')`
     * (same regex, same -1 limit), so pair sets agree on every input
     * including empty strings and double spaces.
@@ -879,11 +879,8 @@ object TextAnalysis {
     * (the round-17 shape buffered every drained partial in an eager
     * builder until the partition was fully consumed, so its bound
     * capped nothing). Duplicates across chunks sum out in the
-    * groupBy below.
-    *
-    * `private[operators]` so DiagBpe times THIS kernel, not a copy
-    * with a drifted flush threshold. */
-  private[operators] def adjacentPairHead(cur: DataFrame, k: Int)
+    * groupBy below. */
+  private def adjacentPairHead(cur: DataFrame, k: Int)
       : Array[org.apache.spark.sql.Row] = {
     val spark = cur.sparkSession
     import spark.implicits._

@@ -105,7 +105,7 @@ object EvmOps extends QueryPack {
     }),
 
     // end-to-end micro-batch pipeline: fetch → ordered commit → dedup read
-    // (the blocks config, the same run as e61).
+    // (the blocks config; e61 runs it again over its own sink).
     "e56_blocks_pipeline" -> ((s, _) => {
       val path = tmpSink("blocks")
       SqlPipeline.run(s, exampleDir("ethereum_blocks_spark"),
@@ -117,17 +117,26 @@ object EvmOps extends QueryPack {
     }),
 
     // config-driven pipeline: yaml + Spark-SQL templates, no compiled
-    // pipeline code (reference `pipeline <url>` UX).
+    // pipeline code (reference `pipeline <url>` UX), restarted: the
+    // blocks config runs twice into one sink, the second run a
+    // `forceStart` re-ingest from block 0 (the re-run a fixed transform
+    // needs). Every block then has two published versions, and the
+    // last-write-wins read must return the rows of one run.
     "e61_config_pipeline" -> ((s, _) => {
       graft.functions.EvmFunctions.registerAll(s)
       graft.functions.HexExpressions.registerAll(s)
       val path = java.nio.file.Files.createTempDirectory("graft-q-sqlpipe")
         .resolve("sink").toString
-      graft.pipeline.SqlPipeline.run(s, exampleDir("ethereum_blocks_spark"),
+      def run(start: Option[Long]) = graft.pipeline.SqlPipeline.run(s,
+        exampleDir("ethereum_blocks_spark"),
         Map("RPC_ENDPOINT" -> "fake://chain?tip=20", "SINK_PATH" -> path),
-        c => c.copy(maxBatchSize = 7, workers = 2))
-      SinkTable(path, Seq("number"), Some("timestamp")).read(s)
-        .select(col("number"), col("gas_used"), col("size"))
+        c => c.copy(maxBatchSize = 7, workers = 2, forceStart = start))
+      val first = run(None)
+      val again = run(Some(0L))
+      val sink = SinkTable(path, Seq("number"), Some("timestamp"))
+      require(again.items == first.items && sink.readRaw(s).count() == 2 * first.items,
+        s"the re-ingest published ${again.items} of ${first.items} blocks")
+      sink.read(s).select(col("number"), col("gas_used"), col("size"))
         .orderBy(col("number"))
     }),
 

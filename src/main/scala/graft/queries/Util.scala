@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -47,6 +48,11 @@ object Util {
   /** Exact sum of a product of two 2-decimal columns. */
   def dsumProd(a: Column, b: Column): Column =
     sum(a.cast(dec) * b.cast(dec)).cast("double")
+
+  /** `(doc_id, payload)` rows: each `id` of `ids` with the payload a
+    * fixture's UDF gives it (see [[graft.fixtures.Fixture.udf]]). */
+  def mediaRows(ids: Dataset[_], media: UserDefinedFunction): DataFrame =
+    ids.select(col("id").as("doc_id"), media(col("id")).as("payload"))
 
   /** A query pack: named queries + their DuckDB oracle SQL. */
   trait QueryPack {

@@ -86,4 +86,20 @@ class SessionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again == 0, s"the second start compiled $again classes")
     assert(digest(second) == digest(first))
   }
+
+  test("a media st gate started again compiles nothing") {
+    // st89 folds its landmark buckets through StreamingNearDup.hits,
+    // whose List[Long] state encoder is resolved once per JVM. The gate
+    // call stages and drains the stream; the vote over the drained sink
+    // runs at collect, and adaptive execution may pick its broadcast
+    // side by which query stage finishes first, so only the start is
+    // counted
+    val gate = SparkEntry.queries("st89_stream_onset_landmark_dedup")
+    val first = gate(spark, "").collect()
+    val (voted, again) = compiles(gate(spark, ""))
+    val second = voted.collect()
+    assert(first.nonEmpty)
+    assert(again == 0, s"the second start compiled $again classes")
+    assert(digest(second) == digest(first))
+  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -141,7 +142,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedupAgainstAudioIndex refuses an unstamped or stale-version index") {
     implicit val sp: SparkSession = spark
-    val wav = udf((id: Long) => Multimodal.syntheticWavTex(id, 256))
+    val wav = udf((id: Long) => Media.syntheticWavTex(id, 256))
     val media = spark.range(0, 3)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val index = Multimodal.index(AudioCode)(media)
@@ -250,7 +251,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     def codes(id: Long, rate: Int): Seq[Int] =
       Multimodal.spectralFrameCodes(
-        Multimodal.decodeWav(Multimodal.syntheticWavTones(id, rate)).get).toSeq
+        Multimodal.decodeWav(Media.syntheticWavTones(id, rate)).get).toSeq
     for (id <- 0L until 6L) {
       val c8 = codes(id, 8000)
       val c44 = codes(id, 44100)
@@ -266,8 +267,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // no aligned (frame_idx, code) agreement at all
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000)
-      else Multimodal.syntheticWavTones(id - 20, 44100))
+      if (id < 20) Media.syntheticWavTones(id, 8000)
+      else Media.syntheticWavTones(id - 20, 44100))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val integerPairs = Multimodal.pairs(AudioCode)(media)
@@ -285,9 +286,9 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("dihedral index probes catch rotated reposts the plain probe misses") {
     implicit val sp: SparkSession = spark
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else if (id < 30) Multimodal.syntheticPngRot(id - 20, (id % 3 + 1).toInt)
-      else Multimodal.syntheticPngRotFlip(id - 30, (id % 3 + 1).toInt))
+      if (id < 20) Media.syntheticPng(id)
+      else if (id < 30) Media.syntheticPngRot(id - 20, (id % 3 + 1).toInt)
+      else Media.syntheticPngRotFlip(id - 30, (id % 3 + 1).toInt))
     val corpus = spark.range(0, 8)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     val index = Multimodal.pHashChunkIndex(corpus)
@@ -309,8 +310,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("spectral index screen catches fractional-resample probes; versions enforced") {
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000)
-      else Multimodal.syntheticWavTones(id - 20, 44100))
+      if (id < 20) Media.syntheticWavTones(id, 8000)
+      else Media.syntheticWavTones(id - 20, 44100))
     val corpus = spark.range(0, 6)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val probes = spark.range(20, 26)
@@ -482,7 +483,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // far below the >= 13% level gap)
     for (id <- 0L until 4L; rate <- Seq(8000, 44100)) {
       val full = Multimodal.decodeWav(
-        Multimodal.syntheticWavTones(id, rate)).get
+        Media.syntheticWavTones(id, rate)).get
       val halfSamples = full.samples.map(s => (s / 2).toShort)
       val half = full.copy(samples = halfSamples)
       assert(Multimodal.spectralFrameCodes(full).toSeq ==
@@ -521,7 +522,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("IncrementalIndex.append holds for the spectral and pHash index families") {
     implicit val sp: SparkSession = spark
     // spectral: appended increment == from-scratch rebuild, row sets
-    val wav = udf((id: Long) => Multimodal.syntheticWavTones(id, 8000))
+    val wav = udf((id: Long) => Media.syntheticWavTones(id, 8000))
     def audio(ids: Seq[Long]) = spark.createDataset(ids)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("id")
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -536,8 +537,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(sIdx1, sCols: _*) == rows(sFull, sCols: _*))
     // pHash: re-indexing an updated doc replaces its rows (LWW)
     val png = udf((id: Long, v: Int) =>
-      if (v == 0) Multimodal.syntheticPng(id)
-      else Multimodal.syntheticPngVariant(id))
+      if (v == 0) Media.syntheticPng(id)
+      else Media.syntheticPngVariant(id))
     def imgs(ids: Seq[Long], v: Int) = spark.createDataset(ids)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("id")
       .select(col("id").as("doc_id"), png(col("id"), lit(v)).as("payload"))
@@ -556,8 +557,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000, ms = 640)
-      else Multimodal.syntheticWavTones(id - 20, 44100, ms = 512,
+      if (id < 20) Media.syntheticWavTones(id, 8000, ms = 640)
+      else Media.syntheticWavTones(id - 20, 44100, ms = 512,
         offsetMs = 128))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -594,8 +595,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000, ms = 640)
-      else Multimodal.syntheticWavTones(id - 20, 44100, ms = 512,
+      if (id < 20) Media.syntheticWavTones(id, 8000, ms = 640)
+      else Media.syntheticWavTones(id - 20, 44100, ms = 512,
         offsetMs = 96))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -610,7 +611,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       == (0L until 6L).map(i => (i, i + 20)).toSet)
     // and the default-hop code path is unchanged by the new parameter:
     // hop=64 explicitly equals the default
-    val w0 = Multimodal.decodeWav(Multimodal.syntheticWavTones(1L, 8000)).get
+    val w0 = Multimodal.decodeWav(Media.syntheticWavTones(1L, 8000)).get
     assert(Multimodal.spectralFrameCodes(w0).toSeq ==
       Multimodal.spectralFrameCodes(w0, 64).toSeq)
   }
@@ -621,7 +622,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // all three lacing codings x several stream shapes: the extracted
     // WAV must be byte-identical to the unlaced mux's
     for (id <- 0L until 6L; lac <- 1 to 3) {
-      def mk(l: Int) = Multimodal.syntheticMkv(id, (4 + id % 3).toInt,
+      def mk(l: Int) = Media.syntheticMkv(id, (4 + id % 3).toInt,
         audioId = id % 5, audioSamples = (320 + (id % 5) * 64).toInt,
         lacing = l)
       val wp = Multimodal.mkvAudioWav(mk(0))
@@ -634,7 +635,7 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // laced fixtures (corrupt size runs, bad deltas, non-dividing
     // fixed splits) must degrade to skipped blocks, never throw
     val rnd = new scala.util.Random(20260814L)
-    val fixtures = (1 to 3).map(l => Multimodal.syntheticMkv(3L, 4,
+    val fixtures = (1 to 3).map(l => Media.syntheticMkv(3L, 4,
       audioId = 1L, audioSamples = 256, lacing = l))
     for (f <- fixtures; _ <- 0 until 150) {
       val m = f.clone()
@@ -664,8 +665,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
       val k = l.length / 2
       "{\\pos(10,20)}" + l.substring(0, k) + "\\N{\\b1}" + l.substring(k) + "{\\b0}"
     }
-    val plainMux = Multimodal.syntheticMkv(7L, 3, cueLines = plainLines)
-    val styledMux = Multimodal.syntheticMkv(7L, 3, cueLines = styled,
+    val plainMux = Media.syntheticMkv(7L, 3, cueLines = plainLines)
+    val styledMux = Media.syntheticMkv(7L, 3, cueLines = styled,
       subsAss = true)
     val pt = Multimodal.mkvSubtitleText(plainMux)
     val st = Multimodal.mkvSubtitleText(styledMux)
@@ -689,10 +690,10 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // rotate(mirror(.)) compound — every frame's hash changes in ways
     // neither the plain nor the mirror-only tier can probe
     val avi = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (4 + id % 3).toInt)
-      else if (id < 30) Multimodal.syntheticAvi(id - 20,
+      if (id < 20) Media.syntheticAvi(id, (4 + id % 3).toInt)
+      else if (id < 30) Media.syntheticAvi(id - 20,
         (4 + (id - 20) % 3).toInt, rotQ = (id % 3 + 1).toInt)
-      else Multimodal.syntheticAvi(id - 30,
+      else Media.syntheticAvi(id - 30,
         (4 + (id - 30) % 3).toInt, rotQ = (id % 3 + 1).toInt,
         mirrorX = true))
     val media = spark.range(0, 6).union(spark.range(20, 26))
@@ -726,8 +727,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
     // vertical flip, 3 = anti-transpose) — none is a pure rotation or
     // a pure mirror of its source
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else Multimodal.syntheticPngRotFlip(id - 20, (id % 3 + 1).toInt))
+      if (id < 20) Media.syntheticPng(id)
+      else Media.syntheticPngRotFlip(id - 20, (id % 3 + 1).toInt))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =

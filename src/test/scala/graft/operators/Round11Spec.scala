@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -31,9 +32,9 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     // straddle codes vs the exactly-gridded 8 kHz master. The
     // per-frame absolute-time grid must keep ALL codes identical.
     val w8 = Multimodal.decodeWav(
-      Multimodal.syntheticWavTones(7L, 8000, ms = 30000)).get
+      Media.syntheticWavTones(7L, 8000, ms = 30000)).get
     val w11 = Multimodal.decodeWav(
-      Multimodal.syntheticWavTones(7L, 11025, ms = 30000)).get
+      Media.syntheticWavTones(7L, 11025, ms = 30000)).get
     val c8 = Multimodal.spectralFrameCodes(w8)
     val c11 = Multimodal.spectralFrameCodes(w11)
     assert(c8.length == c11.length,
@@ -48,9 +49,9 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("onset-anchored landmarks catch 50ms-trim + fractional resample; all grid tiers miss") {
     implicit val s: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000, ms = 1248,
+      if (id < 20) Media.syntheticWavTones(id, 8000, ms = 1248,
         gateMs = 32, segMs = 96, permMs = 32)
-      else Multimodal.syntheticWavTones(id - 20, 44100, ms = 1120,
+      else Media.syntheticWavTones(id - 20, 44100, ms = 1120,
         offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32))
     val media = spark.range(0, 4).union(spark.range(20, 24))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -82,7 +83,7 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // silence-free audio has no onsets: the tier drops out instead of
     // fabricating landmarks (the grid tiers cover that corpus)
-    val ungated = udf((id: Long) => Multimodal.syntheticWavTones(id, 8000))
+    val ungated = udf((id: Long) => Media.syntheticWavTones(id, 8000))
     val flat = spark.range(0, 2)
       .select(col("id").as("doc_id"), ungated(col("id")).as("payload"))
     assert(AudioOnset().landmarks(flat).count() == 0L)
@@ -92,9 +93,9 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000, ms = 1248,
+      if (id < 20) Media.syntheticWavTones(id, 8000, ms = 1248,
         gateMs = 32, segMs = 96, permMs = 32)
-      else Multimodal.syntheticWavTones(id - 20, 44100, ms = 1120,
+      else Media.syntheticWavTones(id - 20, 44100, ms = 1120,
         offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32,
         gainNum = 1, gainDen = 16))
     val media = spark.range(0, 4).union(spark.range(20, 24))
@@ -119,8 +120,8 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("EXIF-tagged reposts land via plain pHash; stripping the tag restores the miss") {
     for ((id, o) <- Seq((0L, 6), (1L, 8), (2L, 3), (3L, 2), (6L, 5), (7L, 7))) {
-      val master = Multimodal.pHash64(Multimodal.syntheticPng(id)).get
-      val tagged = Multimodal.syntheticJpegExif(id, o)
+      val master = Multimodal.pHash64(Media.syntheticPng(id)).get
+      val tagged = Media.syntheticJpegExif(id, o)
       assert(Multimodal.exifOrientation(tagged) == o)
       val dTag = java.lang.Long.bitCount(
         master ^ Multimodal.pHash64(tagged).get)
@@ -136,22 +137,22 @@ class Round11Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // non-JPEG, orientation-1, and garbage payloads: parser returns
     // 0/1 and never throws; orientation 1 is the identity
-    assert(Multimodal.exifOrientation(Multimodal.syntheticPng(0L)) == 0)
+    assert(Multimodal.exifOrientation(Media.syntheticPng(0L)) == 0)
     assert(Multimodal.exifOrientation(Array[Byte](1, 2, 3)) == 0)
     assert(Multimodal.exifOrientation(
-      Multimodal.syntheticJpegExif(0L, 1)) == 1)
-    assert(Multimodal.pHash64(Multimodal.syntheticJpegExif(5L, 1)) ==
-      Multimodal.pHash64(Multimodal.syntheticJpegExif(5L, 1)
-        .take(2) ++ Multimodal.syntheticJpegExif(5L, 1).drop(38)),
+      Media.syntheticJpegExif(0L, 1)) == 1)
+    assert(Multimodal.pHash64(Media.syntheticJpegExif(5L, 1)) ==
+      Multimodal.pHash64(Media.syntheticJpegExif(5L, 1)
+        .take(2) ++ Media.syntheticJpegExif(5L, 1).drop(38)),
       "orientation 1 must hash identically to the untagged encode")
   }
 
   test("onset-landmark index: append == rebuild; cross-family stamps rejected; grid index misses the trim") {
     implicit val s: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTones(id, 8000, ms = 1248,
+      if (id < 20) Media.syntheticWavTones(id, 8000, ms = 1248,
         gateMs = 32, segMs = 96, permMs = 32)
-      else Multimodal.syntheticWavTones(id - 20, 44100, ms = 1120,
+      else Media.syntheticWavTones(id - 20, 44100, ms = 1120,
         offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32))
     def audio(ids: Seq[Long]) = {
       import spark.implicits._

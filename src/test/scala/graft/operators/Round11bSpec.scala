@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -22,7 +23,7 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The m119 fixture: beat-gated tone mixtures over a CONTINUOUS
     * 60 Hz hum floor at 1/16 full scale — the gaps are never quiet. */
   private def noisy(id: Long, rate: Int, ms: Int, offsetMs: Int = 0) =
-    Multimodal.syntheticWavTones(id, rate, ms = ms, offsetMs = offsetMs,
+    Media.syntheticWavTones(id, rate, ms = ms, offsetMs = offsetMs,
       gateMs = 32, segMs = 96, permMs = 32, floorNum = 1, floorDen = 16)
 
   private def noisyCorpus = {
@@ -84,10 +85,10 @@ class Round11bSpec extends AnyFunSuite with BeforeAndAfterAll {
       val sp = spark
       import sp.implicits._
       val rows = (0L until 4L).map(id => (id,
-        Multimodal.syntheticWavTones(id, 8000, ms = 1248, gateMs = 32,
+        Media.syntheticWavTones(id, 8000, ms = 1248, gateMs = 32,
           segMs = 96, permMs = 32))) ++
         (20L until 24L).map(id => (id,
-          Multimodal.syntheticWavTones(id - 20, 44100, ms = 1120,
+          Media.syntheticWavTones(id - 20, 44100, ms = 1120,
             offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32)))
       rows.toDF("doc_id", "payload")
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -28,9 +29,9 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val rows =
       (0L until 10L).map(id =>
-        (id, Multimodal.syntheticWavBeats(id, 8000, ms = 1248))) ++
+        (id, Media.syntheticWavBeats(id, 8000, ms = 1248))) ++
       (20L until 30L).map(id =>
-        (id, Multimodal.syntheticWavBeats(id - 20, 44100, ms = 1000,
+        (id, Media.syntheticWavBeats(id - 20, 44100, ms = 1000,
           offsetMs = 50, speedNum = 21, speedDen = 20)))
     rows.toDF("doc_id", "payload")
   }
@@ -70,16 +71,16 @@ class Round11cSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 8L).map(id =>
-      (id, Multimodal.syntheticWavBeats(id, 8000, ms = 1248)))
+      (id, Media.syntheticWavBeats(id, 8000, ms = 1248)))
       .toDF("doc_id", "payload")
     val late = (8L until 10L).map(id =>
-      (id, Multimodal.syntheticWavBeats(id, 8000, ms = 1248)))
+      (id, Media.syntheticWavBeats(id, 8000, ms = 1248)))
       .toDF("doc_id", "payload")
     val probes = ((20L until 26L).map(id =>
-      (id, Multimodal.syntheticWavBeats(id - 20, 44100, ms = 1000,
+      (id, Media.syntheticWavBeats(id - 20, 44100, ms = 1000,
         offsetMs = 50, speedNum = 21, speedDen = 20))) ++
       Seq(128L, 129L).map(id =>
-        (id, Multimodal.syntheticWavBeats(id, 44100, ms = 1000))))
+        (id, Media.syntheticWavBeats(id, 44100, ms = 1000))))
       .toDF("doc_id", "payload")
 
     val idx = Multimodal.index(AudioInterval())(masters)

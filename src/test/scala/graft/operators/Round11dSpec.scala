@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -28,12 +29,12 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticAvi(id, 40))) ++
-      (20L until 24L).map(id => (id, Multimodal.syntheticAvi(id - 20, 28,
+      (0L until 8L).map(id => (id, Media.syntheticAvi(id, 40))) ++
+      (20L until 24L).map(id => (id, Media.syntheticAvi(id - 20, 28,
         frameOffset = 4, rateNum = 5, rateDen = 4))) ++
-      (24L until 28L).map(id => (id, Multimodal.syntheticAvi(id - 20, 40,
+      (24L until 28L).map(id => (id, Media.syntheticAvi(id - 20, 40,
         frameOffset = 4, rateNum = 4, rateDen = 5))) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticAvi(id, 40)))
+      Seq(140L, 141L).map(id => (id, Media.syntheticAvi(id, 40)))
     rows.toDF("doc_id", "payload")
   }
 
@@ -69,16 +70,16 @@ class Round11dSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 6L).map(id =>
-      (id, Multimodal.syntheticAvi(id, 40))).toDF("doc_id", "payload")
+      (id, Media.syntheticAvi(id, 40))).toDF("doc_id", "payload")
     val late = (6L until 8L).map(id =>
-      (id, Multimodal.syntheticAvi(id, 40))).toDF("doc_id", "payload")
+      (id, Media.syntheticAvi(id, 40))).toDF("doc_id", "payload")
     val probes = ((20L until 23L).map(id =>
-      (id, Multimodal.syntheticAvi(id - 20, 28, frameOffset = 4,
+      (id, Media.syntheticAvi(id - 20, 28, frameOffset = 4,
         rateNum = 5, rateDen = 4))) ++
       (23L until 26L).map(id =>
-        (id, Multimodal.syntheticAvi(id - 20, 40, frameOffset = 4,
+        (id, Media.syntheticAvi(id - 20, 40, frameOffset = 4,
           rateNum = 4, rateDen = 5))) ++
-      Seq(128L, 129L).map(id => (id, Multimodal.syntheticAvi(id, 40))))
+      Seq(128L, 129L).map(id => (id, Media.syntheticAvi(id, 40))))
       .toDF("doc_id", "payload")
 
     val idx = Multimodal.index(VideoSkip())(masters)

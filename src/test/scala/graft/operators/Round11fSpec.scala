@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -27,23 +28,23 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPng(id, 64, 64))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPng(id, 64, 64))) ++
       Seq(
-        20L -> Multimodal.syntheticPngCrop(0, 16, 16, 48, 48), // win 2
-        21L -> Multimodal.syntheticPngCrop(1, 16, 16, 48, 48), // win 2
-        22L -> Multimodal.syntheticPngCrop(2, 0, 0, 32, 32),   // win 3
-        23L -> Multimodal.syntheticPngCrop(3, 32, 0, 64, 32),  // win 4
-        24L -> Multimodal.syntheticPngCrop(4, 8, 8, 56, 56),   // win 1
-        25L -> Multimodal.syntheticPngCrop(5, 32, 32, 64, 64), // win 6
-        26L -> Multimodal.syntheticPngCrop(6, 20, 12, 52, 44), // no win
-        27L -> Multimodal.syntheticPngCrop(7, 0, 32, 32, 64)   // win 5
+        20L -> Media.syntheticPngCrop(0, 16, 16, 48, 48), // win 2
+        21L -> Media.syntheticPngCrop(1, 16, 16, 48, 48), // win 2
+        22L -> Media.syntheticPngCrop(2, 0, 0, 32, 32),   // win 3
+        23L -> Media.syntheticPngCrop(3, 32, 0, 64, 32),  // win 4
+        24L -> Media.syntheticPngCrop(4, 8, 8, 56, 56),   // win 1
+        25L -> Media.syntheticPngCrop(5, 32, 32, 64, 64), // win 6
+        26L -> Media.syntheticPngCrop(6, 20, 12, 52, 44), // no win
+        27L -> Media.syntheticPngCrop(7, 0, 32, 32, 64)   // win 5
       ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPng(id, 64, 64)))
+      Seq(140L, 141L).map(id => (id, Media.syntheticPng(id, 64, 64)))
     rows.toDF("doc_id", "payload")
   }
 
   test("window 0 reproduces pHash64 bit-exactly") {
-    val png = Multimodal.syntheticPng(5, 64, 64)
+    val png = Media.syntheticPng(5, 64, 64)
     val full = Multimodal.pHash64(png).get
     val win0 = Multimodal.pHash64CropWindows(png).get
       .find(_._1 == 0).get._2
@@ -81,14 +82,14 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val rows =
-      (0L until 6L).map(id => (id, Multimodal.syntheticPng(id, 48, 48))) ++
+      (0L until 6L).map(id => (id, Media.syntheticPng(id, 48, 48))) ++
       Seq(
-        20L -> Multimodal.syntheticPngCrop(0, 8, 0, 40, 32, 48, 48),   // win 8
-        21L -> Multimodal.syntheticPngCrop(1, 16, 16, 48, 48, 48, 48), // win 15
-        22L -> Multimodal.syntheticPngCrop(2, 0, 8, 32, 40, 48, 48),   // win 10
-        23L -> Multimodal.syntheticPngCrop(3, 8, 8, 40, 40, 48, 48)    // win 11
+        20L -> Media.syntheticPngCrop(0, 8, 0, 40, 32, 48, 48),   // win 8
+        21L -> Media.syntheticPngCrop(1, 16, 16, 48, 48, 48, 48), // win 15
+        22L -> Media.syntheticPngCrop(2, 0, 8, 32, 40, 48, 48),   // win 10
+        23L -> Media.syntheticPngCrop(3, 8, 8, 40, 40, 48, 48)    // win 11
       ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPng(id, 48, 48)))
+      Seq(140L, 141L).map(id => (id, Media.syntheticPng(id, 48, 48)))
     rows.toDF("doc_id", "payload")
   }
 
@@ -119,19 +120,19 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val rows =
       (0L until 6L).map(id =>
-        (id, Multimodal.syntheticAvi(id, 24, w = 32, h = 32))) ++
+        (id, Media.syntheticAvi(id, 24, w = 32, h = 32))) ++
       Seq(
-        20L -> Multimodal.syntheticAvi(0, 20, w = 16, h = 16,
+        20L -> Media.syntheticAvi(0, 20, w = 16, h = 16,
           frameOffset = 2, srcX0 = 8, srcY0 = 8),  // win 2 (center 50%)
-        21L -> Multimodal.syntheticAvi(1, 20, w = 16, h = 16,
+        21L -> Media.syntheticAvi(1, 20, w = 16, h = 16,
           frameOffset = 2, srcX0 = 0, srcY0 = 0),  // win 3 (TL quadrant)
-        22L -> Multimodal.syntheticAvi(2, 20, w = 24, h = 24,
+        22L -> Media.syntheticAvi(2, 20, w = 24, h = 24,
           frameOffset = 2, srcX0 = 4, srcY0 = 4),  // win 1 (center 75%)
-        23L -> Multimodal.syntheticAvi(3, 20, w = 16, h = 16,
+        23L -> Media.syntheticAvi(3, 20, w = 16, h = 16,
           frameOffset = 2, srcX0 = 16, srcY0 = 16) // win 6 (BR quadrant)
       ) ++
       Seq(140L, 141L).map(id =>
-        (id, Multimodal.syntheticAvi(id, 24, w = 32, h = 32)))
+        (id, Media.syntheticAvi(id, 24, w = 32, h = 32)))
     rows.toDF("doc_id", "payload")
   }
 
@@ -161,10 +162,10 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 4L).map(id =>
-      (id, Multimodal.syntheticAvi(id, 24, w = 32, h = 32)))
+      (id, Media.syntheticAvi(id, 24, w = 32, h = 32)))
       .toDF("doc_id", "payload")
     val late = (4L until 6L).map(id =>
-      (id, Multimodal.syntheticAvi(id, 24, w = 32, h = 32)))
+      (id, Media.syntheticAvi(id, 24, w = 32, h = 32)))
       .toDF("doc_id", "payload")
     val idx = Multimodal.videoCropLandmarkIndex(masters,
       f = VideoCrop(every = 1))
@@ -175,7 +176,7 @@ class Round11fSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the video crop index")
-    val probes = Seq(20L -> Multimodal.syntheticAvi(0, 20, w = 16,
+    val probes = Seq(20L -> Media.syntheticAvi(0, 20, w = 16,
       h = 16, frameOffset = 2, srcX0 = 8, srcY0 = 8))
       .toDF("doc_id", "payload")
     val foreign = idx.withColumn("fp_ver",

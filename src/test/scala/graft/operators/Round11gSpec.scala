@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -68,7 +69,7 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val media = (0L until 4L).map(id =>
-      (id, Multimodal.syntheticPng(id, 48, 48))).toDF("doc_id", "payload")
+      (id, Media.syntheticPng(id, 48, 48))).toDF("doc_id", "payload")
     val base = Multimodal.pHashCropWindowIndex(media).collect().toSet
     val ext = Multimodal.pHashCropWindowIndex(media,
       f = PHashCrop(extended = true))
@@ -77,7 +78,7 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
       "extended index must carry the base windows bit-identically")
     assert(ext.exists(_.getAs[Int]("win") >= 7),
       "extended index must add thirds-window rows")
-    val late = Seq((4L, Multimodal.syntheticPng(4L, 48, 48)))
+    val late = Seq((4L, Media.syntheticPng(4L, 48, 48)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.pHashCropWindowIndex(media,
       f = PHashCrop(extended = true))
@@ -94,7 +95,7 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val media = (0L until 3L).map(id =>
-        (id, Multimodal.syntheticAvi(id, 24, w = 48, h = 48)))
+        (id, Media.syntheticAvi(id, 24, w = 48, h = 48)))
       .toDF("doc_id", "payload")
     val base = Multimodal.videoLandmarksCrop(media, every = 1,
       extended = false)
@@ -106,7 +107,7 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ext.exists(_.win >= 7),
       "extended landmarks must add thirds channels")
     val corpus = media.unionByName(
-      Seq((20L, Multimodal.syntheticAvi(0, 20, w = 32, h = 32,
+      Seq((20L, Media.syntheticAvi(0, 20, w = 32, h = 32,
         frameOffset = 2, srcX0 = 8, srcY0 = 0)))
         .toDF("doc_id", "payload"))
     val basePairs = Multimodal.videoLandmarkPairsCrop(corpus, maxDf = 64,
@@ -126,10 +127,10 @@ class Round11gSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 4L).map(id =>
-        (id, Multimodal.syntheticWavBeats(id, 8000, ms = 1248,
+        (id, Media.syntheticWavBeats(id, 8000, ms = 1248,
           uniformSegMs = 96)))
       .toDF("doc_id", "payload")
-    val late = Seq((4L, Multimodal.syntheticWavBeats(4L, 8000, ms = 1248,
+    val late = Seq((4L, Media.syntheticWavBeats(4L, 8000, ms = 1248,
         uniformSegMs = 96)))
       .toDF("doc_id", "payload")
     val dflt = Multimodal.index(AudioChroma())(masters).collect().toSet

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -28,14 +29,14 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 8L).map(id => (id, Multimodal.syntheticPng(id, 64, 64))) ++
+    ((0L until 8L).map(id => (id, Media.syntheticPng(id, 64, 64))) ++
       Seq(
-        20L -> Multimodal.syntheticPngCrop(6, 20, 12, 52, 44),
-        21L -> Multimodal.syntheticPngCrop(0, 11, 7, 43, 39),
-        22L -> Multimodal.syntheticPngCrop(1, 5, 21, 37, 53),
-        23L -> Multimodal.syntheticPngCrop(2, 17, 3, 49, 35)
+        20L -> Media.syntheticPngCrop(6, 20, 12, 52, 44),
+        21L -> Media.syntheticPngCrop(0, 11, 7, 43, 39),
+        22L -> Media.syntheticPngCrop(1, 5, 21, 37, 53),
+        23L -> Media.syntheticPngCrop(2, 17, 3, 49, 35)
       ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPng(id, 64, 64))))
+      Seq(140L, 141L).map(id => (id, Media.syntheticPng(id, 64, 64))))
       .toDF("doc_id", "payload")
   }
 
@@ -51,9 +52,9 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a lossless crop's peak-patch hashes are a subset of its master's") {
     val master = Multimodal.peakPatchHashes(
-      Multimodal.syntheticPng(6, 64, 64)).get.toSet
+      Media.syntheticPng(6, 64, 64)).get.toSet
     val crop = Multimodal.peakPatchHashes(
-      Multimodal.syntheticPngCrop(6, 20, 12, 52, 44)).get.toSet
+      Media.syntheticPngCrop(6, 20, 12, 52, 44)).get.toSet
     assert(crop.nonEmpty, "crop must yield interior peaks")
     assert(crop.subsetOf(master),
       s"crop peaks must reproduce master peaks bit-exactly " +
@@ -74,8 +75,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val corpus = (Seq(0L, 1L, 10L, 11L).map(id =>
-        (id, Multimodal.syntheticAvi(id, 24, w = 48, h = 48))) ++
-      Seq(20L -> Multimodal.syntheticAvi(0, 20, w = 28, h = 24,
+        (id, Media.syntheticAvi(id, 24, w = 48, h = 48))) ++
+      Seq(20L -> Media.syntheticAvi(0, 20, w = 28, h = 24,
         frameOffset = 2, srcX0 = 7, srcY0 = 11)))
       .toDF("doc_id", "payload")
     val cross = Multimodal.videoLandmarkPairsCrop(corpus, maxDf = 64,
@@ -90,8 +91,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val media = Seq(
-      (0L, Multimodal.syntheticAvi(0, 24, w = 48, h = 48)),
-      (20L, Multimodal.syntheticAvi(0, 20, w = 28, h = 24,
+      (0L, Media.syntheticAvi(0, 24, w = 48, h = 48)),
+      (20L, Media.syntheticAvi(0, 20, w = 28, h = 24,
         frameOffset = 2, srcX0 = 7, srcY0 = 11)))
       .toDF("doc_id", "payload")
     val lms = Multimodal.VideoPeak(every = 1).landmarks(media)
@@ -106,16 +107,16 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("plain peak tier misses a rotated crop; dihedral orient-0 is bit-identical to plain") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val rotCrop = Multimodal.pngDihedral(
-      Multimodal.syntheticPngCrop(6, 20, 12, 52, 44), 1)
+    val rotCrop = Media.pngDihedral(
+      Media.syntheticPngCrop(6, 20, 12, 52, 44), 1)
     val media = Seq(
-      (6L, Multimodal.syntheticPng(6, 64, 64)), (20L, rotCrop))
+      (6L, Media.syntheticPng(6, 64, 64)), (20L, rotCrop))
       .toDF("doc_id", "payload")
     val plain = Multimodal.pairs(ImagePeak())(media, minMatch = 0.05,
       maxDf = 64).collect()
     assert(plain.isEmpty,
       s"plain peak tier must miss the rotated crop: ${plain.toSeq}")
-    val png = Multimodal.syntheticPng(3, 64, 64)
+    val png = Media.syntheticPng(3, 64, 64)
     val o0 = Multimodal.peakPatchHashesDihedral(png).get
       .filter(_._1 == 0).map(_._2)
     val base = Multimodal.peakPatchHashes(png).get
@@ -126,10 +127,10 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("exact-hash peak tier dies under JPEG; gray-mean descriptors are translation-exact") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val crop = Multimodal.syntheticPngCrop(6, 20, 12, 52, 44)
-    val lossy = Multimodal.jpegReencode(crop, 0.92f)
+    val crop = Media.syntheticPngCrop(6, 20, 12, 52, 44)
+    val lossy = Media.jpegReencode(crop, 0.92f)
     val media = Seq(
-      (6L, Multimodal.syntheticPng(6, 64, 64)), (20L, lossy))
+      (6L, Media.syntheticPng(6, 64, 64)), (20L, lossy))
       .toDF("doc_id", "payload")
     val exact = Multimodal.pairs(ImagePeak())(media, minMatch = 0.05,
       maxDf = 64).collect()
@@ -138,7 +139,7 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     // lossless translation: the crop's descriptor multiset is a
     // subset of the master's, at distance ZERO
     val master = Multimodal.peakBlockDescriptors(
-      Multimodal.syntheticPng(6, 64, 64)).get.map(_._2).toSet
+      Media.syntheticPng(6, 64, 64)).get.map(_._2).toSet
     val cropDs = Multimodal.peakBlockDescriptors(crop).get.map(_._2).toSet
     assert(cropDs.nonEmpty && cropDs.subsetOf(master),
       s"lossless-crop descriptors must be bit-exact subsets " +
@@ -149,8 +150,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 4L).map(id =>
-      (id, Multimodal.syntheticPng(id, 64, 64))).toDF("doc_id", "payload")
-    val late = Seq((4L, Multimodal.syntheticPng(4L, 64, 64)))
+      (id, Media.syntheticPng(id, 64, 64))).toDF("doc_id", "payload")
+    val late = Seq((4L, Media.syntheticPng(4L, 64, 64)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.imagePeakLossyIndex(masters)
       .unionByName(Multimodal.imagePeakLossyIndex(late))
@@ -158,8 +159,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the peak-desc index")
-    val probes = Seq((20L, Multimodal.jpegReencode(
-      Multimodal.syntheticPngCrop(0, 11, 7, 43, 39), 0.92f)))
+    val probes = Seq((20L, Media.jpegReencode(
+      Media.syntheticPngCrop(0, 11, 7, 43, 39), 0.92f)))
       .toDF("doc_id", "payload")
     val foreign = Multimodal.imagePeakLossyIndex(masters)
       .withColumn("fp_ver", lit(Multimodal.PeakFpVersion))
@@ -173,8 +174,8 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 4L).map(id =>
-      (id, Multimodal.syntheticPng(id, 64, 64))).toDF("doc_id", "payload")
-    val late = Seq((4L, Multimodal.syntheticPng(4L, 64, 64)))
+      (id, Media.syntheticPng(id, 64, 64))).toDF("doc_id", "payload")
+    val late = Seq((4L, Media.syntheticPng(4L, 64, 64)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.index(ImagePeak())(masters)
       .unionByName(Multimodal.index(ImagePeak())(late))
@@ -182,7 +183,7 @@ class Round11hSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(appended.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the peak index")
-    val probes = Seq((20L, Multimodal.syntheticPngCrop(0, 11, 7, 43, 39)))
+    val probes = Seq((20L, Media.syntheticPngCrop(0, 11, 7, 43, 39)))
       .toDF("doc_id", "payload")
     val foreign = Multimodal.index(ImagePeak())(masters)
       .withColumn("fp_ver", lit(Multimodal.ChromaFpVersion))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.{Catalogue, Media}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -29,18 +30,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
-      Seq(
-        20L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128),
-        21L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112),
-        22L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(2), 16, 16, 112, 112, 80, 80),
-        23L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(3), 24, 8, 120, 104, 144, 144)
-      ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPngBlobs(id))))
+    val img = Catalogue.scaleCrop.payload(20, 4) _
+    ((0L until 8L) ++ (20L until 24L) ++ Seq(140L, 141L)).map(id => (id, img(id)))
       .toDF("doc_id", "payload")
   }
 
@@ -60,12 +51,12 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.coarsePeakCells(Multimodal.lumaPlane(img),
         img.getWidth, img.getHeight, 4, 6)
     }
-    val master = peaks(Multimodal.syntheticPngBlobs(0))
+    val master = peaks(Media.syntheticPngBlobs(0))
     assert(master.size == 10,
       s"every isolated blob must yield exactly one peak (tie-broken " +
         s"plateaus included): ${master.size}")
-    val probe = peaks(Multimodal.pngCropResize(
-      Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128))
+    val probe = peaks(Media.pngCropResize(
+      Media.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128))
     val sc = 128.0 / 96.0
     val interior = master.map { case (x, y, _) =>
       ((x - 20 + 0.5) * sc - 0.5, (y - 12 + 0.5) * sc - 0.5) }
@@ -106,8 +97,8 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 8L).map(id =>
-      (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
-    val late = Seq((8L, Multimodal.syntheticPngBlobs(8L)))
+      (id, Media.syntheticPngBlobs(id))).toDF("doc_id", "payload")
+    val late = Seq((8L, Media.syntheticPngBlobs(8L)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.index(ImageScale())(masters)
       .unionByName(Multimodal.index(ImageScale())(late))
@@ -116,11 +107,11 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the constellation index")
     val probes = Seq(
-      20L -> Multimodal.pngCropResize(
-        Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128),
-      21L -> Multimodal.pngCropResize(
-        Multimodal.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112),
-      130L -> Multimodal.syntheticPngBlobs(130L))
+      20L -> Media.pngCropResize(
+        Media.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128),
+      21L -> Media.pngCropResize(
+        Media.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112),
+      130L -> Media.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
     val out = Multimodal.screen(ImageScale())(probes,
       Multimodal.index(ImageScale())(masters), minMatch = 0.4)
@@ -139,18 +130,18 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val media = ((0L until 8L).map(id =>
-      (id, Multimodal.syntheticPngBlobs(id))) ++
+      (id, Media.syntheticPngBlobs(id))) ++
       Seq(
-        20L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128), 0.92f),
-        21L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112), 0.92f),
-        22L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(2), 16, 16, 112, 112, 80, 80), 0.92f),
-        23L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(3), 24, 8, 120, 104, 144, 144), 0.85f)
+        20L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(0), 20, 12, 116, 108, 128, 128), 0.92f),
+        21L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(1), 8, 16, 104, 112, 112, 112), 0.92f),
+        22L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(2), 16, 16, 112, 112, 80, 80), 0.92f),
+        23L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(3), 24, 8, 120, 104, 144, 144), 0.85f)
       ) ++ Seq(140L, 141L).map(id =>
-        (id, Multimodal.syntheticPngBlobs(id))))
+        (id, Media.syntheticPngBlobs(id))))
       .toDF("doc_id", "payload")
     // the lossy DESCRIPTOR tier (fixed pixel scale) has NO SIGNAL on
     // the resized compound: smooth blob fields make gray-mean
@@ -185,9 +176,9 @@ class Round11iSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val media = Seq(
-      (0L, Multimodal.syntheticPngBlobs(0)),
-      (20L, Multimodal.pngCropResize(
-        Multimodal.syntheticPngBlobs(0), 20, 12, 116, 108, 96, 96)))
+      (0L, Media.syntheticPngBlobs(0)),
+      (20L, Media.pngCropResize(
+        Media.syntheticPngBlobs(0), 20, 12, 116, 108, 96, 96)))
       .toDF("doc_id", "payload")
     val pairs = Multimodal.pairs(ImageScale())(media, minMatch = 0.4,
       maxDf = 64)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.{Catalogue, Media}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -24,33 +25,20 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  /** Compound probe: crop+resize then dihedral re-encode. */
-  private def compound(id: Long, x0: Int, y0: Int, x1: Int, y1: Int,
-      outW: Int, outH: Int, orient: Int): Array[Byte] =
-    Multimodal.pngDihedral(
-      Multimodal.pngCropResize(Multimodal.syntheticPngBlobs(id),
-        x0, y0, x1, y1, outW, outH), orient)
-
   /** The m145 fixture: blob masters + compound probes covering a
     * quarter turn, the half turn, a mirrored turn, and a pure mirror,
     * each at a different crop rect and scale factor — plus decoys. */
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
-      Seq(
-        20L -> compound(0, 20, 12, 116, 108, 128, 128, 1),
-        21L -> compound(1, 8, 16, 104, 112, 112, 112, 2),
-        22L -> compound(2, 16, 16, 112, 112, 80, 80, 5),
-        23L -> compound(3, 24, 8, 120, 104, 144, 144, 4)
-      ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPngBlobs(id))))
+    val img = Catalogue.scaleDihedral.payload(20, 4) _
+    ((0L until 8L) ++ (20L until 24L) ++ Seq(140L, 141L)).map(id => (id, img(id)))
       .toDF("doc_id", "payload")
   }
 
   test("orient-0 oriented codes are bit-identical to the natural codes") {
     val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(Multimodal.syntheticPngBlobs(0)))
+      new java.io.ByteArrayInputStream(Media.syntheticPngBlobs(0)))
     val cells = Multimodal.coarsePeakCells(Multimodal.lumaPlane(img),
       img.getWidth, img.getHeight, 4, 6)
     val natural = Multimodal.constellationCodes(
@@ -109,12 +97,10 @@ class Round11jSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 8L).map(id =>
-      (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
+      (id, Media.syntheticPngBlobs(id))).toDF("doc_id", "payload")
     val index = Multimodal.index(ImageScale())(masters)
-    val probes = Seq(
-      20L -> compound(0, 20, 12, 116, 108, 128, 128, 1),
-      21L -> compound(1, 8, 16, 104, 112, 112, 112, 5),
-      130L -> Multimodal.syntheticPngBlobs(130L))
+    val img = Catalogue.scaleDihedralIndex.payload(20, 3) _
+    val probes = Seq(20L, 21L, 130L).map(id => (id, img(id)))
       .toDF("doc_id", "payload")
     // the plain screen (orient-0 probes only) keeps the rotated ones
     val plain = Multimodal.screen(ImageScale())(probes, index, minMatch = 0.4)

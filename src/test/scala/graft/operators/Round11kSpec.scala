@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -28,26 +29,26 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 6L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6))) ++
+    ((0L until 6L).map(id => (id, Media.syntheticAviBlobs(id, 6))) ++
       Seq(
-        20L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(0, 6), 12, 8, 92, 88, 96, 96),
-        21L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(1, 6), 8, 8, 88, 88, 112, 112),
-        22L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(2, 6), 16, 12, 88, 84, 64, 64),
-        23L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(3, 6), 12, 8, 92, 88, 96, 96,
+        20L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(0, 6), 12, 8, 92, 88, 96, 96),
+        21L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(1, 6), 8, 8, 88, 88, 112, 112),
+        22L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(2, 6), 16, 12, 88, 84, 64, 64),
+        23L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(3, 6), 12, 8, 92, 88, 96, 96,
           fromFrame = 2)
       ) ++
       Seq(140L, 141L).map(id =>
-        (id, Multimodal.syntheticAviBlobs(id, 6))))
+        (id, Media.syntheticAviBlobs(id, 6))))
       .toDF("doc_id", "payload")
   }
 
   test("round-trip: blob AVI frames decode back and yield coarse peaks") {
     val fs = Multimodal.containerFrames(
-      Multimodal.syntheticAviBlobs(0, 6)).get
+      Media.syntheticAviBlobs(0, 6)).get
     assert(fs.length == 6)
     val img = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(fs.head))
@@ -90,8 +91,8 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 6L).map(id =>
-      (id, Multimodal.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
-    val late = Seq((6L, Multimodal.syntheticAviBlobs(6L, 6)))
+      (id, Media.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
+    val late = Seq((6L, Media.syntheticAviBlobs(6L, 6)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.index(VideoScale())(masters)
       .unionByName(Multimodal.index(VideoScale())(late))
@@ -100,11 +101,11 @@ class Round11kSpec extends AnyFunSuite with BeforeAndAfterAll {
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the video constellation index")
     val probes = Seq(
-      20L -> Multimodal.aviCropResizeDib(
-        Multimodal.syntheticAviBlobs(0, 6), 12, 8, 92, 88, 96, 96),
-      21L -> Multimodal.aviCropResizeDib(
-        Multimodal.syntheticAviBlobs(1, 6), 8, 8, 88, 88, 112, 112),
-      130L -> Multimodal.syntheticAviBlobs(130L, 6))
+      20L -> Media.aviCropResizeDib(
+        Media.syntheticAviBlobs(0, 6), 12, 8, 92, 88, 96, 96),
+      21L -> Media.aviCropResizeDib(
+        Media.syntheticAviBlobs(1, 6), 8, 8, 88, 88, 112, 112),
+      130L -> Media.syntheticAviBlobs(130L, 6))
       .toDF("doc_id", "payload")
     val out = Multimodal.screen(VideoScale())(probes,
       Multimodal.index(VideoScale())(masters), minMatch = 0.4)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -27,18 +28,18 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+    ((0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(
-        20L -> Multimodal.pngRotateResize(
-          Multimodal.syntheticPngBlobs(0), 17.0),
-        21L -> Multimodal.pngRotateResize(
-          Multimodal.syntheticPngBlobs(1), -8.0, 1.2),
-        22L -> Multimodal.pngRotateResize(
-          Multimodal.syntheticPngBlobs(2), 33.0, 0.9),
-        23L -> Multimodal.pngRotateResize(
-          Multimodal.syntheticPngBlobs(3), 3.0)
+        20L -> Media.pngRotateResize(
+          Media.syntheticPngBlobs(0), 17.0),
+        21L -> Media.pngRotateResize(
+          Media.syntheticPngBlobs(1), -8.0, 1.2),
+        22L -> Media.pngRotateResize(
+          Media.syntheticPngBlobs(2), 33.0, 0.9),
+        23L -> Media.pngRotateResize(
+          Media.syntheticPngBlobs(3), 3.0)
       ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPngBlobs(id))))
+      Seq(140L, 141L).map(id => (id, Media.syntheticPngBlobs(id))))
       .toDF("doc_id", "payload")
   }
 
@@ -75,9 +76,9 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val media = Seq(
-      (0L, Multimodal.syntheticPngBlobs(0)),
-      (20L, Multimodal.pngDihedral(Multimodal.pngCropResize(
-        Multimodal.syntheticPngBlobs(0), 8, 8, 120, 120, 112, 112), 4)))
+      (0L, Media.syntheticPngBlobs(0)),
+      (20L, Media.pngDihedral(Media.pngCropResize(
+        Media.syntheticPngBlobs(0), 8, 8, 120, 120, 112, 112), 4)))
       .toDF("doc_id", "payload")
     val rot = Multimodal.pairs(ImageRotScale())(media, minMatch = 0.2,
       maxDf = 64)
@@ -96,8 +97,8 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 8L).map(id =>
-      (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
-    val late = Seq((8L, Multimodal.syntheticPngBlobs(8L)))
+      (id, Media.syntheticPngBlobs(id))).toDF("doc_id", "payload")
+    val late = Seq((8L, Media.syntheticPngBlobs(8L)))
       .toDF("doc_id", "payload")
     val appended = Multimodal.index(ImageRotScale())(masters)
       .unionByName(Multimodal.index(ImageRotScale())(late))
@@ -106,11 +107,11 @@ class Round11lSpec extends AnyFunSuite with BeforeAndAfterAll {
       rebuilt.exceptAll(appended).isEmpty,
       "append != rebuild for the rot-constellation index")
     val probes = Seq(
-      20L -> Multimodal.pngRotateResize(
-        Multimodal.syntheticPngBlobs(0), 17.0),
-      21L -> Multimodal.pngRotateResize(
-        Multimodal.syntheticPngBlobs(1), -8.0, 1.2),
-      130L -> Multimodal.syntheticPngBlobs(130L))
+      20L -> Media.pngRotateResize(
+        Media.syntheticPngBlobs(0), 17.0),
+      21L -> Media.pngRotateResize(
+        Media.syntheticPngBlobs(1), -8.0, 1.2),
+      130L -> Media.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
     val out = Multimodal.screen(ImageRotScale())(probes,
       Multimodal.index(ImageRotScale())(masters), minMatch = 0.2)

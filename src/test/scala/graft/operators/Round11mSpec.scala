@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -26,20 +27,20 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Squeeze = full-frame anisotropic resize via the bilinear kernel:
     * x scaled by `fx`, y kept. */
   private def squeeze(id: Long, fx: Double): Array[Byte] =
-    Multimodal.pngCropResize(Multimodal.syntheticPngBlobs(id),
+    Media.pngCropResize(Media.syntheticPngBlobs(id),
       0, 0, 128, 128, math.round(128 * fx).toInt, 128)
 
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+    ((0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(
         20L -> squeeze(0, 0.75),
         21L -> squeeze(1, 4.0 / 3.0),
         22L -> squeeze(2, 0.75),
         23L -> squeeze(3, 4.0 / 3.0)
       ) ++
-      Seq(140L, 141L).map(id => (id, Multimodal.syntheticPngBlobs(id))))
+      Seq(140L, 141L).map(id => (id, Media.syntheticPngBlobs(id))))
       .toDF("doc_id", "payload")
   }
 
@@ -89,12 +90,12 @@ class Round11mSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     val masters = (0L until 8L).map(id =>
-      (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
+      (id, Media.syntheticPngBlobs(id))).toDF("doc_id", "payload")
     val index = Multimodal.index(ImageScale())(masters)
     val probes = Seq(
       20L -> squeeze(0, 0.75),
       21L -> squeeze(1, 4.0 / 3.0),
-      130L -> Multimodal.syntheticPngBlobs(130L))
+      130L -> Media.syntheticPngBlobs(130L))
       .toDF("doc_id", "payload")
     val plain = Multimodal.screen(ImageScale())(probes, index, minMatch = 0.3)
       .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSet

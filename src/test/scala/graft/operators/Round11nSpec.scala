@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -26,19 +27,19 @@ class Round11nSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 6L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6))) ++
+    ((0L until 6L).map(id => (id, Media.syntheticAviBlobs(id, 6))) ++
       Seq(
-        20L -> Multimodal.aviRotateResizeDib(
-          Multimodal.syntheticAviBlobs(0, 6), 17.0),
-        21L -> Multimodal.aviRotateResizeDib(
-          Multimodal.syntheticAviBlobs(1, 6), -8.0, 1.2),
-        22L -> Multimodal.aviRotateResizeDib(
-          Multimodal.syntheticAviBlobs(2, 6), 90.0),
-        23L -> Multimodal.aviRotateResizeDib(
-          Multimodal.syntheticAviBlobs(3, 6), 33.0, 1.0, fromFrame = 2)
+        20L -> Media.aviRotateResizeDib(
+          Media.syntheticAviBlobs(0, 6), 17.0),
+        21L -> Media.aviRotateResizeDib(
+          Media.syntheticAviBlobs(1, 6), -8.0, 1.2),
+        22L -> Media.aviRotateResizeDib(
+          Media.syntheticAviBlobs(2, 6), 90.0),
+        23L -> Media.aviRotateResizeDib(
+          Media.syntheticAviBlobs(3, 6), 33.0, 1.0, fromFrame = 2)
       ) ++
       Seq(140L, 141L).map(id =>
-        (id, Multimodal.syntheticAviBlobs(id, 6))))
+        (id, Media.syntheticAviBlobs(id, 6))))
       .toDF("doc_id", "payload")
   }
 

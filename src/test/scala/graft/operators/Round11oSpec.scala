@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -24,19 +25,19 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def corpus = {
     val s = spark
     import s.implicits._
-    ((0L until 6L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6))) ++
+    ((0L until 6L).map(id => (id, Media.syntheticAviBlobs(id, 6))) ++
       Seq(
-        20L -> Multimodal.aviAspectDib(
-          Multimodal.syntheticAviBlobs(0, 6), 0.75),
-        21L -> Multimodal.aviAspectDib(
-          Multimodal.syntheticAviBlobs(1, 6), 4.0 / 3.0),
-        22L -> Multimodal.aviAspectDib(
-          Multimodal.syntheticAviBlobs(2, 6), 0.75, fromFrame = 2),
-        23L -> Multimodal.aviAspectDib(
-          Multimodal.syntheticAviBlobs(3, 6), 4.0 / 3.0)
+        20L -> Media.aviAspectDib(
+          Media.syntheticAviBlobs(0, 6), 0.75),
+        21L -> Media.aviAspectDib(
+          Media.syntheticAviBlobs(1, 6), 4.0 / 3.0),
+        22L -> Media.aviAspectDib(
+          Media.syntheticAviBlobs(2, 6), 0.75, fromFrame = 2),
+        23L -> Media.aviAspectDib(
+          Media.syntheticAviBlobs(3, 6), 4.0 / 3.0)
       ) ++
       Seq(140L, 141L).map(id =>
-        (id, Multimodal.syntheticAviBlobs(id, 6))))
+        (id, Media.syntheticAviBlobs(id, 6))))
       .toDF("doc_id", "payload")
   }
 
@@ -70,12 +71,12 @@ class Round11oSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (p._1 == 0L || p._1 == 2L) p._3 == 2 else p._3 == 1),
       s"wrong undoing hypothesis: ${pairs.toSeq}")
     val masters = (0L until 6L).map(id =>
-      (id, Multimodal.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
+      (id, Media.syntheticAviBlobs(id, 6))).toDF("doc_id", "payload")
     val index = Multimodal.index(VideoScale())(masters)
     val probes = Seq(
-      20L -> Multimodal.aviAspectDib(
-        Multimodal.syntheticAviBlobs(0, 6), 0.75),
-      130L -> Multimodal.syntheticAviBlobs(130L, 6))
+      20L -> Media.aviAspectDib(
+        Media.syntheticAviBlobs(0, 6), 0.75),
+      130L -> Media.syntheticAviBlobs(130L, 6))
       .toDF("doc_id", "payload")
     val plainScreen = Multimodal.screen(VideoScale())(probes, index,
       minMatch = 0.3)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -35,15 +36,15 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val rows =
-      masters.map(id => (id, Multimodal.syntheticWavBeats(id, 8000,
+      masters.map(id => (id, Media.syntheticWavBeats(id, 8000,
         ms = 1248, uniformSegMs = 96))) ++
-      pitched.map(id => (id, Multimodal.syntheticWavBeats(id - 20, 44100,
+      pitched.map(id => (id, Media.syntheticWavBeats(id - 20, 44100,
         ms = 1000, offsetMs = 50, pitchNum = 196, pitchDen = 185,
         uniformSegMs = 96))) ++
-      compound.map(id => (id, Multimodal.syntheticWavBeats(id - 40, 44100,
+      compound.map(id => (id, Media.syntheticWavBeats(id - 40, 44100,
         ms = 1000, offsetMs = 50, speedNum = 21, speedDen = 20,
         pitchNum = 196, pitchDen = 185, uniformSegMs = 96))) ++
-      decoys.map(id => (id, Multimodal.syntheticWavBeats(id, 44100,
+      decoys.map(id => (id, Media.syntheticWavBeats(id, 44100,
         ms = 1000, uniformSegMs = 96)))
     rows.toDF("doc_id", "payload")
   }
@@ -84,9 +85,9 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val rows =
-      (0L until 6L).map(id => (id, Multimodal.syntheticWavBeats(id, 8000,
+      (0L until 6L).map(id => (id, Media.syntheticWavBeats(id, 8000,
         ms = 1248, uniformSegMs = 96))) ++
-      (20L until 26L).map(id => (id, Multimodal.syntheticWavBeats(id - 20,
+      (20L until 26L).map(id => (id, Media.syntheticWavBeats(id - 20,
         44100, ms = 1000, offsetMs = 50, speedNum = 196, speedDen = 185,
         uniformSegMs = 96)))
     val got = Multimodal.audioChromaVerifiedPairs(rows.toDF("doc_id", "payload"))
@@ -103,12 +104,12 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // 1.196:1 squeeze (outW 107) and 1.164:1 widen (outW 149) — both
     // > 10% from every default hypothesis {1.0, 0.75, 4/3}
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(20L -> 107, 21L -> 107, 22L -> 149, 23L -> 149).map {
-        case (id, w) => (id, Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(id - 20), 0, 0, 128, 128, w, 128))
+        case (id, w) => (id, Media.pngCropResize(
+          Media.syntheticPngBlobs(id - 20), 0, 0, 128, 128, w, 128))
       } ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
     val fan = Multimodal.pairs(ImageScaleAspect())(m, minMatch = 0.3,
       maxDf = 64)
@@ -130,19 +131,19 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("structureless-texture scope line is measured, not asserted (m161)") {
-    def tex(id: Long) = Multimodal.syntheticPngTexture(id, 64, 64)
+    def tex(id: Long) = Media.syntheticPngTexture(id, 64, 64)
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     for (id <- 0L until 4L) {
       val m = Multimodal.pHash64(tex(id)).get
       // unresized re-encode: pHash owns it
       assert(ham(m, Multimodal.pHash64(
-        Multimodal.jpegReencode(tex(id), 0.95f)).get) <= 3)
+        Media.jpegReencode(tex(id), 0.95f)).get) <= 3)
       // integer-ratio upsample (64->96 = exact 3x box at the 32 grid):
       // pHash ALSO owns it — the positive half of the scope line
-      assert(ham(m, Multimodal.pHash64(Multimodal.pngCropResize(
+      assert(ham(m, Multimodal.pHash64(Media.pngCropResize(
         tex(id), 0, 0, 64, 64, 96, 96)).get) <= 3)
       // non-integer resample (64->80): aliased wholesale — the gap
-      assert(ham(m, Multimodal.pHash64(Multimodal.pngCropResize(
+      assert(ham(m, Multimodal.pHash64(Media.pngCropResize(
         tex(id), 0, 0, 64, 64, 80, 80)).get) > 3,
         s"id=$id: 64->80 resample unexpectedly inside maxDist — " +
           "the m161 scope line would be stale")
@@ -158,17 +159,17 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     def mk(id: Long): Array[Byte] = id match {
-      case 20L => Multimodal.aviRotateResizeDib(
-        Multimodal.syntheticAviBlobs(0, 6), 17.0,
+      case 20L => Media.aviRotateResizeDib(
+        Media.syntheticAviBlobs(0, 6), 17.0,
         audioId = 0L, audioSamples = 320)
-      case 21L => Multimodal.syntheticAviBlobs(21, 6,
+      case 21L => Media.syntheticAviBlobs(21, 6,
         audioId = 1L, audioSamples = 384)
-      case 22L => Multimodal.aviRotateResizeDib(
-        Multimodal.syntheticAviBlobs(2, 6), -8.0, 1.2,
+      case 22L => Media.aviRotateResizeDib(
+        Media.syntheticAviBlobs(2, 6), -8.0, 1.2,
         audioId = 99L, audioSamples = 320)
-      case 23L => Multimodal.syntheticAviBlobs(23, 6,
+      case 23L => Media.syntheticAviBlobs(23, 6,
         audioId = 98L, audioSamples = 320)
-      case i => Multimodal.syntheticAviBlobs(i, 6,
+      case i => Media.syntheticAviBlobs(i, 6,
         audioId = i, audioSamples = (320 + (i % 4) * 64).toInt)
     }
     ((0L until 4L) ++ (20L until 24L)).map(id => (id, mk(id)))
@@ -201,15 +202,15 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("audio-carrying transform muxes keep frames AND track bit-exact (the m162 fixture contract)") {
     // same audioId on a blob mux and syntheticAvi = the same PCM track
     val a = Multimodal.containerAudioWav(
-      Multimodal.syntheticAviBlobs(7, 4, audioId = 5L, audioSamples = 320))
+      Media.syntheticAviBlobs(7, 4, audioId = 5L, audioSamples = 320))
     val b = Multimodal.containerAudioWav(
-      Multimodal.syntheticAvi(7, 4, audioId = 5L, audioSamples = 320))
+      Media.syntheticAvi(7, 4, audioId = 5L, audioSamples = 320))
     assert(a.isDefined && b.isDefined && java.util.Arrays.equals(a.get, b.get))
     // the audio knob changes no frame byte
     val plain = Multimodal.containerFrames(
-      Multimodal.syntheticAviBlobs(7, 4)).get
+      Media.syntheticAviBlobs(7, 4)).get
     val withAudio = Multimodal.containerFrames(
-      Multimodal.syntheticAviBlobs(7, 4, audioId = 5L,
+      Media.syntheticAviBlobs(7, 4, audioId = 5L,
         audioSamples = 320)).get
     assert(plain.length == withAudio.length &&
       plain.zip(withAudio).forall(p => java.util.Arrays.equals(p._1, p._2)))
@@ -222,17 +223,17 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(
-        20L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(0), 9, 13, 105, 117, 96, 104), 0.6f),
-        21L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(1), 15, 7, 111, 103, 128, 128), 0.5f),
-        22L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(2), 5, 21, 101, 125, 80, 80), 0.7f),
-        23L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(3), 11, 11, 119, 119, 144, 144), 0.5f)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+        20L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(0), 9, 13, 105, 117, 96, 104), 0.6f),
+        21L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(1), 15, 7, 111, 103, 128, 128), 0.5f),
+        22L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(2), 5, 21, 101, 125, 80, 80), 0.7f),
+        23L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(3), 11, 11, 119, 119, 144, 144), 0.5f)) ++
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     rows.toDF("doc_id", "payload")
   }
 
@@ -276,12 +277,12 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticWavBeats(id, 8000,
+      (0L until 8L).map(id => (id, Media.syntheticWavBeats(id, 8000,
         ms = 1248, uniformSegMs = 96))) ++
-      (20L until 28L).map(id => (id, Multimodal.syntheticWavBeats(id - 20,
+      (20L until 28L).map(id => (id, Media.syntheticWavBeats(id - 20,
         44100, ms = 1000, offsetMs = 50, pitchNum = 35, pitchDen = 34,
         uniformSegMs = 96))) ++
-      (140L until 144L).map(id => (id, Multimodal.syntheticWavBeats(id,
+      (140L until 144L).map(id => (id, Media.syntheticWavBeats(id,
         44100, ms = 1000, uniformSegMs = 96)))
     val m = rows.toDF("doc_id", "payload")
     val got = Multimodal.audioChromaVerifiedPairs(m)
@@ -310,17 +311,17 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(
-        20L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(0), 0, 0, 128, 128, 80, 128),
-        21L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(1), 0, 0, 128, 128, 68, 102),
-        22L -> Multimodal.jpegReencode(Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(2), 0, 0, 128, 128, 75, 128), 0.85f),
-        23L -> Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+        20L -> Media.pngCropResize(
+          Media.syntheticPngBlobs(0), 0, 0, 128, 128, 80, 128),
+        21L -> Media.pngCropResize(
+          Media.syntheticPngBlobs(1), 0, 0, 128, 128, 68, 102),
+        22L -> Media.jpegReencode(Media.pngCropResize(
+          Media.syntheticPngBlobs(2), 0, 0, 128, 128, 75, 128), 0.85f),
+        23L -> Media.pngCropResize(
+          Media.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
     val canon = Multimodal.pairs(ImageScaleCanonical())(m, minMatch = 0.3,
       maxDf = 64).collect()
@@ -366,12 +367,12 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // the canonical tier must keep covering the MODERATE off-fan class
     // (the m160 fixtures) — it supersedes, not complements
     val rows2 =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(20L -> 107, 21L -> 107, 22L -> 149, 23L -> 149).map {
-        case (id, w) => (id, Multimodal.pngCropResize(
-          Multimodal.syntheticPngBlobs(id - 20), 0, 0, 128, 128, w, 128))
+        case (id, w) => (id, Media.pngCropResize(
+          Media.syntheticPngBlobs(id - 20), 0, 0, 128, 128, w, 128))
       } ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     val c2 = Multimodal.pairs(ImageScaleCanonical())(rows2.toDF("doc_id", "payload"),
       minMatch = 0.3, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -384,13 +385,13 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val corpus = (0L until 4L)
-      .map(id => (id, Multimodal.syntheticPngBlobs(id)))
+      .map(id => (id, Media.syntheticPngBlobs(id)))
       .toDF("doc_id", "payload")
     val canonIdx = Multimodal.index(ImageScaleCanonical())(corpus)
     assert(canonIdx.select("fp_ver").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(Multimodal.CanonFpVersion))
     val plainIdx = Multimodal.index(ImageScale())(corpus)
-    val probe = Seq((20L, Multimodal.syntheticPngBlobs(0L)))
+    val probe = Seq((20L, Media.syntheticPngBlobs(0L)))
       .toDF("doc_id", "payload")
     // canonical screen vs plain index: reject
     val e1 = intercept[IllegalArgumentException] {
@@ -404,7 +405,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.getMessage.contains("imageScaleLandmarkIndex"))
     // append == rebuild on the canonical index
     val more = (4L until 6L)
-      .map(id => (id, Multimodal.syntheticPngBlobs(id)))
+      .map(id => (id, Media.syntheticPngBlobs(id)))
       .toDF("doc_id", "payload")
     val appended = canonIdx.unionByName(
       Multimodal.index(ImageScaleCanonical())(more))
@@ -418,15 +419,15 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val rows =
-      (0L until 6L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6))) ++
+      (0L until 6L).map(id => (id, Media.syntheticAviBlobs(id, 6))) ++
       Seq(
-        20L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(0, 6), 0, 0, 96, 96, 60, 96),
-        21L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(1, 6), 0, 0, 96, 96, 96, 60),
-        22L -> Multimodal.aviCropResizeDib(
-          Multimodal.syntheticAviBlobs(2, 6), 0, 0, 96, 96, 56, 90, 2)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6)))
+        20L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(0, 6), 0, 0, 96, 96, 60, 96),
+        21L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(1, 6), 0, 0, 96, 96, 96, 60),
+        22L -> Media.aviCropResizeDib(
+          Media.syntheticAviBlobs(2, 6), 0, 0, 96, 96, 56, 90, 2)) ++
+      (140L until 142L).map(id => (id, Media.syntheticAviBlobs(id, 6)))
     val m = rows.toDF("doc_id", "payload")
     val canon = Multimodal.pairs(VideoScaleCanonical())(m, minMatch = 0.3,
       maxDf = 64).collect()
@@ -453,13 +454,13 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     def probe(src: Long, deg: Double, outW: Int): Array[Byte] =
-      Multimodal.pngCropResize(Multimodal.pngRotateResize(
-        Multimodal.syntheticPngBlobs(src), deg), 0, 0, 128, 128, outW, 128)
+      Media.pngCropResize(Media.pngRotateResize(
+        Media.syntheticPngBlobs(src), deg), 0, 0, 128, 128, outW, 128)
     val rows =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(20L -> probe(0, 20.0, 80), 21L -> probe(1, -11.0, 80),
         22L -> probe(2, 20.0, 85), 23L -> probe(3, 33.0, 80)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     val m = rows.toDF("doc_id", "payload")
     val affine = Multimodal.pairs(ImageAffine())(m, minMatch = 0.25, maxDf = 64).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -486,13 +487,13 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     // and the affine tier also covers the SIMPLER classes (rotation
     // only, squeeze only both axes, rotation+uniform scale)
     val rows2 =
-      (0L until 8L).map(id => (id, Multimodal.syntheticPngBlobs(id))) ++
+      (0L until 8L).map(id => (id, Media.syntheticPngBlobs(id))) ++
       Seq(
-        20L -> Multimodal.pngRotateResize(Multimodal.syntheticPngBlobs(0), 17.0),
-        21L -> Multimodal.pngCropResize(Multimodal.syntheticPngBlobs(1), 0, 0, 128, 128, 80, 128),
-        22L -> Multimodal.pngRotateResize(Multimodal.syntheticPngBlobs(2), -8.0, 1.2),
-        23L -> Multimodal.pngCropResize(Multimodal.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticPngBlobs(id)))
+        20L -> Media.pngRotateResize(Media.syntheticPngBlobs(0), 17.0),
+        21L -> Media.pngCropResize(Media.syntheticPngBlobs(1), 0, 0, 128, 128, 80, 128),
+        22L -> Media.pngRotateResize(Media.syntheticPngBlobs(2), -8.0, 1.2),
+        23L -> Media.pngCropResize(Media.syntheticPngBlobs(3), 0, 0, 128, 128, 128, 80)) ++
+      (140L until 142L).map(id => (id, Media.syntheticPngBlobs(id)))
     val simple = Multimodal.pairs(ImageAffine())(rows2.toDF("doc_id", "payload"),
       minMatch = 0.25, maxDf = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -505,13 +506,13 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     def probe(src: Long, deg: Double, ow: Int, oh: Int, from: Int): Array[Byte] =
-      Multimodal.aviCropResizeDib(Multimodal.aviRotateResizeDib(
-        Multimodal.syntheticAviBlobs(src, 6), deg), 0, 0, 96, 96, ow, oh, from)
+      Media.aviCropResizeDib(Media.aviRotateResizeDib(
+        Media.syntheticAviBlobs(src, 6), deg), 0, 0, 96, 96, ow, oh, from)
     val rows =
-      (0L until 6L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6))) ++
+      (0L until 6L).map(id => (id, Media.syntheticAviBlobs(id, 6))) ++
       Seq(20L -> probe(0, 17.0, 60, 96, 0), 21L -> probe(1, -8.0, 96, 60, 0),
         22L -> probe(2, 20.0, 64, 96, 2)) ++
-      (140L until 142L).map(id => (id, Multimodal.syntheticAviBlobs(id, 6)))
+      (140L until 142L).map(id => (id, Media.syntheticAviBlobs(id, 6)))
     val m = rows.toDF("doc_id", "payload")
     val affine = Multimodal.pairs(VideoAffine())(m, minMatch = 0.25, maxDf = 64)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -534,11 +535,11 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"(rot=$rot canon=$canon) — re-measure the m171 scope")
     // affine index: stamps its family, rejects cross-family screens
     val corpus = (0L until 4L)
-      .map(id => (id, Multimodal.syntheticPngBlobs(id))).toDF("doc_id", "payload")
+      .map(id => (id, Media.syntheticPngBlobs(id))).toDF("doc_id", "payload")
     val affIdx = Multimodal.index(ImageAffine())(corpus)
     assert(affIdx.select("fp_ver").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(Multimodal.AffineFpVersion))
-    val probeDf = Seq((20L, Multimodal.syntheticPngBlobs(0L)))
+    val probeDf = Seq((20L, Media.syntheticPngBlobs(0L)))
       .toDF("doc_id", "payload")
     val e1 = intercept[IllegalArgumentException] {
       Multimodal.screen(ImageAffine())(probeDf,
@@ -614,7 +615,7 @@ class Round12Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("folds=1 keeps chromaCodeAt bit-exact legacy behavior") {
     val mono = Multimodal.monoMix(Multimodal.decodeWav(
-      Multimodal.syntheticWavBeats(3L, 8000, ms = 1248,
+      Media.syntheticWavBeats(3L, 8000, ms = 1248,
         uniformSegMs = 96)).get)
     Multimodal.energyOnsets(mono, 8000, 1024, 8).foreach { o =>
       assert(Multimodal.chromaCodeAt(mono, 8000, o, 12, 12) ==

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -67,16 +68,16 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     // clip, AND the detector margin — a corpus with only 10 peaks
     // leaves too few for 5-point rot codes
     def blobs(seed: Long) =
-      Multimodal.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
+      Media.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
     val rows =
       (0 until nMasters).map(i => (i.toLong, blobs(i.toLong))) ++
       (0 until nMasters).map { i =>
         // crop to the central 75% RE-RENDERED at source size (how a
         // real crop re-upload ships), then rotate, then squeeze
-        val crop = Multimodal.pngCropResize(blobs(i.toLong),
+        val crop = Media.pngCropResize(blobs(i.toLong),
           32, 32, 224, 224, 256, 256)
-        val rot = Multimodal.pngRotateResize(crop, deg)
-        (100L + i, Multimodal.pngCropResize(rot, 0, 0, 256, 256,
+        val rot = Media.pngRotateResize(crop, deg)
+        (100L + i, Media.pngCropResize(rot, 0, 0, 256, 256,
           math.round(256 / sq).toInt, 256))
       } ++
       (0 until nMasters).map(i => (200L + i, blobs(1000L + i)))
@@ -167,12 +168,12 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     def blobs(seed: Long) =
-      Multimodal.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
+      Media.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
     // the MEASURED gray zone (diag15 matrix): compounds whose code
     // evidence sits at 0.0085-0.0161, under the m174 0.02 gate
     def probe(src: Long, c0: Int, c1: Int, deg: Double, outW: Int) =
-      Multimodal.pngCropResize(Multimodal.pngRotateResize(
-        Multimodal.pngCropResize(blobs(src), c0, c0, c1, c1, 256, 256),
+      Media.pngCropResize(Media.pngRotateResize(
+        Media.pngCropResize(blobs(src), c0, c0, c1, c1, 256, 256),
         deg), 0, 0, 256, 256, outW, 256)
     val rows =
       (0 until 8).map(i => (i.toLong, blobs(i.toLong))) ++
@@ -217,12 +218,12 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s: SparkSession = spark
     import s.implicits._
     def blobs(seed: Long) =
-      Multimodal.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
+      Media.syntheticPngBlobs(seed, 256, 256, nBlobs = 24, minSep = 22.0)
     // mirror (dihedral orient 4) AFTER the crop+rot+squeeze compound
     def probe(src: Long, deg: Double, outW: Int) =
-      Multimodal.pngDihedral(
-        Multimodal.pngCropResize(Multimodal.pngRotateResize(
-          Multimodal.pngCropResize(blobs(src), 32, 32, 224, 224, 256, 256),
+      Media.pngDihedral(
+        Media.pngCropResize(Media.pngRotateResize(
+          Media.pngCropResize(blobs(src), 32, 32, 224, 224, 256, 256),
           deg), 0, 0, 256, 256, outW, 256), 4)
     val rows =
       (0 until 6).map(i => (i.toLong, blobs(i.toLong))) ++

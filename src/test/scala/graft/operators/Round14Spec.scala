@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -31,8 +32,8 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     // dropped; without the cap the scorer would explode 45 X pairs.
     val media = s.range(0, 12).map { id =>
       val payload =
-        if (id < 10) Multimodal.syntheticPng(0L)
-        else Multimodal.syntheticPng(999L)
+        if (id < 10) Media.syntheticPng(0L)
+        else Media.syntheticPng(999L)
       (id, payload)
     }.toDF("doc_id", "payload")
     val acc = Multimodal.hotCodesDropped(s)
@@ -60,11 +61,11 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
   private def m182Media(s: SparkSession): org.apache.spark.sql.DataFrame = {
     val img = udf((id: Long) => {
       def master(src: Long): Array[Byte] =
-        Multimodal.syntheticAviBlobs(src, 6, 192, 192, 18, 22.0)
+        Media.syntheticAviBlobs(src, 6, 192, 192, 18, 22.0)
       def probe(src: Long, m: Int, deg: Double, ow: Int,
           from: Int): Array[Byte] =
-        Multimodal.aviCropResizeDib(Multimodal.aviRotateResizeDib(
-          Multimodal.aviCropResizeDib(master(src), m, m, 192 - m,
+        Media.aviCropResizeDib(Media.aviRotateResizeDib(
+          Media.aviCropResizeDib(master(src), m, m, 192 - m,
             192 - m, 192, 192), deg), 0, 0, 192, 192, ow, 192, from)
       if (id == 20L) probe(0, 36, 17.0, 148, 0)
       else if (id == 21L) probe(2, 36, 9.0, 148, 0)
@@ -109,12 +110,12 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
   private def m183Media(s: SparkSession): org.apache.spark.sql.DataFrame = {
     val img = udf((id: Long) => {
       def blobs(seed: Long): Array[Byte] =
-        Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
+        Media.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
       def probe(src: Long, c0: Int, c1: Int, deg: Double,
           outW: Int): Array[Byte] =
-        Multimodal.pngDihedral(
-          Multimodal.pngCropResize(Multimodal.pngRotateResize(
-            Multimodal.pngCropResize(blobs(src), c0, c0, c1, c1,
+        Media.pngDihedral(
+          Media.pngCropResize(Media.pngRotateResize(
+            Media.pngCropResize(blobs(src), c0, c0, c1, c1,
               256, 256), deg), 0, 0, 256, 256, outW, 256), 4)
       if (id == 20L) probe(3, 38, 218, -23.0, 197)      // gray-zone
       else if (id == 21L) probe(6, 44, 212, 17.0, 183)  // gray-zone
@@ -168,15 +169,15 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     val img = udf((id: Long) => {
       def blobs(seed: Long): Array[Byte] =
-        Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
+        Media.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
       def probe(src: Long, deg: Double, sq: Double, ax: Int): Array[Byte] = {
-        val rot = Multimodal.pngRotateResize(Multimodal.pngCropResize(
+        val rot = Media.pngRotateResize(Media.pngCropResize(
           blobs(src), 32, 32, 224, 224, 256, 256), deg)
         if (ax == 0)
-          Multimodal.pngCropResize(rot, 0, 0, 256, 256,
+          Media.pngCropResize(rot, 0, 0, 256, 256,
             math.round(256 / sq).toInt, 256)
         else
-          Multimodal.pngCropResize(rot, 0, 0, 256, 256, 256,
+          Media.pngCropResize(rot, 0, 0, 256, 256, 256,
             math.round(256 / sq).toInt)
       }
       if (id == 20L) probe(0, -23.0, 3.0, 0)
@@ -221,12 +222,12 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     val img = udf((id: Long) => {
       def master(src: Long): Array[Byte] =
-        Multimodal.syntheticAviBlobs(src, 6, 192, 192, 18, 22.0)
+        Media.syntheticAviBlobs(src, 6, 192, 192, 18, 22.0)
       def probe(src: Long, m: Int, deg: Double, ow: Int,
           from: Int): Array[Byte] =
-        Multimodal.aviDihedralDib(
-          Multimodal.aviCropResizeDib(Multimodal.aviRotateResizeDib(
-            Multimodal.aviCropResizeDib(master(src), m, m, 192 - m,
+        Media.aviDihedralDib(
+          Media.aviCropResizeDib(Media.aviRotateResizeDib(
+            Media.aviCropResizeDib(master(src), m, m, 192 - m,
               192 - m, 192, 192), deg), 0, 0, 192, 192, ow, 192,
             from), 4)
       if (id == 20L) probe(0, 36, 17.0, 148, 0)       // gray-zone
@@ -274,15 +275,15 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     val img = udf((id: Long) => {
       def master(src: Long): Array[Byte] =
-        Multimodal.syntheticAviBlobs(src, 6, 256, 256, 24, 22.0)
+        Media.syntheticAviBlobs(src, 6, 256, 256, 24, 22.0)
       def probe(src: Long, deg: Double, sq: Double, ax: Int,
           from: Int): Array[Byte] = {
-        val rot = Multimodal.aviRotateResizeDib(
-          Multimodal.aviCropResizeDib(master(src), 32, 32, 224, 224,
+        val rot = Media.aviRotateResizeDib(
+          Media.aviCropResizeDib(master(src), 32, 32, 224, 224,
             256, 256), deg)
-        if (ax == 0) Multimodal.aviCropResizeDib(rot, 0, 0, 256, 256,
+        if (ax == 0) Media.aviCropResizeDib(rot, 0, 0, 256, 256,
           math.round(256 / sq).toInt, 256, from)
-        else Multimodal.aviCropResizeDib(rot, 0, 0, 256, 256, 256,
+        else Media.aviCropResizeDib(rot, 0, 0, 256, 256, 256,
           math.round(256 / sq).toInt, from)
       }
       if (id == 20L) probe(0, -23.0, 3.0, 0, 0)

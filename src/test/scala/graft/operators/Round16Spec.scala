@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -133,8 +134,8 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     // (45 X pairs + the Y pair), a tight one drops the X codes
     val media = s.range(0, 12).map { id =>
       val payload =
-        if (id < 10) Multimodal.syntheticPng(0L)
-        else Multimodal.syntheticPng(999L)
+        if (id < 10) Media.syntheticPng(0L)
+        else Media.syntheticPng(999L)
       (id, payload)
     }.toDF("doc_id", "payload")
     val generous = Multimodal.pairs(ImagePeak())(media, minMatch = 0.6,
@@ -166,7 +167,7 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     // the m185/m186 fixture class at toy size: 50 docs, every 10th a
     // planted crop x rotation x squeeze re-upload of doc_id-9
-    val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
+    val media = graft.fixtures.Corpora.cropAffinePngs(s, 50)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_a", "doc_b").collect().toSeq
     val (code, verified) = Multimodal.imageAffineFrameTiers(media, maxDf = 500)
@@ -183,9 +184,9 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     implicit val sp: SparkSession = s
     // m177-shaped fixture: 4 video masters + 1 crop x rotate re-rip
-    val mk = (id: Long) => Multimodal.syntheticAviBlobs(id, 6, 192, 192, 18, 22.0)
-    val probe = Multimodal.aviCropResizeDib(Multimodal.aviRotateResizeDib(
-      Multimodal.aviCropResizeDib(mk(0), 24, 24, 168, 168, 192, 192),
+    val mk = (id: Long) => Media.syntheticAviBlobs(id, 6, 192, 192, 18, 22.0)
+    val probe = Media.aviCropResizeDib(Media.aviRotateResizeDib(
+      Media.aviCropResizeDib(mk(0), 24, 24, 168, 168, 192, 192),
       17.0), 0, 0, 192, 192, 137, 192, 0)
     val media = s.range(0, 5).map(id =>
       (id, if (id == 4L) probe else mk(id))).toDF("doc_id", "payload")

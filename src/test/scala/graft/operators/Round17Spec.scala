@@ -47,7 +47,7 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = s
     // the m185/m186 fixture class at toy size: 50 docs, every 10th a
     // planted crop x rotation x squeeze re-upload of doc_id-9
-    val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
+    val media = graft.fixtures.Corpora.cropAffinePngs(s, 50)
     val anchored = Materialize.eager(
       Multimodal.ImageAffineFrameAnchored().landmarks(media))
     val lms = anchored.select(col("doc_id"), col("lm"))
@@ -84,7 +84,7 @@ class Round17Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("chiral verified tier: AutoDf solves its cap instead of the backstop") {
     val s = spark
     implicit val sp: SparkSession = s
-    val media = graft.tools.ScaleCheck.cropAffinePngs(s, 50)
+    val media = graft.fixtures.Corpora.cropAffinePngs(s, 50)
     val anchored = Materialize.eager(
       Multimodal.ImageAffineFrameAnchored().landmarks(media))
     // the chiral tier caps over distinct (doc, lm) of its identity +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,7 +29,7 @@ class Round18MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("verified tier: survivor-filtered gather == unconditional re-explode") {
     implicit val s: SparkSession = spark
-    val media = graft.tools.ScaleCheck.cropAffinePngs(spark, 60)
+    val media = graft.fixtures.Corpora.cropAffinePngs(spark, 60)
     // imageAffineFramePairsVerified(media, maxDf = 500) at a forced
     // gather bound
     def run(gather: Long): Seq[Seq[Any]] = Materialize.scoped {
@@ -51,8 +52,8 @@ class Round18MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // both gather paths
     val mk = udf((id: Long) => {
       def blobs(seed: Long): Array[Byte] =
-        Multimodal.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
-      if (id >= 20L) Multimodal.pngDihedral(blobs(id - 20L), 4)
+        Media.syntheticPngBlobs(seed, 256, 256, 24, 22.0)
+      if (id >= 20L) Media.pngDihedral(blobs(id - 20L), 4)
       else blobs(id)
     })
     val media = spark.range(0, 8).union(spark.range(20, 22))

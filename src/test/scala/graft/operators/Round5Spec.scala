@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -142,7 +143,7 @@ class Round5Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("image decode is real: resize recovers the exact block means via PNG roundtrip") {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val png = Multimodal.syntheticPng(7L, 16, 16)
+    val png = Media.syntheticPng(7L, 16, 16)
     assert(Multimodal.sniffImage(png))
     val media = Seq((7L, png)).toDF("doc_id", "payload")
     val resized = Multimodal.resize(media, factor = 4).head()

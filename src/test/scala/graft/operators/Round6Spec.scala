@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -316,7 +317,7 @@ class Round6Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GIF multi-frame decode: synthetic GIF roundtrips the generator pixels exactly") {
     import spark.implicits._
-    val gif = Multimodal.syntheticGif(5L)
+    val gif = Media.syntheticGif(5L)
     assert(Multimodal.sniffImage(gif))
     val frames = Multimodal.decodeGifFrames(gif).get
     assert(frames.length == 4)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -124,7 +125,7 @@ class Round6bSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("WAV decode: synthetic roundtrip, extra chunks + stereo, malformed rejected") {
     // roundtrip: the parser recovers the generator samples bit-for-bit
-    val p = Multimodal.syntheticWav(7L, 100)
+    val p = Media.syntheticWav(7L, 100)
     val w = Multimodal.decodeWav(p).get
     assert(w.sampleRate == 8000 && w.channels == 1 && w.samples.length == 100)
     (0 until 100).foreach { n =>

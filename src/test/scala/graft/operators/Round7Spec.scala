@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -193,8 +194,8 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("pHashPairs finds planted image near-dups with no cross pairs") {
     import spark.implicits._
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else Multimodal.syntheticPngVariant(id - 20))
+      if (id < 20) Media.syntheticPng(id)
+      else Media.syntheticPngVariant(id - 20))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     val pairs = Multimodal.pairs(PHash)(media, maxDist = 3)
@@ -210,8 +211,8 @@ class Round7Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else Multimodal.syntheticWavTex(id - 20,
+      if (id < 20) Media.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
+      else Media.syntheticWavTex(id - 20,
         (160 + ((id - 20) % 13) * 16).toInt, num = 9, den = 10))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -35,8 +36,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("pHashPairs decodes each image exactly once per run") {
     import spark.implicits._
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else Multimodal.syntheticPngVariant(id - 20))
+      if (id < 20) Media.syntheticPng(id)
+      else Media.syntheticPngVariant(id - 20))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     var pairs: Set[(Long, Long)] = Set.empty
@@ -54,8 +55,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else Multimodal.syntheticWavTex(id - 20,
+      if (id < 20) Media.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
+      else Media.syntheticWavTex(id - 20,
         (160 + ((id - 20) % 13) * 16).toInt, num = 9, den = 10))
     val media = spark.range(0, 40)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -79,8 +80,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // 10 textured tracks + 10 re-leveled copies (planted near-dups) +
     // 50 unrelated half-silent tracks sharing constant leading frames
     val wav = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else if (id < 20) Multimodal.syntheticWavTex(id - 10,
+      if (id < 10) Media.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
+      else if (id < 20) Media.syntheticWavTex(id - 10,
         (160 + ((id - 10) % 13) * 16).toInt, num = 9, den = 10)
       else halfSilentWav(id, 1024))
     val media = spark.range(0, 70)
@@ -124,7 +125,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // copies: the silence trimmed away — every frame index shifts by 4
     val wav = udf((id: Long) =>
       if (id < 10) silencePaddedWav(id, 256, 768)
-      else Multimodal.syntheticWavTexTrim(id - 10, 512, skip = 256))
+      else Media.syntheticWavTexTrim(id - 10, 512, skip = 256))
     val media = spark.range(0, 20)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val planted = (0L until 10L).map(i => (i, i + 10)).toSet
@@ -148,7 +149,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // candidate pairs from ONE bucket without the cap
     val wav = udf((id: Long) =>
       if (id < 10) silencePaddedWav(id, 256, 768)
-      else if (id < 20) Multimodal.syntheticWavTexTrim(id - 10, 512, skip = 256)
+      else if (id < 20) Media.syntheticWavTexTrim(id - 10, 512, skip = 256)
       else halfSilentWav(id, 1024))
     val media = spark.range(0, 70)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -166,8 +167,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
-      else Multimodal.syntheticWavTexTrim(id - 10,
+      if (id < 10) Media.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
+      else Media.syntheticWavTexTrim(id - 10,
         (320 + ((id - 10) % 8) * 64 - 128).toInt, skip = 128))
     val media = spark.range(0, 20)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -187,13 +188,13 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // DIB: bit-exact through the BMP wrap — frame hashes equal the
     // same pixels hashed any other lossless way, so just assert the
     // parse is complete and deterministic
-    val dib = Multimodal.aviFrames(Multimodal.syntheticAvi(7L, 5)).get
+    val dib = Multimodal.aviFrames(Media.syntheticAvi(7L, 5)).get
     assert(dib.length == 5)
     val dibHashes = dib.map(f => Multimodal.pHash64(f).get)
     assert(dibHashes.distinct.length == 5)
     // MJPEG: each '00dc' chunk is a standalone JPEG; lossy, so assert
     // perceptual proximity to the lossless frame, not equality
-    val jpg = Multimodal.aviFrames(Multimodal.syntheticAvi(7L, 5, mjpeg = true)).get
+    val jpg = Multimodal.aviFrames(Media.syntheticAvi(7L, 5, mjpeg = true)).get
     assert(jpg.length == 5)
     jpg.zip(dibHashes).foreach { case (frame, ref) =>
       val ph = Multimodal.pHash64(frame).get
@@ -205,7 +206,7 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("aviFrames is ingest-safe on malformed payloads") {
     assert(Multimodal.aviFrames("not a container".getBytes).isEmpty)
     assert(Multimodal.aviFrames(Array.empty[Byte]).isEmpty)
-    val good = Multimodal.syntheticAvi(3L, 4)
+    val good = Media.syntheticAvi(3L, 4)
     // truncation mid-chunk-table: frames before the damage still parse,
     // nothing throws
     val cut = Multimodal.aviFrames(good.take(good.length / 2))
@@ -219,8 +220,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // 10 base + 10 brightness-bumped copies, nFrames = 4 + id % 3:
     // sampled (every=2) frames per video = ceil(nFrames / 2)
     val avi = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (4 + id % 3).toInt)
-      else Multimodal.syntheticAvi(id - 20, (4 + (id - 20) % 3).toInt,
+      if (id < 20) Media.syntheticAvi(id, (4 + id % 3).toInt)
+      else Media.syntheticAvi(id - 20, (4 + (id - 20) % 3).toInt,
         delta = 12, global0 = true))
     val media = spark.range(0, 10).union(spark.range(20, 30))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -242,8 +243,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // copies cut the first 2 frames (one `every` stride): every sample
     // position shifts by 1, interior landmarks stay bit-identical
     val avi = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticAvi(id, (6 + id % 3).toInt)
-      else Multimodal.syntheticAvi(id - 10, (6 + (id - 10) % 3).toInt - 2,
+      if (id < 10) Media.syntheticAvi(id, (6 + id % 3).toInt)
+      else Media.syntheticAvi(id - 10, (6 + (id - 10) % 3).toInt - 2,
         frameOffset = 2))
     val media = spark.range(0, 20)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -264,10 +265,10 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // sampled positions 0 and 2 both render intro pixels, so the
     // (intro, intro) landmark buckets the whole group
     val avi = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticAvi(id, (6 + id % 3).toInt)
-      else if (id < 12) Multimodal.syntheticAvi(id - 6, (6 + (id - 6) % 3).toInt - 2,
+      if (id < 6) Media.syntheticAvi(id, (6 + id % 3).toInt)
+      else if (id < 12) Media.syntheticAvi(id - 6, (6 + (id - 6) % 3).toInt - 2,
         frameOffset = 2)
-      else Multimodal.syntheticAvi(id, 8, intro = 4))
+      else Media.syntheticAvi(id, 8, intro = 4))
     val media = spark.range(0, 36)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 6L).map(i => (i, i + 6)).toSet
@@ -287,10 +288,10 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     // sampled frame-0 bucket holds all 30, the candidate flood the
     // cap exists for (1 shared frame can never reach minMatch 0.8)
     val avi = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticAvi(id, (4 + id % 3).toInt)
-      else if (id < 12) Multimodal.syntheticAvi(id - 6, (4 + (id - 6) % 3).toInt,
+      if (id < 6) Media.syntheticAvi(id, (4 + id % 3).toInt)
+      else if (id < 12) Media.syntheticAvi(id - 6, (4 + (id - 6) % 3).toInt,
         delta = 12, global0 = true)
-      else Multimodal.syntheticAvi(id, 5, intro = 1))
+      else Media.syntheticAvi(id, 5, intro = 1))
     val media = spark.range(0, 42)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     val planted = (0L until 6L).map(i => (i, i + 6)).toSet
@@ -306,10 +307,10 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("m80/m82 pair plans are equi-joins — no cartesian, no broadcast NL join") {
     implicit val sp: SparkSession = spark
-    val wav = udf((id: Long) => Multimodal.syntheticWavTex(id, 320))
+    val wav = udf((id: Long) => Media.syntheticWavTex(id, 320))
     val audio = spark.range(0, 8)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
-    val avi = udf((id: Long) => Multimodal.syntheticAvi(id, 4))
+    val avi = udf((id: Long) => Media.syntheticAvi(id, 4))
     val video = spark.range(0, 8)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
     Seq(
@@ -329,8 +330,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedupAgainstPHashIndex decisions match pHashPairs on the union") {
     import spark.implicits._
     implicit val sp: SparkSession = spark
-    val corpusPng = udf((id: Long) => Multimodal.syntheticPng(id))
-    val probePng = udf((id: Long) => Multimodal.syntheticPngVariant(id - 1000000L))
+    val corpusPng = udf((id: Long) => Media.syntheticPng(id))
+    val probePng = udf((id: Long) => Media.syntheticPngVariant(id - 1000000L))
     val corpus = spark.range(0, 20)
       .select(col("id").as("doc_id"), corpusPng(col("id")).as("payload"))
     val probes = spark.range(1000000L, 1000020L)
@@ -353,8 +354,8 @@ class Round8Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 1000000L) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else Multimodal.syntheticWavTex(id - 1000000L,
+      if (id < 1000000L) Media.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
+      else Media.syntheticWavTex(id - 1000000L,
         (160 + ((id - 1000000L) % 13) * 16).toInt, num = 9, den = 10))
     val corpus = spark.range(0, 20)
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
@@ -501,18 +502,18 @@ object Round8Fixtures extends Serializable {
     * texture — the real-audio shape where unrelated tracks share the
     * all-zero autocorrelation code at the same leading frame indexes. */
   def halfSilentWav(id: Long, n: Int): Array[Byte] =
-    Multimodal.wavPcm16(Array.tabulate(n) { i =>
+    Media.wavPcm16(Array.tabulate(n) { i =>
       if (i < n / 2) 0
       else (((id * 40503L + 12289L) * (i + 7L) * (i + 13L)) % 65536L
         - 32768L).toInt
     })
 
-  /** `nSilence` zero samples then the [[Multimodal.syntheticWavTex]]
+  /** `nSilence` zero samples then the [[Media.syntheticWavTex]]
     * stream continued at ABSOLUTE index — so
     * `syntheticWavTexTrim(id, nTotal - nSilence, skip = nSilence)` is
     * a bit-exact leading trim of this payload. */
   def silencePaddedWav(id: Long, nSilence: Int, nTotal: Int): Array[Byte] =
-    Multimodal.wavPcm16(Array.tabulate(nTotal) { n =>
+    Media.wavPcm16(Array.tabulate(nTotal) { n =>
       if (n < nSilence) 0
       else (((id * 40503L + 12289L) * (n + 7L) * (n + 13L)) % 65536L
         - 32768L).toInt

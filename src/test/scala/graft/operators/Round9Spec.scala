@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -107,8 +108,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     // exact dedup never removes them — identical bytes model the same
     // hot bucket here)
     val png = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticPng(id)
-      else if (id < 20) Multimodal.syntheticPngVariant(id - 10)
+      if (id < 10) Media.syntheticPng(id)
+      else if (id < 20) Media.syntheticPngVariant(id - 10)
       else blankPng(128))
     val media = spark.range(0, 50)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
@@ -134,10 +135,10 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val corpusPng = udf((id: Long) =>
       if (id < 20) blankPng(128)
-      else Multimodal.syntheticPng(id - 20))
+      else Media.syntheticPng(id - 20))
     val probePng = udf((id: Long) =>
       if (id < 1000005L) blankPng(128)
-      else Multimodal.syntheticPngVariant(id - 1000005L))
+      else Media.syntheticPngVariant(id - 1000005L))
     val index = Multimodal.pHashChunkIndex(
       spark.range(0, 30).select(col("id").as("doc_id"),
         corpusPng(col("id")).as("payload")))
@@ -169,8 +170,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     // `every` stride — blinds aligned matching) AND MJPEG re-encoded
     // (pHash drift per frame — blinds exact landmarks)
     val avi = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (8 + id % 3).toInt)
-      else Multimodal.syntheticAvi(id - 20, (8 + (id - 20) % 3).toInt - 2,
+      if (id < 20) Media.syntheticAvi(id, (8 + id % 3).toInt)
+      else Media.syntheticAvi(id - 20, (8 + (id - 20) % 3).toInt - 2,
         mjpeg = true, frameOffset = 2))
     val media = spark.range(0, 8).union(spark.range(20, 28))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -236,7 +237,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- m88 AVI audio-track extraction (r8 verdict task #5) -----------
 
   test("aviAudioWav round-trips the embedded PCM track bit-for-bit") {
-    val avi = Multimodal.syntheticAvi(3L, 5, audioId = 9L, audioSamples = 321)
+    val avi = Media.syntheticAvi(3L, 5, audioId = 9L, audioSamples = 321)
     val wav = Multimodal.aviAudioWav(avi)
     assert(wav.isDefined, "audio track must extract")
     val pcm = Multimodal.decodeWav(wav.get)
@@ -246,7 +247,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pcm.get.samples.toSeq == expected,
       "extracted samples must equal the synthetic stream")
     // no audio track -> None; video frames unaffected by the track
-    assert(Multimodal.aviAudioWav(Multimodal.syntheticAvi(3L, 5)).isEmpty)
+    assert(Multimodal.aviAudioWav(Media.syntheticAvi(3L, 5)).isEmpty)
     assert(Multimodal.aviFrames(avi).get.size == 5)
   }
 
@@ -256,7 +257,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     // 8 videos, audio id = id % 4: pairs (i, i+4) share the exact audio
     // under entirely different frame streams
     val avi = udf((id: Long) =>
-      Multimodal.syntheticAvi(id, (6 + id % 3).toInt,
+      Media.syntheticAvi(id, (6 + id % 3).toInt,
         audioId = id % 4, audioSamples = (320 + (id % 4) * 64).toInt))
     val media = spark.range(0, 8)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -276,8 +277,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("capped pair plans filter before collect_list (semi join below the aggregate)") {
     implicit val sp: SparkSession = spark
     val avi = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (6 + id % 3).toInt, intro = 2)
-      else Multimodal.syntheticAvi(id - 20, (6 + (id - 20) % 3).toInt,
+      if (id < 20) Media.syntheticAvi(id, (6 + id % 3).toInt, intro = 2)
+      else Media.syntheticAvi(id - 20, (6 + (id - 20) % 3).toInt,
         mjpeg = true, intro = 2))
     val vmedia = spark.range(0, 8).union(spark.range(20, 28))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -287,7 +288,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vplan.indexOf("collect_list") < vplan.indexOf("LeftSemi"),
       "m82 cap must sit BELOW the posting-list aggregation")
 
-    val png = udf((id: Long) => Multimodal.syntheticPng(id))
+    val png = udf((id: Long) => Media.syntheticPng(id))
     val imedia = spark.range(0, 10)
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     val iplan = Multimodal.pairs(PHash)(imedia, maxDist = 3, maxDf = 8)
@@ -303,9 +304,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("mp4Frames/mp4AudioWav equal the AVI mux of the same content byte-for-byte") {
     for (id <- 0L to 2L; co64 <- Seq(false, true)) {
       val n = (4 + id % 3).toInt
-      val avi = Multimodal.syntheticAvi(id, n, mjpeg = true,
+      val avi = Media.syntheticAvi(id, n, mjpeg = true,
         audioId = id % 2, audioSamples = 320)
-      val mp4 = Multimodal.syntheticMp4(id, n,
+      val mp4 = Media.syntheticMp4(id, n,
         audioId = id % 2, audioSamples = 320, co64 = co64)
       val fa = Multimodal.aviFrames(avi).get
       val fm = Multimodal.mp4Frames(mp4).get
@@ -318,12 +319,12 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"extracted WAV diverges (id=$id, co64=$co64)")
     }
     // no audio track -> None; frames unaffected
-    assert(Multimodal.mp4AudioWav(Multimodal.syntheticMp4(1L, 4)).isEmpty)
-    assert(Multimodal.mp4Frames(Multimodal.syntheticMp4(1L, 4)).get.size == 4)
+    assert(Multimodal.mp4AudioWav(Media.syntheticMp4(1L, 4)).isEmpty)
+    assert(Multimodal.mp4Frames(Media.syntheticMp4(1L, 4)).get.size == 4)
   }
 
   test("mp4 walk: big-endian 'twos' PCM byte-swaps to the same samples") {
-    val mp4 = Multimodal.syntheticMp4(5L, 3, audioId = 7L, audioSamples = 250)
+    val mp4 = Media.syntheticMp4(5L, 3, audioId = 7L, audioSamples = 250)
     val sowt = Multimodal.mp4AudioWav(mp4).get
     // rewrite the stsd codec fourcc and byte-swap the PCM in mdat: the
     // identical stream muxed big-endian
@@ -345,7 +346,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mp4 walk degrades gracefully on damage and unknown codecs") {
-    val mp4 = Multimodal.syntheticMp4(2L, 5)
+    val mp4 = Media.syntheticMp4(2L, 5)
     // truncation inside mdat: moov (and so the sample table) is gone ->
     // BMFF still recognized, no frames claimed, nothing thrown
     val cut = java.util.Arrays.copyOfRange(mp4, 0, mp4.length / 2)
@@ -357,24 +358,24 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Multimodal.mp4Frames(patched).exists(_.isEmpty))
     // non-BMFF payloads are None, not empty (the dispatch contract)
     assert(Multimodal.mp4Frames("not a container".getBytes).isEmpty)
-    assert(Multimodal.mp4Frames(Multimodal.syntheticAvi(2L, 3)).isEmpty)
+    assert(Multimodal.mp4Frames(Media.syntheticAvi(2L, 3)).isEmpty)
     // and containerFrames dispatches both muxes
-    assert(Multimodal.containerFrames(Multimodal.syntheticAvi(2L, 3)).get.size == 3)
+    assert(Multimodal.containerFrames(Media.syntheticAvi(2L, 3)).get.size == 3)
     assert(Multimodal.containerFrames(mp4).get.size == 5)
   }
 
   test("fMP4 (moof/trun) fragments equal the plain-MP4 mux frame-for-frame") {
     for (id <- 0L to 2L; perFrag <- Seq(1, 2, 3)) {
       val n = (5 + id % 3).toInt
-      val plain = Multimodal.mp4Frames(Multimodal.syntheticMp4(id, n)).get
+      val plain = Multimodal.mp4Frames(Media.syntheticMp4(id, n)).get
       val frag = Multimodal.mp4Frames(
-        Multimodal.syntheticFmp4(id, n, perFrag = perFrag)).get
+        Media.syntheticFmp4(id, n, perFrag = perFrag)).get
       assert(frag.size == n, s"id=$id perFrag=$perFrag: ${frag.size} != $n")
       frag.zip(plain).foreach { case (a, b) =>
         assert(java.util.Arrays.equals(a, b), "fragment sample bytes diverge") }
     }
     // truncation mid-stream: frames from intact fragments still return
-    val whole = Multimodal.syntheticFmp4(1L, 6, perFrag = 2)
+    val whole = Media.syntheticFmp4(1L, 6, perFrag = 2)
     val frames = Multimodal.mp4Frames(whole).get
     val cut = java.util.Arrays.copyOfRange(whole, 0, whole.length - 10)
     val partial = Multimodal.mp4Frames(cut).get
@@ -388,27 +389,27 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     for (id <- 0L to 2L; perFrag <- Seq(1, 2)) {
       val n = (4 + id % 3).toInt
       val plain = Multimodal.mp4AudioWav(
-        Multimodal.syntheticMp4(id, n, audioId = id % 2, audioSamples = 320)).get
+        Media.syntheticMp4(id, n, audioId = id % 2, audioSamples = 320)).get
       val frag = Multimodal.mp4AudioWav(
-        Multimodal.syntheticFmp4(id, n, perFrag = perFrag,
+        Media.syntheticFmp4(id, n, perFrag = perFrag,
           audioId = id % 2, audioSamples = 320)).get
       assert(java.util.Arrays.equals(frag, plain),
         s"fragment-resident audio diverges (id=$id perFrag=$perFrag)")
       // video frames unaffected by the second track's fragments
-      val fv = Multimodal.mp4Frames(Multimodal.syntheticFmp4(id, n,
+      val fv = Multimodal.mp4Frames(Media.syntheticFmp4(id, n,
         perFrag = perFrag, audioId = id % 2, audioSamples = 320)).get
       assert(fv.size == n)
     }
     // no audio -> None, as in the plain mux
-    assert(Multimodal.mp4AudioWav(Multimodal.syntheticFmp4(1L, 4)).isEmpty)
+    assert(Multimodal.mp4AudioWav(Media.syntheticFmp4(1L, 4)).isEmpty)
   }
 
   test("cross-container near-dup: the same video muxed AVI and MP4 matches at 1.0") {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val mk = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (6 + id % 3).toInt, mjpeg = true)
-      else Multimodal.syntheticMp4(id - 20, (6 + (id - 20) % 3).toInt))
+      if (id < 20) Media.syntheticAvi(id, (6 + id % 3).toInt, mjpeg = true)
+      else Media.syntheticMp4(id - 20, (6 + (id - 20) % 3).toInt))
     val media = spark.range(0, 4).union(spark.range(20, 24))
       .select(col("id").as("doc_id"), mk(col("id")).as("payload"))
     val pairs = Multimodal.pairs(VideoFrames())(media)
@@ -421,9 +422,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("mkvFrames/mkvAudioWav equal the AVI mux of the same content byte-for-byte") {
     for (id <- 0L to 2L; vfw <- Seq(false, true); bg <- Seq(false, true)) {
       val n = (4 + id % 3).toInt
-      val avi = Multimodal.syntheticAvi(id, n, mjpeg = true,
+      val avi = Media.syntheticAvi(id, n, mjpeg = true,
         audioId = id % 2, audioSamples = 320)
-      val mkv = Multimodal.syntheticMkv(id, n,
+      val mkv = Media.syntheticMkv(id, n,
         audioId = id % 2, audioSamples = 320, vfw = vfw, blockGroup = bg)
       val fa = Multimodal.aviFrames(avi).get
       val fm = Multimodal.mkvFrames(mkv).get
@@ -437,16 +438,16 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"extracted WAV diverges (id=$id vfw=$vfw bg=$bg)")
     }
     // no audio track -> None; frames unaffected
-    assert(Multimodal.mkvAudioWav(Multimodal.syntheticMkv(1L, 4)).isEmpty)
-    assert(Multimodal.mkvFrames(Multimodal.syntheticMkv(1L, 4)).get.size == 4)
+    assert(Multimodal.mkvAudioWav(Media.syntheticMkv(1L, 4)).isEmpty)
+    assert(Multimodal.mkvFrames(Media.syntheticMkv(1L, 4)).get.size == 4)
   }
 
   test("mkv unknown-size Segment (live-stream mux) walks identically") {
     for (id <- 0L to 2L) {
       val n = (5 + id % 2).toInt
-      val sized = Multimodal.mkvFrames(Multimodal.syntheticMkv(id, n)).get
+      val sized = Multimodal.mkvFrames(Media.syntheticMkv(id, n)).get
       val live = Multimodal.mkvFrames(
-        Multimodal.syntheticMkv(id, n, unknownSize = true)).get
+        Media.syntheticMkv(id, n, unknownSize = true)).get
       assert(live.size == n)
       live.zip(sized).foreach { case (a, b) =>
         assert(java.util.Arrays.equals(a, b),
@@ -455,7 +456,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mkv walk degrades gracefully on damage and unknown codecs") {
-    val mkv = Multimodal.syntheticMkv(2L, 6)
+    val mkv = Media.syntheticMkv(2L, 6)
     val frames = Multimodal.mkvFrames(mkv).get
     // truncation mid-cluster: blocks before the cut still return
     val cut = java.util.Arrays.copyOfRange(mkv, 0, mkv.length - 10)
@@ -471,7 +472,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     "V_VP9\u0000\u0000".getBytes("US-ASCII").copyToArray(patched, at)
     assert(Multimodal.mkvFrames(patched).exists(_.isEmpty))
     // VfW mux whose BITMAPINFOHEADER is NOT MJPEG: undecodable too
-    val vfw = Multimodal.syntheticMkv(2L, 3, vfw = true)
+    val vfw = Media.syntheticMkv(2L, 3, vfw = true)
     val vp = vfw.clone()
     val cp = vp.indexOfSlice(Array[Byte]('M', 'J', 'P', 'G'))
     assert(cp > 0)
@@ -479,17 +480,17 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Multimodal.mkvFrames(vp).exists(_.isEmpty))
     // non-EBML payloads are None, not empty (the dispatch contract)
     assert(Multimodal.mkvFrames("not a container".getBytes).isEmpty)
-    assert(Multimodal.mkvFrames(Multimodal.syntheticAvi(2L, 3)).isEmpty)
+    assert(Multimodal.mkvFrames(Media.syntheticAvi(2L, 3)).isEmpty)
     // and containerFrames dispatches all three muxes
     assert(Multimodal.containerFrames(mkv).get.size == 6)
     assert(Multimodal.containerFrames(
-      Multimodal.syntheticMp4(2L, 5)).get.size == 5)
+      Media.syntheticMp4(2L, 5)).get.size == 5)
     assert(Multimodal.containerFrames(
-      Multimodal.syntheticAvi(2L, 3)).get.size == 3)
+      Media.syntheticAvi(2L, 3)).get.size == 3)
   }
 
   test("mkv subtitle track extracts newline-joined cues alongside video+audio") {
-    val mkv = Multimodal.syntheticMkv(4L, 5, audioId = 1L,
+    val mkv = Media.syntheticMkv(4L, 5, audioId = 1L,
       audioSamples = 320, subsId = 7L, subsCues = 4)
     val expected = (0 until 4)
       .map(i => s"c${(7L * 40503L + i * 127L) % 9973L}").mkString("\n")
@@ -498,8 +499,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Multimodal.mkvFrames(mkv).get.size == 5)
     assert(Multimodal.mkvAudioWav(mkv).nonEmpty)
     // no subtitle track -> None; non-MKV containers -> None
-    assert(Multimodal.mkvSubtitleText(Multimodal.syntheticMkv(4L, 3)).isEmpty)
-    assert(Multimodal.mkvSubtitleText(Multimodal.syntheticAvi(4L, 3)).isEmpty)
+    assert(Multimodal.mkvSubtitleText(Media.syntheticMkv(4L, 3)).isEmpty)
+    assert(Multimodal.mkvSubtitleText(Media.syntheticAvi(4L, 3)).isEmpty)
   }
 
   test("walkers never throw on random or bit-flipped payloads") {
@@ -522,13 +523,13 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
       exercise(b)
     }
     val fixtures = Seq(
-      Multimodal.syntheticAvi(3L, 5, mjpeg = true, audioId = 1L,
+      Media.syntheticAvi(3L, 5, mjpeg = true, audioId = 1L,
         audioSamples = 320),
-      Multimodal.syntheticMp4(3L, 4, audioId = 1L, audioSamples = 256),
-      Multimodal.syntheticFmp4(3L, 4, perFrag = 2),
-      Multimodal.syntheticMkv(3L, 4, audioId = 1L, audioSamples = 256,
+      Media.syntheticMp4(3L, 4, audioId = 1L, audioSamples = 256),
+      Media.syntheticFmp4(3L, 4, perFrag = 2),
+      Media.syntheticMkv(3L, 4, audioId = 1L, audioSamples = 256,
         subsId = 2L, subsCues = 4),
-      Multimodal.syntheticWavTex(3L, 256))
+      Media.syntheticWavTex(3L, 256))
     for (f <- fixtures; _ <- 0 until 100) {
       val m = f.clone()
       val k = 1 + rnd.nextInt(4)
@@ -587,8 +588,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val avi = udf((id: Long) =>
-      if (id < 1000000L) Multimodal.syntheticAvi(id, (4 + id % 3).toInt)
-      else Multimodal.syntheticAvi(id - 1000000L,
+      if (id < 1000000L) Media.syntheticAvi(id, (4 + id % 3).toInt)
+      else Media.syntheticAvi(id - 1000000L,
         (4 + (id - 1000000L) % 3).toInt, delta = 12, global0 = true))
     val corpus = spark.range(0, 10)
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -613,8 +614,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticWavTex(id, 320)
-      else Multimodal.syntheticWavTexRate(id - 10, 320, factor = (id % 3 + 2).toInt))
+      if (id < 10) Media.syntheticWavTex(id, 320)
+      else Media.syntheticWavTexRate(id - 10, 320, factor = (id % 3 + 2).toInt))
     val media = spark.range(0, 3).union(spark.range(10, 13))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val codes = Multimodal.audioFingerprint(media).toDF()
@@ -625,7 +626,7 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"doc $i: resampled fingerprint must equal the 8kHz master's")
     // a NON-multiple rate passes through unchanged (no false recovery)
     val odd = Multimodal.decodeWav(
-      Multimodal.syntheticWavTex(1L, 320)).get
+      Media.syntheticWavTex(1L, 320)).get
     assert(odd.sampleRate == 8000) // fixture sanity: base rate is canonical
   }
 
@@ -634,14 +635,14 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = spark
     // the mirrored image's as-is hash equals the original's
     // mirrored-grid hash at the 16x16 fixture size (cell-exact mirror)
-    val (ph0, phf0) = Multimodal.pHash64Both(Multimodal.syntheticPng(7L)).get
-    val flipped = Multimodal.pHash64(Multimodal.syntheticPngFlip(7L)).get
+    val (ph0, phf0) = Multimodal.pHash64Both(Media.syntheticPng(7L)).get
+    val flipped = Multimodal.pHash64(Media.syntheticPngFlip(7L)).get
     assert(flipped == phf0 && flipped != ph0,
       "mirror must change the hash and match the mirrored-grid hash")
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else if (id < 24) Multimodal.syntheticPngFlip(id - 20)
-      else Multimodal.syntheticPngVariant(id - 20))
+      if (id < 20) Media.syntheticPng(id)
+      else if (id < 24) Media.syntheticPngFlip(id - 20)
+      else Media.syntheticPngVariant(id - 20))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     val tolerant = Multimodal.pairs(PHashFlip)(media)
@@ -662,8 +663,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val avi = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticAvi(id, (4 + id % 3).toInt)
-      else Multimodal.syntheticAvi(id - 20, (4 + (id - 20) % 3).toInt,
+      if (id < 20) Media.syntheticAvi(id, (4 + id % 3).toInt)
+      else Media.syntheticAvi(id - 20, (4 + (id - 20) % 3).toInt,
         delta = 12, global0 = true, mirrorX = true))
     val media = spark.range(0, 4).union(spark.range(20, 24))
       .select(col("id").as("doc_id"), avi(col("id")).as("payload"))
@@ -683,9 +684,9 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val base = spark.range(0, 1).select(col("id").as("doc_id"),
-      udf(() => Multimodal.syntheticAvi(5L, 8)).apply().as("payload"))
+      udf(() => Media.syntheticAvi(5L, 8)).apply().as("payload"))
     val copy = spark.range(1, 2).select(col("id").as("doc_id"),
-      udf(() => Multimodal.syntheticAvi(5L, 6, frameOffset = 2,
+      udf(() => Media.syntheticAvi(5L, 6, frameOffset = 2,
         mirrorX = true)).apply().as("payload"))
     val lmBase = Multimodal.videoLandmarks(base, every = 2).collect()
       .map(l => (l.lm_a, l.lm_b)).toSet
@@ -705,15 +706,15 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sp: SparkSession = spark
     // square-image exactness: the rotated image's as-is hash equals
     // the original's correspondingly-rotated grid hash, per turn
-    val rots = Multimodal.pHash64Rots(Multimodal.syntheticPng(9L)).get
+    val rots = Multimodal.pHash64Rots(Media.syntheticPng(9L)).get
     for (q <- 1 to 3) {
-      val h = Multimodal.pHash64(Multimodal.syntheticPngRot(9L, q)).get
+      val h = Multimodal.pHash64(Media.syntheticPngRot(9L, q)).get
       assert(h == rots(q), s"quarter-turn $q hash mismatch")
       assert(h != rots(0), s"quarter-turn $q should change the hash")
     }
     val png = udf((id: Long) =>
-      if (id < 20) Multimodal.syntheticPng(id)
-      else Multimodal.syntheticPngRot(id - 20, (id % 3 + 1).toInt))
+      if (id < 20) Media.syntheticPng(id)
+      else Media.syntheticPngRot(id - 20, (id % 3 + 1).toInt))
     val media = spark.range(0, 6).union(spark.range(20, 26))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     val tol = Multimodal.pairs(PHashRot)(media)
@@ -730,8 +731,8 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sp: SparkSession = spark
     val wav = udf((id: Long) =>
-      if (id < 10) Multimodal.syntheticWavTex(id, 320)
-      else Multimodal.syntheticWavTexStereo(id - 10, 320))
+      if (id < 10) Media.syntheticWavTex(id, 320)
+      else Media.syntheticWavTexStereo(id - 10, 320))
     val media = spark.range(0, 3).union(spark.range(10, 13))
       .select(col("id").as("doc_id"), wav(col("id")).as("payload"))
     val codes = Multimodal.audioFingerprint(media).toDF()
@@ -742,19 +743,19 @@ class Round9Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"doc $i: stereo fingerprint must equal the mono master's")
     // fixture sanity: the stereo payload really declares 2 channels
     assert(Multimodal.decodeWav(
-      Multimodal.syntheticWavTexStereo(1L, 64)).get.channels == 2)
+      Media.syntheticWavTexStereo(1L, 64)).get.channels == 2)
   }
 
   test("mkv explicit cueLines round-trip UTF-8 text exactly") {
     val lines = Seq("héllo wörld", "日本語テスト", "plain ascii", "émoji ✓")
-    val mkv = Multimodal.syntheticMkv(1L, 3, cueLines = lines)
+    val mkv = Media.syntheticMkv(1L, 3, cueLines = lines)
     assert(Multimodal.mkvSubtitleText(mkv).contains(lines.mkString("\n")))
     // empty lines are dropped (an empty block payload is not a cue)
-    val sparse = Multimodal.syntheticMkv(1L, 3, cueLines = Seq("a", "", "b"))
+    val sparse = Media.syntheticMkv(1L, 3, cueLines = Seq("a", "", "b"))
     assert(Multimodal.mkvSubtitleText(sparse).contains("a\nb"))
     // cueLines of only empties -> no subtitle track at all
     assert(Multimodal.mkvSubtitleText(
-      Multimodal.syntheticMkv(1L, 3, cueLines = Seq("", ""))).isEmpty)
+      Media.syntheticMkv(1L, 3, cueLines = Seq("", ""))).isEmpty)
   }
 
   test("joint audio+video fusion classifies reupload / same_audio / same_video") {
@@ -780,12 +781,12 @@ object Round9Fixtures {
     * muxed MKV, 21 = audio of 1 under other frames muxed MP4, 22 =
     * frames of 2 under other audio, 23 unrelated. */
   def jointFixture(id: Long): Array[Byte] = id match {
-    case 20L => Multimodal.syntheticMkv(0L, 6, audioId = 0L, audioSamples = 320)
-    case 21L => Multimodal.syntheticMp4(21L, 7, audioId = 1L, audioSamples = 384)
-    case 22L => Multimodal.syntheticMkv(2L, 8, audioId = 99L, audioSamples = 320)
-    case 23L => Multimodal.syntheticAvi(23L, 6, mjpeg = true,
+    case 20L => Media.syntheticMkv(0L, 6, audioId = 0L, audioSamples = 320)
+    case 21L => Media.syntheticMp4(21L, 7, audioId = 1L, audioSamples = 384)
+    case 22L => Media.syntheticMkv(2L, 8, audioId = 99L, audioSamples = 320)
+    case 23L => Media.syntheticAvi(23L, 6, mjpeg = true,
       audioId = 98L, audioSamples = 320)
-    case i => Multimodal.syntheticAvi(i, (6 + i % 3).toInt, mjpeg = true,
+    case i => Media.syntheticAvi(i, (6 + i % 3).toInt, mjpeg = true,
       audioId = i, audioSamples = (320 + (i % 4) * 64).toInt)
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.fixtures.Media
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -103,34 +104,34 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val V = Seq("doc_id", "lm_a", "lm_b", "hits")
 
   private def tones(id: Long) =
-    Multimodal.syntheticWavTones(id, 8000, ms = 1248, gateMs = 32, segMs = 96,
+    Media.syntheticWavTones(id, 8000, ms = 1248, gateMs = 32, segMs = 96,
       permMs = 32)
   private def audio(id: Long): Array[Byte] = id match {
     case i if i < 4 => tones(i)
-    case i if i < 6 => Multimodal.syntheticWavBeats(i, 8000)
-    case i if i < 8 => Multimodal.syntheticWavTex(i, 640)
-    case i if i < 14 => Multimodal.syntheticWavTones(i - 10, 44100, ms = 1120,
+    case i if i < 6 => Media.syntheticWavBeats(i, 8000)
+    case i if i < 8 => Media.syntheticWavTex(i, 640)
+    case i if i < 14 => Media.syntheticWavTones(i - 10, 44100, ms = 1120,
       offsetMs = 50, gateMs = 32, segMs = 96, permMs = 32)
-    case i if i < 16 => Multimodal.syntheticWavBeats(i - 10, 44100, offsetMs = 50)
+    case i if i < 16 => Media.syntheticWavBeats(i - 10, 44100, offsetMs = 50)
     case i if i < 19 => tones(0)
-    case _ => Multimodal.syntheticWavTex(6, 640)
+    case _ => Media.syntheticWavTex(6, 640)
   }
   private def image(id: Long): Array[Byte] = id match {
-    case i if i < 3 => Multimodal.syntheticPngBlobs(i)
-    case i if i < 6 => Multimodal.syntheticPng(i, 64, 64)
-    case i if i < 13 => Multimodal.syntheticPngBlobs(0)
-    case 13 => Multimodal.syntheticPngFlip(3, 64, 64)
-    case 14 => Multimodal.syntheticPngRot(4, 1, 64, 64)
-    case 15 => Multimodal.syntheticPngCrop(5, 16, 16, 48, 48)
-    case _ => Multimodal.syntheticPng(3, 64, 64)
+    case i if i < 3 => Media.syntheticPngBlobs(i)
+    case i if i < 6 => Media.syntheticPng(i, 64, 64)
+    case i if i < 13 => Media.syntheticPngBlobs(0)
+    case 13 => Media.syntheticPngFlip(3, 64, 64)
+    case 14 => Media.syntheticPngRot(4, 1, 64, 64)
+    case 15 => Media.syntheticPngCrop(5, 16, 16, 48, 48)
+    case _ => Media.syntheticPng(3, 64, 64)
   }
   private def video(id: Long): Array[Byte] = id match {
-    case i if i < 3 => Multimodal.syntheticAvi(i, 8)
-    case i if i < 5 => Multimodal.syntheticAviBlobs(i, 4)
-    case i if i < 13 => Multimodal.syntheticAvi(0, 8)
-    case 13 => Multimodal.syntheticAvi(1, 6, frameOffset = 2, mirrorX = true)
-    case 14 => Multimodal.syntheticAvi(2, 6, frameOffset = 2, rotQ = 1)
-    case _ => Multimodal.syntheticAviBlobs(3, 4)
+    case i if i < 3 => Media.syntheticAvi(i, 8)
+    case i if i < 5 => Media.syntheticAviBlobs(i, 4)
+    case i if i < 13 => Media.syntheticAvi(0, 8)
+    case 13 => Media.syntheticAvi(1, 6, frameOffset = 2, mirrorX = true)
+    case 14 => Media.syntheticAvi(2, 6, frameOffset = 2, rotQ = 1)
+    case _ => Media.syntheticAviBlobs(3, 4)
   }
 
   private val audioTiers: Seq[Tier] = Seq(
@@ -468,9 +469,9 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("verdicts(PHash) maxBucket keeps planted decisions amid a hot identical-image bucket") {
     val png = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticPng(id)
-      else if (id < 200) Multimodal.syntheticPngVariant(id - 194) // ids 194..199 -> variants of 0..5
-      else Multimodal.syntheticPng(999)) // 30 identical copies: the hot bucket
+      if (id < 6) Media.syntheticPng(id)
+      else if (id < 200) Media.syntheticPngVariant(id - 194) // ids 194..199 -> variants of 0..5
+      else Media.syntheticPng(999)) // 30 identical copies: the hot bucket
     val media = spark.range(0, 6).union(spark.range(194, 230))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     def decisions(maxBucket: Int): Map[Long, Option[Long]] =
@@ -499,9 +500,9 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
       repost: Long => Array[Byte]): Unit = {
     import spark.implicits._
     val png = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticPng(id)
+      if (id < 6) Media.syntheticPng(id)
       else if (id < 200) repost(id)
-      else Multimodal.syntheticPng(999))
+      else Media.syntheticPng(999))
     val media = spark.range(0, 6).union(spark.range(194, 230))
       .select(col("id").as("doc_id"), png(col("id")).as("payload"))
     def run(maxBucket: Int): DataFrame =
@@ -525,12 +526,12 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("verdicts(PHashFlip): unique (doc, orient, chunk) keys, cap keeps decisions") {
     orientedCapContract(PHashFlip, "mirrored",
-      id => Multimodal.syntheticPngFlip(id - 194))
+      id => Media.syntheticPngFlip(id - 194))
   }
 
   test("verdicts(PHashRot): unique (doc, orient, chunk) keys, cap keeps decisions") {
     orientedCapContract(PHashRot, "rotated",
-      id => Multimodal.syntheticPngRot(id - 194, ((id % 3) + 1).toInt))
+      id => Media.syntheticPngRot(id - 194, ((id % 3) + 1).toInt))
   }
 
   // ---- st74 hits(AudioLandmark()) and st73 hits(AudioCode): caps -----
@@ -559,8 +560,8 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // planted trims + 30 half-silent tracks whose shared (0,0) silence
     // landmark would otherwise bucket the whole corpus together
     val wav = udf((id: Long) =>
-      if (id < 8) Multimodal.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
-      else if (id < 16) Multimodal.syntheticWavTexTrim(id - 8,
+      if (id < 8) Media.syntheticWavTex(id, (320 + (id % 8) * 64).toInt)
+      else if (id < 16) Media.syntheticWavTexTrim(id - 8,
         (320 + ((id - 8) % 8) * 64 - 128).toInt, skip = 128)
       else halfSilentWav(id, 1024))
     val media = spark.range(0, 46)
@@ -585,8 +586,8 @@ class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // each bucket's rows in one id-ordered pass, so decisions match the
     // id-monotonic streaming delivery by the operator's own contract.
     val wav = udf((id: Long) =>
-      if (id < 6) Multimodal.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
-      else if (id < 12) Multimodal.syntheticWavTex(id - 6,
+      if (id < 6) Media.syntheticWavTex(id, (160 + (id % 13) * 16).toInt)
+      else if (id < 12) Media.syntheticWavTex(id - 6,
         (160 + ((id - 6) % 13) * 16).toInt, num = 9, den = 10)
       else halfSilentWav(id, 1024))
     val media = spark.range(0, 42)

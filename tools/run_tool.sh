@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft tool main against the snapshotted classpath, bypassing
 # sbt (keeps sbt free for compiles while long measurements run).
-# Usage: XMX=24g XMS=24g tools/run_tool.sh graft.tools.GrowthBench args...
+# Usage: XMX=24g XMS=24g tools/run_tool.sh graft.tools.ScaleCheck args...
 set -u
 CLS="${CLS:-/tmp/graft_cls}"
 XMX="${XMX:-8g}"
