@@ -1073,16 +1073,8 @@ object Multimodal {
     * the payload end. Non-integer-semitone shifts split energy
     * between adjacent bands and degrade gracefully through
     * match_frac rather than structurally. */
-  /** The anchor-band position of [[chromaCodeAt]] alone — diagnostic
-    * hook for phase-robustness analysis of true (envelope-preserving)
-    * pitch shifts. */
-  private[operators] def chromaAnchorAt(mono: Array[Short], rate: Int,
-      off: Int, cyc: Int, div: Int = 12): Int =
-    chromaCodeAt(mono, rate, off, cyc, div, anchorOnly = true)
-
   private[operators] def chromaCodeAt(mono: Array[Short], rate: Int,
-      off: Int, cyc: Int, div: Int = 12,
-      anchorOnly: Boolean = false, folds: Int = 1): Int = {
+      off: Int, cyc: Int, div: Int = 12, folds: Int = 1): Int = {
     require(div >= 12 && div <= 48 && div % 12 == 0,
       "div must be a multiple of 12 in 12..48 (code geometry scales " +
         "by q = div/12 so distances stay fixed in cents)")
@@ -1161,7 +1153,6 @@ object Multimodal {
     var m = q
     while (m < bands - q && sm(m) < mx / 2) m += 1
     if (m + 16 * q >= bands) return -1 // window would cross the top
-    if (anchorOnly) return m
     // bits compare smoothed bands THREE SEMITONES (3q bands) apart,
     // not adjacent — a 3-semitone gap spans into the next partial's
     // region, so the ordering is energy-driven, not noise-driven
@@ -2227,13 +2218,12 @@ object Multimodal {
 
   /** Survivor-pair bound under which the verified tier's gather pass
     * pre-filters its re-explode to survivor docs (round 18 — see
-    * [[affineFramePairsVerifiedFrom]]). The filter probes a literal
+    * [[verifiedCandidates]]). The filter probes a literal
     * sorted id array per posting entry, so its worst-case extra cost
     * is entries x 2*threshold long-compares — bounded small by this
     * constant; corpora whose survivor mass exceeds it take the
     * unconditional re-explode exactly as round 17 shipped it. A spec
-    * forces either path through [[verifiedPairsFrom]] /
-    * [[affineFramePairsChiralVerifiedFrom]]. */
+    * forces either path through [[verifiedPairs]]' `gatherMaxPairs`. */
   private[graft] val SurvivorGatherMaxPairs: Long = 256L
 
   @transient private lazy val hotLog =
@@ -3533,50 +3523,6 @@ object Multimodal {
       }).toDF("doc_id", "lm", "ax", "ay")
   }
 
-  /** VERIFIED crop x affine video pairs (m182 — the m179 verdict at
-    * the frame sequence): [[videoAffineFrameLandmarks]]' code gate
-    * measured the same fragility the image tier did (gray-zone
-    * compounds score just under the m177 gate while the decoy tail
-    * reaches it), so candidates nominate at a LOW gate over the
-    * pooled per-video code sets and each candidate is RANSAC-verified
-    * from the matched codes' pooled anchor correspondences — the
-    * rendering transform is one affine map across ALL frames, so the
-    * pooled anchor clouds align exactly like the image member's.
-    * verifyMinFrac sits LOWER than the image default: a leading trim
-    * removes whole frames' anchors from the shared field (a 2-of-6
-    * frame trim caps the aligned fraction near 2/3), while a decoy's
-    * verified fraction stays pinned at ~0 by the same absolute floor. */
-  def videoAffineFramePairsVerified(media: DataFrame,
-      candMinMatch: Double = 0.004, candMinShared: Int = 4,
-      verifyMinFrac: Double = 0.4, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0,
-      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored()): DataFrame =
-    affineFramePairsVerifiedFrom(Materialize.eager(f.landmarks(media)),
-      candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
-      tolPx, maxDf)
-
-  /** Video near-dup pairs under the MIRROR x CROP x FULL-AFFINE
-    * compound (m187 — m181's chiral readout at the frame sequence):
-    * the affine-frame family is chirality-FIXED by design (oriented
-    * bases, det > 0), so a mirrored re-rip is invisible to m177 —
-    * and a mirrored rendering's invariant coordinates swap (u, v)
-    * exactly PER FRAME, so the pooled video mirror readout is the
-    * same pure Long->Long repack of the pooled identity codes (no
-    * second container walk, no second detection). The m140/m145
-    * asymmetric fan shape keeps indexes and state identity-sized;
-    * orient 1 = landed via the mirror readout. */
-  def videoAffineFramePairsChiral(media: DataFrame,
-      minMatch: Double = 0.02, maxDf: Int = 0, minShared: Int = 16,
-      f: VideoAffineFrame = VideoAffineFrame()): DataFrame = {
-    val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    val id0 = Materialize.eager(f.landmarks(media))
-    val lms = id0.select(col("doc_id"), lit(0).as("orient"), col("lm"))
-      .unionByName(id0.select(col("doc_id"), lit(1).as("orient"),
-        mir(col("lm")).as("lm")))
-    orientedLandmarkPairScores(Materialize.eager(lms), minMatch, maxDf,
-      minShared)
-  }
-
   /** The geometric verifier of the affine-frame VERIFIED tier
     * (m179/m180/st124), as a reusable UDF: RANSAC over the matched
     * codes' anchor-correspondence SET (canonically sorted — the
@@ -3741,76 +3687,6 @@ object Multimodal {
       }
     })
 
-  /** VERIFIED affine-frame pairs (m179) — the m159 candidate+verify
-    * pattern lifted to images: [[affineFrameCodesAnchored]] codes
-    * nominate pairs at a LOW gate (the measured m174 recall ceiling:
-    * planted compound pairs missed by the default gate score
-    * 0.006-0.019 — just under it — while the 32k decoy tail also
-    * reaches 0.02, so no single-threshold cut separates them), then
-    * each candidate is verified GEOMETRICALLY: the matched codes'
-    * anchor pairs are correspondence hypotheses, a trimmed
-    * least-squares affine fit (6 params, translation included — crops
-    * shift centers) maps one anchor cloud onto the other, and the
-    * verified score is the aligned fraction over the smaller cloud.
-    * A true re-upload aligns its whole shared field (frac ~0.8-1.0);
-    * a decoy's correspondences are quantizer coincidences that no
-    * single affine map can satisfy (frac ~0). Verification is
-    * per-candidate O(|corr| + |cloud|^2) driver-free arithmetic in a
-    * UDF — candidates are already capped by the code gate, so the
-    * verify stage adds no shuffle beyond the two cloud joins. */
-  def imageAffineFramePairsVerified(media: DataFrame,
-      candMinMatch: Double = 0.004, candMinShared: Int = 4,
-      verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0,
-      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame =
-    affineFramePairsVerifiedFrom(Materialize.eager(f.landmarks(media)),
-      candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
-      tolPx, maxDf)
-
-  /** BOTH affine-frame tiers — the m174 code gate and the m179 RANSAC
-    * verify — off ONE decode and ONE landmark pass (round 16; the
-    * m192 gate previously ran [[ImageAffineFrame]] AND
-    * [[imageAffineFramePairsVerified]] over the same corpus, paying
-    * the dominant linear cost — decode + detection + coding — twice).
-    * [[affineFrameCodes]] is by construction the anchored extractor's
-    * code column ([[affineFrameCodesAnchored]] `.map(_._1)`), so the
-    * anchored table's (doc_id, lm) projection IS the plain landmark
-    * table: the code tier scores bit-identically to the two-decode
-    * path, the verified tier reads the same materialized table, and
-    * only the decode count changes. Returns (code pairs, verified
-    * pairs) — both lazy plans over one eager checkpoint, so consume
-    * them within the checkpoint's lifetime (one query). */
-  def imageAffineFrameTiers(media: DataFrame, minMatch: Double = 0.02,
-      minShared: Int = 16, candMinMatch: Double = 0.004,
-      candMinShared: Int = 4, verifyMinFrac: Double = 0.5,
-      verifyMinAligned: Int = 9, tolPx: Double = 3.0, maxDf: Int = 0,
-      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored())
-      : (DataFrame, DataFrame) = {
-    val anchored = Materialize.eager(f.landmarks(media))
-    (peakLandmarkPairScores(anchored.select(col("doc_id"), col("lm")),
-        minMatch, maxDf, minShared),
-      affineFramePairsVerifiedFrom(anchored, candMinMatch,
-        candMinShared, verifyMinFrac, verifyMinAligned, tolPx, maxDf))
-  }
-
-  /** [[imageAffineFrameTiers]] for VIDEO — one container walk feeds
-    * both the m177 code gate and the m182 RANSAC verify (the anchored
-    * pooled table's (doc_id, lm) projection is exactly
-    * [[videoAffineFrameLandmarks]]: both extractors pool DISTINCT
-    * codes per doc in first-emission order). */
-  def videoAffineFrameTiers(media: DataFrame, minMatch: Double = 0.02,
-      minShared: Int = 16, candMinMatch: Double = 0.004,
-      candMinShared: Int = 4, verifyMinFrac: Double = 0.4,
-      verifyMinAligned: Int = 9, tolPx: Double = 3.0, maxDf: Int = 0,
-      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored())
-      : (DataFrame, DataFrame) = {
-    val anchored = Materialize.eager(f.landmarks(media))
-    (peakLandmarkPairScores(anchored.select(col("doc_id"), col("lm")),
-        minMatch, maxDf, minShared),
-      affineFramePairsVerifiedFrom(anchored, candMinMatch,
-        candMinShared, verifyMinFrac, verifyMinAligned, tolPx, maxDf))
-  }
-
   /** Sentinel for `maxDf`: SOLVE the cap from the measured df
     * distribution and the configured shuffle budget
     * ([[solveDfCap]]) — the SCALE.md:385-398 deployment rule promoted
@@ -3886,9 +3762,8 @@ object Multimodal {
     out
   }
 
-  /** Count-first, survivor-gather candidate stage shared by the
-    * identity ([[affineFramePairsVerifiedFrom]]) and chiral
-    * ([[affineFramePairsChiralVerifiedFrom]]) verified tiers, over an
+  /** Count-first, survivor-gather candidate stage of the verified
+    * tier ([[verifiedPairs]], identity and chiral), over an
     * anchored table (doc_id[, orient], lm, ax, ay) distinct per
     * (doc[, orient], lm). With an `orient` column (the identity +
     * mirror fan) the lower doc's identity codes pair against the
@@ -3968,14 +3843,17 @@ object Multimodal {
       .join(surv, keys)
   }
 
-  /** Candidate + RANSAC-verify stage of the verified affine-frame
-    * tier over an ANCHORED landmark table (doc_id, lm, ax, ay) —
-    * shared by the image (m179) and video (m182) members: the media
-    * extractors differ, the geometry does not. PUBLIC (round 16): a
-    * caller holding a materialized anchored table (e.g. to
-    * [[solveDfCap]] a budgeted cap first, or to feed several tiers
-    * off one decode) runs the verify stage directly — the m193
-    * auto-cap gate is exactly that composition.
+  /** Candidate + RANSAC-verify core of the verified affine-frame tier
+    * ([[AnchoredFrame]]) over an ANCHORED landmark table (doc_id, lm,
+    * ax, ay), distinct per (doc, lm): the image and video extractors
+    * differ, the geometry does not. With `f.chiral` the lower doc's
+    * identity codes bucket against the higher doc's identity AND
+    * mirror readouts (a mirror readout keeps its identity code's
+    * PHYSICAL anchor) and each candidate verifies under the map
+    * chirality of its readout ([[verifyScore]]). Output (doc_a, doc_b[,
+    * orient], match_frac >= verifyMinFrac). `gatherMaxPairs` is the
+    * survivor-gather bound ([[SurvivorGatherMaxPairs]]), an argument
+    * so a spec can force either gather path.
     *
     * Candidate shape (round 15): ONE groupBy(lm) builds per-code
     * posting lists — rows are distinct (doc, lm), so the list size
@@ -4003,42 +3881,55 @@ object Multimodal {
     * at a fixed byte budget, and the big shuffle dropped from 32 B to
     * 16 B rows, so the same [[AutoDf]] budget solves a ~√2 higher
     * cap (recall back at no extra bytes). */
-  def affineFramePairsVerifiedFrom(lms: DataFrame,
-      candMinMatch: Double = 0.004, candMinShared: Int = 4,
-      verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0): DataFrame =
-    verifiedPairsFrom(lms, candMinMatch, candMinShared, verifyMinFrac,
-      verifyMinAligned, tolPx, maxDf, SurvivorGatherMaxPairs)
-
-  /** [[affineFramePairsVerifiedFrom]] at an explicit survivor-gather
-    * bound ([[SurvivorGatherMaxPairs]]), so a spec can force either
-    * gather path. */
-  private[graft] def verifiedPairsFrom(lms: DataFrame,
-      candMinMatch: Double, candMinShared: Int, verifyMinFrac: Double,
-      verifyMinAligned: Int, tolPx: Double, maxDf: Int,
+  private[operators] def verifiedPairs(f: AnchoredFrame, lms: DataFrame,
+      minMatch: Double, minShared: Int, maxDf: Int,
       gatherMaxPairs: Long): DataFrame = {
-    require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
-      "verifyMinFrac must be in [0, 1]")
-    require(tolPx > 0.0, "tolPx must be > 0")
+    val fan = if (!f.chiral) lms
+      else lms.select(col("doc_id"), lit(0).as("orient"), col("lm"),
+          col("ax"), col("ay"))
+        .unionByName(lms.select(col("doc_id"), lit(1).as("orient"),
+          mirrorCode(col("lm")).as("lm"), col("ax"), col("ay")))
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    // anchor cloud per doc = its DISTINCT landmark anchors (a subset
-    // of the detected peaks — every peak with a conditioned basis)
-    val clouds = lms.select(col("doc_id"), col("ax"), col("ay"))
-      .distinct()
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
-    val cand = verifiedCandidates(lms, nl, maxDf, candMinShared,
-      candMinMatch, gatherMaxPairs)
-    val verify = affineCloudVerifyUdf(tolPx, verifyMinAligned)
+    val clouds = anchorClouds(lms, col("doc_id"), "cloud")
+    val cand = verifiedCandidates(fan, nl, maxDf, minShared, minMatch,
+      gatherMaxPairs)
+    val keys = Seq("doc_a", "doc_b") ++
+      Seq("orient").filter(cand.columns.contains)
     cand
       .join(clouds.select(col("doc_id").as("doc_a"),
         col("cloud").as("cloud_a")), Seq("doc_a"))
       .join(clouds.select(col("doc_id").as("doc_b"),
         col("cloud").as("cloud_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(least(verify(col("corr"), col("cloud_a"), col("cloud_b")),
-          lit(1.0)), 6).as("match_frac"))
-      .filter(col("match_frac") >= verifyMinFrac)
+      .select(keys.map(col) :+
+        round(least(verifyScore(f, cand), lit(1.0)), 6).as("match_frac"): _*)
+      .filter(col("match_frac") >= f.verifyMinFrac)
+  }
+
+  /** Anchor cloud per `id`: its DISTINCT (ax, ay) anchors (a subset of
+    * the detected peaks — every peak with a conditioned basis),
+    * collected into column `cloud`. */
+  private def anchorClouds(rows: DataFrame, id: Column,
+      cloud: String): DataFrame = {
+    val keyed = rows.select(id, col("ax"), col("ay"))
+    keyed.distinct().groupBy(col(keyed.columns.head))
+      .agg(collect_list(struct(col("ax"), col("ay"))).as(cloud))
+  }
+
+  /** The verify gate's score of each candidate row (corr, cloud_a,
+    * cloud_b): [[affineCloudVerifyUdf]]'s aligned fraction under `f`'s
+    * tolerance and floor. Rows that carry the mirror fan's `orient`
+    * admit the map chirality of their readout: orient 0 an
+    * orientation-PRESERVING affine (det > 0), orient 1 an
+    * orientation-REVERSING one (det < 0) — a mirrored re-upload's
+    * anchor clouds are related by exactly such a map, while a decoy
+    * can no more satisfy a det < 0 map than a det > 0 one. */
+  private def verifyScore(f: AnchoredFrame, rows: DataFrame): Column = {
+    val args = Seq(col("corr"), col("cloud_a"), col("cloud_b"))
+    val identity = affineCloudVerifyUdf(f.tolPx, f.verifyMinAligned)(args: _*)
+    if (!rows.columns.contains("orient")) identity
+    else when(col("orient") === 1,
+        affineCloudVerifyUdf(f.tolPx, f.verifyMinAligned, -1)(args: _*))
+      .otherwise(identity)
   }
 
   /** MIRROR readout of a packed affine-frame code — a pure
@@ -4062,41 +3953,20 @@ object Multimodal {
       pts(1)._2) * 64L + pts(2)._1) * 64L + pts(2)._2
   }
 
-  /** Image near-dup pairs under the MIRROR x CROP x FULL-AFFINE
-    * compound (m181): the lower doc's identity codes bucket against
-    * the higher doc's identity AND mirror readouts (the m140/m145
-    * asymmetric fan shape — indexes and state stay identity-sized),
-    * scored per readout over the smaller identity code count. orient
-    * 1 = mirrored. */
-  def imageAffineFramePairsChiral(media: DataFrame,
-      minMatch: Double = 0.02, maxDf: Int = 0, minShared: Int = 16,
-      f: ImageAffineFrame = ImageAffineFrame()): DataFrame = {
-    val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    val id0 = Materialize.eager(f.landmarks(media))
-    val lms = id0.select(col("doc_id"), lit(0).as("orient"), col("lm"))
-      .unionByName(id0.select(col("doc_id"), lit(1).as("orient"),
-        mir(col("lm")).as("lm")))
-    orientedLandmarkPairScores(Materialize.eager(lms), minMatch, maxDf,
-      minShared)
-  }
+  /** [[mirrorAffineFrameCode]] as a column function. */
+  private val mirrorCode = udf((lm: Long) => mirrorAffineFrameCode(lm))
 
-  /** (doc_id, orient, lm) CHIRAL fan of the affine-frame codes —
-    * orient 0 the identity code, 1 its mirror repack
-    * ([[mirrorAffineFrameCode]], pure Long arithmetic). One decode
-    * pass, then a pure per-row explode — STREAMING-SAFE (st125 runs
-    * it on a file stream against a broadcast identity index). */
-  def imageAffineFrameLandmarksChiral(media: DataFrame, kTop: Int, nNear: Int,
-      nBasis: Int, qStep: Double, smoothR: Int, radius: Int,
-      minAvg: Int)(implicit s: SparkSession): DataFrame = {
-    val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    imageAffineFrameLandmarks(media, kTop, nNear, nBasis, qStep,
-        smoothR, radius, minAvg, 3).toDF()
-      .select(col("doc_id"), explode(array(
+  /** (doc_id, orient, lm) CHIRAL fan of (doc_id, lm) affine-frame
+    * codes — orient 0 the identity code, 1 its mirror repack
+    * ([[mirrorAffineFrameCode]], pure Long arithmetic). A pure per-row
+    * explode after the decode — STREAMING-SAFE (st125 runs it on a
+    * file stream against a broadcast identity index). */
+  private def mirrorFan(lms: DataFrame): DataFrame =
+    lms.select(col("doc_id"), explode(array(
         struct(lit(0).as("orient"), col("lm").as("lm")),
-        struct(lit(1).as("orient"), mir(col("lm")).as("lm")))).as("r"))
+        struct(lit(1).as("orient"), mirrorCode(col("lm")).as("lm")))).as("r"))
       .select(col("doc_id"), col("r.orient").as("orient"),
         col("r.lm").as("lm"))
-  }
 
   /** AFFINE-FRAME landmarks with a DE-SQUEEZE hypothesis fan (m184 —
     * the crop x EXTREME-squeeze compound). MEASURED boundary
@@ -4221,94 +4091,6 @@ object Multimodal {
       }).toDF("doc_id", "orient", "lm")
   }
 
-  /** VERIFIED chiral affine-frame pairs (m183 — the m179 verdict on
-    * the MIRROR compound): m181's chiral code gate inherits exactly
-    * the identity gate's gray-zone fragility (the mirror readout is
-    * pure arithmetic on the identity codes, so a mirrored rendering
-    * of a gray-zone compound scores the same just-under-gate
-    * fraction), so candidates nominate at the LOW gate over the
-    * m181 asymmetric fan (lower doc identity codes vs higher doc
-    * identity AND mirror readouts — the mirror readout keeps its
-    * identity code's PHYSICAL anchor) and each candidate is
-    * RANSAC-verified with the admitted map chirality matched to its
-    * readout: orient 0 candidates need an orientation-PRESERVING
-    * affine (det > 0, the m179 verifier), orient 1 candidates an
-    * orientation-REVERSING one (det < 0) — a mirrored re-upload's
-    * anchor clouds are related by exactly such a map, while a decoy
-    * can no more satisfy a det < 0 map than a det > 0 one. Output
-    * (doc_a, doc_b, orient, match_frac >= verifyMinFrac). */
-  def imageAffineFramePairsChiralVerified(media: DataFrame,
-      candMinMatch: Double = 0.004, candMinShared: Int = 4,
-      verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0,
-      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame =
-    affineFramePairsChiralVerifiedFrom(Materialize.eager(f.landmarks(media)),
-      candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
-      tolPx, maxDf)
-
-  /** VERIFIED chiral affine-frame pairs for VIDEO (m188 — m183's
-    * chirality-matched candidate+verify at the frame sequence): the
-    * m187 chiral code gate inherits the identity gate's gray-zone
-    * fragility verbatim (the mirror readout is pure code arithmetic
-    * on the pooled frame codes), so candidates nominate at the LOW
-    * gate over the asymmetric mirror fan of POOLED per-video anchored
-    * codes and verify with the map chirality matched to the readout —
-    * the re-rip transform (mirror x crop x rotation x squeeze) is ONE
-    * orientation-reversing affine across all frames, so the pooled
-    * anchor clouds align under exactly one det < 0 map, like the
-    * m182 identity member's det > 0 one. verifyMinFrac 0.4 = the
-    * video default (a trim costs the trimmed frames' anchors). */
-  def videoAffineFramePairsChiralVerified(media: DataFrame,
-      candMinMatch: Double = 0.004, candMinShared: Int = 4,
-      verifyMinFrac: Double = 0.4, verifyMinAligned: Int = 9,
-      tolPx: Double = 3.0, maxDf: Int = 0,
-      f: VideoAffineFrameAnchored = VideoAffineFrameAnchored()): DataFrame =
-    affineFramePairsChiralVerifiedFrom(Materialize.eager(f.landmarks(media)),
-      candMinMatch, candMinShared, verifyMinFrac, verifyMinAligned,
-      tolPx, maxDf)
-
-  /** The m183 chirality-matched candidate+verify composition from any
-    * ANCHORED landmark table (image m183 / video m188 share it): the
-    * lower doc's identity codes bucket against the higher doc's
-    * identity AND mirror readouts, candidates nominate at the low
-    * gate, and each verifies under [[affineCloudVerifyUdf]] with the
-    * admitted chirality matched to its readout (orient 0: det > 0,
-    * orient 1: det < 0). */
-  private[graft] def affineFramePairsChiralVerifiedFrom(id0: DataFrame,
-      candMinMatch: Double, candMinShared: Int, verifyMinFrac: Double,
-      verifyMinAligned: Int, tolPx: Double, maxDf: Int,
-      gatherMaxPairs: Long = SurvivorGatherMaxPairs): DataFrame = {
-    require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
-      "verifyMinFrac must be in [0, 1]")
-    require(tolPx > 0.0, "tolPx must be > 0")
-    val mir = udf((lm: Long) => mirrorAffineFrameCode(lm))
-    val fan = id0.select(col("doc_id"), lit(0).as("orient"), col("lm"),
-        col("ax"), col("ay"))
-      .unionByName(id0.select(col("doc_id"), lit(1).as("orient"),
-        mir(col("lm")).as("lm"), col("ax"), col("ay")))
-    val nl = id0.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val clouds = id0.select(col("doc_id"), col("ax"), col("ay"))
-      .distinct().groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud"))
-    val cand = verifiedCandidates(fan, nl, maxDf, candMinShared,
-      candMinMatch, gatherMaxPairs)
-    val verId = affineCloudVerifyUdf(tolPx, verifyMinAligned, 1)
-    val verMir = affineCloudVerifyUdf(tolPx, verifyMinAligned, -1)
-    cand
-      .join(clouds.select(col("doc_id").as("doc_a"),
-        col("cloud").as("cloud_a")), Seq("doc_a"))
-      .join(clouds.select(col("doc_id").as("doc_b"),
-        col("cloud").as("cloud_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("orient"),
-        round(least(
-          when(col("orient") === 1,
-            verMir(col("corr"), col("cloud_a"), col("cloud_b")))
-            .otherwise(
-              verId(col("corr"), col("cloud_a"), col("cloud_b"))),
-          lit(1.0)), 6).as("match_frac"))
-      .filter(col("match_frac") >= verifyMinFrac)
-  }
-
   /** ANCHORED affine-frame landmarks — one (doc_id, lm, ax, ay) row
     * per distinct code with the FIRST emitting anchor's coordinates:
     * the raw table behind the verified tier (m179/m180/st124). A pure
@@ -4332,60 +4114,44 @@ object Multimodal {
       }).toDF("doc_id", "lm", "ax", "ay")
   }
 
-  /** The affine-frame geometric verifier as a PUBLIC UDF (the st124
-    * streaming member applies it batch-side over its sink): see
-    * [[affineCloudVerifyUdf]] for the contract. */
-  def affineCloudVerifier(tolPx: Double = 3.0,
-      verifyMinAligned: Int = 9, detSign: Int = 1)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    affineCloudVerifyUdf(tolPx, verifyMinAligned, detSign)
+  /** The index side of the verified screen's candidate join: per
+    * index row its code, master anchor (axb, ayb), master `src` and
+    * the master's code count `nl_src` (st124 broadcasts it into its
+    * stream-side join). */
+  private[graft] def anchoredHits(index: DataFrame): DataFrame =
+    index.select(col("lm"), col("ax").as("axb"), col("ay").as("ayb"),
+      col("doc_id").as("src"), col("nl").as("nl_src"))
 
-  /** Screen an ingest batch against a pre-built
-    * [[ImageAffineFrameAnchored]] index with GEOMETRIC VERIFICATION
-    * (m180 — the m179 verdict at the incremental seam): candidates
-    * nominate at the LOW code gate, each (probe, master) candidate is
-    * RANSAC-verified from the matched codes' anchor correspondences
-    * against the clouds both sides' tables already carry, and a probe
-    * is a duplicate of the lowest verified master. Catches the
-    * gray-zone compounds the plain [[ImageAffineFrame]] screen
-    * screen drops, at the same <= 1-in-32k spurious level the m179
-    * sweep measured. Enforces [[AffineFrameFpVersion]] and the anchor
-    * columns. */
-  def dedupAgainstImageAffineFrameIndexVerified(media: DataFrame,
-      index: DataFrame, candMinMatch: Double = 0.004,
-      candMinShared: Int = 4, verifyMinFrac: Double = 0.5,
-      verifyMinAligned: Int = 9, tolPx: Double = 3.0,
-      f: ImageAffineFrameAnchored = ImageAffineFrameAnchored()): DataFrame = {
-    Postings.requireStamp(index, f.stamp, Seq("fp_ver", "ax", "ay"))
-    val lms = Materialize.eager(f.landmarks(media))
+  /** The verified screen's verdicts (m180 — the m179 verdict at the
+    * incremental seam): `lms` are the probes' anchored landmarks,
+    * `hits` their equi-join with [[anchoredHits]] of an
+    * [[ImageAffineFrameAnchored]] `index`. Candidates nominate at the
+    * LOW code gate, each (probe, master) candidate is RANSAC-verified
+    * from the matched codes' anchor correspondences against the
+    * clouds both sides' tables already carry (no corpus re-decode),
+    * and a probe is a duplicate of the lowest verified master. One
+    * verdict per probe in `lms`. [[screen]] runs it over a batch's
+    * fresh decode, st124 over its stream sink. Count-first,
+    * gather-later (see [[verifiedPairs]]): the correspondence lists
+    * only materialize for (probe, src) pairs past the shared /
+    * minMatch gates, so aggregation state stays at near-dup mass
+    * however hot the index's codes are. */
+  private[graft] def verifiedScreen(f: ImageAffineFrameAnchored,
+      lms: DataFrame, hits: DataFrame, index: DataFrame, minMatch: Double,
+      minShared: Int): DataFrame = {
     val nl = lms.groupBy(col("doc_id")).agg(count(lit(1)).as("nl"))
-    val cloudsProbe = lms.select(col("doc_id"), col("ax"), col("ay"))
-      .distinct().groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud_a"))
-    val cloudsSrc = index
-      .select(col("doc_id").as("src"), col("ax"), col("ay"))
-      .distinct().groupBy(col("src"))
-      .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud_b"))
-    // count-first, gather-later (round 17) — see
-    // [[affineFramePairsVerifiedFrom]]: the correspondence lists only
-    // materialize for (probe, src) pairs past the shared/minMatch
-    // gates, so aggregation state stays at near-dup mass however hot
-    // the index's codes are
-    val joined = lms
-      .join(index.select(col("lm"), col("ax").as("axb"),
-        col("ay").as("ayb"), col("doc_id").as("src"),
-        col("nl").as("nl_src")), Seq("lm"))
+    val cloudsProbe = anchorClouds(lms, col("doc_id"), "cloud_a")
+    val cloudsSrc = anchorClouds(index, col("doc_id").as("src"), "cloud_b")
     // materialized (round 18): survivors are near-dup mass and the
-    // set is read twice below — the r17 shape recomputed the whole
-    // candidate aggregation for the final stats join
-    val surv = Materialize.eager(joined
+    // set is read twice below
+    val surv = Materialize.eager(hits
       .groupBy(col("doc_id"), col("src"), col("nl_src"))
       .agg(countDistinct(col("lm")).as("c"))
-      .filter(col("c") >= math.max(1, candMinShared))
+      .filter(col("c") >= math.max(1, minShared))
       .join(nl, Seq("doc_id"))
       .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-        >= candMinMatch))
-    val cand = joined
+        >= minMatch))
+    val cand = hits
       .select(col("doc_id"), col("src"),
         struct(col("ax"), col("ay"), col("axb"), col("ayb")).as("co"))
       .join(surv.select(col("doc_id"), col("src")),
@@ -4393,12 +4159,10 @@ object Multimodal {
       .groupBy(col("doc_id"), col("src"))
       .agg(collect_list(col("co")).as("corr"))
       .join(surv, Seq("doc_id", "src"))
-    val verify = affineCloudVerifyUdf(tolPx, verifyMinAligned)
     val dup = cand
       .join(cloudsProbe, Seq("doc_id"))
       .join(cloudsSrc, Seq("src"))
-      .filter(verify(col("corr"), col("cloud_a"), col("cloud_b"))
-        >= verifyMinFrac)
+      .filter(verifyScore(f, cand) >= f.verifyMinFrac)
       .groupBy(col("doc_id")).agg(min(col("src")).as("dup_src"))
     Postings.verdicts(nl.select(col("doc_id")), dup)
   }
@@ -6117,10 +5881,15 @@ object Multimodal {
     def keys: Seq[String] = Seq("lm")
   }
 
-  /** A family with a pair scorer: [[pairs]]. */
+  /** A family with a pair scorer: [[pairs]] decodes `media` once and
+    * scores it. `scores` is the scorer alone, over key rows a caller
+    * already holds — e.g. one materialized decode scored by two
+    * families, or a df cap [[solveDfCap]]d from the rows first. Gates
+    * default to the family's; `maxDf` as in [[pairs]]. */
   sealed trait Paired extends Family {
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
-        maxDf: Int, minShared: Int, maxDist: Int): DataFrame
+    def scores(lms: => DataFrame, minMatch: Double = this.minMatch,
+        maxDf: Int = 0, minShared: Int = this.minShared,
+        maxDist: Int = this.maxDist): DataFrame
   }
 
   /** A family whose persisted index rows carry a fingerprint stamp. */
@@ -6154,7 +5923,7 @@ object Multimodal {
   /** Shared-key families scored by [[landmarkPairScores]]. */
   sealed abstract class Coded(override val minMatch: Double = 0.6)
       extends Paired {
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
       landmarkPairScores(lms, minMatch, maxDf, keys)
   }
@@ -6162,7 +5931,7 @@ object Multimodal {
   /** Distinct (doc_id, lm) families scored by [[peakLandmarkPairScores]]. */
   sealed abstract class Peaked(override val minMatch: Double,
       override val minShared: Int = 0) extends Paired {
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
       peakLandmarkPairScores(lms, minMatch, maxDf, minShared)
   }
@@ -6172,7 +5941,7 @@ object Multimodal {
     * output (doc_a, doc_b, orient, match_frac). */
   sealed abstract class Fanned(override val minMatch: Double,
       override val minShared: Int = 0) extends Paired {
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame =
       orientedLandmarkPairScores(lms, minMatch, maxDf, minShared)
   }
@@ -6185,7 +5954,7 @@ object Multimodal {
     * Undecodable payloads drop out (no hash). */
   sealed abstract class Hashed(oriented: Boolean = true) extends Paired {
     private[operators] def hashes(hashed: DataFrame, orient: Boolean): DataFrame
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
       requireChunkRecall(maxDist) // before the eager decode pass
       chunkPairScores(hashes(lms, orient = false), maxDist, maxDf, oriented)
@@ -6494,7 +6263,7 @@ object Multimodal {
       lms.filter(col("ds").isNotNull)
         .select(col("doc_id"), explode(col("ds")).as("pd"))
         .select(col("doc_id"), col("pd._1").as("pk"), col("pd._2").as("d"))
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
       requireChunkRecall(maxDist) // before the eager decode pass
       descriptorChunkPairScores(descriptors(lms), minMatch, maxDist, maxDf)
@@ -6716,37 +6485,104 @@ object Multimodal {
       Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex")
   }
 
-  /** [[ImageAffineFrame]]'s identity codes plus their MIRROR repacks
-    * ([[imageAffineFrameLandmarksChiral]], pure Long arithmetic): its
-    * screen (m190) flags a mirrored crop x affine re-upload against the
-    * identity [[ImageAffineFrame]] index — masters never mirror. */
+  /** The MIRROR x CROP x FULL-AFFINE compound (m181): the base
+    * affine-frame family is chirality-FIXED by design (oriented bases,
+    * det > 0), so a mirrored re-upload is invisible to it — but a
+    * mirrored rendering's invariant coordinates swap (u, v) exactly,
+    * so [[ImageAffineFrame]]'s identity codes plus their MIRROR
+    * repacks ([[mirrorFan]]: no second detection or code pass) land
+    * it at orient 1. The lower doc's identity codes bucket against the
+    * higher doc's identity AND mirror readouts (the m140/m145
+    * asymmetric fan shape), scored per readout over the smaller
+    * identity code count. Its screen (m190) flags a mirrored re-upload
+    * against the identity [[ImageAffineFrame]] index — masters never
+    * mirror. */
   case class ImageAffineFrameChiral(kTop: Int = 48, nNear: Int = 8,
       nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
       radius: Int = 6, minAvg: Int = 24)
       extends Fanned(0.02, 16) with Screened {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
-      imageAffineFrameLandmarksChiral(m, kTop, nNear, nBasis, qStep, smoothR,
-        radius, minAvg)
+      mirrorFan(imageAffineFrameLandmarks(m, kTop, nNear, nBasis, qStep,
+        smoothR, radius, minAvg, 3).toDF())
     def stamp =
       Postings.Stamp(AffineFrameFpVersion, "affine-frame", "imageAffineFrameIndex")
   }
 
-  /** [[ImageAffineFrame]] with each code's anchor (ax, ay) — the verified
-    * tiers' landmark table ([[imageAffineFrameLandmarksAnchored]]). Its
-    * index rows are the plain index rows PLUS the anchors, so
-    * [[dedupAgainstImageAffineFrameIndexVerified]] can both equi-join
-    * candidates AND rebuild per-master anchor clouds without the
-    * corpus media; same [[AffineFrameFpVersion]] (the code space is
-    * identical). */
+  /** The VERIFIED affine-frame tier, scored by [[verifiedPairs]]: the
+    * m159 candidate+verify pattern over affine-frame codes that carry
+    * their anchors. Candidates nominate at a LOW code gate (minMatch
+    * 0.004 AND minShared 4 — the measured m174 recall ceiling: planted
+    * compounds the code gate misses score 0.006-0.019, just under it,
+    * while the 32k decoy tail also reaches 0.02, so no single
+    * threshold separates them). Each candidate is then verified
+    * GEOMETRICALLY: the matched codes' anchor pairs are correspondence
+    * hypotheses, RANSAC over correspondence triples fits the affine
+    * map (translation included — crops shift centers), and the score
+    * is the injective aligned fraction of the two anchor clouds over
+    * the smaller one, at least `verifyMinAligned` anchors within
+    * `tolPx` ([[affineCloudVerifyUdf]]); a pair passes at
+    * `verifyMinFrac`. A true re-upload aligns its whole shared field
+    * (frac ~0.8-1.0); a decoy's correspondences are quantizer
+    * coincidences no single affine map satisfies (frac ~0).
+    *
+    * `chiral` fans the MIRROR readout inside the scorer (m183, m188),
+    * so the extractor and the index rows stay identity-only: the
+    * chiral code gate inherits the identity gate's gray-zone
+    * fragility verbatim (the mirror readout is pure arithmetic on the
+    * identity codes), so mirrored compounds nominate at the same low
+    * gate and verify under the map chirality of their readout; output
+    * (doc_a, doc_b, orient, match_frac).
+    *
+    * The anchored table's (doc_id, lm) projection IS the plain code
+    * table ([[affineFrameCodes]] is the anchored extractor's code
+    * column), so one materialized decode feeds both the code tier and
+    * this one through [[Paired.scores]] (m192). */
+  sealed trait AnchoredFrame extends Paired {
+    def verifyMinFrac: Double
+    def verifyMinAligned: Int
+    def tolPx: Double
+    def chiral: Boolean
+    require(verifyMinFrac >= 0.0 && verifyMinFrac <= 1.0,
+      "verifyMinFrac must be in [0, 1]")
+    require(tolPx > 0.0, "tolPx must be > 0")
+    override def minMatch: Double = 0.004
+    override def minShared: Int = 4
+    def scores(lms: => DataFrame, minMatch: Double, maxDf: Int,
+        minShared: Int, maxDist: Int): DataFrame =
+      verifiedPairs(this, lms, minMatch, minShared, maxDf,
+        SurvivorGatherMaxPairs)
+  }
+
+  /** [[ImageAffineFrame]] with each code's anchor (ax, ay)
+    * ([[imageAffineFrameLandmarksAnchored]]) — the verified tier for
+    * images (m179; chiral m183). Its index rows are the plain index
+    * rows PLUS the anchors, so its screen (m180, [[verifiedScreen]])
+    * can both equi-join candidates AND rebuild per-master anchor
+    * clouds without the corpus media; same [[AffineFrameFpVersion]]
+    * (the code space is identical). The screen scores identity codes
+    * only: it rejects `chiral`. */
   case class ImageAffineFrameAnchored(kTop: Int = 48, nNear: Int = 8,
       nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24, nPts: Int = 3) extends Indexed {
+      radius: Int = 6, minAvg: Int = 24, nPts: Int = 3,
+      verifyMinFrac: Double = 0.5, verifyMinAligned: Int = 9,
+      tolPx: Double = 3.0, chiral: Boolean = false)
+      extends AnchoredFrame with Indexed with Screened {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       imageAffineFrameLandmarksAnchored(m, kTop, nNear, nBasis, qStep,
         smoothR, radius, minAvg, nPts)
     override def keys = Seq("lm", "ax", "ay")
     def stamp =
       Postings.Stamp(AffineFrameFpVersion, "anchored affine-frame", "imageAffineFrameAnchorIndex")
+    override private[operators] def screenRows(rows: => DataFrame,
+        index: DataFrame, minMatch: Double, minShared: Int, maxDist: Int,
+        maxDf: Int): DataFrame = {
+      require(!chiral, "the verified screen scores identity codes only: " +
+        "screen with chiral = false")
+      Postings.requireStamp(index, stamp, Seq("fp_ver", "ax", "ay"))
+      val lms = rows
+      verifiedScreen(this, lms, lms.join(anchoredHits(index), Seq("lm")),
+        index, minMatch, minShared)
+    }
   }
 
   /** [[ImageAffineFrame]] pooled over sampled video frames (m177,
@@ -6775,11 +6611,36 @@ object Multimodal {
         nBasis, qStep, smoothR, radius, minAvg)
   }
 
-  /** [[VideoAffineFrame]] with each code's anchor — the video verified
-    * tiers' landmark table ([[videoAffineFrameLandmarksAnchored]]). */
+  /** [[ImageAffineFrameChiral]] at the frame sequence (m187): a
+    * mirrored rendering's invariant coordinates swap (u, v) exactly PER
+    * FRAME, so the mirror readout of [[VideoAffineFrame]]'s pooled
+    * codes is the same pure repack ([[mirrorFan]]) — no second
+    * container walk, no second detection. orient 1 = landed via the
+    * mirror readout. */
+  case class VideoAffineFrameChiral(every: Int = 2, kTop: Int = 48,
+      nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
+      radius: Int = 6, minAvg: Int = 24) extends Fanned(0.02, 16) {
+    protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
+      mirrorFan(videoAffineFrameLandmarks(m, every, kTop, nNear, nBasis,
+        qStep, smoothR, radius, minAvg))
+  }
+
+  /** [[VideoAffineFrame]] with each code's anchor
+    * ([[videoAffineFrameLandmarksAnchored]]) — the verified tier at the
+    * frame sequence (m182; chiral m188). The m177 code gate measured
+    * the image tier's fragility (gray-zone compounds score just under
+    * it while the decoy tail reaches it); the re-rip transform is ONE
+    * affine map across all frames, so the pooled anchor clouds align
+    * like the image member's. verifyMinFrac sits LOWER than the image
+    * default: a leading trim removes whole frames' anchors from the
+    * shared field (a 2-of-6 frame trim caps the aligned fraction near
+    * 2/3), while a decoy's verified fraction stays pinned at ~0 by the
+    * same absolute floor. */
   case class VideoAffineFrameAnchored(every: Int = 2, kTop: Int = 48,
       nNear: Int = 8, nBasis: Int = 4, qStep: Double = 0.3, smoothR: Int = 4,
-      radius: Int = 6, minAvg: Int = 24) extends Family {
+      radius: Int = 6, minAvg: Int = 24, verifyMinFrac: Double = 0.4,
+      verifyMinAligned: Int = 9, tolPx: Double = 3.0,
+      chiral: Boolean = false) extends AnchoredFrame {
     protected def extract(m: DataFrame)(implicit s: SparkSession): DataFrame =
       videoAffineFrameLandmarksAnchored(m, every, kTop, nNear, nBasis, qStep,
         smoothR, radius, minAvg)
@@ -6793,7 +6654,7 @@ object Multimodal {
       extends Paired {
     override def minMatch: Double = 0.8
     protected def hashes(hashed: DataFrame): DataFrame
-    private[operators] def scores(lms: => DataFrame, minMatch: Double,
+    def scores(lms: => DataFrame, minMatch: Double,
         maxDf: Int, minShared: Int, maxDist: Int): DataFrame = {
       requireChunkRecall(maxDist)
       val hashed = lms

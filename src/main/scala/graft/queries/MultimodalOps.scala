@@ -12,7 +12,8 @@ import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
   ImageAffineFrameSqueezeFan, ImagePeak, ImagePeakDihedral, ImageRotScale,
   ImageScale, ImageScaleAspect, ImageScaleCanonical, ImageScaleDihedral,
   ImageScaleNormalized, PHash, PHashCrop, PHashDihedral, PHashFlip, PHashRot,
-  PeakLossy, VideoAffine, VideoAffineFrame, VideoAffineFrameSqueezeFan,
+  PeakLossy, VideoAffine, VideoAffineFrame, VideoAffineFrameAnchored,
+  VideoAffineFrameChiral, VideoAffineFrameSqueezeFan,
   VideoCrop, VideoFrames, VideoFramesDihedral, VideoFramesFlip, VideoPeak,
   VideoRotScale, VideoScale, VideoScaleAspect, VideoScaleCanonical,
   VideoShift, VideoSkip}
@@ -1201,7 +1202,7 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.affineFrameVerified.udf(20, 4)
       val media = mediaRows(s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142)), img)
-      Multimodal.imageAffineFramePairsVerified(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrameAnchored())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1220,7 +1221,7 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.affineFrameChiral.udf(20, 4)
       val media = mediaRows(s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142)), img)
-      Multimodal.imageAffineFramePairsChiral(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrameChiral())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -1240,7 +1241,8 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.affineFrameChiralVerified.udf(20, 4)
       val media = mediaRows(s.range(0, 8).union(s.range(20, 24))
         .union(s.range(140, 142)), img)
-      Multimodal.imageAffineFramePairsChiralVerified(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrameAnchored(chiral = true))(media,
+          maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -1300,7 +1302,7 @@ object MultimodalOps extends QueryPack {
       val media = graft.fixtures.Corpora.cropAffinePngs(s, n)
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
-      Multimodal.imageAffineFramePairsVerified(media, maxDf = 500)
+      Multimodal.pairs(ImageAffineFrameAnchored())(media, maxDf = 500)
         .agg(lit(n).as("corpus_n"),
           sum(when(planted, 1).otherwise(0)).as("planted_found"),
           sum(when(!planted, 1).otherwise(0)).as("spurious"))
@@ -1330,11 +1332,14 @@ object MultimodalOps extends QueryPack {
       // one decode for both tiers (round 16): the anchored landmark
       // table feeds the code gate AND the RANSAC verify — decode is
       // the dominant linear cost on a media corpus, and the former
-      // two-decode shape paid it twice for byte-identical output
-      val (code, verified) =
-        Multimodal.imageAffineFrameTiers(media, maxDf = 500)
-      tier("code", code)
-        .unionByName(tier("verified", verified))
+      // two-decode shape paid it twice for byte-identical output (the
+      // anchored table's (doc_id, lm) projection IS the code table)
+      val anchored = graft.operators.Materialize.eager(
+        ImageAffineFrameAnchored().landmarks(media))
+      tier("code", ImageAffineFrame().scores(
+          anchored.select(col("doc_id"), col("lm")), maxDf = 500))
+        .unionByName(tier("verified",
+          ImageAffineFrameAnchored().scores(anchored, maxDf = 500)))
         .orderBy(col("tier"))
     }),
 
@@ -1358,10 +1363,10 @@ object MultimodalOps extends QueryPack {
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
       val anchored = graft.operators.Materialize.eager(
-        Multimodal.ImageAffineFrameAnchored().landmarks(media))
+        ImageAffineFrameAnchored().landmarks(media))
       val cap = Multimodal.solveDfCap(
         anchored.select(col("doc_id"), col("lm")), 32, 14L << 20)
-      Multimodal.affineFramePairsVerifiedFrom(anchored, maxDf = cap)
+      ImageAffineFrameAnchored().scores(anchored, maxDf = cap)
         .agg(lit(n).as("corpus_n"), lit(cap).as("solved_cap"),
           sum(when(planted, 1).otherwise(0)).as("planted_found"),
           sum(when(!planted, 1).otherwise(0)).as("spurious"))
@@ -1386,10 +1391,10 @@ object MultimodalOps extends QueryPack {
       val planted = col("doc_b") - col("doc_a") === 9 &&
         col("doc_b") % 10 === 9
       val anchored = graft.operators.Materialize.eager(
-        Multimodal.ImageAffineFrameAnchored().landmarks(media))
+        ImageAffineFrameAnchored().landmarks(media))
       val cap = Multimodal.solveDfCap(
         anchored.select(col("doc_id"), col("lm")), 16, 8L << 20)
-      Multimodal.affineFramePairsVerifiedFrom(anchored, maxDf = cap)
+      ImageAffineFrameAnchored().scores(anchored, maxDf = cap)
         .agg(lit(n).as("corpus_n"), lit(cap).as("solved_cap"),
           sum(when(planted, 1).otherwise(0)).as("planted_found"),
           sum(when(!planted, 1).otherwise(0)).as("spurious"))
@@ -1411,7 +1416,7 @@ object MultimodalOps extends QueryPack {
         Multimodal.index(ImageAffineFrame())(corpus))
         .select(lit("code").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
-      val verified = Multimodal.dedupAgainstImageAffineFrameIndexVerified(probes,
+      val verified = Multimodal.screen(ImageAffineFrameAnchored())(probes,
         Multimodal.index(ImageAffineFrameAnchored())(corpus))
         .select(lit("verified").as("tier"), col("doc_id"), col("kept"),
           col("dup_src"))
@@ -1452,7 +1457,7 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.videoAffineFrameVerified.udf(20, 4)
       val media = mediaRows(s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142)), img)
-      Multimodal.videoAffineFramePairsVerified(media, maxDf = 64)
+      Multimodal.pairs(VideoAffineFrameAnchored())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
@@ -1470,7 +1475,7 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.videoAffineFrameChiral.udf(20, 3)
       val media = mediaRows(s.range(0, 6).union(s.range(20, 23))
         .union(s.range(140, 142)), img)
-      Multimodal.videoAffineFramePairsChiral(media, maxDf = 64)
+      Multimodal.pairs(VideoAffineFrameChiral())(media, maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 
@@ -1487,7 +1492,8 @@ object MultimodalOps extends QueryPack {
       val img = Catalogue.videoAffineFrameChiralVerified.udf(20, 4)
       val media = mediaRows(s.range(0, 6).union(s.range(20, 24))
         .union(s.range(140, 142)), img)
-      Multimodal.videoAffineFramePairsChiralVerified(media, maxDf = 64)
+      Multimodal.pairs(VideoAffineFrameAnchored(chiral = true))(media,
+          maxDf = 64)
         .orderBy(col("doc_a"), col("doc_b"), col("orient"))
     }),
 

@@ -1804,72 +1804,43 @@ object StreamingOps extends QueryPack {
         .orderBy(col("doc_id"))
     }),
 
-    // STREAMING embedding dedup vs a BROADCAST SRP index (st122 —
-    // the s56 incremental screen at the stream-static seam, filling
-    // the streaming matrix's embedding-DEDUP gap: st69 only ingests).
     // STREAM-STATIC VERIFIED affine-frame screen (st124 — the m180
     // verdict mid-stream): arrivals' ANCHORED landmarks equi-join the
     // broadcast anchored index (stateless map-side join, no state
-    // store); the RANSAC verification runs batch-side over the sink —
-    // candidates at the LOW code gate, clouds from the sink's and the
-    // index's own distinct anchors, no corpus re-decode. A GRAY-ZONE
-    // compound (under the plain code gate — the class st123 is
-    // structurally blind to) is flagged mid-stream; fresh arrivals
-    // stay kept. Pinned golden.
+    // store); the batch side over the sink is the m180 screen's own
+    // verdict ([[Multimodal.verifiedScreen]]) — candidates at the LOW
+    // code gate, clouds from the sink's and the index's own distinct
+    // anchors, no corpus re-decode. A GRAY-ZONE compound (under the
+    // plain code gate — the class st123 is structurally blind to) is
+    // flagged mid-stream; fresh arrivals stay kept. Pinned golden.
     "st124_stream_affine_verified_screen" -> ((s0, dir) => { val s = streamSession(s0)
       import s.implicits._
       implicit val sp: SparkSession = s
+      val f = ImageAffineFrameAnchored()
       val img = Catalogue.affineFrameVerifiedScreen.udf(20, 3)
       val corpus = mediaRows(s.range(0, 8), img)
-      val index = Multimodal.index(ImageAffineFrameAnchored())(corpus)
-        .select(col("lm"), col("ax").as("axb"), col("ay").as("ayb"),
-          col("doc_id").as("src"), col("nl").as("nl_src"))
+      val index = Multimodal.index(f)(corpus)
       val staged = stageBatches("graft-stream-afvidx",
         mediaRows(s.createDataset(Seq(20L, 130L)).toDF("id"), img),
         mediaRows(s.createDataset(Seq(22L, 131L)).toDF("id"), img))
       val stream = mediaStream(s, staged)
-      // the memory sink view self-joins three ways (counts, clouds,
-      // candidates) — rename the key per derivative, the st121 idiom,
-      // or Catalyst fails resolving the conflicting view references
-      val sunk = drain(s, "append")(
-        "st124_lm" -> Multimodal.ImageAffineFrameAnchored().landmarks(stream)
-          .join(broadcast(index), Seq("lm"), "left"))
-      // nl = DISTINCT landmarks: the sink rows are post-join, so a
-      // probe landmark matching several index masters is duplicated —
-      // count(1) would inflate nl and deflate c/least(nl, nl_src),
-      // dropping true candidates (st123 and the batch verified screen
-      // both count landmarks pre-join)
-      val nl = sunk.groupBy(col("doc_id"))
-        .agg(countDistinct(col("lm")).as("nl"))
-      val cloudsProbe = sunk.select(col("doc_id").as("dp"), col("ax"),
-          col("ay"))
-        .distinct().groupBy(col("dp"))
-        .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud_a"))
-      val cloudsSrc = index
-        .select(col("src").as("sp"), col("axb").as("ax"),
-          col("ayb").as("ay"))
-        .distinct().groupBy(col("sp"))
-        .agg(collect_list(struct(col("ax"), col("ay"))).as("cloud_b"))
-      val cand = sunk.filter(col("src").isNotNull)
-        .select(col("doc_id").as("d"), col("src"), col("nl_src"),
-          col("lm"), col("ax"), col("ay"), col("axb"), col("ayb"))
-        .groupBy(col("d"), col("src"), col("nl_src"))
-        .agg(countDistinct(col("lm")).as("c"),
-          collect_list(struct(col("ax"), col("ay"), col("axb"),
-            col("ayb"))).as("corr"))
-        .filter(col("c") >= 4)
-        .join(nl, col("d") === nl("doc_id")).drop("doc_id")
-        .filter(col("c").cast("double") / least(col("nl"), col("nl_src"))
-          >= 0.004)
-      val dup = cand
-        .join(cloudsProbe, col("d") === cloudsProbe("dp"))
-        .join(cloudsSrc, col("src") === cloudsSrc("sp"))
-        .filter(Multimodal.affineCloudVerifier()(col("corr"),
-          col("cloud_a"), col("cloud_b")) >= 0.5)
-        .groupBy(col("d")).agg(min(col("src")).as("dup_src"))
-        .select(col("d").as("doc_id"), col("dup_src"))
+      // materialized: the verdict reads the sink several ways, and the
+      // memory sink's view resolves to the same attribute ids on every
+      // read (a raw self-join fails analysis); the checkpoint's rows
+      // re-instance per read
+      val sunk = graft.operators.Materialize.eager(drain(s, "append")(
+        "st124_lm" -> f.landmarks(stream)
+          .join(broadcast(Multimodal.anchoredHits(index)), Seq("lm"), "left")))
+      // the sink rows are post-join (a probe landmark matching several
+      // masters repeats), so the probes' landmarks are its distinct
+      // probe columns
+      val lms = sunk.select(col("doc_id"), col("lm"), col("ax"), col("ay"))
+        .distinct()
+      val verdicts = Multimodal.verifiedScreen(f, lms,
+        sunk.filter(col("src").isNotNull), index, f.minMatch, f.minShared)
       s.createDataset(Seq(20L, 22L, 130L, 131L)).toDF("doc_id")
-        .join(dup, Seq("doc_id"), "left")
+        .join(verdicts.select(col("doc_id"), col("dup_src")), Seq("doc_id"),
+          "left")
         .select(col("doc_id"), col("dup_src").isNull.as("kept"),
           col("dup_src"))
         .orderBy(col("doc_id"))
@@ -2016,6 +1987,9 @@ object StreamingOps extends QueryPack {
         .orderBy(col("doc_id"))
     }),
 
+    // STREAMING embedding dedup vs a BROADCAST SRP index (st122 —
+    // the s56 incremental screen at the stream-static seam, filling
+    // the streaming matrix's embedding-DEDUP gap: st69 only ingests).
     // Arrivals hash with the index's planes (srpBucketIndex is a pure
     // projection, streaming-safe), equi-join the broadcast index on
     // (tbl, bucket) — no state store — and score exact cosine

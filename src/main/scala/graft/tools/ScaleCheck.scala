@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.operators.Multimodal.{AudioOnset, AudioSpectralCode,
-  AudioSpectralLandmark, ImageAffine, ImageAffineFrame, ImagePeak,
-  ImageRotScale, ImageScale}
+  AudioSpectralLandmark, ImageAffine, ImageAffineFrame,
+  ImageAffineFrameAnchored, ImagePeak, ImageRotScale, ImageScale}
 
 /** Empirical scaling sweep for the LLM-pipeline operators: run each op
   * at N, 4N, 16N rows of synthetic data and report wall time + output
@@ -225,11 +225,11 @@ object ScaleCheck {
         // geometric verification — recall and precision both above
         // the code-gate tier by construction; the sweep pins both
         run("imageAffineFrameVerified(cropPlanted)", n / 8)(
-          Multimodal.imageAffineFramePairsVerified(c, maxDf = 500)
+          Multimodal.pairs(ImageAffineFrameAnchored())(c, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffineFrameVerified(cropAll)", n / 8)(
-          Multimodal.imageAffineFramePairsVerified(c, maxDf = 500))
+          Multimodal.pairs(ImageAffineFrameAnchored())(c, maxDf = 500))
         c.unpersist()
         // PHOTOGRAPHIC-texture class (round 15): the same planted
         // compounds over JPEG-textured masters — gradient + value
@@ -246,11 +246,11 @@ object ScaleCheck {
         run("imageAffineFramePairs(texAll)", n / 8)(
           Multimodal.pairs(ImageAffineFrame())(j, maxDf = 500))
         run("imageAffineFrameVerified(texPlanted)", n / 8)(
-          Multimodal.imageAffineFramePairsVerified(j, maxDf = 500)
+          Multimodal.pairs(ImageAffineFrameAnchored())(j, maxDf = 500)
             .filter(col("doc_b") - col("doc_a") === 9 &&
               col("doc_b") % 10 === 9))
         run("imageAffineFrameVerified(texAll)", n / 8)(
-          Multimodal.imageAffineFramePairsVerified(j, maxDf = 500))
+          Multimodal.pairs(ImageAffineFrameAnchored())(j, maxDf = 500))
         j.unpersist()
       }
       d.unpersist(); e.unpersist()

@@ -7,9 +7,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal.{AudioChroma, AudioCode, AudioInterval,
   AudioLandmark, AudioOnset, AudioSpectralCode, AudioSpectralLandmark,
-  ImageAffine, ImageAffineFrame, ImageAffineFrameChiral,
-  ImageAffineFrameSqueezeFan, ImagePeak, ImageRotScale, ImageScale,
-  ImageScaleAspect, ImageScaleCanonical, ImageScaleDihedral, PHash, PHashCrop,
+  ImageAffine, ImageAffineFrame, ImageAffineFrameAnchored,
+  ImageAffineFrameChiral, ImageAffineFrameSqueezeFan, ImagePeak,
+  ImageRotScale, ImageScale, ImageScaleAspect, ImageScaleCanonical,
+  ImageScaleDihedral, PHash, PHashCrop,
   PHashDihedral, PHashFlip, PHashRot, VideoAffine, VideoAffineFrame, VideoCrop,
   VideoFrames, VideoFramesDihedral, VideoFramesFlip, VideoPeak, VideoRotScale,
   VideoScale, VideoScaleAspect, VideoScaleCanonical, VideoSkip}
@@ -210,9 +211,8 @@ class Round10Spec extends AnyFunSuite with BeforeAndAfterAll {
         M.screen(ImageAffineFrameSqueezeFan())(noMedia, _)),
       ("dedupAgainstImageAffineFrameIndexChiral", "imageAffineFrameIndex",
         M.screen(ImageAffineFrameChiral())(noMedia, _)),
-      ("dedupAgainstImageAffineFrameIndexVerified",
-        "imageAffineFrameAnchorIndex",
-        M.dedupAgainstImageAffineFrameIndexVerified(noMedia, _)),
+      ("verifiedAffineFrameScreen", "imageAffineFrameAnchorIndex",
+        M.screen(ImageAffineFrameAnchored())(noMedia, _)),
       ("dedupAgainstVideoAffineFrameIndex", "videoAffineFrameIndex",
         M.screen(VideoAffineFrame())(noMedia, _)),
       ("dedupAgainstVideoScaleIndex", "videoScaleLandmarkIndex",

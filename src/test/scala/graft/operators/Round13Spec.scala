@@ -4,7 +4,8 @@ import graft.fixtures.Media
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Multimodal.{ImageAffine, ImageAffineFrame, ImageScale}
+import graft.operators.Multimodal.{ImageAffine, ImageAffineFrame,
+  ImageAffineFrameAnchored, ImageAffineFrameChiral, ImageScale}
 
 /** Round-13: public-suffix-table registered domains (the data-driven
   * form the round-12 verdict asked for) and friends. */
@@ -187,8 +188,9 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
         .distinct().count()
     val code = planted(Multimodal.pairs(ImageAffineFrame())(media, maxDf = 64))
     val verified = planted(
-      Multimodal.imageAffineFramePairsVerified(media, maxDf = 64))
-    val spurious = Multimodal.imageAffineFramePairsVerified(media, maxDf = 64)
+      Multimodal.pairs(ImageAffineFrameAnchored())(media, maxDf = 64))
+    val spurious = Multimodal.pairs(ImageAffineFrameAnchored())(media,
+        maxDf = 64)
       .filter(!($"doc_b" >= 120 && $"doc_b" < 130 &&
         $"doc_b" - $"doc_a" === 120)).count()
     info(s"codeGate=$code verified=$verified spurious=$spurious of 2")
@@ -205,7 +207,7 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     val media = cropAffineMedia(6)
     def run(parts: Int) =
-      Multimodal.imageAffineFramePairsVerified(media.repartition(parts))
+      Multimodal.pairs(ImageAffineFrameAnchored())(media.repartition(parts))
         .orderBy($"doc_a", $"doc_b")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSeq
@@ -236,8 +238,8 @@ class Round13Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.filter($"doc_b" - $"doc_a" === 100 && $"doc_b" < 200)
         .select($"doc_a", $"doc_b").distinct().count()
     val base = planted(Multimodal.pairs(ImageAffineFrame())(media))
-    val chiral = planted(Multimodal.imageAffineFramePairsChiral(media))
-    val out = Multimodal.imageAffineFramePairsChiral(media)
+    val chiral = planted(Multimodal.pairs(ImageAffineFrameChiral())(media))
+    val out = Multimodal.pairs(ImageAffineFrameChiral())(media)
     val spurious = out
       .filter(!($"doc_b" - $"doc_a" === 100 && $"doc_b" < 200))
       .select($"doc_a", $"doc_b").distinct().count()

@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Multimodal.{ImageAffineFrame, ImageAffineFrameSqueezeFan,
-  ImagePeak, VideoAffineFrame, VideoAffineFrameSqueezeFan}
+import graft.operators.Multimodal.{ImageAffineFrame, ImageAffineFrameAnchored,
+  ImageAffineFrameChiral, ImageAffineFrameSqueezeFan, ImagePeak,
+  VideoAffineFrame, VideoAffineFrameAnchored, VideoAffineFrameChiral,
+  VideoAffineFrameSqueezeFan}
 
 /** Round-14: the hot-code posting backstop, the verified affine-frame
   * tier's video/chiral members, the de-squeeze hypothesis fan, and
@@ -91,7 +93,7 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
       assert(code((0L, 22L)) && code((1L, 23L)),
         s"m177-class compounds must land the code gate, got $code")
       // the verified tier lands all four; decoys stay out
-      val ver = Multimodal.videoAffineFramePairsVerified(media, maxDf = 64)
+      val ver = Multimodal.pairs(VideoAffineFrameAnchored())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
         .toMap
       for (k <- Seq((0L, 20L), (2L, 21L), (0L, 22L), (1L, 23L)))
@@ -134,21 +136,22 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // contrast 1: the identity verified tier (m179) is chirality-
       // fixed BY DESIGN — zero pairs against mirrored probes
-      val m179 = Multimodal.imageAffineFramePairsVerified(media, maxDf = 64).collect()
+      val m179 = Multimodal.pairs(ImageAffineFrameAnchored())(media, maxDf = 64)
+        .collect()
       assert(m179.isEmpty,
         s"m179 must be blind to mirrored renderings, got ${m179.mkString(", ")}")
       // contrast 2: the chiral CODE gate (m181) drops the gray-zone
       // compounds (same just-under-gate scores as their unmirrored
       // m179 twins) but lands the m174-class ones
-      val code = Multimodal.imageAffineFramePairsChiral(media, maxDf = 64)
+      val code = Multimodal.pairs(ImageAffineFrameChiral())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(!code((3L, 20L)) && !code((6L, 21L)),
         s"gray-zone mirrored compounds must be under the m181 gate, got $code")
       assert(code((0L, 22L)) && code((1L, 23L)),
         s"m174-class mirrored compounds must land the m181 gate, got $code")
       // m183: all four verify at orient 1 with det < 0 maps
-      val ver = Multimodal.imageAffineFramePairsChiralVerified(media,
-        maxDf = 64)
+      val ver = Multimodal.pairs(ImageAffineFrameAnchored(chiral = true))(
+        media, maxDf = 64)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getDouble(3))
         .toMap
@@ -247,11 +250,11 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().toSeq
       assert(idPairs.isEmpty,
         s"m177 must be blind to mirrored re-rips, got $idPairs")
-      assert(Multimodal.videoAffineFramePairsVerified(media, maxDf = 64)
+      assert(Multimodal.pairs(VideoAffineFrameAnchored())(media, maxDf = 64)
         .count() == 0, "m182 must be blind to mirrored re-rips")
       // the chiral CODE gate lands the m177-class compounds at
       // orient 1 and inherits the gray-zone drops
-      val code = Multimodal.videoAffineFramePairsChiral(media, maxDf = 64)
+      val code = Multimodal.pairs(VideoAffineFrameChiral())(media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .toSet
       assert(code((3L, 22L, 1)) && code((1L, 23L, 1)),
@@ -259,8 +262,8 @@ class Round14Spec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!code.exists(p => p._2 == 20L || p._2 == 21L),
         s"gray-zone compounds must stay UNDER the chiral code gate, got $code")
       // the chirality-matched verify lands all four, nothing else
-      val ver = Multimodal.videoAffineFramePairsChiralVerified(media,
-        maxDf = 64)
+      val ver = Multimodal.pairs(VideoAffineFrameAnchored(chiral = true))(
+        media, maxDf = 64)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .toSet
       val want = Set((0L, 20L, 1), (2L, 21L, 1), (3L, 22L, 1),

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Multimodal.{ImageAffineFrame, ImagePeak,
-  VideoAffineFrame}
+import graft.operators.Multimodal.{ImageAffineFrame,
+  ImageAffineFrameAnchored, ImagePeak, VideoAffineFrame,
+  VideoAffineFrameAnchored}
 
 /** Round-16: scoped release for Materialize.eager checkpoints (the
   * mechanism behind two rounds of bench drift), and the one-decode
@@ -170,11 +171,16 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
     val media = graft.fixtures.Corpora.cropAffinePngs(s, 50)
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_a", "doc_b").collect().toSeq
-    val (code, verified) = Multimodal.imageAffineFrameTiers(media, maxDf = 500)
+    // one anchored decode scored by both tiers (the m192 composition)
+    val anchored = Materialize.eager(
+      ImageAffineFrameAnchored().landmarks(media))
+    val code = ImageAffineFrame().scores(
+      anchored.select(col("doc_id"), col("lm")), maxDf = 500)
+    val verified = ImageAffineFrameAnchored().scores(anchored, maxDf = 500)
     assert(sorted(code) ==
       sorted(Multimodal.pairs(ImageAffineFrame())(media, maxDf = 500)))
     assert(sorted(verified) ==
-      sorted(Multimodal.imageAffineFramePairsVerified(media, maxDf = 500)))
+      sorted(Multimodal.pairs(ImageAffineFrameAnchored())(media, maxDf = 500)))
     // and the tier pair actually found the planted dups (non-vacuous)
     assert(sorted(verified).nonEmpty)
   }
@@ -192,10 +198,14 @@ class Round16Spec extends AnyFunSuite with BeforeAndAfterAll {
       (id, if (id == 4L) probe else mk(id))).toDF("doc_id", "payload")
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_a", "doc_b").collect().toSeq
-    val (code, verified) = Multimodal.videoAffineFrameTiers(media)
+    val anchored = Materialize.eager(
+      VideoAffineFrameAnchored().landmarks(media))
+    val code = VideoAffineFrame().scores(
+      anchored.select(col("doc_id"), col("lm")))
+    val verified = VideoAffineFrameAnchored().scores(anchored)
     assert(sorted(code) == sorted(Multimodal.pairs(VideoAffineFrame())(media)))
     assert(sorted(verified) ==
-      sorted(Multimodal.videoAffineFramePairsVerified(media)))
+      sorted(Multimodal.pairs(VideoAffineFrameAnchored())(media)))
   }
 
   test("concurrent scopes are thread-isolated: one lane's exit never drops a peer's blocks") {
